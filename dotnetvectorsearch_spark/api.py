@@ -11,7 +11,8 @@ Endpoint -> method map (semantics notes cite the reference):
 - ``POST /api/embeddings``       -> :meth:`get_embedding` — RAW text, no
   task prefix (``VectorSearchService.cs:37``)
 - ``POST /api/embeddings/batch`` -> :meth:`get_embeddings_batch` — raw text
-  (``:67``); the reference's Task.WhenAll fan-out becomes one Spark job
+  (``:67``); the reference's Task.WhenAll fan-out becomes one batched
+  kernel call
 - ``POST /api/similarity``       -> :meth:`calculate_similarity` — BOTH
   sides get the ``"query: "`` prefix (``:103-104``)
 - ``POST /api/search``           -> :meth:`search` — query side gets
@@ -21,49 +22,147 @@ Endpoint -> method map (semantics notes cite the reference):
 - ``GET  /api/documents``        -> :meth:`list_documents` — ORDER BY id
   with the include-embeddings projection toggle (``:131-171``)
 
-The corpus DataFrame is cached on construction: the reference re-scans
-SQLite and re-JSON-parses every vector per request
-(``VectorSearchService.cs:142-161``); decoding once and serving from the
-cached columnar frame strictly dominates that design.
+Serving path. The reference answers every request in-process over an
+in-memory list (``VectorSearchService.cs:142-203``). The engine does the
+same whenever the corpus is bounded: at construction one
+``limit(max_rows + 1).toArrow()`` probe collects the whole corpus — id,
+embedding and every other column — as one Arrow table, pinned on the
+driver, with ``max_rows = 64 MB // (4 * embedder.dim)`` (the driver
+read/write bound of ``operators/ann.py``). Brute and IVF search, the
+document listing and the document count are then answered from the pin
+with zero Spark jobs, by exact driver twins of the Spark expressions
+(``operators/search.py``: bit-equal scores, the same order and the same
+dict keys, pinned in tests/test_api.py).
+
+The pin is refused when the probe overflows the bound, an id or an
+embedding (or one of its elements) is null, an embedding's length is
+not ``embedder.dim``, or an embedding holds a non-finite value. The
+corpus is then cached and served by Spark jobs, the only formulation
+that scales past driver memory; the document count is taken once per
+engine. :meth:`health` reports which path was taken and why. On either
+path, query texts are embedded in-process whenever the request fits one
+Arrow batch and :meth:`calculate_similarity` scores its two vectors on
+the driver; the ``lsh``/``pq``/``ivfpq`` methods always run on Spark.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 from dotnetvectorsearch_spark.functions.text import QUERY_PREFIX
-from dotnetvectorsearch_spark.functions.vector import cosine_similarity
+from dotnetvectorsearch_spark.operators import ann
 from dotnetvectorsearch_spark.operators.search import (
     MAX_TOP_K,
+    DriverVectors,
     ordered_listing,
+    rank_top_k,
+    round6_half_up,
     top_k_similar,
     validate_top_k,
 )
 
+_VEC = "embedding"
+_IVF = {"n_cells": 16, "nprobe": 4}
+
+
+class _PinnedCorpus:
+    """The corpus as one driver-resident Arrow table plus its embedding
+    matrix, ready for the exact driver kernels."""
+
+    def __init__(self, table, schema: StructType, id_col: str,
+                 mat: np.ndarray):
+        self.table = table
+        self.schema = schema
+        self.ids = table.column(id_col).to_numpy(zero_copy_only=False)
+        self.mat = mat
+        self.vectors = DriverVectors(mat)
+
+    def rows(self, positions, cols: list[str]) -> list[dict[str, Any]]:
+        """``Row.asDict()`` of the given rows and columns, with the Python
+        values a Spark ``collect()`` returns."""
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        rows = ArrowTableToRowsConversion.convert(
+            self.table.select(cols).take(np.asarray(positions, np.int64)),
+            StructType([self.schema[c] for c in cols]),
+            binary_as_bytes=False)
+        return [r.asDict() for r in rows]
+
+
+def _pin_corpus(corpus: DataFrame, id_col: str, dim: int
+                ) -> tuple[_PinnedCorpus | None, dict[str, Any]]:
+    """Collect the corpus once if it is provably small and servable by
+    the driver kernels: (pin or None, the serving decision)."""
+    import pyarrow.compute as pc
+
+    max_rows = ann._DRIVER_RW_BYTES // (4 * dim)
+    table = corpus.limit(max_rows + 1).toArrow()
+    serving: dict[str, Any] = {"path": "spark", "reason": "",
+                               "rows": table.num_rows,
+                               "bytes": table.nbytes,
+                               "bound_rows": max_rows}
+    vecs = table.column(_VEC).combine_chunks()
+    flat = vecs.flatten()
+    if table.num_rows > max_rows:
+        serving["reason"] = f"more than {max_rows} rows"
+    elif table.column(id_col).null_count or vecs.null_count \
+            or flat.null_count:
+        serving["reason"] = "null id or embedding"
+    elif pc.any(pc.not_equal(pc.list_value_length(vecs), dim)).as_py():
+        serving["reason"] = f"embedding length is not {dim}"
+    else:
+        mat = flat.to_numpy().reshape(table.num_rows, dim)
+        if not np.isfinite(mat).all():
+            serving["reason"] = "non-finite embedding value"
+        else:
+            serving.update(path="driver", reason="within bound")
+            return _PinnedCorpus(table, corpus.schema, id_col, mat), serving
+    return None, serving
+
 
 class VectorSearchEngine:
-    """Batch/offline serving facade over a prepared documents corpus."""
+    """Serving facade over a prepared documents corpus."""
 
     def __init__(self, spark: SparkSession, corpus: DataFrame,
                  embedder: EmbeddingBackend, id_col: str = "id",
                  cache: bool = True):
         self.spark = spark
-        self.corpus = corpus.cache() if cache else corpus
         self.embedder = embedder
         self.id_col = id_col
+        self._pin, self.serving = _pin_corpus(corpus, id_col, embedder.dim)
+        self.corpus = corpus.cache() if cache and self._pin is None \
+            else corpus
+        self._total: int | None = None
+        self._ann: dict[str, Any] = {}
+        self._batch_rows = int(spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+
+    @property
+    def total_documents(self) -> int:
+        if self._pin is not None:
+            return self._pin.table.num_rows
+        if self._total is None:
+            self._total = self.corpus.count()
+        return self._total
 
     # ----------------------------------------------------------- embeddings
 
     def _embed_texts(self, texts: list[str], prefix: str = "") -> list[list[float]]:
-        """One Spark job embedding all texts (replaces Task.WhenAll of
-        batch-1 inferences, EmbeddingService.cs:26-30)."""
+        """Embed all texts with one batched kernel call: in-process when
+        the request fits one Arrow batch, else one Spark job (replaces
+        Task.WhenAll of batch-1 inferences, EmbeddingService.cs:26-30)."""
         for t in texts:
             if t is None or not t.strip():
                 raise ValueError("Text cannot be null or empty")
+        if self._batch_rows <= 0 or len(texts) <= self._batch_rows:
+            return [v.tolist() for v in
+                    self.embedder.embed_batch([prefix + t for t in texts])]
         from dotnetvectorsearch_spark.localdf import local_df
         df = local_df(self.spark,
                       [(i, prefix + t) for i, t in enumerate(texts)],
@@ -93,15 +192,14 @@ class VectorSearchEngine:
 
     def calculate_similarity(self, text1: str, text2: str,
                              include_embeddings: bool = False) -> dict[str, Any]:
-        """POST /api/similarity — symmetric 'query: ' prefixes."""
+        """POST /api/similarity — symmetric 'query: ' prefixes. Two
+        vectors never need Spark: the driver twin of the cosine
+        expression scores them on either serving path."""
         e1, e2 = self._embed_texts([text1, text2], prefix=QUERY_PREFIX)
-        from dotnetvectorsearch_spark.localdf import local_df
-        pair = local_df(self.spark, [(e1, e2)],
-                        "a array<float>, b array<float>")
-        sim = pair.select(
-            F.round(cosine_similarity("a", "b"), 6).alias("s")).first().s
+        sim = round6_half_up(
+            DriverVectors(np.asarray([e1], np.float32)).cosine(e2)[0])
         out: dict[str, Any] = {"text1": text1, "text2": text2,
-                               "similarity": float(sim)}
+                               "similarity": sim}
         if include_embeddings:
             out["embedding1"], out["embedding2"] = e1, e2
         return out
@@ -124,62 +222,94 @@ class VectorSearchEngine:
         (build-time artifacts)."""
         validate_top_k(top_k)
         qvec = self._embed_texts([query_text], prefix=QUERY_PREFIX)[0]
-        if method == "brute":
-            from dotnetvectorsearch_spark.localdf import local_df
-            query = local_df(self.spark, [(qvec,)],
-                             "query_embedding array<float>")
-            hits_df = top_k_similar(
-                self.corpus, query, top_k=top_k, id_col=self.id_col,
-                threshold=threshold, include_embeddings=include_embeddings,
-                round_digits=6)
+        if self._pin is not None and method in ("brute", "ivf"):
+            results = self._pinned_search(method, qvec, top_k, threshold,
+                                          include_embeddings)
         else:
-            hits_df = self._ann_search(method, qvec, top_k)
-            if threshold is not None:
-                score = ("similarity" if "similarity" in hits_df.columns
-                         else "approx_similarity")
-                hits_df = hits_df.filter(F.col(score) >= threshold)
-        hits = hits_df.collect()
-        total = self.corpus.count()
+            if method == "brute":
+                from dotnetvectorsearch_spark.localdf import local_df
+                query = local_df(self.spark, [(qvec,)],
+                                 "query_embedding array<float>")
+                hits_df = top_k_similar(
+                    self.corpus, query, top_k=top_k, id_col=self.id_col,
+                    threshold=threshold,
+                    include_embeddings=include_embeddings, round_digits=6)
+            else:
+                hits_df = self._ann_search(method, qvec, top_k)
+                if threshold is not None:
+                    score = ("similarity" if "similarity" in hits_df.columns
+                             else "approx_similarity")
+                    hits_df = hits_df.filter(F.col(score) >= threshold)
+            results = [r.asDict() for r in hits_df.collect()]
         return {
             "query": query_text,
-            "results": [r.asDict() for r in hits],
-            "result_count": len(hits),
-            "total_documents": total,
+            "results": results,
+            "result_count": len(results),
+            "total_documents": self.total_documents,
             "method": method,
         }
 
+    def _pinned_search(self, method: str, qvec: list[float], top_k: int,
+                       threshold: float | None,
+                       include_embeddings: bool) -> list[dict[str, Any]]:
+        """Brute or IVF top-k from the pin, with the Spark paths' output:
+        brute rows carry the corpus columns, IVF rows only the id."""
+        pin = self._pin
+        if method == "brute":
+            rows = None
+            cols = [c for c in pin.table.column_names
+                    if include_embeddings or c != _VEC]
+        else:
+            idx, cells = self._ivf()
+            rows = np.flatnonzero(np.isin(cells, idx.probe_cells(qvec)))
+            cols = [self.id_col]
+        sims = pin.vectors.cosine(qvec, rows)
+        ids = pin.ids if rows is None else pin.ids[rows]
+        pos, scores = rank_top_k(sims, ids, top_k, threshold)
+        if rows is not None:
+            pos = rows[pos]
+        return [dict(r, similarity=s)
+                for r, s in zip(pin.rows(pos, cols), scores)]
+
+    def _ivf(self) -> tuple[ann.IVFIndex, np.ndarray]:
+        """The engine's IVF index over the pin and each row's cell. A pin
+        of at most ``MAX_SAMPLE`` rows is the whole training sample, so
+        the fit runs on the driver with centroids identical to the Spark
+        path's; a larger pin samples through Spark as that path does."""
+        if "ivf" not in self._ann:
+            idx = ann.IVFIndex(**_IVF)
+            if len(self._pin.ids) <= ann.MAX_SAMPLE:
+                idx.fit_matrix(self._pin.mat)
+            else:
+                idx.fit(self.corpus.select(self.id_col, _VEC))
+            self._ann["ivf"] = (idx, idx._assign_cells(idx.centroids,
+                                                       self._pin.mat))
+        return self._ann["ivf"]
+
     def _ann_search(self, method: str, qvec: list[float], top_k: int):
-        from dotnetvectorsearch_spark.operators.ann import (
-            HyperplaneLSH,
-            IVFIndex,
-            PQIndex,
-        )
-        if not hasattr(self, "_ann"):
-            self._ann: dict[str, Any] = {}
-        vecs = self.corpus.select(self.id_col, "embedding")
+        vecs = self.corpus.select(self.id_col, _VEC)
         if method == "ivf":
             if "ivf" not in self._ann:
-                idx = IVFIndex(n_cells=16, nprobe=4).fit(vecs)
+                idx = ann.IVFIndex(**_IVF).fit(vecs)
                 self._ann["ivf"] = (idx, idx.transform(vecs).persist())
             idx, indexed = self._ann["ivf"]
             return idx.search(indexed, qvec, top_k, id_col=self.id_col)
         if method == "lsh":
             if "lsh" not in self._ann:
-                idx = HyperplaneLSH(num_planes=12).fit(dim=len(qvec))
+                idx = ann.HyperplaneLSH(num_planes=12).fit(dim=len(qvec))
                 self._ann["lsh"] = (idx, idx.transform(vecs).persist())
             idx, bucketed = self._ann["lsh"]
             return idx.search(bucketed, qvec, top_k, id_col=self.id_col)
         if method == "pq":
             if "pq" not in self._ann:
-                idx = PQIndex(m=16, n_codes=64).fit(vecs)
+                idx = ann.PQIndex(m=16, n_codes=64).fit(vecs)
                 self._ann["pq"] = (idx, idx.transform(vecs).persist())
             idx, encoded = self._ann["pq"]
             return idx.search(encoded, qvec, top_k, id_col=self.id_col,
                               rescore=vecs, shortlist=max(10 * top_k, 50))
         if method == "ivfpq":
-            from dotnetvectorsearch_spark.operators.ann import IVFPQIndex
             if "ivfpq" not in self._ann:
-                idx = IVFPQIndex(n_cells=16, nprobe=4, m=16,
+                idx = ann.IVFPQIndex(n_cells=16, nprobe=4, m=16,
                                  n_codes=64).fit(vecs)
                 self._ann["ivfpq"] = (idx, idx.transform(vecs).persist())
             idx, indexed = self._ann["ivfpq"]
@@ -191,17 +321,27 @@ class VectorSearchEngine:
 
     def list_documents(self, include_embeddings: bool = False) -> dict[str, Any]:
         """GET /api/documents — full listing ORDER BY id."""
-        rows = ordered_listing(self.corpus, id_col=self.id_col,
-                               include_embeddings=include_embeddings).collect()
-        return {"documents": [r.asDict() for r in rows], "count": len(rows)}
+        if self._pin is not None:
+            cols = [c for c in self._pin.table.column_names
+                    if include_embeddings or c != _VEC]
+            docs = self._pin.rows(np.argsort(self._pin.ids, kind="stable"),
+                                  cols)
+        else:
+            docs = [r.asDict() for r in ordered_listing(
+                self.corpus, id_col=self.id_col,
+                include_embeddings=include_embeddings).collect()]
+        return {"documents": docs, "count": len(docs)}
 
     # ---------------------------------------------------------------- misc
 
     def health(self) -> dict[str, Any]:
-        """GET /health."""
+        """GET /health, plus the serving decision: ``path`` ("driver" or
+        "spark"), ``reason``, and the probe's ``rows``/``bytes`` against
+        ``bound_rows``."""
         return {
             "status": "healthy",
             "embedding_dimensions": self.embedder.dim,
-            "total_documents": self.corpus.count(),
+            "total_documents": self.total_documents,
             "max_top_k": MAX_TOP_K,
+            "serving": dict(self.serving),
         }

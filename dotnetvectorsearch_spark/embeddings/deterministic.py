@@ -8,7 +8,8 @@ the real model (SURVEY.md §5.2). Properties:
 - unit-norm: L2-normalized like the real pipeline's output (reference
   ``E5MultilingualEmbeddings.cs:172-187``);
 - sensitive to the task prefix, like a real asymmetric E5 model;
-- vectorized: numpy over Arrow batches (pandas UDF), no per-row Python.
+- batched: one kernel call per Arrow batch (the shared backend UDF) or per
+  in-process request.
 """
 
 from __future__ import annotations
@@ -16,8 +17,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
 
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 
@@ -37,13 +36,8 @@ class DeterministicEmbedder(EmbeddingBackend):
         self.dim = dim
         self.seed = seed
 
-    def udf(self):
-        dim, seed = self.dim, self.seed
-
-        @pandas_udf("array<float>")
-        def det_embed(texts: pd.Series) -> pd.Series:
-            return texts.map(
-                lambda t: _text_to_unit_vec("" if t is None else t, dim, seed)
-            )
-
-        return det_embed
+    def embed_batch(self, texts: list[str]) -> np.ndarray:
+        out = np.zeros((len(texts), self.dim), dtype=np.float32)
+        for i, t in enumerate(texts):
+            out[i] = _text_to_unit_vec(t, self.dim, self.seed)
+        return out

@@ -16,22 +16,24 @@ Spark-native shape:
   uses CLS, and we replicate CLS for parity;
 - U7 L2 normalization with the 1e-12 pass-through guard (``:172-187``).
 
-Executor lifecycle: one InferenceSession per Python worker, created lazily
-inside the iterator UDF (the Spark analogue of the reference's singleton
-session, ``OnnxRuntimeProvider.cs:33-68``); the model file is distributed
-via ``spark.sparkContext.addFile``. Intra-op threads default to the
-per-task core budget instead of the reference's hardcoded 20/40.
+Process lifecycle: one InferenceSession per Python process, created
+lazily on the first batch and cached (the Spark analogue of the
+reference's singleton session, ``OnnxRuntimeProvider.cs:33-68``), so a
+reused executor worker or the serving driver builds it once; the model
+file is distributed via ``spark.sparkContext.addFile``. Intra-op threads
+default to the per-task core budget instead of the reference's hardcoded
+20/40.
 
 onnxruntime/transformers are NOT installed in this container, so the
 backend raises ImportError at construction; the class exists so the Spark
-plumbing (UDF shape, batching, distribution) is real and reviewable.
+plumbing (kernel, batching, distribution) is real and reviewable.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
-import pandas as pd
+import numpy as np
 
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 from dotnetvectorsearch_spark.embeddings.e5_math import (
@@ -42,6 +44,23 @@ from dotnetvectorsearch_spark.embeddings.e5_math import (
 MAX_SEQ_LEN = 512       # reference E5MultilingualEmbeddings.cs:10
 DEFAULT_DIM = 384       # intfloat/multilingual-e5-small
 DEFAULT_BATCH = 32
+
+
+@functools.lru_cache(maxsize=2)
+def _runtime(model_path: str, tokenizer_path: str,
+             intra_op: int):  # pragma: no cover - requires onnxruntime
+    """(InferenceSession, tokenizer, input names), created once per
+    Python process — the analogue of the reference's singleton session."""
+    import onnxruntime as ort
+    from transformers import AutoTokenizer
+
+    opts = ort.SessionOptions()
+    opts.graph_optimization_level = (
+        ort.GraphOptimizationLevel.ORT_ENABLE_EXTENDED)
+    opts.intra_op_num_threads = intra_op
+    session = ort.InferenceSession(model_path, sess_options=opts)
+    tokenizer = AutoTokenizer.from_pretrained(tokenizer_path)
+    return session, tokenizer, {i.name for i in session.get_inputs()}
 
 
 class E5OnnxEmbedder(EmbeddingBackend):
@@ -62,46 +81,19 @@ class E5OnnxEmbedder(EmbeddingBackend):
         self.batch_size = batch_size
         self.intra_op_threads = intra_op_threads
 
-    def udf(self):  # pragma: no cover - requires onnxruntime
-        from pyspark.sql.functions import pandas_udf
-
-        model_path = self.model_path
-        tokenizer_path = self.tokenizer_path
-        batch_size = self.batch_size
-        intra_op = self.intra_op_threads
-
-        @pandas_udf("array<float>")
-        def e5_embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            # Lazy per-worker init (one session per executor Python worker).
-            import numpy as np
-            import onnxruntime as ort
-            from transformers import AutoTokenizer
-
-            opts = ort.SessionOptions()
-            opts.graph_optimization_level = (
-                ort.GraphOptimizationLevel.ORT_ENABLE_EXTENDED)
-            opts.intra_op_num_threads = intra_op
-            session = ort.InferenceSession(model_path, sess_options=opts)
-            tokenizer = AutoTokenizer.from_pretrained(tokenizer_path)
-            input_names = {i.name for i in session.get_inputs()}
-
-            def run_batch(texts: list[str]) -> list[np.ndarray]:
-                enc = tokenizer(texts, truncation=True, max_length=MAX_SEQ_LEN,
-                                padding=True, return_tensors="np")
-                feeds = {"input_ids": enc["input_ids"].astype("int64"),
-                         "attention_mask": enc["attention_mask"].astype("int64")}
-                if "token_type_ids" in input_names:
-                    feeds["token_type_ids"] = np.zeros_like(feeds["input_ids"])
-                (hidden,) = session.run(["last_hidden_state"], feeds)
-                cls = cls_pool(hidden)              # U6: CLS, not mean
-                normed = l2_normalize_guarded(cls)  # U7: 1e-12 guard
-                return [row.astype(np.float32) for row in normed]
-
-            for series in batches:
-                texts = ["" if t is None else t for t in series]
-                out: list[np.ndarray] = []
-                for i in range(0, len(texts), batch_size):
-                    out.extend(run_batch(texts[i:i + batch_size]))
-                yield pd.Series(out)
-
-        return e5_embed
+    def embed_batch(self, texts: list[str]) -> np.ndarray:
+        session, tokenizer, input_names = _runtime(
+            self.model_path, self.tokenizer_path, self.intra_op_threads)
+        out = np.zeros((len(texts), self.dim), dtype=np.float32)
+        for lo in range(0, len(texts), self.batch_size):
+            enc = tokenizer(texts[lo:lo + self.batch_size], truncation=True,
+                            max_length=MAX_SEQ_LEN, padding=True,
+                            return_tensors="np")
+            feeds = {"input_ids": enc["input_ids"].astype("int64"),
+                     "attention_mask": enc["attention_mask"].astype("int64")}
+            if "token_type_ids" in input_names:
+                feeds["token_type_ids"] = np.zeros_like(feeds["input_ids"])
+            (hidden,) = session.run(["last_hidden_state"], feeds)
+            cls = cls_pool(hidden)                  # U6: CLS, not mean
+            out[lo:lo + len(cls)] = l2_normalize_guarded(cls)  # U7
+        return out

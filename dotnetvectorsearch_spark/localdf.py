@@ -78,7 +78,9 @@ def _arrow_local_df(spark: SparkSession, rows: list,
         cols = []
         for i, f in enumerate(pa_schema):
             vals = [r[i] for r in rows]
-            if not _values_ok(vals, f.type, pa):
+            if not _values_ok(vals, f.type, pa) or (
+                    not st.fields[i].nullable
+                    and any(v is None for v in vals)):
                 # stock createDataFrame would REJECT (or coerce) these
                 # — let the classic path reproduce its exact behavior,
                 # including its error message

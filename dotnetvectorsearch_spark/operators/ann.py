@@ -50,6 +50,9 @@ from dotnetvectorsearch_spark.operators.search import top_k_similar
 # dedup.connected_components / graph.pagerank_undirected.
 _DRIVER_RW_BYTES = 64 * 1024 * 1024
 
+# Default training-sample size of the k-means / codebook fits.
+MAX_SAMPLE = 100_000
+
 
 def _local_fs_path(path: str) -> str | None:
     """Strip a file: scheme; None when the path names a remote store."""
@@ -264,13 +267,19 @@ class IVFIndex:
         self.centroids: np.ndarray | None = None
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
-            max_sample: int = 100_000) -> IVFIndex:
+            max_sample: int = MAX_SAMPLE) -> IVFIndex:
         n = emb.count()
         fraction = min(1.0, max_sample / max(n, 1))
         sample = (emb.sample(fraction=fraction, seed=self.seed)
                   .select(vec_col).toPandas()[vec_col])
-        self.centroids = _kmeans_fit(
-            np.stack(sample.to_numpy()), self.n_cells, self.seed)
+        return self.fit_matrix(np.stack(sample.to_numpy()))
+
+    def fit_matrix(self, sample: np.ndarray) -> IVFIndex:
+        """Train on a driver-resident float32 sample matrix. ``fit`` over
+        a corpus of at most ``max_sample`` rows samples every row in scan
+        order, so fitting the whole matrix in that order gives identical
+        centroids."""
+        self.centroids = _kmeans_fit(sample, self.n_cells, self.seed)
         return self
 
     @staticmethod
@@ -631,7 +640,7 @@ class PQIndex:
         return mat.reshape(n, self.m, d // self.m)
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
-            max_sample: int = 100_000) -> PQIndex:
+            max_sample: int = MAX_SAMPLE) -> PQIndex:
         n = emb.count()
         fraction = min(1.0, max_sample / max(n, 1))
         sample = (emb.sample(fraction=fraction, seed=self.seed)
@@ -791,7 +800,7 @@ class IVFPQIndex:
         self.cell_means: np.ndarray | None = None
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
-            max_sample: int = 100_000,
+            max_sample: int = MAX_SAMPLE,
             refine_iters: int = 0) -> IVFPQIndex:
         self.ivf.fit(emb, vec_col, max_sample)
         if refine_iters:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..sources.io import load_table
 from .ann import IVFIndex, IVFPQIndex, PQIndex
 from .dedup import _input_fingerprint
+from .search import round6_half_up
 
 # Hyperparameters MUST stay in lockstep with the fit-in-query registry
 # entries (_q_ann_ivf_topk / _fitted_pq / _fitted_ivfpq in
@@ -59,40 +60,6 @@ INDEX_PARAMS: dict[str, dict] = {
 _MARKER = "_fingerprint.json"
 _MANIFEST_DIR = "_manifests"
 _CURRENT = "CURRENT"
-
-
-def _round6_half_up(x):
-    """Replicate Spark ``F.round(col, 6)`` for float64 scalars/arrays.
-
-    Spark rounds a double via ``BigDecimal.valueOf(x)`` — i.e. HALF_UP
-    on the value's SHORTEST DECIMAL REPR — not on the binary double.
-    The plain ``floor(|x|*1e6 + 0.5)`` construction rounds the binary
-    product and diverges exactly at repr-tie boundaries: e.g.
-    ``0.0001245`` (repr tie "…45") scales to ``124.4999…`` in binary
-    and floors DOWN where Spark rounds UP to ``0.000125`` (advisor
-    r13). So: vectorized binary fast path, with the rare elements
-    whose scaled value lies within 1e-7 of a ``.5`` boundary re-done
-    exactly through ``Decimal(repr(x))`` HALF_UP — bit-for-bit the
-    BigDecimal semantics, without paying per-element Decimal on the
-    hot arrays. (``np.round`` is banker's half-even — wrong at every
-    tie; the strict ``>``/``==`` shortlist comparisons in
-    :func:`ivfpq_recall_curve` depend on these boundaries.)"""
-    import numpy as np
-
-    arr = np.atleast_1d(np.asarray(x, dtype=np.float64))
-    absx = np.abs(arr)
-    scaled = absx * 1e6
-    out = np.copysign(np.floor(scaled + 0.5) / 1e6, arr)
-    near = np.abs(scaled - np.floor(scaled) - 0.5) < 1e-7
-    if near.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal("0.000001")
-        for i in zip(*np.nonzero(near)):
-            exact = float(Decimal(repr(float(absx[i])))
-                          .quantize(q, rounding=ROUND_HALF_UP))
-            out[i] = float(np.copysign(exact, arr[i]))
-    return out if np.ndim(x) else float(out[0])
 
 
 def _write_marker(path: str, meta: dict) -> None:
@@ -783,7 +750,8 @@ def compact_index(spark: SparkSession, path: str) -> int:
     consistent file set, so the pass is cross-cell snapshot-consistent,
     not just file-atomic; the retired files go away later via
     :func:`gc_snapshots` once no reader can be pinned to them (the
-    Delta/Iceberg OPTIMIZE+VACUUM split). Small local stores merge the
+    Delta/Iceberg OPTIMIZE+VACUUM split). A store with no cell to
+    compact publishes nothing and returns 0. Small local stores merge the
     cells driver-side with pyarrow (zero Spark jobs, see
     :func:`_compact_cells`); bigger ones rewrite distributed.
 
@@ -828,9 +796,13 @@ def compact_index(spark: SparkSession, path: str) -> int:
                                     if len(rels) == 1]
             multi = {c: sorted(rels) for c, rels in by_cell.items()
                      if len(rels) > 1}
-            n += _compact_cells(spark, path, tmp, ver, multi, new_files)
-            _write_manifest(path, new_files,
-                            note=f"compaction of v{ver}")
+            # nothing to compact publishes nothing: a no-op pass must not
+            # burn a snapshot version or shift the gc keep-window
+            if multi:
+                n += _compact_cells(spark, path, tmp, ver, multi,
+                                    new_files)
+                _write_manifest(path, new_files,
+                                note=f"compaction of v{ver}")
     else:
         (spark.read.parquet(path).repartition("cell")
          .write.partitionBy("cell").mode("overwrite").parquet(tmp))
@@ -883,7 +855,7 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
     panel*k*n_cells count frame, driver-side cumsum. ADC scores are
     replicated with the serve's exact float32 op order (offset gather
     + LUT gather-sum, float64 cast, HALF_UP round-6 via
-    :func:`_round6_half_up` — Spark ``F.round`` semantics, not
+    :func:`round6_half_up` — Spark ``F.round`` semantics, not
     ``np.round``'s half-even), so the counts match the shortlist the
     serve would actually cut. Unlike the IVF curve this
     one need not be monotone (more probed cells also means more
@@ -949,7 +921,7 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
         codes = np.asarray(r[codes_col], dtype=np.int64)
         s32 = (offs[qi][r[cell_col]]
                + luts[qi][np.arange(m), codes].sum())
-        wscore[qi, wi] = float(_round6_half_up(np.float64(s32)))
+        wscore[qi, wi] = float(round6_half_up(np.float64(s32)))
         wid[qi, wi] = r[id_col]
         wcr[qi, wi] = rank_of[qi][r[cell_col]]
         valid[qi, wi] = True
@@ -966,7 +938,7 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
             for qi in range(qn):
                 s = (offs[qi][cells]
                      + luts[qi][gidx, codes].sum(axis=1))
-                s = _round6_half_up(s.astype(np.float64))
+                s = round6_half_up(s.astype(np.float64))
                 cr = rank_of[qi][cells]
                 for wi in range(kk):
                     if not valid[qi, wi]:

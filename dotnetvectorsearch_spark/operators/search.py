@@ -26,6 +26,7 @@ Physical plan notes (the scale story):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -83,6 +84,112 @@ def top_k_similar(docs: DataFrame, query: DataFrame, top_k: int = DEFAULT_TOP_K,
     if not include_embeddings:
         scored = scored.drop(doc_vec)
     return scored.orderBy(F.desc("similarity"), F.asc(id_col)).limit(top_k)
+
+
+# ------------------------------------------------ exact driver-side twin
+#
+# A bounded corpus held on the driver is scored without a Spark job by
+# the kernels below. They are bit-equal to :func:`top_k_similar` with
+# ``round_digits=6``, not merely close: every sum folds in double, one
+# dimension at a time, left to right — the evaluation order of the
+# ``aggregate``/``zip_with`` expressions in ``functions/vector.py`` —
+# and rounding follows Spark's ``F.round`` rule (pinned in
+# tests/test_api.py against the Spark path).
+
+
+def round6_half_up(x):
+    """Replicate Spark ``F.round(col, 6)`` for float64 scalars/arrays.
+
+    Spark rounds a double via ``BigDecimal.valueOf(x)`` — i.e. HALF_UP
+    on the value's SHORTEST DECIMAL REPR — not on the binary double.
+    The plain ``floor(|x|*1e6 + 0.5)`` construction rounds the binary
+    product and diverges exactly at repr-tie boundaries: e.g.
+    ``0.0001245`` (repr tie "…45") scales to ``124.4999…`` in binary
+    and floors DOWN where Spark rounds UP to ``0.000125``. So:
+    vectorized binary fast path, with the rare elements whose scaled
+    value lies within 1e-7 of a ``.5`` boundary re-done exactly through
+    ``Decimal(repr(x))`` HALF_UP — bit-for-bit the BigDecimal
+    semantics, without paying per-element Decimal on the hot arrays.
+    (``np.round`` is banker's half-even — wrong at every tie.)"""
+    arr = np.atleast_1d(np.asarray(x, dtype=np.float64))
+    absx = np.abs(arr)
+    scaled = absx * 1e6
+    out = np.copysign(np.floor(scaled + 0.5) / 1e6, arr)
+    near = np.abs(scaled - np.floor(scaled) - 0.5) < 1e-7
+    if near.any():
+        from decimal import ROUND_HALF_UP, Decimal
+
+        q = Decimal("0.000001")
+        for i in zip(*np.nonzero(near)):
+            exact = float(Decimal(repr(float(absx[i])))
+                          .quantize(q, rounding=ROUND_HALF_UP))
+            out[i] = float(np.copysign(exact, arr[i]))
+    return out if np.ndim(x) else float(out[0])
+
+
+def _fold(a_t: np.ndarray, b_t: np.ndarray) -> np.ndarray:
+    """``sum_j a[j] * b[j]`` folded left to right in double over the
+    leading (dimension) axis: ``aggregate(zip_with(a, b, x*y), 0.0,
+    (acc, x) -> acc + x)``, element for element."""
+    acc = np.zeros(np.broadcast_shapes(a_t.shape[1:], b_t.shape[1:]))
+    for j in range(len(a_t)):
+        acc += a_t[j] * b_t[j]
+    return acc
+
+
+class DriverVectors:
+    """A driver-resident embedding matrix, scored by the exact
+    twin of :func:`~dotnetvectorsearch_spark.functions.vector.cosine_similarity`.
+
+    The matrix is stored dimension-major in double (each fold step is one
+    contiguous row) and the row norms are folded once, so a query costs
+    one ``dim``-step fold over ``n`` doubles."""
+
+    def __init__(self, mat: np.ndarray):
+        self.mat_t = np.ascontiguousarray(np.asarray(mat).T,
+                                          dtype=np.float64)
+        self.norms = np.sqrt(_fold(self.mat_t, self.mat_t))
+
+    def cosine(self, query_vec, rows: np.ndarray | None = None
+               ) -> np.ndarray:
+        """Unrounded cosine of ``query_vec`` against every row (or the
+        ``rows`` subset), with the reference's zero-magnitude guard."""
+        q = np.asarray(query_vec, dtype=np.float32).astype(np.float64)
+        mat_t, na = self.mat_t, self.norms
+        if rows is not None:
+            mat_t, na = mat_t[:, rows], na[rows]
+        nb = np.sqrt(_fold(q, q))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = _fold(mat_t, q) / (na * nb)
+        return np.where((na == 0.0) | (nb == 0.0), 0.0, sims)
+
+
+def rank_top_k(sims: np.ndarray, ids, top_k: int,
+               threshold: float | None = None
+               ) -> tuple[np.ndarray, list[float]]:
+    """Positions and 6-digit-rounded scores of the top-k rows: rounded
+    similarity desc, then id asc, then ``similarity >= threshold`` —
+    the :func:`top_k_similar` contract (filtering before or after the
+    cut keeps the same prefix, since the filter is monotone in the
+    rounded score).
+
+    Rounding is monotone, so only the band of rows whose raw score is
+    within 2e-6 of the k-th best can round level with or above it; only
+    that band is rounded and sorted."""
+    n = len(sims)
+    if n == 0:
+        return np.zeros(0, dtype=np.int64), []
+    kk = min(top_k, n)
+    kth = np.partition(sims, n - kk)[n - kk]
+    band = np.flatnonzero(sims >= kth - 2e-6)
+    rounded = round6_half_up(sims[band])
+    order = sorted(range(len(band)),
+                   key=lambda i: (-rounded[i], ids[band[i]]))[:kk]
+    scores = [float(rounded[i]) for i in order]
+    if threshold is not None:
+        order = [i for i, s in zip(order, scores) if s >= threshold]
+        scores = [s for s in scores if s >= threshold]
+    return band[order], scores
 
 
 def top_k_similar_arrow(docs: DataFrame, query_vec: list[float],

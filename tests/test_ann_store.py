@@ -394,6 +394,32 @@ def test_index_health_and_compact(spark, sf_dir, tmp_path):
     assert _topk() == want
 
 
+def _append_sliver(spark, sf_dir, path):
+    """Append and publish a slice of the corpus, so some cells hold more
+    than one file and the next compaction has work to do (a no-op
+    compaction publishes nothing)."""
+    idx, _ = IVFIndex.read(spark, path)
+    emb = load_table(spark, sf_dir, "embeddings") \
+        .select("vec_id", "embedding")
+    idx.append(emb.filter("vec_id % 7 = 3"), path)
+    ann_store.publish_snapshot(path, note="sliver")
+
+
+def test_noop_compaction_publishes_nothing(spark, sf_dir, tmp_path):
+    """A manifest-mode compaction with no cell to compact publishes no
+    manifest and returns 0: two no-op passes leave the snapshot history
+    (and so the gc_snapshots keep-window) untouched."""
+    path, _ = ann_store.ensure_index(spark, sf_dir, "ivf",
+                                     root=str(tmp_path / "store"))
+    ann_store.compact_index(spark, path)   # whatever the build left
+    before = ann_store.list_snapshots(path)
+    current = ann_store.current_snapshot_version(path)
+    assert ann_store.compact_index(spark, path) == 0
+    assert ann_store.compact_index(spark, path) == 0
+    assert ann_store.list_snapshots(path) == before
+    assert ann_store.current_snapshot_version(path) == current
+
+
 def test_snapshot_time_travel_and_isolation(spark, sf_dir, tmp_path):
     """The manifest layer gives readers snapshot isolation: a version
     pinned before an append/compaction resolves to the SAME rowset
@@ -467,14 +493,15 @@ def test_snapshot_publish_excludes_retired_files(spark, sf_dir,
     root = str(tmp_path / "store")
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
+    _append_sliver(spark, sf_dir, path)           # v2: multi-file cells
     n0 = ann_store.read_store_rows(spark, path).count()
-    ann_store.compact_index(spark, path)          # v2, retired files remain
+    ann_store.compact_index(spark, path)          # v3, retired files remain
     v = ann_store.publish_snapshot(path, note="no-op publish")
-    assert v == 3
+    assert v == 4
     assert ann_store.read_store_rows(spark, path).count() == n0
     # and the no-op snapshot references exactly the compacted files
-    assert (ann_store.read_manifest(path, 3)["files"]
-            == ann_store.read_manifest(path, 2)["files"])
+    assert (ann_store.read_manifest(path, 4)["files"]
+            == ann_store.read_manifest(path, 3)["files"])
 
 
 def test_unmanaged_store_falls_back_to_directory_read(spark, sf_dir,
@@ -656,16 +683,17 @@ def test_manifests_carry_referenced_union(spark, sf_dir, tmp_path):
     root = str(tmp_path / "store")
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
-    ann_store.compact_index(spark, path)
-    m1 = ann_store.read_manifest(path, 1)
-    m2 = ann_store.read_manifest(path, 2)
+    _append_sliver(spark, sf_dir, path)           # v2: multi-file cells
+    ann_store.compact_index(spark, path)          # v3
+    m1 = ann_store.read_manifest(path, 2)
+    m2 = ann_store.read_manifest(path, 3)
     assert set(m1["files"]) <= set(m1["referenced_union"])
-    # pre-GC: retired v1 files are on disk, so the union carries both
+    # pre-GC: retired v2 files are on disk, so the union carries both
     assert (set(m1["referenced_union"]) | set(m2["files"])
             == set(m2["referenced_union"]))
-    ann_store.gc_snapshots(path, keep_last=1)     # v1 files deleted
-    v3 = ann_store.publish_snapshot(path, note="post-gc")
-    m3 = ann_store.read_manifest(path, v3)
+    ann_store.gc_snapshots(path, keep_last=1)     # v2 files deleted
+    v4 = ann_store.publish_snapshot(path, note="post-gc")
+    m3 = ann_store.read_manifest(path, v4)
     assert set(m3["referenced_union"]) == set(m2["files"])
     assert not (set(m1["files"]) - set(m2["files"])) \
         & set(m3["referenced_union"])
@@ -695,12 +723,14 @@ def test_round6_half_up_matches_spark_round(spark):
     repr, NOT binary-product rounding — advisor r13)."""
     import pyspark.sql.functions as F
 
+    from dotnetvectorsearch_spark.operators.search import round6_half_up
+
     vals = [0.0001245, -0.0001245, 0.0001255, 0.0002445, 0.7654321987,
             0.0001244, 0.5, -0.9999995, 0.123456789]
     sdf = spark.createDataFrame([(v,) for v in vals], "x double") \
         .select(F.round("x", 6).alias("r")).collect()
     for v, row in zip(vals, sdf):
-        assert ann_store._round6_half_up(v) == row.r, (v, row.r)
+        assert round6_half_up(v) == row.r, (v, row.r)
 
 
 def test_nprobe_curve_dedups_reappended_ids(ivf_and_panel, spark):

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from dotnetvectorsearch_spark.api import VectorSearchEngine
@@ -126,3 +127,159 @@ def test_search_unknown_method_rejected(engine):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="unknown search method"):
         engine.search("anything", method="hnsw")
+
+
+# ------------------------------------------------- serving path: the pin
+
+def test_engine_pins_corpus(engine):
+    """A corpus within the driver bound is pinned, and health() says so."""
+    serving = engine.health()["serving"]
+    assert serving["path"] == "driver", serving
+    assert serving["rows"] == 4 <= serving["bound_rows"]
+    assert serving["bytes"] > 0
+
+
+def _jobs_launched(spark, fn) -> list[int]:
+    """Spark job ids launched while ``fn`` runs, via a private job group."""
+    sc = spark.sparkContext
+    group = f"zero-jobs-{id(fn)}"
+    sc.setJobGroup(group, "request")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pinned_requests_launch_no_spark_jobs(engine, spark):
+    """Every request type is answered from the pin with zero Spark jobs
+    (the IVF fit on first use included). A fast path that silently never
+    fires fails here, not in a benchmark."""
+    requests = {
+        "search": lambda: engine.search("refund policy", top_k=3),
+        "search_threshold": lambda: engine.search(
+            "refund policy", top_k=3, threshold=0.1,
+            include_embeddings=True),
+        "ann_search": lambda: engine.search("refund policy", top_k=3,
+                                            method="ivf"),
+        "similarity": lambda: engine.calculate_similarity("a b", "c d"),
+        "embed_batch": lambda: engine.get_embeddings_batch(["x", "y"]),
+        "list_documents": lambda: engine.list_documents(True),
+        "health": engine.health,
+    }
+    for name, fn in requests.items():
+        assert _jobs_launched(spark, fn) == [], name
+
+
+@pytest.fixture(scope="module", params=["deterministic", "hashed"])
+def engine_pair(request, spark, tmp_path_factory):
+    """The same stored corpus served twice: pinned, and with the driver
+    bound patched to 0 so construction falls back to the Spark path. The
+    Spark-path engine also embeds multi-text requests through the UDF
+    (batch size 1), so the in-process kernel is checked against it."""
+    import random
+
+    from dotnetvectorsearch_spark.embeddings import HashedProjectionEmbedder
+    from dotnetvectorsearch_spark.operators import ann
+
+    rng = random.Random(7)
+    words = ("cancel booking refund policy hotel check in front desk "
+             "level portal days within use where what how is the my "
+             "do room late breakfast parking").split()
+    rows = [(i, " ".join(rng.choice(words) for _ in range(6)),
+             " ".join(rng.choice(words) for _ in range(5)))
+            for i in range(1, 241)]
+    emb = (DeterministicEmbedder(dim=32) if request.param == "deterministic"
+           else HashedProjectionEmbedder(dim=32))
+    raw = spark.createDataFrame(rows, "id long, question string, "
+                                "answer string")
+    path = str(tmp_path_factory.mktemp("corpus") / request.param)
+    prepare_documents(raw, emb).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    pinned = VectorSearchEngine(spark, corpus, emb)
+    mp = pytest.MonkeyPatch()
+    mp.setattr(ann, "_DRIVER_RW_BYTES", 0)
+    try:
+        fallback = VectorSearchEngine(spark, corpus, emb)
+    finally:
+        mp.undo()
+    fallback._batch_rows = 1
+    assert pinned.health()["serving"]["path"] == "driver"
+    assert fallback.health()["serving"]["path"] == "spark"
+    yield pinned, fallback
+    fallback.corpus.unpersist()
+
+
+def _same(a, b):
+    """Identical results: values, float bits and dict key order."""
+    assert a == b
+    assert repr(a) == repr(b)
+
+
+_QUERIES = ["cancel my booking", "refund policy days", "late breakfast",
+            "where is the front desk parking"]
+
+
+@pytest.mark.parametrize("method", ["brute", "ivf"])
+def test_pinned_search_matches_spark_path(engine_pair, method):
+    pinned, fallback = engine_pair
+    for q in _QUERIES:
+        for kw in ({}, {"threshold": 0.2}, {"include_embeddings": True},
+                   {"top_k": 50, "threshold": 0.0}):
+            got = pinned.search(q, method=method, **kw)
+            assert got["result_count"] > 0, (q, kw)
+            _same(got, fallback.search(q, method=method, **kw))
+
+
+def test_pinned_ivf_index_matches_spark_path(engine_pair):
+    pinned, fallback = engine_pair
+    pinned.search("hotel", method="ivf")
+    fallback.search("hotel", method="ivf")
+    (p_idx, p_cells), (f_idx, f_indexed) = (pinned._ann["ivf"],
+                                            fallback._ann["ivf"])
+    assert np.array_equal(p_idx.centroids, f_idx.centroids)
+    f_cells = dict(f_indexed.select("id", "cell").collect())
+    assert {int(i): int(c) for i, c in zip(pinned._pin.ids, p_cells)} \
+        == f_cells
+
+
+def test_pinned_similarity_embeddings_listing_match_spark_path(
+        engine_pair):
+    pinned, fallback = engine_pair
+    for a, b in zip(_QUERIES, reversed(_QUERIES)):
+        for inc in (False, True):
+            _same(pinned.calculate_similarity(a, b, include_embeddings=inc),
+                  fallback.calculate_similarity(a, b,
+                                                include_embeddings=inc))
+    _same(pinned.get_embeddings_batch(_QUERIES),
+          fallback.get_embeddings_batch(_QUERIES))
+    for inc in (False, True):
+        _same(pinned.list_documents(inc), fallback.list_documents(inc))
+    _same(pinned.health()["total_documents"],
+          fallback.health()["total_documents"])
+
+
+def test_spark_path_counts_once_and_launches_jobs(engine_pair, spark):
+    """Past the bound, requests run Spark jobs (so the zero-job check
+    above can fail) but the document count is taken once per engine."""
+    _, fallback = engine_pair
+    fallback.search("hotel")
+    assert _jobs_launched(spark, lambda: fallback.search("hotel"))
+    assert _jobs_launched(spark, fallback.health) == []
+
+
+def test_driver_cosine_bit_equal_to_spark_expression(engine_pair, spark):
+    """The unrounded driver kernel equals the Spark cosine expression to
+    the last bit (rounding to 6 digits would hide a different
+    summation order)."""
+    from dotnetvectorsearch_spark.functions.vector import cosine_similarity
+    from dotnetvectorsearch_spark.localdf import local_df
+
+    pinned, fallback = engine_pair
+    for text in _QUERIES:
+        q = pinned._embed_texts([text], prefix="query: ")[0]
+        want = dict(fallback.corpus.crossJoin(
+            local_df(spark, [(q,)], "q array<float>"))
+            .select("id", cosine_similarity("embedding", "q")).collect())
+        got = pinned._pin.vectors.cosine(q)
+        assert [want[int(i)] for i in pinned._pin.ids] == got.tolist()

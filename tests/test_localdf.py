@@ -66,6 +66,22 @@ def test_local_df_rejects_like_create_dataframe(spark):
         local_df(spark, [(1,), (2.5,)], "q double").collect()
 
 
+def test_local_df_not_nullable_raises_like_create_dataframe(spark):
+    # a None in a nullable=False field skips the Arrow path (which would
+    # store the null silently), so the classic verifier raises the same
+    # error stock createDataFrame does
+    import pytest
+    from pyspark.sql.types import LongType, StructField, StructType
+    st = StructType([StructField("x", LongType(), nullable=False)])
+    rows = [(1,), (None,)]
+    assert _arrow_local_df(spark, rows, st) is None
+    assert _arrow_local_df(spark, [(1,), (2,)], st) is not None
+    with pytest.raises(Exception, match="NOT_NULLABLE"):
+        spark.createDataFrame(rows, st).collect()
+    with pytest.raises(Exception, match="NOT_NULLABLE"):
+        local_df(spark, rows, st).collect()
+
+
 def test_local_df_falls_back_for_unsupported_types(spark):
     import datetime
     rows = [(datetime.datetime(2031, 3, 1, 12, 0, 0),)]
