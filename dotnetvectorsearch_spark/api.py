@@ -24,25 +24,30 @@ Endpoint -> method map (semantics notes cite the reference):
 
 Serving path. The reference answers every request in-process over an
 in-memory list (``VectorSearchService.cs:142-203``). The engine does the
-same whenever the corpus is bounded: at construction one
-``limit(max_rows + 1).toArrow()`` probe collects the whole corpus — id,
-embedding and every other column — as one Arrow table, pinned on the
-driver, with ``max_rows = 64 MB // (4 * embedder.dim)`` (the driver
-read/write bound of ``operators/ann.py``). Brute and IVF search, the
-document listing and the document count are then answered from the pin
-with zero Spark jobs, by exact driver twins of the Spark expressions
-(``operators/search.py``: bit-equal scores, the same order and the same
-dict keys, pinned in tests/test_api.py).
+same whenever the corpus is bounded. At construction the corpus is
+cached, and one aggregate job counts at most ``max_rows + 1`` of its
+rows and estimates their Arrow bytes, with ``max_rows = 64 MB //
+(4 * embedder.dim)`` and 64 MB the driver read/write bound of
+``operators/ann.py``. Only a corpus within both bounds is then collected
+with one ``limit(max_rows + 1).toArrow()`` — id, embedding and every
+other column — and pinned on the driver as one Arrow table. Brute and
+IVF search, the document listing and the document count are answered
+from the pin with zero Spark jobs, by exact driver twins of the Spark
+expressions (``operators/search.py``: bit-equal scores, the same order
+and the same dict keys, pinned in tests/test_api.py); the IVF index is
+fit from the pin as well.
 
-The pin is refused when the probe overflows the bound, an id or an
-embedding (or one of its elements) is null, an embedding's length is
-not ``embedder.dim``, or an embedding holds a non-finite value. The
-corpus is then cached and served by Spark jobs, the only formulation
-that scales past driver memory; the document count is taken once per
-engine. :meth:`health` reports which path was taken and why. On either
-path, query texts are embedded in-process whenever the request fits one
-Arrow batch and :meth:`calculate_similarity` scores its two vectors on
-the driver; the ``lsh``/``pq``/``ivfpq`` methods always run on Spark.
+The pin is refused when the corpus has more rows or bytes than the
+bound (the collected table is checked again), an id or an embedding (or
+one of its elements) is null, an embedding's length is not
+``embedder.dim``, or an embedding holds a non-finite value. The cached
+corpus is then served by Spark jobs, the only formulation that scales
+past driver memory; the document count is taken once per engine.
+:meth:`health` reports which path was taken and why. On either path,
+texts are embedded in-process by the backend's kernel and
+:meth:`calculate_similarity` scores its two vectors on the driver; the
+``lsh``/``pq``/``ivfpq`` methods always run on Spark, over the cached
+corpus.
 """
 
 from __future__ import annotations
@@ -50,9 +55,9 @@ from __future__ import annotations
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import AtomicType, BinaryType, StringType, StructType
 
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 from dotnetvectorsearch_spark.functions.text import QUERY_PREFIX
@@ -95,22 +100,61 @@ class _PinnedCorpus:
         return [r.asDict() for r in rows]
 
 
+def _row_bytes(df: DataFrame) -> Column:
+    """A row's Arrow bytes, estimated by a Spark expression so the probe
+    can size the corpus without collecting it: exact for string and
+    binary values and the float32 embedding, 16 bytes for any other
+    scalar, the length of the string form for any other nested value,
+    plus 8 bytes of offsets and validity per column."""
+    total = F.lit(0)
+    for f in df.schema.fields:
+        c = df[f.name]
+        if f.name == _VEC:
+            b = F.greatest(F.size(c), F.lit(0)) * 4
+        elif isinstance(f.dataType, (StringType, BinaryType)):
+            b = F.octet_length(c)
+        elif isinstance(f.dataType, AtomicType):
+            b = F.lit(16)
+        else:
+            b = F.octet_length(c.cast("string"))
+        total = total + F.coalesce(b, F.lit(0)) + 8
+    return total
+
+
 def _pin_corpus(corpus: DataFrame, id_col: str, dim: int
                 ) -> tuple[_PinnedCorpus | None, dict[str, Any]]:
     """Collect the corpus once if it is provably small and servable by
-    the driver kernels: (pin or None, the serving decision)."""
+    the driver kernels: (pin or None, the serving decision).
+
+    One aggregate job first counts at most ``max_rows + 1`` rows and
+    estimates their bytes; only a corpus within both bounds is then
+    collected, and the collected table is checked against the byte
+    bound again."""
     import pyarrow.compute as pc
 
-    max_rows = ann._DRIVER_RW_BYTES // (4 * dim)
-    table = corpus.limit(max_rows + 1).toArrow()
+    bound = ann._DRIVER_RW_BYTES
+    max_rows = bound // (4 * dim)
+    rows, est = (corpus.select(_row_bytes(corpus).alias("b"))
+                 .limit(max_rows + 1)
+                 .agg(F.count(F.lit(1)), F.sum("b")).first())
     serving: dict[str, Any] = {"path": "spark", "reason": "",
-                               "rows": table.num_rows,
-                               "bytes": table.nbytes,
-                               "bound_rows": max_rows}
+                               "rows": rows, "bytes": est or 0,
+                               "bound_rows": max_rows,
+                               "bound_bytes": bound}
+    if rows > max_rows:
+        serving["reason"] = f"more than {max_rows} rows"
+        return None, serving
+    if serving["bytes"] > bound:
+        serving["reason"] = f"more than {bound} bytes"
+        return None, serving
+    table = corpus.limit(max_rows + 1).toArrow()
+    serving.update(rows=table.num_rows, bytes=table.nbytes)
     vecs = table.column(_VEC).combine_chunks()
     flat = vecs.flatten()
     if table.num_rows > max_rows:
         serving["reason"] = f"more than {max_rows} rows"
+    elif table.nbytes > bound:
+        serving["reason"] = f"more than {bound} bytes"
     elif table.column(id_col).null_count or vecs.null_count \
             or flat.null_count:
         serving["reason"] = "null id or embedding"
@@ -135,13 +179,13 @@ class VectorSearchEngine:
         self.spark = spark
         self.embedder = embedder
         self.id_col = id_col
-        self._pin, self.serving = _pin_corpus(corpus, id_col, embedder.dim)
-        self.corpus = corpus.cache() if cache and self._pin is None \
-            else corpus
+        # Cached on either path: the probes and the pin read the corpus
+        # once, and lsh/pq/ivfpq scan it again on a pinned engine too.
+        self.corpus = corpus.cache() if cache else corpus
+        self._pin, self.serving = _pin_corpus(self.corpus, id_col,
+                                              embedder.dim)
         self._total: int | None = None
         self._ann: dict[str, Any] = {}
-        self._batch_rows = int(spark.conf.get(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
 
     @property
     def total_documents(self) -> int:
@@ -154,23 +198,14 @@ class VectorSearchEngine:
     # ----------------------------------------------------------- embeddings
 
     def _embed_texts(self, texts: list[str], prefix: str = "") -> list[list[float]]:
-        """Embed all texts with one batched kernel call: in-process when
-        the request fits one Arrow batch, else one Spark job (replaces
-        Task.WhenAll of batch-1 inferences, EmbeddingService.cs:26-30)."""
+        """Embed all texts with one in-process kernel call, no Spark job
+        (replaces Task.WhenAll of batch-1 inferences,
+        EmbeddingService.cs:26-30)."""
         for t in texts:
             if t is None or not t.strip():
                 raise ValueError("Text cannot be null or empty")
-        if self._batch_rows <= 0 or len(texts) <= self._batch_rows:
-            return [v.tolist() for v in
-                    self.embedder.embed_batch([prefix + t for t in texts])]
-        from dotnetvectorsearch_spark.localdf import local_df
-        df = local_df(self.spark,
-                      [(i, prefix + t) for i, t in enumerate(texts)],
-                      "i long, t string")
-        rows = (df.withColumn("e", self.embedder.embed_column("t"))
-                .select("i", "e").collect())
-        by_i = {r.i: list(r.e) for r in rows}
-        return [by_i[i] for i in range(len(texts))]
+        return [v.tolist() for v in
+                self.embedder.embed_batch([prefix + t for t in texts])]
 
     def get_embedding(self, text: str) -> dict[str, Any]:
         """POST /api/embeddings — raw text, no prefix."""
@@ -272,16 +307,19 @@ class VectorSearchEngine:
                 for r, s in zip(pin.rows(pos, cols), scores)]
 
     def _ivf(self) -> tuple[ann.IVFIndex, np.ndarray]:
-        """The engine's IVF index over the pin and each row's cell. A pin
-        of at most ``MAX_SAMPLE`` rows is the whole training sample, so
-        the fit runs on the driver with centroids identical to the Spark
-        path's; a larger pin samples through Spark as that path does."""
+        """The engine's IVF index over the pin and each row's cell, fit on
+        the driver. A pin of at most ``MAX_SAMPLE`` rows is the whole
+        training sample, so the centroids are identical to the Spark
+        path's; a larger pin trains on a seeded sample of
+        ``MAX_SAMPLE`` rows, kept in pin order."""
         if "ivf" not in self._ann:
             idx = ann.IVFIndex(**_IVF)
-            if len(self._pin.ids) <= ann.MAX_SAMPLE:
-                idx.fit_matrix(self._pin.mat)
-            else:
-                idx.fit(self.corpus.select(self.id_col, _VEC))
+            mat = self._pin.mat
+            if len(mat) > ann.MAX_SAMPLE:
+                keep = np.random.RandomState(idx.seed).choice(
+                    len(mat), ann.MAX_SAMPLE, replace=False)
+                mat = mat[np.sort(keep)]
+            idx.fit_matrix(mat)
             self._ann["ivf"] = (idx, idx._assign_cells(idx.centroids,
                                                        self._pin.mat))
         return self._ann["ivf"]

@@ -136,7 +136,7 @@ def test_engine_pins_corpus(engine):
     serving = engine.health()["serving"]
     assert serving["path"] == "driver", serving
     assert serving["rows"] == 4 <= serving["bound_rows"]
-    assert serving["bytes"] > 0
+    assert 0 < serving["bytes"] <= serving["bound_bytes"]
 
 
 def _jobs_launched(spark, fn) -> list[int]:
@@ -174,9 +174,7 @@ def test_pinned_requests_launch_no_spark_jobs(engine, spark):
 @pytest.fixture(scope="module", params=["deterministic", "hashed"])
 def engine_pair(request, spark, tmp_path_factory):
     """The same stored corpus served twice: pinned, and with the driver
-    bound patched to 0 so construction falls back to the Spark path. The
-    Spark-path engine also embeds multi-text requests through the UDF
-    (batch size 1), so the in-process kernel is checked against it."""
+    bound patched to 0 so construction falls back to the Spark path."""
     import random
 
     from dotnetvectorsearch_spark.embeddings import HashedProjectionEmbedder
@@ -203,7 +201,6 @@ def engine_pair(request, spark, tmp_path_factory):
         fallback = VectorSearchEngine(spark, corpus, emb)
     finally:
         mp.undo()
-    fallback._batch_rows = 1
     assert pinned.health()["serving"]["path"] == "driver"
     assert fallback.health()["serving"]["path"] == "spark"
     yield pinned, fallback
@@ -283,3 +280,68 @@ def test_driver_cosine_bit_equal_to_spark_expression(engine_pair, spark):
             .select("id", cosine_similarity("embedding", "q")).collect())
         got = pinned._pin.vectors.cosine(q)
         assert [want[int(i)] for i in pinned._pin.ids] == got.tolist()
+
+
+def test_udf_matches_in_process_kernel(engine_pair, spark):
+    """The shared pandas UDF (one Arrow batch per row here) embeds
+    bit-equal to the in-process kernel the engine calls."""
+    from dotnetvectorsearch_spark.localdf import local_df
+
+    pinned, _ = engine_pair
+    emb = pinned.embedder
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        got = dict(local_df(spark, list(enumerate(_QUERIES)),
+                            "i long, t string")
+                   .select("i", emb.embed_column("t")).collect())
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
+                       "10000")
+    want = emb.embed_batch(_QUERIES)
+    assert [got[i] for i in range(len(_QUERIES))] == want.tolist()
+
+
+def test_ivf_fit_subsamples_a_large_pin_on_the_driver(engine_pair, spark,
+                                                      monkeypatch):
+    """A pin past the training-sample size fits IVF from a seeded
+    sample of the pin: no Spark job, and the same centroids every time."""
+    from dotnetvectorsearch_spark.operators import ann
+
+    pinned, _ = engine_pair
+    monkeypatch.setattr(ann, "MAX_SAMPLE", 100)
+    fits = []
+    for _ in range(2):
+        pinned._ann.pop("ivf", None)
+        assert _jobs_launched(spark, lambda: pinned.search(
+            "hotel", method="ivf")) == []
+        fits.append(pinned._ann["ivf"])
+    assert np.array_equal(fits[0][0].centroids, fits[1][0].centroids)
+    assert np.array_equal(fits[0][1], fits[1][1])
+    pinned._ann.pop("ivf")
+
+
+def test_wide_text_columns_refuse_the_pin(spark, monkeypatch):
+    """Vectors within the bound but text columns past it: the probe
+    refuses the pin on bytes before collecting the corpus, and the
+    engine serves the same answers through Spark."""
+    from dotnetvectorsearch_spark.operators import ann
+
+    raw = spark.createDataFrame(
+        [(i, f"question {i} " + "x" * 4000, f"answer {i}")
+         for i in range(1, 9)], "id long, question string, answer string")
+    emb = DeterministicEmbedder(dim=32)
+    corpus = prepare_documents(raw, emb)
+    monkeypatch.setattr(ann, "_DRIVER_RW_BYTES", 16 * 1024)
+    wide = VectorSearchEngine(spark, corpus, emb)
+    serving = wide.health()["serving"]
+    assert serving["path"] == "spark", serving
+    assert serving["reason"] == f"more than {16 * 1024} bytes"
+    assert serving["rows"] == 8 <= serving["bound_rows"]
+    assert serving["bytes"] > 8 * 2 * 4000
+    monkeypatch.undo()
+    narrow = VectorSearchEngine(spark, corpus, emb)
+    assert narrow.health()["serving"]["path"] == "driver"
+    _same(wide.search("question 3", top_k=3),
+          narrow.search("question 3", top_k=3))
+    wide.corpus.unpersist()
+    narrow.corpus.unpersist()
