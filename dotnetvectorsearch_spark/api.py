@@ -25,13 +25,12 @@ Endpoint -> method map (semantics notes cite the reference):
 Serving path. The reference answers every request in-process over an
 in-memory list (``VectorSearchService.cs:142-203``). The engine does the
 same whenever the corpus is bounded. At construction the corpus is
-cached, and one aggregate job counts at most ``max_rows + 1`` of its
-rows and estimates their Arrow bytes, with ``max_rows = 64 MB //
-(4 * embedder.dim)`` and 64 MB the driver read/write bound of
-``operators/ann.py``. Only a corpus within both bounds is then collected
-with one ``limit(max_rows + 1).toArrow()`` — id, embedding and every
-other column — and pinned on the driver as one Arrow table. Brute and
-IVF search, the document listing and the document count are answered
+cached and collected once by ``localdf.collect_bounded`` under
+``localdf.DRIVER_BYTES`` (64 MB) and ``max_rows = DRIVER_BYTES //
+(4 * embedder.dim)``: one job sizes at most ``max_rows + 1`` rows,
+then one ``limit(max_rows + 1).toArrow()`` collects id, embedding
+and every other column as one Arrow table, the pin. Brute and IVF
+search, the document listing and the document count are answered
 from the pin with zero Spark jobs, by exact driver twins of the Spark
 expressions (``operators/search.py``: bit-equal scores, the same order
 and the same dict keys, pinned in tests/test_api.py); the IVF index is
@@ -55,10 +54,11 @@ from __future__ import annotations
 from typing import Any
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import AtomicType, BinaryType, StringType, StructType
+from pyspark.sql.types import StructType
 
+from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 from dotnetvectorsearch_spark.functions.text import QUERY_PREFIX
 from dotnetvectorsearch_spark.operators import ann
@@ -100,62 +100,27 @@ class _PinnedCorpus:
         return [r.asDict() for r in rows]
 
 
-def _row_bytes(df: DataFrame) -> Column:
-    """A row's Arrow bytes, estimated by a Spark expression so the probe
-    can size the corpus without collecting it: exact for string and
-    binary values and the float32 embedding, 16 bytes for any other
-    scalar, the length of the string form for any other nested value,
-    plus 8 bytes of offsets and validity per column."""
-    total = F.lit(0)
-    for f in df.schema.fields:
-        c = df[f.name]
-        if f.name == _VEC:
-            b = F.greatest(F.size(c), F.lit(0)) * 4
-        elif isinstance(f.dataType, (StringType, BinaryType)):
-            b = F.octet_length(c)
-        elif isinstance(f.dataType, AtomicType):
-            b = F.lit(16)
-        else:
-            b = F.octet_length(c.cast("string"))
-        total = total + F.coalesce(b, F.lit(0)) + 8
-    return total
-
-
 def _pin_corpus(corpus: DataFrame, id_col: str, dim: int
                 ) -> tuple[_PinnedCorpus | None, dict[str, Any]]:
-    """Collect the corpus once if it is provably small and servable by
-    the driver kernels: (pin or None, the serving decision).
-
-    One aggregate job first counts at most ``max_rows + 1`` rows and
-    estimates their bytes; only a corpus within both bounds is then
-    collected, and the collected table is checked against the byte
-    bound again."""
+    """Collect the corpus once if it is within the driver bound and
+    servable by the driver kernels: (pin or None, the serving decision).
+    ``rows`` and ``bytes`` describe the collected table, None when the
+    bound refused it before the collect."""
     import pyarrow.compute as pc
 
-    bound = ann._DRIVER_RW_BYTES
+    bound = localdf.DRIVER_BYTES
     max_rows = bound // (4 * dim)
-    rows, est = (corpus.select(_row_bytes(corpus).alias("b"))
-                 .limit(max_rows + 1)
-                 .agg(F.count(F.lit(1)), F.sum("b")).first())
-    serving: dict[str, Any] = {"path": "spark", "reason": "",
-                               "rows": rows, "bytes": est or 0,
-                               "bound_rows": max_rows,
-                               "bound_bytes": bound}
-    if rows > max_rows:
-        serving["reason"] = f"more than {max_rows} rows"
+    table, reason = localdf.collect_bounded(corpus, max_rows, bound)
+    serving: dict[str, Any] = {
+        "path": "spark", "reason": reason,
+        "rows": None if table is None else table.num_rows,
+        "bytes": None if table is None else table.nbytes,
+        "bound_rows": max_rows, "bound_bytes": bound}
+    if table is None:
         return None, serving
-    if serving["bytes"] > bound:
-        serving["reason"] = f"more than {bound} bytes"
-        return None, serving
-    table = corpus.limit(max_rows + 1).toArrow()
-    serving.update(rows=table.num_rows, bytes=table.nbytes)
     vecs = table.column(_VEC).combine_chunks()
     flat = vecs.flatten()
-    if table.num_rows > max_rows:
-        serving["reason"] = f"more than {max_rows} rows"
-    elif table.nbytes > bound:
-        serving["reason"] = f"more than {bound} bytes"
-    elif table.column(id_col).null_count or vecs.null_count \
+    if table.column(id_col).null_count or vecs.null_count \
             or flat.null_count:
         serving["reason"] = "null id or embedding"
     elif pc.any(pc.not_equal(pc.list_value_length(vecs), dim)).as_py():
@@ -165,7 +130,7 @@ def _pin_corpus(corpus: DataFrame, id_col: str, dim: int
         if not np.isfinite(mat).all():
             serving["reason"] = "non-finite embedding value"
         else:
-            serving.update(path="driver", reason="within bound")
+            serving["path"] = "driver"
             return _PinnedCorpus(table, corpus.schema, id_col, mat), serving
     return None, serving
 
@@ -262,9 +227,8 @@ class VectorSearchEngine:
                                           include_embeddings)
         else:
             if method == "brute":
-                from dotnetvectorsearch_spark.localdf import local_df
-                query = local_df(self.spark, [(qvec,)],
-                                 "query_embedding array<float>")
+                query = localdf.local_df(self.spark, [(qvec,)],
+                                         "query_embedding array<float>")
                 hits_df = top_k_similar(
                     self.corpus, query, top_k=top_k, id_col=self.id_col,
                     threshold=threshold,
@@ -374,8 +338,9 @@ class VectorSearchEngine:
 
     def health(self) -> dict[str, Any]:
         """GET /health, plus the serving decision: ``path`` ("driver" or
-        "spark"), ``reason``, and the probe's ``rows``/``bytes`` against
-        ``bound_rows``."""
+        "spark"), ``reason``, and the collected ``rows``/``bytes`` (None
+        when the bound refused the collect) against ``bound_rows`` and
+        ``bound_bytes``."""
         return {
             "status": "healthy",
             "embedding_dimensions": self.embedder.dim,

@@ -1,36 +1,55 @@
-"""Fast DataFrame construction for small DRIVER-LOCAL row lists.
+"""The Arrow boundary between the driver and Spark, both directions.
 
-``spark.createDataFrame(rows, schema)`` parallelizes the rows into
-``defaultParallelism`` pickled slices (32 on the bench host) and every
-action on the frame replays them through a Python-runner job. For the
-tiny frames the engine builds constantly — a 1-row query vector, an
-8-row centroid table, a recall scalar — that is pure boundary overhead
-(guide §4: cross the JVM<->Python boundary once; §6: Arrow for driver
-transfers).
+**Driver -> Spark.** ``spark.createDataFrame(rows, schema)``
+parallelizes the rows into ``defaultParallelism`` pickled slices (32
+on the bench host) and every action on the frame replays them through
+a Python-runner job. For the tiny frames the engine builds constantly —
+a 1-row query vector, an 8-row centroid table, a recall scalar — that
+is pure boundary overhead (guide §4: cross the JVM<->Python boundary
+once; §6: Arrow for driver transfers).
 
-:func:`local_df` therefore builds the frame as a pyarrow Table and
-hands it to ``createDataFrame`` whenever every field is in the
-supported scalar/array set: the rows land in the JVM as a
-**LocalTableScan** (no RDD, no Python runner at action time — measured
-count 0.39→0.16 s, collect 0.23→0.03 s, write 0.31→0.16 s for an 8-row
-frame). Values are identical to the classic path: ints/floats/strings/
-booleans/None map to the same JVM values, ``array<float>`` pays the
-same IEEE float64→float32 narrowing the pickle path performs, NaN stays
-NaN (never null). Type verification happens EAGERLY at construction
-(pyarrow raises on a value that does not fit the declared type), which
-is stricter-at-the-driver than the classic path's lazy executor-side
-check — the failure just surfaces earlier, at the call site.
+:func:`local_df` therefore builds the frame as a pyarrow Table
+(:func:`arrow_table`) and hands it to ``createDataFrame`` whenever
+every field is in the supported scalar/array set: the rows land in the
+JVM as a **LocalTableScan** (no RDD, no Python runner at action time —
+measured count 0.39→0.16 s, collect 0.23→0.03 s, write 0.31→0.16 s for
+an 8-row frame). Values are identical to the classic path:
+ints/floats/strings/booleans/None map to the same JVM values,
+``array<float>`` pays the same IEEE float64→float32 narrowing the
+pickle path performs, NaN stays NaN (never null). Type verification
+happens EAGERLY at construction (pyarrow raises on a value that does
+not fit the declared type), which is stricter-at-the-driver than the
+classic path's lazy executor-side check — the failure just surfaces
+earlier, at the call site.
 
 Fields outside the supported set (timestamps, decimals, nested
 structs), or rows pyarrow rejects, fall back to the r13 behavior:
 ``parallelize(rows, 1 + n//100_000)`` single-slice construction — and
 on runtimes without a driver ``sparkContext`` (Spark Connect), plain
 ``createDataFrame(rows, schema)``.
+
+**Spark -> driver.** Several operators take a bounded driver path for
+small inputs and keep their distributed plan, the only formulation that
+scales past driver memory, for everything else: the engine's pinned
+corpus, the IVF index write, connected components, PageRank and BPE
+training. Each gate is one :func:`collect_bounded` call under a row
+bound of its own and the shared byte bound :data:`DRIVER_BYTES`, read
+at call time: setting it to 0 sends every gate down its distributed
+path, which is how the tests and ``tools/check_oracle.py
+--distributed`` prove each pair equal.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
+
+# The most Arrow bytes any bounded driver path collects: 64 MB passes
+# through driver memory once.
+DRIVER_BYTES = 64 * 1024 * 1024
 
 # One slice comfortably holds ~100k small rows (driver-local data was
 # never going to be big — anything near this bound should be a real
@@ -38,9 +57,10 @@ from pyspark.sql import DataFrame, SparkSession
 _ROWS_PER_SLICE = 100_000
 
 
-def _pa_schema(schema):
+def pa_schema(struct):
     """pyarrow schema for a StructType whose fields are all in the
-    supported scalar/array set, else None (caller falls back)."""
+    supported scalar/array set, else None (caller falls back). List
+    elements are named ``element``, Spark's own parquet layout."""
     import pyarrow as pa
 
     scalar = {"bigint": pa.int64(), "int": pa.int32(),
@@ -48,7 +68,7 @@ def _pa_schema(schema):
               "float": pa.float32(), "double": pa.float64(),
               "string": pa.string(), "boolean": pa.bool_()}
     fields = []
-    for f in schema.fields:
+    for f in struct.fields:
         s = f.dataType.simpleString()
         if s in scalar:
             fields.append(pa.field(f.name, scalar[s]))
@@ -60,6 +80,31 @@ def _pa_schema(schema):
     return pa.schema(fields)
 
 
+def arrow_table(rows: list, struct):
+    """pyarrow Table of driver-local positional ``rows`` under
+    ``pa_schema(struct)``, or None when the schema or a value is outside
+    the supported set, or a non-nullable field holds None."""
+    sch = pa_schema(struct)
+    if sch is None:
+        return None
+    try:
+        import pyarrow as pa
+        cols = []
+        for i, f in enumerate(sch):
+            vals = [r[i] for r in rows]
+            if not _values_ok(vals, f.type, pa) or (
+                    not struct.fields[i].nullable
+                    and any(v is None for v in vals)):
+                # stock createDataFrame would REJECT (or coerce) these
+                # — let the classic path reproduce its exact behavior,
+                # including its error message
+                return None
+            cols.append(pa.array(vals, type=f.type))
+        return pa.Table.from_arrays(cols, schema=sch)
+    except Exception:  # noqa: BLE001 - value/type outside Arrow's reach
+        return None
+
+
 def _arrow_local_df(spark: SparkSession, rows: list,
                     schema) -> DataFrame | None:
     """LocalTableScan-backed frame via a pyarrow Table, or None when
@@ -68,26 +113,10 @@ def _arrow_local_df(spark: SparkSession, rows: list,
 
     st = (_parse_datatype_string(schema) if isinstance(schema, str)
           else schema)
-    if not isinstance(st, StructType):
-        return None
-    pa_schema = _pa_schema(st)
-    if pa_schema is None:
-        return None
+    table = arrow_table(rows, st) if isinstance(st, StructType) else None
     try:
-        import pyarrow as pa
-        cols = []
-        for i, f in enumerate(pa_schema):
-            vals = [r[i] for r in rows]
-            if not _values_ok(vals, f.type, pa) or (
-                    not st.fields[i].nullable
-                    and any(v is None for v in vals)):
-                # stock createDataFrame would REJECT (or coerce) these
-                # — let the classic path reproduce its exact behavior,
-                # including its error message
-                return None
-            cols.append(pa.array(vals, type=f.type))
-        table = pa.Table.from_arrays(cols, schema=pa_schema)
-        return spark.createDataFrame(table, schema=st)
+        return (None if table is None
+                else spark.createDataFrame(table, schema=st))
     except Exception:  # noqa: BLE001 - value/type outside Arrow's reach
         return None
 
@@ -149,3 +178,107 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     n_slices = 1 + len(rows) // _ROWS_PER_SLICE
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n_slices), schema)
+
+
+# ------------------------------------------------- Spark -> driver side
+
+def local_path(uri: str) -> str | None:
+    """The local filesystem path of a ``file:`` URI (``file:/p`` or
+    ``file:///p``, as Hadoop renders them) or of a bare path; None when
+    it names a remote store."""
+    for pre in ("file://", "file:"):
+        if uri.startswith(pre):
+            uri = uri[len(pre):]
+            break
+    return None if "://" in uri else uri
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of the local files a plan scans, or None when there
+    is no such evidence (in-memory or shuffle-backed plans, remote
+    stores)."""
+    try:
+        paths = [local_path(f) for f in df.inputFiles()]
+        if not paths or None in paths:
+            return None
+        return sum(os.stat(p).st_size for p in paths)
+    except Exception:  # noqa: BLE001 - non-file-backed plans
+        return None
+
+
+# Arrow bytes of one value of each fixed-width Spark type.
+_WIDTH = {"boolean": 1, "tinyint": 1, "smallint": 2, "int": 4, "date": 4,
+          "float": 4, "bigint": 8, "double": 8, "timestamp": 8,
+          "timestamp_ntz": 8}
+
+
+def _width(dt) -> int | None:
+    s = dt.simpleString()
+    return 16 if s.startswith("decimal") else _WIDTH.get(s)
+
+
+def _bytes_per_row(df: DataFrame) -> int | Column:
+    """A row's Arrow bytes: an int when every column is fixed-width (its
+    width plus a byte of validity), else a Spark expression that adds
+    an estimate for each variable-width column — exact for string and
+    binary values and for arrays of a fixed-width type, the length of
+    the string form for any other value, plus 8 bytes of offsets and
+    validity."""
+    fixed, var = 0, []
+    for f in df.schema.fields:
+        w = _width(f.dataType)
+        if w is not None:
+            fixed += w + 1
+            continue
+        c = df[f.name]
+        elem = getattr(f.dataType, "elementType", None)
+        ew = None if elem is None else _width(elem)
+        if ew is not None:
+            b = F.greatest(F.size(c), F.lit(0)) * ew
+        elif isinstance(f.dataType, (StringType, BinaryType)):
+            b = F.octet_length(c)
+        else:
+            b = F.octet_length(c.cast("string"))
+        var.append(F.coalesce(b, F.lit(0)) + 8)
+    return sum(var, F.lit(fixed)) if var else fixed
+
+
+def collect_bounded(df: DataFrame, max_rows: int, max_bytes: int):
+    """``(table, reason)``: ``df`` as one driver-side pyarrow Table when
+    it has at most ``max_rows`` rows and ``max_bytes`` Arrow bytes, else
+    ``(None, reason)`` with nothing past the bound collected.
+
+    1. Size first, only when the schema needs it. When every column is
+       fixed-width the byte bound is a row bound and no job runs;
+       otherwise one job collects the estimated bytes of at most
+       ``max_rows + 1`` rows (:func:`_bytes_per_row`; 4 bytes a row)
+       and the driver counts and sums them.
+    2. Collect once, with ``limit(max_rows + 1).toArrow()``: nulls stay
+       null (never NaN) and arrays arrive in Spark's
+       ``list<element: ...>`` layout.
+    3. Check the collected table's ``num_rows`` and ``nbytes`` again.
+
+    A bound of 0 bytes refuses without a job."""
+    import pyarrow.compute as pc
+
+    too_many = f"more than {max_rows} rows"
+    too_big = f"more than {max_bytes} bytes"
+    if max_bytes <= 0:
+        return None, too_big
+    per_row = _bytes_per_row(df)
+    if isinstance(per_row, int):
+        if per_row * max_rows > max_bytes:
+            max_rows, too_many = max_bytes // per_row, too_big
+    else:
+        sizes = (df.select(per_row.cast("int").alias("b"))
+                 .limit(max_rows + 1).toArrow().column("b"))
+        if len(sizes) > max_rows:
+            return None, too_many
+        if (pc.sum(sizes).as_py() or 0) > max_bytes:
+            return None, too_big
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        return None, too_many
+    if table.nbytes > max_bytes:
+        return None, too_big
+    return table, "within bound"

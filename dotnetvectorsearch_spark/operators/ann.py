@@ -34,97 +34,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.localdf import local_df
 from dotnetvectorsearch_spark.operators.search import top_k_similar
 
 
-# Bounded driver read/write fast path for cell-partitioned index
-# stores: when the rows to move are provably small (local file-backed
-# plan under this many bytes), the transform+partitioned-write runs as
-# ONE Arrow collect plus driver-side pyarrow file writes instead of a
-# chain of Spark jobs (guide §4/§5: cross the JVM<->Python boundary
-# once; the driver may do driver-scale work). Past the bound — or
-# without byte evidence — the distributed write runs unchanged, the
-# only formulation that survives 100 TB. 64 MB of vectors passes
-# through driver memory once; same doctrine and same order of bound as
-# dedup.connected_components / graph.pagerank_undirected.
-_DRIVER_RW_BYTES = 64 * 1024 * 1024
-
 # Default training-sample size of the k-means / codebook fits.
 MAX_SAMPLE = 100_000
 
-
-def _local_fs_path(path: str) -> str | None:
-    """Strip a file: scheme; None when the path names a remote store."""
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://"):]
-    elif local.startswith("file:"):
-        local = local[len("file:"):]
-    return local if "://" not in local else None
-
-
-def _file_plan_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of a LOCAL file-backed plan, or None when
-    there is no file evidence (in-memory frames, remote stores) — the
-    same evidence rule as dedup._spread: no evidence, no fast path."""
-    try:
-        import os as _os
-        files = df.inputFiles()
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            local = _local_fs_path(f)
-            if local is None:
-                return None
-            total += _os.stat(local).st_size
-        return total
-    except Exception:  # noqa: BLE001 - non-file-backed plans
-        return None
-
-
-def _pa_schema_for(schema) -> "object | None":
-    """pyarrow schema matching what Spark writes for ``schema``, or
-    None when a field's type is outside the supported set (caller
-    falls back to the Spark write). List elements are named
-    ``element`` to match Spark's parquet layout exactly."""
-    import pyarrow as pa
-
-    scalar = {"bigint": pa.int64(), "int": pa.int32(),
-              "smallint": pa.int16(), "tinyint": pa.int8(),
-              "float": pa.float32(), "double": pa.float64(),
-              "string": pa.string(), "boolean": pa.bool_()}
-    fields = []
-    for f in schema.fields:
-        s = f.dataType.simpleString()
-        if s in scalar:
-            fields.append(pa.field(f.name, scalar[s]))
-        elif s.startswith("array<") and s[6:-1] in scalar:
-            fields.append(pa.field(f.name, pa.list_(
-                pa.field("element", scalar[s[6:-1]]))))
-        else:
-            return None
-    return pa.schema(fields)
-
-
-def _pa_table(pdf, schema) -> "object":
-    """Build a pyarrow Table from a toPandas frame under an explicit
-    pyarrow schema (exact types, None -> null)."""
-    import numpy as np
-    import pyarrow as pa
-
-    arrays = []
-    for field in schema:
-        col = pdf[field.name]
-        if pa.types.is_list(field.type):
-            np_t = field.type.value_type.to_pandas_dtype()
-            vals = [None if v is None else np.asarray(v, dtype=np_t)
-                    for v in col]
-            arrays.append(pa.array(vals, type=field.type))
-        else:
-            arrays.append(pa.array(col.tolist(), type=field.type))
-    return pa.Table.from_arrays(arrays, schema=schema)
+# Row bound of the driver-side index write (the byte bound,
+# localdf.DRIVER_BYTES, binds first for any vector of 16+ floats).
+_WRITE_MAX_ROWS = 1_000_000
 
 
 def _write_tiny_parquet(spark, rows: list, ddl: str, path: str) -> None:
@@ -132,33 +52,23 @@ def _write_tiny_parquet(spark, rows: list, ddl: str, path: str) -> None:
     codebooks / params — bounded by n_cells or m×n_codes, never the
     corpus): the exact write-side mirror of :func:`_collect_tiny_parquet`.
     For a local path, one pyarrow file with Spark-compatible layout
-    (list elements named ``element``, snappy) and ZERO Spark jobs;
-    non-local stores or types outside the supported set fall back to
-    the ``local_df`` + Spark write path."""
+    (list elements named ``element``, snappy) and ZERO Spark jobs, built
+    by the same row->Arrow code as ``local_df``; non-local stores or
+    values outside the supported set fall back to the ``local_df`` +
+    Spark write path."""
     from pyspark.sql.types import _parse_datatype_string
 
-    dst = _local_fs_path(path)
-    schema = _parse_datatype_string(ddl)
-    pa_schema = _pa_schema_for(schema) if dst is not None else None
-    if pa_schema is not None:
+    dst = localdf.local_path(path)
+    table = (localdf.arrow_table(rows, _parse_datatype_string(ddl))
+             if dst is not None else None)
+    if table is not None:
         import os
         import shutil
 
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        arrays = []
-        for i, field in enumerate(pa_schema):
-            col = [r[i] for r in rows]
-            if pa.types.is_list(field.type):
-                np_t = field.type.value_type.to_pandas_dtype()
-                col = [None if v is None else np.asarray(v, dtype=np_t)
-                       for v in col]
-            arrays.append(pa.array(col, type=field.type))
         shutil.rmtree(dst, ignore_errors=True)
         os.makedirs(dst, exist_ok=True)
-        pq.write_table(pa.Table.from_arrays(arrays, schema=pa_schema),
-                       os.path.join(dst, "part-00000.parquet"),
+        pq.write_table(table, os.path.join(dst, "part-00000.parquet"),
                        compression="snappy")
         return
     local_df(spark, rows, ddl).write.mode("overwrite").parquet(path)
@@ -177,12 +87,8 @@ def _collect_tiny_parquet(spark, path: str) -> list:
     import os
     from types import SimpleNamespace
 
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://"):]
-    elif local.startswith("file:"):
-        local = local[len("file:"):]
-    if "://" not in local and os.path.isdir(local):
+    local = localdf.local_path(path)
+    if local is not None and os.path.isdir(local):
         import pyarrow.parquet as pq
         t = pq.read_table(local)
         cols = t.column_names
@@ -345,11 +251,11 @@ class IVFIndex:
         :meth:`read` can restore a probe-ready index in a NEW session
         (the switching-user persistence contract).
 
-        Small local inputs (byte-evidence bound, see _DRIVER_RW_BYTES)
-        take a bounded driver fast path: one Arrow collect, the same
-        assignment kernel, pyarrow per-cell files — identical rows and
-        file schema (pinned in tests/test_ann.py), ~6 Spark jobs fewer
-        per write."""
+        Small local inputs (within ``localdf.DRIVER_BYTES``) take a
+        bounded driver fast path: one sizing job and one Arrow collect
+        (``localdf.collect_bounded``), the same assignment kernel,
+        pyarrow per-cell files — identical rows and file schema (pinned
+        in tests/test_ann.py)."""
         if not self._write_cells_local(emb, path, vec_col, "overwrite"):
             self.transform(emb, vec_col).write.mode("overwrite") \
                 .partitionBy("cell").parquet(path)
@@ -368,40 +274,45 @@ class IVFIndex:
     def _write_cells_local(self, emb: DataFrame, path: str,
                            vec_col: str, mode: str) -> bool:
         """Bounded driver-side twin of
-        ``transform(emb).write.partitionBy("cell")``: when the input is
-        provably small (local file-backed plan under _DRIVER_RW_BYTES)
-        and the schema is in the supported scalar/array set, collect
-        once via Arrow, assign cells with the SAME kernel the UDF runs,
-        and write one pyarrow file per cell (list elements named
-        ``element``, snappy — byte-layout-compatible with Spark's own
-        files; read parity pinned in tests). Returns False (caller runs
-        the distributed write) when any evidence is missing."""
+        ``transform(emb).write.partitionBy("cell")`` for a local path and
+        a supported schema: collect within ``localdf.DRIVER_BYTES``,
+        assign cells with the SAME kernel the UDF runs, and write one
+        pyarrow file per cell (list elements named ``element``, snappy,
+        nulls as nulls — Spark's own layout; read parity pinned in
+        tests). Every cell is built before anything under ``path`` is
+        touched, so a failure (a null embedding raises) leaves an
+        existing index intact. False (caller runs the distributed
+        write) past the bound."""
         import os
         import shutil
         import uuid
 
-        nbytes = _file_plan_bytes(emb)
-        dst = _local_fs_path(path)
-        if nbytes is None or nbytes > _DRIVER_RW_BYTES or dst is None:
-            return False
-        sch = _pa_schema_for(emb.schema)
-        if sch is None:
-            return False
         import pyarrow.parquet as pq
-        pdf = emb.toPandas()
+
+        dst = localdf.local_path(path)
+        sch = localdf.pa_schema(emb.schema)
+        if dst is None or sch is None:
+            return False
+        table, _ = localdf.collect_bounded(emb, _WRITE_MAX_ROWS,
+                                           localdf.DRIVER_BYTES)
+        if table is None:
+            return False
+        table = table.cast(sch)
+        vecs = table.column(vec_col)
+        if vecs.null_count:
+            raise ValueError(f"null {vec_col} in rows written to an "
+                             "IVF index")
+        cells = (self._assign_cells(self.centroids,
+                                    vecs.to_numpy(zero_copy_only=False))
+                 if table.num_rows else np.zeros(0, np.int32))
+        parts = {int(c): table.take(np.flatnonzero(cells == c))
+                 for c in np.unique(cells)}
         if mode == "overwrite":
             shutil.rmtree(dst, ignore_errors=True)
         os.makedirs(dst, exist_ok=True)
-        if len(pdf) == 0:
-            return True
-        cells = self._assign_cells(self.centroids,
-                                   pdf[vec_col].to_numpy())
-        table = _pa_table(pdf, sch)
-        import numpy as np
-        for cell in np.unique(cells):
-            d = os.path.join(dst, f"cell={int(cell)}")
+        for cell, part in parts.items():
+            d = os.path.join(dst, f"cell={cell}")
             os.makedirs(d, exist_ok=True)
-            part = table.take(np.flatnonzero(cells == cell))
             pq.write_table(
                 part,
                 os.path.join(d,

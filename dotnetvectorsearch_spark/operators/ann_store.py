@@ -40,6 +40,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import localdf
 from ..sources.io import load_table
 from .ann import IVFIndex, IVFPQIndex, PQIndex
 from .dedup import _input_fingerprint
@@ -661,7 +662,7 @@ def _compact_cells(spark: SparkSession, path: str, tmp: str, ver: int,
     ``new_files``. Two paths, same output contract:
 
     - **driver merge** when every file is local and their total size
-      is under the bounded-driver budget (`ann._DRIVER_RW_BYTES`): a
+      is under the bounded-driver budget (`localdf.DRIVER_BYTES`): a
       pyarrow footer+page concat per cell — zero Spark jobs, the
       read-side mirror of the bounded write path;
     - **distributed rewrite** otherwise: read ONLY the multi-file
@@ -675,8 +676,7 @@ def _compact_cells(spark: SparkSession, path: str, tmp: str, ver: int,
     if not multi:
         return 0
     n = 0
-    from .ann import _DRIVER_RW_BYTES, _local_fs_path
-    dst = _local_fs_path(path)
+    dst = localdf.local_path(path)
     total = None
     if dst is not None:
         try:
@@ -684,7 +684,7 @@ def _compact_cells(spark: SparkSession, path: str, tmp: str, ver: int,
                         for rels in multi.values() for rel in rels)
         except OSError:
             total = None
-    if total is not None and total <= _DRIVER_RW_BYTES:
+    if total is not None and total <= localdf.DRIVER_BYTES:
         import pyarrow as pa
         import pyarrow.parquet as pq
         try:

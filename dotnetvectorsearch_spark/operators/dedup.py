@@ -48,6 +48,7 @@ from dotnetvectorsearch_spark.functions.text import (
     ordered_word_ngrams,
     word_shingles,
 )
+from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.caching import transient_persist
 from dotnetvectorsearch_spark.functions.vector import cosine_similarity
 
@@ -118,23 +119,15 @@ def _spread(df: DataFrame, key: str, amp: int = 1) -> DataFrame:
         # the defaultParallelism ceiling keeps at-scale behavior
         # identical, and inputs with enough real splits never reach
         # here at all.
-        if files:
-            # Non-file-backed plans return files == [] WITHOUT raising;
-            # they must keep the defaultParallelism target (an in-memory
-            # or shuffle-backed corpus has no byte evidence to shrink
-            # by — collapsing it to the floor serializes CPU-heavy
-            # stages, ADVICE r13 medium).
-            import os as _os
-            nbytes = 0
-            for f in files:
-                local = f
-                for pre in ("file://", "file:"):
-                    if local.startswith(pre):
-                        local = local[len(pre):]
-                        break
-                nbytes += _os.stat(local).st_size
-            target = max(4, min(target,
-                                -(-nbytes * max(1, amp) // _SPREAD_BYTES)))
+        #
+        # Plans without local file evidence (plan_bytes is None) keep
+        # the defaultParallelism target: an in-memory or shuffle-backed
+        # corpus has no byte evidence to shrink by, and collapsing it to
+        # the floor serializes CPU-heavy stages (ADVICE r13 medium).
+        nbytes = localdf.plan_bytes(df)
+        if nbytes is not None:
+            target = max(4, min(
+                target, -(-nbytes * max(1, amp) // _SPREAD_BYTES)))
     except Exception:  # noqa: BLE001 - non-file-backed plans
         pass
     if df.rdd.getNumPartitions() < target:
@@ -742,7 +735,6 @@ def _input_fingerprint(df: DataFrame):
     path string, which still catches file-set changes."""
     import hashlib
     import os
-    from urllib.parse import urlparse
 
     try:
         files = sorted(df.inputFiles())
@@ -761,14 +753,12 @@ def _input_fingerprint(df: DataFrame):
     max_mtime_ns = -1
     for idx in stat_idx:
         f = files[idx]
-        # Hadoop renders local URIs as file:/p, file://p, or
-        # file:///p depending on the path-resolution route; a naive
-        # prefix strip mishandles the single-slash form and every stat
-        # degrades to (-1,-1), silently losing the (size, mtime)
-        # sensitivity (advisor r6). urlparse handles all three.
-        p = urlparse(f).path if f.startswith("file:") else f
+        # Hadoop renders local URIs as file:/p or file:///p depending
+        # on the path-resolution route; a stat on the raw URI degrades
+        # to (-1,-1), silently losing the (size, mtime) sensitivity
+        # (advisor r6). local_path resolves both.
         try:
-            st = os.stat(p)
+            st = os.stat(localdf.local_path(f) or f)
             size, mtime_ns = st.st_size, st.st_mtime_ns
         except OSError:
             size, mtime_ns = -1, -1
@@ -1367,23 +1357,19 @@ def lsh_bucket_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
 # ------------------------------------------------------ duplicate clusters
 
 
-def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
+def _cc_driver_union_find(spark, edges) -> DataFrame:
     """Union-find with path compression over a BOUNDED edge list
     (callers enforce the bound) — the small-graph fast path of
-    :func:`connected_components`. Edges arrive via Arrow ``toPandas``
-    (two int64 columns, ~16 MB/M edges — not py4j Row objects), node
-    ids are remapped to dense indices, and the min-id component label
-    is assigned in a final vectorized pass. Same ``(node, component)``
-    contract as the distributed loop."""
+    :func:`connected_components`. Edges arrive as one collected Arrow
+    table (two int64 columns, ~16 MB/M edges — not py4j Row objects),
+    node ids are remapped to dense indices, and the min-id component
+    label is assigned in a final vectorized pass. Same
+    ``(node, component)`` contract as the distributed loop."""
     import numpy as np
 
-    pdf = edges.toPandas()
-    u = pdf["u"].to_numpy(dtype=np.int64)
-    v = pdf["v"].to_numpy(dtype=np.int64)
+    u = edges.column("u").to_numpy().astype(np.int64)
+    v = edges.column("v").to_numpy().astype(np.int64)
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-    if len(nodes) == 0:   # no edges: empty pandas can't infer a schema
-        return edges.sparkSession.createDataFrame(
-            [], "node long, component long")
     parent = np.arange(len(nodes))
 
     def find(x: int) -> int:
@@ -1404,14 +1390,17 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
     np.minimum.at(comp_min, roots, nodes)   # min node id per component
     import pandas as pd
     out = pd.DataFrame({"node": nodes, "component": comp_min[roots]})
-    return edges.sparkSession.createDataFrame(out)
+    return spark.createDataFrame(out, "node long, component long")
+
+
+# Row bound of connected_components' driver union-find (symmetrized
+# edges, two int64 columns).
+_CC_DRIVER_EDGES = 1_000_000
 
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b",
-                         max_iter: int = 25,
-                         driver_fast_path_edges: int = 1_000_000
-                         ) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """Connected components over an undirected pair list; returns
     ``(node, component)`` where ``component`` is the minimum node id
     reachable from ``node``. The last stage of every dedup pipeline:
@@ -1438,11 +1427,12 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     Small-graph fast path: each distributed round costs several Spark
     jobs of pure scheduling on a frame that is usually tiny (dedup edge
     sets are a small fraction of the corpus). When the symmetrized edge
-    count is at or under ``driver_fast_path_edges`` — a BOUNDED,
-    counted-first collect, the same enforced-bound doctrine as
-    ``search.knn_graph`` — the components come from an O(E α(E))
-    union-find on the driver instead (~16 MB at the 1M-edge default,
-    measured 3-5x faster end-to-end at bench scale). Past the bound the
+    list has at most ``_CC_DRIVER_EDGES`` rows within
+    ``localdf.DRIVER_BYTES`` — one bounded collect
+    (``localdf.collect_bounded``; two fixed-width columns need no sizing
+    job) — the components come from an O(E α(E)) union-find on the
+    driver instead (~16 MB at 1M edges, measured 3-5x faster end-to-end
+    at bench scale). Past the bound the
     iterative join plan runs, which is the only formulation that
     survives 100 TB. Both paths produce identical (node, min-id
     component) output; the tests run both and compare.
@@ -1470,11 +1460,12 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     # distributed loop, which only needs ids to be orderable.
     integral = {"tinyint", "smallint", "int", "bigint"}
     ids_integral = all(t in integral for _, t in edges.dtypes)
-    if (driver_fast_path_edges and ids_integral
-            and edges.count() <= driver_fast_path_edges):
-        out = _cc_driver_union_find(edges)
-        edges.unpersist()
-        return out
+    if ids_integral:
+        table, _ = localdf.collect_bounded(edges, _CC_DRIVER_EDGES,
+                                           localdf.DRIVER_BYTES)
+        if table is not None:
+            edges.unpersist()
+            return _cc_driver_union_find(edges.sparkSession, table)
     # label(u) starts as min(u, min neighbour) — one round of propagation
     # folded into initialization.
     labels = (edges.groupBy("u")

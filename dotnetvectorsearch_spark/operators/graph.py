@@ -21,18 +21,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.caching import transient_persist
 from dotnetvectorsearch_spark.localdf import local_df
 
 _DEC = "decimal(27,15)"
 
+# Row bound of pagerank_undirected's driver path, in undirected edges
+# (both directions are collected: twice this many rows).
+_PAGERANK_DRIVER_EDGES = 200_000
+
 
 def pagerank_undirected(pairs: DataFrame, src: str = "id_a",
                         dst: str = "id_b", iters: int = 5,
                         damping: float = 0.85,
-                        round_digits: int = 6,
-                        driver_fast_path_edges: int = 200_000
-                        ) -> DataFrame:
+                        round_digits: int = 6) -> DataFrame:
     """Fixed-iteration PageRank on an undirected pair list.
 
     ``pairs`` is one row per undirected edge (id_a, id_b); both
@@ -75,21 +78,18 @@ def pagerank_undirected(pairs: DataFrame, src: str = "id_a",
     # runs — the only formulation that survives 100 TB. Integral ids
     # only: the driver path indexes ids through int64.
     #
-    # The gate is a bound+1 LIMIT probe, not a count: CollectLimit
-    # short-circuits after bound+1 rows, so a 100 TB edge list pays a
-    # few partitions of the persisted frame instead of a full
-    # materializing count (ADVICE r13), and when the probe comes back
-    # complete it IS the driver path's input — one job gates AND
-    # collects.
+    # The gate is one bounded collect: its bound+1 LIMIT short-circuits
+    # on a 100 TB edge list, and two fixed-width columns need no sizing
+    # job, so one job gates AND collects. A null id never reaches the
+    # int64 index: such an edge list takes the distributed loop.
     integral = {"tinyint", "smallint", "int", "bigint"}
-    ids_integral = all(t in integral for _, t in edges.dtypes)
-    if driver_fast_path_edges and ids_integral:
-        bound = 2 * driver_fast_path_edges
-        probe = edges.limit(bound + 1).toPandas()
-        if len(probe) <= bound:
-            return _pagerank_driver_pdf(edges.sparkSession, probe,
-                                        dict(edges.dtypes)["src"],
-                                        iters, damping, round_digits)
+    if all(t in integral for _, t in edges.dtypes):
+        table, _ = localdf.collect_bounded(
+            edges, 2 * _PAGERANK_DRIVER_EDGES, localdf.DRIVER_BYTES)
+        if table is not None and not table.column("src").null_count:
+            return _pagerank_driver(edges.sparkSession, table,
+                                    dict(edges.dtypes)["src"],
+                                    iters, damping, round_digits)
     nodes = transient_persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     n = nodes.count()
@@ -111,10 +111,11 @@ def pagerank_undirected(pairs: DataFrame, src: str = "id_a",
                         F.round("rank", round_digits).alias("pagerank"))
 
 
-def _pagerank_driver(edges: DataFrame, iters: int, damping: float,
-                     round_digits: int) -> DataFrame:
-    """Driver-side twin of the distributed recurrence, BIT-IDENTICAL by
-    construction (each step mirrors the exact engine semantics):
+def _pagerank_driver(spark, edges, node_type: str, iters: int,
+                     damping: float, round_digits: int) -> DataFrame:
+    """Driver-side twin of the distributed recurrence over the collected
+    (src, dst) Arrow table, BIT-IDENTICAL by construction (each step
+    mirrors the exact engine semantics):
 
     - contribution ``rank/deg``: IEEE double division, same as the
       per-row double division in the join plan;
@@ -128,26 +129,16 @@ def _pagerank_driver(edges: DataFrame, iters: int, damping: float,
     - ``base + damping * s``: the same two IEEE double ops;
     - the final ``F.round(x, d)`` is HALF_UP on the shortest repr
       (pinned against Spark in tests/test_ann_store.py round6 test).
-    """
-    return _pagerank_driver_pdf(edges.sparkSession, edges.toPandas(),
-                                dict(edges.dtypes)["src"], iters,
-                                damping, round_digits)
 
-
-def _pagerank_driver_pdf(spark, pdf, node_type: str, iters: int,
-                         damping: float, round_digits: int) -> DataFrame:
-    """Core of :func:`_pagerank_driver` over an already-collected
-    (src, dst) pandas frame — the gate's limit-probe hands its rows
-    straight here so the collect happens exactly once. Results are
-    row-order independent: nodes are sorted by ``np.unique`` and the
-    per-node decimal sum is an exact scaled-int64 sum."""
+    Results are row-order independent: nodes are sorted by ``np.unique``
+    and the per-node decimal sum is an exact scaled-int64 sum."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
 
     schema = f"node {node_type}, pagerank double"
-    u = pdf["src"].to_numpy(dtype=np.int64)
-    v = pdf["dst"].to_numpy(dtype=np.int64)
+    u = edges.column("src").to_numpy().astype(np.int64)
+    v = edges.column("dst").to_numpy().astype(np.int64)
     if len(u) == 0:
         return local_df(spark, [], schema)
     nodes, ui = np.unique(u, return_inverse=True)

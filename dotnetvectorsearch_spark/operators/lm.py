@@ -25,11 +25,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark import localdf
+
 # Bigram-model broadcast bound: (bg string ~ 20 B, two longs) * 5M
 # types ~ 300 MB serialized — near the practical broadcast ceiling.
 # Past it, bigram_logprob degrades to shuffle joins instead of risking
 # the broadcast limit / driver OOM (bound-then-broadcast doctrine).
 BIGRAM_BROADCAST_MAX_TYPES = 5_000_000
+
+# Row bound of bpe_train_rules' driver merge loop, in distinct words.
+_BPE_DRIVER_VOCAB = 2_000_000
 
 
 def tokens(text: Column | str, lowercase: bool = True) -> Column:
@@ -300,8 +305,7 @@ def _bpe_driver_train(word_counts: list[tuple[str, int]],
 
 
 def bpe_train(docs: DataFrame, text_col: str = "text",
-              n_merges: int = 8,
-              driver_fast_path_vocab: int | None = 2_000_000) -> DataFrame:
+              n_merges: int = 8) -> DataFrame:
     """Rule TABLE wrapper over :func:`bpe_train_rules` — same training,
     returned as a (rank, left, right, merged) DataFrame for pipelines
     that join or store the rules. Callers that immediately iterate the
@@ -309,16 +313,14 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
     the createDataFrame + collect round-trip costs ~0.6s of pure
     scheduling for a handful of rows (PERF_R06.md).
     """
-    from dotnetvectorsearch_spark.localdf import local_df
-    return local_df(
+    return localdf.local_df(
         docs.sparkSession,
-        bpe_train_rules(docs, text_col, n_merges, driver_fast_path_vocab),
+        bpe_train_rules(docs, text_col, n_merges),
         "rank int, left string, right string, merged string")
 
 
 def bpe_train_rules(docs: DataFrame, text_col: str = "text",
-                    n_merges: int = 8,
-                    driver_fast_path_vocab: int | None = 2_000_000
+                    n_merges: int = 8
                     ) -> list[tuple[int, str, str, str]]:
     """Distributed BPE tokenizer training (Sennrich et al., ACL'16):
     learn the first ``n_merges`` merge rules from the corpus.
@@ -340,10 +342,11 @@ def bpe_train_rules(docs: DataFrame, text_col: str = "text",
     nature (each merge depends on the last), so no SQL oracle — the
     pure-Python reference in tests/test_lm.py is the correctness twin.
 
-    Bounded driver fast path (the connected-components doctrine,
-    dedup.py:581): the (word, count) table is COUNTED first; at or
-    under ``driver_fast_path_vocab`` distinct words it is collected
-    once and the whole merge loop runs in pure Python — every
+    Bounded driver fast path (the connected-components doctrine): the
+    (word, count) table is collected once by
+    ``localdf.collect_bounded`` when it has at most
+    ``_BPE_DRIVER_VOCAB`` distinct words within ``localdf.DRIVER_BYTES``,
+    and the whole merge loop runs in pure Python — every
     distributed iteration otherwise pays 2-3 stage-scheduling floors
     for an argmax over a table that is orders of magnitude smaller
     than the corpus. Past the bound (web-scale vocab with no
@@ -355,22 +358,23 @@ def bpe_train_rules(docs: DataFrame, text_col: str = "text",
              .select(F.explode(tokens(text_col)).alias("w"))
              .filter(F.length("w") > 0)
              .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
-    if driver_fast_path_vocab:
-        from dotnetvectorsearch_spark.caching import transient_persist
-        words = transient_persist(words)
-        if words.count() <= driver_fast_path_vocab:
-            # Arrow toPandas, not collect(): the vocab is tens of
-            # thousands of rows, and py4j Row materialization costs
-            # ~0.5s where the Arrow transfer is ~10ms.
-            pdf = words.toPandas()
-            wc = list(zip(pdf["w"].tolist(), pdf["cnt"].tolist()))
-            words.unpersist()
-            return _bpe_driver_train(wc, n_merges)
+    from dotnetvectorsearch_spark.caching import transient_persist
+    # Persisted: the bounded collect sizes the table, then collects it.
+    # Arrow, not collect(): the vocab is tens of thousands of rows, and
+    # py4j Row materialization costs ~0.5s where the Arrow transfer is
+    # ~10ms.
+    words = transient_persist(words)
+    table, _ = localdf.collect_bounded(words, _BPE_DRIVER_VOCAB,
+                                       localdf.DRIVER_BYTES)
+    if table is not None:
+        words.unpersist()
+        return _bpe_driver_train(
+            list(zip(table.column("w").to_pylist(),
+                     table.column("cnt").to_pylist())), n_merges)
     syms = words.select(
         "cnt",
         F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
         .alias("syms"))
-    from dotnetvectorsearch_spark.caching import transient_persist
     syms = transient_persist(syms)
     rules = []
     for rank in range(n_merges):

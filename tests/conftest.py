@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import sys
 from pathlib import Path
 
@@ -22,3 +24,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_launched(spark):
+    """``jobs_launched(fn)``: the Spark job ids launched while ``fn``
+    runs, via a private job group."""
+    groups = itertools.count()
+
+    def launched(fn) -> list[int]:
+        sc = spark.sparkContext
+        group = f"jobs-{next(groups)}"
+        sc.setJobGroup(group, "counted")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    return launched
+
+
+@pytest.fixture(scope="session")
+def force_distributed():
+    """``with force_distributed(): ...`` runs its body with the shared
+    driver byte bound at 0, so every bounded driver gate takes its
+    distributed path (parity tests compare the two)."""
+    from dotnetvectorsearch_spark import localdf
+
+    @contextlib.contextmanager
+    def forced():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(localdf, "DRIVER_BYTES", 0)
+            yield
+    return forced

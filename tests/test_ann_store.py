@@ -822,30 +822,18 @@ def test_stream_append_auto_publishes_on_managed_store(spark, sf_dir,
 
 
 def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
-                                            monkeypatch):
+                                            force_distributed):
     """r14 bounded driver fast paths (write / append / cell merge) are
     row- and search-identical to the distributed formulations, and
     manifest compaction rewrites ONLY multi-file cells, referencing
     single-file cells unchanged."""
-    from dotnetvectorsearch_spark.operators import ann as ann_mod
-
-    # module fixtures persist the embeddings scan; the CacheManager
-    # then substitutes an InMemoryRelation into any later plan built
-    # over it, which (correctly) removes the file evidence the bounded
-    # driver path gates on — clear it so this test exercises the
-    # fast path the bench session sees
-    spark.catalog.clearCache()
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
     seed = emb.filter("vec_id % 10 = 0")
     delta = emb.filter("vec_id % 10 = 5")
     idx = IVFIndex(n_cells=8, nprobe=8).fit(seed, max_sample=4000)
 
-    def cycle(path, force_distributed):
-        if force_distributed:
-            monkeypatch.setattr(ann_mod, "_file_plan_bytes",
-                                lambda df: None)
-            monkeypatch.setattr(ann_mod, "_DRIVER_RW_BYTES", -1)
+    def cycle(path):
         idx.write(seed, path)
         ann_store.publish_snapshot(path, note="build")
         n1 = ann_store.snapshot_row_count(path)
@@ -861,17 +849,17 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
         qv = emb.filter("vec_id = 3").collect()[0].embedding
         top = [(r.vec_id, r.similarity)
                for r in i2.search(frame, qv, k=10).collect()]
-        monkeypatch.undo()
         return n1, n2, n3, ncells, rows, top
 
     # the driver fast path must actually ENGAGE for this input (local
-    # file-backed plan, supported schema) — guards against the gate
-    # silently falling back to the distributed write for everything
+    # path, supported schema, within the bound) — guards against the
+    # gate silently falling back to the distributed write for everything
     assert idx._write_cells_local(seed, str(tmp_path / "probe"),
                                   "embedding", "overwrite") is True
 
-    fast = cycle(str(tmp_path / "fast"), force_distributed=False)
-    slow = cycle(str(tmp_path / "slow"), force_distributed=True)
+    fast = cycle(str(tmp_path / "fast"))
+    with force_distributed():
+        slow = cycle(str(tmp_path / "slow"))
     assert fast == slow
     # row conservation through the cycle
     assert fast[0] == seed.count()
@@ -898,3 +886,52 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
     assert set(kept) <= set(after)
     assert (ann_store.snapshot_row_count(path3)
             == ann_store.read_store_rows(spark, path3).count())
+
+
+def test_driver_write_stores_null_ids_and_builds_before_delete(
+        spark, sf_dir, tmp_path, force_distributed):
+    """A source row with a null ``vec_id`` is stored as null by the
+    driver write, exactly as Spark's writer stores it, on overwrite of
+    an existing index and on append; a null embedding raises before
+    anything under an existing index is removed."""
+    from pyspark.sql import functions as F
+
+    emb = load_table(spark, sf_dir, "embeddings") \
+        .select("vec_id", "embedding")
+    seed = emb.filter("vec_id % 10 = 0")
+    idx = IVFIndex(n_cells=4, nprobe=4).fit(seed, max_sample=4000)
+    vid = F.col("vec_id")
+    emb.filter(vid % 10 == 5) \
+        .withColumn("vec_id", F.when(vid % 20 != 5, vid)) \
+        .write.parquet(str(tmp_path / "nulls"))
+    nulls = spark.read.parquet(str(tmp_path / "nulls"))
+    n_null = nulls.filter(vid.isNull()).count()
+    assert n_null > 0
+    assert idx._write_cells_local(nulls, str(tmp_path / "probe"),
+                                  "embedding", "overwrite") is True
+
+    def cycle(path):
+        idx.write(seed, path)
+        idx.write(nulls, path)
+        idx.append(nulls, path)
+        return sorted((r.vec_id is None, r.vec_id or 0, r.cell,
+                       tuple(r.embedding))
+                      for r in IVFIndex.read(spark, path)[1].collect())
+
+    fast = cycle(str(tmp_path / "fast"))
+    with force_distributed():
+        slow = cycle(str(tmp_path / "slow"))
+    assert fast == slow
+    assert sum(r[0] for r in fast) == 2 * n_null
+
+    emb.filter(vid % 10 == 5) \
+        .withColumn("embedding", F.when(vid % 20 != 5, F.col("embedding"))) \
+        .write.parquet(str(tmp_path / "null_vecs"))
+    null_vecs = spark.read.parquet(str(tmp_path / "null_vecs"))
+    path = tmp_path / "fast"
+    before = {p: p.read_bytes() for p in path.rglob("*") if p.is_file()}
+    for write in (idx.write, idx.append):
+        with pytest.raises(ValueError, match="null embedding"):
+            write(null_vecs, str(path))
+        assert {p: p.read_bytes() for p in path.rglob("*")
+                if p.is_file()} == before

@@ -139,19 +139,7 @@ def test_engine_pins_corpus(engine):
     assert 0 < serving["bytes"] <= serving["bound_bytes"]
 
 
-def _jobs_launched(spark, fn) -> list[int]:
-    """Spark job ids launched while ``fn`` runs, via a private job group."""
-    sc = spark.sparkContext
-    group = f"zero-jobs-{id(fn)}"
-    sc.setJobGroup(group, "request")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pinned_requests_launch_no_spark_jobs(engine, spark):
+def test_pinned_requests_launch_no_spark_jobs(engine, jobs_launched):
     """Every request type is answered from the pin with zero Spark jobs
     (the IVF fit on first use included). A fast path that silently never
     fires fails here, not in a benchmark."""
@@ -168,17 +156,16 @@ def test_pinned_requests_launch_no_spark_jobs(engine, spark):
         "health": engine.health,
     }
     for name, fn in requests.items():
-        assert _jobs_launched(spark, fn) == [], name
+        assert jobs_launched(fn) == [], name
 
 
 @pytest.fixture(scope="module", params=["deterministic", "hashed"])
-def engine_pair(request, spark, tmp_path_factory):
+def engine_pair(request, spark, tmp_path_factory, force_distributed):
     """The same stored corpus served twice: pinned, and with the driver
     bound patched to 0 so construction falls back to the Spark path."""
     import random
 
     from dotnetvectorsearch_spark.embeddings import HashedProjectionEmbedder
-    from dotnetvectorsearch_spark.operators import ann
 
     rng = random.Random(7)
     words = ("cancel booking refund policy hotel check in front desk "
@@ -195,12 +182,8 @@ def engine_pair(request, spark, tmp_path_factory):
     prepare_documents(raw, emb).write.parquet(path)
     corpus = spark.read.parquet(path)
     pinned = VectorSearchEngine(spark, corpus, emb)
-    mp = pytest.MonkeyPatch()
-    mp.setattr(ann, "_DRIVER_RW_BYTES", 0)
-    try:
+    with force_distributed():
         fallback = VectorSearchEngine(spark, corpus, emb)
-    finally:
-        mp.undo()
     assert pinned.health()["serving"]["path"] == "driver"
     assert fallback.health()["serving"]["path"] == "spark"
     yield pinned, fallback
@@ -256,13 +239,14 @@ def test_pinned_similarity_embeddings_listing_match_spark_path(
           fallback.health()["total_documents"])
 
 
-def test_spark_path_counts_once_and_launches_jobs(engine_pair, spark):
+def test_spark_path_counts_once_and_launches_jobs(engine_pair,
+                                                  jobs_launched):
     """Past the bound, requests run Spark jobs (so the zero-job check
     above can fail) but the document count is taken once per engine."""
     _, fallback = engine_pair
     fallback.search("hotel")
-    assert _jobs_launched(spark, lambda: fallback.search("hotel"))
-    assert _jobs_launched(spark, fallback.health) == []
+    assert jobs_launched(lambda: fallback.search("hotel"))
+    assert jobs_launched(fallback.health) == []
 
 
 def test_driver_cosine_bit_equal_to_spark_expression(engine_pair, spark):
@@ -301,7 +285,8 @@ def test_udf_matches_in_process_kernel(engine_pair, spark):
     assert [got[i] for i in range(len(_QUERIES))] == want.tolist()
 
 
-def test_ivf_fit_subsamples_a_large_pin_on_the_driver(engine_pair, spark,
+def test_ivf_fit_subsamples_a_large_pin_on_the_driver(engine_pair,
+                                                      jobs_launched,
                                                       monkeypatch):
     """A pin past the training-sample size fits IVF from a seeded
     sample of the pin: no Spark job, and the same centroids every time."""
@@ -312,7 +297,7 @@ def test_ivf_fit_subsamples_a_large_pin_on_the_driver(engine_pair, spark,
     fits = []
     for _ in range(2):
         pinned._ann.pop("ivf", None)
-        assert _jobs_launched(spark, lambda: pinned.search(
+        assert jobs_launched(lambda: pinned.search(
             "hotel", method="ivf")) == []
         fits.append(pinned._ann["ivf"])
     assert np.array_equal(fits[0][0].centroids, fits[1][0].centroids)
@@ -320,24 +305,27 @@ def test_ivf_fit_subsamples_a_large_pin_on_the_driver(engine_pair, spark,
     pinned._ann.pop("ivf")
 
 
-def test_wide_text_columns_refuse_the_pin(spark, monkeypatch):
-    """Vectors within the bound but text columns past it: the probe
-    refuses the pin on bytes before collecting the corpus, and the
-    engine serves the same answers through Spark."""
-    from dotnetvectorsearch_spark.operators import ann
+def test_wide_text_columns_refuse_the_pin(spark, jobs_launched,
+                                         monkeypatch):
+    """Vectors within the bound but text columns past it: the sizing
+    job refuses the pin on bytes before collecting the corpus (one job,
+    no collect), and the engine serves the same answers through Spark."""
+    from dotnetvectorsearch_spark import localdf
 
     raw = spark.createDataFrame(
         [(i, f"question {i} " + "x" * 4000, f"answer {i}")
          for i in range(1, 9)], "id long, question string, answer string")
     emb = DeterministicEmbedder(dim=32)
     corpus = prepare_documents(raw, emb)
-    monkeypatch.setattr(ann, "_DRIVER_RW_BYTES", 16 * 1024)
-    wide = VectorSearchEngine(spark, corpus, emb)
+    monkeypatch.setattr(localdf, "DRIVER_BYTES", 16 * 1024)
+    engines = []
+    assert len(jobs_launched(lambda: engines.append(
+        VectorSearchEngine(spark, corpus, emb)))) == 1
+    wide = engines[0]
     serving = wide.health()["serving"]
     assert serving["path"] == "spark", serving
     assert serving["reason"] == f"more than {16 * 1024} bytes"
-    assert serving["rows"] == 8 <= serving["bound_rows"]
-    assert serving["bytes"] > 8 * 2 * 4000
+    assert serving["rows"] is None and serving["bytes"] is None
     monkeypatch.undo()
     narrow = VectorSearchEngine(spark, corpus, emb)
     assert narrow.health()["serving"]["path"] == "driver"

@@ -281,19 +281,19 @@ def test_connected_components_empty_edges(spark):
     assert cl == {1: 1, 2: 2}
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, force_distributed):
     # The bounded driver fast path and the distributed iterative loop
-    # must produce identical components; driver_fast_path_edges=0 forces
-    # the distributed plan on the same graph.
+    # must produce identical components; force_distributed runs the
+    # distributed plan on the same graph.
     edges = ([(i, i + 1) for i in range(9)]
              + [(a, b) for a in range(20, 24) for b in range(a + 1, 24)]
              + [(30, 31), (31, 32), (5, 30)])
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {r.node: r.component
             for r in D.connected_components(df).collect()}
-    dist = {r.node: r.component
-            for r in D.connected_components(
-                df, driver_fast_path_edges=0).collect()}
+    with force_distributed():
+        dist = {r.node: r.component
+                for r in D.connected_components(df).collect()}
     assert fast == dist
 
 

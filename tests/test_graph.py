@@ -37,7 +37,8 @@ def test_pagerank_deterministic_across_partitionings(spark, star_pairs):
     assert a == b   # decimal-summed contributions: bit-equal either way
 
 
-def test_pagerank_driver_fast_path_matches_distributed(spark):
+def test_pagerank_driver_fast_path_matches_distributed(spark,
+                                                      force_distributed):
     """The bounded driver fast path must be BIT-IDENTICAL to the
     distributed join loop — same decimal-summed recurrence, same
     HALF_UP rounding — on an irregular multi-component graph whose
@@ -50,14 +51,27 @@ def test_pagerank_driver_fast_path_matches_distributed(spark):
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
     fast = {r.node: r.pagerank
             for r in pagerank_undirected(pairs).collect()}
-    dist = {r.node: r.pagerank
-            for r in pagerank_undirected(
-                pairs, driver_fast_path_edges=0).collect()}
+    with force_distributed():
+        dist = {r.node: r.pagerank
+                for r in pagerank_undirected(pairs).collect()}
     assert fast == dist
     # and through more iterations (deeper recurrence, more rounding)
     fast9 = {r.node: r.pagerank
              for r in pagerank_undirected(pairs, iters=9).collect()}
-    dist9 = {r.node: r.pagerank
-             for r in pagerank_undirected(
-                 pairs, iters=9, driver_fast_path_edges=0).collect()}
+    with force_distributed():
+        dist9 = {r.node: r.pagerank
+                 for r in pagerank_undirected(pairs, iters=9).collect()}
     assert fast9 == dist9
+
+
+def test_pagerank_null_id_takes_the_distributed_loop(spark,
+                                                     force_distributed):
+    """A null id never becomes a driver-side int64 node: the bounded
+    path defers to the join loop, whose answer it must equal."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (None, 3), (3, 4)],
+                                  "id_a long, id_b long")
+    got = sorted(map(tuple, pagerank_undirected(pairs).collect()), key=str)
+    with force_distributed():
+        want = sorted(map(tuple, pagerank_undirected(pairs).collect()),
+                      key=str)
+    assert got == want

@@ -302,7 +302,8 @@ def test_dsir_target_pred_fast_path_matches_explicit_frames(spark):
         dsir_logweights(df)
 
 
-def test_bpe_train_distributed_path_matches_driver_fast_path(spark):
+def test_bpe_train_distributed_path_matches_driver_fast_path(
+        spark, force_distributed):
     from dotnetvectorsearch_spark.operators.lm import bpe_train
     docs = spark.createDataFrame([
         Row(doc_id=1, text="low low low low low lower lower"),
@@ -311,9 +312,9 @@ def test_bpe_train_distributed_path_matches_driver_fast_path(spark):
     ])
     fast = [(r.rank, r.left, r.right, r.merged) for r in
             bpe_train(docs, n_merges=6).orderBy("rank").collect()]
-    dist = [(r.rank, r.left, r.right, r.merged) for r in
-            bpe_train(docs, n_merges=6, driver_fast_path_vocab=0)
-            .orderBy("rank").collect()]
+    with force_distributed():
+        dist = [(r.rank, r.left, r.right, r.merged) for r in
+                bpe_train(docs, n_merges=6).orderBy("rank").collect()]
     assert fast == dist and len(fast) == 6
 
 

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 import math
 
-from dotnetvectorsearch_spark.localdf import _arrow_local_df, local_df
+from dotnetvectorsearch_spark.localdf import (
+    _arrow_local_df, collect_bounded, local_df)
 
 
 def _norm(rows):
@@ -99,3 +100,61 @@ def test_local_df_float32_narrowing_matches(spark):
     a = local_df(spark, rows, "v array<float>").collect()
     b = spark.createDataFrame(rows, "v array<float>").collect()
     assert a == b
+
+
+# ------------------------------------------------------ collect_bounded
+
+def test_collect_bounded_row_bound_is_inclusive(spark):
+    df = spark.range(0, 10, 1, 3).selectExpr("id", "cast(id as string) s")
+    table, reason = collect_bounded(df, 10, 1 << 20)
+    assert reason == "within bound"
+    assert sorted(table.column("id").to_pylist()) == list(range(10))
+    assert collect_bounded(df, 9, 1 << 20) == (None, "more than 9 rows")
+
+
+def test_collect_bounded_refuses_wide_rows_after_one_sizing_job(
+        spark, jobs_launched):
+    df = spark.range(0, 8, 1, 2).selectExpr(
+        "id", "repeat('x', 4000) as text")
+    out = []
+    jobs = jobs_launched(lambda: out.append(
+        collect_bounded(df, 100, 16 * 1024)))
+    assert out == [(None, f"more than {16 * 1024} bytes")]
+    assert len(jobs) == 1          # the sizing job; nothing collected
+
+
+def test_collect_bounded_fixed_width_costs_one_job(spark, jobs_launched):
+    df = spark.range(0, 50, 1, 4).selectExpr(
+        "id", "cast(id as int) i", "id * 0.5 as d", "id % 2 = 0 as b")
+    out = []
+    assert len(jobs_launched(lambda: out.append(
+        collect_bounded(df, 50, 1 << 20)))) == 1
+    assert out[0][0].num_rows == 50
+    # the byte bound becomes a row bound, still without a sizing job
+    out.clear()
+    assert len(jobs_launched(lambda: out.append(
+        collect_bounded(df, 50, 100)))) == 1
+    assert out == [(None, "more than 100 bytes")]
+
+
+def test_collect_bounded_keeps_nulls_as_none(spark):
+    df = spark.createDataFrame(
+        [(1, [1.5, None], 2.0), (None, None, None)],
+        "a bigint, v array<double>, d double")
+    table, _ = collect_bounded(df, 10, 1 << 20)
+    assert str(table.schema.field("v").type) == "list<element: double>"
+    assert sorted(table.to_pylist(), key=str) == sorted(
+        [{"a": 1, "v": [1.5, None], "d": 2.0},
+         {"a": None, "v": None, "d": None}], key=str)
+
+
+def test_collect_bounded_empty_frame_and_zero_budget(spark, jobs_launched):
+    df = spark.createDataFrame([], "a bigint, s string")
+    table, reason = collect_bounded(df, 10, 1 << 20)
+    assert reason == "within bound"
+    assert table.num_rows == 0 and table.column_names == ["a", "s"]
+    # a 0-byte budget refuses without a job
+    out = []
+    assert jobs_launched(lambda: out.append(
+        collect_bounded(df, 10, 0))) == []
+    assert out == [(None, "more than 0 bytes")]

@@ -42,7 +42,8 @@ def test_search_1m_vectors_exact_topk(spark):
     assert len(rows) == 5
 
 
-def test_connected_components_300k_chain_clusters(spark):
+def test_connected_components_300k_chain_clusters(spark,
+                                                  force_distributed):
     # 50k chains of 6 nodes each (chains, not stars: forces pointer
     # jumping to do real work). At 100x this is the same plan with more
     # partitions — per-round shuffle is linear in |E|.
@@ -52,10 +53,11 @@ def test_connected_components_300k_chain_clusters(spark):
              .filter((F.col("id") % 6) != 5)
              .select(F.col("id").alias("id_a"),
                      (F.col("id") + 1).alias("id_b")))
-    # driver_fast_path_edges=0: this test exists to exercise the
-    # DISTRIBUTED iterative plan (the 100 TB path), which the bounded
-    # union-find fast path would otherwise absorb at this size.
-    comp = connected_components(edges, driver_fast_path_edges=0)
+    # force_distributed: this test exists to exercise the DISTRIBUTED
+    # iterative plan (the 100 TB path), which the bounded union-find
+    # fast path would otherwise absorb at this size.
+    with force_distributed():
+        comp = connected_components(edges)
     agg = comp.agg(
         F.countDistinct("component").alias("n_comp"),
         F.sum(F.when(F.col("component")

@@ -4,6 +4,11 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at sf0.01, then compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted by their
 stringified tuple). Run:  python tools/check_oracle.py [names...]
+
+``--distributed`` sets ``localdf.DRIVER_BYTES`` to 0, so every bounded
+driver path (engine pin, IVF write, connected components, PageRank, BPE
+training, cell compaction) takes its distributed twin; a run in each
+mode proves every driver/distributed pair equal across the registry.
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
+from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.session import get_spark
 from dotnetvectorsearch_spark.sources.io import TPCH_TABLES
@@ -63,7 +69,9 @@ def _norm_val(v):
 
 def main(names: list[str]) -> int:
     write_md = "--md" in names
-    names = [n for n in names if n != "--md"]
+    if "--distributed" in names:
+        localdf.DRIVER_BYTES = 0
+    names = [n for n in names if n not in ("--md", "--distributed")]
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TPCH_TABLES:
