@@ -13,10 +13,12 @@ BASELINE.json's north star, not reference code):
   (band, bucket) — shuffle is proportional to corpus size, not corpus².
   Mega-buckets (degenerate/boilerplate shingles) are dropped by a bucket
   cap, the standard skew guard for web-scale dedup.
-- **SimHash** (`simhash64`, `simhash_candidate_pairs`): 64-bit signature,
-  banded into 4x16-bit chunks for candidate generation (docs within
-  hamming distance k share >= 1 chunk for k <= 3), verified with
-  bit_count(xor).
+- **SimHash** (`simhash_signatures`, `simhash_candidate_pairs`): 64-bit
+  signature, banded into 4x16-bit chunks for candidate generation (docs
+  within hamming distance k share >= 1 chunk for k <= 3), verified with
+  bit_count(xor). Both families, their md5 twins (`*_portable`) and
+  `neardup_filter_incremental` share one LSH core: `_band`,
+  `_bucket_pairs`, `_md5_bands`, `_simhash`, `_simhash_pairs`.
 - **Exact n-gram Jaccard** (`jaccard_pairs`): explode shingles ->
   equi-join on shingle -> count/union arithmetic. The fully-SQL-expressible
   oracle path for verifying the approximate families.
@@ -296,6 +298,92 @@ def dup_span_stats(docs: DataFrame, id_col: str = "doc_id",
     return out
 
 
+# -------------------------------------------------------------- LSH core
+
+
+def _per_band(total: int, parts: int, what: str) -> int:
+    """``total // parts``; ValueError unless the bands split evenly."""
+    if parts <= 0 or total % parts:
+        raise ValueError(f"{what}={total} does not split into {parts} "
+                         f"equal bands")
+    return total // parts
+
+
+def _band(sigs: DataFrame, id_col: str, buckets: list[Column],
+          *carry: str) -> DataFrame:
+    """One (id, *carry, band, bucket) row per doc and band: ``buckets``
+    holds one bucket expression per band, ``band`` is its position."""
+    return sigs.select(id_col, *carry, F.posexplode(F.array(*buckets))
+                       .alias("band", "bucket"))
+
+
+def _bucket_pairs(a: DataFrame, id_col: str, b: DataFrame | None = None,
+                  *cols: str) -> DataFrame:
+    """Distinct (id_a, id_b, <c>_a, <c>_b for c in cols) over `_band`
+    rows that share a (band, bucket): a self-join of ``a`` keeping
+    id_a < id_b when ``b`` is None (persist ``a`` first, both sides
+    read it), else the bipartite ``a`` x ``b`` join."""
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(F.col(id_col).alias(f"id_{s}"), "band", "bucket",
+                         *[F.col(c).alias(f"{c}_{s}") for c in cols])
+    pairs = side(a, "a").join(side(a if b is None else b, "b"),
+                              ["band", "bucket"])
+    if b is None:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b", *[f"{c}_{s}" for c in cols
+                                          for s in "ab"]).distinct()
+
+
+def _md5_bands(bands: int, rows: int) -> list[Column]:
+    """Band keys of a `minhash_signatures_portable` signature: band b's
+    hex values h{b*rows}..h{b*rows+rows-1} joined by '|' — byte for
+    byte the key format the streaming near-dup store persists."""
+    return [F.concat_ws("|", *[F.col(f"h{b * rows + r}")
+                               for r in range(rows)])
+            for b in range(bands)]
+
+
+def _bit_mask(b: int) -> int:
+    return (1 << b) if b < 63 else -(1 << 63)
+
+
+def _simhash(toks: DataFrame, id_col: str, bit_set, bits: int) -> DataFrame:
+    """(id, sig) SimHash over (id, token) rows: signature bit p is set
+    when the +/-1 sum of ``bit_set(p)`` (bit p of the token's hash, a
+    boolean Column) over the doc's tokens is positive. One groupBy(id)
+    with map-side combine; the shuffle carries ``bits`` ints per doc."""
+    sums = [F.sum(F.when(bit_set(p), 1).otherwise(-1)).alias(f"__b{p}")
+            for p in range(bits)]
+    sig = sum((F.when(F.col(f"__b{p}") > 0,
+                      F.lit(_bit_mask(p)).cast("long")).otherwise(0)
+               for p in range(bits)), F.lit(0).cast("long"))
+    return toks.groupBy(id_col).agg(*sums).select(F.col(id_col),
+                                                  sig.alias("sig"))
+
+
+def _simhash_pairs(sigs: DataFrame, id_col: str, chunks: int,
+                   chunk_bits: int, max_hamming: int,
+                   max_bucket_size: int | None = None) -> DataFrame:
+    """(id_a, id_b, hamming) for (id, sig) rows: band the signature
+    into ``chunks`` chunks of ``chunk_bits`` bits (pigeonhole: hamming
+    <= chunks-1 guarantees one identical chunk), drop buckets larger
+    than ``max_bucket_size``, self-join on (chunk, value) and keep
+    bit_count(xor) <= max_hamming."""
+    mask = F.lit((1 << chunk_bits) - 1)
+    banded = transient_persist(_band(
+        sigs, id_col, [F.shiftright("sig", c * chunk_bits).bitwiseAND(mask)
+                       for c in range(chunks)], "sig"))
+    if max_bucket_size:
+        keep = (banded.groupBy("band", "bucket")
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .filter(F.col("__n") <= max_bucket_size).drop("__n"))
+        banded = banded.join(keep, ["band", "bucket"], "leftsemi")
+    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    return (_bucket_pairs(banded, id_col, None, "sig")
+            .select("id_a", "id_b", ham.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming))
+
+
 # --------------------------------------------------------------- minhash
 
 _GOLDEN64 = 0x9E3779B97F4A7C15
@@ -345,23 +433,14 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     # an equally valid independent-permutation family. Salts are xor-ed
     # (never multiplied/added) so ANSI overflow semantics can't bite.
     #
-    # The whole signature is ONE higher-order fold per row (r14):
-    # aggregate over the hashed-shingle array with a running
-    # elementwise-min accumulator. vs the r13 explode -> groupBy(K
-    # mins) -> ids left-join shape this removes the aggregate hash
-    # table, the empty-doc re-attach join, and — at scale, where
-    # inputs have real splits and _spread is a no-op — the signature
-    # stage's only Exchange (guide §2.4: remove shuffles outright).
-    # Values are bit-identical (min over the same xxhash64 values;
-    # empty/null shingle arrays fold to the init = the all-MAX_LONG
-    # empty signature), pinned against the explode+groupBy reference
-    # in tests/test_dedup.py. Collapse-safe per the repo HOF gotcha:
-    # the hashed array is the aggregate's INPUT (evaluated once per
-    # row); the lambdas touch only lambda variables and a literal
-    # salt array. Measured 0.84 -> 0.39 s on the sf0.1 signature
-    # stage. (The md5-portable twins keep the explode+groupBy form:
-    # interpreted per-element md5+concat measured 0.43 -> 0.80 s —
-    # codegen wins there.)
+    # The fold's values are bit-identical to the r13 explode ->
+    # groupBy(K mins) -> re-attach join shape (pinned in
+    # tests/test_dedup.py) without its hash table, join and Exchange:
+    # 0.84 -> 0.39 s on the sf0.1 signature stage. The lambdas touch
+    # only lambda variables and a literal salt array (the repo HOF
+    # gotcha). The md5 family (`minhash_signatures_portable`) keeps
+    # explode+groupBy: an interpreted per-element md5+concat fold
+    # measured 0.43 -> 0.80 s.
     salts = F.array(*[F.lit(_salt(k)) for k in range(num_hashes)])
     empty_sig = F.array_repeat(F.lit(2 ** 63 - 1).cast("long"),
                                num_hashes)
@@ -398,15 +477,9 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     boilerplate) that would otherwise produce O(bucket²) pairs — the skew
     guard that keeps this plan alive at 10^9 docs.
     """
-    band_cols = [
-        F.struct(F.lit(b).alias("band"),
-                 F.hash(F.slice(sig_col, b * rows_per_band + 1, rows_per_band))
-                 .alias("bucket"))
-        for b in range(bands)
-    ]
-    exploded = (sigs.select(id_col, F.explode(F.array(*band_cols)).alias("bb"))
-                .select(id_col, F.col("bb.band").alias("band"),
-                        F.col("bb.bucket").alias("bucket")))
+    exploded = _band(sigs, id_col, [
+        F.hash(F.slice(sig_col, b * rows_per_band + 1, rows_per_band))
+        for b in range(bands)])
     buckets = (exploded.groupBy("band", "bucket")
                .agg(F.collect_list(id_col).alias("__ids"))
                .filter(F.size("__ids") >= 2))
@@ -443,124 +516,54 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
 def verify_jaccard(pairs: DataFrame, docs: DataFrame,
                    id_col: str = "doc_id", text_col: str = "text",
                    shingle_n: int = 3, threshold: float = 0.5,
-                   shingles: DataFrame | None = None,
-                   strategy: str = "arrays") -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs. Two measured
-    formulations (tools/bench_minhash_verify.py, MINHASH_VERIFY.md):
-
-    ``strategy="arrays"`` (default): attach both sides' distinct-shingle
-    arrays to each pair (the doc side is restricted to candidate docs
-    and typically broadcast by AQE) and compute
+                   shingles: DataFrame | None = None) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs: attach both sides'
+    distinct-shingle arrays to each pair (the doc side is restricted to
+    candidate docs and typically broadcast by AQE) and compute
     size(array_intersect)/size(array_union) per pair in one fused
-    codegen stage. Measured FASTER at every candidate volume we can
-    generate locally (256 pairs: 0.36s vs 0.93s; 300k pairs: 0.80s vs
-    1.50s at sf0.1) — per-pair byte volume is identical between the two
-    formulations (an array of n shingles vs n exploded rows), so the
-    arrays path's fewer rows, fewer stages, and fused set ops win.
-
-    ``strategy="counts"``: explode candidate docs to narrow
-    (id, shingle) rows and recover |A ∩ B| per pair via an equi-join on
-    (id_b, shingle) with map-side combine; |A ∪ B| = |A| + |B| - |A ∩ B|.
-    The fallback for MEGABYTE-scale documents, where the arrays path
-    would push giant unsplittable rows (one row carries both docs'
-    full shingle sets) through the exchange and hold O(|A|+|B|) hash
-    sets per row — the counts path never materializes a row larger
-    than one shingle. Cap shingle counts per doc (or use signature
-    estimates) before preferring it on time alone.
-
-    Outputs are identical (asserted by the bench tool and pytest).
+    codegen stage. Pairs with no shared shingle score 0.0. (An exploded
+    intersect-count formulation measured slower at every volume and was
+    removed: MINHASH_VERIFY.md.)
     """
-    if strategy not in ("arrays", "counts"):
-        raise ValueError(f"unknown verify strategy: {strategy!r}")
     if shingles is None:
         docs = _spread(docs, id_col)
         shingles = docs.select(F.col(id_col),
                                word_shingles(text_col, shingle_n).alias("sh"))
-    if strategy == "arrays":
-        uniq = shingles.select(F.col(id_col),
-                               F.array_distinct("sh").alias("__d"))
-        a = uniq.select(F.col(id_col).alias("id_a"),
-                        F.col("__d").alias("__da"))
-        b = uniq.select(F.col(id_col).alias("id_b"),
-                        F.col("__d").alias("__db"))
-        joined = pairs.join(a, "id_a").join(b, "id_b")
-        inter = F.size(F.array_intersect("__da", "__db"))
-        union = F.size(F.array_union("__da", "__db"))
-        jac = F.when(union > 0, inter.cast("double") / union) \
-            .otherwise(F.lit(0.0))
-        return (joined.withColumn("jaccard", F.round(jac, 6))
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard"))
-    # The candidate set is referenced three times below; without a
-    # persist each reference would RE-EXECUTE the whole upstream
-    # candidate pipeline (sign -> band -> join -> distinct). It is small
-    # by construction — LSH banding with a bucket-size cap.
-    pairs = transient_persist(pairs)
-    ids = pairs.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
-    # One row per (candidate doc, distinct shingle), with the doc's
-    # distinct-shingle COUNT carried inline — so a single aggregation at
-    # the end produces intersect size and Jaccard with no separate size
-    # joins. Restricted to candidate docs first (|candidates| << corpus
-    # at scale; semi-join dedups ids by itself).
-    uniq = (shingles.join(ids, id_col, "leftsemi")
-            .select(F.col(id_col), F.array_distinct("sh").alias("__d"))
-            .select(F.col(id_col), F.size("__d").alias("__n"),
-                    F.explode("__d").alias("__s"))
-            )
-    uniq = transient_persist(uniq)
-    a = uniq.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"),
-                    "__s")
-    b = uniq.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"),
-                    "__s")
-    common = (pairs.join(a, "id_a").join(b, ["id_b", "__s"])
-              .groupBy("id_a", "id_b")
-              .agg(F.count(F.lit(1)).alias("__i"),
-                   F.first("__na").alias("__na"),
-                   F.first("__nb").alias("__nb")))
-    union = F.col("__na") + F.col("__nb") - F.col("__i")
-    jac = F.col("__i").cast("double") / union  # __i >= 1 here, union > 0
-    out = common.withColumn("jaccard", F.round(jac, 6))
-    if threshold <= 0:
-        # zero-intersection pairs fell out of the inner join above; only
-        # a non-positive threshold can observe them — restore via the
-        # candidate set
-        zeros = (pairs.join(common.select("id_a", "id_b"),
-                            ["id_a", "id_b"], "left_anti")
-                 .withColumn("jaccard", F.lit(0.0)))
-        out = out.select("id_a", "id_b", "jaccard").unionByName(zeros)
-    return (out.filter(F.col("jaccard") >= threshold)
+    uniq = shingles.select(F.col(id_col),
+                           F.array_distinct("sh").alias("__d"))
+    a = uniq.select(F.col(id_col).alias("id_a"),
+                    F.col("__d").alias("__da"))
+    b = uniq.select(F.col(id_col).alias("id_b"),
+                    F.col("__d").alias("__db"))
+    joined = pairs.join(a, "id_a").join(b, "id_b")
+    inter = F.size(F.array_intersect("__da", "__db"))
+    union = F.size(F.array_union("__da", "__db"))
+    jac = F.when(union > 0, inter.cast("double") / union) \
+        .otherwise(F.lit(0.0))
+    return (joined.withColumn("jaccard", F.round(jac, 6))
+            .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard"))
 
 
 def minhash_dedup_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", num_hashes: int = 64,
                         shingle_n: int = 3, bands: int = 16,
-                        threshold: float = 0.5,
-                        verify_strategy: str = "arrays") -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: sign -> band -> candidates ->
     exact-Jaccard verify. The shingle set is computed once, persisted, and
-    shared by the signature and verification stages. ``verify_strategy``
-    picks the verify formulation (see `verify_jaccard`; "arrays" is the
-    measured default, "counts" the megabyte-document fallback)."""
-    sh = (_spread(docs, id_col)
-          .select(F.col(id_col),
-                  word_shingles(text_col, shingle_n).alias("sh"))
-          )
-    sh = transient_persist(sh)
+    shared by the signature and verification stages."""
+    sh = transient_persist(_spread(docs, id_col).select(
+        F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")))
     sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_n,
                               shingles=sh,
                               include_empty=not threshold > 0)
     cands = lsh_candidate_pairs(sigs, id_col, "minhash", bands,
                                 num_hashes // bands)
     return verify_jaccard(cands, docs, id_col, text_col, shingle_n, threshold,
-                          shingles=sh, strategy=verify_strategy)
+                          shingles=sh)
 
 
 # --------------------------------------------------------------- simhash
-
-
-def _bit_mask(b: int) -> int:
-    return (1 << b) if b < 63 else -(1 << 63)
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",
@@ -569,29 +572,21 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     """64-bit SimHash per doc: for each bit b, sum +/-1 over token hashes
     by bit value; bit set where the sum is positive.
 
-    Shape: explode(tokens) -> xxhash64 -> groupBy(id).agg(64 conditional
-    sums) -> recombine bits. Codegen'd sums with map-side combine; the
-    shuffle carries 64 ints per doc. Docs with no tokens get signature 0.
+    Shape: explode(tokens) -> xxhash64 -> `_simhash` (groupBy(id), 64
+    conditional sums, recombined bits). Docs with no tokens (null text)
+    get signature 0 through a left join from the ids.
     """
     df = _spread(df, id_col)
-    ids = df.select(id_col)
     sh = (word_shingles(text_col, shingle_n) if shingle_n > 1
           else F.split(F.trim(F.col(text_col)), r"\s+"))
-    hashed = (df.select(F.col(id_col), F.explode(sh).alias("__t"))
-              .select(F.col(id_col), F.xxhash64("__t").alias("__h")))
-    sums = [
-        F.sum(F.when(F.col("__h").bitwiseAND(F.lit(_bit_mask(b))) != 0, 1)
-              .otherwise(-1)).alias(f"__b{b}")
-        for b in range(64)
-    ]
-    grouped = hashed.groupBy(id_col).agg(*sums)
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        sig = sig + F.when(F.col(f"__b{b}") > 0,
-                           F.lit(_bit_mask(b)).cast("long")).otherwise(0)
-    sigs = grouped.select(F.col(id_col), sig.alias(out))
-    return (ids.join(sigs, id_col, "left")
-            .withColumn(out, F.coalesce(F.col(out), F.lit(0).cast("long"))))
+    toks = (df.select(F.col(id_col), F.explode(sh).alias("__t"))
+            .select(F.col(id_col), F.xxhash64("__t").alias("__h")))
+    sigs = _simhash(
+        toks, id_col,
+        lambda b: F.col("__h").bitwiseAND(F.lit(_bit_mask(b))) != 0, 64)
+    return (df.select(id_col).join(sigs, id_col, "left")
+            .select(F.col(id_col),
+                    F.coalesce("sig", F.lit(0).cast("long")).alias(out)))
 
 
 def simhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -602,35 +597,7 @@ def simhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     chunks (pigeonhole: hamming<=3 => >=1 identical chunk), candidate-join
     on (chunk_idx, chunk_value), verify with bit_count(xor) <= k."""
     sigs = simhash_signatures(docs, text_col, id_col, out="sig")
-    chunk_cols = [
-        F.struct(F.lit(i).alias("ci"),
-                 F.shiftright("sig", i * 16).bitwiseAND(F.lit(0xFFFF))
-                 .alias("cv"))
-        for i in range(4)
-    ]
-    exploded = (sigs.select(id_col, "sig",
-                            F.explode(F.array(*chunk_cols)).alias("c"))
-                .select(id_col, "sig", F.col("c.ci").alias("ci"),
-                        F.col("c.cv").alias("cv")))
-    exploded = transient_persist(exploded)  # self-joined below; sigs once
-    if max_bucket_size:
-        counts = (exploded.groupBy("ci", "cv")
-                  .agg(F.count(F.lit(1)).alias("__n"))
-                  .filter(F.col("__n") <= max_bucket_size).drop("__n"))
-        exploded = exploded.join(counts, ["ci", "cv"], "leftsemi")
-    a, b = exploded.alias("a"), exploded.alias("b")
-    pairs = (a.join(b, (F.col("a.ci") == F.col("b.ci"))
-                    & (F.col("a.cv") == F.col("b.cv"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"),
-                     F.col("a.sig").alias("sig_a"),
-                     F.col("b.sig").alias("sig_b"))
-             .distinct())
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (pairs.withColumn("hamming", ham)
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+    return _simhash_pairs(sigs, id_col, 4, 16, max_hamming, max_bucket_size)
 
 
 # ----------------------------------------------------- exact n-gram jaccard
@@ -684,6 +651,15 @@ JACCARD_MAX_CANDIDATE_PAIRS = 1_000_000_000
 _JP_GUARD_MEMO: dict[tuple, float] = {}
 _JP_GUARD_MEMO_MAX = 64
 _JP_GUARD_LOCK = threading.Lock()
+
+
+def _fifo_put(memo: dict, lock, cap: int, key, value) -> None:
+    """Insert into a bounded FIFO memo, evicting the oldest entry at
+    ``cap``."""
+    with lock:
+        if len(memo) >= cap:
+            memo.pop(next(iter(memo)))
+        memo[key] = value
 
 
 def clear_guard_memo() -> int:
@@ -848,10 +824,8 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                            .cast("double"))
                       .collect()[0][0] or 0.0) * q_inv * q_inv
             if memo_key is not None:
-                with _JP_GUARD_LOCK:
-                    if len(_JP_GUARD_MEMO) >= _JP_GUARD_MEMO_MAX:
-                        _JP_GUARD_MEMO.pop(next(iter(_JP_GUARD_MEMO)))
-                    _JP_GUARD_MEMO[memo_key] = n_cand
+                _fifo_put(_JP_GUARD_MEMO, _JP_GUARD_LOCK, _JP_GUARD_MEMO_MAX,
+                          memo_key, n_cand)
         if n_cand > max_candidate_pairs:
             raise ValueError(
                 f"jaccard_pairs inverted-index join would emit "
@@ -949,10 +923,8 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
         worst = float(n_tr) * float(n_te) * min(max_tr, max_te)
         if worst <= bound:
             if memo_key is not None:
-                with _JP_GUARD_LOCK:
-                    if len(_JP_GUARD_MEMO) >= _JP_GUARD_MEMO_MAX:
-                        _JP_GUARD_MEMO.pop(next(iter(_JP_GUARD_MEMO)))
-                    _JP_GUARD_MEMO[memo_key] = worst
+                _fifo_put(_JP_GUARD_MEMO, _JP_GUARD_LOCK, _JP_GUARD_MEMO_MAX,
+                          memo_key, worst)
             return worst
 
     def sampled(df, id_c, n, salt):
@@ -974,10 +946,8 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
                          * F.col("df_te")).cast("double"))
               .collect()[0][0] or 0.0) * qt * qe
     if memo_key is not None:
-        with _JP_GUARD_LOCK:
-            if len(_JP_GUARD_MEMO) >= _JP_GUARD_MEMO_MAX:
-                _JP_GUARD_MEMO.pop(next(iter(_JP_GUARD_MEMO)))
-            _JP_GUARD_MEMO[memo_key] = n_cand
+        _fifo_put(_JP_GUARD_MEMO, _JP_GUARD_LOCK, _JP_GUARD_MEMO_MAX,
+                  memo_key, n_cand)
     return n_cand
 
 
@@ -1629,19 +1599,17 @@ def minhash_signatures_portable(docs: DataFrame, id_col: str = "doc_id",
     exposed column-wise so incremental-dedup joins and their DuckDB
     oracles stay plain scalar SQL). Docs with no shingles produce no
     row. ``spread=False`` skips the default-parallelism repartition —
-    for micro-batch callers (streaming triggers) where fanning ~10^3
-    rows across 32 tasks costs more scheduling than the shingle work
-    it parallelizes; values are partitioning-invariant either way."""
+    for micro-batch callers, where fanning ~10^3 rows across 32 tasks
+    costs more scheduling than the shingle work it parallelizes, and
+    for callers that spread with their own ``amp``; values are
+    partitioning-invariant either way."""
     if spread:
         docs = _spread(docs, id_col)
-    exploded = (docs
-                .select(F.col(id_col),
-                        F.explode(word_shingles(text_col, shingle_n))
-                        .alias("__s")))
     mins = [F.min(F.md5(F.concat(F.lit(f"{k:02d}:"), F.col("__s"))))
-            .alias(f"h{k}")
-            for k in range(num_hashes)]
-    return exploded.groupBy(id_col).agg(*mins)
+            .alias(f"h{k}") for k in range(num_hashes)]
+    return (docs.select(F.col(id_col), F.explode(
+        word_shingles(text_col, shingle_n)).alias("__s"))
+        .groupBy(id_col).agg(*mins))
 
 
 def neardup_filter_incremental(batch_sigs: DataFrame,
@@ -1668,41 +1636,24 @@ def neardup_filter_incremental(batch_sigs: DataFrame,
     is_neardup). Estimator resolution is 1/K — size K to the decision
     granularity you need (K=16 resolves 0.0625 steps).
     """
-    rows = num_hashes // bands
-    assert rows * bands == num_hashes
-
-    def banded(sigs: DataFrame, out_id: str) -> DataFrame:
-        band_cols = [
-            F.struct(F.lit(b).alias("band"),
-                     F.concat_ws("|", *[F.col(f"h{b * rows + r}")
-                                        for r in range(rows)])
-                     .alias("bucket"))
-            for b in range(bands)
-        ]
-        return (sigs.select(F.col(id_col).alias(out_id),
-                            F.explode(F.array(*band_cols)).alias("bb"))
-                .select(out_id, F.col("bb.band").alias("band"),
-                        F.col("bb.bucket").alias("bucket")))
-
+    keys = _md5_bands(bands, _per_band(num_hashes, bands, "num_hashes"))
     batch_sigs = transient_persist(batch_sigs)
-    cands = (banded(batch_sigs, "__bid")
-             .join(banded(store_sigs, "__sid"), ["band", "bucket"])
-             .select("__bid", "__sid").distinct())
-    a = batch_sigs.select(F.col(id_col).alias("__bid"),
+    cands = _bucket_pairs(_band(batch_sigs, id_col, keys), id_col,
+                          _band(store_sigs, id_col, keys))
+    a = batch_sigs.select(F.col(id_col).alias("id_a"),
                           *[F.col(f"h{k}").alias(f"__a{k}")
                             for k in range(num_hashes)])
-    b = store_sigs.select(F.col(id_col).alias("__sid"),
+    b = store_sigs.select(F.col(id_col).alias("id_b"),
                           *[F.col(f"h{k}").alias(f"__b{k}")
                             for k in range(num_hashes)])
     eq = sum((F.when(F.col(f"__a{k}") == F.col(f"__b{k}"), 1)
               .otherwise(0) for k in range(num_hashes)), F.lit(0))
     est = F.round(eq.cast("double") / num_hashes, 6)
-    per_batch = (cands.join(a, "__bid").join(b, "__sid")
-                 .select("__bid", est.alias("__est"))
-                 .groupBy("__bid").agg(F.max("__est").alias("max_est")))
+    per_batch = (cands.join(a, "id_a").join(b, "id_b")
+                 .select(F.col("id_a").alias(id_col), est.alias("__est"))
+                 .groupBy(id_col).agg(F.max("__est").alias("max_est")))
     return (batch_sigs.select(F.col(id_col))
-            .join(per_batch.withColumnRenamed("__bid", id_col),
-                  id_col, "left")
+            .join(per_batch, id_col, "left")
             .select(F.col(id_col),
                     F.coalesce("max_est", F.lit(0.0)).alias("max_est"))
             .withColumn("is_neardup",
@@ -1725,12 +1676,14 @@ def simhash_pairs_portable(docs: DataFrame, id_col: str = "doc_id",
     chunks-1 guarantees one identical chunk), candidates equi-join on
     (chunk index, chunk value), and the verify is
     bit_count(xor) <= max_hamming. Returns (id_a, id_b, hamming).
+    Docs with null text produce no signature and no pairs.
 
     Same shuffle shape as production: one groupBy(doc) exchange for the
     bit sums, one (chunk, value) exchange, distinct pairs.
     """
-    assert bits % chunks == 0 and bits % 4 == 0
-    chunk_bits = bits // chunks
+    chunk_bits = _per_band(bits, chunks, "bits")
+    if bits % 4:
+        raise ValueError(f"bits={bits} is not a multiple of 4")
     hexd = "0123456789abcdef"
     # amp=16: md5 is ~10x the per-byte cost of xxhash64 and every token
     # pays one — the portable twins are hash-CPU-bound where the
@@ -1746,38 +1699,10 @@ def simhash_pairs_portable(docs: DataFrame, id_col: str = "doc_id",
     nib = [(F.instr(F.lit(hexd),
                     F.substring("__h", i + 1, 1)) - 1).cast("long")
            for i in range(bits // 4)]
-    bit_sums = [
-        F.sum(F.when(
-            F.shiftright(nib[p // 4], 3 - (p % 4)) % 2 == 1,
-            F.lit(1)).otherwise(F.lit(-1))).alias(f"__b{p}")
-        for p in range(bits)
-    ]
-    grouped = toks.groupBy(id_col).agg(*bit_sums)
-    sig = sum((F.when(F.col(f"__b{p}") > 0,
-                      F.lit(1 << p).cast("long")).otherwise(F.lit(0))
-               for p in range(bits)), F.lit(0).cast("long"))
-    sigs = grouped.select(F.col(id_col), sig.alias("sig"))
-    chunk_cols = [
-        F.struct(F.lit(c).alias("ci"),
-                 (F.shiftright("sig", c * chunk_bits)
-                  % (1 << chunk_bits)).alias("cv"))
-        for c in range(chunks)
-    ]
-    exploded = (sigs.select(id_col, "sig",
-                            F.explode(F.array(*chunk_cols)).alias("c"))
-                .select(id_col, "sig", F.col("c.ci").alias("ci"),
-                        F.col("c.cv").alias("cv")))
-    exploded = transient_persist(exploded)
-    a, b = exploded.alias("a"), exploded.alias("b")
-    ham = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-    return (a.join(b, (F.col("a.ci") == F.col("b.ci"))
-                   & (F.col("a.cv") == F.col("b.cv"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                    ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct())
+    sigs = _simhash(
+        toks, id_col,
+        lambda p: F.shiftright(nib[p // 4], 3 - (p % 4)) % 2 == 1, bits)
+    return _simhash_pairs(sigs, id_col, chunks, chunk_bits, max_hamming)
 
 
 def minhash_pairs_portable(docs: DataFrame, id_col: str = "doc_id",
@@ -1797,39 +1722,16 @@ def minhash_pairs_portable(docs: DataFrame, id_col: str = "doc_id",
     (band, bucket) -> distinct pairs. Docs with no shingles produce no
     signature rows and therefore no candidates.
     """
-    rows = num_hashes // bands
-    assert rows * bands == num_hashes
+    keys = _md5_bands(bands, _per_band(num_hashes, bands, "num_hashes"))
     # amp=16: K md5 computations per shingle — hash-CPU-bound, unlike
     # the xxhash64 production path (see simhash_pairs_portable note;
     # A/B: doc_pagerank_lsh 1.19x, minhash_pairs_md5 1.15x,
     # dedup_clusters_lsh 1.27x)
-    exploded = (_spread(docs, id_col, amp=16)
-                .select(F.col(id_col),
-                        F.explode(word_shingles(text_col, shingle_n))
-                        .alias("__s")))
-    mins = [F.min(F.md5(F.concat(F.lit(f"{k:02d}:"), F.col("__s"))))
-            .alias(f"__h{k}")
-            for k in range(num_hashes)]
-    sigs = exploded.groupBy(id_col).agg(*mins)
-    band_cols = [
-        F.struct(F.lit(b).alias("band"),
-                 F.concat_ws("|", *[F.col(f"__h{b * rows + r}")
-                                    for r in range(rows)]).alias("bucket"))
-        for b in range(bands)
-    ]
-    banded = (sigs.select(id_col,
-                          F.explode(F.array(*band_cols)).alias("bb"))
-              .select(id_col, F.col("bb.band").alias("band"),
-                      F.col("bb.bucket").alias("bucket"))
-              )
-    banded = transient_persist(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
-            .distinct())
+    sigs = minhash_signatures_portable(_spread(docs, id_col, amp=16),
+                                       id_col, text_col, num_hashes,
+                                       shingle_n, spread=False)
+    banded = transient_persist(_band(sigs, id_col, keys))
+    return _bucket_pairs(banded, id_col)
 
 
 # ------------------------------------------------- duplicate-span removal
@@ -2585,10 +2487,8 @@ def exact_dedup_incremental_bloom(new_docs: DataFrame, corpus: DataFrame,
     else:
         bloom, nb, kh = build_bloom(known, "fp", n_bits, k_hashes)
         if plan_key is not None:
-            with _BLOOM_MEMO_LOCK:
-                if len(_BLOOM_MEMO) >= _BLOOM_MEMO_MAX:
-                    _BLOOM_MEMO.pop(next(iter(_BLOOM_MEMO)))
-                _BLOOM_MEMO[memo_key] = (bloom, nb, kh)
+            _fifo_put(_BLOOM_MEMO, _BLOOM_MEMO_LOCK, _BLOOM_MEMO_MAX,
+                      memo_key, (bloom, nb, kh))
     return _bloom_probe_keep(new_docs, known, bloom, nb, kh,
                              text_col, id_col)
 

@@ -50,20 +50,23 @@ def test_minhash_dedup_pairs(spark, dup_docs):
     assert not any(5 in p for p in got)
 
 
-def test_verify_jaccard_strategies_agree(spark, dup_docs):
-    """The two verify formulations (arrays: fused set-ops per pair;
-    counts: exploded-shingle intersect counts) must produce identical
-    (pair, jaccard) sets — including threshold<=0, where zero-overlap
-    candidates must surface with jaccard 0.0 on both paths."""
-    sigs = D.minhash_signatures(dup_docs, num_hashes=32)
-    cands = D.lsh_candidate_pairs(sigs, bands=16, rows_per_band=2)
+def test_verify_jaccard_matches_python_jaccard(spark, dup_docs):
+    """verify_jaccard scores every candidate pair with the exact Jaccard
+    of its word_shingles sets; at threshold 0.0 zero-overlap candidates
+    come back with jaccard 0.0."""
+    from dotnetvectorsearch_spark.functions.text import word_shingles
+    sets = {r.doc_id: set(r.sh) for r in dup_docs.select(
+        "doc_id", word_shingles("text", 3).alias("sh")).collect()}
+    cands = spark.createDataFrame(
+        [(a, b) for a in sets for b in sets if a < b], "id_a long, id_b long")
+    want = {(a, b): round(len(sets[a] & sets[b]) / len(sets[a] | sets[b]), 6)
+            for a, b in cands.collect()}
+    assert want[(1, 5)] == 0.0                  # non-vacuous zero overlap
     for thr in (0.3, 0.0):
-        got_a = {tuple(r) for r in D.verify_jaccard(
-            cands, dup_docs, threshold=thr, strategy="arrays").collect()}
-        got_c = {tuple(r) for r in D.verify_jaccard(
-            cands, dup_docs, threshold=thr, strategy="counts").collect()}
-        assert got_a == got_c
-        assert got_a  # non-vacuous
+        got = {(r.id_a, r.id_b): r.jaccard
+               for r in D.verify_jaccard(cands, dup_docs,
+                                         threshold=thr).collect()}
+        assert got == {p: j for p, j in want.items() if j >= thr}
 
 
 def test_minhash_signature_shape_and_determinism(spark, dup_docs):
@@ -404,6 +407,59 @@ def test_neardup_filter_incremental_empty_store(spark, dup_docs):
     got = D.neardup_filter_incremental(batch, store).collect()
     assert all(r.max_est == 0.0 and not r.is_neardup for r in got)
     assert len(got) == dup_docs.count()
+
+
+@pytest.mark.parametrize("call", [
+    lambda d: D.neardup_filter_incremental(
+        D.minhash_signatures_portable(d), D.minhash_signatures_portable(d),
+        num_hashes=16, bands=5),
+    lambda d: D.minhash_pairs_portable(d, num_hashes=16, bands=5),
+    lambda d: D.simhash_pairs_portable(d, bits=32, chunks=5),
+    lambda d: D.simhash_pairs_portable(d, bits=30, chunks=3),
+], ids=["neardup", "minhash_portable", "simhash_chunks", "simhash_hex"])
+def test_band_shapes_that_do_not_split_raise(spark, dup_docs, call):
+    """16 hashes in 5 bands would band only h0..h14; the check must be
+    a ValueError, which ``python -O`` keeps (it strips asserts)."""
+    with pytest.raises(ValueError):
+        call(dup_docs)
+
+
+def test_production_lsh_pairs_match_python_banding(spark, sf_dir):
+    """The rows-only minhash_pairs / simhash_pairs outputs at sf0.01
+    equal a pure-Python banding of the same signatures: SimHash pairs
+    with popcount(xor) <= 3, and MinHash pairs sharing an exact 4-value
+    slice in any of 16 bands (buckets of 2..200 docs) whose exact
+    shingle Jaccard is >= 0.5."""
+    from itertools import combinations
+    from pathlib import Path
+
+    from dotnetvectorsearch_spark.functions.text import word_shingles
+    docs = load_table(spark, str(Path(sf_dir).parent / "sf0.01"),
+                      "documents")
+    sig = {r.doc_id: r.sig for r in D.simhash_signatures(docs).collect()}
+    want = {p for p in combinations(sorted(sig), 2)
+            if bin((sig[p[0]] ^ sig[p[1]]) % (1 << 64)).count("1") <= 3}
+    got = {(r.id_a, r.id_b) for r in D.simhash_candidate_pairs(
+        docs, "doc_id", "text", max_hamming=3).collect()}
+    assert len(want) == 17 and got == want
+
+    mh = {r.doc_id: r.minhash for r in
+          D.minhash_signatures(docs, num_hashes=64).collect()}
+    buckets: dict[tuple, list] = {}
+    for d in sorted(mh):
+        for b in range(16):
+            buckets.setdefault((b, tuple(mh[d][4 * b:4 * b + 4])),
+                               []).append(d)
+    cands = {p for ids in buckets.values() if 2 <= len(ids) <= 200
+             for p in combinations(ids, 2)}
+    sh = {r.doc_id: set(r.sh or ()) for r in docs.select(
+        "doc_id", word_shingles("text", 3).alias("sh")).collect()}
+    want = {(a, b) for a, b in cands
+            if len(sh[a] & sh[b]) >= 0.5 * len(sh[a] | sh[b])}
+    got = {(r.id_a, r.id_b) for r in D.minhash_dedup_pairs(
+        docs, "doc_id", "text", num_hashes=64, bands=16,
+        threshold=0.5).collect()}
+    assert len(want) == 25 and got == want
 
 
 def test_ngram_novelty_unique_vs_duplicated(spark):
