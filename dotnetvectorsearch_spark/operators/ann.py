@@ -36,7 +36,8 @@ from pyspark.sql.functions import pandas_udf
 
 from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.localdf import local_df
-from dotnetvectorsearch_spark.operators.search import top_k_similar
+from dotnetvectorsearch_spark.operators.search import (
+    _panel, _rank_window, _scan_topk, top_k_similar)
 
 
 # Default training-sample size of the k-means / codebook fits.
@@ -109,6 +110,24 @@ def brute_force_topk(emb: DataFrame, query_vec: list[float], k: int = 5,
                          id_col=id_col, doc_vec=vec_col, round_digits=6)
 
 
+def _unit(query_vec) -> np.ndarray:
+    """The query as a float32 unit vector (a zero vector stays zero):
+    what cell ranking and the ADC tables score against."""
+    q = np.asarray(query_vec, dtype=np.float32)
+    return q / max(np.linalg.norm(q), 1e-12)
+
+
+def _fit_sample(emb: DataFrame, vec_col: str, max_sample: int,
+                seed: int) -> np.ndarray:
+    """The seeded training sample of a fit: ~``max_sample`` rows of
+    ``vec_col`` (every row when the corpus is smaller), stacked on the
+    driver in scan order."""
+    fraction = min(1.0, max_sample / max(emb.count(), 1))
+    sample = (emb.sample(fraction=fraction, seed=seed)
+              .select(vec_col).toPandas()[vec_col])
+    return np.stack(sample.to_numpy())
+
+
 def _kmeans_seed_pp(x: np.ndarray, k: int,
                     rng: "np.random.RandomState") -> np.ndarray:
     """k-means++ seeding with a RUNNING min-distance vector.
@@ -174,11 +193,8 @@ class IVFIndex:
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
             max_sample: int = MAX_SAMPLE) -> IVFIndex:
-        n = emb.count()
-        fraction = min(1.0, max_sample / max(n, 1))
-        sample = (emb.sample(fraction=fraction, seed=self.seed)
-                  .select(vec_col).toPandas()[vec_col])
-        return self.fit_matrix(np.stack(sample.to_numpy()))
+        return self.fit_matrix(
+            _fit_sample(emb, vec_col, max_sample, self.seed))
 
     def fit_matrix(self, sample: np.ndarray) -> IVFIndex:
         """Train on a driver-resident float32 sample matrix. ``fit`` over
@@ -346,11 +362,14 @@ class IVFIndex:
         idx.centroids = cent
         return idx, spark.read.parquet(path)
 
+    def cell_order(self, query_vec: list[float]) -> np.ndarray:
+        """Every cell, nearest centroid (by cosine) to the query first:
+        the ranking :meth:`probe_cells` cuts and the recall curves
+        invert."""
+        return np.argsort(-(self.centroids @ _unit(query_vec)))
+
     def probe_cells(self, query_vec: list[float]) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float32)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        scores = self.centroids @ q
-        return [int(i) for i in np.argsort(-scores)[: self.nprobe]]
+        return [int(i) for i in self.cell_order(query_vec)[: self.nprobe]]
 
     def search(self, indexed: DataFrame, query_vec: list[float], k: int = 5,
                id_col: str = "vec_id", vec_col: str = "embedding",
@@ -380,57 +399,24 @@ def ivf_topk_panel(indexed: DataFrame, ivf: "IVFIndex",
     deterministic tie-break). Scan cost: |union of panel probe cells|,
     partition-pruned on a partitionBy(cell) index. Returns
     (qid, id_col, similarity, rank 1..k)."""
-    from pyspark.sql.window import Window
-
     if not query_vecs:
         return local_df(
             indexed.sparkSession, [],
             f"qid long, {id_col} long, similarity double, rank int")
-    qids = np.asarray([q for q, _ in query_vecs], dtype=np.int64)
-    qmat = np.stack([np.asarray(v, dtype=np.float64)
-                     for _, v in query_vecs])
-    qnorms = np.linalg.norm(qmat, axis=1)
+    qids, qmat = _panel(query_vecs)
     # (n_cells x Q) probe-membership lookup, tiny
     allow = np.zeros((ivf.n_cells, len(qids)), dtype=bool)
     for j, (_, v) in enumerate(query_vecs):
         for c in ivf.probe_cells(v):
             allow[c, j] = True
     union_cells = [int(c) for c in np.nonzero(allow.any(axis=1))[0]]
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            dnorms = np.linalg.norm(m, axis=1)
-            denom = dnorms[:, None] * qnorms[None, :]
-            sims = np.where(denom > 0.0,
-                            (m @ qmat.T) / np.where(denom > 0.0,
-                                                    denom, 1.0),
-                            0.0)
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            cells = pdf[cell_col].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            in_probe = allow[cells]             # B x Q
-            out_q, out_id, out_s = [], [], []
-            for j in range(len(qids)):
-                keep = in_probe[:, j]
-                if exclude_self:
-                    keep = keep & (ids != qids[j])
-                b_ids, b_sims = ids[keep], sims[keep, j]
-                order = np.lexsort((b_ids, -b_sims))[:k]
-                out_q.extend([qids[j]] * len(order))
-                out_id.extend(b_ids[order])
-                out_s.extend(b_sims[order])
-            yield pd.DataFrame({"qid": out_q, id_col: out_id,
-                                "similarity": out_s})
-
     cand = indexed.filter(F.col(cell_col).isin(union_cells))
-    local = cand.select(id_col, vec_col, cell_col).mapInPandas(
-        score, f"qid long, {id_col} long, similarity double")
-    w = Window.partitionBy("qid").orderBy(F.desc("similarity"),
-                                          F.asc(id_col))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    local = _scan_topk(cand, qmat, k, id_col, vec_col, round_digits,
+                       qids=qids, exclude_self=exclude_self,
+                       keep=lambda pdf: allow[pdf[cell_col].to_numpy()],
+                       cols=(cell_col,))
+    return _rank_window(local, "qid", [("similarity", True), (id_col, False)],
+                        k, prefilter=False)
 
 
 def centroids_by(emb: DataFrame, by: str, vec_col: str = "embedding",
@@ -552,11 +538,8 @@ class PQIndex:
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
             max_sample: int = MAX_SAMPLE) -> PQIndex:
-        n = emb.count()
-        fraction = min(1.0, max_sample / max(n, 1))
-        sample = (emb.sample(fraction=fraction, seed=self.seed)
-                  .select(vec_col).toPandas()[vec_col])
-        sub = self._split(np.stack(sample.to_numpy()).astype(np.float32))
+        sub = self._split(_fit_sample(emb, vec_col, max_sample,
+                                      self.seed).astype(np.float32))
         self.codebooks = np.stack([
             _kmeans_fit_plain(sub[:, j, :], self.n_codes, self.seed + j)
             for j in range(self.m)])
@@ -618,10 +601,8 @@ class PQIndex:
 
     def lookup_table(self, query_vec: list[float]) -> np.ndarray:
         """Per-query ADC table: table[j, c] = dot(q_subspace_j, code_jc)."""
-        q = np.asarray(query_vec, dtype=np.float32)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        qs = q.reshape(self.m, -1)
-        return np.einsum("jd,jcd->jc", qs, self.codebooks).astype(np.float32)
+        return np.einsum("jd,jcd->jc", _unit(query_vec).reshape(self.m, -1),
+                         self.codebooks).astype(np.float32)
 
     def search(self, encoded: DataFrame, query_vec: list[float], k: int = 5,
                id_col: str = "vec_id", codes_col: str = "pq_codes",
@@ -724,11 +705,8 @@ class IVFPQIndex:
         # pooled residuals (one shared codebook across cells — the
         # standard IVFADC layout; per-cell books would need
         # n_cells x m x n_codes centroids for marginal gain).
-        n = emb.count()
-        fraction = min(1.0, max_sample / max(n, 1))
-        sample = (emb.sample(fraction=fraction, seed=self.pq.seed)
-                  .select(vec_col).toPandas()[vec_col])
-        x = np.stack(sample.to_numpy()).astype(np.float32)
+        x = _fit_sample(emb, vec_col, max_sample,
+                        self.pq.seed).astype(np.float32)
         x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
         cent = self.ivf.centroids
         assign = np.argmax(x @ cent.T, axis=1)
@@ -871,11 +849,8 @@ class IVFPQIndex:
             return self.pq.search(cand, query_vec, k, id_col, codes_col,
                                   rescore=rescore, vec_col=vec_col,
                                   shortlist=shortlist)
-        q = np.asarray(query_vec, dtype=np.float32)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        lut = np.einsum("jd,jcd->jc", q.reshape(self.pq.m, -1),
-                        self.pq.codebooks).astype(np.float32)
-        offs = (self.cell_means @ q).astype(np.float32)
+        lut = self.pq.lookup_table(query_vec)
+        offs = (self.cell_means @ _unit(query_vec)).astype(np.float32)
         m = self.pq.m
 
         @pandas_udf("double")

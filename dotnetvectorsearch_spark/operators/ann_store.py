@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import localdf
 from ..sources.io import load_table
-from .ann import IVFIndex, IVFPQIndex, PQIndex
+from .ann import IVFIndex, IVFPQIndex, PQIndex, _unit
 from .dedup import _input_fingerprint
 from .search import round6_half_up
 
@@ -66,16 +66,19 @@ _CURRENT = "CURRENT"
 def _write_marker(path: str, meta: dict) -> None:
     """Write the store marker atomically (write-temp + os.replace):
     a concurrent serve reading the marker mid-write must never see a
-    truncated JSON (it would silently fall back to the untuned
-    fitted width), and a crash mid-write must not corrupt the marker
-    into a spurious full rebuild (advisor r13)."""
+    truncated JSON (an IVF serve would silently fall back to the
+    untuned fitted width, a bloom serve would fail), and a crash
+    mid-write must not corrupt the marker into a spurious full
+    rebuild (advisor r13)."""
     tmp = Path(path) / f".{_MARKER}.tmp"
     tmp.write_text(json.dumps(meta))
     os.replace(tmp, Path(path) / _MARKER)
 
 
 def default_root() -> str:
-    """Index store root: $SPARK_GRAFT_INDEX_ROOT or <repo>/.ann_index."""
+    """Store root: $SPARK_GRAFT_INDEX_ROOT or <repo>/.ann_index —
+    shared by the ANN indexes and the dedup store (all serve-path state
+    keyed by sf_dir)."""
     env = os.environ.get("SPARK_GRAFT_INDEX_ROOT")
     if env:
         return env
@@ -87,18 +90,25 @@ def index_path(sf_dir: str, kind: str, root: str | None = None) -> str:
     return str(Path(root or default_root()) / tag / kind)
 
 
-def _fingerprint(emb: DataFrame, kind: str) -> str:
-    """Identity of (input files, index params): any change rebuilds."""
-    sig = _input_fingerprint(emb)
-    payload = json.dumps(
-        {"files": repr(sig), "params": INDEX_PARAMS[kind]}, sort_keys=True)
+def _store_fingerprint(files, **spec) -> str | None:
+    """Marker fingerprint of a store: sha256 over its input files'
+    ``dedup._input_fingerprint`` and the build ``spec``; any change
+    rebuilds. None when the files could not be fingerprinted — hashing
+    ``repr(None)`` would be a constant that matches the marker forever
+    and serves a stale store after a corpus rewrite, so None is never
+    fresh (fail closed: every ensure rebuilds)."""
+    if files is None:
+        return None
+    payload = json.dumps({"files": repr(files), **spec}, sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()
 
 
-def _is_fresh(path: str, fp: str) -> bool:
-    marker = Path(path) / _MARKER
+def _is_fresh(path: str, fp: str | None) -> bool:
+    if fp is None:  # unverifiable input -> fail closed, rebuild
+        return False
     try:
-        return json.loads(marker.read_text())["fingerprint"] == fp
+        return json.loads(
+            (Path(path) / _MARKER).read_text())["fingerprint"] == fp
     except (OSError, ValueError, KeyError):
         return False
 
@@ -134,7 +144,8 @@ def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
         raise ValueError(f"unknown index kind {kind!r}; "
                          f"expected one of {sorted(INDEX_PARAMS)}")
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _fingerprint(emb, kind)
+    fp = _store_fingerprint(_input_fingerprint(emb),
+                           params=INDEX_PARAMS[kind])
     path = index_path(sf_dir, kind, root)
     if not force and _is_fresh(path, fp):
         return path, False
@@ -200,17 +211,8 @@ def nprobe_recall_curve(idx, rows: DataFrame,
         if key not in seen:
             seen.add(key)
             hits.append(r)
-    # per-query cell ranking — replicates IVFIndex.probe_cells exactly
-    # (same float32 dot products, same argsort) so curve positions
-    # match what serve would probe
-    rank_of: dict[int, "np.ndarray"] = {}
-    for qid, v in panel:
-        q = np.asarray(v, dtype=np.float32)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        order = np.argsort(-(idx.centroids @ q))
-        r = np.empty(idx.n_cells, dtype=np.int64)
-        r[order] = np.arange(idx.n_cells)
-        rank_of[qid] = r
+    # per-query cell rank: the inverse of the order serve probes in
+    rank_of = {qid: np.argsort(idx.cell_order(v)) for qid, v in panel}
     counts = np.zeros(idx.n_cells + 1, dtype=np.int64)
     for row in hits:
         counts[rank_of[row.qid][row[cell_col]] + 1] += 1
@@ -875,20 +877,15 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
     qn, kk = len(panel), k
     qindex = {qid: i for i, (qid, _) in enumerate(panel)}
 
-    # per-query ADC params, replicating IVFPQIndex.search exactly
-    luts = np.zeros((qn, m, idx.pq.codebooks.shape[1]),
-                    dtype=np.float32)
+    # per-query ADC params and cell ranks, as IVFPQIndex.search
+    # computes them
+    luts = np.stack([idx.pq.lookup_table(v) for _, v in panel])
     offs = np.zeros((qn, n_cells), dtype=np.float32)
-    rank_of = np.zeros((qn, n_cells), dtype=np.int64)
-    for i, (_, v) in enumerate(panel):
-        q = np.asarray(v, dtype=np.float32)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        luts[i] = np.einsum("jd,jcd->jc", q.reshape(m, -1),
-                            idx.pq.codebooks).astype(np.float32)
-        if idx.coding == "residual":
-            offs[i] = (idx.cell_means @ q).astype(np.float32)
-        order = np.argsort(-(idx.ivf.centroids @ q))
-        rank_of[i][order] = np.arange(n_cells)
+    if idx.coding == "residual":
+        offs[:] = [(idx.cell_means @ _unit(v)).astype(np.float32)
+                   for _, v in panel]
+    rank_of = np.stack([np.argsort(idx.ivf.cell_order(v))
+                        for _, v in panel])
 
     # exact winners + their (cell, codes) -> ADC thresholds
     exact = topk_per_query_arrow(

@@ -38,13 +38,19 @@ serve == build-in-query equality is pinned in tests/test_dedup.py.
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import load_table
+from .ann_store import (
+    _MARKER,
+    _is_fresh,
+    _store_fingerprint,
+    _write_marker,
+    default_root,
+)
 from .dedup import (
     _bloom_probe_keep,
     _input_fingerprint,
@@ -59,19 +65,8 @@ from .dedup import (
 STORE_PARAMS = {"n_bits": 1 << 23, "k_hashes": 7}
 CORPUS_PRED = "doc_id % 5 != 0"
 
-_MARKER = "_fingerprint.json"
 _BLOOM_FILE = "bloom.bin"
 _FPS_DIR = "fps.parquet"
-
-
-def default_root() -> str:
-    """Store root: $SPARK_GRAFT_INDEX_ROOT or <repo>/.ann_index —
-    shared with the ANN index store (both are serve-path state keyed
-    by sf_dir)."""
-    env = os.environ.get("SPARK_GRAFT_INDEX_ROOT")
-    if env:
-        return env
-    return str(Path(__file__).resolve().parents[2] / ".ann_index")
 
 
 def store_path(sf_dir: str, root: str | None = None) -> str:
@@ -79,32 +74,11 @@ def store_path(sf_dir: str, root: str | None = None) -> str:
     return str(Path(root or default_root()) / tag / "bloom_fps")
 
 
-def _store_fingerprint(corpus: DataFrame, spec: str) -> str | None:
-    """Marker fingerprint for the store, or None when the input files
-    cannot be fingerprinted (``_input_fingerprint``'s documented py4j
-    fallback). None means NEVER-FRESH: hashing ``repr(None)`` would be
-    a constant that matches the marker forever, so a rewritten corpus
-    would silently serve stale fingerprints/bloom (advisor r9). The
-    in-session memo already treats an unknown plan key as a rebuild;
-    this gives the persisted store the same fail-closed behavior."""
-    import hashlib
-    files = _input_fingerprint(corpus)
-    if files is None:
-        return None
-    payload = json.dumps(
-        {"files": repr(files), "spec": spec,
-         "params": STORE_PARAMS}, sort_keys=True)
-    return hashlib.sha256(payload.encode()).hexdigest()
-
-
-def _is_fresh(path: str, fp: str | None) -> bool:
-    if fp is None:  # unverifiable input -> fail closed, rebuild
-        return False
-    try:
-        return json.loads(
-            (Path(path) / _MARKER).read_text())["fingerprint"] == fp
-    except (OSError, ValueError, KeyError):
-        return False
+def _fingerprint(corpus: DataFrame, spec: str) -> str | None:
+    """Marker fingerprint over the corpus files, slice spec and sizing
+    (None, never fresh, when the files cannot be fingerprinted)."""
+    return _store_fingerprint(_input_fingerprint(corpus), spec=spec,
+                              params=STORE_PARAMS)
 
 
 def build_store(corpus: DataFrame, path: str, text_col: str = "text",
@@ -127,9 +101,8 @@ def build_store(corpus: DataFrame, path: str, text_col: str = "text",
     # Stamp AFTER a successful write (ann_store doctrine): a failed
     # build leaves no marker, so the next ensure retries instead of
     # serving half a store.
-    (p / _MARKER).write_text(json.dumps(
-        {"fingerprint": _store_fingerprint(corpus, spec),
-         "n_bits": nb, "k_hashes": kh}))
+    _write_marker(path, {"fingerprint": _fingerprint(corpus, spec),
+                         "n_bits": nb, "k_hashes": kh})
 
 
 def ensure_bloom_store(spark: SparkSession, sf_dir: str,
@@ -138,7 +111,7 @@ def ensure_bloom_store(spark: SparkSession, sf_dir: str,
     """Build the persisted fp+bloom store for ``sf_dir``'s documents
     corpus slice iff missing or stale. Returns (path, built)."""
     corpus = load_table(spark, sf_dir, "documents").filter(CORPUS_PRED)
-    fp = _store_fingerprint(corpus, CORPUS_PRED)
+    fp = _fingerprint(corpus, CORPUS_PRED)
     path = store_path(sf_dir, root)
     if not force and _is_fresh(path, fp):
         return path, False

@@ -197,38 +197,22 @@ def temperature_targets(df: DataFrame, strata_col: str,
 
 
 def top_k_per_group(df: DataFrame, group_col: str, k: int,
-                    order_by: list[tuple[str, bool]],
-                    local_prefilter: bool = True) -> DataFrame:
+                    order_by: list[tuple[str, bool]]) -> DataFrame:
     """Keep the top-k rows of every group under a total order — the
     curation staple "best N documents per source/domain by quality".
 
     `order_by` is `[(column, descending), ...]` and must be a total
     order (append a unique id) so results are deterministic.
 
-    Scale shape: the global rank is ONE group-keyed window. With
-    `local_prefilter` (default), a narrow per-partition top-k
-    (`mapInPandas`, no shuffle) runs first, so the exchange carries at
-    most k × partitions rows per group instead of every row — the same
-    local-winners-are-global-winners argument as `search.topk_per_query`;
-    correctness holds because the order is total. Turn the prefilter off
-    when groups are tiny (the Arrow hop costs more than it saves).
+    Scale shape: the global rank is ONE group-keyed window, after a
+    narrow per-batch top-k (`mapInPandas`, no shuffle), so the exchange
+    carries at most k × batches rows per group instead of every row
+    (`search._rank_window`, the rank step of `search.topk_per_query`);
+    correctness holds because the order is total.
     """
-    from pyspark.sql import Window
-    cols = [F.col(c).desc() if d else F.col(c).asc() for c, d in order_by]
-    if local_prefilter:
-        names = [c for c, _ in order_by]
-        asc = [not d for _, d in order_by]
-
-        def _local(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield (pdf.sort_values(names, ascending=asc)
-                           .groupby(group_col, sort=False).head(k))
-
-        df = df.mapInPandas(_local, df.schema)
-    w = Window.partitionBy(group_col).orderBy(*cols)
-    return (df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k).drop("_rk"))
+    from dotnetvectorsearch_spark.operators.search import _rank_window
+    return _rank_window(df, group_col, order_by, k,
+                        rank_col="_rk").drop("_rk")
 
 
 def hash_split(df: DataFrame, key_col: str,

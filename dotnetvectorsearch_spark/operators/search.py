@@ -192,6 +192,98 @@ def rank_top_k(sims: np.ndarray, ids, top_k: int,
     return band[order], scores
 
 
+def _cosine(m: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """BLAS cosine of every row of ``m`` against ``q`` with the
+    reference's zero-magnitude guard (a zero-norm side scores 0.0): a
+    1-D query is one gemv ``m @ q`` (B), a 2-D panel one gemm
+    ``m @ q.T`` (B x Q)."""
+    qn = np.linalg.norm(q) if q.ndim == 1 else np.linalg.norm(q, axis=1)
+    denom = np.multiply.outer(np.linalg.norm(m, axis=1), qn)
+    ok = denom > 0.0
+    return np.where(ok, (m @ q.T) / np.where(ok, denom, 1.0), 0.0)
+
+
+def _scan_topk(docs: DataFrame, q: np.ndarray, k: int, id_col: str,
+               vec_col: str, round_digits: int | None,
+               qids: np.ndarray | None = None, exclude_self: bool = False,
+               keep=None, cols: tuple[str, ...] = ()) -> DataFrame:
+    """The Arrow panel scorer: one ``mapInPandas`` scores each batch
+    with :func:`_cosine` and keeps each query's local top-k (similarity
+    desc, id asc). ``q`` is one query (1-D, output ``(id, similarity)``)
+    or a panel (2-D with ``qids``, output ``(qid, id, similarity)``).
+    A panel row competes for query j only where the (B x Q) mask
+    ``keep(pdf)`` allows it and, with ``exclude_self``, its id is not
+    ``qids[j]``; ``cols`` are extra columns ``keep`` reads."""
+    import pandas as pd
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            sims = _cosine(m, q)
+            if round_digits is not None:
+                sims = np.round(sims, round_digits)
+            ids = pdf[id_col].to_numpy()
+            sims = sims.reshape(len(ids), -1)        # one column per query
+            ok = None if keep is None else keep(pdf)
+            if exclude_self:
+                ne = ids[:, None] != qids[None, :]
+                ok = ne if ok is None else ok & ne
+            out_q, out_id, out_s = [], [], []
+            for j in range(sims.shape[1]):
+                b_ids, b_sims = ids, sims[:, j]
+                if ok is not None:
+                    b_ids, b_sims = ids[ok[:, j]], b_sims[ok[:, j]]
+                order = np.lexsort((b_ids, -b_sims))[:k]
+                out_id.append(b_ids[order])
+                out_s.append(b_sims[order])
+                if qids is not None:
+                    out_q.append(np.full(len(order), qids[j]))
+            out = {id_col: np.concatenate(out_id),
+                   "similarity": np.concatenate(out_s)}
+            if qids is not None:
+                out = {"qid": np.concatenate(out_q), **out}
+            yield pd.DataFrame(out)
+
+    schema = f"{id_col} long, similarity double"
+    if qids is not None:
+        schema = "qid long, " + schema
+    return docs.select(id_col, vec_col, *cols).mapInPandas(score, schema)
+
+
+def _rank_window(df: DataFrame, key: str, order_by: list[tuple[str, bool]],
+                k: int, prefilter: bool = True,
+                rank_col: str = "rank") -> DataFrame:
+    """Keep the top ``k`` rows of every ``key`` group under the total
+    order ``order_by`` (``[(column, descending), ...]``): one
+    ``row_number`` window, rank in ``rank_col``.
+
+    The window shuffles every input row on ``key`` — a skew bomb when
+    keys are few. ``prefilter`` first keeps each Arrow batch's local
+    top-k per key (``mapInPandas``, no shuffle), so the exchange carries
+    ~(batches * keys * k) rows; correct because the order is total:
+    every global top-k row is in its batch's local top-k. Inputs that
+    are already per-batch top-k (the Arrow scorers) skip it."""
+    from pyspark.sql.window import Window
+
+    if prefilter:
+        names = [c for c, _ in order_by]
+        asc = [not d for _, d in order_by]
+
+        def local_topk(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield (pdf.sort_values(names, ascending=asc)
+                           .groupby(key, sort=False).head(k))
+
+        df = df.mapInPandas(local_topk, df.schema)
+    w = Window.partitionBy(key).orderBy(
+        *[F.col(c).desc() if d else F.col(c).asc() for c, d in order_by])
+    return (df.withColumn(rank_col, F.row_number().over(w))
+            .filter(F.col(rank_col) <= k))
+
+
 def top_k_similar_arrow(docs: DataFrame, query_vec: list[float],
                         top_k: int = DEFAULT_TOP_K, id_col: str = "id",
                         vec_col: str = "embedding",
@@ -205,28 +297,9 @@ def top_k_similar_arrow(docs: DataFrame, query_vec: list[float],
     leaves the JVM, so use the HOF path when the query also needs
     codegen'd relational work fused into the same stage.
     """
-    import numpy as np
-    import pandas as pd
-
     validate_top_k(top_k)
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            denom = norms * qn
-            sims = np.where(denom > 0.0, (m @ q) / np.where(denom > 0.0,
-                                                            denom, 1.0), 0.0)
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            ids = pdf[id_col].to_numpy()
-            order = np.lexsort((ids, -sims))[:top_k]   # sim desc, id asc
-            yield pd.DataFrame({id_col: ids[order], "similarity": sims[order]})
-
-    return (docs.select(id_col, vec_col)
-            .mapInPandas(score, f"{id_col} long, similarity double")
+    return (_scan_topk(docs, q, top_k, id_col, vec_col, round_digits)
             .orderBy(F.desc("similarity"), F.asc(id_col)).limit(top_k))
 
 
@@ -234,27 +307,19 @@ def topk_per_query(docs: DataFrame, queries: DataFrame, k: int = DEFAULT_TOP_K,
                    doc_id: str = "vec_id", query_id: str = "qid",
                    doc_vec: str = "embedding", query_vec: str = "qvec",
                    round_digits: int | None = None,
-                   local_prefilter: bool = True,
                    exclude_self: bool = False) -> DataFrame:
     """Batch similarity join: the k most similar docs for EVERY query row.
 
     Plan: broadcast the (small) query set -> BroadcastNestedLoopJoin scores
-    N*Q rows with zero corpus shuffle -> rank per query.
-
-    The naive rank is a row_number window over qid, which shuffles all N*Q
-    scored rows on Q keys — a guaranteed skew bomb at scale (Q is small).
-    ``local_prefilter`` inserts an Arrow-batched per-batch top-k before the
-    window, so the exchange carries ~(batches * Q * k) rows instead of N*Q.
-    Correct because ranking is a total order (similarity desc, doc id asc):
-    every global top-k row is in its batch's local top-k.
+    N*Q rows with zero corpus shuffle -> :func:`_rank_window` per query,
+    whose Arrow prefilter keeps the exchange at ~(batches * Q * k) rows
+    instead of N*Q.
 
     ``exclude_self=True`` drops rows where the doc id equals the query id
     BEFORE ranking — the leave-one-out protocol when the query set is
     drawn from the corpus itself (retrieval evaluation, kNN label
     propagation).
     """
-    from pyspark.sql.window import Window
-
     validate_top_k(k)
     sim = cosine_similarity(doc_vec, query_vec)
     if round_digits is not None:
@@ -264,22 +329,15 @@ def topk_per_query(docs: DataFrame, queries: DataFrame, k: int = DEFAULT_TOP_K,
               .select(F.col(query_id), F.col(doc_id), sim.alias("similarity")))
     if exclude_self:
         scored = scored.filter(F.col(query_id) != F.col(doc_id))
-    if local_prefilter:
-        import pandas as pd
+    return _rank_window(scored, query_id,
+                        [("similarity", True), (doc_id, False)], k)
 
-        def local_topk(batches):
-            for pdf in batches:
-                yield (pdf.sort_values(["similarity", doc_id],
-                                       ascending=[False, True])
-                       .groupby(query_id, sort=False).head(k))
 
-        scored = scored.mapInPandas(
-            local_topk,
-            f"{query_id} long, {doc_id} long, similarity double")
-    w = (Window.partitionBy(query_id)
-         .orderBy(F.desc("similarity"), F.asc(doc_id)))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+def _panel(query_vecs: list) -> tuple[np.ndarray, np.ndarray]:
+    """``[(qid, vector), ...]`` -> (qids, Q x D float64 query matrix)."""
+    return (np.asarray([q for q, _ in query_vecs], dtype=np.int64),
+            np.stack([np.asarray(v, dtype=np.float64)
+                      for _, v in query_vecs]))
 
 
 def topk_per_query_arrow(docs: DataFrame, query_vecs: list[tuple[int, list]],
@@ -297,48 +355,12 @@ def topk_per_query_arrow(docs: DataFrame, query_vecs: list[tuple[int, list]],
     ``exclude_self=True`` masks the doc whose id equals the query id
     before the local top-k (leave-one-out protocol).
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.window import Window
-
     validate_top_k(k)
-    qids = np.asarray([q for q, _ in query_vecs], dtype=np.int64)
-    qmat = np.stack([np.asarray(v, dtype=np.float64)
-                     for _, v in query_vecs])          # Q x D
-    qnorms = np.linalg.norm(qmat, axis=1)              # Q
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # B x D
-            dnorms = np.linalg.norm(m, axis=1)                        # B
-            denom = dnorms[:, None] * qnorms[None, :]                 # B x Q
-            sims = np.where(denom > 0.0,
-                            (m @ qmat.T) / np.where(denom > 0.0, denom, 1.0),
-                            0.0)
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            ids = pdf[doc_id].to_numpy()
-            out_q, out_id, out_s = [], [], []
-            for j in range(len(qids)):
-                if exclude_self:
-                    keep = ids != qids[j]
-                    b_ids, b_sims = ids[keep], sims[keep, j]
-                else:
-                    b_ids, b_sims = ids, sims[:, j]
-                order = np.lexsort((b_ids, -b_sims))[:k]
-                out_q.extend([qids[j]] * len(order))
-                out_id.extend(b_ids[order])
-                out_s.extend(b_sims[order])
-            yield pd.DataFrame({"qid": out_q, doc_id: out_id,
-                                "similarity": out_s})
-
-    local = docs.select(doc_id, vec_col).mapInPandas(
-        score, f"qid long, {doc_id} long, similarity double")
-    w = Window.partitionBy("qid").orderBy(F.desc("similarity"),
-                                          F.asc(doc_id))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    qids, qmat = _panel(query_vecs)
+    local = _scan_topk(docs, qmat, k, doc_id, vec_col, round_digits,
+                       qids=qids, exclude_self=exclude_self)
+    return _rank_window(local, "qid", [("similarity", True), (doc_id, False)],
+                        k, prefilter=False)
 
 
 KNN_GRAPH_MAX_BROADCAST_ROWS = 2_000_000
@@ -368,7 +390,6 @@ def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
     (LSH-blocked) or ``ann.IVFIndex`` cell-join — same output contract,
     candidate-bounded.
     """
-    import numpy as np
     import pandas as pd
 
     validate_top_k(k)
@@ -384,20 +405,14 @@ def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
     id_order = np.argsort(all_ids)  # sorted ids => column index IS the
     all_ids = all_ids[id_order]     # id-asc tiebreak rank
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    mat = mat[id_order]
-    norms = np.linalg.norm(mat, axis=1)
-    bc = docs.sparkSession.sparkContext.broadcast((all_ids, mat, norms))
+    bc = docs.sparkSession.sparkContext.broadcast((all_ids, mat[id_order]))
 
     def score(batches):
-        ids_c, mat_c, norms_c = bc.value
+        ids_c, mat_c = bc.value
         n = len(ids_c)
         for pdf in batches:
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bn = np.linalg.norm(m, axis=1)
-            denom = bn[:, None] * norms_c[None, :]
-            sims = np.where(denom > 0.0,
-                            (m @ mat_c.T) / np.where(denom > 0.0, denom, 1.0),
-                            0.0)
+            sims = _cosine(m, mat_c)
             if round_digits is not None:
                 sims = np.round(sims, round_digits)
             bids = pdf[id_col].to_numpy()
@@ -459,8 +474,6 @@ def mmr_rerank(docs: DataFrame, query_vec: list[float], k: int = 5,
     candidate-set contract every production MMR retriever uses. Determinism:
     similarities rounded to 6 digits, ties broken by id asc.
     """
-    import numpy as np
-
     validate_top_k(k)
     cand = (top_k_similar_arrow(docs, query_vec, top_k=min(fetch_k, MAX_TOP_K),
                                 id_col=id_col, vec_col=vec_col,
@@ -471,10 +484,7 @@ def mmr_rerank(docs: DataFrame, query_vec: list[float], k: int = 5,
     ids = [r[id_col] for r in cand]
     qsims = np.asarray([r["similarity"] for r in cand])
     mat = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in cand])
-    n = np.linalg.norm(mat, axis=1)
-    denom = n[:, None] * n[None, :]
-    pair = np.where(denom > 0.0, (mat @ mat.T) / np.where(denom > 0.0,
-                                                          denom, 1.0), 0.0)
+    pair = _cosine(mat, mat)
     selected: list[int] = []
     remaining = list(range(len(ids)))
     while remaining and len(selected) < k:
@@ -544,10 +554,6 @@ def hard_negative_mining(corpus: DataFrame, anchors: DataFrame,
     anchor ordered similarity desc / id asc (stable ties, reference
     ordering contract VectorSearchService.cs:67-78).
     """
-    import pandas as pd  # noqa: F401 — mapInPandas path
-
-    from pyspark.sql.window import Window
-
     validate_top_k(k)
     anc = F.broadcast(anchors.select(
         F.col(id_col).alias("anchor_id"),
@@ -562,16 +568,5 @@ def hard_negative_mining(corpus: DataFrame, anchors: DataFrame,
                       & (F.col(id_col) != F.col("anchor_id")))
               .select("anchor_id", F.col(id_col),
                       sim.alias("similarity")))
-
-    def local_topk(batches):
-        for pdf in batches:
-            yield (pdf.sort_values(["similarity", id_col],
-                                   ascending=[False, True])
-                   .groupby("anchor_id", sort=False).head(k))
-
-    scored = scored.mapInPandas(
-        local_topk, f"anchor_id long, {id_col} long, similarity double")
-    w = (Window.partitionBy("anchor_id")
-         .orderBy(F.desc("similarity"), F.asc(id_col)))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _rank_window(scored, "anchor_id",
+                        [("similarity", True), (id_col, False)], k)

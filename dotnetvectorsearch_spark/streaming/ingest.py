@@ -792,10 +792,11 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     """
     import os
 
+    from ..operators.dedup import _per_band
+
     bands_store = f"{store_path}__bands"
     short_store = f"{store_path}__short"
-    rows_per_band = num_hashes // bands
-    assert rows_per_band * bands == num_hashes
+    rows_per_band = _per_band(num_hashes, bands, "num_hashes")
     bloom = _NdBloom(f"{store_path}__bloom")
     hcols = [f"h{k}" for k in range(num_hashes)]
 

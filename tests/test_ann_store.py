@@ -55,6 +55,17 @@ def test_stale_marker_rebuilds(spark, sf_dir, store_root):
     assert built  # fingerprint mismatch -> rebuild
 
 
+def test_unfingerprintable_input_is_never_fresh(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """Input files that cannot be fingerprinted fail closed: every
+    ensure rebuilds (a hash of ``repr(None)`` would match forever)."""
+    monkeypatch.setattr(ann_store, "_input_fingerprint", lambda df: None)
+    root = str(tmp_path)
+    _, built1 = ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
+    _, built2 = ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
+    assert built1 and built2
+
+
 def test_unknown_kind_raises(spark, sf_dir, store_root):
     with pytest.raises(ValueError, match="unknown index kind"):
         ann_store.ensure_index(spark, sf_dir, "hnsw", root=store_root)

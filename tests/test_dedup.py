@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from dotnetvectorsearch_spark.operators import dedup as D
 from dotnetvectorsearch_spark.sources.io import load_table
+from dotnetvectorsearch_spark.streaming.ingest import stream_neardup_dedup
 
 
 @pytest.fixture(scope="module")
@@ -416,7 +417,10 @@ def test_neardup_filter_incremental_empty_store(spark, dup_docs):
     lambda d: D.minhash_pairs_portable(d, num_hashes=16, bands=5),
     lambda d: D.simhash_pairs_portable(d, bits=32, chunks=5),
     lambda d: D.simhash_pairs_portable(d, bits=30, chunks=3),
-], ids=["neardup", "minhash_portable", "simhash_chunks", "simhash_hex"])
+    lambda d: stream_neardup_dedup(d, "out", "store", "ckpt",
+                                   num_hashes=16, bands=5),
+], ids=["neardup", "minhash_portable", "simhash_chunks", "simhash_hex",
+        "streaming"])
 def test_band_shapes_that_do_not_split_raise(spark, dup_docs, call):
     """16 hashes in 5 bands would band only h0..h14; the check must be
     a ValueError, which ``python -O`` keeps (it strips asserts)."""

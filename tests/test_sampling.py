@@ -236,16 +236,17 @@ def test_mixture_rebalance_drops_unlisted_strata(spark, sf_dir):
     assert out.count() == docs.filter(F.col("lang") == "en").count()
 
 
-def test_top_k_per_group_prefilter_matches_window(spark, sf_dir):
+def test_top_k_per_group_matches_pandas_reference(spark, sf_dir):
     from dotnetvectorsearch_spark.operators.sampling import top_k_per_group
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars")
-    order = [("n_chars", True), ("doc_id", False)]
-    fast = top_k_per_group(docs, "source", 3, order, local_prefilter=True)
-    plain = top_k_per_group(docs, "source", 3, order, local_prefilter=False)
-    key = lambda r: (r.source, r.doc_id, r.n_chars)
-    assert sorted(map(key, fast.collect())) == sorted(
-        map(key, plain.collect()))
+    got = top_k_per_group(docs, "source", 3,
+                          [("n_chars", True), ("doc_id", False)])
+    want = (docs.toPandas()
+            .sort_values(["n_chars", "doc_id"], ascending=[False, True])
+            .groupby("source").head(3))
+    assert sorted((r.source, r.doc_id, r.n_chars) for r in got.collect()) \
+        == sorted(want.itertuples(index=False, name=None))
 
 
 def test_top_k_per_group_sizes_and_membership(spark, sf_dir):

@@ -92,6 +92,49 @@ def test_arrow_topk_matches_hof_path(spark, sf_dir):
     assert arrow == hof
 
 
+def test_arrow_paths_score_zero_vectors_zero(spark):
+    """A zero-norm doc and a zero-norm query score 0.0 on every
+    Arrow/BLAS path, exactly as :func:`S.top_k_similar`'s guard does."""
+    import numpy as np
+
+    from dotnetvectorsearch_spark.operators.ann import (
+        IVFIndex, ivf_topk_panel)
+    vecs = [[1.0, 0.0, 0.0, 0.0], [0.6, 0.8, 0.0, 0.0],
+            [0.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0],
+            [0.5, 0.5, 0.5, 0.5]]           # doc 2 is the zero vector
+    docs = spark.createDataFrame(list(enumerate(vecs)),
+                                 "vec_id long, embedding array<float>")
+    panel = [(2, vecs[2]), (0, vecs[0])]    # a zero and a unit query
+
+    def hof(qv):
+        q = spark.createDataFrame([(qv,)], "query_embedding array<float>")
+        return [(r.vec_id, r.similarity) for r in S.top_k_similar(
+            docs, q, top_k=5, id_col="vec_id", round_digits=6).collect()]
+
+    want = {qid: hof(qv) for qid, qv in panel}
+    assert all(s == 0.0 for _, s in want[2])
+    assert dict(want[0])[2] == 0.0
+    for qid, qv in panel:
+        assert [(r.vec_id, r.similarity) for r in S.top_k_similar_arrow(
+            docs, qv, top_k=5, id_col="vec_id",
+            round_digits=6).collect()] == want[qid]
+    flat = sorted((q, i, s) for q, rows in want.items() for i, s in rows)
+    ivf = IVFIndex(n_cells=2, nprobe=2).fit_matrix(
+        np.asarray(vecs, dtype=np.float32))
+    for got in (S.topk_per_query_arrow(docs, panel, k=5, round_digits=6),
+                ivf_topk_panel(ivf.transform(docs), ivf, panel, k=5,
+                               round_digits=6)):
+        assert sorted((r.qid, r.vec_id, r.similarity)
+                      for r in got.collect()) == flat
+    sims = {i: dict(hof(v)) for i, v in enumerate(vecs)}
+    knn = S.knn_graph(docs, k=4, round_digits=6).collect()
+    assert len(knn) == 20
+    for r in knn:
+        assert r.similarity == sims[r.vec_id][r.neighbor_id]
+    assert all(r.similarity == 0.0 for r in knn if 2 in
+               (r.vec_id, r.neighbor_id))
+
+
 # ------------------------------------------------------------- kNN graph
 
 def test_knn_graph_matches_bruteforce(spark, sf_dir):

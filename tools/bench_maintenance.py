@@ -340,17 +340,14 @@ def scenario_publish_scaling(work: Path, triggers: int = 256,
 
 def _probed_fraction(idx, rows_df, panel, nprobe):
     """Mean over the panel of (rows in the query's nprobe nearest
-    cells) / (total rows) — the share of the corpus a probe scans.
-    Cell ranking replicates IVFIndex.probe_cells exactly."""
+    cells) / (total rows) — the share of the corpus a probe scans."""
     hist = {r.cell: r.cnt for r in
             rows_df.groupBy("cell").agg(F.count("*").alias("cnt"))
             .collect()}
     total = sum(hist.values())
     fracs = []
     for _, v in panel:
-        q = np.asarray(v, dtype=np.float32)
-        q = q / max(np.linalg.norm(q), 1e-12)
-        top = np.argsort(-(idx.centroids @ q))[:nprobe]
+        top = idx.cell_order(v)[:nprobe]
         fracs.append(sum(hist.get(int(c), 0) for c in top) / total)
     return round(float(np.mean(fracs)), 4)
 
