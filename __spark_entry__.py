@@ -559,7 +559,7 @@ _NROWS_MEMO: dict = {}
 
 def _table_rows_memo(df, path: str) -> int:
     """Row count memoized on the dataset's file fingerprint (path,
-    size, mtime per member file — the `dedup._input_fingerprint`
+    size, mtime per member file — the `caching._input_fingerprint`
     doctrine: a rewritten-in-place corpus must never reuse a stale
     count). Saves one count JOB per query build for sizing decisions
     like `_lsh_adaptive_bits`; the count itself is parquet-stats-cheap

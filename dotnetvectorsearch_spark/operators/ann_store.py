@@ -41,9 +41,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import localdf
+from ..caching import _input_fingerprint
 from ..sources.io import load_table
 from .ann import IVFIndex, IVFPQIndex, PQIndex, _unit
-from .dedup import _input_fingerprint
 from .search import round6_half_up
 
 # Hyperparameters MUST stay in lockstep with the fit-in-query registry
@@ -92,7 +92,7 @@ def index_path(sf_dir: str, kind: str, root: str | None = None) -> str:
 
 def _store_fingerprint(files, **spec) -> str | None:
     """Marker fingerprint of a store: sha256 over its input files'
-    ``dedup._input_fingerprint`` and the build ``spec``; any change
+    ``caching._input_fingerprint`` and the build ``spec``; any change
     rebuilds. None when the files could not be fingerprinted — hashing
     ``repr(None)`` would be a constant that matches the marker forever
     and serves a stale store after a corpus rewrite, so None is never

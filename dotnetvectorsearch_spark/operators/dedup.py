@@ -35,7 +35,6 @@ row-at-a-time UDFs anywhere in this module.
 from __future__ import annotations
 
 import re
-import threading
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -51,7 +50,12 @@ from dotnetvectorsearch_spark.functions.text import (
     word_shingles,
 )
 from dotnetvectorsearch_spark import localdf
-from dotnetvectorsearch_spark.caching import transient_persist
+from dotnetvectorsearch_spark.caching import (
+    SessionMemo,
+    input_key,
+    transient_persist,
+    unpersist_broadcast,
+)
 from dotnetvectorsearch_spark.functions.vector import cosine_similarity
 
 
@@ -638,111 +642,30 @@ def ngram_novelty(docs: DataFrame, id_col: str = "doc_id",
 
 JACCARD_MAX_CANDIDATE_PAIRS = 1_000_000_000
 
-# Guard-estimate memo: (analyzed-plan semanticHash of the shingled base,
-# input-file fingerprint) -> estimated candidate volume. Repeated
-# pipelines over the same corpus (dedup_clusters / dedup_weights /
-# doc_pagerank all start from the same jaccard_pairs plan) pay the
-# counting job once per session instead of once per query; a stale or
-# colliding entry only mis-prices the GUARD, never the result. The
-# fingerprint (file list + size + mtime, driver-side stat calls) keys
-# out in-place data changes that the plan's semanticHash cannot see — a
-# grown corpus at the same path must not reuse a stale low estimate.
-# Bounded FIFO, lock-guarded.
-_JP_GUARD_MEMO: dict[tuple, float] = {}
-_JP_GUARD_MEMO_MAX = 64
-_JP_GUARD_LOCK = threading.Lock()
-
-
-def _fifo_put(memo: dict, lock, cap: int, key, value) -> None:
-    """Insert into a bounded FIFO memo, evicting the oldest entry at
-    ``cap``."""
-    with lock:
-        if len(memo) >= cap:
-            memo.pop(next(iter(memo)))
-        memo[key] = value
+# Guard-estimate memo: input_key of the guarded inputs + the shingling
+# parameters -> estimated candidate volume. Repeated pipelines over the
+# same corpus (dedup_clusters / dedup_weights / doc_pagerank all start
+# from the same jaccard_pairs plan) pay the counting job once per
+# session instead of once per query; a stale or colliding entry only
+# mis-prices the GUARD, never the result. The key is taken on the
+# unpersisted input frames: the persisted shingle frames read from the
+# cache and report no input files.
+_GUARD_MEMO = SessionMemo(64)
 
 
 def clear_guard_memo() -> int:
     """Drop every memoized driver-side structure keyed on input state —
-    the jaccard guard estimates AND the incremental-dedup bloom filters
-    (pair with ``caching.release_transient`` at session boundaries when
-    the underlying corpus may have been rewritten in place). Returns the
-    number of entries dropped across both memos."""
-    with _JP_GUARD_LOCK:
-        n = len(_JP_GUARD_MEMO)
-        _JP_GUARD_MEMO.clear()
-    with _BLOOM_MEMO_LOCK:
-        n += len(_BLOOM_MEMO)
-        _BLOOM_MEMO.clear()
-    with _DECON_IDX_LOCK:
-        n += len(_DECON_IDX_MEMO)
-        for entry in _DECON_IDX_MEMO.values():
-            try:
-                entry[0].unpersist()
-            except Exception:  # pragma: no cover
-                pass
-        _DECON_IDX_MEMO.clear()
-    return n
+    the jaccard guard estimates, the eval postings indexes, the
+    incremental-dedup bloom filters and the bloom-store broadcasts,
+    unpersisting the broadcasts (pair with
+    ``caching.release_transient`` at session boundaries when the
+    underlying corpus may have been rewritten in place). Returns the
+    number of entries dropped across all four memos."""
+    from . import dedup_store  # imports this module
 
-
-# Driver-side stat budget for _input_fingerprint. Past this many input
-# files, the per-file os.stat loop would be a latency cliff on EVERY
-# memo lookup / store-freshness check (advisor r9: 10^5+ files = 10^5
-# sequential syscalls even on a memo hit), so stats are taken over an
-# evenly-spaced sample of this size and the full file LIST is covered
-# by a path digest instead.
-_FP_STAT_CAP = 4096
-
-
-def _input_fingerprint(df: DataFrame):
-    """Cheap driver-side identity of a frame's input files.
-
-    Covers the FULL file list: a sha256 digest of every sorted path
-    (no syscalls — any add/remove/rename changes the key), plus stat
-    aggregates (count, total size, max mtime_ns) and per-file
-    (path, size, mtime_ns) detail for the first 64 paths, so a rewrite
-    past the 64th file or a same-second touch still changes the key
-    (advisor r8). Stat syscalls are BOUNDED at ``_FP_STAT_CAP``: past
-    the cap an evenly-spaced sample is statted (advisor r9) — an
-    in-place same-path rewrite of an unsampled file in a >4096-file
-    corpus is the one change this can miss (parquet rewrites change
-    file names/counts in practice, which the digest catches). Local
-    stat calls only; non-local or stat-failing paths degrade to the
-    path string, which still catches file-set changes."""
-    import hashlib
-    import os
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:  # pragma: no cover - py4j surface drift
-        return None
-    path_digest = hashlib.sha256("\n".join(files).encode()).hexdigest()
-    n = len(files)
-    if n > _FP_STAT_CAP:
-        step = n / _FP_STAT_CAP
-        stat_idx = sorted({int(i * step) for i in range(_FP_STAT_CAP)}
-                          | set(range(min(64, n))))
-    else:
-        stat_idx = range(n)
-    sig = []
-    total_size = 0
-    max_mtime_ns = -1
-    for idx in stat_idx:
-        f = files[idx]
-        # Hadoop renders local URIs as file:/p or file:///p depending
-        # on the path-resolution route; a stat on the raw URI degrades
-        # to (-1,-1), silently losing the (size, mtime) sensitivity
-        # (advisor r6). local_path resolves both.
-        try:
-            st = os.stat(localdf.local_path(f) or f)
-            size, mtime_ns = st.st_size, st.st_mtime_ns
-        except OSError:
-            size, mtime_ns = -1, -1
-        total_size += size
-        max_mtime_ns = max(max_mtime_ns, mtime_ns)
-        if idx < 64:
-            sig.append((f, size, mtime_ns))
-    return (n, path_digest, total_size, max_mtime_ns, tuple(sig))
+    return sum(m.clear() for m in (_GUARD_MEMO, _DECON_INDEX,
+                                   _BLOOM_FILTERS,
+                                   dedup_store._BLOOM_BROADCASTS))
 
 
 def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -796,15 +719,7 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
         # magnitudes the sum is dominated by high-df shingles whose
         # sampled df concentrates tightly. Shingles are hashed to longs
         # (8-byte shuffle key; collisions only over-count = err safe).
-        try:
-            sem = base._jdf.queryExecution().analyzed().semanticHash()
-            memo_key = (sem, _input_fingerprint(docs))
-        except Exception:  # pragma: no cover - py4j surface drift
-            memo_key = None
-        with _JP_GUARD_LOCK:
-            n_cand = _JP_GUARD_MEMO.get(memo_key) \
-                if memo_key is not None else None
-        if n_cand is None:
+        def estimate() -> float:
             n_docs = base.count()  # materializes the transient persist
             # Sample target 2k docs (was 20k): the guard exists to stop
             # 10^9-candidate joins, where the doc-sampled estimate
@@ -817,15 +732,17 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                 base.filter(F.xxhash64(F.col(id_col), F.lit("jp-guard"))
                             % q_inv == 0)
                 .select(*(block_cols or []), F.explode("sh").alias("s")))
-            n_cand = (g_inv.groupBy(*(block_cols or []),
-                                    F.xxhash64("s").alias("__sh"))
-                      .agg(F.count(F.lit(1)).alias("df"))
-                      .agg(F.sum(F.col("df") * (F.col("df") - 1) / 2)
-                           .cast("double"))
-                      .collect()[0][0] or 0.0) * q_inv * q_inv
-            if memo_key is not None:
-                _fifo_put(_JP_GUARD_MEMO, _JP_GUARD_LOCK, _JP_GUARD_MEMO_MAX,
-                          memo_key, n_cand)
+            return (g_inv.groupBy(*(block_cols or []),
+                                  F.xxhash64("s").alias("__sh"))
+                    .agg(F.count(F.lit(1)).alias("df"))
+                    .agg(F.sum(F.col("df") * (F.col("df") - 1) / 2)
+                         .cast("double"))
+                    .collect()[0][0] or 0.0) * q_inv * q_inv
+
+        key = input_key(docs)
+        n_cand = _GUARD_MEMO.get_or_build(
+            key and key + (id_col, text_col, shingle_n,
+                           tuple(block_cols or ())), estimate)
         if n_cand > max_candidate_pairs:
             raise ValueError(
                 f"jaccard_pairs inverted-index join would emit "
@@ -870,10 +787,9 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
     shingle frames, before the join is scheduled. Same estimator
     doctrine as the ``jaccard_pairs`` guard: exact under ~2k docs per
     side, else an unbiased deterministic 1/q doc sample per side
-    (independent salts, so E[df_tr * df_te] factorizes); memoized in
-    ``_JP_GUARD_MEMO`` keyed on plan semanticHash + input file
-    fingerprints. Grams hash to longs (collisions over-count = err
-    safe).
+    (independent salts, so E[df_tr * df_te] factorizes); the caller
+    memoizes it in ``_GUARD_MEMO``. Grams hash to longs (collisions
+    over-count = err safe).
 
     Cost fold (VERDICT r6 #5), two tiers:
 
@@ -892,17 +808,6 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
        aggregation produces both per-gram frequencies (the old
        two-gram-tables + equi-join shape paid 2 groupBy shuffles + a
        join + an agg), reusing the (n_tr, n_te) counts from tier 1."""
-    try:
-        sem = (tr._jdf.queryExecution().analyzed().semanticHash(),
-               te._jdf.queryExecution().analyzed().semanticHash())
-        memo_key = (sem, _input_fingerprint(train_src),
-                    _input_fingerprint(test_src))
-    except Exception:  # pragma: no cover - py4j surface drift
-        memo_key = None
-    with _JP_GUARD_LOCK:
-        if memo_key is not None and memo_key in _JP_GUARD_MEMO:
-            return _JP_GUARD_MEMO[memo_key]
-
     def side_stats(src):
         if text_col is None:
             return src.count(), None
@@ -922,9 +827,6 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
     if (bound is not None and max_tr is not None and max_te is not None):
         worst = float(n_tr) * float(n_te) * min(max_tr, max_te)
         if worst <= bound:
-            if memo_key is not None:
-                _fifo_put(_JP_GUARD_MEMO, _JP_GUARD_LOCK, _JP_GUARD_MEMO_MAX,
-                          memo_key, worst)
             return worst
 
     def sampled(df, id_c, n, salt):
@@ -939,16 +841,12 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
                         F.lit(1).alias("is_tr"))
             .unionByName(s_te.select(F.explode("sh").alias("s"),
                                      F.lit(0).alias("is_tr"))))
-    n_cand = (both.groupBy(F.xxhash64("s").alias("__sh"))
-              .agg(F.sum("is_tr").alias("df_tr"),
-                   F.sum(1 - F.col("is_tr")).alias("df_te"))
-              .agg(F.sum(F.col("df_tr").cast("double")
-                         * F.col("df_te")).cast("double"))
-              .collect()[0][0] or 0.0) * qt * qe
-    if memo_key is not None:
-        _fifo_put(_JP_GUARD_MEMO, _JP_GUARD_LOCK, _JP_GUARD_MEMO_MAX,
-                  memo_key, n_cand)
-    return n_cand
+    return (both.groupBy(F.xxhash64("s").alias("__sh"))
+            .agg(F.sum("is_tr").alias("df_tr"),
+                 F.sum(1 - F.col("is_tr")).alias("df_te"))
+            .agg(F.sum(F.col("df_tr").cast("double")
+                       * F.col("df_te")).cast("double"))
+            .collect()[0][0] or 0.0) * qt * qe
 
 
 def cross_corpus_contamination(train: DataFrame, test: DataFrame,
@@ -990,10 +888,13 @@ def cross_corpus_contamination(train: DataFrame, test: DataFrame,
     tr = transient_persist(tr)  # guard gram counts + the inverted index
     te = transient_persist(te)  # feeds sizes + the inverted index
     if max_candidate_pairs is not None:
-        n_cand = _bipartite_gram_join_volume(
-            tr, "train_id", te, "test_id", train, test,
-            text_col=text_col, shingle_n=shingle_n,
-            bound=max_candidate_pairs)
+        key = input_key(train, test)
+        n_cand = _GUARD_MEMO.get_or_build(
+            key and key + (id_col, text_col, shingle_n),
+            lambda: _bipartite_gram_join_volume(
+                tr, "train_id", te, "test_id", train, test,
+                text_col=text_col, shingle_n=shingle_n,
+                bound=max_candidate_pairs))
         if n_cand > max_candidate_pairs:
             raise ValueError(
                 f"cross_corpus_contamination gram join would emit "
@@ -1929,7 +1830,6 @@ def decontaminate(train: DataFrame, test: DataFrame,
     changes the result set.
     """
     if broadcast_max_postings is not None:
-        memo_key = _decon_memo_key(test, shingle_n, text_col)
         try:
             # budget enforcement happens INSIDE _ensure_decon_index,
             # atomically with the memo lookup/build (advisor r10: a
@@ -1937,7 +1837,6 @@ def decontaminate(train: DataFrame, test: DataFrame,
             # be rebuilt unguarded between check and build)
             return _decontaminate_broadcast(
                 train, test, id_col, text_col, shingle_n, min_overlap,
-                memo_key=memo_key,
                 max_postings=broadcast_max_postings)
         except DeconBudgetExceeded:
             pass  # route to the guarded distributed join below
@@ -1949,20 +1848,18 @@ def decontaminate(train: DataFrame, test: DataFrame,
     return train.join(bad, id_col, "left_anti")
 
 
-# Postings-index memo: (test-plan semanticHash, test input-file
-# fingerprint, shingle_n, text_col) -> (broadcast handle, n_test).
-# The eval side of decontamination is reused across every query of a
-# session (curated_corpus, decontaminated_docs and training_shards all
-# decontaminate against the same split), so the collect + broadcast is
-# paid once per (eval set, params) instead of once per call. Same
-# keying doctrine as _JP_GUARD_MEMO: the file fingerprint keys out
-# in-place data changes the plan hash cannot see; a collision risks
-# only a stale eval INDEX, and only within a session — cleared by
-# clear_guard_memo with the other input-keyed memos. Bounded FIFO,
-# evicted broadcasts unpersisted (advisor r9 doctrine).
-_DECON_IDX_MEMO: dict[tuple, tuple] = {}
-_DECON_IDX_MEMO_MAX = 16
-_DECON_IDX_LOCK = threading.Lock()
+# Postings-index memo: input_key(test) + (shingle_n, text_col) ->
+# (broadcast handle, n_test). The eval side of decontamination is
+# reused across every query of a session (curated_corpus,
+# decontaminated_docs and training_shards all decontaminate against the
+# same split), so the collect + broadcast is paid once per (eval set,
+# params) instead of once per call. min_overlap is NOT part of the key —
+# thresholds are derived worker-side, so the enforcement queries and the
+# overlap dial share one index. text_col IS part of the key: the
+# postings are built from that column, and one eval frame can carry
+# several text columns (advisor r10). A collision risks only a stale
+# eval INDEX, and only within a session.
+_DECON_INDEX = SessionMemo(16, release=unpersist_broadcast)
 
 
 def _decon_index_stats(test: DataFrame, text_col: str,
@@ -1985,51 +1882,24 @@ class DeconBudgetExceeded(ValueError):
     (the message carries the reroute advice)."""
 
 
-def _decon_memo_key(test: DataFrame, shingle_n: int, text_col: str):
-    """Memo key for the eval postings index; None when the plan/input
-    identity cannot be established (never memoize blind). min_overlap
-    is NOT part of the key — thresholds are derived worker-side, so
-    the enforcement queries and the overlap dial share one index per
-    (eval set, shingle_n, text_col). text_col IS part of the key: the
-    postings are built from that column, and one eval frame can carry
-    several text columns (advisor r10)."""
-    try:
-        sem = test._jdf.queryExecution().analyzed().semanticHash()
-        fp = _input_fingerprint(test)
-    except Exception:  # pragma: no cover - py4j surface drift
-        return None
-    if fp is None:
-        return None
-    return (sem, fp, shingle_n, text_col)
-
-
 def _ensure_decon_index(spark_df: DataFrame, test: DataFrame,
-                        text_col: str, shingle_n: int, memo_key,
+                        text_col: str, shingle_n: int,
                         max_postings: int | None = None,
                         max_bytes: int =
                         DECONTAMINATE_BROADCAST_MAX_BYTES):
     """Build-or-fetch the broadcast eval postings index: returns
-    (broadcast handle, n_test). Memoized per memo_key (None = never
-    memoize); evicted/raced broadcasts are unpersisted.
+    (broadcast handle, n_test), memoized in ``_DECON_INDEX``.
 
     When ``max_postings`` is set and the memo misses, the postings/byte
-    budget is checked HERE, on the same code path as the build — no
-    window where a budget check passes and a different, larger index
-    gets built. The check-and-build is per CALLER, not globally
-    locked: two concurrent first callers each pay the stats job +
-    postings build + broadcast, and ``setdefault`` reconciles — the
-    loser's broadcast is unpersisted, so the race costs duplicated
-    work once, never a leak (a per-key build lock isn't worth
-    serializing every cold call for). A memo hit skips the check (the
-    index already exists; using it costs nothing new — but see
-    ``stream_decontaminate``'s note on passing a STRICTER budget than
-    the one the index was memoized under).
+    budget is checked inside the build — no window where a budget check
+    passes and a different, larger index gets built. A memo hit skips
+    the build, not the caller's budget (see below).
     """
-    with _DECON_IDX_LOCK:
-        hit = _DECON_IDX_MEMO.get(memo_key) if memo_key else None
+    key = input_key(test)
+    key = key and key + (shingle_n, text_col)
+    hit = _DECON_INDEX.get(key)
     if hit is not None and max_postings is not None:
-        # A memo hit skips the BUILD, not the caller's budget: a
-        # stream defined with a STRICTER budget than the batch call
+        # A stream defined with a STRICTER budget than the batch call
         # that populated the memo must still refuse (advisor r11) —
         # the postings count is read off the live broadcast value,
         # no stats job. (The byte estimate is not re-derived on a
@@ -2043,7 +1913,10 @@ def _ensure_decon_index(spark_df: DataFrame, test: DataFrame,
                 f"Use the guarded distributed formulation "
                 f"(cross_corpus_contamination) or raise the budget "
                 f"explicitly")
-    if hit is None:
+    if hit is not None:
+        return hit
+
+    def build():
         if max_postings is not None:
             postings, _, est_bytes = _decon_index_stats(
                 test, text_col, shingle_n)
@@ -2062,34 +1935,39 @@ def _ensure_decon_index(spark_df: DataFrame, test: DataFrame,
             test, text_col, shingle_n)
         bc = spark_df.sparkSession.sparkContext.broadcast(
             (grams2id, indptr, post, n_te))
-        hit = (bc, len(n_te))
-        if memo_key is not None:
-            with _DECON_IDX_LOCK:
-                if memo_key not in _DECON_IDX_MEMO and \
-                        len(_DECON_IDX_MEMO) >= _DECON_IDX_MEMO_MAX:
-                    evicted = _DECON_IDX_MEMO.pop(
-                        next(iter(_DECON_IDX_MEMO)))
-                    try:
-                        evicted[0].unpersist()
-                    except Exception:  # pragma: no cover
-                        pass
-                # setdefault: a concurrent builder's entry wins and
-                # ours is released instead of leaking executor blocks
-                kept = _DECON_IDX_MEMO.setdefault(memo_key, hit)
-                if kept is not hit:
-                    try:
-                        hit[0].unpersist()
-                    except Exception:  # pragma: no cover
-                        pass
-                    hit = kept
-    return hit
+        return bc, len(n_te)
+
+    return _DECON_INDEX.get_or_build(key, build)
+
+
+def _eval_doc_hits(grams, g2i, ptr, pst, n_test: int):
+    """Per-eval-doc shared-gram counts of one train doc as (idx, cnt):
+    eval doc ``idx[j]`` shares ``cnt[j]`` of the doc's grams; None when
+    nothing is shared. Hybrid counting, chosen per doc by a cost model
+    (measured crossover ~16x, r11): sparse hit lists (real corpora —
+    diverse vocab, few eval docs share a doc's grams) count via
+    O(hits log hits) ``np.unique`` over the hit docs only; dense ones
+    (a small synthetic vocabulary, where hot grams make hits ~
+    n_test/5) via the O(n_test) ``np.bincount`` over every eval doc
+    (``idx`` is then a full slice), whose memset+scatter beats a sort
+    there."""
+    import numpy as np
+
+    if grams is None or len(grams) == 0:
+        return None
+    gids = [g2i[g] for g in grams if g in g2i]
+    if not gids:
+        return None
+    hits = np.concatenate([pst[ptr[g]:ptr[g + 1]] for g in gids])
+    if hits.size * 16 < n_test:
+        return np.unique(hits, return_counts=True)
+    return slice(None), np.bincount(hits, minlength=n_test)
 
 
 def _decontaminate_broadcast(train: DataFrame, test: DataFrame,
                              id_col: str, text_col: str,
                              shingle_n: int,
                              min_overlap: float,
-                             memo_key=None,
                              max_postings: int | None = None) -> DataFrame:
     """The map-side decontamination kernel: broadcast test postings,
     filter train with a vectorized contaminated() pandas UDF. Raises
@@ -2098,7 +1976,6 @@ def _decontaminate_broadcast(train: DataFrame, test: DataFrame,
     import numpy as np
 
     bc, n_test = _ensure_decon_index(train, test, text_col, shingle_n,
-                                     memo_key,
                                      max_postings=max_postings)
 
     @F.pandas_udf("boolean")
@@ -2109,27 +1986,10 @@ def _decontaminate_broadcast(train: DataFrame, test: DataFrame,
         for s in it:
             out = np.zeros(len(s), dtype=bool)
             for i, grams in enumerate(s):
-                if grams is None or len(grams) == 0:
-                    continue
-                gids = [g2i[g] for g in grams if g in g2i]
-                if not gids:
-                    continue
-                hits = np.concatenate(
-                    [pst[ptr[g]:ptr[g + 1]] for g in gids])
-                # Hybrid counting, chosen per doc by a cost model
-                # (measured crossover ~16x, r11): sparse hit lists
-                # (real corpora — diverse vocab, few eval docs share a
-                # doc's grams) count via O(hits log hits) np.unique;
-                # dense ones (this synthetic 31-word vocabulary, where
-                # hot grams make hits ~ n_test/5) via the O(n_test)
-                # bincount, whose memset+scatter beats a sort there.
-                # Identical flags either way.
-                if hits.size * 16 < n_test:
-                    t_idx, cnt = np.unique(hits, return_counts=True)
-                    out[i] = bool(np.any(cnt >= thr[t_idx]))
-                else:
-                    counts = np.bincount(hits, minlength=n_test)
-                    out[i] = bool(np.any(counts >= thr))
+                r = _eval_doc_hits(grams, g2i, ptr, pst, n_test)
+                if r is not None:
+                    idx, cnt = r
+                    out[i] = bool(np.any(cnt >= thr[idx]))
             yield pd.Series(out)
 
     # plan fence (same doctrine as the bloom probe): a deterministic
@@ -2165,9 +2025,8 @@ def max_eval_overlap(train: DataFrame, test: DataFrame,
     """
     import numpy as np
 
-    memo_key = _decon_memo_key(test, shingle_n, text_col)
     bc, n_test = _ensure_decon_index(
-        train, test, text_col, shingle_n, memo_key,
+        train, test, text_col, shingle_n,
         max_postings=broadcast_max_postings)
 
     @F.pandas_udf("double")
@@ -2176,21 +2035,12 @@ def max_eval_overlap(train: DataFrame, test: DataFrame,
         for s in it:
             out = np.zeros(len(s), dtype=np.float64)
             for i, grams in enumerate(s):
-                if grams is None or len(grams) == 0:
-                    continue
-                gids = [g2i[g] for g in grams if g in g2i]
-                if not gids:
-                    continue
-                hits = np.concatenate(
-                    [pst[ptr[g]:ptr[g + 1]] for g in gids])
-                # same hybrid cost model as `contaminated`; unshared
-                # test docs contribute ratio 0, never raising the max
-                if hits.size * 16 < n_test:
-                    t_idx, cnt = np.unique(hits, return_counts=True)
-                    out[i] = float(np.max(cnt / n_te[t_idx]))
-                else:
-                    counts = np.bincount(hits, minlength=n_test)
-                    out[i] = float(np.max(counts / n_te))
+                r = _eval_doc_hits(grams, g2i, ptr, pst, n_test)
+                if r is not None:
+                    # unshared test docs contribute ratio 0, never
+                    # raising the max
+                    idx, cnt = r
+                    out[i] = float(np.max(cnt / n_te[idx]))
             yield pd.Series(np.floor(out * 1e6 + 0.5) / 1e6)
 
     overlap_max = overlap_max.asNondeterministic()
@@ -2380,12 +2230,34 @@ def fuzzy_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
 # ------------------------------------------------------------ bloom filter
 
 
-# Serve-path bloom-filter store: corpus identity -> built filter.
-# Bounded FIFO, lock-guarded (same doctrine as _JP_GUARD_MEMO; a ~1 MB
-# filter x 8 entries bounds driver memory at 8 MB).
-_BLOOM_MEMO: dict[tuple, tuple] = {}
-_BLOOM_MEMO_MAX = 8
-_BLOOM_MEMO_LOCK = threading.Lock()
+# Serve-path bloom filters: input_key(corpus fps) + sizing -> built
+# filter (a ~1 MB filter x 8 entries bounds driver memory at 8 MB).
+_BLOOM_FILTERS = SessionMemo(8)
+
+
+def _bloom_add(bits, h1, h2, n_bits: int, k: int) -> None:
+    """Set the ``k`` Kirsch-Mitzenmacher bits ``(h1 + i*h2) mod n_bits``
+    (uint64 arithmetic, wrapping) of every key in the packed uint64
+    bitset ``bits``, in place. ``h1``/``h2`` are uint64 arrays."""
+    import numpy as np
+
+    for i in range(k):
+        pos = (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
+        np.bitwise_or.at(bits, pos >> np.uint64(6),
+                         np.uint64(1) << (pos & np.uint64(63)))
+
+
+def _bloom_test(bits, h1, h2, n_bits: int, k: int):
+    """Might-contain booleans, one per key: all ``k`` bits that
+    :func:`_bloom_add` sets for the key are set in ``bits``."""
+    import numpy as np
+
+    hit = np.ones(len(h1), dtype=bool)
+    for i in range(k):
+        pos = (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
+        hit &= ((bits[pos >> np.uint64(6)] >> (pos & np.uint64(63)))
+                & np.uint64(1)) != 0
+    return hit
 
 
 def build_bloom(keys: DataFrame, col: str, n_bits: int = 1 << 23,
@@ -2416,12 +2288,9 @@ def build_bloom(keys: DataFrame, col: str, n_bits: int = 1 << 23,
     def fold(batches):
         bits = np.zeros(words, dtype=np.uint64)
         for pdf in batches:
-            h1 = pdf["h1"].to_numpy(dtype=np.uint64)
-            h2 = pdf["h2"].to_numpy(dtype=np.uint64)
-            for i in range(k_hashes):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
-                np.bitwise_or.at(bits, pos >> np.uint64(6),
-                                 np.uint64(1) << (pos & np.uint64(63)))
+            _bloom_add(bits, pdf["h1"].to_numpy(dtype=np.uint64),
+                       pdf["h2"].to_numpy(dtype=np.uint64),
+                       n_bits, k_hashes)
         yield pd.DataFrame({"bits": [bits.tobytes()]})
 
     parts = hashed.mapInPandas(fold, "bits binary").collect()
@@ -2467,28 +2336,16 @@ def exact_dedup_incremental_bloom(new_docs: DataFrame, corpus: DataFrame,
     # The filter is SERVE-PATH STATE, not per-batch work: production
     # maintains it incrementally across ingests (the ann_store
     # build-once/serve-many contract), so repeated batches against an
-    # unchanged corpus must not pay the corpus scan again. Memo key =
-    # (analyzed-plan semanticHash, input-file fingerprint, sizing) —
-    # the fingerprint (full-list count + total size + max mtime_ns +
-    # per-file detail) keys out in-place corpus rewrites the plan hash
-    # cannot see. A rewrite that preserves every one of those
+    # unchanged corpus must not pay the corpus scan again. The input
+    # fingerprint in the key (full-list count + total size + max
+    # mtime_ns + per-file detail) keys out in-place corpus rewrites the
+    # plan hash cannot see. A rewrite that preserves every one of those
     # observables would still alias, so ``clear_guard_memo()`` is the
     # explicit invalidation hook for corpus-rewrite session boundaries.
-    try:
-        plan_key = known._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - py4j surface drift
-        plan_key = None
-    memo_key = (plan_key, _input_fingerprint(known), n_bits, k_hashes)
-    with _BLOOM_MEMO_LOCK:
-        hit = (_BLOOM_MEMO.get(memo_key)
-               if plan_key is not None else None)
-    if hit is not None:
-        bloom, nb, kh = hit
-    else:
-        bloom, nb, kh = build_bloom(known, "fp", n_bits, k_hashes)
-        if plan_key is not None:
-            _fifo_put(_BLOOM_MEMO, _BLOOM_MEMO_LOCK, _BLOOM_MEMO_MAX,
-                      memo_key, (bloom, nb, kh))
+    key = input_key(known)
+    bloom, nb, kh = _BLOOM_FILTERS.get_or_build(
+        key and key + (n_bits, k_hashes),
+        lambda: build_bloom(known, "fp", n_bits, k_hashes))
     return _bloom_probe_keep(new_docs, known, bloom, nb, kh,
                              text_col, id_col)
 
@@ -2521,14 +2378,9 @@ def _bloom_probe_keep(new_docs: DataFrame, known: DataFrame,
         # then pure vectorized membership per batch
         words_arr = np.frombuffer(bc.value, dtype=np.uint64)
         for h1, h2 in batches:
-            a = h1.to_numpy(dtype=np.uint64)
-            b = h2.to_numpy(dtype=np.uint64)
-            hit = np.ones(len(a), dtype=bool)
-            for i in range(kh):
-                pos = (a + np.uint64(i) * b) % np.uint64(nb)
-                hit &= (words_arr[pos >> np.uint64(6)]
-                        >> (pos & np.uint64(63))) & np.uint64(1) != 0
-            yield pd.Series(hit)
+            yield pd.Series(_bloom_test(
+                words_arr, h1.to_numpy(dtype=np.uint64),
+                h2.to_numpy(dtype=np.uint64), nb, kh))
 
     # keep-first BEFORE the probe: the one batch shuffle we must pay
     # anyway now also dedups the probe/join inputs.

@@ -43,6 +43,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import SessionMemo, _input_fingerprint, unpersist_broadcast
 from ..sources.io import load_table
 from .ann_store import (
     _MARKER,
@@ -51,12 +52,7 @@ from .ann_store import (
     _write_marker,
     default_root,
 )
-from .dedup import (
-    _bloom_probe_keep,
-    _input_fingerprint,
-    build_bloom,
-    fingerprint,
-)
+from .dedup import _bloom_probe_keep, build_bloom, fingerprint
 
 # Sizing + the corpus slice MUST stay in lockstep with the registry
 # query (_q_incremental_dedup_bloom): the serve-path test pins
@@ -119,13 +115,12 @@ def ensure_bloom_store(spark: SparkSession, sf_dir: str,
     return path, True
 
 
-# Per-session broadcast cache: (store path, marker fingerprint) ->
+# Per-session broadcast memo: (store path, marker fingerprint) ->
 # (broadcast handle, n_bits, k_hashes). Re-broadcasting the ~1 MB
 # bitset per serve call costs ~0.15 s; the marker fingerprint in the
 # key means a rebuilt store gets a fresh broadcast automatically.
-# Bounded like _BLOOM_MEMO (8 entries ~= 8 MB of driver refs).
-_BC_CACHE: dict = {}
-_BC_CACHE_MAX = 8
+# 8 entries ~= 8 MB of driver refs.
+_BLOOM_BROADCASTS = SessionMemo(8, release=unpersist_broadcast)
 
 
 def _bloom_broadcast(spark: SparkSession, path: str):
@@ -133,25 +128,15 @@ def _bloom_broadcast(spark: SparkSession, path: str):
     meta = json.loads((p / _MARKER).read_text())
     # A null marker fingerprint means the build could not fingerprint
     # its inputs (never-fresh store, rebuilt every ensure): key on the
-    # marker file's mtime instead so a rebuild invalidates the cache.
+    # marker file's mtime instead so a rebuild invalidates the memo.
     fp = meta["fingerprint"]
     if fp is None:
         fp = f"mtime:{(p / _MARKER).stat().st_mtime_ns}"
-    key = (str(p), fp)
-    hit = _BC_CACHE.get(key)
-    if hit is None:
-        bc = spark.sparkContext.broadcast((p / _BLOOM_FILE).read_bytes())
-        if len(_BC_CACHE) >= _BC_CACHE_MAX:
-            # Release the evicted broadcast's executor-side blocks —
-            # dropping only the handle strands ~1 MB per eviction on
-            # every executor (advisor r9).
-            evicted = _BC_CACHE.pop(next(iter(_BC_CACHE)))
-            try:
-                evicted[0].unpersist()
-            except Exception:  # pragma: no cover - already destroyed
-                pass
-        hit = _BC_CACHE[key] = (bc, meta["n_bits"], meta["k_hashes"])
-    return hit
+    return _BLOOM_BROADCASTS.get_or_build(
+        (str(p), fp),
+        lambda: (spark.sparkContext.broadcast(
+            (p / _BLOOM_FILE).read_bytes()),
+            meta["n_bits"], meta["k_hashes"]))
 
 
 def serve_incremental_dedup(new_docs: DataFrame, spark: SparkSession,

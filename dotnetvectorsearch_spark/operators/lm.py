@@ -58,13 +58,6 @@ def bigram_array(toks: Column) -> Column:
     return F.when(n >= 2, pairs).otherwise(F.array().cast("array<string>"))
 
 
-def bigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus bigram occurrence counts `(bg, c_bg)` — the trained model.
-    Map-side combined aggregate; the exchange is vocabulary-sized."""
-    occ = docs.select(F.explode(bigram_array(tokens(text_col))).alias("bg"))
-    return occ.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg"))
-
-
 def bigram_logprob(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text",
                    round_digits: int = 6) -> DataFrame:

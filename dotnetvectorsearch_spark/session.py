@@ -45,9 +45,3 @@ def get_spark(app_name: str = "dotnetvectorsearch-spark",
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def configure_for_oracle_parity(spark: SparkSession) -> SparkSession:
-    """Settings that make results bit-comparable with the DuckDB oracle."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 
 from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
+from dotnetvectorsearch_spark.operators.dedup import _bloom_add, _bloom_test
 from dotnetvectorsearch_spark.pipeline.prepare import prepare_documents
 from dotnetvectorsearch_spark.schemas import RAW_CSV_SCHEMA
 
@@ -146,15 +147,12 @@ def stream_decontaminate(docs: DataFrame, eval_docs: DataFrame,
     """
     from ..operators.dedup import (
         DECONTAMINATE_BROADCAST_MAX_POSTINGS,
-        _decon_memo_key,
         _decontaminate_broadcast,
     )
     if broadcast_max_postings is None:
         broadcast_max_postings = DECONTAMINATE_BROADCAST_MAX_POSTINGS
-    memo_key = _decon_memo_key(eval_docs, shingle_n, text_col)
     return _decontaminate_broadcast(docs, eval_docs, "doc_id",
                                     text_col, shingle_n, min_overlap,
-                                    memo_key=memo_key,
                                     max_postings=broadcast_max_postings)
 
 
@@ -411,6 +409,45 @@ def stream_upsert_partitioned(stream: DataFrame, path: str,
             .start())
 
 
+def _stage_and_swap(path: str, batch_id: int, write) -> None:
+    """Replace the directory at ``path`` with the one ``write(stage)``
+    writes (``write`` may read ``path``), by directory renames: a
+    concurrent reader sees either the old or the new version, never a
+    partial write. A rename is atomic on a local / HDFS filesystem; on
+    an object store back the sink with a table format's commit.
+
+    Crash recovery comes first: a failure between ``rename(path, old)``
+    and ``rename(stage, path)`` leaves no directory at ``path``. If an
+    ``__old-*`` (pre-swap version) or ``__stage`` (fully-written next
+    version) survivor exists, restore the staged result if complete (it
+    already contains the old data merged in), else the newest old copy
+    — so accumulated history is never dropped."""
+    import glob
+    import os
+    import shutil
+
+    stage = f"{path}__stage"
+    if not os.path.isdir(path):
+        # A stage dir is only complete once written; its _SUCCESS
+        # marker distinguishes a finished write from a torn one.
+        if os.path.isfile(os.path.join(stage, "_SUCCESS")):
+            os.rename(stage, path)
+        else:
+            olds = sorted(glob.glob(f"{path}__old-*"),
+                          key=os.path.getmtime)
+            if olds:
+                os.rename(olds[-1], path)
+    shutil.rmtree(stage, ignore_errors=True)   # torn prior stage
+    write(stage)
+    old = f"{path}__old-{batch_id}"
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
+    for leftover in glob.glob(f"{path}__old-*"):
+        shutil.rmtree(leftover, ignore_errors=True)
+
+
 def stream_rollup_maintenance(stream: DataFrame, path: str,
                               keys: list[str], value_col: str,
                               checkpoint: str):
@@ -431,53 +468,21 @@ def stream_rollup_maintenance(stream: DataFrame, path: str,
     a batch-id high-water mark in the rollup directory for exactly-once,
     or accept at-least-once for monitoring-grade rollups.
     """
-    import glob
     import os
-    import shutil
 
     from dotnetvectorsearch_spark.operators.rollup import (
         merge_rollups, rollup_batch)
 
-    def recover() -> None:
-        """Crash recovery for the rename swap: a failure between
-        ``rename(path, old)`` and ``rename(stage, path)`` leaves no
-        directory at ``path``. On entry, if ``path`` is missing but an
-        ``__old-*`` (pre-swap rollup) or ``__stage`` (fully-written
-        merged rollup) survivor exists, restore the staged result if
-        present (it already contains the old data merged in), else the
-        newest old copy — so accumulated history is never dropped."""
-        if os.path.isdir(path):
-            return
-        stage = f"{path}__stage"
-        # A stage dir is only complete once written; parquet's _SUCCESS
-        # marker distinguishes a finished write from a torn one.
-        if os.path.isdir(stage) and os.path.isfile(
-                os.path.join(stage, "_SUCCESS")):
-            os.rename(stage, path)
-            return
-        olds = sorted(glob.glob(f"{path}__old-*"),
-                      key=lambda p: os.path.getmtime(p))
-        if olds:
-            os.rename(olds[-1], path)
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        recover()
-        agg = rollup_batch(batch_df, keys, value_col)
-        if os.path.isdir(path):
-            agg = merge_rollups(
-                spark.read.parquet(path)
-                .select(*keys, "n", "sum_v", "min_v", "max_v"), agg)
-        stage = f"{path}__stage"
-        shutil.rmtree(stage, ignore_errors=True)   # torn prior stage
-        agg.write.mode("overwrite").parquet(stage)
-        old = f"{path}__old-{batch_id}"
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(stage, path)
-        shutil.rmtree(old, ignore_errors=True)
-        for leftover in glob.glob(f"{path}__old-*"):
-            shutil.rmtree(leftover, ignore_errors=True)
+        def write(stage: str) -> None:
+            agg = rollup_batch(batch_df, keys, value_col)
+            if os.path.isdir(path):
+                agg = merge_rollups(
+                    batch_df.sparkSession.read.parquet(path)
+                    .select(*keys, "n", "sum_v", "min_v", "max_v"), agg)
+            agg.write.mode("overwrite").parquet(stage)
+
+        _stage_and_swap(path, batch_id, write)
 
     return (stream.writeStream.foreachBatch(process)
             .option("checkpointLocation", checkpoint)
@@ -549,24 +554,9 @@ def stream_heavy_hitters(stream: DataFrame, col: str, path: str,
     `mg_top(spark.read.parquet(path))`. Same atomic parquet-swap +
     crash recovery as `stream_rollup_maintenance`.
     """
-    import glob
     import os
-    import shutil
 
     from dotnetvectorsearch_spark.operators.sketches import mg_partials
-
-    def recover() -> None:
-        if os.path.isdir(path):
-            return
-        stage = f"{path}__stage"
-        if os.path.isdir(stage) and os.path.isfile(
-                os.path.join(stage, "_SUCCESS")):
-            os.rename(stage, path)
-            return
-        olds = sorted(glob.glob(f"{path}__old-*"),
-                      key=lambda p: os.path.getmtime(p))
-        if olds:
-            os.rename(olds[-1], path)
 
     def _merge_compress_py(rows) -> tuple[dict, int]:
         """Driver-side twin of sketches.mg_merge_compress over (key,
@@ -590,37 +580,33 @@ def stream_heavy_hitters(stream: DataFrame, col: str, path: str,
         return counters, slack_total
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        def write(stage: str) -> None:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
 
-        recover()
-        stage = f"{path}__stage"
-        rows = [(r.key, r.est, r.slack)
-                for r in mg_partials(batch_df, col, k).collect()]
-        if os.path.isdir(path):
-            stored = pq.read_table(path, columns=["key", "est", "slack"])
-            rows.extend(zip(stored.column("key").to_pylist(),
-                            stored.column("est").to_pylist(),
-                            stored.column("slack").to_pylist()))
-        counters, slack_total = _merge_compress_py(rows)
-        table = pa.table({
-            "key": pa.array(list(counters) + [None], type=pa.string()),
-            "est": pa.array(list(counters.values()) + [0],
-                            type=pa.int64()),
-            "slack": pa.array([0] * len(counters) + [slack_total],
-                              type=pa.int64())})
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        pq.write_table(table, os.path.join(stage, "part-0.parquet"))
-        # _SUCCESS last: recover() treats its presence as write-complete
-        open(os.path.join(stage, "_SUCCESS"), "w").close()
-        old = f"{path}__old-{batch_id}"
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(stage, path)
-        shutil.rmtree(old, ignore_errors=True)
-        for leftover in glob.glob(f"{path}__old-*"):
-            shutil.rmtree(leftover, ignore_errors=True)
+            rows = [(r.key, r.est, r.slack)
+                    for r in mg_partials(batch_df, col, k).collect()]
+            if os.path.isdir(path):
+                stored = pq.read_table(path,
+                                       columns=["key", "est", "slack"])
+                rows.extend(zip(stored.column("key").to_pylist(),
+                                stored.column("est").to_pylist(),
+                                stored.column("slack").to_pylist()))
+            counters, slack_total = _merge_compress_py(rows)
+            table = pa.table({
+                "key": pa.array(list(counters) + [None],
+                                type=pa.string()),
+                "est": pa.array(list(counters.values()) + [0],
+                                type=pa.int64()),
+                "slack": pa.array([0] * len(counters) + [slack_total],
+                                  type=pa.int64())})
+            os.makedirs(stage)
+            pq.write_table(table, os.path.join(stage, "part-0.parquet"))
+            # _SUCCESS last: the swap's recovery treats its presence as
+            # write-complete
+            open(os.path.join(stage, "_SUCCESS"), "w").close()
+
+        _stage_and_swap(path, batch_id, write)
 
     return (stream.writeStream.foreachBatch(process)
             .option("checkpointLocation", checkpoint)
@@ -677,7 +663,7 @@ class _NdBloom:
         except (OSError, ValueError, KeyError):
             pass
 
-    def _positions(self, keys: list[str]):
+    def _hashes(self, keys: list[str]):
         import hashlib
 
         import numpy as np
@@ -699,24 +685,13 @@ class _NdBloom:
 
         if not keys or self.empty:
             return np.zeros(len(keys), dtype=bool)
-        h1, h2 = self._positions(keys)
-        hit = np.ones(len(keys), dtype=bool)
-        for i in range(self.kh):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(self.nb)
-            hit &= ((self.bits[pos >> np.uint64(6)]
-                     >> (pos & np.uint64(63))) & np.uint64(1)) != 0
-        return hit
+        return _bloom_test(self.bits, *self._hashes(keys),
+                           self.nb, self.kh)
 
     def add(self, keys: list[str]) -> None:
-        import numpy as np
-
         if not keys:
             return
-        h1, h2 = self._positions(keys)
-        for i in range(self.kh):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(self.nb)
-            np.bitwise_or.at(self.bits, pos >> np.uint64(6),
-                             np.uint64(1) << (pos & np.uint64(63)))
+        _bloom_add(self.bits, *self._hashes(keys), self.nb, self.kh)
         self.empty = False
 
     def persist(self) -> None:

@@ -6,6 +6,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark import caching
+from dotnetvectorsearch_spark.caching import SessionMemo, input_key
 from dotnetvectorsearch_spark.operators import dedup as D
 from dotnetvectorsearch_spark.sources.io import load_table
 from dotnetvectorsearch_spark.streaming.ingest import stream_neardup_dedup
@@ -912,7 +914,7 @@ def test_incremental_dedup_bloom_memoizes_per_corpus(spark, sf_dir,
     # batches against an UNCHANGED corpus must not pay the corpus scan
     # again, while a different corpus plan must rebuild.
     from dotnetvectorsearch_spark.operators import dedup as dd
-    dd._BLOOM_MEMO.clear()
+    dd._BLOOM_FILTERS.clear()
     calls = []
     orig = dd.build_bloom
     monkeypatch.setattr(dd, "build_bloom",
@@ -926,7 +928,7 @@ def test_incremental_dedup_bloom_memoizes_per_corpus(spark, sf_dir,
     other = docs.filter("doc_id % 3 = 1")          # different corpus plan
     dd.exact_dedup_incremental_bloom(batch, other).count()
     assert len(calls) == 2                         # rebuilt, not reused
-    # clear_guard_memo is the public invalidation hook for BOTH memos
+    # clear_guard_memo is the public invalidation hook for every memo
     # (advisor r8: an in-place rewrite preserving count+size+mtime_ns
     # would alias the fingerprint — the hook is the escape hatch)
     assert dd.clear_guard_memo() >= 2              # bloom entries counted
@@ -1063,20 +1065,20 @@ def test_input_fingerprint_tracks_size_and_mtime(spark, tmp_path):
     spark.range(10).withColumnRenamed("id", "doc_id") \
         .coalesce(1).write.parquet(p)
     df = spark.read.parquet(p)
-    fp1 = D._input_fingerprint(df)
+    fp1 = caching._input_fingerprint(df)
     assert fp1 is not None
     n_files, path_digest, total_size, max_mtime_ns, sig = fp1
     assert len(path_digest) == 64           # sha256 over full path list
     assert n_files >= 1 and total_size > 0 and max_mtime_ns > 0
     # stats resolved: no (path, -1, -1) degradations
     assert all(sz >= 0 and mt >= 0 for _, sz, mt in sig), fp1
-    fp2 = D._input_fingerprint(spark.read.parquet(p))
+    fp2 = caching._input_fingerprint(spark.read.parquet(p))
     assert fp1 == fp2                       # stable across reads
     # nanosecond mtimes: a SAME-SECOND in-place rewrite must still flip
     # the key (advisor r8 — int-seconds truncation aliased it)
     spark.range(200).withColumnRenamed("id", "doc_id") \
         .coalesce(1).write.mode("overwrite").parquet(p)
-    fp3 = D._input_fingerprint(spark.read.parquet(p))
+    fp3 = caching._input_fingerprint(spark.read.parquet(p))
     assert fp3 != fp1                       # in-place rewrite detected
 
 
@@ -1091,12 +1093,12 @@ def test_input_fingerprint_stat_calls_bounded(spark, tmp_path,
     spark.range(240).withColumnRenamed("id", "doc_id") \
         .repartition(12).write.parquet(p)
     df = spark.read.parquet(p)
-    monkeypatch.setattr(D, "_FP_STAT_CAP", 8)
+    monkeypatch.setattr(caching, "_FP_STAT_CAP", 8)
     real_stat, calls = _os.stat, []
     monkeypatch.setattr(_os, "stat",
                         lambda *a, **k: (calls.append(a),
                                          real_stat(*a, **k))[1])
-    fp1 = D._input_fingerprint(df)
+    fp1 = caching._input_fingerprint(df)
     # 12 files > cap of 8: sampled stats only (first-64 union means
     # <= n here, but must be <= the full count with cap respected via
     # the sample construction — the detail prefix keeps idx<64, which
@@ -1104,7 +1106,7 @@ def test_input_fingerprint_stat_calls_bounded(spark, tmp_path,
     # with a cap that actually bites the sampling set)
     assert fp1 is not None and len(calls) <= 12
     calls.clear()
-    monkeypatch.setattr(D, "_FP_STAT_CAP", 4)
+    monkeypatch.setattr(caching, "_FP_STAT_CAP", 4)
     # force the sample path with first-64 detail disabled from biting:
     # the union set is {evenly spaced 4} | {0..63} -> all 12 again;
     # the REAL bound kicks in when n >> 64. Simulate by monkeypatching
@@ -1114,13 +1116,13 @@ def test_input_fingerprint_stat_calls_bounded(spark, tmp_path,
     monkeypatch.setattr(
         type(df), "inputFiles", lambda self: fake, raising=False)
     calls.clear()
-    fp_big = D._input_fingerprint(df)
+    fp_big = caching._input_fingerprint(df)
     assert fp_big is not None
     assert len(calls) <= 4 + 64             # sample + first-64 detail
     # digest still covers the FULL list: dropping one path flips the key
     monkeypatch.setattr(
         type(df), "inputFiles", lambda self: fake[:-1], raising=False)
-    assert D._input_fingerprint(df) != fp_big
+    assert caching._input_fingerprint(df) != fp_big
 
 
 def test_store_unfingerprintable_input_is_never_fresh(spark, sf_dir,
@@ -1150,11 +1152,64 @@ def test_bc_cache_eviction_unpersists_broadcast(spark, sf_dir,
             FakeBC.unpersisted = True
 
     path, _ = ds.ensure_bloom_store(spark, sf_dir, root=str(tmp_path))
-    monkeypatch.setattr(ds, "_BC_CACHE", {("old", "key"): (FakeBC(), 1, 1)})
-    monkeypatch.setattr(ds, "_BC_CACHE_MAX", 1)
+    memo = SessionMemo(1, release=ds._BLOOM_BROADCASTS.release)
+    memo.get_or_build(("old", "key"), lambda: (FakeBC(), 1, 1))
+    monkeypatch.setattr(ds, "_BLOOM_BROADCASTS", memo)
     ds._bloom_broadcast(spark, path)
     assert FakeBC.unpersisted
-    assert ("old", "key") not in ds._BC_CACHE
+    assert ("old", "key") not in ds._BLOOM_BROADCASTS
+
+
+def test_clear_guard_memo_empties_every_memo():
+    """clear_guard_memo is the one invalidation hook: it empties all
+    four input-keyed memos — including the bloom-store broadcasts —
+    unpersists the broadcasts it drops and returns the total count."""
+    from dotnetvectorsearch_spark.operators import dedup_store as ds
+
+    class FakeBC:
+        unpersisted = 0
+        def unpersist(self):
+            FakeBC.unpersisted += 1
+
+    D.clear_guard_memo()
+    memos = (D._GUARD_MEMO, D._DECON_INDEX, D._BLOOM_FILTERS,
+             ds._BLOOM_BROADCASTS)
+    for m in memos:
+        m.get_or_build(("fake",), lambda: (FakeBC(), 1, 1))
+    assert D.clear_guard_memo() == 4
+    assert all(len(m) == 0 for m in memos)
+    assert FakeBC.unpersisted == 2        # the two broadcast memos
+
+
+def test_bloom_bits_match_python_reference():
+    """Pins the Bloom bit layout shared by the JVM-hashed filters and
+    the streaming near-dup store: Kirsch-Mitzenmacher positions
+    ((h1 + i*h2) mod 2^64) mod n_bits, bit pos%64 of uint64 word
+    pos//64. A changed layout would misread every persisted bloom.bin."""
+    import numpy as np
+
+    h1 = [0, 1, 12345, 2**63 + 7, 2**64 - 1]
+    h2 = [0, 3, 2**64 - 5, 2**62 + 11, 2**64 - 1]
+    for n_bits, k in ((1000, 7), (1 << 12, 3)):
+        ref = [0] * ((n_bits + 63) // 64)
+        for a, b in zip(h1, h2):
+            for i in range(k):
+                pos = ((a + i * b) % 2**64) % n_bits
+                ref[pos // 64] |= 1 << (pos % 64)
+        bits = np.zeros(len(ref), dtype=np.uint64)
+        D._bloom_add(bits, np.array(h1, dtype=np.uint64),
+                     np.array(h2, dtype=np.uint64), n_bits, k)
+        assert [int(w) for w in bits] == ref
+        probe1 = [1, 2, 99, 2**64 - 2]
+        probe2 = [3, 5, 2**63, 1]
+        want = [all(ref[p // 64] >> (p % 64) & 1
+                    for p in (((a + i * b) % 2**64) % n_bits
+                              for i in range(k)))
+                for a, b in zip(h1 + probe1, h2 + probe2)]
+        got = D._bloom_test(bits, np.array(h1 + probe1, dtype=np.uint64),
+                            np.array(h2 + probe2, dtype=np.uint64),
+                            n_bits, k)
+        assert got.tolist() == want and all(want[:len(h1)])
 
 
 def test_lsh_neardup_strategies_agree(spark, sf_dir, monkeypatch):
@@ -1212,8 +1267,9 @@ def test_decon_memo_key_and_index_are_per_text_col(spark):
     phrase = "alpha beta gamma delta epsilon"
     test = spark.createDataFrame(
         [Row(doc_id=9, text=phrase, alt="one two three four five")])
-    k_text = D._decon_memo_key(test, 3, "text")
-    k_alt = D._decon_memo_key(test, 3, "alt")
+    key = input_key(test)
+    k_text = key and key + (3, "text")
+    k_alt = key and key + (3, "alt")
     if k_text is not None or k_alt is not None:
         assert k_text != k_alt
     train = spark.createDataFrame([Row(doc_id=1, text=phrase, alt=phrase)])
@@ -1225,6 +1281,8 @@ def test_decon_memo_key_and_index_are_per_text_col(spark):
     kept = D.decontaminate(train, test, text_col="alt",
                            min_overlap=0.5).count()
     assert kept == 1
+    if key is not None:                     # one index per text_col
+        assert k_text in D._DECON_INDEX and k_alt in D._DECON_INDEX
 
 
 def test_stream_decontaminate_enforces_postings_budget(spark):

@@ -541,16 +541,21 @@ def test_stream_rollup_maintenance_matches_from_scratch(spark, tmp_path):
     assert got == sorted(map(tuple, full.collect()))
 
 
-def test_stream_rollup_recovers_history_after_torn_swap(spark, tmp_path):
+@pytest.mark.parametrize("sink", ["rollup", "heavy_hitters"])
+def test_stream_rollup_recovers_history_after_torn_swap(spark, tmp_path,
+                                                        sink):
     """A crash between rename(path, old) and rename(stage, path) leaves
     no directory at `path`; the next micro-batch must restore the
-    survivor instead of silently rebuilding from that batch alone."""
+    survivor instead of silently rebuilding from that batch alone.
+    Both swap-published sinks share the recovery."""
     import os
 
     from dotnetvectorsearch_spark.operators.rollup import (
         rollup_batch, rollup_read)
+    from dotnetvectorsearch_spark.operators.sketches import (
+        mg_partials, mg_top)
     from dotnetvectorsearch_spark.streaming.ingest import (
-        stream_rollup_maintenance)
+        stream_heavy_hitters, stream_rollup_maintenance)
     src = tmp_path / "in"
     src.mkdir()
     out = str(tmp_path / "rollup")
@@ -558,23 +563,41 @@ def test_stream_rollup_recovers_history_after_torn_swap(spark, tmp_path):
     schema = "id long, k string, v double"
     b1 = [(1, "A", 10.5), (2, "B", 1.0), (3, "A", 2.25)]
     b2 = [(4, "B", 7.0), (5, "C", 3.0)]
+    n_rows = 3 if sink == "rollup" else 4
+    if sink == "rollup":
+        def summarize(df):
+            return rollup_batch(df, ["k"], "v")
+
+        def report(df):
+            return rollup_read(df)
+
+        def start(stream):
+            return stream_rollup_maintenance(stream, out, ["k"], "v",
+                                             ckpt)
+    else:
+        def summarize(df):
+            return mg_partials(df, "k", 8)
+
+        def report(df):
+            return mg_top(df)
+
+        def start(stream):
+            return stream_heavy_hitters(stream, "k", out, ckpt, k=8)
     # accumulated history on disk, then the torn-swap crash state:
     # `path` renamed away, replacement never swapped in
-    rollup_batch(spark.createDataFrame(b1, schema),
-                 ["k"], "v").write.parquet(out)
+    summarize(spark.createDataFrame(b1, schema)).write.parquet(out)
     os.rename(out, f"{out}__old-7")
     spark.createDataFrame(b2, schema).write.parquet(str(src / "b2"))
     stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-    q = stream_rollup_maintenance(stream, out, ["k"], "v", ckpt)
+    q = start(stream)
     try:
-        assert _wait(lambda: _count_parquet(spark, out) == 3)  # A, B, C
+        # A, B, C (+ the summary's slack row)
+        assert _wait(lambda: _count_parquet(spark, out) == n_rows)
         q.processAllAvailable()
     finally:
         q.stop()
-    full = rollup_read(rollup_batch(
-        spark.createDataFrame(b1 + b2, schema), ["k"], "v"))
-    got = sorted(map(tuple, rollup_read(
-        spark.read.parquet(out)).collect()))
+    full = report(summarize(spark.createDataFrame(b1 + b2, schema)))
+    got = sorted(map(tuple, report(spark.read.parquet(out)).collect()))
     assert got == sorted(map(tuple, full.collect()))  # history kept
     assert not os.path.isdir(f"{out}__old-7")         # survivor consumed
 
