@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from dotnetvectorsearch_spark.caching import SessionMemo, input_key
 from dotnetvectorsearch_spark.localdf import local_df
 from dotnetvectorsearch_spark.functions import text as T
 from dotnetvectorsearch_spark.functions import vector as V
@@ -554,36 +555,17 @@ def _seeded_lsh_planes(num_planes: int = _LSH_ORACLE_NUM_PLANES,
     return [[float(c) for c in row] for row in planes]
 
 
-_NROWS_MEMO: dict = {}
+_NROWS_MEMO = SessionMemo(256)
 
 
-def _table_rows_memo(df, path: str) -> int:
-    """Row count memoized on the dataset's file fingerprint (path,
-    size, mtime per member file — the `caching._input_fingerprint`
-    doctrine: a rewritten-in-place corpus must never reuse a stale
-    count). Saves one count JOB per query build for sizing decisions
-    like `_lsh_adaptive_bits`; the count itself is parquet-stats-cheap
-    but the job launch is ~0.2-0.5s inside a timed bench region."""
-    import os
-    sig = [path]
-    try:
-        if os.path.isdir(path):
-            for f in sorted(os.listdir(path))[:64]:
-                st = os.stat(os.path.join(path, f))
-                sig.append((f, st.st_size, int(st.st_mtime)))
-        else:
-            st = os.stat(path)
-            sig.append((st.st_size, int(st.st_mtime)))
-    except OSError:
-        return df.count()
-    key = tuple(sig)
-    n = _NROWS_MEMO.get(key)
-    if n is None:
-        n = df.count()
-        if len(_NROWS_MEMO) > 256:
-            _NROWS_MEMO.clear()
-        _NROWS_MEMO[key] = n
-    return n
+def _table_rows_memo(df) -> int:
+    """Row count memoized on ``caching.input_key(df)`` (the plan plus
+    every input file's size and mtime_ns: a rewritten-in-place corpus
+    must never reuse a stale count). Saves one count JOB per query
+    build for sizing decisions like `_lsh_adaptive_bits`; the count
+    itself is parquet-stats-cheap but the job launch is ~0.2-0.5s
+    inside a timed bench region."""
+    return _NROWS_MEMO.get_or_build(input_key(df), df.count)
 
 
 def _lsh_adaptive_bits(n_rows: int, target_occupancy: int = 8,
@@ -736,7 +718,7 @@ def _semdedup_lsh_impl(spark, sf_dir, threshold, probe_hamming=2,
     # (OR-amplification). At the driver tiers n <= 5000 resolves to
     # bits=8 / 1 table, bit-identical to the fixed single-table
     # operator, so the 8-plane oracle below still matches exactly.
-    n_rows = _table_rows_memo(emb, f"{sf_dir}/embeddings.parquet")
+    n_rows = _table_rows_memo(emb)
     bits = _lsh_adaptive_bits(n_rows)
     n_tables = _lsh_tables_for_recall(bits, probe_hamming=probe_hamming,
                                       target_recall=target_recall)
@@ -2358,20 +2340,32 @@ def _q_search_topk_quantized(spark, sf_dir):
     return S.top_k_similar(deq, q, top_k=10, id_col="vec_id", round_digits=6)
 
 
-_PQ_CACHE: dict[str, object] = {}
+# Fitted PQ / IVF-PQ indexes keyed on caching.input_key(embeddings) plus
+# the fit parameters: a corpus rewritten in place refits instead of
+# serving its old codebooks.
+_ANN_FITS = SessionMemo(8)
+
+
+def _fitted(spark, sf_dir, kind: str, cls):
+    """``cls`` fitted on ``sf_dir``'s embeddings with the persisted
+    store's ``ann_store.INDEX_PARAMS[kind]``, memoized in _ANN_FITS."""
+    from dotnetvectorsearch_spark.operators.ann_store import INDEX_PARAMS
+    params = dict(INDEX_PARAMS[kind])
+    sample = params.pop("max_sample")
+    emb = load_table(spark, sf_dir, "embeddings")
+    key = input_key(emb)
+    return _ANN_FITS.get_or_build(
+        key and key + (kind, tuple(sorted(INDEX_PARAMS[kind].items()))),
+        lambda: cls(**params).fit(emb, max_sample=sample))
 
 
 def _fitted_pq(spark, sf_dir):
     """Codebook training is a build-time cost (like writing the IVF
-    partitioned index); memoize per sf_dir so repeated queries measure
-    the search path, not the build. Sampled fit: codebook quality needs
-    ~1k points per code, not the corpus."""
+    partitioned index); memoize per corpus state so repeated queries
+    measure the search path, not the build. Sampled fit: codebook
+    quality needs ~1k points per code, not the corpus."""
     from dotnetvectorsearch_spark.operators.ann import PQIndex
-    if sf_dir not in _PQ_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _PQ_CACHE[sf_dir] = PQIndex(m=16, n_codes=64).fit(
-            emb, max_sample=20_000)
-    return _PQ_CACHE[sf_dir]
+    return _fitted(spark, sf_dir, "pq", PQIndex)
 
 
 def _q_ann_pq_topk(spark, sf_dir):
@@ -2399,20 +2393,12 @@ def _q_ann_pq_recall(spark, sf_dir):
     return local_df(spark, [(recall,)], "recall_at_10 double")
 
 
-_IVFPQ_CACHE: dict = {}
-
-
 def _fitted_ivfpq(spark, sf_dir):
     """Memoized build (same rationale as _fitted_pq): cells + codebooks
     are index-build-time costs; queries measure the probe+ADC+rescore
     path."""
     from dotnetvectorsearch_spark.operators.ann import IVFPQIndex
-    if sf_dir not in _IVFPQ_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _IVFPQ_CACHE[sf_dir] = IVFPQIndex(
-            n_cells=16, nprobe=4, m=16, n_codes=64).fit(
-            emb, max_sample=20_000)
-    return _IVFPQ_CACHE[sf_dir]
+    return _fitted(spark, sf_dir, "ivfpq", IVFPQIndex)
 
 
 def _q_ann_ivfpq_topk(spark, sf_dir):
@@ -2717,10 +2703,10 @@ def _q_incremental_dedup_bloom(spark, sf_dir):
     """Bloom-prefiltered incremental dedup, SERVED from the persisted
     fingerprint+bloom store (dedup_store — the ann_store
     build-once/serve-many contract): IDENTICAL result to
-    incremental_dedup (same oracle) and to the build-in-query
-    exact_dedup_incremental_bloom (pinned in test_dedup), but the
-    corpus is never scanned per call — the bloom comes off disk and
-    the anti-join's corpus side is the narrow persisted fp table.
+    incremental_dedup (same oracle; serve == exact_dedup_incremental
+    pinned in test_dedup), but the corpus is never scanned per call —
+    the bloom comes off disk and the anti-join's corpus side is the
+    narrow persisted fp table.
     First call per (sf_dir, corpus state) builds the store; bench.py
     times that build in its separately-reported build phase."""
     from dotnetvectorsearch_spark.operators.dedup_store import (

@@ -47,10 +47,10 @@ from .ann import IVFIndex, IVFPQIndex, PQIndex, _unit
 from .search import round6_half_up
 
 # Hyperparameters MUST stay in lockstep with the fit-in-query registry
-# entries (_q_ann_ivf_topk / _fitted_pq / _fitted_ivfpq in
-# __spark_entry__.py): the serve-path tests pin serve == fit-in-query
-# results, which holds only because the seeded fit is deterministic for
-# identical (params, sample).
+# entry _q_ann_ivf_topk in __spark_entry__.py (its _fitted_pq /
+# _fitted_ivfpq read this dict): the serve-path tests pin serve ==
+# fit-in-query results, which holds only because the seeded fit is
+# deterministic for identical (params, sample).
 INDEX_PARAMS: dict[str, dict] = {
     "ivf": {"n_cells": 16, "nprobe": 4, "max_sample": 100_000},
     "pq": {"m": 16, "n_codes": 64, "max_sample": 20_000},

@@ -77,8 +77,7 @@ MAX_QUERY_PANEL = 10_000
 def retrieval_metrics(corpus: DataFrame, queries: DataFrame,
                       k: int = 10, id_col: str = "vec_id",
                       vec_col: str = "embedding",
-                      label_col: str = "label",
-                      max_panel: int = MAX_QUERY_PANEL) -> DataFrame:
+                      label_col: str = "label") -> DataFrame:
     """Per-query retrieval metrics over a label-relevance protocol.
 
     ``queries`` must carry (qid, qvec, qlabel) and be drawn FROM
@@ -89,21 +88,18 @@ def retrieval_metrics(corpus: DataFrame, queries: DataFrame,
 
     The panel ships in the scoring UDF's closure so every Arrow batch
     scores ALL queries in one BLAS matmul (topk_per_query_arrow) —
-    ~30x over the interpreted HOF cosine at Q=80. ``max_panel`` bounds
-    the CLOSURE, not the operator: a panel larger than ``max_panel``
-    is iterated in <=max_panel chunks whose top-k results are unioned
+    ~30x over the interpreted HOF cosine at Q=80. ``MAX_QUERY_PANEL``
+    bounds the CLOSURE, not the operator: a larger panel is iterated
+    in <=MAX_QUERY_PANEL chunks whose top-k results are unioned
     (judge r9 — previously this refused past the bound, dead-ending
-    corpus-scale qrels). Driver memory stays O(max_panel * dim) per
-    chunk (``toLocalIterator`` streams the panel partition-at-a-time);
+    corpus-scale qrels). Driver memory stays O(MAX_QUERY_PANEL * dim)
+    per chunk (``toLocalIterator`` streams the panel partition-at-a-time);
     each chunk re-scans the corpus, so a C-chunk panel costs C scoring
     scans — subsample (sampling.hash_sample) when C scans exceed the
     eval budget. Per-query metrics are chunking-invariant: scoring,
     ranking, and the label joins are all keyed per qid.
     """
     from .search import topk_per_query_arrow
-
-    if max_panel < 1:
-        raise ValueError(f"max_panel must be >= 1, got {max_panel}")
 
     def _score(chunk):
         return topk_per_query_arrow(
@@ -113,7 +109,7 @@ def retrieval_metrics(corpus: DataFrame, queries: DataFrame,
     topk, chunk = None, []
     for r in queries.select("qid", "qvec").toLocalIterator():
         chunk.append((r.qid, list(r.qvec)))
-        if len(chunk) == max_panel:
+        if len(chunk) == MAX_QUERY_PANEL:
             t = _score(chunk)
             topk = t if topk is None else topk.unionByName(t)
             chunk = []

@@ -368,9 +368,7 @@ KNN_GRAPH_MAX_BROADCAST_ROWS = 2_000_000
 
 def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
               vec_col: str = "embedding",
-              round_digits: int | None = None,
-              max_broadcast_rows: int = KNN_GRAPH_MAX_BROADCAST_ROWS
-              ) -> DataFrame:
+              round_digits: int | None = None) -> DataFrame:
     """Exact k-nearest-neighbor graph: for EVERY row, its k most-cosine-similar
     other rows. Output: (id, neighbor_id, similarity), k rows per id.
 
@@ -384,8 +382,8 @@ def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
     Scale bounds: broadcast-side is O(N*d) floats — exact kNN this way is
     for corpora that fit an executor (~10^7 x 384-d = ~15 GB is the edge).
     The bound is ENFORCED, not advisory: the corpus is counted before any
-    collect, and past ``max_broadcast_rows`` this raises instead of
-    silently OOMing the driver at scale. Past the bound, the blocked
+    collect, and past ``KNN_GRAPH_MAX_BROADCAST_ROWS`` this raises
+    instead of silently OOMing the driver at scale. Past the bound, the blocked
     approximate paths are the tool: ``dedup.embedding_neardup_pairs``
     (LSH-blocked) or ``ann.IVFIndex`` cell-join — same output contract,
     candidate-bounded.
@@ -394,11 +392,12 @@ def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
 
     validate_top_k(k)
     n_rows = docs.count()
-    if n_rows > max_broadcast_rows:
+    if n_rows > KNN_GRAPH_MAX_BROADCAST_ROWS:
         raise ValueError(
             f"knn_graph is an exact broadcast kNN bounded at "
-            f"{max_broadcast_rows} rows (got {n_rows}); past executor-fit "
-            f"use dedup.embedding_neardup_pairs (LSH-blocked) or "
+            f"KNN_GRAPH_MAX_BROADCAST_ROWS = "
+            f"{KNN_GRAPH_MAX_BROADCAST_ROWS} rows (got {n_rows}); past "
+            f"executor-fit use dedup.embedding_neardup_pairs (LSH-blocked) or "
             f"ann.IVFIndex (cell-partitioned) instead")
     rows = docs.select(id_col, vec_col).collect()
     all_ids = np.asarray([r[0] for r in rows], dtype=np.int64)

@@ -112,9 +112,7 @@ def stream_clean(docs: DataFrame, quality_floor: float = 0.4,
 
 def stream_decontaminate(docs: DataFrame, eval_docs: DataFrame,
                          text_col: str = "text", shingle_n: int = 3,
-                         min_overlap: float = 0.5,
-                         broadcast_max_postings: int | None = None
-                         ) -> DataFrame:
+                         min_overlap: float = 0.5) -> DataFrame:
     """Streaming eval-set decontamination gate: drop every streamed doc
     whose shingles cover >= ``min_overlap`` of any eval doc — the
     ingest-time twin of the batch ``decontaminate`` enforcement (same
@@ -132,28 +130,18 @@ def stream_decontaminate(docs: DataFrame, eval_docs: DataFrame,
     (restart the query), which is the correct semantics for a
     versioned benchmark suite.
 
-    The eval side is subject to the same postings/byte budget as the
-    batch kernel (``broadcast_max_postings``; None = the module
-    default): past it this raises :class:`DeconBudgetExceeded` at
-    stream DEFINITION time with reroute advice, instead of silently
-    collecting an unbounded index onto the driver (advisor r10). There
-    is no distributed fallback on a stream — an eval set past the
-    budget is not a broadcastable gate; decontaminate it in the batch
-    compaction pass instead. The budget binds even when a prior batch
-    call already memoized this eval set's index under a looser budget:
-    a memo hit re-checks the caller's postings budget against the
-    live index (advisor r11), so a stream never silently rides an
-    index it would have refused to build.
+    The eval side is subject to the batch kernel's one postings/byte
+    budget (``dedup.DECONTAMINATE_BROADCAST_MAX_POSTINGS`` /
+    ``DECONTAMINATE_BROADCAST_MAX_BYTES``): past it this raises
+    :class:`DeconBudgetExceeded` at stream DEFINITION time with
+    reroute advice, instead of silently collecting an unbounded index
+    onto the driver. There is no distributed fallback on
+    a stream — an eval set past the budget is not a broadcastable
+    gate; decontaminate it in the batch compaction pass instead.
     """
-    from ..operators.dedup import (
-        DECONTAMINATE_BROADCAST_MAX_POSTINGS,
-        _decontaminate_broadcast,
-    )
-    if broadcast_max_postings is None:
-        broadcast_max_postings = DECONTAMINATE_BROADCAST_MAX_POSTINGS
+    from ..operators.dedup import _decontaminate_broadcast
     return _decontaminate_broadcast(docs, eval_docs, "doc_id",
-                                    text_col, shingle_n, min_overlap,
-                                    max_postings=broadcast_max_postings)
+                                    text_col, shingle_n, min_overlap)
 
 
 def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -640,9 +628,15 @@ class _NdBloom:
     read-modify-write — two concurrent queries on one store_path would
     clobber each other's bits (a missed key admits near-dups past the
     gate). Run one neardup stream per store; shard store_path to scale
-    writers."""
+    writers.
 
-    def __init__(self, bloom_dir: str):
+    A persisted filter that cannot be read back (torn ``meta.json``,
+    missing ``bloom.bin``) is never replaced by an empty one: the keys
+    are re-added from ``key_stores`` — ``(parquet dir, key columns,
+    key function of a row dict)`` over the stores the filter
+    summarizes — so every stored key still probes as a hit."""
+
+    def __init__(self, bloom_dir: str, key_stores=()):
         import json
         import os
 
@@ -657,11 +651,26 @@ class _NdBloom:
                 meta = json.load(fh)
             with open(os.path.join(bloom_dir, "bloom.bin"), "rb") as fh:
                 raw = fh.read()
-            self.nb, self.kh = meta["n_bits"], meta["k_hashes"]
-            self.bits = np.frombuffer(raw, dtype=np.uint64).copy()
+            nb, kh = meta["n_bits"], meta["k_hashes"]
+            bits = np.frombuffer(raw, dtype=np.uint64).copy()
+            if len(bits) != (nb + 63) // 64:
+                raise ValueError("bloom.bin does not match meta.json")
+            self.nb, self.kh, self.bits = nb, kh, bits
             self.empty = not self.bits.any()
-        except (OSError, ValueError, KeyError):
-            pass
+        except (OSError, ValueError, KeyError, TypeError):
+            self._rebuild(key_stores)
+
+    def _rebuild(self, key_stores) -> None:
+        """Re-add every key of the existing stores (a full read of
+        their key columns — the restart path only)."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        for path, cols, key in key_stores:
+            if os.path.isdir(path):
+                rows = pq.read_table(path, columns=cols).to_pylist()
+                self.add([key(r) for r in rows])
 
     def _hashes(self, keys: list[str]):
         import hashlib
@@ -702,12 +711,14 @@ class _NdBloom:
         import os
 
         os.makedirs(self.dir, exist_ok=True)
-        tmp = os.path.join(self.dir, ".bloom.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(self.bits.tobytes())
-        os.replace(tmp, os.path.join(self.dir, "bloom.bin"))
-        with open(os.path.join(self.dir, "meta.json"), "w") as fh:
-            json.dump({"n_bits": self.nb, "k_hashes": self.kh}, fh)
+        for name, data in (
+                ("bloom.bin", self.bits.tobytes()),
+                ("meta.json", json.dumps({"n_bits": self.nb,
+                                          "k_hashes": self.kh}).encode())):
+            tmp = os.path.join(self.dir, f".{name}.tmp")
+            with open(tmp, "wb") as fh:
+                fh.write(data)
+            os.replace(tmp, os.path.join(self.dir, name))
 
 
 def stream_neardup_dedup(stream: DataFrame, out_path: str,
@@ -772,7 +783,10 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     bands_store = f"{store_path}__bands"
     short_store = f"{store_path}__short"
     rows_per_band = _per_band(num_hashes, bands, "num_hashes")
-    bloom = _NdBloom(f"{store_path}__bloom")
+    bloom = _NdBloom(f"{store_path}__bloom", (
+        (bands_store, ["band", "bucket"],
+         lambda r: f"{r['band']}|{r['bucket']}"),
+        (short_store, ["__h"], lambda r: f"sh|{r['__h']}")))
     hcols = [f"h{k}" for k in range(num_hashes)]
 
     def _bucket(sig: tuple, b: int) -> str:

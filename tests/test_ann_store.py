@@ -121,6 +121,22 @@ def test_registry_serve_queries(spark, sf_dir, store_root, monkeypatch):
         assert got == expect, (serve, got, expect)
 
 
+def test_fitted_pq_refits_after_in_place_rewrite(spark, sf_dir,
+                                                 tmp_path):
+    """The registry's fitted-codebook memo is keyed on the embeddings'
+    input state, not the sf_dir string: a corpus rewritten in place
+    refits instead of serving its old codebooks."""
+    import __spark_entry__ as entry
+    d = str(tmp_path / "sf")
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb.filter("vec_id % 2 = 0").write.parquet(f"{d}/embeddings.parquet")
+    first = entry._fitted_pq(spark, d)
+    assert entry._fitted_pq(spark, d) is first          # memo hit
+    emb.filter("vec_id % 2 = 1").write.mode("overwrite").parquet(
+        f"{d}/embeddings.parquet")
+    assert entry._fitted_pq(spark, d) is not first      # refit
+
+
 @pytest.fixture(scope="module")
 def ivf_and_panel(spark, sf_dir, store_root):
     path, _ = ann_store.ensure_index(spark, sf_dir, "ivf",

@@ -98,23 +98,21 @@ def test_embedding_neardup_blocked(spark, sf_dir):
     assert all(r.id_a < r.id_b for r in rows)
 
 
-def test_lsh_bucket_cap_drops_megabuckets(spark):
-    # 30 identical docs -> one bucket of 30; cap 10 must drop all pairs
+def test_lsh_bucket_cap_drops_megabuckets(spark, monkeypatch):
+    # 30 identical docs -> one bucket of 30; a cap of 10 must drop all
+    # pairs, for the MinHash bands and the SimHash chunks alike. Both
+    # caps are read at call time; the defaults recover every pair.
     docs = spark.createDataFrame(
         [Row(doc_id=i, text="same same same same text here") for i in range(30)])
     sigs = D.minhash_signatures(docs, num_hashes=16)
-    capped = D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4,
-                                   max_bucket_size=10)
-    assert capped.count() == 0
-    # Disabling the cap is no longer allowed: an uncapped bucket expands
-    # O(n^2) pairs inside ONE row (single-task OOM at scale). A large
-    # finite cap recovers every pair.
-    with pytest.raises(ValueError, match="max_bucket_size"):
-        D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4,
-                              max_bucket_size=0)
-    wide = D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4,
-                                 max_bucket_size=1000)
+    wide = D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
     assert wide.count() == 30 * 29 // 2
+    assert D.simhash_candidate_pairs(docs).count() == 30 * 29 // 2
+    monkeypatch.setattr(D, "LSH_MAX_BUCKET_SIZE", 10)
+    monkeypatch.setattr(D, "SIMHASH_MAX_BUCKET_SIZE", 10)
+    capped = D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
+    assert capped.count() == 0
+    assert D.simhash_candidate_pairs(docs).count() == 0
 
 
 def test_exact_dedup_incremental_against_corpus(spark):
@@ -131,13 +129,6 @@ def test_exact_dedup_incremental_against_corpus(spark):
     kept = sorted(r.doc_id for r in
                   D.exact_dedup_incremental(batch, corpus).collect())
     assert kept == [11, 13]
-    # precomputed fingerprint-table path gives the same answer
-    from dotnetvectorsearch_spark.functions.text import fingerprint
-    fps = corpus.select(fingerprint("text").alias("fp")).distinct()
-    kept2 = sorted(r.doc_id for r in
-                   D.exact_dedup_incremental(batch, fps,
-                                             corpus_is_fps=True).collect())
-    assert kept2 == kept
 
 
 def test_winnow_fingerprints_shared_substring(spark):
@@ -518,29 +509,32 @@ def test_semantic_clusters_consistent_with_edges(spark, sf_dir):
 # ---------------------------------------------------- round-3 additions
 
 
-def test_unblocked_neardup_raises_past_bound(spark, dup_docs):
+def test_unblocked_neardup_raises_past_bound(spark, dup_docs,
+                                             monkeypatch):
     """block_col=None plans a cross product; past the counted bound the
     operator must raise with reroute advice, never silently plan it."""
     emb = spark.createDataFrame(
         [Row(vec_id=i, embedding=[float(i), 1.0]) for i in range(20)])
+    monkeypatch.setattr(D, "EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS", 10)
     with pytest.raises(ValueError, match="block_col"):
-        D.embedding_neardup_pairs(emb, max_unblocked_rows=10)
+        D.embedding_neardup_pairs(emb)
     # explicit opt-in still works
-    out = D.embedding_neardup_pairs(emb, max_unblocked_rows=10,
-                                    allow_unblocked=True)
+    out = D.embedding_neardup_pairs(emb, allow_unblocked=True)
     assert out.count() > 0
 
 
-def test_unblocked_semantic_contamination_raises_past_bound(spark):
+def test_unblocked_semantic_contamination_raises_past_bound(spark,
+                                                            monkeypatch):
     emb = spark.createDataFrame(
         [Row(vec_id=i, embedding=[1.0, float(i)]) for i in range(20)])
     tr = emb.filter(F.col("vec_id") % 2 == 0)
     te = emb.filter(F.col("vec_id") % 2 == 1)
+    monkeypatch.setattr(D, "SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS",
+                        10)
     with pytest.raises(ValueError, match="block_col"):
-        D.semantic_contamination(tr, te, max_unblocked_pairs=10)
+        D.semantic_contamination(tr, te)
     assert D.semantic_contamination(
-        tr, te, threshold=0.0, max_unblocked_pairs=10,
-        allow_unblocked=True).count() > 0
+        tr, te, threshold=0.0, allow_unblocked=True).count() > 0
 
 
 def test_connected_components_string_ids_take_distributed_path(spark):
@@ -633,7 +627,8 @@ def test_decontaminate_drops_flagged_train_docs(spark, dup_docs):
     assert D.decontaminate(dup_docs, clean_probe).count() == 5
 
 
-def test_decontaminate_broadcast_kernel_equals_join_path(spark):
+def test_decontaminate_broadcast_kernel_equals_join_path(spark,
+                                                         monkeypatch):
     """The map-side broadcast-postings kernel and the distributed gram
     join must produce the IDENTICAL survivor set — including on HALF_UP
     rounding boundaries of the join path's round(overlap, 6) filter."""
@@ -647,12 +642,15 @@ def test_decontaminate_broadcast_kernel_equals_join_path(spark):
         [Row(doc_id=100 + i,
              text=" ".join(words[j % 12] for j in range(i, i + 6)))
          for i in range(0, 12, 2)])
-    for ov in (0.2, 0.5, 0.714286, 1.0):
-        a = sorted(r.doc_id for r in D.decontaminate(
-            train, test, min_overlap=ov).collect())
+    overlaps = (0.2, 0.5, 0.714286, 1.0)
+    kernel = [sorted(r.doc_id for r in D.decontaminate(
+        train, test, min_overlap=ov).collect()) for ov in overlaps]
+    # a zero postings budget sends every call down the gram join
+    D.clear_guard_memo()
+    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+    for ov, a in zip(overlaps, kernel):
         b = sorted(r.doc_id for r in D.decontaminate(
-            train, test, min_overlap=ov,
-            broadcast_max_postings=None).collect())
+            train, test, min_overlap=ov).collect())
         assert a == b, (ov, a, b)
 
 
@@ -668,15 +666,17 @@ def test_decontaminate_min_hits_threshold_is_exact_round_half_up():
 
 
 def test_decontaminate_postings_budget_falls_back_to_join(spark,
-                                                          dup_docs):
+                                                          dup_docs,
+                                                          monkeypatch):
     """A test side past the postings budget must route to the guarded
     distributed join (observable via the inherited candidate guard)."""
     train = dup_docs.filter("doc_id % 2 = 0")
     test = dup_docs.filter("doc_id % 2 = 1")
+    D.clear_guard_memo()
+    monkeypatch.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
     with pytest.raises(ValueError, match="minhash banding"):
-        D.decontaminate(train, test, min_overlap=0.2,
-                        max_candidate_pairs=3,
-                        broadcast_max_postings=1).count()
+        D.decontaminate(train, test, min_overlap=0.2).count()
 
 
 def test_decontaminate_broadcast_handles_empty_and_short_docs(spark):
@@ -786,11 +786,14 @@ def test_max_eval_overlap_matches_join_formulation(spark):
     assert len(got) == train.count()
 
 
-def test_max_eval_overlap_postings_budget_raises(spark, dup_docs):
+def test_max_eval_overlap_postings_budget_raises(spark, dup_docs,
+                                                monkeypatch):
     test = dup_docs.filter("doc_id % 2 = 1")
     train = dup_docs.filter("doc_id % 2 = 0")
-    with pytest.raises(ValueError, match="postings"):
-        D.max_eval_overlap(train, test, broadcast_max_postings=1)
+    D.clear_guard_memo()
+    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
+    with pytest.raises(D.DeconBudgetExceeded, match="postings"):
+        D.max_eval_overlap(train, test)
 
 
 def test_decontaminate_broadcast_plan_is_shuffle_free(spark, dup_docs):
@@ -895,57 +898,54 @@ def test_bloom_membership_no_false_negatives_low_false_positives(spark):
     assert fp_rate < 0.05     # 16x bits/key at k=7 -> well under 1%
 
 
-def test_incremental_dedup_bloom_identical_to_plain(spark, sf_dir):
-    from dotnetvectorsearch_spark.operators.dedup import (
-        exact_dedup_incremental, exact_dedup_incremental_bloom)
+def test_incremental_dedup_bloom_identical_to_plain(spark, sf_dir,
+                                                    tmp_path):
+    """The bloom-prefiltered serve path over a store built from any
+    corpus keeps exactly what the plain anti-join keeps."""
+    from dotnetvectorsearch_spark.operators import dedup_store as ds
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     corpus = docs.filter("doc_id % 3 != 0")
     batch = docs.filter("doc_id % 3 = 0")
+    path = str(tmp_path / "bloom_fps")
+    ds.build_store(corpus, path)
     plain = {r.doc_id for r in
-             exact_dedup_incremental(batch, corpus).collect()}
+             D.exact_dedup_incremental(batch, corpus).collect()}
     bloomed = {r.doc_id for r in
-               exact_dedup_incremental_bloom(batch, corpus).collect()}
+               ds.serve_incremental_dedup(batch, spark, path).collect()}
     assert plain == bloomed and bloomed
 
 
 def test_incremental_dedup_bloom_memoizes_per_corpus(spark, sf_dir,
-                                                     monkeypatch):
-    # The filter is serve-path state (the ann_store contract): repeated
-    # batches against an UNCHANGED corpus must not pay the corpus scan
-    # again, while a different corpus plan must rebuild.
-    from dotnetvectorsearch_spark.operators import dedup as dd
-    dd._BLOOM_FILTERS.clear()
-    calls = []
-    orig = dd.build_bloom
-    monkeypatch.setattr(dd, "build_bloom",
-                        lambda *a, **k: (calls.append(1), orig(*a, **k))[1])
+                                                     tmp_path):
+    # The broadcast filter is serve-path state (the ann_store
+    # contract): repeated batches against an UNCHANGED store reuse one
+    # broadcast, a store built from another corpus gets its own, and
+    # clear_guard_memo drops them all.
+    from dotnetvectorsearch_spark.operators import dedup_store as ds
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter("doc_id % 3 != 0")
-    batch = docs.filter("doc_id % 3 = 0")
-    first = dd.exact_dedup_incremental_bloom(batch, corpus).count()
-    again = dd.exact_dedup_incremental_bloom(batch, corpus).count()
-    assert first == again and len(calls) == 1      # memo hit, same result
-    other = docs.filter("doc_id % 3 = 1")          # different corpus plan
-    dd.exact_dedup_incremental_bloom(batch, other).count()
-    assert len(calls) == 2                         # rebuilt, not reused
+    D.clear_guard_memo()
+    path = str(tmp_path / "a")
+    ds.build_store(docs.filter("doc_id % 3 != 0"), path)
+    first = ds._bloom_broadcast(spark, path)
+    assert ds._bloom_broadcast(spark, path) is first    # memo hit
+    other = str(tmp_path / "b")
+    ds.build_store(docs.filter("doc_id % 3 = 1"), other)
+    assert ds._bloom_broadcast(spark, other) is not first
     # clear_guard_memo is the public invalidation hook for every memo
     # (advisor r8: an in-place rewrite preserving count+size+mtime_ns
     # would alias the fingerprint — the hook is the escape hatch)
-    assert dd.clear_guard_memo() >= 2              # bloom entries counted
-    dd.exact_dedup_incremental_bloom(batch, corpus).count()
-    assert len(calls) == 3                         # rebuilt after clear
+    assert D.clear_guard_memo() >= 2
+    assert ds._bloom_broadcast(spark, path) is not first  # rebuilt
 
 
 def test_bloom_store_serve_equals_build_in_query(spark, sf_dir,
                                                  tmp_path):
     """The persisted fp+bloom store's serve path must return EXACTLY
-    the build-in-query result (round 9: the store amortizes the corpus
-    scan across sessions — it must never change the answer), and a
-    rewritten corpus must trigger a rebuild instead of serving stale
-    fingerprints."""
+    the in-query ``exact_dedup_incremental`` result (round 9: the store
+    amortizes the corpus scan across sessions — it must never change
+    the answer), and a rewritten corpus must trigger a rebuild instead
+    of serving stale fingerprints."""
     from dotnetvectorsearch_spark.operators import dedup_store as ds
-    from dotnetvectorsearch_spark.operators.dedup import (
-        exact_dedup_incremental_bloom)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     batch = docs.filter("doc_id % 5 = 0")
@@ -957,7 +957,7 @@ def test_bloom_store_serve_equals_build_in_query(spark, sf_dir,
               ds.serve_incremental_dedup(batch, spark, path)
               .select("doc_id").collect()}
     in_query = {r.doc_id for r in
-                exact_dedup_incremental_bloom(batch, corpus)
+                D.exact_dedup_incremental(batch, corpus)
                 .select("doc_id").collect()}
     assert served == in_query and served
     # ids_only fast path (what the registry query uses): same keep-set,
@@ -991,68 +991,73 @@ def test_bloom_store_serve_equals_build_in_query(spark, sf_dir,
 # ------------------------------------ exact pair/graph candidate bounds
 
 
-def test_jaccard_pairs_guard_refuses_past_candidate_bound(spark, dup_docs):
+@pytest.fixture
+def low_candidate_bound(monkeypatch):
+    """JACCARD_MAX_CANDIDATE_PAIRS patched to 3 (read at call time)."""
+    monkeypatch.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+
+
+def test_jaccard_pairs_guard_refuses_past_candidate_bound(spark, dup_docs,
+                                                         monkeypatch):
     # The inverted-index self-join volume (sum_s C(df_s,2)) is COUNTED
     # before the quadratic stage is scheduled; past the bound it must
     # raise naming the linear LSH twins — a 10^9-doc corpus gets an
     # error with reroute advice, not a hang (same doctrine as
     # search.knn_graph's broadcast bound).
-    with pytest.raises(ValueError, match="minhash_dedup_pairs"):
-        D.jaccard_pairs(dup_docs, threshold=0.1, max_candidate_pairs=3)
-    # and the bound is a knob, not a wall:
-    assert D.jaccard_pairs(dup_docs, threshold=0.3,
-                           max_candidate_pairs=10_000).count() > 0
+    assert D.jaccard_pairs(dup_docs, threshold=0.3).count() > 0
+    monkeypatch.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+    with pytest.raises(ValueError, match="JACCARD_MAX_CANDIDATE_PAIRS"):
+        D.jaccard_pairs(dup_docs, threshold=0.1)
 
 
 def test_contamination_guard_refuses_past_candidate_bound(spark,
-                                                          dup_docs):
+                                                          dup_docs,
+                                                          monkeypatch):
     # The bipartite gram join volume (sum_s df_test * df_train) is
     # counted before the join is scheduled — unselective shingles
     # (boilerplate / tiny vocab) make it quadratic-shaped, and at sf10
     # the unguarded join filled the disk (~5.2e9 rows / 70+ GB spill).
     train = dup_docs.filter("doc_id % 2 = 0")
     test = dup_docs.filter("doc_id % 2 = 1")
-    with pytest.raises(ValueError, match="minhash banding"):
-        D.cross_corpus_contamination(train, test, min_overlap=0.2,
-                                     max_candidate_pairs=3)
-    # the bound is a knob, not a wall — and decontaminate inherits it
-    assert D.cross_corpus_contamination(
-        train, test, min_overlap=0.2,
-        max_candidate_pairs=10_000_000).count() >= 0
-    # the guard protects the DISTRIBUTED join path; the broadcast
-    # kernel never schedules that join, so force the join path here
-    with pytest.raises(ValueError, match="minhash banding"):
-        D.decontaminate(train, test, min_overlap=0.2,
-                        max_candidate_pairs=3,
-                        broadcast_max_postings=None).count()
     # default bound runs clean (dup_docs: every train doc is a planted
     # near-copy of a test doc, so all are dropped — 0 survivors is the
     # CORRECT answer here, the point is the default-bound path works)
+    assert D.cross_corpus_contamination(
+        train, test, min_overlap=0.2).count() >= 0
     assert D.decontaminate(train, test, min_overlap=0.2).count() == 0
+    D.clear_guard_memo()
+    with monkeypatch.context() as mp:
+        mp.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+        with pytest.raises(ValueError, match="minhash banding"):
+            D.cross_corpus_contamination(train, test, min_overlap=0.2)
+        # the guard protects the DISTRIBUTED join path; the broadcast
+        # kernel never schedules that join, so force the join path
+        # with a zero postings budget — decontaminate inherits it
+        mp.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+        with pytest.raises(ValueError, match="minhash banding"):
+            D.decontaminate(train, test, min_overlap=0.2).count()
 
 
-def test_dedup_clusters_pipeline_inherits_guard(spark, dup_docs):
+def test_dedup_clusters_pipeline_inherits_guard(spark, dup_docs,
+                                                low_candidate_bound):
     with pytest.raises(ValueError, match="minhash"):
         D.dedup_clusters(
-            dup_docs,
-            D.jaccard_pairs(dup_docs, threshold=0.1,
-                            max_candidate_pairs=3)).count()
+            dup_docs, D.jaccard_pairs(dup_docs, threshold=0.1)).count()
 
 
-def test_dedup_weights_pipeline_inherits_guard(spark, dup_docs):
+def test_dedup_weights_pipeline_inherits_guard(spark, dup_docs,
+                                               low_candidate_bound):
     with pytest.raises(ValueError, match="minhash"):
         D.dedup_weights(
-            dup_docs,
-            D.jaccard_pairs(dup_docs, threshold=0.1,
-                            max_candidate_pairs=3)).count()
+            dup_docs, D.jaccard_pairs(dup_docs, threshold=0.1)).count()
 
 
-def test_pagerank_pipeline_inherits_guard(spark, dup_docs):
+def test_pagerank_pipeline_inherits_guard(spark, dup_docs,
+                                          low_candidate_bound):
     from dotnetvectorsearch_spark.operators.graph import pagerank_undirected
     with pytest.raises(ValueError, match="minhash"):
         pagerank_undirected(
-            D.jaccard_pairs(dup_docs, threshold=0.1,
-                            max_candidate_pairs=3),
+            D.jaccard_pairs(dup_docs, threshold=0.1),
             "id_a", "id_b", iters=2).count()
 
 
@@ -1162,7 +1167,7 @@ def test_bc_cache_eviction_unpersists_broadcast(spark, sf_dir,
 
 def test_clear_guard_memo_empties_every_memo():
     """clear_guard_memo is the one invalidation hook: it empties all
-    four input-keyed memos — including the bloom-store broadcasts —
+    three input-keyed memos — including the bloom-store broadcasts —
     unpersists the broadcasts it drops and returns the total count."""
     from dotnetvectorsearch_spark.operators import dedup_store as ds
 
@@ -1172,11 +1177,10 @@ def test_clear_guard_memo_empties_every_memo():
             FakeBC.unpersisted += 1
 
     D.clear_guard_memo()
-    memos = (D._GUARD_MEMO, D._DECON_INDEX, D._BLOOM_FILTERS,
-             ds._BLOOM_BROADCASTS)
+    memos = (D._GUARD_MEMO, D._DECON_INDEX, ds._BLOOM_BROADCASTS)
     for m in memos:
         m.get_or_build(("fake",), lambda: (FakeBC(), 1, 1))
-    assert D.clear_guard_memo() == 4
+    assert D.clear_guard_memo() == 3
     assert all(len(m) == 0 for m in memos)
     assert FakeBC.unpersisted == 2        # the two broadcast memos
 
@@ -1285,7 +1289,36 @@ def test_decon_memo_key_and_index_are_per_text_col(spark):
         assert k_text in D._DECON_INDEX and k_alt in D._DECON_INDEX
 
 
-def test_stream_decontaminate_enforces_postings_budget(spark):
+def test_registry_decontamination_kernels_agree(spark, sf_dir,
+                                                monkeypatch):
+    """The registry's decontamination queries return the same rows from
+    the broadcast postings kernel (default budget) and from the gram
+    join it falls back to (a zero postings budget) — at sf0.01, where
+    the fallback is otherwise never taken (check_oracle.py
+    --distributed patches localdf.DRIVER_BYTES, which this gate does
+    not read)."""
+    from pathlib import Path
+
+    import __spark_entry__ as entry
+    sf01 = str(Path(sf_dir).parent / "sf0.01")
+    qs = entry.queries()
+    names = ("decontaminated_docs", "curated_corpus",
+             "curated_corpus_fixed_eval")
+
+    def rows():
+        return {n: sorted(map(repr, qs[n](spark, sf01).collect()))
+                for n in names}
+
+    kernel = rows()
+    D.clear_guard_memo()
+    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+    joined = rows()
+    assert len(D._DECON_INDEX) == 0      # every call took the gram join
+    assert joined == kernel and all(kernel.values())
+
+
+def test_stream_decontaminate_enforces_postings_budget(spark,
+                                                       monkeypatch):
     """The streaming gate must run the same postings/byte budget as the
     batch kernel before collecting the eval index (advisor r10) — and
     raise at definition time, since a stream has no join fallback."""
@@ -1294,24 +1327,10 @@ def test_stream_decontaminate_enforces_postings_budget(spark):
         [Row(doc_id=1, text="alpha beta gamma delta")])
     eval_docs = spark.createDataFrame(
         [Row(doc_id=9, text="alpha beta gamma delta epsilon zeta")])
-    with pytest.raises(ValueError, match="postings"):
-        stream_decontaminate(docs, eval_docs, broadcast_max_postings=1)
-
-
-def test_stream_decontaminate_budget_binds_on_memo_hit(spark):
-    """A batch call memoizes the eval index under the default budget;
-    a stream then defined with a STRICTER budget on the same eval set
-    must still refuse — the memo hit used to bypass the budget check
-    entirely (advisor r11)."""
-    from dotnetvectorsearch_spark.streaming.ingest import stream_decontaminate
-    docs = spark.createDataFrame(
-        [Row(doc_id=1, text="omega psi chi phi upsilon tau")])
-    eval_docs = spark.createDataFrame(
-        [Row(doc_id=9, text="omega psi chi phi upsilon tau sigma")])
-    # memoize the index under the (loose) default budget
-    D.decontaminate(docs, eval_docs, min_overlap=0.5).count()
-    with pytest.raises(ValueError, match="looser budget"):
-        stream_decontaminate(docs, eval_docs, broadcast_max_postings=1)
+    D.clear_guard_memo()
+    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
+    with pytest.raises(D.DeconBudgetExceeded, match="postings"):
+        stream_decontaminate(docs, eval_docs)
 
 
 def test_incremental_update_manifest_all_actions(spark):

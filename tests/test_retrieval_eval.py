@@ -13,6 +13,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark.operators import retrieval_eval
 from dotnetvectorsearch_spark.operators.retrieval_eval import (
     dcg_discounts,
     dcg_term_case,
@@ -134,23 +135,21 @@ def test_discount_literals_are_engine_agnostic():
     assert str(sum(d[:3])) in cum
 
 
-def test_query_panel_chunks_past_bound(tiny):
-    """max_panel bounds the UDF CLOSURE, not the operator: an
-    oversized panel must succeed by iterating <=max_panel chunks and
-    produce EXACTLY the single-chunk result (judge r9 — the old
-    refusal dead-ended corpus-scale qrels)."""
+def test_query_panel_chunks_past_bound(tiny, monkeypatch):
+    """MAX_QUERY_PANEL bounds the UDF CLOSURE, not the operator: an
+    oversized panel must succeed by iterating <=MAX_QUERY_PANEL chunks
+    and produce EXACTLY the single-chunk result (the old refusal
+    dead-ended corpus-scale qrels)."""
     queries = tiny.select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qvec"),
                           F.col("label").alias("qlabel"))
     assert queries.count() > 3          # the cap below actually bites
     one_chunk = {tuple(r) for r in
                  retrieval_metrics(tiny, queries, k=2).collect()}
+    monkeypatch.setattr(retrieval_eval, "MAX_QUERY_PANEL", 3)
     chunked = {tuple(r) for r in
-               retrieval_metrics(tiny, queries, k=2,
-                                 max_panel=3).collect()}
+               retrieval_metrics(tiny, queries, k=2).collect()}
     assert chunked == one_chunk and chunked
-    with pytest.raises(ValueError, match="max_panel"):
-        retrieval_metrics(tiny, queries, k=2, max_panel=0)
 
 
 # --------------------------- ANN-quality composition (judge r9 #6)

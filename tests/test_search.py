@@ -168,16 +168,19 @@ def test_knn_graph_k_rows_per_id_and_no_self(spark, sf_dir):
     assert g.filter(F.col("vec_id") == F.col("neighbor_id")).count() == 0
 
 
-def test_knn_graph_guard_refuses_oversized_corpus(spark, sf_dir):
-    # The exact-kNN broadcast is bounded: past max_broadcast_rows it must
-    # raise (pointing at the blocked LSH/IVF paths) BEFORE any collect —
-    # a driver OOM at 100x scale must never be silent.
+def test_knn_graph_guard_refuses_oversized_corpus(spark, sf_dir,
+                                                  monkeypatch):
+    # The exact-kNN broadcast is bounded: past
+    # KNN_GRAPH_MAX_BROADCAST_ROWS it must raise (pointing at the
+    # blocked LSH/IVF paths) BEFORE any collect — a driver OOM at 100x
+    # scale must never be silent.
     import pytest
 
     from dotnetvectorsearch_spark.sources.io import load_table
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    monkeypatch.setattr(S, "KNN_GRAPH_MAX_BROADCAST_ROWS", 10)
     with pytest.raises(ValueError, match="embedding_neardup_pairs"):
-        S.knn_graph(emb, k=3, id_col="vec_id", max_broadcast_rows=10)
+        S.knn_graph(emb, k=3, id_col="vec_id")
 
 
 # ------------------------------------------------------------- MMR rerank

@@ -662,6 +662,46 @@ def test_stream_neardup_dedup_gates_against_growing_store(
                   ) == [1, 5, 9]
 
 
+def test_stream_neardup_dedup_survives_torn_bloom_meta(spark, tmp_path):
+    """A restart over a torn bloom ``meta.json`` must not reload an
+    EMPTY filter (every stored key would probe as a miss, the trigger
+    would skip its store read and admit near-dups of history): the
+    filter is rebuilt from the band/short stores, so a re-sent copy of
+    a first-run doc is still dropped."""
+    from dotnetvectorsearch_spark.streaming.ingest import (
+        stream_neardup_dedup)
+    src = tmp_path / "nd_in"
+    src.mkdir()
+    out = str(tmp_path / "nd_out")
+    store = str(tmp_path / "nd_store")
+    ckpt = str(tmp_path / "nd_ckpt")
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id long, text string"
+    spark.createDataFrame([(1, base), (2, "hi")], schema) \
+        .coalesce(1).write.parquet(str(src / "b1"))
+    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
+    q = stream_neardup_dedup(stream, out, store, ckpt)
+    try:
+        assert _wait(lambda: _count_parquet(spark, out) == 2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    meta = tmp_path / "nd_store__bloom" / "meta.json"
+    meta.write_text(meta.read_text()[:5])          # torn write
+    # 3 is a copy of doc 1, 4 of the short doc 2, 5 is novel
+    spark.createDataFrame([(3, base), (4, "hi"), (5, "novel words")],
+                          schema) \
+        .coalesce(1).write.parquet(str(src / "b2"))
+    q = stream_neardup_dedup(stream, out, store, ckpt)
+    try:
+        assert _wait(lambda: _count_parquet(spark, out) >= 3)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    kept = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+    assert kept == [1, 2, 5]
+
+
 def test_stream_heavy_hitters_maintains_bounded_summary(spark, tmp_path):
     """Two micro-batches; the stored MG summary must equal the exact
     counts in the exact regime (distinct keys <= k), stay O(k) on disk,
