@@ -1645,12 +1645,11 @@ def _q_ann_ivfpq_coding_gain(spark, sf_dir):
     tests/test_ann.py), on near-uniform synthetic embeddings the two
     codings coincide up to sampling noise. Approximate-index metric ->
     rows-only."""
-    from dotnetvectorsearch_spark.operators.ann import IVFPQIndex
+    from dotnetvectorsearch_spark.operators.ann_store import fit_index
     emb = load_table(spark, sf_dir, "embeddings")
-    kw = dict(n_cells=16, nprobe=4, m=16, n_codes=64)
     out = {}
     for coding in ("raw", "residual"):
-        idx = IVFPQIndex(coding=coding, **kw).fit(emb, max_sample=20_000)
+        idx = fit_index(emb, "ivfpq", coding=coding)
         out[coding] = (idx.reconstruction_mse(idx.transform(emb))
                        .collect()[0].mse)
     return local_df(spark, [(float(out["raw"]), float(out["residual"]))],
@@ -2346,17 +2345,16 @@ def _q_search_topk_quantized(spark, sf_dir):
 _ANN_FITS = SessionMemo(8)
 
 
-def _fitted(spark, sf_dir, kind: str, cls):
-    """``cls`` fitted on ``sf_dir``'s embeddings with the persisted
-    store's ``ann_store.INDEX_PARAMS[kind]``, memoized in _ANN_FITS."""
-    from dotnetvectorsearch_spark.operators.ann_store import INDEX_PARAMS
-    params = dict(INDEX_PARAMS[kind])
-    sample = params.pop("max_sample")
+def _fitted(spark, sf_dir, kind: str):
+    """``ann_store.fit_index(embeddings, kind)`` — the persisted store's
+    fit — memoized in _ANN_FITS."""
+    from dotnetvectorsearch_spark.operators.ann_store import (
+        INDEX_PARAMS, fit_index)
     emb = load_table(spark, sf_dir, "embeddings")
     key = input_key(emb)
     return _ANN_FITS.get_or_build(
         key and key + (kind, tuple(sorted(INDEX_PARAMS[kind].items()))),
-        lambda: cls(**params).fit(emb, max_sample=sample))
+        lambda: fit_index(emb, kind))
 
 
 def _fitted_pq(spark, sf_dir):
@@ -2364,8 +2362,7 @@ def _fitted_pq(spark, sf_dir):
     partitioned index); memoize per corpus state so repeated queries
     measure the search path, not the build. Sampled fit: codebook
     quality needs ~1k points per code, not the corpus."""
-    from dotnetvectorsearch_spark.operators.ann import PQIndex
-    return _fitted(spark, sf_dir, "pq", PQIndex)
+    return _fitted(spark, sf_dir, "pq")
 
 
 def _q_ann_pq_topk(spark, sf_dir):
@@ -2397,8 +2394,7 @@ def _fitted_ivfpq(spark, sf_dir):
     """Memoized build (same rationale as _fitted_pq): cells + codebooks
     are index-build-time costs; queries measure the probe+ADC+rescore
     path."""
-    from dotnetvectorsearch_spark.operators.ann import IVFPQIndex
-    return _fitted(spark, sf_dir, "ivfpq", IVFPQIndex)
+    return _fitted(spark, sf_dir, "ivfpq")
 
 
 def _q_ann_ivfpq_topk(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE COMPACT JSON line:
+sf0.1) on local[session.local_cpus()]. Prints ONE COMPACT JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec, ...},
 "sf": ...} — the driver contract's per-query map rides the line itself
 (minimal separators, ~3.5 KB for 135 queries) so the driver's
@@ -35,7 +35,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
-from dotnetvectorsearch_spark.session import get_spark
+from dotnetvectorsearch_spark.session import get_spark, local_cpus
 
 BENCH_QUERIES = [
     "search_topk",
@@ -355,7 +355,7 @@ def main() -> None:
     # clobber the 32-core detail (VERDICT r13 item 2 — the r13 per-query
     # comparison had nothing to join on). The suffixed artifacts survive
     # side by side.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     (root / f"BENCH_DETAIL_c{cpus}.json").write_text(
         json.dumps(detail, indent=1) + "\n")
 

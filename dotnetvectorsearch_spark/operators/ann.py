@@ -48,17 +48,22 @@ MAX_SAMPLE = 100_000
 _WRITE_MAX_ROWS = 1_000_000
 
 
-def _write_tiny_parquet(spark, rows: list, ddl: str, path: str) -> None:
-    """Driver-side write of a TINY trained-state table (centroids /
-    codebooks / params — bounded by n_cells or m×n_codes, never the
-    corpus): the exact write-side mirror of :func:`_collect_tiny_parquet`.
-    For a local path, one pyarrow file with Spark-compatible layout
-    (list elements named ``element``, snappy) and ZERO Spark jobs, built
-    by the same row->Arrow code as ``local_df``; non-local stores or
-    values outside the supported set fall back to the ``local_df`` +
-    Spark write path."""
+def _write_state(spark, path: str, ddl: str, mats, *extra) -> None:
+    """Write a TINY trained-state table (bounded by n_cells or
+    m×n_codes, never the corpus): one row per index of the leading axes
+    of ``mats`` (no arrays: one row), row-major, holding the index ints,
+    each array's float vector there (null for a None array), then
+    ``extra``. A local path gets one pyarrow file in Spark's layout
+    (list elements named ``element``, snappy) and ZERO Spark jobs;
+    other stores or values take the ``local_df`` + Spark write."""
     from pyspark.sql.types import _parse_datatype_string
 
+    lead = mats[0].shape[:-1] if mats else ()
+    rows = [(*map(int, ix),
+             *(None if a is None else [float(x) for x in a[ix]]
+               for a in mats),
+             *extra)
+            for ix in np.ndindex(lead)]
     dst = localdf.local_path(path)
     table = (localdf.arrow_table(rows, _parse_datatype_string(ddl))
              if dst is not None else None)
@@ -75,16 +80,12 @@ def _write_tiny_parquet(spark, rows: list, ddl: str, path: str) -> None:
     local_df(spark, rows, ddl).write.mode("overwrite").parquet(path)
 
 
-def _collect_tiny_parquet(spark, path: str) -> list:
-    """Driver-side collect of a TINY trained-state parquet directory
-    (centroids / codebooks / params — a few KB each). Reading these
-    through a Spark job costs a full job launch per table (an index
-    reload pays up to three); when the path is on the local
-    filesystem, a pyarrow footer+page read on the driver returns the
-    same rows with no job at all (guide: the driver may do
-    driver-scale metadata work — these tables are bounded by
-    n_cells/m*n_codes, never by the corpus). Non-local paths (a real
-    deployment's object store) fall back to the Spark read."""
+def _read_state(spark, path: str, keys: tuple[str, ...],
+                *cols: str) -> tuple[list, list]:
+    """Read a :func:`_write_state` table: (its rows, one dense float32
+    array per ``cols`` column indexed by the ``keys`` columns, None for
+    a null column). A local path is read by pyarrow on the driver with
+    no Spark job; other stores by a Spark read."""
     import os
     from types import SimpleNamespace
 
@@ -92,11 +93,22 @@ def _collect_tiny_parquet(spark, path: str) -> list:
     if local is not None and os.path.isdir(local):
         import pyarrow.parquet as pq
         t = pq.read_table(local)
-        cols = t.column_names
-        data = [t.column(c).to_pylist() for c in cols]
-        return [SimpleNamespace(**dict(zip(cols, vals)))
+        data = [t.column(c).to_pylist() for c in t.column_names]
+        rows = [SimpleNamespace(**dict(zip(t.column_names, vals)))
                 for vals in zip(*data)]
-    return spark.read.parquet(path).collect()
+    else:
+        rows = spark.read.parquet(path).collect()
+    shape = tuple(max(getattr(r, k) for r in rows) + 1 for k in keys)
+    dense = []
+    for col in cols:
+        if getattr(rows[0], col) is None:
+            dense.append(None)
+            continue
+        a = np.zeros(shape + (len(getattr(rows[0], col)),), np.float32)
+        for r in rows:
+            a[tuple(getattr(r, k) for k in keys)] = getattr(r, col)
+        dense.append(a)
+    return rows, dense
 
 
 def brute_force_topk(emb: DataFrame, query_vec: list[float], k: int = 5,
@@ -115,6 +127,26 @@ def _unit(query_vec) -> np.ndarray:
     what cell ranking and the ADC tables score against."""
     q = np.asarray(query_vec, dtype=np.float32)
     return q / max(np.linalg.norm(q), 1e-12)
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Every row of ``mat`` scaled to unit length (a zero row stays
+    zero), in ``mat``'s dtype."""
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
+                            1e-12)
+
+
+def _nearest_cell(x: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """Each unit row's nearest unit centroid (max dot == max cosine)."""
+    return np.argmax(x @ cent.T, axis=1)
+
+
+def _nearest_code(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Each row's nearest code by squared Euclidean distance, expanded
+    as |x|^2 - 2 x.c + |c|^2 so one matmul scores every code."""
+    d2 = (np.sum(x ** 2, axis=1, keepdims=True)
+          - 2.0 * (x @ books.T) + np.sum(books ** 2, axis=1))
+    return np.argmin(d2, axis=1)
 
 
 def _fit_sample(emb: DataFrame, vec_col: str, max_sample: int,
@@ -162,24 +194,33 @@ def _group_slices(assign: np.ndarray, k: int):
     return order, starts
 
 
-def _kmeans_fit(sample: np.ndarray, n_cells: int, seed: int,
-                iters: int = 15) -> np.ndarray:
-    """Seeded k-means++ on a driver-side sample; unit-normalized centroids
-    (so cell assignment by max dot == max cosine)."""
+def _lloyd(x: np.ndarray, k: int, seed: int, iters: int,
+           spherical: bool) -> np.ndarray:
+    """Seeded k-means++ then ``iters`` Lloyd passes over the rows of
+    ``x`` (never more centers than points). Spherical: assign by max
+    cosine, renormalize each mean; else assign by Euclidean distance.
+    Each non-empty group's mean (stable-grouped, see _group_slices)
+    becomes its center; empty groups keep theirs."""
+    nearest = _nearest_cell if spherical else _nearest_code
     rng = np.random.RandomState(seed)
-    x = sample / np.maximum(
-        np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    n_cells = min(n_cells, len(x))  # never more cells than points
-    cent = _kmeans_seed_pp(x, n_cells, rng)
+    k = min(k, len(x))
+    cent = _kmeans_seed_pp(x, k, rng)
     for _ in range(iters):
-        assign = np.argmax(x @ cent.T, axis=1)
-        order, starts = _group_slices(assign, n_cells)
-        for c in range(n_cells):
+        order, starts = _group_slices(nearest(x, cent), k)
+        for c in range(k):
             lo, hi = starts[c], starts[c + 1]
             if hi > lo:
                 m = x[order[lo:hi]].mean(axis=0)
-                cent[c] = m / max(np.linalg.norm(m), 1e-12)
+                cent[c] = (m / max(np.linalg.norm(m), 1e-12)
+                           if spherical else m)
     return cent.astype(np.float32)
+
+
+def _kmeans_fit(sample: np.ndarray, n_cells: int, seed: int,
+                iters: int = 15) -> np.ndarray:
+    """Seeded spherical k-means on a driver-side sample; unit-normalized
+    centroids (so cell assignment by max dot == max cosine)."""
+    return _lloyd(_unit_rows(sample), n_cells, seed, iters, spherical=True)
 
 
 class IVFIndex:
@@ -210,9 +251,8 @@ class IVFIndex:
         distributed Arrow UDF and the bounded driver write path — per-row
         results are batch-size independent (row-wise matmul+argmax), so
         both paths produce identical cells by construction."""
-        m = np.stack(vecs).astype(np.float32)
-        norms = np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return np.argmax((m / norms) @ cent.T, axis=1).astype(np.int32)
+        return _nearest_cell(_unit_rows(np.stack(vecs).astype(np.float32)),
+                             cent).astype(np.int32)
 
     def assign_udf(self):
         cent = self.centroids
@@ -337,28 +377,21 @@ class IVFIndex:
         return True
 
     def _write_centroids(self, spark, path: str) -> None:
-        """Trained-state write: n_cells rows, always tiny — pyarrow on
-        the driver for local stores (zero Spark jobs; the exact mirror
-        of _collect_tiny_parquet on the read side), Spark otherwise."""
-        rows = [(int(i), [float(x) for x in c], self.nprobe, self.seed)
-                for i, c in enumerate(self.centroids)]
-        _write_tiny_parquet(
-            spark, rows,
-            "cell int, centroid array<float>, nprobe int, seed int",
-            f"{path}/_centroids")
+        """Trained-state write: n_cells rows, always tiny (see
+        :func:`_write_state`)."""
+        _write_state(spark, f"{path}/_centroids",
+                     "cell int, centroid array<float>, nprobe int, seed int",
+                     [self.centroids], self.nprobe, self.seed)
 
     @classmethod
     def read(cls, spark, path: str) -> tuple["IVFIndex", DataFrame]:
         """Reload a written index: (probe-ready index, indexed rows).
         The rows frame is the partitioned parquet — `search` on it still
         prunes to the probe cells."""
-        rows = _collect_tiny_parquet(spark, f"{path}/_centroids")
+        rows, (cent,) = _read_state(spark, f"{path}/_centroids",
+                                    ("cell",), "centroid")
         idx = cls(n_cells=len(rows), nprobe=rows[0].nprobe,
                   seed=rows[0].seed)
-        cent = np.zeros((len(rows), len(rows[0].centroid)),
-                        dtype=np.float32)
-        for r in rows:
-            cent[r.cell] = np.asarray(r.centroid, dtype=np.float32)
         idx.centroids = cent
         return idx, spark.read.parquet(path)
 
@@ -484,24 +517,69 @@ def centroid_drift(old: DataFrame, new: DataFrame, by: str = "label",
 
 def _kmeans_fit_plain(sample: np.ndarray, n_codes: int, seed: int,
                       iters: int = 15) -> np.ndarray:
-    """Seeded k-means++ WITHOUT unit-normalization (PQ subvectors are not
-    unit vectors; Euclidean geometry, empty clusters keep their centroid).
-    Same running-min seeding / stable-grouped Lloyd as :func:`_kmeans_fit`
-    — bit-identical output, O(k) fewer passes (see _kmeans_seed_pp)."""
-    rng = np.random.RandomState(seed)
-    x = sample.astype(np.float32)
-    n_codes = min(n_codes, len(x))
-    cent = _kmeans_seed_pp(x, n_codes, rng)
-    for _ in range(iters):
-        d2 = (np.sum(x ** 2, axis=1, keepdims=True)
-              - 2.0 * (x @ cent.T) + np.sum(cent ** 2, axis=1))
-        assign = np.argmin(d2, axis=1)
-        order, starts = _group_slices(assign, len(cent))
-        for c in range(len(cent)):
-            lo, hi = starts[c], starts[c + 1]
-            if hi > lo:
-                cent[c] = x[order[lo:hi]].mean(axis=0)
-    return cent.astype(np.float32)
+    """Seeded Euclidean k-means WITHOUT unit-normalization (PQ
+    subvectors are not unit vectors): the :func:`_lloyd` core of
+    :func:`_kmeans_fit`."""
+    return _lloyd(sample.astype(np.float32), n_codes, seed, iters,
+                  spherical=False)
+
+
+def _pq_encode(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The PQ codes of each row of ``mat`` (n x d float32) under
+    ``books`` (m x n_codes x d/m): per subspace, the nearest code."""
+    sub = mat.reshape(len(mat), len(books), -1)
+    codes = np.empty((len(mat), len(books)), dtype=np.int32)
+    for j in range(len(books)):
+        codes[:, j] = _nearest_code(sub[:, j, :], books[j])
+    return codes
+
+
+def _adc(lut: np.ndarray, codes, offs: np.ndarray | None = None,
+         cells=None) -> np.ndarray:
+    """The ADC score of each row of ``codes`` (n x m) as float64: the
+    float32 sum over j of ``lut[j, codes[:, j]]``, plus the cell offset
+    ``offs[cells]`` under residual coding."""
+    s = lut[np.arange(len(lut))[None, :], np.asarray(codes, np.int64)] \
+        .sum(axis=1)
+    if offs is not None:
+        s = offs[np.asarray(cells, np.int64)] + s
+    return s.astype(np.float64)
+
+
+def _adc_topk(rows: DataFrame, query_vec: list[float], lut: np.ndarray,
+              k: int, id_col: str, codes_col: str,
+              rescore: DataFrame | None, vec_col: str,
+              shortlist: int | None, offs: np.ndarray | None = None,
+              cell_col: str = "cell") -> DataFrame:
+    """The ADC plan :class:`PQIndex` and :class:`IVFPQIndex` share: an
+    Arrow UDF scores each row with :func:`_adc` (``offs`` by
+    ``cell_col`` under residual coding), rounded to 6 digits, ranked by
+    score desc then id asc; keep the top ``k``, or with ``rescore`` rank
+    the top ``shortlist`` exactly (a broadcast semi-join fetches their
+    float vectors for :func:`brute_force_topk`)."""
+    if offs is None:
+        @pandas_udf("double")
+        def adc(codes: pd.Series) -> pd.Series:
+            return pd.Series(_adc(lut, np.stack(codes.to_numpy())))
+
+        cols = [codes_col]
+    else:
+        @pandas_udf("double")
+        def adc(cell: pd.Series, codes: pd.Series) -> pd.Series:
+            return pd.Series(_adc(lut, np.stack(codes.to_numpy()), offs,
+                                  cell.to_numpy()))
+
+        cols = [cell_col, codes_col]
+    approx = (rows.select(id_col, *cols)
+              .withColumn("approx_similarity",
+                          F.round(adc(*[F.col(c) for c in cols]), 6))
+              .select(id_col, "approx_similarity")
+              .orderBy(F.desc("approx_similarity"), F.asc(id_col)))
+    if rescore is None:
+        return approx.limit(k)
+    ids = approx.limit(shortlist or max(10 * k, 50)).select(id_col)
+    cand = rescore.join(F.broadcast(ids), on=id_col, how="left_semi")
+    return brute_force_topk(cand, query_vec, k, id_col, vec_col)
 
 
 class PQIndex:
@@ -538,8 +616,13 @@ class PQIndex:
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
             max_sample: int = MAX_SAMPLE) -> PQIndex:
-        sub = self._split(_fit_sample(emb, vec_col, max_sample,
-                                      self.seed).astype(np.float32))
+        return self.fit_matrix(
+            _fit_sample(emb, vec_col, max_sample, self.seed))
+
+    def fit_matrix(self, sample: np.ndarray) -> PQIndex:
+        """Train the codebooks on a driver-resident sample matrix: one
+        seeded k-means (seed + j) per subspace j."""
+        sub = self._split(sample.astype(np.float32))
         self.codebooks = np.stack([
             _kmeans_fit_plain(sub[:, j, :], self.n_codes, self.seed + j)
             for j in range(self.m)])
@@ -547,19 +630,11 @@ class PQIndex:
 
     def encode_udf(self):
         books = self.codebooks
-        m = self.m
 
         @pandas_udf("array<int>")
         def encode(vecs: pd.Series) -> pd.Series:
             mat = np.stack(vecs.to_numpy()).astype(np.float32)
-            sub = mat.reshape(len(mat), m, -1)
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                x, cent = sub[:, j, :], books[j]
-                d2 = (np.sum(x ** 2, axis=1, keepdims=True)
-                      - 2.0 * (x @ cent.T) + np.sum(cent ** 2, axis=1))
-                codes[:, j] = np.argmin(d2, axis=1)
-            return pd.Series(list(codes))
+            return pd.Series(list(_pq_encode(mat, books)))
 
         return encode
 
@@ -576,28 +651,28 @@ class PQIndex:
         rescore)."""
         self.transform(emb.select(id_col, vec_col), vec_col) \
             .drop(vec_col).write.mode("overwrite").parquet(f"{path}/codes")
-        spark = emb.sparkSession
-        books = [(j, c, [float(x) for x in self.codebooks[j, c]])
-                 for j in range(self.m)
-                 for c in range(self.codebooks.shape[1])]
-        _write_tiny_parquet(spark, books,
-                            "subspace int, code int, centroid array<float>",
-                            f"{path}/codebooks")
+        self._write_codebooks(emb.sparkSession, f"{path}/codebooks")
 
     @classmethod
     def read(cls, spark, path: str) -> tuple[PQIndex, DataFrame]:
         """Load a written index: returns (index, codes DataFrame)."""
-        rows = _collect_tiny_parquet(spark, f"{path}/codebooks")
-        m = max(r.subspace for r in rows) + 1
-        n_codes = max(r.code for r in rows) + 1
-        dim_sub = len(rows[0].centroid)
-        books = np.zeros((m, n_codes, dim_sub), dtype=np.float32)
-        for r in rows:
-            books[r.subspace, r.code] = np.asarray(r.centroid,
-                                                   dtype=np.float32)
-        idx = cls(m=m, n_codes=n_codes)
+        return (cls._read_codebooks(spark, f"{path}/codebooks"),
+                spark.read.parquet(f"{path}/codes"))
+
+    def _write_codebooks(self, spark, path: str) -> None:
+        """The m x n_codes (subspace, code, centroid) rows (see
+        :func:`_write_state`)."""
+        _write_state(spark, path,
+                     "subspace int, code int, centroid array<float>",
+                     [self.codebooks])
+
+    @classmethod
+    def _read_codebooks(cls, spark, path: str) -> PQIndex:
+        _, (books,) = _read_state(spark, path, ("subspace", "code"),
+                                  "centroid")
+        idx = cls(m=books.shape[0], n_codes=books.shape[1])
         idx.codebooks = books
-        return idx, spark.read.parquet(f"{path}/codes")
+        return idx
 
     def lookup_table(self, query_vec: list[float]) -> np.ndarray:
         """Per-query ADC table: table[j, c] = dot(q_subspace_j, code_jc)."""
@@ -619,25 +694,8 @@ class PQIndex:
         shortlist ids) and scored exactly. At 100 TB the first stage scans
         m bytes/row; the second touches ~shortlist rows — quantization
         error then only costs recall for neighbors the shortlist missed."""
-        lut = self.lookup_table(query_vec)
-        m = self.m
-
-        @pandas_udf("double")
-        def adc(codes: pd.Series) -> pd.Series:
-            c = np.stack(codes.to_numpy()).astype(np.int64)
-            scores = lut[np.arange(m)[None, :], c].sum(axis=1)
-            return pd.Series(scores.astype(np.float64))
-
-        approx = (encoded.select(id_col, codes_col)
-                  .withColumn("approx_similarity",
-                              F.round(adc(F.col(codes_col)), 6))
-                  .select(id_col, "approx_similarity")
-                  .orderBy(F.desc("approx_similarity"), F.asc(id_col)))
-        if rescore is None:
-            return approx.limit(k)
-        ids = approx.limit(shortlist or max(10 * k, 50)).select(id_col)
-        cand = rescore.join(F.broadcast(ids), on=id_col, how="left_semi")
-        return brute_force_topk(cand, query_vec, k, id_col, vec_col)
+        return _adc_topk(encoded, query_vec, self.lookup_table(query_vec),
+                         k, id_col, codes_col, rescore, vec_col, shortlist)
 
 
 class IVFPQIndex:
@@ -692,24 +750,22 @@ class IVFPQIndex:
         self.cell_means: np.ndarray | None = None
 
     def fit(self, emb: DataFrame, vec_col: str = "embedding",
-            max_sample: int = MAX_SAMPLE,
-            refine_iters: int = 0) -> IVFPQIndex:
-        self.ivf.fit(emb, vec_col, max_sample)
-        if refine_iters:
-            self.ivf.refine(emb, vec_col, iters=refine_iters)
+            max_sample: int = MAX_SAMPLE) -> IVFPQIndex:
+        """Train cells and codebooks on ONE seeded sample (the cells'
+        and the codebooks' seeds are the same ``seed``, so this is the
+        sample each would draw on its own)."""
+        sample = _fit_sample(emb, vec_col, max_sample, self.ivf.seed)
+        self.ivf.fit_matrix(sample)
         if self.coding == "raw":
-            self.pq.fit(emb, vec_col, max_sample)
+            self.pq.fit_matrix(sample)
             return self
-        # Residual mode: re-draw the same seeded sample, subtract each
-        # point's assigned centroid, and train the PQ codebooks on the
-        # pooled residuals (one shared codebook across cells — the
-        # standard IVFADC layout; per-cell books would need
-        # n_cells x m x n_codes centroids for marginal gain).
-        x = _fit_sample(emb, vec_col, max_sample,
-                        self.pq.seed).astype(np.float32)
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+        # Residual mode: subtract each point's cell mean and train the
+        # PQ codebooks on the pooled residuals (one shared codebook
+        # across cells — the standard IVFADC layout; per-cell books
+        # would need n_cells x m x n_codes centroids for marginal gain).
+        x = _unit_rows(sample.astype(np.float32))
         cent = self.ivf.centroids
-        assign = np.argmax(x @ cent.T, axis=1)
+        assign = _nearest_cell(x, cent)
         means = np.zeros_like(cent)
         for c in range(len(cent)):
             mask = assign == c
@@ -717,12 +773,7 @@ class IVFPQIndex:
                 means[c] = x[mask].mean(axis=0)
         # cells the sample missed keep a zero base (residual == raw there)
         self.cell_means = means.astype(np.float32)
-        res = x - self.cell_means[assign]
-        sub = self.pq._split(res)
-        self.pq.codebooks = np.stack([
-            _kmeans_fit_plain(sub[:, j, :], self.pq.n_codes,
-                              self.pq.seed + j)
-            for j in range(self.pq.m)])
+        self.pq.fit_matrix(x - self.cell_means[assign])
         return self
 
     def _encode_residual_udf(self):
@@ -732,21 +783,12 @@ class IVFPQIndex:
         cent = self.ivf.centroids
         means = self.cell_means
         books = self.pq.codebooks
-        m = self.pq.m
 
         @pandas_udf("struct<cell:int,pq_codes:array<int>>")
         def enc(vecs: pd.Series) -> pd.DataFrame:
-            mat = np.stack(vecs.to_numpy()).astype(np.float32)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(mat @ cent.T, axis=1)
-            res = (mat - means[cells]).reshape(len(mat), m, -1)
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                x, cb = res[:, j, :], books[j]
-                d2 = (np.sum(x ** 2, axis=1, keepdims=True)
-                      - 2.0 * (x @ cb.T) + np.sum(cb ** 2, axis=1))
-                codes[:, j] = np.argmin(d2, axis=1)
+            mat = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float32))
+            cells = _nearest_cell(mat, cent)
+            codes = _pq_encode(mat - means[cells], books)
             return pd.DataFrame({"cell": cells.astype(np.int32),
                                  "pq_codes": list(codes)})
 
@@ -778,55 +820,28 @@ class IVFPQIndex:
          .drop(vec_col).write.mode("overwrite")
          .partitionBy("cell").parquet(path))
         spark = emb.sparkSession
-        cent_rows = [
-            (int(i), [float(x) for x in self.ivf.centroids[i]],
-             [float(x) for x in self.cell_means[i]]
-             if self.cell_means is not None else None)
-            for i in range(self.ivf.n_cells)]
-        _write_tiny_parquet(
-            spark, cent_rows,
-            "cell int, centroid array<float>, cell_mean array<float>",
-            f"{path}/_meta/cells")
-        books = [(j, c, [float(x) for x in self.pq.codebooks[j, c]])
-                 for j in range(self.pq.m)
-                 for c in range(self.pq.codebooks.shape[1])]
-        _write_tiny_parquet(spark, books,
-                            "subspace int, code int, centroid array<float>",
-                            f"{path}/_meta/codebooks")
-        _write_tiny_parquet(spark,
-                            [(self.coding, self.ivf.nprobe, self.pq.seed)],
-                            "coding string, nprobe int, seed int",
-                            f"{path}/_meta/params")
+        _write_state(spark, f"{path}/_meta/cells",
+                     "cell int, centroid array<float>, cell_mean array<float>",
+                     [self.ivf.centroids, self.cell_means])
+        self.pq._write_codebooks(spark, f"{path}/_meta/codebooks")
+        _write_state(spark, f"{path}/_meta/params",
+                     "coding string, nprobe int, seed int", [],
+                     self.coding, self.ivf.nprobe, self.pq.seed)
 
     @classmethod
     def read(cls, spark, path: str) -> tuple["IVFPQIndex", DataFrame]:
         """Reload a written index: (search-ready index, indexed rows).
         Pair with the original float-vector table for the rescore
         stage, exactly as after a fresh fit."""
-        params = _collect_tiny_parquet(spark, f"{path}/_meta/params")[0]
-        cells = _collect_tiny_parquet(spark, f"{path}/_meta/cells")
-        books = _collect_tiny_parquet(spark, f"{path}/_meta/codebooks")
-        m = max(r.subspace for r in books) + 1
-        n_codes = max(r.code for r in books) + 1
-        idx = cls(n_cells=len(cells), nprobe=params.nprobe, m=m,
-                  n_codes=n_codes, seed=params.seed,
+        (params,), _ = _read_state(spark, f"{path}/_meta/params", ())
+        _, (cent, means) = _read_state(spark, f"{path}/_meta/cells",
+                                       ("cell",), "centroid", "cell_mean")
+        pq = PQIndex._read_codebooks(spark, f"{path}/_meta/codebooks")
+        idx = cls(n_cells=len(cent), nprobe=params.nprobe, m=pq.m,
+                  n_codes=pq.n_codes, seed=params.seed,
                   coding=params.coding)
-        dim = len(cells[0].centroid)
-        cent = np.zeros((len(cells), dim), dtype=np.float32)
-        means = np.zeros((len(cells), dim), dtype=np.float32)
-        have_means = cells[0].cell_mean is not None
-        for r in cells:
-            cent[r.cell] = np.asarray(r.centroid, dtype=np.float32)
-            if have_means:
-                means[r.cell] = np.asarray(r.cell_mean, dtype=np.float32)
-        idx.ivf.centroids = cent
-        idx.cell_means = means if have_means else None
-        cb = np.zeros((m, n_codes, len(books[0].centroid)),
-                      dtype=np.float32)
-        for r in books:
-            cb[r.subspace, r.code] = np.asarray(r.centroid,
-                                                dtype=np.float32)
-        idx.pq.codebooks = cb
+        idx.ivf.centroids, idx.cell_means = cent, means
+        idx.pq.codebooks = pq.codebooks
         return idx, spark.read.parquet(path)
 
     def search(self, indexed: DataFrame, query_vec: list[float],
@@ -840,37 +855,22 @@ class IVFPQIndex:
         (when ``rescore`` float vectors are supplied).
 
         Residual mode scores ``offset[cell] + sum_j lut[j, code_j]``
-        where ``offset[cell] = q . centroid[cell]`` is n_cells driver-side
-        dot products — the per-row cost is identical to raw coding (m
-        lookups + one more)."""
+        where ``offset[cell] = q . cell_mean[cell]`` (:meth:`offsets`)
+        — the per-row cost is identical to raw coding (m lookups + one
+        more)."""
         cells = self.ivf.probe_cells(query_vec)
         cand = indexed.filter(F.col(cell_col).isin(cells))
+        return _adc_topk(cand, query_vec, self.pq.lookup_table(query_vec),
+                         k, id_col, codes_col, rescore, vec_col, shortlist,
+                         self.offsets(query_vec), cell_col)
+
+    def offsets(self, query_vec: list[float]) -> np.ndarray | None:
+        """Residual coding's per-cell ADC term ``q . cell_mean[cell]``
+        (n_cells driver-side dot products); None under raw coding,
+        which has no per-cell term."""
         if self.coding == "raw":
-            return self.pq.search(cand, query_vec, k, id_col, codes_col,
-                                  rescore=rescore, vec_col=vec_col,
-                                  shortlist=shortlist)
-        lut = self.pq.lookup_table(query_vec)
-        offs = (self.cell_means @ _unit(query_vec)).astype(np.float32)
-        m = self.pq.m
-
-        @pandas_udf("double")
-        def adc(cell: pd.Series, codes: pd.Series) -> pd.Series:
-            c = np.stack(codes.to_numpy()).astype(np.int64)
-            scores = (offs[cell.to_numpy().astype(np.int64)]
-                      + lut[np.arange(m)[None, :], c].sum(axis=1))
-            return pd.Series(scores.astype(np.float64))
-
-        approx = (cand.select(id_col, cell_col, codes_col)
-                  .withColumn("approx_similarity",
-                              F.round(adc(F.col(cell_col),
-                                          F.col(codes_col)), 6))
-                  .select(id_col, "approx_similarity")
-                  .orderBy(F.desc("approx_similarity"), F.asc(id_col)))
-        if rescore is None:
-            return approx.limit(k)
-        ids = approx.limit(shortlist or max(10 * k, 50)).select(id_col)
-        cand_f = rescore.join(F.broadcast(ids), on=id_col, how="left_semi")
-        return brute_force_topk(cand_f, query_vec, k, id_col, vec_col)
+            return None
+        return (self.cell_means @ _unit(query_vec)).astype(np.float32)
 
     def reconstruction_mse(self, indexed: DataFrame,
                            vec_col: str = "embedding",
@@ -890,9 +890,7 @@ class IVFPQIndex:
         @pandas_udf("double")
         def sqerr(vecs: pd.Series, cell: pd.Series,
                   codes: pd.Series) -> pd.Series:
-            mat = np.stack(vecs.to_numpy()).astype(np.float32)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+            mat = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float32))
             c = np.stack(codes.to_numpy()).astype(np.int64)
             dec = np.concatenate(
                 [books[j][c[:, j]] for j in range(m)], axis=1)

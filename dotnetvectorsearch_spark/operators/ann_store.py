@@ -43,20 +43,22 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import localdf
 from ..caching import _input_fingerprint
 from ..sources.io import load_table
-from .ann import IVFIndex, IVFPQIndex, PQIndex, _unit
+from .ann import IVFIndex, IVFPQIndex, PQIndex, _adc
 from .search import round6_half_up
 
-# Hyperparameters MUST stay in lockstep with the fit-in-query registry
-# entry _q_ann_ivf_topk in __spark_entry__.py (its _fitted_pq /
-# _fitted_ivfpq read this dict): the serve-path tests pin serve ==
-# fit-in-query results, which holds only because the seeded fit is
-# deterministic for identical (params, sample).
+# The one set of build hyperparameters: the store builds and the
+# registry's fit-in-query entries (__spark_entry__._fitted) both fit
+# through fit_index, and the serve-path tests pin serve == fit-in-query
+# results, which holds because the seeded fit is deterministic for
+# identical (params, sample).
 INDEX_PARAMS: dict[str, dict] = {
     "ivf": {"n_cells": 16, "nprobe": 4, "max_sample": 100_000},
     "pq": {"m": 16, "n_codes": 64, "max_sample": 20_000},
     "ivfpq": {"n_cells": 16, "nprobe": 4, "m": 16, "n_codes": 64,
               "max_sample": 20_000},
 }
+
+_INDEX_CLASSES = {"ivf": IVFIndex, "pq": PQIndex, "ivfpq": IVFPQIndex}
 
 _MARKER = "_fingerprint.json"
 _MANIFEST_DIR = "_manifests"
@@ -113,26 +115,16 @@ def _is_fresh(path: str, fp: str | None) -> bool:
         return False
 
 
-def _build(spark: SparkSession, emb: DataFrame, kind: str,
-           path: str) -> None:
-    p = INDEX_PARAMS[kind]
-    if kind == "ivf":
-        idx = IVFIndex(n_cells=p["n_cells"], nprobe=p["nprobe"]).fit(
-            emb, max_sample=p["max_sample"])
-        idx.write(emb, path)
-    elif kind == "pq":
-        idx = PQIndex(m=p["m"], n_codes=p["n_codes"]).fit(
-            emb, max_sample=p["max_sample"])
-        idx.write(emb, path)
-    elif kind == "ivfpq":
-        idx = IVFPQIndex(n_cells=p["n_cells"], nprobe=p["nprobe"],
-                         m=p["m"], n_codes=p["n_codes"]).fit(
-            emb, max_sample=p["max_sample"])
-        idx.write(emb, path)
-    else:
-        # unreachable via ensure_index (which validates first); kept
-        # for direct callers, without duplicating the full message
-        raise ValueError(f"unknown index kind {kind!r}")
+def fit_index(emb: DataFrame, kind: str, **init):
+    """A ``kind`` index fitted on ``emb`` with ``INDEX_PARAMS[kind]``
+    (its ``max_sample`` goes to ``fit``, the rest, plus ``init``, to
+    the constructor). Raises ValueError for an unknown kind."""
+    if kind not in INDEX_PARAMS:
+        raise ValueError(f"unknown index kind {kind!r}; "
+                         f"expected one of {sorted(INDEX_PARAMS)}")
+    params = dict(INDEX_PARAMS[kind], **init)
+    max_sample = params.pop("max_sample")
+    return _INDEX_CLASSES[kind](**params).fit(emb, max_sample=max_sample)
 
 
 def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
@@ -149,18 +141,61 @@ def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
     path = index_path(sf_dir, kind, root)
     if not force and _is_fresh(path, fp):
         return path, False
-    _build(spark, emb, kind, path)
+    fit_index(emb, kind).write(emb, path)
     # Stamp AFTER a successful write: a failed build leaves no marker,
     # so the next ensure_index retries instead of serving half an index.
     _write_marker(path, {"fingerprint": fp, "kind": kind,
                          "params": INDEX_PARAMS[kind]})
     # Cell-partitioned stores are snapshot-managed from birth: publish
     # v1 so appends/compactions version against it. (The overwrite in
-    # _build wiped any prior _manifests with the old files — correct,
+    # write wiped any prior _manifests with the old files — correct,
     # since those snapshots' files no longer exist.)
     if kind in ("ivf", "ivfpq"):
         publish_snapshot(path, note="build")
     return path, True
+
+
+def _winner_census(ivf: IVFIndex, scored: DataFrame, rows: DataFrame,
+                   panel: list[tuple[int, list[float]]], k: int,
+                   id_col: str, vec_col: str, cols: tuple[str, ...],
+                   round_digits: int | None, exclude_self: bool):
+    """What both recall curves start from: the panel's exact top-k
+    over ``scored``, each winner joined to its ``cols`` in ``rows``
+    (panel*k rows, a broadcast-semi-join-sized frame), and each query's
+    cell rank (the inverse of the order serve probes in). Returns
+    (hits, rank_of): the (qid, id, *cols) rows, one per distinct
+    (qid, winner id), and {qid: rank of each cell}.
+
+    A re-appended vec_id in ``rows`` yields several join rows per
+    winner, which would double-count it (recall > 1 possible, and a
+    tuned width too small); its copies carry identical cells and
+    codes, so keeping the first is exact."""
+    import numpy as np
+
+    from .search import topk_per_query_arrow
+
+    exact = topk_per_query_arrow(
+        scored, panel, k=k, doc_id=id_col, vec_col=vec_col,
+        round_digits=round_digits, exclude_self=exclude_self)
+    raw = (exact.join(rows.select(id_col, *cols), id_col)
+           .select("qid", id_col, *cols).collect())
+    seen: set[tuple[int, int]] = set()
+    hits = []
+    for r in raw:
+        key = (r.qid, int(r[id_col]))
+        if key not in seen:
+            seen.add(key)
+            hits.append(r)
+    rank_of = {qid: np.argsort(ivf.cell_order(v)) for qid, v in panel}
+    return hits, rank_of
+
+
+def _pick_nprobe(curve: dict[int, float], target_recall: float,
+                 n_cells: int) -> int:
+    """The smallest nprobe whose recall meets ``target_recall``, else
+    ``n_cells``."""
+    return next((p for p in sorted(curve) if curve[p] >= target_recall),
+                n_cells)
 
 
 def nprobe_recall_curve(idx, rows: DataFrame,
@@ -188,31 +223,11 @@ def nprobe_recall_curve(idx, rows: DataFrame,
     """
     import numpy as np
 
-    from .search import topk_per_query_arrow
-
     if not panel:
         raise ValueError("nprobe_recall_curve needs a non-empty panel")
-    exact = topk_per_query_arrow(
-        rows, panel, k=k, doc_id=id_col, vec_col=vec_col,
-        round_digits=round_digits, exclude_self=exclude_self)
-    # winners' cells: panel*k rows, a broadcast-semi-join-sized frame.
-    # Dedup on (qid, winner id): a re-appended vec_id in ``rows``
-    # yields multiple join rows per winner and would double-count it,
-    # inflating the curve (recall > 1 possible) and letting
-    # tune_store_nprobe persist a too-small width — the same
-    # advisor-r12 bug fixed in ivfpq_recall_curve (advisor r13).
-    # Duplicate copies carry identical cells, so keeping one is exact.
-    raw = (exact.join(rows.select(id_col, cell_col), id_col)
-           .select("qid", id_col, cell_col).collect())
-    seen: set[tuple[int, int]] = set()
-    hits = []
-    for r in raw:
-        key = (r.qid, int(r[id_col]))
-        if key not in seen:
-            seen.add(key)
-            hits.append(r)
-    # per-query cell rank: the inverse of the order serve probes in
-    rank_of = {qid: np.argsort(idx.cell_order(v)) for qid, v in panel}
+    hits, rank_of = _winner_census(idx, rows, rows, panel, k, id_col,
+                                   vec_col, (cell_col,), round_digits,
+                                   exclude_self)
     counts = np.zeros(idx.n_cells + 1, dtype=np.int64)
     for row in hits:
         counts[rank_of[row.qid][row[cell_col]] + 1] += 1
@@ -220,9 +235,8 @@ def nprobe_recall_curve(idx, rows: DataFrame,
     # Normalize by DISTINCT winner slots, not panel*k: on a corpus
     # with re-appended ids the exact top-k spends slots on duplicate
     # copies, so distinct winners per query can be < k — a fixed
-    # panel*k denominator would under-report (and the undeduped
-    # numerator used to over-report). Duplicate-free stores have
-    # len(hits) == panel*k, so this is the same number there.
+    # panel*k denominator would under-report. Duplicate-free stores
+    # have len(hits) == panel*k, so this is the same number there.
     denom = max(len(hits), 1)
     return {p: round(float(cum[p]) / denom, 4)
             for p in range(1, idx.n_cells + 1)}
@@ -244,10 +258,7 @@ def choose_nprobe(idx, rows: DataFrame,
     the target requires. Falls back to n_cells (== exact scan, recall
     1.0) when no smaller setting reaches the target."""
     curve = nprobe_recall_curve(idx, rows, panel, k=k, **curve_kwargs)
-    for p in sorted(curve):
-        if curve[p] >= target_recall:
-            return p, curve
-    return idx.n_cells, curve
+    return _pick_nprobe(curve, target_recall, idx.n_cells), curve
 
 
 def index_health(spark: SparkSession, sf_dir: str, kind: str = "ivf",
@@ -854,12 +865,12 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
 
     Cost: one exact panel scan over the float vectors, one distributed
     Arrow pass over the (id, cell, codes) table emitting a bounded
-    panel*k*n_cells count frame, driver-side cumsum. ADC scores are
-    replicated with the serve's exact float32 op order (offset gather
-    + LUT gather-sum, float64 cast, HALF_UP round-6 via
-    :func:`round6_half_up` — Spark ``F.round`` semantics, not
-    ``np.round``'s half-even), so the counts match the shortlist the
-    serve would actually cut. Unlike the IVF curve this
+    panel*k*n_cells count frame, driver-side cumsum. Winners and rows
+    are scored by the serve's own ADC kernel (``ann._adc``: the same
+    LUTs and offsets, the same float32 gather-sum), then rounded
+    HALF_UP to 6 digits by :func:`round6_half_up` — Spark ``F.round``
+    semantics, not ``np.round``'s half-even — so the counts match the
+    shortlist the serve would actually cut. Unlike the IVF curve this
     one need not be monotone (more probed cells also means more
     shortlist competition) and need not reach 1.0 at full probe (the
     shortlist cut remains); both properties are inherent to the
@@ -868,59 +879,35 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
     import numpy as np
     import pandas as pd
 
-    from .search import topk_per_query_arrow
-
     if not panel:
         raise ValueError("ivfpq_recall_curve needs a non-empty panel")
     n_cells = idx.ivf.n_cells
-    m = idx.pq.m
     qn, kk = len(panel), k
     qindex = {qid: i for i, (qid, _) in enumerate(panel)}
+    # per-query ADC inputs, as IVFPQIndex.search computes them
+    luts = [idx.pq.lookup_table(v) for _, v in panel]
+    offs = [idx.offsets(v) for _, v in panel]
+    hits, rank_of = _winner_census(idx.ivf, emb, prows, panel, k, id_col,
+                                   vec_col, (cell_col, codes_col),
+                                   round_digits, exclude_self)
+    ranks = [rank_of[qid] for qid, _ in panel]
 
-    # per-query ADC params and cell ranks, as IVFPQIndex.search
-    # computes them
-    luts = np.stack([idx.pq.lookup_table(v) for _, v in panel])
-    offs = np.zeros((qn, n_cells), dtype=np.float32)
-    if idx.coding == "residual":
-        offs[:] = [(idx.cell_means @ _unit(v)).astype(np.float32)
-                   for _, v in panel]
-    rank_of = np.stack([np.argsort(idx.ivf.cell_order(v))
-                        for _, v in panel])
-
-    # exact winners + their (cell, codes) -> ADC thresholds
-    exact = topk_per_query_arrow(
-        emb, panel, k=k, doc_id=id_col, vec_col=vec_col,
-        round_digits=round_digits, exclude_self=exclude_self)
-    wrows = (exact.join(prows.select(id_col, cell_col, codes_col),
-                        id_col)
-             .select("qid", id_col, cell_col, codes_col).collect())
+    # each distinct winner's slot: its ADC threshold, id, cell rank
     wscore = np.full((qn, kk), np.inf)        # unused slots never match
     wid = np.full((qn, kk), -1, dtype=np.int64)
     wcr = np.full((qn, kk), n_cells, dtype=np.int64)   # never probed
     valid = np.zeros((qn, kk), dtype=bool)
     fill: dict[int, int] = {}
-    # Dedup join rows on (query, winner id) BEFORE slot assignment: a
-    # re-appended vec_id in prows yields multiple join rows per winner,
-    # and letting each consume a slot could displace a DIFFERENT
-    # winner once fill reaches k (advisor r12). Duplicate copies carry
-    # identical thresholds, so keeping the first is exact.
-    seen: set[tuple[int, int]] = set()
-    for r in wrows:
+    for r in hits:
         qi = qindex[r.qid]
-        key = (qi, int(r[id_col]))
-        if key in seen:
-            continue
-        seen.add(key)
         wi = fill.get(qi, 0)
         if wi >= kk:        # defensive: exact top-k is <= k distinct ids
             continue
         fill[qi] = wi + 1
-        codes = np.asarray(r[codes_col], dtype=np.int64)
-        s32 = (offs[qi][r[cell_col]]
-               + luts[qi][np.arange(m), codes].sum())
-        wscore[qi, wi] = float(round6_half_up(np.float64(s32)))
+        s = _adc(luts[qi], [r[codes_col]], offs[qi], [r[cell_col]])
+        wscore[qi, wi] = float(round6_half_up(s)[0])
         wid[qi, wi] = r[id_col]
-        wcr[qi, wi] = rank_of[qi][r[cell_col]]
+        wcr[qi, wi] = ranks[qi][r[cell_col]]
         valid[qi, wi] = True
 
     def count_better(batches):
@@ -931,12 +918,9 @@ def ivfpq_recall_curve(idx, prows: DataFrame, emb: DataFrame,
             cells = pdf[cell_col].to_numpy().astype(np.int64)
             codes = np.stack(pdf[codes_col].to_numpy()).astype(np.int64)
             out = np.zeros((qn, kk, n_cells), dtype=np.int64)
-            gidx = np.arange(m)[None, :]
             for qi in range(qn):
-                s = (offs[qi][cells]
-                     + luts[qi][gidx, codes].sum(axis=1))
-                s = round6_half_up(s.astype(np.float64))
-                cr = rank_of[qi][cells]
+                s = round6_half_up(_adc(luts[qi], codes, offs[qi], cells))
+                cr = ranks[qi][cells]
                 for wi in range(kk):
                     if not valid[qi, wi]:
                         continue
@@ -987,10 +971,7 @@ def choose_nprobe_ivfpq(idx, prows: DataFrame, emb: DataFrame,
     tier, not more probes)."""
     curve = ivfpq_recall_curve(idx, prows, emb, panel, k=k,
                                shortlist=shortlist, **curve_kwargs)
-    for p in sorted(curve):
-        if curve[p] >= target_recall:
-            return p, curve
-    return idx.ivf.n_cells, curve
+    return _pick_nprobe(curve, target_recall, idx.ivf.n_cells), curve
 
 
 def read_store_meta(path: str) -> dict:

@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults are chosen for the local[32]/128GiB test harness but expressed so
-they transfer to a real cluster: AQE on (runtime re-planning + skew-join
-handling), explicit shuffle partitioning, Arrow for the few Python UDF
-boundaries, UTC session timezone (oracle parity with DuckDB).
+Local mode runs on the host's usable cores (``local_cpus``); the other
+defaults are expressed so they transfer to a real cluster: AQE on
+(runtime re-planning + skew-join handling), explicit shuffle
+partitioning, Arrow for the few Python UDF boundaries, UTC session
+timezone (oracle parity with DuckDB).
 """
 
 from __future__ import annotations
@@ -13,9 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> str:
+    """The local-mode core count: ``$SPARK_GRAFT_CPUS`` when set (the
+    deployment override), else the cores this process may run on."""
+    return (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
+
+
 def get_spark(app_name: str = "dotnetvectorsearch-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus != "*" else 32
     builder = (

@@ -213,6 +213,62 @@ def test_pq_rejects_indivisible_dim(emb):
         A.PQIndex(m=7).fit(emb)
 
 
+def test_raw_ivfpq_at_full_probe_equals_pq(emb, qvec):
+    """Raw-coding IVF-PQ probing every cell is PQ over the whole corpus:
+    same sample, same codebooks, same codes, same ADC plan — identical
+    rows and scores, with and without the exact rescore."""
+    kw = dict(m=16, n_codes=32, seed=5)
+    pq = A.PQIndex(**kw).fit(emb, max_sample=300)
+    ivfpq = A.IVFPQIndex(n_cells=8, nprobe=8, coding="raw", **kw) \
+        .fit(emb, max_sample=300)
+    assert (ivfpq.pq.codebooks == pq.codebooks).all()
+    a_codes, b_codes = pq.transform(emb), ivfpq.transform(emb)
+    for rescore in (None, emb):
+        a = pq.search(a_codes, qvec, 10, rescore=rescore, shortlist=60)
+        b = ivfpq.search(b_codes, qvec, 10, rescore=rescore, shortlist=60)
+        assert [tuple(r) for r in a.collect()] == \
+            [tuple(r) for r in b.collect()]
+
+
+def test_trained_state_tables_keep_their_on_disk_format(emb, tmp_path):
+    """Schema, row count and key order of every trained-state table:
+    stores already persisted are read back by this layout, which a
+    write/read round trip alone would not pin (both sides could change
+    together)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vec = pa.list_(pa.field("element", pa.float32()))
+    i32 = pa.int32()
+    books = [("subspace", i32), ("code", i32), ("centroid", vec)]
+    A.IVFIndex(n_cells=4, nprobe=2).fit(emb).write(emb, f"{tmp_path}/ivf")
+    A.PQIndex(m=8, n_codes=16).fit(emb).write(emb, f"{tmp_path}/pq")
+    A.IVFPQIndex(n_cells=4, nprobe=2, m=8, n_codes=16).fit(emb) \
+        .write(emb, f"{tmp_path}/ivfpq")
+    expect = {
+        "ivf/_centroids": ([("cell", i32), ("centroid", vec),
+                            ("nprobe", i32), ("seed", i32)], 4),
+        "pq/codebooks": (books, 8 * 16),
+        "ivfpq/_meta/cells": ([("cell", i32), ("centroid", vec),
+                               ("cell_mean", vec)], 4),
+        "ivfpq/_meta/codebooks": (books, 8 * 16),
+        "ivfpq/_meta/params": ([("coding", pa.string()), ("nprobe", i32),
+                                ("seed", i32)], 1),
+    }
+    for rel, (fields, n) in expect.items():
+        t = pq.read_table(f"{tmp_path}/{rel}")
+        assert t.schema.equals(pa.schema(fields)), (rel, t.schema)
+        assert t.num_rows == n, rel
+    keys = pq.read_table(f"{tmp_path}/pq/codebooks",
+                         columns=["subspace", "code"]).to_pylist()
+    assert [(r["subspace"], r["code"]) for r in keys] == \
+        [(j, c) for j in range(8) for c in range(16)]
+    cells = pq.read_table(f"{tmp_path}/ivfpq/_meta/cells").column("cell")
+    assert cells.to_pylist() == [0, 1, 2, 3]
+    assert pq.read_table(f"{tmp_path}/ivfpq/_meta/params").to_pylist() \
+        == [{"coding": "residual", "nprobe": 2, "seed": 42}]
+
+
 def test_centroids_by_exact_mean(spark):
     from pyspark.sql import Row
     df = spark.createDataFrame([
@@ -358,8 +414,7 @@ def test_ivfpq_index_write_read_roundtrip_same_results(spark, sf_dir,
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = [float(x) for x in
           emb.filter("vec_id = 0").collect()[0].embedding]
-    idx = IVFPQIndex(n_cells=8, nprobe=3, m=8, coding="residual") \
-        .fit(emb, refine_iters=0)
+    idx = IVFPQIndex(n_cells=8, nprobe=3, m=8, coding="residual").fit(emb)
     path = str(tmp_path / "ivfpq_idx")
     idx.write(emb, path)
     idx2, rows2 = IVFPQIndex.read(spark, path)

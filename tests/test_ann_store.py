@@ -69,6 +69,8 @@ def test_unfingerprintable_input_is_never_fresh(spark, sf_dir, tmp_path,
 def test_unknown_kind_raises(spark, sf_dir, store_root):
     with pytest.raises(ValueError, match="unknown index kind"):
         ann_store.ensure_index(spark, sf_dir, "hnsw", root=store_root)
+    with pytest.raises(ValueError, match="unknown index kind"):
+        ann_store.fit_index(load_table(spark, sf_dir, "embeddings"), "hnsw")
 
 
 def test_serve_ivf_matches_fit_in_query(spark, sf_dir, store_root, qv):
