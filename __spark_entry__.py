@@ -18,7 +18,7 @@ import sys
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -28,6 +28,7 @@ from dotnetvectorsearch_spark.localdf import local_df
 from dotnetvectorsearch_spark.functions import text as T
 from dotnetvectorsearch_spark.functions import vector as V
 from dotnetvectorsearch_spark.operators import search as S
+from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
 from dotnetvectorsearch_spark.sources.io import (
     embedding_from_json,
     embedding_to_json,
@@ -58,6 +59,31 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0,
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.filter(F.col("vec_id") == vec_id).select(
         F.col("embedding").alias(alias))
+
+
+def _source_parity() -> Column:
+    """The train/eval split key of the contamination scenarios: the
+    numeric part of ``source`` mod 2 (0 = train, 1 = eval). One
+    expression everywhere, so the eval-index memo keys
+    (``caching.input_key``) match across queries."""
+    return F.regexp_extract("source", r"(\d+)", 1).cast("int") % 2
+
+
+def _reedit(docs: DataFrame) -> DataFrame:
+    """``docs`` with every ``doc_id % 11 == 0`` text re-edited."""
+    return docs.withColumn(
+        "text",
+        F.when(F.col("doc_id") % 11 == 0,
+               F.concat(F.col("text"), F.lit(" edited v2")))
+        .otherwise(F.col("text")))
+
+
+def _ingest_snapshots(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The incremental-ingest snapshot pair: yesterday's corpus
+    (``doc_id % 7 != 0``) and today's (``doc_id % 5 != 0``, re-edited
+    by ``_reedit``)."""
+    return (docs.filter(F.col("doc_id") % 7 != 0),
+            _reedit(docs.filter(F.col("doc_id") % 5 != 0)))
 
 
 def _q_search_topk(spark, sf_dir):
@@ -421,57 +447,6 @@ def _q_simhash_pairs_md5(spark, sf_dir):
                                   bits=32, chunks=4, max_hamming=3)
 
 
-def _lsh_md5_planes(num_planes: int = 8, dim: int = 64,
-                    offset: int = 0) -> list[list[float]]:
-    """Deterministic hyperplanes from md5 — the SAME double constants are
-    inlined into the Spark expression and the DuckDB oracle SQL, so both
-    engines compute identical sign bits (IEEE double sums in identical
-    left-to-right order). ``offset`` selects a disjoint plane range so
-    multi-table LSH gets independent tables (table t -> planes
-    [t*bits, (t+1)*bits))."""
-    import hashlib
-    return [
-        [int(hashlib.md5(f"plane:{i}:{j}".encode()).hexdigest()[:8], 16)
-         / 2.0 ** 32 - 0.5
-         for j in range(dim)]
-        for i in range(offset, offset + num_planes)
-    ]
-
-
-_LSH_BUCKET_SQL_CACHE: dict = {}
-
-
-def _lsh_md5_bucket_col(vec_col, bits: int = 8,
-                        table: int = 0) -> "F.Column":
-    """Catalyst hyperplane-LSH bucket: sign bits of the md5-plane dot
-    products, as a long — JVM-side, no UDF, identical constants to the
-    DuckDB oracle (IEEE double sums in identical left-to-right order:
-    ``aggregate`` folds ``0.0 + a0*c0 + a1*c1 + ...`` sequentially).
-
-    Built as ONE ``F.expr`` SQL string, memoized per (column, bits):
-    the column-DSL construction (8 planes x 64 ``F.lit`` constants +
-    HOF lambdas) costs ~1000 py4j round-trips ~= 0.6s of DRIVER time
-    per query build — paid inside the bench's timed region on every
-    rep. The SQL string is parsed JVM-side in one call (~10ms) and the
-    resulting expression is identical.
-    """
-    name = vec_col if isinstance(vec_col, str) else "embedding"
-    sql = _LSH_BUCKET_SQL_CACHE.get((name, bits, table))
-    if sql is None:
-        planes = _lsh_md5_planes(num_planes=bits, offset=table * bits)
-        dots = [
-            ("aggregate(zip_with(`{v}`, array({arr}), "
-             "(a, b) -> cast(a as double) * b), "
-             "cast(0.0 as double), (acc, x) -> acc + x)").format(
-                v=name, arr=", ".join(f"{c!r}D" for c in plane))
-            for plane in planes]
-        sql = "cast((" + " + ".join(
-            f"(case when {d} > 0 then {1 << i} else 0 end)"
-            for i, d in enumerate(dots)) + ") as bigint)"
-        _LSH_BUCKET_SQL_CACHE[(name, bits, table)] = sql
-    return F.expr(sql)
-
-
 _M64 = "18446744073709551616"
 
 
@@ -529,30 +504,28 @@ def _xxh64_ascii5_steps(gram_col: str) -> tuple[str, str]:
     return items, "hh"
 
 
-# The ann_lsh_topk engine/oracle pair must draw the SAME planes: the
-# engine derives dim from len(query_vec) at run time while the oracle
-# inlines literals at oracle_sql() build time. These constants are the
-# single source of truth for both sides; `_q_ann_lsh_topk` asserts the
-# fixture's dim against _LSH_ORACLE_DIM so an embedding-dim change
-# fails loudly AT THE ENGINE with a named cause instead of surfacing
-# as an unexplained oracle hash mismatch (advisor r8).
+# Each hyperplane-LSH engine/oracle pair must draw the SAME planes: the
+# engine derives them at run time while the oracle inlines literals at
+# oracle_sql() build time. These constants are the single source of
+# truth for both sides (the md5 family's bucket width grows past 8 bits
+# only above the driver tiers, see `_lsh_adaptive_bits`);
+# `_q_ann_lsh_topk` asserts the fixture's dim against _LSH_ORACLE_DIM
+# so an embedding-dim change fails loudly AT THE ENGINE with a named
+# cause instead of surfacing as an unexplained oracle hash mismatch.
 _LSH_ORACLE_NUM_PLANES = 8
 _LSH_ORACLE_DIM = 64
 
 
-def _seeded_lsh_planes(num_planes: int = _LSH_ORACLE_NUM_PLANES,
-                       dim: int = _LSH_ORACLE_DIM) -> list:
-    """The SAME plane constants `HyperplaneLSH.fit` draws (seeded numpy
-    RandomState(42), row-normalized, float32-rounded), as exact float64
-    values for inlining into oracle SQL — `bucket_udf` computes its sign
-    bits with strict left-to-right double sums precisely so these
-    literals reproduce the buckets in any engine."""
-    import numpy as np
-    rng = np.random.RandomState(42)
-    planes = rng.standard_normal((num_planes, dim))
-    planes = (planes / np.linalg.norm(planes, axis=1, keepdims=True)
-              ).astype(np.float32)
-    return [[float(c) for c in row] for row in planes]
+def _lsh_bucket_sql(planes) -> str:
+    """DuckDB twin of ``HyperplaneLSH.bucket`` over a DOUBLE[] column
+    ``v``: bit i set when ``list_dot_product`` (a sequential double sum)
+    with plane i's literals is > 0. The oracle stays engine-independent
+    SQL; only this builder is shared (registry and tools/scale_oracle)."""
+    return "CAST(" + " + ".join(
+        "(CASE WHEN list_dot_product(v, ["
+        + ", ".join(repr(float(c)) for c in p)
+        + f"]) > 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(planes)) + " AS BIGINT)"
 
 
 _NROWS_MEMO = SessionMemo(256)
@@ -620,18 +593,11 @@ def _q_ann_lsh_topk_md5(spark, sf_dir):
     dot products, candidates = buckets within hamming 1 of the query's
     bucket (9 of 256 buckets ~ 3.5% of the corpus scanned at uniform
     occupancy), exact cosine rescore, top 10. Oracle-checkable twin of
-    ann_lsh_topk (seeded-numpy planes + pandas-UDF bucketing)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding")
-    bucketed = emb.withColumn(
-        "bucket", _lsh_md5_bucket_col(F.col("embedding")))
-    qb = int(bucketed.filter(F.col("vec_id") == 0)
-             .collect()[0].bucket)
-    cand = bucketed.filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qb))) <= 1)
-    return S.top_k_similar(cand.select("vec_id", "embedding"),
-                           _query_vec(spark, sf_dir),
-                           top_k=10, id_col="vec_id", round_digits=6)
+    ann_lsh_topk (seeded-numpy planes)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    lsh = HyperplaneLSH.md5(_LSH_ORACLE_NUM_PLANES, _LSH_ORACLE_DIM)
+    return lsh.search(lsh.transform(emb), _collect_query_vec(spark, sf_dir),
+                      k=10, multiprobe_bits=1)
 
 
 def _q_dedup_clusters_lsh(spark, sf_dir):
@@ -733,9 +699,9 @@ def _semdedup_lsh_impl(spark, sf_dir, threshold, probe_hamming=2,
     tables = []
     for t in range(n_tables):
         col = "bucket" if t == 0 else f"bucket_{t}"
-        bucketed = bucketed.withColumn(
-            col, _lsh_md5_bucket_col(F.col("embedding"), bits=bits,
-                                     table=t))
+        bucketed = HyperplaneLSH.md5(bits, _LSH_ORACLE_DIM,
+                                     offset=t * bits).transform(
+            bucketed, out=col)
         tables.append(col)
     if max_probes == "default":
         max_probes = SEMDEDUP_MAX_PROBES
@@ -1287,9 +1253,8 @@ def _q_contamination_pairs(spark, sf_dir):
         cross_corpus_contamination,
     )
     docs = load_table(spark, sf_dir, "documents")
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    train = docs.filter(src_num % 2 == 0)
-    test = docs.filter(src_num % 2 == 1)
+    train = docs.filter(_source_parity() == 0)
+    test = docs.filter(_source_parity() == 1)
     return cross_corpus_contamination(train, test, shingle_n=3,
                                       min_overlap=0.2)
 
@@ -1470,9 +1435,8 @@ def _q_decontaminated_docs(spark, sf_dir):
     thresholds as contamination_pairs), return survivors' ids."""
     from dotnetvectorsearch_spark.operators.dedup import decontaminate
     docs = load_table(spark, sf_dir, "documents")
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    train = docs.filter(src_num % 2 == 0)
-    test = docs.filter(src_num % 2 == 1)
+    train = docs.filter(_source_parity() == 0)
+    test = docs.filter(_source_parity() == 1)
     return (decontaminate(train, test, shingle_n=3, min_overlap=0.2)
             .select("doc_id", "n_chars"))
 
@@ -1514,13 +1478,8 @@ def _q_corpus_diff(spark, sf_dir):
     full-outer joined on the id; text never shuffles."""
     from dotnetvectorsearch_spark.operators.dedup import corpus_diff
     docs = load_table(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    new = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 11 == 0,
-               F.concat(F.col("text"), F.lit(" edited v2")))
-        .otherwise(F.col("text")))
-    return corpus_diff(old, new)
+    return corpus_diff(docs.filter(F.col("doc_id") % 7 != 0),
+                       _reedit(docs))
 
 
 def _q_contamination_profile(spark, sf_dir):
@@ -1534,9 +1493,8 @@ def _q_contamination_profile(spark, sf_dir):
     from dotnetvectorsearch_spark.operators.dedup import (
         max_eval_overlap)
     docs = load_table(spark, sf_dir, "documents")
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    train = docs.filter(src_num % 2 == 0)
-    test = docs.filter(src_num % 2 == 1)
+    train = docs.filter(_source_parity() == 0)
+    test = docs.filter(_source_parity() == 1)
     ov = max_eval_overlap(train, test, shingle_n=3)
     bucket = (F.when(F.col("max_overlap") >= 0.8, "0.80+")
               .when(F.col("max_overlap") >= 0.6, "0.60-0.80")
@@ -1595,9 +1553,9 @@ def _q_curated_corpus(spark, sf_dir):
     from dotnetvectorsearch_spark.operators.dedup import (
         decontaminate, exact_dedup)
     docs = load_table(spark, sf_dir, "documents")
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    train = docs.filter((src_num % 2 == 0) & (F.col("n_chars") >= 50))
-    test = docs.filter(src_num % 2 == 1)
+    train = docs.filter((_source_parity() == 0)
+                        & (F.col("n_chars") >= 50))
+    test = docs.filter(_source_parity() == 1)
     out = decontaminate(exact_dedup(train, "text", "doc_id"), test,
                         shingle_n=3, min_overlap=0.2)
     return out.select("doc_id", "lang", "source", "n_chars")
@@ -1750,7 +1708,6 @@ def _q_ann_ivf_topk(spark, sf_dir):
 
 def _q_ann_lsh_topk(spark, sf_dir):
     """Hyperplane-LSH ANN: sign buckets + multiprobe search."""
-    from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _collect_query_vec(spark, sf_dir)
     assert len(qv) == _LSH_ORACLE_DIM, (
@@ -1791,15 +1748,16 @@ def _q_media_frames(spark, sf_dir):
 def _q_embedding_neardup_lsh(spark, sf_dir):
     """Embedding near-dup with hyperplane-LSH blocking instead of a label
     column — the fully-unsupervised scale path. Buckets are the 8
-    md5-derived-plane sign bits (`_lsh_md5_bucket_col`: deterministic
-    constants, JVM-side doubles, identical math in the DuckDB oracle),
-    so the blocked pair set is engine-portable and oracle-checked."""
+    md5-derived-plane sign bits (`HyperplaneLSH.md5(...).bucket`:
+    deterministic constants, JVM-side doubles, identical math in the
+    DuckDB oracle), so the blocked pair set is engine-portable and
+    oracle-checked."""
     from dotnetvectorsearch_spark.operators.dedup import (
         embedding_neardup_pairs,
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    bucketed = emb.withColumn(
-        "bucket", _lsh_md5_bucket_col(F.col("embedding")))
+    bucketed = HyperplaneLSH.md5(_LSH_ORACLE_NUM_PLANES,
+                                 _LSH_ORACLE_DIM).transform(emb)
     return embedding_neardup_pairs(bucketed, "vec_id", "embedding",
                                    block_col="bucket",
                                    threshold=NEARDUP_COSINE_THRESHOLD)
@@ -2990,15 +2948,8 @@ def _q_incremental_corpus_update(spark, sf_dir):
     from dotnetvectorsearch_spark.operators.dedup import (
         incremental_update_manifest)
     docs = load_table(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    new = (docs.filter(F.col("doc_id") % 5 != 0)
-           .withColumn(
-               "text",
-               F.when(F.col("doc_id") % 11 == 0,
-                      F.concat(F.col("text"), F.lit(" edited v2")))
-               .otherwise(F.col("text"))))
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    eval_docs = docs.filter(src_num % 2 == 1)
+    old, new = _ingest_snapshots(docs)
+    eval_docs = docs.filter(_source_parity() == 1)
     return incremental_update_manifest(old, new, eval_docs,
                                        shingle_n=3, min_overlap=0.2)
 
@@ -3032,15 +2983,8 @@ def _ensure_bucketed_snapshots(spark, sf_dir):
         for t in ("snap_old", "snap_new"):
             shutil.rmtree(Path(wh) / f"{db}.db" / t, ignore_errors=True)
         docs = load_table(spark, sf_dir, "documents")
-        old = (docs.filter(F.col("doc_id") % 7 != 0)
-               .select("doc_id", "text"))
-        new = (docs.filter(F.col("doc_id") % 5 != 0)
-               .withColumn(
-                   "text",
-                   F.when(F.col("doc_id") % 11 == 0,
-                          F.concat(F.col("text"), F.lit(" edited v2")))
-                   .otherwise(F.col("text")))
-               .select("doc_id", "text"))
+        old, new = (d.select("doc_id", "text")
+                    for d in _ingest_snapshots(docs))
         # 32 buckets = local cluster parallelism (r13 sizing lesson:
         # bucketed scans cap at n_buckets-way parallelism, so the
         # count must match the cluster — 16 idled half the cores and
@@ -3071,8 +3015,7 @@ def _q_incremental_corpus_update_bucketed(spark, sf_dir):
         incremental_update_manifest)
     b_old, b_new = _ensure_bucketed_snapshots(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    eval_docs = docs.filter(src_num % 2 == 1)
+    eval_docs = docs.filter(_source_parity() == 1)
     return incremental_update_manifest(b_old, b_new, eval_docs,
                                        shingle_n=3, min_overlap=0.2)
 
@@ -3093,15 +3036,8 @@ def _q_incremental_corpus_update_fixed_eval(spark, sf_dir):
     from dotnetvectorsearch_spark.operators.dedup import (
         incremental_update_manifest)
     docs = load_table(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    new = (docs.filter(F.col("doc_id") % 5 != 0)
-           .withColumn(
-               "text",
-               F.when(F.col("doc_id") % 11 == 0,
-                      F.concat(F.col("text"), F.lit(" edited v2")))
-               .otherwise(F.col("text"))))
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    eval_docs = docs.filter((src_num % 2 == 1)
+    old, new = _ingest_snapshots(docs)
+    eval_docs = docs.filter((_source_parity() == 1)
                             & (F.col("doc_id") < _FIXED_EVAL_CAP))
     return incremental_update_manifest(old, new, eval_docs,
                                        shingle_n=3, min_overlap=0.2)
@@ -3178,9 +3114,9 @@ def _q_curated_corpus_fixed_eval(spark, sf_dir):
     from dotnetvectorsearch_spark.operators.dedup import (
         decontaminate, exact_dedup)
     docs = load_table(spark, sf_dir, "documents")
-    src_num = F.regexp_extract("source", r"(\d+)", 1).cast("int")
-    train = docs.filter((src_num % 2 == 0) & (F.col("n_chars") >= 50))
-    test = docs.filter((src_num % 2 == 1)
+    train = docs.filter((_source_parity() == 0)
+                        & (F.col("n_chars") >= 50))
+    test = docs.filter((_source_parity() == 1)
                        & (F.col("doc_id") < _FIXED_EVAL_CAP))
     out = decontaminate(exact_dedup(train, "text", "doc_id"), test,
                         shingle_n=3, min_overlap=0.2)
@@ -5656,20 +5592,16 @@ def oracle_sql() -> dict[str, str]:
         WHERE bit_count(xor(a.sig, b.sig)) <= 3
     """
     # Hyperplane LSH: the SAME md5-derived double constants inlined in
-    # the Spark expression (_q_ann_lsh_topk_md5) and here; dot products
+    # the Spark expression (HyperplaneLSH.bucket) and here; dot products
     # sum left-to-right in IEEE doubles in both engines.
-    _planes = _lsh_md5_planes()
-    _bucket_sql = " + ".join(
-        "(CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(c) for c in p)
-        + f"]) > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(_planes))
+    _bucket_sql = _lsh_bucket_sql(HyperplaneLSH.md5(
+        _LSH_ORACLE_NUM_PLANES, _LSH_ORACLE_DIM).planes)
     oracles["ann_lsh_topk_md5"] = f"""
         WITH e AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
             FROM embeddings
         ), b AS (
-            SELECT vec_id, v, CAST({_bucket_sql} AS BIGINT) AS bucket
+            SELECT vec_id, v, {_bucket_sql} AS bucket
             FROM e
         ), q AS (
             SELECT v AS qv, bucket AS qb FROM b WHERE vec_id = 0
@@ -5683,22 +5615,18 @@ def oracle_sql() -> dict[str, str]:
         LIMIT 10
     """
     # Seeded-numpy hyperplane LSH (the ENGINE ann_lsh_topk path): the
-    # same RandomState(42) plane constants inlined as literals;
-    # bucket_udf sums strictly left-to-right in doubles (explicit
-    # per-dim loop, not BLAS) so both engines compute identical sign
-    # bits. multiprobe hamming<=2 matches
+    # planes HyperplaneLSH.fit draws, inlined as literals; both engines
+    # sum each dot strictly left-to-right in doubles, so they compute
+    # identical sign bits. multiprobe hamming<=2 matches
     # HyperplaneLSH.search(multiprobe_bits=2).
-    _np_bucket_sql = " + ".join(
-        "(CASE WHEN list_dot_product(v, ["
-        + ", ".join(repr(c) for c in p)
-        + f"]) > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(_seeded_lsh_planes()))
+    _np_bucket_sql = _lsh_bucket_sql(HyperplaneLSH(
+        num_planes=_LSH_ORACLE_NUM_PLANES).fit(_LSH_ORACLE_DIM).planes)
     oracles["ann_lsh_topk"] = f"""
         WITH e AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
             FROM embeddings
         ), b AS (
-            SELECT vec_id, v, CAST({_np_bucket_sql} AS BIGINT) AS bucket
+            SELECT vec_id, v, {_np_bucket_sql} AS bucket
             FROM e
         ), q AS (
             SELECT v AS qv, bucket AS qb FROM b WHERE vec_id = 0
@@ -5767,7 +5695,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
             FROM embeddings
         ), bk AS (
-            SELECT vec_id, v, CAST({_bucket_sql} AS BIGINT) AS bucket
+            SELECT vec_id, v, {_bucket_sql} AS bucket
             FROM ev
         ), pairs0 AS (
             -- multi-probe hamming<=2: the bipartite probe join in Spark
@@ -5837,7 +5765,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
             FROM embeddings
         ), bk AS (
-            SELECT vec_id, v, CAST({_bucket_sql} AS BIGINT) AS bucket
+            SELECT vec_id, v, {_bucket_sql} AS bucket
             FROM ev
         )
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,

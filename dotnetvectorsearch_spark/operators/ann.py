@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -905,8 +905,31 @@ class IVFPQIndex:
                 .agg(F.round(F.avg("__e"), 6).alias("mse")))
 
 
+def probe_masks(bits: int, hamming: int) -> list[int]:
+    """The multi-probe XOR masks over ``bits`` sign bits (Lv et al.,
+    VLDB 2007): mask 0, then every mask of hamming weight 1..``hamming``
+    ascending, each weight in ``itertools.combinations`` order — a
+    deterministic list, so a probe budget truncates it reproducibly."""
+    from itertools import combinations
+    masks = [0]
+    for h in range(1, hamming + 1):
+        masks += [sum(1 << i for i in c)
+                  for c in combinations(range(bits), h)]
+    return masks
+
+
 class HyperplaneLSH:
-    """Sign-random-projection LSH: bucket = bit pattern of sign(V @ planes)."""
+    """Sign-random-projection LSH: bucket = bit pattern of sign(V @ planes).
+
+    Bit i is set when plane i's dot product, summed strictly left to
+    right in doubles, is > 0 — on the executors as one Catalyst
+    expression (:meth:`bucket`), on the driver for a query
+    (:meth:`probe_buckets`). The same order lets an external engine's
+    sequential ``list_dot_product`` over the same double literals
+    reproduce every bucket; a BLAS matmul's reordered sums could flip a
+    near-zero dot's sign. Planes are float64; two families derive them:
+    :meth:`fit` (seeded numpy normals, float32-rounded) and :meth:`md5`
+    (engine-portable hashed constants, no RNG)."""
 
     def __init__(self, num_planes: int = 12, seed: int = 42):
         self.num_planes = num_planes
@@ -917,54 +940,57 @@ class HyperplaneLSH:
         rng = np.random.RandomState(self.seed)
         planes = rng.standard_normal((self.num_planes, dim))
         self.planes = (planes / np.linalg.norm(planes, axis=1, keepdims=True)
-                       ).astype(np.float32)
+                       ).astype(np.float32).astype(np.float64)
         return self
 
-    def bucket_udf(self):
-        planes = self.planes.astype(np.float64)
-        weights = (1 << np.arange(self.num_planes)).astype(np.int64)
+    @classmethod
+    def md5(cls, num_planes: int, dim: int, offset: int = 0
+            ) -> HyperplaneLSH:
+        """Planes ``offset .. offset + num_planes - 1`` of the md5
+        family: component (i, j) is the first 8 hex digits of
+        md5("plane:i:j") scaled to [-0.5, 0.5). Disjoint ``offset``
+        ranges give independent multi-table LSH tables (table t ->
+        offset t * num_planes)."""
+        import hashlib
+        lsh = cls(num_planes)
+        lsh.planes = np.array([
+            [int(hashlib.md5(f"plane:{i}:{j}".encode()).hexdigest()[:8], 16)
+             / 2.0 ** 32 - 0.5
+             for j in range(dim)]
+            for i in range(offset, offset + num_planes)])
+        return lsh
 
-        @pandas_udf("long")
-        def bucket_of(vecs: pd.Series) -> pd.Series:
-            # Strict LEFT-TO-RIGHT double accumulation (explicit
-            # per-dimension loop, not BLAS matmul): bit-identical to an
-            # external engine's sequential list_dot_product over the
-            # same double constants, so the sign bits — hence the
-            # bucket ids and the probed candidate set — are
-            # oracle-reproducible. A float32 matmul's reordered /
-            # pairwise sums can flip a near-zero dot's sign and
-            # silently change one bucket. The k-loop keeps the working
-            # set O(batch x planes) — the earlier batch x planes x dim
-            # outer-product + cumsum held ~2x80 MB per 10k-row batch at
-            # 12x64 and scaled with dim (advisor r8).
-            m = np.stack(vecs.to_numpy()).astype(np.float64)
-            acc = np.zeros((m.shape[0], planes.shape[0]))
-            for k in range(planes.shape[1]):
-                acc += m[:, k, None] * planes[None, :, k]
-            return pd.Series((acc > 0) @ weights)
-
-        return bucket_of
+    def bucket(self, vec_col: str = "embedding") -> Column:
+        """The bucket id (a long) of ``vec_col``: JVM-side, no Python
+        UDF; a null vector gets a null bucket. Built as ONE SQL string
+        (``aggregate`` folds ``0.0 + a0*c0 + a1*c1 + ...``), parsed in
+        one call — the column DSL would cost ~1000 py4j round trips."""
+        dots = [
+            ("aggregate(zip_with(`{v}`, array({arr}), "
+             "(a, b) -> cast(a as double) * b), "
+             "cast(0.0 as double), (acc, x) -> acc + x)").format(
+                v=vec_col, arr=", ".join(f"{float(c)!r}D" for c in plane))
+            for plane in self.planes]
+        return F.expr(
+            f"case when `{vec_col}` is not null then cast(("
+            + " + ".join(f"(case when {d} > 0 then {1 << i} else 0 end)"
+                         for i, d in enumerate(dots))
+            + ") as bigint) end")
 
     def transform(self, emb: DataFrame, vec_col: str = "embedding",
                   out: str = "bucket") -> DataFrame:
-        return emb.withColumn(out, self.bucket_udf()(F.col(vec_col)))
+        return emb.withColumn(out, self.bucket(vec_col))
 
     def probe_buckets(self, query_vec: list[float],
                       multiprobe_bits: int = 1) -> list[int]:
         """Exact bucket + all buckets within `multiprobe_bits` bit flips."""
         q = np.asarray(query_vec, dtype=np.float64)
-        # same strict sequential double sum as bucket_udf (oracle parity)
-        bits = np.cumsum(self.planes.astype(np.float64) * q, axis=1)[:, -1] > 0
+        # the same strict left-to-right double sum as bucket()
+        bits = np.cumsum(self.planes * q, axis=1)[:, -1] > 0
         base = int((1 << np.arange(self.num_planes))[bits].sum())
-        buckets = {base}
-        if multiprobe_bits >= 1:
-            for i in range(self.num_planes):
-                buckets.add(base ^ (1 << i))
-        if multiprobe_bits >= 2:
-            for i in range(self.num_planes):
-                for j in range(i + 1, self.num_planes):
-                    buckets.add(base ^ (1 << i) ^ (1 << j))
-        return sorted(buckets)
+        return sorted({base ^ m
+                       for m in probe_masks(self.num_planes,
+                                            multiprobe_bits)})
 
     def search(self, bucketed: DataFrame, query_vec: list[float], k: int = 5,
                id_col: str = "vec_id", vec_col: str = "embedding",

@@ -997,8 +997,8 @@ def lsh_bucket_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
     """Multi-probe hyperplane-LSH cosine near-dup pairs.
 
     ``bucket_col`` is a sign-bit bucket (``bits`` hyperplane sign bits
-    packed into a long — see ``__spark_entry__._lsh_md5_bucket_col`` /
-    ``operators.ann``). Exact-bucket blocking has poor pair recall: for
+    packed into a long — ``operators.ann.HyperplaneLSH.bucket``).
+    Exact-bucket blocking has poor pair recall: for
     cosine s the per-plane agreement is p = 1 - arccos(s)/pi, so ALL
     ``bits`` planes agree with probability p^bits (~2% at s=0.35,
     bits=8). Multi-probe (Lv et al., VLDB'07) fixes this without more
@@ -1075,13 +1075,10 @@ def lsh_bucket_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
     probabilistic, not structural; no boundary pair observed on any
     driver tier).
     """
-    from itertools import combinations
+    from dotnetvectorsearch_spark.operators.ann import probe_masks
 
     tables = list(bucket_cols) if bucket_cols else [bucket_col]
-    masks = [0]
-    for h in range(1, probe_hamming + 1):
-        masks += [sum(1 << i for i in c)
-                  for c in combinations(range(bits), h)]
+    masks = probe_masks(bits, probe_hamming)
     if max_probes is not None:
         if max_probes < 1:
             raise ValueError(f"max_probes must be >= 1, got {max_probes}")

@@ -267,6 +267,27 @@ def moore_lewis_scores(candidates: DataFrame, target: DataFrame,
                          round_digits).alias("ml_score")))
 
 
+def _chars(col: str) -> Column:
+    """The characters of string column ``col`` as an array<string>."""
+    return F.expr(
+        f"transform(sequence(1, length({col})), i -> substring({col}, i, 1))")
+
+
+def _merge_pair(syms: Column, left: str, right: str) -> Column:
+    """One BPE merge rule over a symbol array: a greedy left-to-right
+    fold that rewrites each adjacent (``left``, ``right``) into
+    ``left + right``."""
+    return F.aggregate(
+        syms, F.array().cast("array<string>"),
+        lambda acc, x: F.when(
+            (F.size(acc) > 0)
+            & (F.element_at(acc, -1) == F.lit(left))
+            & (x == F.lit(right)),
+            F.concat(F.slice(acc, 1, F.size(acc) - 1),
+                     F.array(F.lit(left + right))))
+        .otherwise(F.concat(acc, F.array(x))))
+
+
 def _bpe_driver_train(word_counts: list[tuple[str, int]],
                       n_merges: int) -> list[tuple[int, str, str, str]]:
     """Pure-Python merge loop over the collected word-frequency table —
@@ -364,10 +385,7 @@ def bpe_train_rules(docs: DataFrame, text_col: str = "text",
         return _bpe_driver_train(
             list(zip(table.column("w").to_pylist(),
                      table.column("cnt").to_pylist())), n_merges)
-    syms = words.select(
-        "cnt",
-        F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        .alias("syms"))
+    syms = words.select("cnt", _chars("w").alias("syms"))
     syms = transient_persist(syms)
     rules = []
     for rank in range(n_merges):
@@ -384,16 +402,8 @@ def bpe_train_rules(docs: DataFrame, text_col: str = "text",
             break
         left, right = pairs[0].p.l, pairs[0].p.r
         rules.append((rank, left, right, left + right))
-        merged = F.aggregate(
-            F.col("syms"), F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(left))
-                & (x == F.lit(right)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                         F.array(F.lit(left + right))))
-            .otherwise(F.concat(acc, F.array(x))))
-        syms = transient_persist(syms.select("cnt", merged.alias("syms")))
+        syms = transient_persist(syms.select(
+            "cnt", _merge_pair(F.col("syms"), left, right).alias("syms")))
     return rules
 
 
@@ -410,23 +420,9 @@ def bpe_segment(docs: DataFrame, merges: list[tuple[str, str]],
         F.col(id_col),
         F.explode(tokens(text_col)).alias("token"))
     out = out.filter(F.length("token") > 0)
-    pieces = F.expr(
-        "transform(sequence(1, length(token)), i -> substring(token, i, 1))")
-
-    def _merge_fold(lf: str, rt: str):
-        def fold(acc, x):
-            return F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(lf))
-                & (x == F.lit(rt)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                         F.array(F.lit(lf + rt)))) \
-                .otherwise(F.concat(acc, F.array(x)))
-        return fold
-
+    pieces = _chars("token")
     for left, right in merges:
-        pieces = F.aggregate(pieces, F.array().cast("array<string>"),
-                             _merge_fold(left, right))
+        pieces = _merge_pair(pieces, left, right)
     return out.select(id_col, "token", pieces.alias("pieces"))
 
 

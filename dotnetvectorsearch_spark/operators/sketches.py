@@ -169,49 +169,30 @@ def mg_top(parts: DataFrame, top_n: int = 20) -> DataFrame:
             .limit(top_n))
 
 
-def mg_merge_compress(summary: DataFrame, k: int = 64) -> DataFrame:
-    """Merge an MG-summary frame (possibly several summaries unioned,
-    duplicate keys allowed) and compress it back to at most ``k``
-    tracked keys — the Agarwal et al. '12 mergeable-summaries step:
-    sum per-key partials, and if more than k keys survive, subtract the
-    (k+1)-th largest estimate from every key, drop non-positives, and
-    add the subtracted amount to the slack. The [est, est + slack]
-    undercount guarantee is preserved across arbitrary merge trees,
-    which is what lets a STREAM maintain one bounded summary forever.
-
-    The (k+1)-th-largest lookup is a counted-and-bounded driver action
-    (k+1 rows); everything else is frame algebra.
-    """
-    from dotnetvectorsearch_spark.caching import transient_persist
-
-    # Three actions read this lineage (the two driver lookups below plus
-    # the caller's final action over the returned projection); without a
-    # persist the mapInPandas partials recompute once per action —
-    # per micro-batch in stream_heavy_hitters (advisor r4). Registered
-    # transient: the caller releases it after its write.
-    merged = transient_persist(
-        summary.groupBy("key").agg(F.sum("est").alias("est"),
-                                   F.sum("slack").alias("slack")))
-    keys = merged.filter(F.col("key").isNotNull())
-    slack_total = (merged.agg(F.coalesce(F.sum("slack"), F.lit(0)))
-                   .collect()[0][0])
-    top = keys.orderBy(F.desc("est"), F.asc("key")).limit(k + 1).collect()
-    if len(top) <= k:
-        spark = summary.sparkSession
-        from dotnetvectorsearch_spark.localdf import local_df
-        slack_row = local_df(spark, [(None, 0, int(slack_total))],
-                             "key string, est long, slack long")
-        return (keys.select("key", "est", F.lit(0).alias("slack"))
-                .unionByName(slack_row))
-    m = int(top[-1].est)
-    spark = summary.sparkSession
-    from dotnetvectorsearch_spark.localdf import local_df
-    slack_row = local_df(spark, [(None, 0, int(slack_total) + m)],
-                         "key string, est long, slack long")
-    return (keys.select("key", (F.col("est") - m).alias("est"),
-                        F.lit(0).alias("slack"))
-            .filter(F.col("est") > 0)
-            .unionByName(slack_row))
+def mg_merge_compress(rows, k: int = 64) -> tuple[dict, int]:
+    """Merge MG-summary rows — (key, est, slack) tuples from one or
+    several summaries (``mg_partials(...).collect()``, a stored
+    summary; duplicate keys allowed) — and compress the result back to
+    at most ``k`` tracked keys: the Agarwal et al. '12 mergeable-
+    summaries step. Sum per-key partials; if more than k keys survive,
+    subtract the (k+1)-th largest estimate (est desc, key asc
+    tie-break) from every key, drop non-positives, and add the
+    subtracted amount to the slack. The [est, est + slack] undercount
+    guarantee is preserved across arbitrary merge trees, which is what
+    lets a STREAM maintain one bounded summary forever. Plain Python
+    over O(k x summaries) rows; returns (counters, slack)."""
+    counters: dict = {}
+    slack_total = 0
+    for key, est, slack in rows:
+        slack_total += int(slack or 0)
+        if key is not None:
+            counters[key] = counters.get(key, 0) + int(est)
+    if len(counters) > k:
+        ordered = sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))
+        m = ordered[k][1]
+        counters = {key: c - m for key, c in ordered[:k] if c > m}
+        slack_total += m
+    return counters, slack_total
 
 
 def heavy_hitters_mg(df: DataFrame, col: str, k: int = 64,

@@ -212,10 +212,11 @@ def stream_index_append(vectors: DataFrame, index, path: str,
     """Incremental ANN-index maintenance: assign each arriving vector to
     its IVF cell (one narrow Arrow matmul against the fixed centroids —
     no shuffle, no refit) and append it into the ``partitionBy(cell)``
-    parquet index — new vectors are immediately searchable with the
-    same partition-pruned probe path as the batch-built index, with NO
-    rebuild and NO rescan: the build-once/serve-many contract extended
-    to ingest-many.
+    parquet index through ``IVFIndex.append`` (its bounded driver write
+    for a small trigger, else the distributed write) — new vectors are
+    immediately searchable with the same partition-pruned probe path as
+    the batch-built index, with NO rebuild and NO rescan: the
+    build-once/serve-many contract extended to ingest-many.
 
     The centroids stay fixed between retrains (the standard IVF
     maintenance contract: assignment drifts slowly; retrain + full
@@ -252,8 +253,7 @@ def stream_index_append(vectors: DataFrame, index, path: str,
         index, _ = IVFIndex.read(vectors.sparkSession, path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (index.transform(batch_df, vec_col=vec_col)
-         .write.mode("append").partitionBy("cell").parquet(path))
+        index.append(batch_df, path, vec_col)
         from dotnetvectorsearch_spark.operators.ann_store import (
             current_snapshot_version, publish_snapshot)
         if publish_snapshots or (publish_snapshots is None
@@ -530,42 +530,21 @@ def stream_heavy_hitters(stream: DataFrame, col: str, path: str,
     the batch, collecting <= (k+1) rows PER PARTITION (never the
     stream; 1000 executors x 65 rows is ~65k driver rows, the
     coordinator-merge regime mergeable summaries are built for). The
-    merge-with-stored-summary + compress step runs in plain Python on
+    merge-with-stored-summary + compress step
+    (operators/sketches.mg_merge_compress) runs in plain Python on
     <= k+1 + collected rows, and the new summary lands via a direct
     pyarrow write — no second Spark job, no driver collects inside a
     plan, no Spark write stage. (Round 9: the previous frame-algebra
     trigger paid 3 driver actions + a Spark write per batch = 5.4 s
-    triggers; this is the same math at <= 1 job. Semantics mirror
-    operators/sketches.mg_merge_compress exactly — same tie-break,
-    same slack bookkeeping — pinned by the exact-regime stream test.)
+    triggers; this is the same math at <= 1 job.)
     Read the current report any time with
     `mg_top(spark.read.parquet(path))`. Same atomic parquet-swap +
     crash recovery as `stream_rollup_maintenance`.
     """
     import os
 
-    from dotnetvectorsearch_spark.operators.sketches import mg_partials
-
-    def _merge_compress_py(rows) -> tuple[dict, int]:
-        """Driver-side twin of sketches.mg_merge_compress over (key,
-        est, slack) tuples: sum per-key partials, and if more than k
-        keys survive, subtract the (k+1)-th largest estimate (est
-        desc, key asc tie-break — identical ordering to the frame
-        version) from every key, drop non-positives, fold the
-        subtracted amount into the slack."""
-        counters: dict = {}
-        slack_total = 0
-        for key, est, slack in rows:
-            slack_total += int(slack or 0)
-            if key is not None:
-                counters[key] = counters.get(key, 0) + int(est)
-        if len(counters) > k:
-            ordered = sorted(counters.items(),
-                             key=lambda kv: (-kv[1], kv[0]))
-            m = ordered[k][1]
-            counters = {key: c - m for key, c in ordered[:k] if c > m}
-            slack_total += m
-        return counters, slack_total
+    from dotnetvectorsearch_spark.operators.sketches import (
+        mg_merge_compress, mg_partials)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         def write(stage: str) -> None:
@@ -580,7 +559,7 @@ def stream_heavy_hitters(stream: DataFrame, col: str, path: str,
                 rows.extend(zip(stored.column("key").to_pylist(),
                                 stored.column("est").to_pylist(),
                                 stored.column("slack").to_pylist()))
-            counters, slack_total = _merge_compress_py(rows)
+            counters, slack_total = mg_merge_compress(rows, k)
             table = pa.table({
                 "key": pa.array(list(counters) + [None],
                                 type=pa.string()),

@@ -178,6 +178,38 @@ def test_lsh_candidate_reduction(emb, qvec):
     assert 0 < n_cand < emb.count()
 
 
+def test_lsh_bucket_matches_sequential_double_reference(spark, emb):
+    """HyperplaneLSH.bucket (one Catalyst expression) equals a numpy
+    strict left-to-right float64 sum on every row, for seeded planes
+    (8 and 12) and md5 planes (8 bits, tables 0-2);
+    probe_buckets(v, 0) is each row's own bucket; a null vector gets a
+    null bucket (never a candidate)."""
+    import numpy as np
+    rows = emb.select("vec_id", "embedding").collect()
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    dim = mat.shape[1]
+    cores = [A.HyperplaneLSH(num_planes=n).fit(dim) for n in (8, 12)]
+    cores += [A.HyperplaneLSH.md5(8, dim, offset=8 * t) for t in range(3)]
+    for lsh in cores:
+        assert lsh.planes.dtype == np.float64
+        acc = np.zeros((len(mat), lsh.num_planes))
+        for j in range(dim):
+            acc += mat[:, j, None] * lsh.planes[None, :, j]
+        want = (acc > 0) @ (1 << np.arange(lsh.num_planes))
+        got = dict(lsh.transform(emb).select("vec_id", "bucket").collect())
+        for r, w in zip(rows, want):
+            assert got[r.vec_id] == w
+            assert lsh.probe_buckets(r.embedding, 0) == [w]
+    nulls = spark.createDataFrame([(1, None)],
+                                  "vec_id long, embedding array<float>")
+    assert cores[0].transform(nulls).collect()[0].bucket is None
+
+
+def test_probe_masks_order():
+    assert A.probe_masks(3, 0) == [0]
+    assert A.probe_masks(3, 2) == [0, 1, 2, 4, 3, 5, 6]
+
+
 def test_pq_codes_shape_and_range(emb, qvec):
     pq = A.PQIndex(m=8, n_codes=16).fit(emb)
     row = pq.transform(emb).filter(F.col("vec_id") == 0).collect()[0]

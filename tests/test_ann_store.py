@@ -243,6 +243,10 @@ def test_ivfpq_recall_curve_matches_direct_serve(spark,
     k = 10
     curve = ann_store.ivfpq_recall_curve(idx, prows, emb, panel, k=k,
                                          shortlist=50)
+    # at full probe only the ADC shortlist cut can lose a winner: the
+    # shortlist must bind here, or nothing below checks the curve's
+    # threshold counting
+    assert curve[idx.ivf.n_cells] < 1.0
     exact_sets: dict[int, set] = {}
     exact = topk_per_query_arrow(emb, panel, k=k, round_digits=6,
                                  exclude_self=True)

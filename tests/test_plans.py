@@ -299,11 +299,13 @@ def test_minhash_candidates_no_window_no_selfjoin(spark, sf_dir):
 
 
 def test_semdedup_lsh_bucket_blocking_is_catalyst(spark, sf_dir):
-    """The md5-plane bucket expression must stay JVM-side: no Python
-    UDF boundary (BatchEvalPython / ArrowEvalPython) in the plan."""
-    plan = _plan(spark, sf_dir, "semdedup_lsh")
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    """The hyperplane bucket expression (HyperplaneLSH.bucket, both
+    plane families) must stay JVM-side: no Python UDF boundary
+    (BatchEvalPython / ArrowEvalPython) in the plan."""
+    for name in ("semdedup_lsh", "ann_lsh_topk", "embedding_neardup_lsh"):
+        plan = _plan(spark, sf_dir, name)
+        assert "BatchEvalPython" not in plan, name
+        assert "ArrowEvalPython" not in plan, name
 
 
 def test_incremental_bloom_probe_stays_off_the_corpus_side(spark, sf_dir):

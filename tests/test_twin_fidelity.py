@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
 from tools.twin_fidelity import (cluster_fidelity, pair_fidelity,
                                  pagerank_fidelity)
 
@@ -144,12 +145,10 @@ def test_multiprobe_lifts_semantic_pair_recall(spark):
     from dotnetvectorsearch_spark.operators.dedup import (
         embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
-    import __spark_entry__ as entrymod
 
     emb = gen_embeddings_clustered(spark, 300, dim=64, n_clusters=8)
     emb = emb.select("vec_id", "embedding")
-    bucketed = emb.withColumn(
-        "bucket", entrymod._lsh_md5_bucket_col(F.col("embedding")))
+    bucketed = HyperplaneLSH.md5(8, 64).transform(emb)
     exact = embedding_neardup_pairs(emb, "vec_id", "embedding",
                                     threshold=0.5,
                                     allow_unblocked=True).cache()
@@ -189,8 +188,8 @@ def test_adaptive_design_holds_recall_at_high_bits(spark):
     cols = []
     for t in range(n_tables):
         c = f"hb{t}"
-        emb = emb.withColumn(c, entrymod._lsh_md5_bucket_col(
-            F.col("embedding"), bits=bits, table=t))
+        emb = HyperplaneLSH.md5(bits, 64, offset=t * bits).transform(
+            emb, out=c)
         cols.append(c)
     exact = embedding_neardup_pairs(
         emb.select("vec_id", "embedding"), "vec_id", "embedding",
@@ -215,7 +214,6 @@ def test_multitable_lsh_superset_no_dups_and_recall_gain(spark):
     from dotnetvectorsearch_spark.operators.dedup import (
         embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
-    import __spark_entry__ as entrymod
 
     bits, n_tables = 12, 3
     emb = gen_embeddings_clustered(spark, 300, dim=64, n_clusters=8)
@@ -223,8 +221,8 @@ def test_multitable_lsh_superset_no_dups_and_recall_gain(spark):
     cols = []
     for t in range(n_tables):
         c = f"b{t}"
-        emb = emb.withColumn(c, entrymod._lsh_md5_bucket_col(
-            F.col("embedding"), bits=bits, table=t))
+        emb = HyperplaneLSH.md5(bits, 64, offset=t * bits).transform(
+            emb, out=c)
         cols.append(c)
     exact = embedding_neardup_pairs(
         emb.select("vec_id", "embedding"), "vec_id", "embedding",
@@ -264,7 +262,6 @@ def test_semdedup_hi_operating_point_kept_agreement_floor(spark):
     with exact >= 0.95 after identical components+keep-min algebra."""
     from pyspark.sql.window import Window as W
 
-    import __spark_entry__ as entrymod
     from dotnetvectorsearch_spark.operators.dedup import (
         connected_components, embedding_neardup_pairs,
         lsh_bucket_neardup_pairs)
@@ -288,8 +285,7 @@ def test_semdedup_hi_operating_point_kept_agreement_floor(spark):
 
     exact_pairs = embedding_neardup_pairs(
         emb, "vec_id", "embedding", threshold=tau, allow_unblocked=True)
-    bucketed = emb.withColumn(
-        "bucket", entrymod._lsh_md5_bucket_col(F.col("embedding")))
+    bucketed = HyperplaneLSH.md5(8, 64).transform(emb)
     twin_pairs = lsh_bucket_neardup_pairs(
         bucketed, "vec_id", "embedding", bucket_col="bucket",
         threshold=tau, probe_hamming=1, bits=8)

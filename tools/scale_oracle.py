@@ -39,6 +39,7 @@ sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
+from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
 from dotnetvectorsearch_spark.session import get_spark
 from tools.check_oracle import normalize
 
@@ -104,15 +105,11 @@ def semdedup_tier_sql(n_rows: int, threshold: float, probe_hamming: int,
     bits = entrymod._lsh_adaptive_bits(n_rows)
     n_tables = entrymod._lsh_tables_for_recall(
         bits, probe_hamming=probe_hamming, target_recall=target_recall)
-    bcols = []
-    for t in range(n_tables):
-        planes = entrymod._lsh_md5_planes(num_planes=bits, offset=t * bits)
-        bsql = " + ".join(
-            "(CASE WHEN list_dot_product(v, ["
-            + ", ".join(repr(c) for c in p)
-            + f"]) > 0 THEN {1 << i} ELSE 0 END)"
-            for i, p in enumerate(planes))
-        bcols.append(f"CAST({bsql} AS BIGINT) AS b{t}")
+    bcols = [
+        entrymod._lsh_bucket_sql(HyperplaneLSH.md5(
+            bits, entrymod._LSH_ORACLE_DIM, offset=t * bits).planes)
+        + f" AS b{t}"
+        for t in range(n_tables)]
     ham = " OR ".join(
         f"bit_count(xor(x.b{t}, y.b{t})) <= {probe_hamming}"
         for t in range(n_tables))

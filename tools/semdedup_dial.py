@@ -38,7 +38,6 @@ import math
 import subprocess
 import sys
 import time
-from itertools import combinations
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -48,6 +47,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
+from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH, probe_masks
 from dotnetvectorsearch_spark.operators.dedup import (
     connected_components,
     embedding_neardup_pairs,
@@ -81,8 +81,7 @@ def _kept(emb, pairs):
 def measure(spark, sf_dir: str) -> dict:
     emb = entrymod.load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
-    bucketed = emb.withColumn(
-        "bucket", entrymod._lsh_md5_bucket_col(F.col("embedding")))
+    bucketed = HyperplaneLSH.md5(BITS, 64).transform(emb)
     bucketed = bucketed.persist()
     n = bucketed.count()
     # ground truth: unblocked exact all-pairs (feasible at tier sizes)
@@ -107,8 +106,8 @@ def measure(spark, sf_dir: str) -> dict:
         cols = []
         for t in range(n_tables):
             c = f"bl{t}"
-            b2 = b2.withColumn(c, entrymod._lsh_md5_bucket_col(
-                F.col("embedding"), bits=bits, table=t))
+            b2 = HyperplaneLSH.md5(bits, 64, offset=t * bits).transform(
+                b2, out=c)
             cols.append(c)
         reps = []
         for _ in range(2):
@@ -142,9 +141,7 @@ def measure(spark, sf_dir: str) -> dict:
         n_probes = sum(math.comb(BITS, i) for i in range(h + 1))
         # candidate volume: bucket-equal (probe, base) id< pairs —
         # exactly what the scoring join enumerates
-        masks = [0] + [sum(1 << i for i in c)
-                       for hh in range(1, h + 1)
-                       for c in combinations(range(BITS), hh)]
+        masks = probe_masks(BITS, h)
         probes = bucketed.select(
             F.col("vec_id"),
             F.explode(F.array(*[
