@@ -582,12 +582,13 @@ def stream_heavy_hitters(stream: DataFrame, col: str, path: str,
 
 _ND_BLOOM_BITS = 1 << 23       # 1 MB bitset: ~10 bits/key to ~8e5 keys
 _ND_BLOOM_HASHES = 7
-# Driver-side collect bound for the store-sliver verify reads. The
-# sliver (store band rows in buckets the batch's bloom probe hit) is
-# true-collision + ~1% false-positive sized in practice, but a
-# mega-bucket could blow it up — past the bound the trigger falls back
-# to the distributed verify join instead of OOMing the driver
-# (bound-then-fallback doctrine, same as search.knn_graph).
+# Driver-side collect bound for the store-sliver verify reads, in rows
+# next to the shared localdf.DRIVER_BYTES (a row is ~720 Arrow bytes at
+# 16 hex hashes). The sliver (store band rows in buckets the batch's
+# bloom probe hit) is true-collision + ~1% false-positive sized in
+# practice, but a mega-bucket could blow it up — past either bound the
+# trigger falls back to the distributed verify join instead of OOMing
+# the driver (bound-then-fallback doctrine, same as search.knn_graph).
 _ND_SLIVER_COLLECT_MAX = 200_000
 
 
@@ -747,9 +748,9 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     similar to ANY lower-id doc of its batch. Similarity is ESTIMATED
     from the K stored hashes (matching/K, the unbiased minhash Jaccard
     estimator) — identical to `neardup_filter_incremental`. Sliver
-    verify reads collect at most ``_ND_SLIVER_COLLECT_MAX`` rows; a
-    mega-sliver falls back to the distributed verify join rather than
-    OOMing the driver.
+    verify reads collect at most ``_ND_SLIVER_COLLECT_MAX`` rows and
+    ``localdf.DRIVER_BYTES`` bytes; a mega-sliver falls back to the
+    distributed verify join rather than OOMing the driver.
 
     At-least-once on replay (appends are not idempotent; bloom re-ORs
     ARE) — the usual foreachBatch caveat; pair with a batch-id
@@ -775,14 +776,17 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     def _est(a: tuple, b: tuple) -> float:
         return sum(x == y for x, y in zip(a, b)) / num_hashes
 
-    def _verify_driver(spark, rows, by_bucket) -> set:
-        """Driver-side sliver verify: rows = collected store band rows
-        (band, bucket, sig list); by_bucket = batch docs per band key.
-        Returns batch ids that are near-dups of stored docs."""
+    def _verify_driver(sliver, by_bucket) -> set:
+        """Driver-side sliver verify: sliver = the collected store band
+        rows (a pyarrow table of band, bucket, sig list); by_bucket =
+        batch docs per band key. Returns batch ids that are near-dups
+        of stored docs."""
         dup = set()
-        for r in rows:
-            key = f"{r.band}|{r.bucket}"
-            s_sig = tuple(r.sig)
+        for band, bucket, sig in zip(sliver.column("band").to_pylist(),
+                                     sliver.column("bucket").to_pylist(),
+                                     sliver.column("sig").to_pylist()):
+            key = f"{band}|{bucket}"
+            s_sig = tuple(sig)
             for bid, b_sig in by_bucket.get(key, ()):
                 if bid not in dup and _est(b_sig, s_sig) >= threshold:
                     dup.add(bid)
@@ -896,24 +900,23 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
             # thousands-of-literals isin() — the literal tree's py4j
             # construction + serialization alone cost ~1.5s/trigger on
             # all-dup batches (the warm-store worst case)
-            from dotnetvectorsearch_spark.localdf import local_df
-            keys_df = local_df(
+            from dotnetvectorsearch_spark import localdf
+            keys_df = localdf.local_df(
                 spark, [(int(k.split("|", 1)[0]), k.split("|", 1)[1])
                         for k in hit_keys], "band int, bucket string")
             sliver_df = (spark.read.parquet(bands_store)
                          .join(F.broadcast(keys_df),
                                ["band", "bucket"], "left_semi"))
-            sliver = (sliver_df.limit(_ND_SLIVER_COLLECT_MAX + 1)
-                      .collect())
-            if len(sliver) > _ND_SLIVER_COLLECT_MAX:
+            sliver, _ = localdf.collect_bounded(
+                sliver_df, _ND_SLIVER_COLLECT_MAX, localdf.DRIVER_BYTES)
+            if sliver is None:
                 # mega-sliver: verify distributed instead (batch side
                 # broadcast onto the narrow banded store)
                 b_rows = [
                     (d, list(s), int(k.split("|", 1)[0]),
                      k.split("|", 1)[1])
                     for k in hit_keys for d, s in surv_keys[k]]
-                from dotnetvectorsearch_spark.localdf import local_df
-                bdf = local_df(
+                bdf = localdf.local_df(
                     spark, b_rows, f"{id_col} long, b_sig array<string>, "
                                    "band int, bucket string")
                 eq = F.size(F.filter(
@@ -926,7 +929,7 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
                             >= threshold)
                     .select(id_col).distinct().collect()}
             else:
-                dup_vs_store = _verify_driver(spark, sliver, surv_keys)
+                dup_vs_store = _verify_driver(sliver, surv_keys)
             survivors = {d: s for d, s in survivors.items()
                          if d not in dup_vs_store}
         # --- sig-less (short) docs: exact-hash gate, bloom-prefiltered

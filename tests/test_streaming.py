@@ -602,13 +602,28 @@ def test_stream_rollup_recovers_history_after_torn_swap(spark, tmp_path,
     assert not os.path.isdir(f"{out}__old-7")         # survivor consumed
 
 
+@pytest.mark.parametrize("path", ["driver", "distributed"])
 def test_stream_neardup_dedup_gates_against_growing_store(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch, path):
     """Batch 1 seeds the store; batch 2's near-dup of a batch-1 doc
     must be dropped while its novel doc passes; within-batch dups
-    resolve to the min id. The store holds SIGNATURES only."""
+    resolve to the min id. The store holds SIGNATURES only. With the
+    shared byte bound at 0 the store sliver is verified by the
+    distributed join instead of on the driver, with the same
+    survivors and store rows."""
+    from dotnetvectorsearch_spark import localdf
     from dotnetvectorsearch_spark.streaming.ingest import (
         stream_neardup_dedup)
+    if path == "distributed":
+        monkeypatch.setattr(localdf, "DRIVER_BYTES", 0)
+    collected = []
+    bounded = localdf.collect_bounded
+
+    def spy(df, max_rows, max_bytes):
+        table, reason = bounded(df, max_rows, max_bytes)
+        collected.append(table is not None)
+        return table, reason
+    monkeypatch.setattr(localdf, "collect_bounded", spy)
     src = tmp_path / "nd_in"
     src.mkdir()
     out = str(tmp_path / "nd_out")
@@ -660,6 +675,8 @@ def test_stream_neardup_dedup_gates_against_growing_store(
     assert sorted(r.doc_id for r in
                   spark.read.parquet(store).select("doc_id").collect()
                   ) == [1, 5, 9]
+    # the store gate ran, each time on the path under test
+    assert collected and set(collected) == {path == "driver"}
 
 
 def test_stream_neardup_dedup_survives_torn_bloom_meta(spark, tmp_path):

@@ -17,6 +17,9 @@ import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+
+from dotnetvectorsearch_spark.session import local_cpus  # noqa: E402
 
 
 def _run_json(cmd: list[str]) -> dict:
@@ -51,7 +54,7 @@ def main(round_no: int) -> None:
 
     lines = [
         f"# PERF — round-{round_no} per-query comparison "
-        f"(sf={s['sf']}, local[32], best-of-2 after warm-up)",
+        f"(sf={s['sf']}, local[{local_cpus()}], best-of-2 after warm-up)",
         "",
         f"Spark = `python bench.py` ({len(s['queries'])} queries, total "
         f"{s['value']}s, measured single-stage floor {floor}s/query); "

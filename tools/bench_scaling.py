@@ -18,7 +18,8 @@ Linear-marginal scaling (the 100 TB-compatible shape) shows as
 t(sf1) - t(sf0.1) ~= 10 * (t(sf0.1) - t(sf0.01)) modulo the shared
 floor; the MD table reports the step ratios directly.
 
-Run:  python tools/bench_scaling.py [--md]
+Run:  python tools/bench_scaling.py [--md]   # sf0.01 / sf0.1 / sf1
+      python tools/bench_scaling.py --sf10   # sf0.1 / sf1 / sf10 section
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
-from dotnetvectorsearch_spark.session import get_spark
+from dotnetvectorsearch_spark.session import get_spark, local_cpus
 
 QUERIES = [
     # the 10 most expensive from BENCH_r03 (minhash_pairs now rewritten)
@@ -243,219 +244,13 @@ def main_sf10() -> int:
             f"| {'—' if r2 is None else f'{r2:.1f}'} | {a['verdict']} |")
     lines.append("")
     md = ROOT / "SCALING.md"
-    text = md.read_text()
-    marker = "\n## sf10 decade"
-    if marker in text:
-        text = text[:text.index(marker)]
-    md.write_text(text.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
+    head, _, rest = md.read_text().partition("\n## sf10 decade")
+    # replace this section only: the sf100 section after it has no
+    # generator left, so a rerun must keep it
+    nxt = rest.find("\n## ")
+    tail = rest[nxt:] if nxt >= 0 else "\n"
+    md.write_text(head.rstrip("\n") + "\n" + "\n".join(lines) + tail)
     print("wrote SCALING.md (sf10 section) / SCALING_SF10.json")
-    spark.stop()
-    return 0
-
-
-# --sf100 mode (judge r10 #4): ONE further decade for the three
-# capstone twins — 5M documents / 2M embeddings, 1000x the driver
-# bench tier. Turns the sf1->sf10 "linear-or-better" verdicts into a
-# TWO-decade trend line, the strongest 100 TB evidence a single
-# 128 GiB node can produce. Spot-run (3 queries x 2 tiers), separate
-# from --sf10 so the standing artifact stays cheap to regenerate.
-# semdedup runs LAST: its sf100 shuffle spill (~75 GB) sits at the
-# sandbox's temp ceiling, and a disk-pressure DNF trashes page cache /
-# temp state for whatever runs next (the post-DNF timing-noise gotcha
-# — measured 2-4x inflated rows when the fixed_eval cells followed it)
-SF100_QUERIES = ["curated_corpus", "training_shards",
-                 "curated_corpus_fixed_eval",
-                 "training_shards_fixed_eval",
-                 "semdedup_lsh_hi"]
-SF100_TIERS = [
-    ("sf10", str(ROOT / ".scaletier" / "sf10"), 1000),
-    ("sf100", str(ROOT / ".scaletier" / "sf100"), 10000),
-]
-
-# The registry capstones decontaminate against the oracle's
-# source-parity split — an eval side that GROWS with the corpus (a
-# DuckDB-twin artifact, not a deployment shape; eval suites are
-# fixed-size). At sf100 that synthetic eval side (2.5M docs, ~110M
-# postings) exceeds the broadcast budget and the distributed join's
-# candidate guard correctly refuses ~5.9e11 candidate rows — recorded
-# below as the designed `guarded` outcome. The *_fixed_eval twins are
-# the realistic experiment: the SAME compositions with the eval suite
-# held at the sf10 absolute size (doc_id < 500k — at sf10 that is
-# exactly the registry eval set, so the sf10 cells line up), so the
-# sf10 -> sf100 step measures train-corpus scaling at fixed eval load.
-# Since r12 the twins are REGISTRY queries (`curated_corpus_fixed_eval`
-# / `training_shards_fixed_eval`, judge r11 #6) — driver- and
-# DuckDB-oracle-checked — so entrymod.queries() supplies them below.
-
-
-def main_sf100() -> int:
-    for _tier, path, mult in SF100_TIERS:
-        if not (Path(path) / "documents.parquet").exists():
-            print(f"generating {_tier} tier ...")
-            subprocess.run([sys.executable,
-                            str(ROOT / "tools" / "gen_scale_tier.py"),
-                            str(mult // 10), path], check=True)
-    spark = get_spark("bench-scaling-sf100")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(entrymod.queries())
-    for name in SF100_QUERIES:
-        try:
-            qs[name](spark, "/root/testdata/sf0.001").count()
-        except Exception:  # noqa: BLE001
-            pass
-        finally:
-            release_transient()
-    results: dict[str, dict[str, dict]] = {}
-    for name in SF100_QUERIES:
-        results[name] = {}
-        for tier, path, _mult in SF100_TIERS:
-            try:
-                reps = []
-                rows = 0
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    rows = qs[name](spark, path).count()
-                    reps.append(time.perf_counter() - t0)
-                    release_transient()
-                results[name][tier] = {
-                    "cold": round(reps[0], 3),
-                    "warm": round(reps[1], 3),
-                    "best": round(min(reps), 3), "rows": rows}
-            except Exception as exc:  # noqa: BLE001
-                release_transient()
-                msg = f"{type(exc).__name__}: {exc}"[:300]
-                if isinstance(exc, ValueError) and \
-                        "candidate rows" in str(exc):
-                    results[name][tier] = {"guarded": msg}
-                else:
-                    results[name][tier] = {"err": msg}
-            print(f"{name} @ {tier}: {results[name][tier]}",
-                  flush=True)
-    analysis = {}
-    for name, tiers in results.items():
-        if any("guarded" in t for t in tiers.values()):
-            guard_tier = next(t for t, _, _ in SF100_TIERS
-                              if "guarded" in tiers[t])
-            analysis[name] = {
-                "verdict": "guarded",
-                "guarded_at": guard_tier,
-                "detail": tiers[guard_tier]["guarded"],
-                **{f"t_{t}": tiers[t].get("best")
-                   for t, _, _ in SF100_TIERS if "best" in tiers[t]},
-            }
-            continue
-        if any("err" in t for t in tiers.values()):
-            analysis[name] = {"verdict": "error"}
-            continue
-        t10, t100 = (tiers[t]["best"] for t, _, _ in SF100_TIERS)
-        ratio = round(t100 / t10, 2) if t10 > 0.01 else None
-        # same drift-adjusted rule as the sf10 decade: floors shrink
-        # relative to data, so linear ops drift toward 10x; <= ~12x
-        # stays linear-or-better. The semdedup twins hold RECALL
-        # constant as n grows (bits ~ log2 n + OR-amplified tables),
-        # so their DESIGNED step is the n^(1+rho) constant-recall LSH
-        # tax (~10^1.3 ~ 20x/decade for hyperplane LSH, lumpier where
-        # the discrete bits/tables config steps land inside a decade)
-        # — graded against that bound, not the linear one.
-        if ratio is None:
-            verdict = "error"
-        elif ratio <= 12:
-            verdict = "linear-or-better"
-        elif name.startswith("semdedup"):
-            verdict = "constant-recall LSH tax (designed n^(1+rho))"
-        else:
-            verdict = "superlinear"
-        analysis[name] = {
-            "t_sf10": t10, "t_sf100": t100,
-            "ratio_sf100_over_sf10": ratio,
-            "verdict": verdict,
-        }
-    # merge into SCALING.json (VERDICT r10 #4: "SCALING.json gains
-    # sf100 rows") without disturbing the main-curve payload
-    scaling_path = ROOT / "SCALING.json"
-    payload = json.loads(scaling_path.read_text()) \
-        if scaling_path.exists() else {}
-    payload["sf100_spot"] = {
-        "queries": results, "analysis": analysis,
-        "tiers": {t: {"dir": p, "rows_multiplier": m}
-                  for t, p, m in SF100_TIERS},
-        "reps": 2,
-        "discipline": "cold=rep1/warm=rep2, transient release inside "
-                      "region, compile warm-up at sf0.001"}
-    scaling_path.write_text(json.dumps(payload, indent=1) + "\n")
-    lines = [
-        "",
-        "## sf100 spot decade — capstone twins (sf10 / sf100)",
-        "",
-        "`python tools/bench_scaling.py --sf100`: the capstone twins "
-        "ONE further decade up — 5M documents / 2M embeddings, 1000x "
-        "the driver bench tier — turning the sf1->sf10 verdicts into "
-        "a two-decade trend line. Same drift rule: <= ~12x per decade "
-        "is linear-or-better (floors amortize as sf grows).",
-        "",
-        "The registry `curated_corpus`/`training_shards` rows "
-        "decontaminate against the ORACLE's source-parity split — an "
-        "eval side that grows WITH the corpus (a DuckDB-twin "
-        "artifact; real eval suites are fixed-size). At sf100 that "
-        "synthetic eval side (2.5M docs / ~110M postings) exceeds the "
-        "broadcast budget and the distributed join's candidate-volume "
-        "guard refuses ~5.9e11 candidate rows — the DESIGNED refusal "
-        "(guarded rows below), exactly what the guard exists to do at "
-        "this scale. The `*_fixed_eval` twins are the deployment "
-        "experiment: the SAME compositions with the eval suite held "
-        "at the sf10 absolute size (doc_id < 500k; at sf10 that IS "
-        "the registry eval set, so the sf10 cells line up) — their "
-        "step isolates train-corpus scaling at fixed eval load, which "
-        "is how a 100 TB ingest actually decontaminates. The semdedup "
-        "row holds RECALL constant as n grows (bits ~ log2 n + "
-        "OR-amplified tables), so its designed step is the n^(1+rho) "
-        "constant-recall LSH tax — ~10^1.3 ~ 20x/decade for "
-        "hyperplane LSH, lumpier where the discrete bits/tables "
-        "config steps land inside a decade — and is graded against "
-        "that bound, not the linear one (a fixed-config run would "
-        "look 'linear' by silently letting recall decay).",
-        "",
-        "| query | sf10 | sf100 | t(sf100)/t(sf10) | verdict |",
-        "|---|---|---|---|---|",
-    ]
-    for name, a in analysis.items():
-        if a.get("verdict") == "error":
-            lines.append(f"| {name} | — | — | — | ERROR |")
-            continue
-        if a.get("verdict") == "guarded":
-            cells = [f"{a.get(f't_{t}'):.2f}"
-                     if a.get(f"t_{t}") is not None else
-                     ("**guard raised**" if t == a["guarded_at"]
-                      else "—")
-                     for t, _, _ in SF100_TIERS]
-            lines.append(
-                f"| {name} | {cells[0]} | {cells[1]} | — | guarded "
-                f"(growing synthetic eval side; candidate-volume "
-                f"bound, by design — see `*_fixed_eval`) |")
-            continue
-        r = a["ratio_sf100_over_sf10"]
-        lines.append(
-            f"| {name} | {a['t_sf10']:.2f} | {a['t_sf100']:.2f} | "
-            f"{'—' if r is None else f'{r:.1f}'} | {a['verdict']} |")
-    lines += [
-        "",
-        "Reading the two curated cells together: "
-        "`training_shards_fixed_eval` is a strict SUPERSET of "
-        "`curated_corpus_fixed_eval` (the same curation chain plus "
-        "packing + epoch shuffle), so the subset cannot truly scale "
-        "worse than its superset — a curated ratio above the "
-        "superset's in the same run is single-run floor/page-cache "
-        "noise on the subset's cells, and the superset's step is the "
-        "composition's real two-decade bound.",
-        "",
-    ]
-    md = ROOT / "SCALING.md"
-    text = md.read_text()
-    marker = "\n## sf100 spot decade"
-    if marker in text:
-        text = text[:text.index(marker)]
-    md.write_text(text.rstrip("\n") + "\n" + "\n".join(lines) + "\n")
-    print("wrote SCALING.md (sf100 section) / SCALING.json sf100_spot")
     spark.stop()
     return 0
 
@@ -536,15 +331,22 @@ def main() -> int:
            "reps": 2, "discipline":
                "cold=rep1/warm=rep2, transient release inside region, "
                "compile warm-up at sf0.001"}
-    (ROOT / "SCALING.json").write_text(json.dumps(out, indent=1) + "\n")
+    scaling_json = ROOT / "SCALING.json"
+    if scaling_json.exists():
+        # the sf100 cells have no generator left; carry them over
+        old = json.loads(scaling_json.read_text())
+        if "sf100_spot" in old:
+            out["sf100_spot"] = old["sf100_spot"]
+    scaling_json.write_text(json.dumps(out, indent=1) + "\n")
     if write_md:
         lines = [
             "# Scaling curve — sf0.01 / sf0.1 / sf1 (10x steps)",
             "",
             "Generated by `python tools/bench_scaling.py --md` on "
-            "local[32]. sf1 is the distribution-matched 10x tier from "
-            "`tools/gen_scale_tier.py` (50k documents / 20k embeddings "
-            "/ 1M events — the three tables these queries read). Two "
+            f"local[{local_cpus()}]. sf1 is the distribution-matched "
+            "10x tier from `tools/gen_scale_tier.py` (50k documents / "
+            "20k embeddings / 1M events — the three tables these "
+            "queries read). Two "
             "reps per point, transient caches released inside the "
             "timed region; `best` shown. The 100 TB-compatible shape "
             "is t ~= floor + marginal*rows: a 10x data step may grow "
@@ -596,14 +398,20 @@ def main() -> int:
                 f"| {exact} | {twin} | "
                 f"{'—' if r is None else f'{r:.1f}'} |")
         lines.append("")
-        (ROOT / "SCALING.md").write_text("\n".join(lines) + "\n")
+        md = ROOT / "SCALING.md"
+        old = md.read_text() if md.exists() else ""
+        # keep the sf10 / sf100 decade sections that follow this table
+        i = old.find("\n## sf10 decade")
+        md.write_text("\n".join(lines) + "\n" + (old[i:] if i >= 0 else ""))
         print("wrote SCALING.md / SCALING.json")
     spark.stop()
     return 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(
-        main_sf100() if "--sf100" in sys.argv
-        else main_sf10() if "--sf10" in sys.argv
-        else main())
+    # refuse a stale flag (e.g. the retired --sf100) rather than fall
+    # through to the sf1 sweep, which rewrites SCALING.json
+    unknown = sorted(set(sys.argv[1:]) - {"--md", "--sf10"})
+    if unknown:
+        raise SystemExit(f"unknown argument(s): {' '.join(unknown)}")
+    raise SystemExit(main_sf10() if "--sf10" in sys.argv else main())

@@ -231,18 +231,14 @@ def _write_md(ledger, failures: int) -> None:
     status = subprocess.run(
         ["git", "status", "--porcelain", "--untracked-files=no"],
         capture_output=True, text=True, cwd=root).stdout.strip()
-    # The stamp certifies SOURCE state. The round-finalize pass
-    # regenerates PLAN_AUDIT.md just before this ledger and commits
-    # both together afterwards — those two artifact files being
-    # modified is the expected mid-finalize state, not source drift.
+    # The stamp certifies SOURCE state; the ledger being rewritten is
+    # not source drift.
     dirty = [ln for ln in status.splitlines()
-             if ln.split(None, 1)[-1] not in ("PLAN_AUDIT.md",
-                                              "ORACLE_SELFCHECK.md")]
+             if ln.split(None, 1)[-1] != "ORACLE_SELFCHECK.md"]
     tree_state = ("clean tree — the stamp names the exact judged source"
                   if not dirty else
                   "DIRTY TREE — uncommitted changes were present; "
-                  "regenerate after committing (tools/finalize_round.py "
-                  "enforces this)")
+                  "regenerate after committing")
     n_ok = sum(1 for _, s, _, _ in ledger if s == "OK")
     n_rows = sum(1 for _, s, _, _ in ledger if s == "rows-only")
     n_fail = len(ledger) - n_ok - n_rows

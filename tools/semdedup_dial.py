@@ -53,7 +53,7 @@ from dotnetvectorsearch_spark.operators.dedup import (
     embedding_neardup_pairs,
     lsh_bucket_neardup_pairs,
 )
-from dotnetvectorsearch_spark.session import get_spark
+from dotnetvectorsearch_spark.session import get_spark, local_cpus
 
 TAU = 0.35
 BITS = 8
@@ -208,8 +208,9 @@ def main() -> None:
             "(probe_hamming 0 / 1 / 2)",
             "",
             "Generated by `python tools/semdedup_dial.py --md` on "
-            "local[32]. The multi-probe LSH twin expands the probe "
-            "side sum_{i<=h} C(8,i) x (1/9/37 buckets); `candidates` "
+            f"local[{local_cpus()}]. The multi-probe LSH twin expands "
+            "the probe side sum_{i<=h} C(8,i) x (1/9/37 buckets); "
+            "`candidates` "
             "is the bucket-equal pair volume the cosine join actually "
             "scores — the budget line a 100x capacity plan reads "
             "(candidates scale ~ probes x n^2 / 2^bits at uniform "

@@ -44,7 +44,7 @@ from pyspark.sql.window import Window
 
 import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
-from dotnetvectorsearch_spark.session import get_spark
+from dotnetvectorsearch_spark.session import get_spark, local_cpus
 
 JACCARD_BUCKETS = [(0.1, 0.3), (0.3, 0.5), (0.5, 0.7), (0.7, 0.9),
                    (0.9, 1.01)]
@@ -292,10 +292,11 @@ def write_md(results: dict) -> None:
         "# TWIN_FIDELITY — how much of the exact answer the LSH twins "
         "recover",
         "",
-        "Measured by `tools/twin_fidelity.py` on local[32]; all metrics "
-        "are Spark-side aggregates. Companion to SCALING.md: that file "
-        "shows the twins are LINEAR, this one shows what they give up "
-        "for it. Pytest pins: `tests/test_twin_fidelity.py`.",
+        f"Measured by `tools/twin_fidelity.py` on local[{local_cpus()}]; "
+        "all metrics are Spark-side aggregates. Companion to "
+        "SCALING.md: that file shows the twins are LINEAR, this one "
+        "shows what they give up for it. Pytest pins: "
+        "`tests/test_twin_fidelity.py`.",
         "",
         "## Pair recall (LSH banding vs exact word-3-gram Jaccard)",
         "",
