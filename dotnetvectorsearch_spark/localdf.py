@@ -42,6 +42,7 @@ path, which is how the tests and ``tools/check_oracle.py
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -204,6 +205,88 @@ def plan_bytes(df: DataFrame) -> int | None:
         return sum(os.stat(p).st_size for p in paths)
     except Exception:  # noqa: BLE001 - non-file-backed plans
         return None
+
+
+# One spread partition per this many input bytes (see _spread): 96 KB
+# of raw text is ~10-30x that in shingle/hash work, comfortably a task.
+_SPREAD_BYTES = 96 * 1024
+
+
+def _spread(df: DataFrame, key: str, amp: int = 1) -> DataFrame:
+    """Hash-repartition to the session's default parallelism when the
+    input has fewer partitions. Small corpora often arrive as a single
+    file/partition; the shingle/hash stages below are CPU-bound per row,
+    so without this they serialize onto one task. At real scale inputs
+    already have enough splits and this is a no-op.
+
+    ``amp`` is the call site's downstream CPU-amplification factor
+    relative to the byte budget below (guide §2.5: partition by the
+    COST of the stage, not raw input bytes). The default 1 fits
+    scheduling-bound consumers (one explode + one keyed aggregate:
+    minhash/simhash signatures, span grams). Sites whose next stages do
+    super-linear work per input byte — char k-gram winnowing (~1
+    hash+window row per CHARACTER), shingle inverted-index SELF-joins,
+    per-block quadratic pair generation — pass ``amp`` ≈ their measured
+    work multiplier so the target reflects stage cost. The r13 bytes
+    target with amp=1 everywhere left 25 of 32 cores idle on exactly
+    those sites (VERDICT r13 item 1: jaccard_pairs ×0.36,
+    winnow_fingerprints ×0.64); the within-session A/B for the amp'd
+    sites is in OPTIMIZATION_r14.md.
+
+    The common at-scale case is decided from ``inputFiles()`` alone —
+    but file COUNT alone does not give a partition count: Spark packs
+    multiple small files into one FilePartition (up to
+    ``maxPartitionBytes``, charging ``openCostInBytes`` per file), so
+    ``files >= target`` can still scan as a handful of tasks. The
+    metadata shortcut therefore requires the file count to clear the
+    target with a wide margin (every FilePartition holds at most
+    ``maxPartitionBytes / openCostInBytes`` files, 128 MB / 4 MB = 32 by
+    default, so ``target * 32`` files GUARANTEES >= target partitions).
+    Below that, pay the ``df.rdd`` hop — which compiles the physical
+    plan — and check the scan's actual partition count.
+    """
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    try:
+        def _bytes(conf: str, default: int) -> int:
+            m = re.fullmatch(
+                r"(\d+)\s*([kmgt]?)b?",
+                str(spark.conf.get(conf, str(default))).strip().lower())
+            if not m:
+                return default
+            return int(m.group(1)) * 1024 ** " kmgt".index(m.group(2) or " ")
+        pack = max(1, _bytes("spark.sql.files.maxPartitionBytes", 2 ** 27)
+                   // max(1, _bytes("spark.sql.files.openCostInBytes",
+                                    2 ** 22)))
+        files = df.inputFiles()
+        if len(files) >= target * pack:
+            return df
+        # Scale-adaptive target (guide §2: derive partitioning from
+        # input size, not a constant): every downstream stage of the
+        # spread frame — and of every transient persist derived from it
+        # — schedules `target` tasks, so over-spreading a kilobyte-scale
+        # corpus turns one query into hundreds of empty tasks (measured
+        # 15-25% of minhash/semdedup/cluster query time at sf0.1).
+        # One partition per _SPREAD_BYTES keeps the CPU-heavy
+        # shingle/hash stages parallel (text work amplifies bytes by
+        # ~10-30x) while capping task count at what the data warrants;
+        # the defaultParallelism ceiling keeps at-scale behavior
+        # identical, and inputs with enough real splits never reach
+        # here at all.
+        #
+        # Plans without local file evidence (plan_bytes is None) keep
+        # the defaultParallelism target: an in-memory or shuffle-backed
+        # corpus has no byte evidence to shrink by, and collapsing it to
+        # the floor serializes CPU-heavy stages (ADVICE r13 medium).
+        nbytes = plan_bytes(df)
+        if nbytes is not None:
+            target = max(4, min(
+                target, -(-nbytes * max(1, amp) // _SPREAD_BYTES)))
+    except Exception:  # noqa: BLE001 - non-file-backed plans
+        pass
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, key)
+    return df
 
 
 # Arrow bytes of one value of each fixed-width Spark type.

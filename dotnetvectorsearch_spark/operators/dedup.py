@@ -1,40 +1,21 @@
-"""Deduplication operators for large-scale training-data pipelines.
+"""Exact deduplication operators for large-scale training-data pipelines.
 
-Five families, all expressed so the shuffle structure survives a 100x
-scale-up (beyond-reference; the reference corpus dedup story is
-BASELINE.json's north star, not reference code):
+Exact document dedup (`exact_dedup`, `exact_dedup_keep_best`,
+`exact_dedup_incremental`): md5-fingerprint -> groupBy -> keep-first.
+One hash-partition shuffle on a short key; map-side partial
+aggregation. Exact substring and span dedup (`winnow_fingerprints`,
+`dup_span_stats`, `remove_duplicate_spans`), snapshot diffs
+(`corpus_diff`, `incremental_update_manifest`) and the mergeable Bloom
+filter the persisted dedup store probes (`build_bloom`,
+`_bloom_probe_keep`) live here too.
 
-- **Exact** (`exact_dedup`): md5-fingerprint -> groupBy -> keep-first. One
-  hash-partition shuffle on a short key; map-side partial aggregation.
-- **MinHash + LSH** (`minhash_signatures`, `lsh_candidate_pairs`,
-  `minhash_dedup_pairs`): shingle -> K minhashes (xxhash64 under K salts,
-  pure Catalyst expressions) -> band -> bucket-join. Only docs sharing a
-  band bucket are ever paired, so the candidate join is an equi-join on
-  (band, bucket) — shuffle is proportional to corpus size, not corpus².
-  Mega-buckets (degenerate/boilerplate shingles) are dropped by a bucket
-  cap, the standard skew guard for web-scale dedup.
-- **SimHash** (`simhash_signatures`, `simhash_candidate_pairs`): 64-bit
-  signature, banded into 4x16-bit chunks for candidate generation (docs
-  within hamming distance k share >= 1 chunk for k <= 3), verified with
-  bit_count(xor). Both families, their md5 twins (`*_portable`) and
-  `neardup_filter_incremental` share one LSH core: `_band`,
-  `_bucket_pairs`, `_md5_bands`, `_simhash`, `_simhash_pairs`.
-- **Exact n-gram Jaccard** (`jaccard_pairs`): explode shingles ->
-  equi-join on shingle -> count/union arithmetic. The fully-SQL-expressible
-  oracle path for verifying the approximate families.
-- **Embedding near-dup** (`embedding_neardup_pairs`): cosine over a
-  blocking key (label / LSH bucket / IVF cell) — never the full cross
-  product.
-
-Hot paths are JVM-side Catalyst expressions; the only Python is
-Arrow-vectorized (the bucket-grouped cosine kernel in
-`lsh_bucket_neardup_pairs`, the mergeable-bloom fold/probe) — no
-row-at-a-time UDFs anywhere in this module.
+The other dedup families have their own modules: near-duplicate
+detection in `neardup`, duplicate clusters in `graph`, train/eval
+contamination in `contamination`.
 """
 
 from __future__ import annotations
 
-import re
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -47,98 +28,15 @@ from dotnetvectorsearch_spark.functions.text import (
     fingerprint,
     ordered_char_kgrams,
     ordered_word_ngrams,
-    word_shingles,
 )
-from dotnetvectorsearch_spark import localdf
-from dotnetvectorsearch_spark.caching import (
-    SessionMemo,
-    input_key,
-    transient_persist,
-    unpersist_broadcast,
+from dotnetvectorsearch_spark.caching import transient_persist
+from dotnetvectorsearch_spark.operators.contamination import (
+    _DECON_INDEX,
+    max_eval_overlap,
 )
-from dotnetvectorsearch_spark.functions.vector import cosine_similarity
+from dotnetvectorsearch_spark.localdf import _spread
+from dotnetvectorsearch_spark.operators.neardup import _GUARD_MEMO
 
-
-# One spread partition per this many input bytes (see _spread): 96 KB
-# of raw text is ~10-30x that in shingle/hash work, comfortably a task.
-_SPREAD_BYTES = 96 * 1024
-
-
-def _spread(df: DataFrame, key: str, amp: int = 1) -> DataFrame:
-    """Hash-repartition to the session's default parallelism when the
-    input has fewer partitions. Small corpora often arrive as a single
-    file/partition; the shingle/hash stages below are CPU-bound per row,
-    so without this they serialize onto one task. At real scale inputs
-    already have enough splits and this is a no-op.
-
-    ``amp`` is the call site's downstream CPU-amplification factor
-    relative to the byte budget below (guide §2.5: partition by the
-    COST of the stage, not raw input bytes). The default 1 fits
-    scheduling-bound consumers (one explode + one keyed aggregate:
-    minhash/simhash signatures, span grams). Sites whose next stages do
-    super-linear work per input byte — char k-gram winnowing (~1
-    hash+window row per CHARACTER), shingle inverted-index SELF-joins,
-    per-block quadratic pair generation — pass ``amp`` ≈ their measured
-    work multiplier so the target reflects stage cost. The r13 bytes
-    target with amp=1 everywhere left 25 of 32 cores idle on exactly
-    those sites (VERDICT r13 item 1: jaccard_pairs ×0.36,
-    winnow_fingerprints ×0.64); the within-session A/B for the amp'd
-    sites is in OPTIMIZATION_r14.md.
-
-    The common at-scale case is decided from ``inputFiles()`` alone —
-    but file COUNT alone does not give a partition count: Spark packs
-    multiple small files into one FilePartition (up to
-    ``maxPartitionBytes``, charging ``openCostInBytes`` per file), so
-    ``files >= target`` can still scan as a handful of tasks. The
-    metadata shortcut therefore requires the file count to clear the
-    target with a wide margin (every FilePartition holds at most
-    ``maxPartitionBytes / openCostInBytes`` files, 128 MB / 4 MB = 32 by
-    default, so ``target * 32`` files GUARANTEES >= target partitions).
-    Below that, pay the ``df.rdd`` hop — which compiles the physical
-    plan — and check the scan's actual partition count.
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        def _bytes(conf: str, default: int) -> int:
-            m = re.fullmatch(
-                r"(\d+)\s*([kmgt]?)b?",
-                str(spark.conf.get(conf, str(default))).strip().lower())
-            if not m:
-                return default
-            return int(m.group(1)) * 1024 ** " kmgt".index(m.group(2) or " ")
-        pack = max(1, _bytes("spark.sql.files.maxPartitionBytes", 2 ** 27)
-                   // max(1, _bytes("spark.sql.files.openCostInBytes",
-                                    2 ** 22)))
-        files = df.inputFiles()
-        if len(files) >= target * pack:
-            return df
-        # Scale-adaptive target (guide §2: derive partitioning from
-        # input size, not a constant): every downstream stage of the
-        # spread frame — and of every transient persist derived from it
-        # — schedules `target` tasks, so over-spreading a kilobyte-scale
-        # corpus turns one query into hundreds of empty tasks (measured
-        # 15-25% of minhash/semdedup/cluster query time at sf0.1).
-        # One partition per _SPREAD_BYTES keeps the CPU-heavy
-        # shingle/hash stages parallel (text work amplifies bytes by
-        # ~10-30x) while capping task count at what the data warrants;
-        # the defaultParallelism ceiling keeps at-scale behavior
-        # identical, and inputs with enough real splits never reach
-        # here at all.
-        #
-        # Plans without local file evidence (plan_bytes is None) keep
-        # the defaultParallelism target: an in-memory or shuffle-backed
-        # corpus has no byte evidence to shrink by, and collapsing it to
-        # the floor serializes CPU-heavy stages (ADVICE r13 medium).
-        nbytes = localdf.plan_bytes(df)
-        if nbytes is not None:
-            target = max(4, min(
-                target, -(-nbytes * max(1, amp) // _SPREAD_BYTES)))
-    except Exception:  # noqa: BLE001 - non-file-backed plans
-        pass
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, key)
-    return df
 
 # ---------------------------------------------------------------- exact
 
@@ -295,359 +193,6 @@ def dup_span_stats(docs: DataFrame, id_col: str = "doc_id",
     return out
 
 
-# -------------------------------------------------------------- LSH core
-
-
-def _per_band(total: int, parts: int, what: str) -> int:
-    """``total // parts``; ValueError unless the bands split evenly."""
-    if parts <= 0 or total % parts:
-        raise ValueError(f"{what}={total} does not split into {parts} "
-                         f"equal bands")
-    return total // parts
-
-
-def _band(sigs: DataFrame, id_col: str, buckets: list[Column],
-          *carry: str) -> DataFrame:
-    """One (id, *carry, band, bucket) row per doc and band: ``buckets``
-    holds one bucket expression per band, ``band`` is its position."""
-    return sigs.select(id_col, *carry, F.posexplode(F.array(*buckets))
-                       .alias("band", "bucket"))
-
-
-def _bucket_pairs(a: DataFrame, id_col: str, b: DataFrame | None = None,
-                  *cols: str) -> DataFrame:
-    """Distinct (id_a, id_b, <c>_a, <c>_b for c in cols) over `_band`
-    rows that share a (band, bucket): a self-join of ``a`` keeping
-    id_a < id_b when ``b`` is None (persist ``a`` first, both sides
-    read it), else the bipartite ``a`` x ``b`` join."""
-    def side(df: DataFrame, s: str) -> DataFrame:
-        return df.select(F.col(id_col).alias(f"id_{s}"), "band", "bucket",
-                         *[F.col(c).alias(f"{c}_{s}") for c in cols])
-    pairs = side(a, "a").join(side(a if b is None else b, "b"),
-                              ["band", "bucket"])
-    if b is None:
-        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
-    return pairs.select("id_a", "id_b", *[f"{c}_{s}" for c in cols
-                                          for s in "ab"]).distinct()
-
-
-def _md5_bands(bands: int, rows: int) -> list[Column]:
-    """Band keys of a `minhash_signatures_portable` signature: band b's
-    hex values h{b*rows}..h{b*rows+rows-1} joined by '|' — byte for
-    byte the key format the streaming near-dup store persists."""
-    return [F.concat_ws("|", *[F.col(f"h{b * rows + r}")
-                               for r in range(rows)])
-            for b in range(bands)]
-
-
-def _bit_mask(b: int) -> int:
-    return (1 << b) if b < 63 else -(1 << 63)
-
-
-def _simhash(toks: DataFrame, id_col: str, bit_set, bits: int) -> DataFrame:
-    """(id, sig) SimHash over (id, token) rows: signature bit p is set
-    when the +/-1 sum of ``bit_set(p)`` (bit p of the token's hash, a
-    boolean Column) over the doc's tokens is positive. One groupBy(id)
-    with map-side combine; the shuffle carries ``bits`` ints per doc."""
-    sums = [F.sum(F.when(bit_set(p), 1).otherwise(-1)).alias(f"__b{p}")
-            for p in range(bits)]
-    sig = sum((F.when(F.col(f"__b{p}") > 0,
-                      F.lit(_bit_mask(p)).cast("long")).otherwise(0)
-               for p in range(bits)), F.lit(0).cast("long"))
-    return toks.groupBy(id_col).agg(*sums).select(F.col(id_col),
-                                                  sig.alias("sig"))
-
-
-def _simhash_pairs(sigs: DataFrame, id_col: str, chunks: int,
-                   chunk_bits: int, max_hamming: int,
-                   max_bucket_size: int | None = None) -> DataFrame:
-    """(id_a, id_b, hamming) for (id, sig) rows: band the signature
-    into ``chunks`` chunks of ``chunk_bits`` bits (pigeonhole: hamming
-    <= chunks-1 guarantees one identical chunk), drop buckets larger
-    than ``max_bucket_size`` (None: the uncapped oracle twin), self-join
-    on (chunk, value) and keep bit_count(xor) <= max_hamming."""
-    mask = F.lit((1 << chunk_bits) - 1)
-    banded = transient_persist(_band(
-        sigs, id_col, [F.shiftright("sig", c * chunk_bits).bitwiseAND(mask)
-                       for c in range(chunks)], "sig"))
-    if max_bucket_size:
-        keep = (banded.groupBy("band", "bucket")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") <= max_bucket_size).drop("__n"))
-        banded = banded.join(keep, ["band", "bucket"], "leftsemi")
-    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (_bucket_pairs(banded, id_col, None, "sig")
-            .select("id_a", "id_b", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming))
-
-
-# --------------------------------------------------------------- minhash
-
-_GOLDEN64 = 0x9E3779B97F4A7C15
-
-
-def _salt(k: int) -> int:
-    """Per-hash-function 64-bit salt as a SIGNED long literal."""
-    s = ((k + 1) * _GOLDEN64) & 0xFFFFFFFFFFFFFFFF
-    return s - (1 << 64) if s >= (1 << 63) else s
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       num_hashes: int = 64, shingle_n: int = 3,
-                       out: str = "minhash",
-                       shingles: DataFrame | None = None,
-                       include_empty: bool = True) -> DataFrame:
-    """K minhash values per doc: min over shingles of xxhash64(salt_k || s).
-
-    Shape (r14): ONE row-local higher-order fold — aggregate over the
-    hashed-shingle array with a running elementwise-min accumulator —
-    so the signature stage is a pure projection: no explode, no
-    aggregate hash table, no shuffle of its own at any scale. (The
-    naive column-expression formulation — array_min(transform(...)) x K
-    — re-evaluates the shingle array per hash because Catalyst
-    collapses projections, measured ~10x slower; the fold references
-    the hashed array exactly once as the aggregate input, which is why
-    it dodges that trap.)
-
-    Docs with fewer than shingle_n tokens get an all-MAX_LONG signature
-    (no shingles -> no LSH candidates) — the fold's init value, so no
-    re-attach join is needed. Pass ``include_empty=False`` to drop such
-    docs instead; correct whenever downstream verification uses a
-    positive similarity threshold (an empty doc can never reach it).
-
-    ``shingles`` (a frame of (id_col, "sh" array<string>)) lets callers
-    reuse an already-computed — typically persisted — shingle set.
-    """
-    if shingles is None:
-        df = _spread(df, id_col)
-        shingles = df.select(F.col(id_col),
-                             word_shingles(text_col, shingle_n).alias("sh"))
-    # Hash the shingle STRING once; derive the K hash functions by
-    # re-hashing the resulting 8-byte value xor a per-k salt (O(1) each).
-    # The naive form — xxhash64("mh{k}:" || s) — walks the string K times
-    # and allocates K concat buffers per shingle; this is ~K x cheaper and
-    # an equally valid independent-permutation family. Salts are xor-ed
-    # (never multiplied/added) so ANSI overflow semantics can't bite.
-    #
-    # The fold's values are bit-identical to the r13 explode ->
-    # groupBy(K mins) -> re-attach join shape (pinned in
-    # tests/test_dedup.py) without its hash table, join and Exchange:
-    # 0.84 -> 0.39 s on the sf0.1 signature stage. The lambdas touch
-    # only lambda variables and a literal salt array (the repo HOF
-    # gotcha). The md5 family (`minhash_signatures_portable`) keeps
-    # explode+groupBy: an interpreted per-element md5+concat fold
-    # measured 0.43 -> 0.80 s.
-    salts = F.array(*[F.lit(_salt(k)) for k in range(num_hashes)])
-    empty_sig = F.array_repeat(F.lit(2 ** 63 - 1).cast("long"),
-                               num_hashes)
-    hashed = F.transform(F.coalesce(F.col("sh"),
-                                    F.array().cast("array<string>")),
-                         lambda s: F.xxhash64(s))
-    sig = F.aggregate(
-        hashed, empty_sig,
-        lambda acc, h: F.zip_with(
-            acc, salts,
-            lambda a, s: F.least(a, F.xxhash64(h.bitwiseXOR(s)))))
-    sigs = shingles.select(F.col(id_col), sig.alias(out))
-    if include_empty:
-        return sigs
-    return (shingles.filter(F.size(F.col("sh")) > 0)
-            .select(F.col(id_col), sig.alias(out)))
-
-
-# Skew caps of the two banded candidate generators: a (band, bucket)
-# holding more docs than this is dropped before pair expansion.
-LSH_MAX_BUCKET_SIZE = 200
-SIMHASH_MAX_BUCKET_SIZE = 1000
-
-
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
-                        sig_col: str = "minhash",
-                        bands: int = 16, rows_per_band: int = 4
-                        ) -> DataFrame:
-    """Candidate pairs from LSH banding: docs sharing any band bucket.
-
-    Shuffle structure: explode to bands (narrow) -> ONE exchange into
-    (band, bucket) groups -> bucket-LOCAL pair expansion as a codegen'd
-    higher-order expression -> distinct. A former formulation
-    self-equi-joined the banded rows on (band, bucket) behind a window
-    count — three exchanges plus a per-bucket sort where one exchange
-    suffices, and the self-join forced the upstream signature stage to
-    be persisted. Pair expansion inside a bucket is bounded by
-    ``LSH_MAX_BUCKET_SIZE`` (cap² / 2 structs, all JVM-side), so no
-    group can blow up an executor: the cap drops degenerate buckets
-    (empty docs, boilerplate) that would otherwise produce O(bucket²)
-    pairs inside ONE row — the skew guard that keeps this plan alive at
-    10^9 docs.
-    """
-    exploded = _band(sigs, id_col, [
-        F.hash(F.slice(sig_col, b * rows_per_band + 1, rows_per_band))
-        for b in range(bands)])
-    buckets = (exploded.groupBy("band", "bucket")
-               .agg(F.collect_list(id_col).alias("__ids"))
-               .filter(F.size("__ids") >= 2)
-               .filter(F.size("__ids") <= LSH_MAX_BUCKET_SIZE))
-    # each id occurs once per (band, bucket) — one banded row per doc
-    # per band — so sorting the bucket's id list and pairing each
-    # element with its strict successors yields exactly the id_a < id_b
-    # pairs the old self-join produced. The sorted array is projected
-    # as its OWN column first: referencing array_sort(...) inside the
-    # transform lambdas would re-sort the bucket per element (HOF
-    # lambdas re-evaluate captured child expressions).
-    buckets = buckets.select(F.array_sort("__ids").alias("__ids"))
-    ids_sorted = F.col("__ids")
-    pair_structs = F.flatten(F.transform(
-        ids_sorted,
-        lambda x, i: F.transform(
-            F.slice(ids_sorted, i + F.lit(2),
-                    F.size(ids_sorted) - i - F.lit(1)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    return (buckets.select(F.explode(pair_structs).alias("p"))
-            .select(F.col("p.id_a").alias("id_a"),
-                    F.col("p.id_b").alias("id_b"))
-            .distinct())
-
-
-def verify_jaccard(pairs: DataFrame, docs: DataFrame,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   shingle_n: int = 3, threshold: float = 0.5,
-                   shingles: DataFrame | None = None) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs: attach both sides'
-    distinct-shingle arrays to each pair (the doc side is restricted to
-    candidate docs and typically broadcast by AQE) and compute
-    size(array_intersect)/size(array_union) per pair in one fused
-    codegen stage. Pairs with no shared shingle score 0.0. (An exploded
-    intersect-count formulation measured slower at every volume and was
-    removed: MINHASH_VERIFY.md.)
-    """
-    if shingles is None:
-        docs = _spread(docs, id_col)
-        shingles = docs.select(F.col(id_col),
-                               word_shingles(text_col, shingle_n).alias("sh"))
-    uniq = shingles.select(F.col(id_col),
-                           F.array_distinct("sh").alias("__d"))
-    a = uniq.select(F.col(id_col).alias("id_a"),
-                    F.col("__d").alias("__da"))
-    b = uniq.select(F.col(id_col).alias("id_b"),
-                    F.col("__d").alias("__db"))
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("__da", "__db"))
-    union = F.size(F.array_union("__da", "__db"))
-    jac = F.when(union > 0, inter.cast("double") / union) \
-        .otherwise(F.lit(0.0))
-    return (joined.withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
-
-
-def minhash_dedup_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", num_hashes: int = 64,
-                        shingle_n: int = 3, bands: int = 16,
-                        threshold: float = 0.5) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: sign -> band -> candidates ->
-    exact-Jaccard verify. The shingle set is computed once, persisted, and
-    shared by the signature and verification stages."""
-    sh = transient_persist(_spread(docs, id_col).select(
-        F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")))
-    sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_n,
-                              shingles=sh,
-                              include_empty=not threshold > 0)
-    cands = lsh_candidate_pairs(sigs, id_col, "minhash", bands,
-                                num_hashes // bands)
-    return verify_jaccard(cands, docs, id_col, text_col, shingle_n, threshold,
-                          shingles=sh)
-
-
-# --------------------------------------------------------------- simhash
-
-
-def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", shingle_n: int = 1,
-                       out: str = "sig") -> DataFrame:
-    """64-bit SimHash per doc: for each bit b, sum +/-1 over token hashes
-    by bit value; bit set where the sum is positive.
-
-    Shape: explode(tokens) -> xxhash64 -> `_simhash` (groupBy(id), 64
-    conditional sums, recombined bits). Docs with no tokens (null text)
-    get signature 0 through a left join from the ids.
-    """
-    df = _spread(df, id_col)
-    sh = (word_shingles(text_col, shingle_n) if shingle_n > 1
-          else F.split(F.trim(F.col(text_col)), r"\s+"))
-    toks = (df.select(F.col(id_col), F.explode(sh).alias("__t"))
-            .select(F.col(id_col), F.xxhash64("__t").alias("__h")))
-    sigs = _simhash(
-        toks, id_col,
-        lambda b: F.col("__h").bitwiseAND(F.lit(_bit_mask(b))) != 0, 64)
-    return (df.select(id_col).join(sigs, id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce("sig", F.lit(0).cast("long")).alias(out)))
-
-
-def simhash_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64-bit signature into 4 16-bit
-    chunks (pigeonhole: hamming<=3 => >=1 identical chunk), candidate-join
-    on (chunk_idx, chunk_value), verify with bit_count(xor) <= k. Chunk
-    buckets past ``SIMHASH_MAX_BUCKET_SIZE`` docs are dropped."""
-    sigs = simhash_signatures(docs, text_col, id_col, out="sig")
-    return _simhash_pairs(sigs, id_col, 4, 16, max_hamming,
-                          SIMHASH_MAX_BUCKET_SIZE)
-
-
-# ----------------------------------------------------- exact n-gram jaccard
-
-
-def ngram_novelty(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", shingle_n: int = 3) -> DataFrame:
-    """Per-document n-gram novelty: the fraction of a doc's distinct word
-    n-grams that appear in NO other document. ``novelty = 1`` means fully
-    original text; low novelty flags boilerplate/templated docs that exact
-    and pairwise dedup both miss (the duplication is spread across many
-    partners). Docs with fewer than n tokens (no shingles) are excluded.
-
-    Output: (id, n_shingles, novelty).
-
-    Plan/scale: explode(distinct shingles) -> one groupBy(shingle) count
-    (map-side partial agg; the document-frequency table) -> join back on
-    the shingle -> one groupBy(id). Two shuffles total, both on
-    high-cardinality keys. Degenerate mega-shingles ("the the the") skew
-    the DF join at corpus scale; AQE skew-join handles it (enabled in the
-    session), since unlike LSH we cannot drop hot shingles without biasing
-    the score.
-    """
-    docs = _spread(docs, id_col)
-    sh = (docs.select(F.col(id_col),
-                      F.explode(word_shingles(text_col, shingle_n))
-                      .alias("s")))
-    # word_shingles is distinct-per-doc, so count(*) == document frequency.
-    df_counts = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    return (sh.join(df_counts, "s")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_shingles"),
-                 F.round(
-                     F.sum(F.when(F.col("df") == 1, 1).otherwise(0))
-                     .cast("double") / F.count(F.lit(1)), 6)
-                 .alias("novelty")))
-
-
-# Candidate-row bound of the exact shingle joins (jaccard_pairs,
-# cross_corpus_contamination and decontaminate's gram-join path).
-JACCARD_MAX_CANDIDATE_PAIRS = 1_000_000_000
-
-# Guard-estimate memo: input_key of the guarded inputs + the shingling
-# parameters -> estimated candidate volume. Repeated pipelines over the
-# same corpus (dedup_clusters / dedup_weights / doc_pagerank all start
-# from the same jaccard_pairs plan) pay the counting job once per
-# session instead of once per query; a stale or colliding entry only
-# mis-prices the GUARD, never the result. The key is taken on the
-# unpersisted input frames: the persisted shingle frames read from the
-# cache and report no input files.
-_GUARD_MEMO = SessionMemo(64)
-
-
 def clear_guard_memo() -> int:
     """Drop every memoized driver-side structure keyed on input state —
     the jaccard guard estimates, the eval postings indexes and the
@@ -660,967 +205,6 @@ def clear_guard_memo() -> int:
 
     return sum(m.clear() for m in (_GUARD_MEMO, _DECON_INDEX,
                                    dedup_store._BLOOM_BROADCASTS))
-
-
-def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", shingle_n: int = 3,
-                  threshold: float = 0.2,
-                  block_cols: list[str] | None = None) -> DataFrame:
-    """Exact n-gram-Jaccard similar pairs via shingle inverted index.
-
-    explode(distinct shingles) -> equi-join on shingle value -> count
-    shared shingles per pair -> union arithmetic. With `block_cols`, pairs
-    are additionally restricted to equal blocking keys (e.g. lang), the
-    classic way to keep the inverted-index join skew-bounded.
-
-    Scale bound (SCALING.md measures this exact form at 21.9x per data
-    decade): the inverted-index self-join emits sum_s C(df_s, 2) rows —
-    EXACT and cheap to count before any quadratic work (one aggregation
-    over the already-persisted shingle base). The bound is ENFORCED, not
-    advisory (same doctrine as ``search.knn_graph``): past
-    ``JACCARD_MAX_CANDIDATE_PAIRS`` this raises and names the linear
-    twins (``minhash_dedup_pairs`` / ``minhash_pairs_portable`` —
-    banding bounds candidates by construction; measured recall in
-    TWIN_FIDELITY.md) instead of silently planning a join that never
-    finishes on a 10^9-doc corpus. ``dedup_clusters`` / ``dedup_weights``
-    / ``doc_pagerank`` pipelines inherit the guard through this
-    generator.
-    """
-    # amp=16: the inverted-index SELF-join does O(df_s^2) work per
-    # shingle bucket on top of the explode — partition by that cost,
-    # not the raw input bytes (A/B: 1.16-1.24x, incl. the cc/split
-    # pipelines that inherit this site).
-    docs = _spread(docs, id_col, amp=16)
-    base = docs.select(F.col(id_col),
-                       *(block_cols or []),
-                       word_shingles(text_col, shingle_n).alias("sh"))
-    # base feeds sizes once and the self-joined inverted index twice;
-    # persist so shingling runs once instead of three times.
-    base = transient_persist(base)
-    sizes = base.select(id_col, F.size("sh").alias("n_sh"))
-    inv = base.select(id_col, *(block_cols or []),
-                      F.explode("sh").alias("s"))
-    # sum_s C(df_s, 2) over (block, shingle) is the EXACT row count
-    # the self-join below would emit — counted from the persisted
-    # base BEFORE any quadratic stage is scheduled. Measured cost of
-    # the full count ~doubles the sf0.1 query, so past 2k docs the
-    # sum is estimated from a deterministic 1/q doc-id sample:
-    # doc-level sampling keeps each pair with probability q^2, so
-    # sum C(df_q,2)/q^2 is unbiased, and at guard-relevant
-    # magnitudes the sum is dominated by high-df shingles whose
-    # sampled df concentrates tightly. Shingles are hashed to longs
-    # (8-byte shuffle key; collisions only over-count = err safe).
-    def estimate() -> float:
-        n_docs = base.count()  # materializes the transient persist
-        # Sample target 2k docs (was 20k): the guard exists to stop
-        # 10^9-candidate joins, where the doc-sampled estimate
-        # concentrates to a few percent — exactness past ~2k docs
-        # buys nothing the bound can feel, and the full aggregation
-        # roughly doubled the sf0.1 family's cold runs. Small
-        # corpora (tests, sf0.01) stay exact.
-        q_inv = max(1, n_docs // 2_000)
-        g_inv = inv if q_inv == 1 else (
-            base.filter(F.xxhash64(F.col(id_col), F.lit("jp-guard"))
-                        % q_inv == 0)
-            .select(*(block_cols or []), F.explode("sh").alias("s")))
-        return (g_inv.groupBy(*(block_cols or []),
-                              F.xxhash64("s").alias("__sh"))
-                .agg(F.count(F.lit(1)).alias("df"))
-                .agg(F.sum(F.col("df") * (F.col("df") - 1) / 2)
-                     .cast("double"))
-                .collect()[0][0] or 0.0) * q_inv * q_inv
-
-    key = input_key(docs)
-    n_cand = _GUARD_MEMO.get_or_build(
-        key and key + (id_col, text_col, shingle_n,
-                       tuple(block_cols or ())), estimate)
-    if n_cand > JACCARD_MAX_CANDIDATE_PAIRS:
-        raise ValueError(
-            f"jaccard_pairs inverted-index join would emit "
-            f"~{int(n_cand):,} candidate rows (bound "
-            f"JACCARD_MAX_CANDIDATE_PAIRS = "
-            f"{JACCARD_MAX_CANDIDATE_PAIRS:,}): the exact all-pairs "
-            f"form is O(n^2)-shaped at this density. Use the linear LSH "
-            f"twins instead — minhash_dedup_pairs (verified pairs) "
-            f"or minhash_pairs_portable (candidates); measured "
-            f"recall in TWIN_FIDELITY.md — or raise "
-            f"dedup.JACCARD_MAX_CANDIDATE_PAIRS")
-    a, b = inv.alias("a"), inv.alias("b")
-    cond = (F.col("a.s") == F.col("b.s")) & \
-           (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    for c in (block_cols or []):
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = (a.join(b, cond)
-             .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                      F.col(f"b.{id_col}").alias("id_b"))
-             .agg(F.count(F.lit(1)).alias("n_inter")))
-    out = (inter
-           .join(sizes.select(F.col(id_col).alias("id_a"),
-                              F.col("n_sh").alias("n_a")), "id_a")
-           .join(sizes.select(F.col(id_col).alias("id_b"),
-                              F.col("n_sh").alias("n_b")), "id_b"))
-    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    jac = F.when(union > 0,
-                 F.col("n_inter").cast("double") / union).otherwise(F.lit(0.0))
-    return (out.withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
-
-
-def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
-                                te: DataFrame, te_id: str,
-                                train_src: DataFrame,
-                                test_src: DataFrame,
-                                text_col: str, bound: float) -> float:
-    """Estimate sum_s df_train(s) * df_test(s) — the EXACT row count of
-    a bipartite gram equi-join — from the two (already persisted)
-    shingle frames, before the join is scheduled. Same estimator
-    doctrine as the ``jaccard_pairs`` guard: exact under ~2k docs per
-    side, else an unbiased deterministic 1/q doc sample per side
-    (independent salts, so E[df_tr * df_te] factorizes); the caller
-    memoizes it in ``_GUARD_MEMO``. Grams hash to longs (collisions
-    over-count = err safe).
-
-    Cost fold (VERDICT r6 #5), two tiers:
-
-    1. WORST-CASE SHORT-CIRCUIT: a shared gram contributes at most
-       min(|sh_a|, |sh_b|) rows per (test, train) pair, so the join
-       emits <= n_tr * n_te * min(maxL_tr, maxL_te) rows where maxL is
-       the largest per-doc shingle count. (n, maxL) per side is ONE
-       narrow scan + 1-row agg — no explode, no shuffle of gram
-       occurrences. When that upper bound already clears ``bound``,
-       the join is provably safe and the estimate below never runs
-       (at sf0.1: 2500 x 2500 x 98 = 6.1e8 < 1e9; measured ~1.0s of
-       gram aggregation saved). The bound can only PROVE safety,
-       never fire the guard — a false raise is impossible from this
-       tier.
-    2. Otherwise the sampled gram estimate: ONE side-tagged union
-       aggregation produces both per-gram frequencies (the old
-       two-gram-tables + equi-join shape paid 2 groupBy shuffles + a
-       join + an agg), reusing the (n_tr, n_te) counts from tier 1."""
-    def side_stats(src):
-        # max TOKEN count upper-bounds the per-doc shingle count
-        # (shingles = tokens - n + 1); the raw split is codegen'd and
-        # costs the same as a bare count, while evaluating the
-        # higher-order shingle expression here measured ~3x the scan.
-        from dotnetvectorsearch_spark.functions.text import WS_PATTERN
-        row = src.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.size(F.split(F.trim(F.col(text_col)), WS_PATTERN)))
-            .alias("max_l")).first()
-        return int(row.n), int(row.max_l or 0)
-
-    n_tr, max_tr = side_stats(train_src)
-    n_te, max_te = side_stats(test_src)
-    worst = float(n_tr) * float(n_te) * min(max_tr, max_te)
-    if worst <= bound:
-        return worst
-
-    def sampled(df, id_c, n, salt):
-        q = max(1, n // 2_000)
-        s = df if q == 1 else df.filter(
-            F.xxhash64(F.col(id_c), F.lit(salt)) % q == 0)
-        return s, q
-
-    s_tr, qt = sampled(tr, tr_id, n_tr, "cc-guard-tr")
-    s_te, qe = sampled(te, te_id, n_te, "cc-guard-te")
-    both = (s_tr.select(F.explode("sh").alias("s"),
-                        F.lit(1).alias("is_tr"))
-            .unionByName(s_te.select(F.explode("sh").alias("s"),
-                                     F.lit(0).alias("is_tr"))))
-    return (both.groupBy(F.xxhash64("s").alias("__sh"))
-            .agg(F.sum("is_tr").alias("df_tr"),
-                 F.sum(1 - F.col("is_tr")).alias("df_te"))
-            .agg(F.sum(F.col("df_tr").cast("double")
-                       * F.col("df_te")).cast("double"))
-            .collect()[0][0] or 0.0) * qt * qe
-
-
-def cross_corpus_contamination(train: DataFrame, test: DataFrame,
-                               id_col: str = "doc_id",
-                               text_col: str = "text", shingle_n: int = 3,
-                               min_overlap: float = 0.5) -> DataFrame:
-    """Train/eval contamination check: for each (test, train) doc pair
-    sharing shingles, the overlap coefficient
-    |shared| / |test shingles| — the fraction of the TEST doc already
-    present in training data. Asymmetric by design (a tiny eval prompt
-    fully contained in a big train doc IS contamination; Jaccard would
-    dilute it).
-
-    Shape: two inverted indexes equi-joined on the shingle value — shuffle
-    ∝ corpus sizes; never a cross product. Returns
-    (test_id, train_id, overlap) pairs with overlap >= min_overlap.
-
-    Scale bound (ENFORCED — same doctrine as ``jaccard_pairs``/
-    ``search.knn_graph``): the bipartite gram join emits exactly
-    sum_s df_test(s) * df_train(s) rows, which is quadratic-shaped
-    whenever shingles are unselective (boilerplate, tiny vocab:
-    measured ~5.2e9 rows / 70+ GB of shuffle spill at 250k+250k docs
-    on a 31-word vocabulary — a filled disk, not a slow query). The
-    volume is counted from the two gram-frequency tables (doc-sampled
-    past 2k docs/side, unbiased, memoized per input fingerprint)
-    BEFORE the join is scheduled; past ``JACCARD_MAX_CANDIDATE_PAIRS``
-    this raises with reroute advice. ``decontaminate`` and the
-    curated_corpus/training_shards capstones inherit the guard.
-    """
-    tr = (_spread(train, id_col)
-          .select(F.col(id_col).alias("train_id"),
-                  word_shingles(text_col, shingle_n).alias("sh")))
-    te = (_spread(test, id_col)
-          .select(F.col(id_col).alias("test_id"),
-                  word_shingles(text_col, shingle_n).alias("sh"))
-          )
-    tr = transient_persist(tr)  # guard gram counts + the inverted index
-    te = transient_persist(te)  # feeds sizes + the inverted index
-    key = input_key(train, test)
-    bound = JACCARD_MAX_CANDIDATE_PAIRS
-    n_cand = _GUARD_MEMO.get_or_build(
-        key and key + (id_col, text_col, shingle_n),
-        lambda: _bipartite_gram_join_volume(
-            tr, "train_id", te, "test_id", train, test, text_col,
-            bound))
-    if n_cand > bound:
-        raise ValueError(
-            f"cross_corpus_contamination gram join would emit "
-            f"~{int(n_cand):,} candidate rows (bound "
-            f"JACCARD_MAX_CANDIDATE_PAIRS = {bound:,}): shingles are "
-            f"too unselective at this scale (hot/boilerplate grams or "
-            f"a tiny vocabulary make the bipartite join "
-            f"quadratic-shaped). Block the join (restrict test to "
-            f"the eval slice actually shipped, partition by "
-            f"lang/source), pre-gate candidates with minhash "
-            f"banding (the incremental_neardup machinery), or "
-            f"raise dedup.JACCARD_MAX_CANDIDATE_PAIRS")
-    te_sizes = te.select("test_id", F.size("sh").alias("n_te"))
-    tr_inv = tr.select("train_id", F.explode("sh").alias("s"))
-    te_inv = te.select("test_id", F.explode("sh").alias("s"))
-    inter = (te_inv.join(tr_inv, "s")
-             .groupBy("test_id", "train_id")
-             .agg(F.count(F.lit(1)).alias("n_inter")))
-    # explicit broadcast: the pair table left of this join is the
-    # candidate-volume-scale frame (counted/guarded above) — its size
-    # estimate must never tempt the planner into shuffling it against
-    # the doc-scale size table
-    out = inter.join(F.broadcast(te_sizes), "test_id")
-    overlap = F.when(F.col("n_te") > 0,
-                     F.col("n_inter").cast("double") / F.col("n_te")
-                     ).otherwise(F.lit(0.0))
-    return (out.withColumn("overlap", F.round(overlap, 6))
-            .filter(F.col("overlap") >= min_overlap)
-            .select("test_id", "train_id", "overlap"))
-
-
-# ------------------------------------------------------ embedding near-dup
-
-# Size bounds of the two unblocked (block_col=None) cosine cross
-# products: input rows of embedding_neardup_pairs, test x train pairs
-# of semantic_contamination. allow_unblocked=True skips the count.
-EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS = 100_000
-SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS = 10_000_000_000
-
-
-def embedding_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            block_col: str | None = None,
-                            threshold: float = 0.9,
-                            allow_unblocked: bool = False) -> DataFrame:
-    """Cosine near-duplicate pairs within a blocking key.
-
-    The blocking key (cluster label, LSH bucket, IVF cell — see
-    operators.ann for producers) turns the quadratic all-pairs cosine into
-    per-block quadratic, which is the only shape that survives at scale.
-
-    With ``block_col=None`` the plan is a full O(N²) cross product — the
-    small-corpus exact fallback. The bound is ENFORCED, not advisory
-    (same doctrine as ``search.knn_graph``): unless
-    ``allow_unblocked=True``, the input is counted first and more than
-    ``EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS`` rows raise instead of
-    silently planning a quadratic join that would never finish at scale.
-    """
-    from dotnetvectorsearch_spark.functions.vector import dot, l2_norm
-
-    if block_col is None and not allow_unblocked:
-        n_rows = emb.count()
-        bound = EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS
-        if n_rows > bound:
-            raise ValueError(
-                f"embedding_neardup_pairs with block_col=None is an exact "
-                f"all-pairs cosine bounded at "
-                f"EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS = {bound} rows "
-                f"(got {n_rows}); pass a block_col (cluster label, LSH "
-                f"bucket, IVF cell — see operators.ann), or force the "
-                f"cross product with allow_unblocked=True")
-    # amp=16: per-block quadratic pair generation — each row joins
-    # against its whole block, so per-byte stage cost is ~block_size x
-    # the scan (A/B: 1.34x).
-    emb = _spread(emb, id_col, amp=16)
-    cols = [F.col(id_col), F.col(vec_col),
-            l2_norm(vec_col).alias("__norm")]
-    if block_col:
-        cols.append(F.col(block_col))
-    # Norms are computed once per ROW here, not once per PAIR after the
-    # join — each vector participates in O(block) pairs, so this removes
-    # two of the three array reductions from the quadratic stage.
-    base = emb.select(*cols)
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    if block_col:
-        cond = (F.col(f"a.{block_col}") == F.col(f"b.{block_col}")) & cond
-    na, nb = F.col("a.__norm"), F.col("b.__norm")
-    sim = F.round(
-        F.when((na == 0.0) | (nb == 0.0), F.lit(0.0))
-        .otherwise(dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-                   / (na * nb)), 6)
-    return (a.join(b, cond)
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                    sim.alias("cosine"))
-            .filter(F.col("cosine") >= threshold))
-
-
-# Strategy pivot for lsh_bucket_neardup_pairs: past this many bucket
-# memberships (probe + exact rows across tables) the bucket-grouped
-# kernel beats the probe equi-join (see the function docstring).
-LSH_GROUPED_MIN_MEMBERSHIPS = 2_000_000
-
-
-def lsh_bucket_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             bucket_col: str = "bucket",
-                             threshold: float = 0.9,
-                             probe_hamming: int = 1,
-                             bits: int = 8,
-                             bucket_cols: list[str] | None = None,
-                             max_probes: int | None = None,
-                             per_doc_cap: int | None = None
-                             ) -> DataFrame:
-    """Multi-probe hyperplane-LSH cosine near-dup pairs.
-
-    ``bucket_col`` is a sign-bit bucket (``bits`` hyperplane sign bits
-    packed into a long — ``operators.ann.HyperplaneLSH.bucket``).
-    Exact-bucket blocking has poor pair recall: for
-    cosine s the per-plane agreement is p = 1 - arccos(s)/pi, so ALL
-    ``bits`` planes agree with probability p^bits (~2% at s=0.35,
-    bits=8). Multi-probe (Lv et al., VLDB'07) fixes this without more
-    tables: side A is exploded to every bucket within hamming
-    ``probe_hamming`` of its own (XOR with each <=h-bit mask,
-    sum_{i<=h} C(bits,i) probes — 9 for h=1, 37 for h=2 at 8 bits) and
-    bipartite-joined against side B's EXACT bucket. A pair at bucket
-    distance h is found exactly once (the probe mask is the XOR of the
-    two buckets), so no distinct is needed. Cost: probe-count x |emb|
-    rows on one side — still linear in the corpus, the nprobe-style
-    recall/cost dial.
-
-    ``bucket_cols`` (multi-TABLE LSH, OR-amplification): at scale the
-    bucket count must grow with the corpus — a fixed 2^bits-cardinality
-    blocking key is O(n^2/2^bits) candidates, quadratic again (the
-    fixed-8-bit twin measured ~2.9e9 candidates / tens of minutes at
-    200k vectors) — but growing bits alone shrinks per-pair survival
-    ~p^bits. The standard fix (same OR-amplification family as minhash
-    BANDS) is L independent plane tables: survival becomes
-    1-(1-P1)^L while candidates stay ~ L * probes * n * occupancy,
-    linear in n at constant occupancy. Pass one bucket column per
-    table; each table runs the same probe join and the union is
-    deduped on (id_a, id_b) — the exactly-once XOR property holds only
-    WITHIN a table. Default (None) = single-table ``[bucket_col]``,
-    bit-identical to the pre-multi-table operator (no dedup shuffle).
-
-    ``max_probes`` (judge r9): hard probe BUDGET per table. The mask
-    list (h asc, combination order — deterministic) is truncated, so
-    per-row candidate work is bounded at max_probes x occupancy x
-    tables no matter how ``bits`` grows — without it, hamming-2
-    probing costs C(bits,2) probes/row, which is what made the
-    adaptive-bits scale path superlinear (sf10: 121 probes x 3 tables
-    = 2904 bucket memberships/row; measured 43x/decade). Budgets >=
-    the full mask count (e.g. 37 at bits=8/h=2, every driver tier)
-    change nothing. Truncation lowers per-pair recall at scale; the
-    capped recall is measured in TWIN_FIDELITY.md.
-
-    ``per_doc_cap`` (judge r9): keep only the top-``m`` partners per
-    ``id_a`` (cosine desc, id_b asc — deterministic under the 6-digit
-    rounding both engines share), so EMITTED pairs are O(N x m)
-    regardless of threshold — the 0.35-threshold tier's qualifying
-    pair set is otherwise a constant fraction of n^2 on unstructured
-    embeddings. Mirrors exactly in SQL as a row_number() window, so
-    oracle parity is structural, not probabilistic.
-
-    Execution shape (judge r9 rewrite) — HYBRID on total bucket
-    memberships, counted driver-side from the persisted base:
-
-      * small (<= 2e6 memberships, every driver tier): the probe
-        equi-join against the broadcastable exact side + the row-wise
-        Arrow cosine — no vector shuffle at all; measured fastest at
-        this scale (sf0.1: 1.7s vs 2.9s grouped).
-      * large: candidates are scored INSIDE bucket groups
-        (``applyInPandas`` over ``bucket % 1024`` — coarse, so group
-        count and per-group overhead are FIXED as bits grow; the
-        kernel iterates complete buckets within each group). The join
-        would materialize two 512-byte vector arrays PER CANDIDATE
-        PAIR through the exchange (sf10: 5.8e8 candidates ~ hundreds
-        of GB — the measured 218s pair stage); grouping ships each
-        vector once per MEMBERSHIP and one numpy matmul per bucket
-        scores every (probe, exact) pair (sf10 semdedup pair stage
-        283.6s -> 62.2s end-to-end, 10.2x/decade = linear-or-better
-        under SCALING_SF10's <= ~11x rule).
-
-    Pair enumeration is identical on both paths: within a bucket,
-    (probe row p, exact row e) pairs with p.id < e.id — the XOR
-    uniqueness argument is unchanged because a pair at bucket distance
-    d meets in exactly one probe bucket per table. The grouped kernel
-    emits UNROUNDED cosines over a threshold-minus-margin prefilter;
-    F.round + the exact threshold stay JVM-side so rounding semantics
-    match the SQL oracles exactly (same FP-order caveat as the Arrow
-    join path: numpy accumulation order vs DuckDB's
-    list_cosine_similarity makes boundary-pair agreement
-    probabilistic, not structural; no boundary pair observed on any
-    driver tier).
-    """
-    from dotnetvectorsearch_spark.operators.ann import probe_masks
-
-    tables = list(bucket_cols) if bucket_cols else [bucket_col]
-    masks = probe_masks(bits, probe_hamming)
-    if max_probes is not None:
-        if max_probes < 1:
-            raise ValueError(f"max_probes must be >= 1, got {max_probes}")
-        masks = masks[:max_probes]
-    emb = _spread(emb, id_col)
-    base = emb.select(F.col(id_col), F.col(vec_col),
-                      *[F.col(c) for c in tables])
-    base = transient_persist(base)  # probe side + exact side
-    # Materialize the persist BEFORE planning the self-union/join: an
-    # InMemoryRelation that is registered but unfilled gives Catalyst
-    # only estimated child-plan stats and plans become order-dependent
-    # across reps (r5 bench: a 9.5s warm vs 3.6s cold plan flip).
-    n_rows = base.count()
-    # Strategy pivot on total bucket MEMBERSHIPS (probes+exact rows).
-    # Small volumes: the probe equi-join against the (broadcastable)
-    # exact side — no vector shuffle at all, cheapest at driver tiers.
-    # Large volumes: bucket-grouped kernel — the join would
-    # materialize two vector arrays PER CANDIDATE PAIR through the
-    # exchange (sf10: 5.8e8 candidates, the measured 218s pair stage);
-    # grouping ships each vector once per MEMBERSHIP and one numpy
-    # matmul per bucket scores all its pairs. Both paths enumerate the
-    # identical pair set (XOR-uniqueness within a table) — only the FP
-    # accumulation order differs (einsum-per-pair vs matmul-per-
-    # bucket), inside the accepted boundary-pair caveat.
-    memberships = n_rows * (len(masks) + 1) * len(tables)
-    grouped = memberships > LSH_GROUPED_MIN_MEMBERSHIPS
-    thr_margin = threshold - 1e-6  # round(x,6)>=t  =>  x > t - 1e-6
-    # Buckets are grouped COARSELY (bucket mod n_groups) so the group
-    # count — and with it the per-group pandas/scheduling overhead —
-    # is FIXED no matter how adaptive bits grow; the kernel iterates
-    # the complete buckets inside each group (grouping by the raw
-    # bucket value put 2^bits * tables tiny groups through
-    # applyInPandas: ~2.5 ms/group of overhead dominated the scan at
-    # bits>=12 — measured 21s at sf1 where the probe join took 3.4s).
-    # Same-bucket rows always share a coarse group, so pair
-    # enumeration is unchanged.
-    n_groups = 1024
-
-    def _score_buckets(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        empty = pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
-                              "id_b": pd.Series([], dtype="int64"),
-                              "cosine": pd.Series([], dtype="float64")})
-        if not len(pdf):
-            return empty
-        g = pdf["__g"].to_numpy()
-        role = pdf["__role"].to_numpy()
-        ids = pdf["__id"].to_numpy()
-        V = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(V, axis=1)
-        order = np.lexsort((role, g))   # bucket-major, probes first
-        g, role, ids = g[order], role[order], ids[order]
-        V, norms = V[order], norms[order]
-        bounds = np.flatnonzero(np.r_[True, g[1:] != g[:-1], True])
-        out_a, out_b, out_s = [], [], []
-        for s, t in zip(bounds[:-1], bounds[1:]):
-            r = role[s:t]
-            ne = int(r.sum())
-            if ne == 0 or ne == t - s:
-                continue                # no exact rows or no probes
-            sp = slice(s, t - ne)       # probes (role 0, sorted first)
-            se = slice(t - ne, t)       # exact rows
-            den = norms[sp, None] * norms[se][None, :]
-            sims = V[sp] @ V[se].T
-            np.divide(sims, den, out=sims, where=den != 0.0)
-            sims[den == 0.0] = 0.0      # reference zero-magnitude guard
-            mask = ((ids[sp, None] < ids[se][None, :])
-                    & (sims > thr_margin))
-            ii, jj = np.nonzero(mask)
-            if len(ii):
-                out_a.append(ids[sp][ii])
-                out_b.append(ids[se][jj])
-                out_s.append(sims[ii, jj])
-        if not out_a:
-            return empty
-        return pd.DataFrame({"id_a": np.concatenate(out_a),
-                             "id_b": np.concatenate(out_b),
-                             "cosine": np.concatenate(out_s)})
-
-    from dotnetvectorsearch_spark.functions.vector import (
-        pairwise_cosine_arrow)
-
-    per_table = []
-    for col in tables:
-        if grouped:
-            probes = base.select(
-                F.col(id_col).alias("__id"),
-                F.col(vec_col).alias("__v"),
-                F.lit(0).alias("__role"),
-                F.explode(F.array(*[
-                    F.col(col).bitwiseXOR(F.lit(m)) for m in masks]))
-                .alias("__g"))
-            exact = base.select(
-                F.col(id_col).alias("__id"),
-                F.col(vec_col).alias("__v"),
-                F.lit(1).alias("__role"), F.col(col).alias("__g"))
-            scored = (probes.unionByName(exact)
-                      .groupBy((F.col("__g") % n_groups).alias("__gg"))
-                      .applyInPandas(
-                          _score_buckets,
-                          "id_a long, id_b long, cosine double"))
-        else:
-            probes = base.select(
-                F.col(id_col), F.col(vec_col),
-                F.explode(F.array(*[
-                    F.col(col).bitwiseXOR(F.lit(m)) for m in masks]))
-                .alias("__probe"))
-            a, b = probes.alias("a"), base.alias("b")
-            sim = pairwise_cosine_arrow()(F.col(f"a.{vec_col}"),
-                                          F.col(f"b.{vec_col}"))
-            scored = (
-                a.join(b, (F.col("a.__probe") == F.col(f"b.{col}"))
-                       & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                .select(F.col(f"a.{id_col}").alias("id_a"),
-                        F.col(f"b.{id_col}").alias("id_b"),
-                        sim.alias("cosine")))
-        per_table.append(
-            scored.withColumn("cosine", F.round("cosine", 6))
-            .filter(F.col("cosine") >= threshold))
-    out = per_table[0]
-    for t in per_table[1:]:
-        out = out.unionByName(t)
-    if len(per_table) > 1:
-        # a pair can surface once per table; the dedup shuffle touches
-        # only pairs PASSING the threshold (small), not candidates
-        out = out.dropDuplicates(["id_a", "id_b"])
-    if per_doc_cap is not None:
-        w = (Window.partitionBy("id_a")
-             .orderBy(F.desc("cosine"), F.asc("id_b")))
-        out = (out.withColumn("__rn", F.row_number().over(w))
-               .filter(F.col("__rn") <= per_doc_cap).drop("__rn"))
-    return out
-
-
-# ------------------------------------------------------ duplicate clusters
-
-
-def _cc_driver_union_find(spark, edges) -> DataFrame:
-    """Union-find with path compression over a BOUNDED edge list
-    (callers enforce the bound) — the small-graph fast path of
-    :func:`connected_components`. Edges arrive as one collected Arrow
-    table (two int64 columns, ~16 MB/M edges — not py4j Row objects),
-    node ids are remapped to dense indices, and the min-id component
-    label is assigned in a final vectorized pass. Same
-    ``(node, component)`` contract as the distributed loop."""
-    import numpy as np
-
-    u = edges.column("u").to_numpy().astype(np.int64)
-    v = edges.column("v").to_numpy().astype(np.int64)
-    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-    parent = np.arange(len(nodes))
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:          # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in zip(inv[:len(u)].tolist(), inv[len(u):].tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    roots = np.fromiter((find(i) for i in range(len(nodes))),
-                        dtype=np.int64, count=len(nodes))
-    comp_min = np.full(len(nodes), np.iinfo(np.int64).max)
-    np.minimum.at(comp_min, roots, nodes)   # min node id per component
-    import pandas as pd
-    out = pd.DataFrame({"node": nodes, "component": comp_min[roots]})
-    return spark.createDataFrame(out, "node long, component long")
-
-
-# Row bound of connected_components' driver union-find (symmetrized
-# edges, two int64 columns).
-_CC_DRIVER_EDGES = 1_000_000
-
-
-def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b",
-                         max_iter: int = 25) -> DataFrame:
-    """Connected components over an undirected pair list; returns
-    ``(node, component)`` where ``component`` is the minimum node id
-    reachable from ``node``. The last stage of every dedup pipeline:
-    candidate pairs (minhash / simhash / jaccard / embedding cosine) are
-    edges, components are duplicate clusters, and the min-id member is the
-    canonical document to keep.
-
-    Algorithm: min-label propagation fused with pointer jumping — each
-    round a node's label becomes ``min(own, neighbours' labels,
-    label-of-label)``. Neighbour propagation alone needs O(diameter)
-    rounds; the pointer-jump term halves chain depth every round, giving
-    O(log n) convergence like the large-star/small-star alternating
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14). Dedup graphs are near-cliques with tiny diameter,
-    so in practice 2-3 rounds converge.
-
-    Scale: per round, two hash-partition equi-joins keyed on node id
-    (edges x labels, labels x labels) and one min-groupBy — shuffle
-    proportional to |E| + |V|, never quadratic. ``localCheckpoint``
-    truncates the growing lineage each round (without it, round k
-    re-executes rounds 1..k-1). Beyond-reference (north-star dedup;
-    the reference has no joins at all, SURVEY §2.5).
-
-    Small-graph fast path: each distributed round costs several Spark
-    jobs of pure scheduling on a frame that is usually tiny (dedup edge
-    sets are a small fraction of the corpus). When the symmetrized edge
-    list has at most ``_CC_DRIVER_EDGES`` rows within
-    ``localdf.DRIVER_BYTES`` — one bounded collect
-    (``localdf.collect_bounded``; two fixed-width columns need no sizing
-    job) — the components come from an O(E α(E)) union-find on the
-    driver instead (~16 MB at 1M edges, measured 3-5x faster end-to-end
-    at bench scale). Past the bound the
-    iterative join plan runs, which is the only formulation that
-    survives 100 TB. Both paths produce identical (node, min-id
-    component) output; the tests run both and compare.
-    """
-    # Symmetrize via canonicalize -> distinct -> explode-both-directions,
-    # NOT e.union(e.reversed): a union duplicates the upstream plan
-    # subtree, so the (often expensive — LSH probe join, shingle join)
-    # pair producer would execute TWICE inside the edges materialization.
-    # least/greatest canonicalization also halves the distinct's shuffle
-    # volume; the exploded symmetric closure is identical to the union's.
-    u0, v0 = F.col(src), F.col(dst)
-    canon = (pairs.filter(u0 != v0)
-             .select(F.least(u0, v0).alias("u"),
-                     F.greatest(u0, v0).alias("v"))
-             .distinct())
-    edges = (canon.select(F.explode(F.array(
-                 F.struct(F.col("u"), F.col("v")),
-                 F.struct(F.col("v").alias("u"), F.col("u").alias("v"))))
-                 .alias("e"))
-             .select("e.u", "e.v")
-             .persist())
-    # The driver fast path coerces ids to int64 — valid only for integral
-    # id columns. Any other id type (strings, floats — floats would be
-    # silently TRUNCATED and could merge distinct nodes) takes the
-    # distributed loop, which only needs ids to be orderable.
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    ids_integral = all(t in integral for _, t in edges.dtypes)
-    if ids_integral:
-        table, _ = localdf.collect_bounded(edges, _CC_DRIVER_EDGES,
-                                           localdf.DRIVER_BYTES)
-        if table is not None:
-            edges.unpersist()
-            return _cc_driver_union_find(edges.sparkSession, table)
-    # label(u) starts as min(u, min neighbour) — one round of propagation
-    # folded into initialization.
-    labels = (edges.groupBy("u")
-              .agg(F.least(F.min("v"), F.col("u")).alias("label"))
-              .select(F.col("u").alias("node"), "label")
-              .localCheckpoint())
-    # Convergence check: per-node labels are monotonically non-increasing,
-    # so the TOTAL label sum strictly decreases until the fixpoint — one
-    # decimal-exact aggregate per round replaces the old-vs-new join.
-    # localCheckpoint stays EAGER: a lazy checkpoint is not guaranteed to
-    # truncate lineage through the convergence agg's separate plan, and
-    # the un-truncated lineage re-executes every prior round (measured
-    # 2-4x slower end-to-end).
-    # Non-integral labels can't be decimal-summed (the agg would return
-    # NULL and "converge" instantly); hash-sum is equality-stable for any
-    # type: unchanged labels give an identical sum, changed labels differ
-    # with overwhelming probability, and a vanishing false-converge odds
-    # after a monotone-decreasing round is acceptable for a fixpoint test.
-    def _label_sum(frame):
-        col = F.col("label").cast("decimal(38,0)") if ids_integral \
-            else F.xxhash64("node", "label").cast("decimal(38,0)")
-        return frame.agg(F.sum(col).alias("s")).collect()[0]["s"]
-
-    prev_sum = None
-    for _ in range(max_iter):
-        nbr = (edges.join(labels, edges.v == labels.node)
-               .select(F.col("u").alias("node"), "label"))
-        jump = (labels.alias("x")
-                .join(labels.select(F.col("node").alias("label"),
-                                    F.col("label").alias("label2")).alias("y"),
-                      "label")
-                .select("node", F.col("label2").alias("label")))
-        new = (labels.union(nbr).union(jump)
-               .groupBy("node").agg(F.min("label").alias("label"))
-               .localCheckpoint())
-        cur_sum = _label_sum(new)
-        labels = new
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def dedup_clusters(docs: DataFrame, pairs: DataFrame,
-                   id_col: str = "doc_id",
-                   src: str = "id_a", dst: str = "id_b") -> DataFrame:
-    """Assign every document a duplicate-cluster id: the component min-id
-    for docs appearing in a candidate pair, the doc's own id for
-    singletons. ``cluster_id`` doubles as the canonical-keep id, so
-    downstream dedup is ``filter(doc_id == cluster_id)``.
-
-    Scale: one broadcast-or-shuffle left join of the corpus against the
-    (much smaller) component map.
-    """
-    comp = connected_components(pairs, src, dst)
-    return (docs.select(F.col(id_col))
-            .join(comp.select(F.col("node").alias(id_col),
-                              F.col("component")),
-                  id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce("component", F.col(id_col))
-                    .alias("cluster_id")))
-
-
-def dedup_weights(docs: DataFrame, pairs: DataFrame,
-                  id_col: str = "doc_id",
-                  src: str = "id_a", dst: str = "id_b",
-                  round_digits: int = 6) -> DataFrame:
-    """SOFT dedup: instead of dropping duplicates, weight every document
-    by 1/|its duplicate cluster| so each distinct content unit
-    contributes equal total mass to training (the SemDeDup-family
-    downweighting recipe — repeated boilerplate stops dominating the
-    loss without throwing away the per-copy metadata/context).
-
-    Returns (id, cluster_id, cluster_size, weight): singletons get
-    weight 1.0; a 5-copy cluster's members get 0.2 each, so
-    sum(weight) == number of distinct clusters (pinned in tests).
-
-    Scale: ``dedup_clusters``' component map + one cluster-keyed count
-    + one join back — all small-side joins against the corpus id list.
-    Feed ``weight`` to ``sampling.weighted_hash_sample`` for a hard
-    subset, or export it as a per-example loss weight.
-    """
-    labeled = dedup_clusters(docs, pairs, id_col, src, dst)
-    sizes = (labeled.groupBy("cluster_id")
-             .agg(F.count(F.lit(1)).alias("cluster_size")))
-    return (labeled.join(sizes, "cluster_id")
-            .select(F.col(id_col), F.col("cluster_id"),
-                    F.col("cluster_size"),
-                    F.round(F.lit(1.0) / F.col("cluster_size"),
-                            round_digits).alias("weight")))
-
-
-def semantic_contamination(train: DataFrame, test: DataFrame,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           block_col: str | None = None,
-                           threshold: float = 0.9,
-                           allow_unblocked: bool = False) -> DataFrame:
-    """Cross-corpus SEMANTIC contamination: (test, train) pairs whose
-    embeddings exceed a cosine threshold — catches paraphrased eval
-    leakage that n-gram overlap (`cross_corpus_contamination`) misses.
-
-    Same blocked shape as `embedding_neardup_pairs` but across two
-    corpora: with a block key (label / LSH bucket / IVF cell) the join is
-    per-block bipartite, shuffle ∝ corpus sizes. Norms are computed once
-    per row before the join, not per pair.
-
-    With ``block_col=None`` the plan is a full |test|×|train| bipartite
-    cross product. ENFORCED bound (knn_graph doctrine): unless
-    ``allow_unblocked=True``, both sides are counted first and a product
-    above ``SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS`` raises instead
-    of silently planning a quadratic join.
-    """
-    from dotnetvectorsearch_spark.functions.vector import dot, l2_norm
-
-    if block_col is None and not allow_unblocked:
-        n_te, n_tr = test.count(), train.count()
-        bound = SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS
-        if n_te * n_tr > bound:
-            raise ValueError(
-                f"semantic_contamination with block_col=None is an exact "
-                f"bipartite all-pairs cosine bounded at "
-                f"SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS = {bound} "
-                f"pairs (got {n_te} x {n_tr} = "
-                f"{n_te * n_tr}); pass a block_col (label / LSH bucket / "
-                f"IVF cell), or force it with allow_unblocked=True")
-
-    def prep(df: DataFrame, prefix: str) -> DataFrame:
-        cols = [F.col(id_col).alias(f"{prefix}_id"),
-                F.col(vec_col).alias(f"{prefix}_vec"),
-                l2_norm(vec_col).alias(f"{prefix}_norm")]
-        if block_col:
-            cols.append(F.col(block_col).alias(f"{prefix}_blk"))
-        return _spread(df, id_col).select(*cols)
-
-    te, tr = prep(test, "test"), prep(train, "train")
-    cond = F.lit(True) if not block_col else \
-        (F.col("test_blk") == F.col("train_blk"))
-    na, nb = F.col("test_norm"), F.col("train_norm")
-    sim = F.round(
-        F.when((na == 0.0) | (nb == 0.0), F.lit(0.0))
-        .otherwise(dot(F.col("test_vec"), F.col("train_vec")) / (na * nb)),
-        6)
-    return (te.join(tr, cond)
-            .select(F.col("test_id"), F.col("train_id"),
-                    sim.alias("cosine"))
-            .filter(F.col("cosine") >= threshold))
-
-
-def minhash_signatures_portable(docs: DataFrame, id_col: str = "doc_id",
-                                text_col: str = "text",
-                                num_hashes: int = 16,
-                                shingle_n: int = 3,
-                                spread: bool = True) -> DataFrame:
-    """Engine-portable minhash signatures as COLUMNS (id, h0..h{K-1}):
-    min over shingles of md5('kk:' || shingle) hex — lexicographic min
-    == numeric min on fixed-width hex, so any engine with md5
-    reproduces the exact values (the `minhash_pairs_portable` family,
-    exposed column-wise so incremental-dedup joins and their DuckDB
-    oracles stay plain scalar SQL). Docs with no shingles produce no
-    row. ``spread=False`` skips the default-parallelism repartition —
-    for micro-batch callers, where fanning ~10^3 rows across 32 tasks
-    costs more scheduling than the shingle work it parallelizes, and
-    for callers that spread with their own ``amp``; values are
-    partitioning-invariant either way."""
-    if spread:
-        docs = _spread(docs, id_col)
-    mins = [F.min(F.md5(F.concat(F.lit(f"{k:02d}:"), F.col("__s"))))
-            .alias(f"h{k}") for k in range(num_hashes)]
-    return (docs.select(F.col(id_col), F.explode(
-        word_shingles(text_col, shingle_n)).alias("__s"))
-        .groupBy(id_col).agg(*mins))
-
-
-def neardup_filter_incremental(batch_sigs: DataFrame,
-                               store_sigs: DataFrame,
-                               id_col: str = "doc_id",
-                               num_hashes: int = 16, bands: int = 4,
-                               threshold: float = 0.5) -> DataFrame:
-    """Incremental NEAR-dup gate: for every batch doc, is it a
-    near-duplicate of anything already in the signature store? The
-    near-dup analogue of `exact_dedup_incremental` — the nightly-crawl
-    question every growing corpus asks, at BATCH cost:
-
-    1. candidates: bipartite LSH band equi-join (batch bands x store
-       bands) — collision volume ~ true-dup volume, never
-       |batch| x |store|;
-    2. verify: similarity ESTIMATED from the stored signatures
-       themselves (matching components / K, the unbiased minhash
-       Jaccard estimator) — the store holds K hashes per doc, never
-       shingles, so history stays O(corpus x K) and is re-read only
-       through the band join.
-
-    Both frames are `minhash_signatures_portable` outputs (columns
-    h0..h{K-1}). Returns one row per batch doc: (id, max_est,
-    is_neardup). Estimator resolution is 1/K — size K to the decision
-    granularity you need (K=16 resolves 0.0625 steps).
-    """
-    keys = _md5_bands(bands, _per_band(num_hashes, bands, "num_hashes"))
-    batch_sigs = transient_persist(batch_sigs)
-    cands = _bucket_pairs(_band(batch_sigs, id_col, keys), id_col,
-                          _band(store_sigs, id_col, keys))
-    a = batch_sigs.select(F.col(id_col).alias("id_a"),
-                          *[F.col(f"h{k}").alias(f"__a{k}")
-                            for k in range(num_hashes)])
-    b = store_sigs.select(F.col(id_col).alias("id_b"),
-                          *[F.col(f"h{k}").alias(f"__b{k}")
-                            for k in range(num_hashes)])
-    eq = sum((F.when(F.col(f"__a{k}") == F.col(f"__b{k}"), 1)
-              .otherwise(0) for k in range(num_hashes)), F.lit(0))
-    est = F.round(eq.cast("double") / num_hashes, 6)
-    per_batch = (cands.join(a, "id_a").join(b, "id_b")
-                 .select(F.col("id_a").alias(id_col), est.alias("__est"))
-                 .groupBy(id_col).agg(F.max("__est").alias("max_est")))
-    return (batch_sigs.select(F.col(id_col))
-            .join(per_batch, id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce("max_est", F.lit(0.0)).alias("max_est"))
-            .withColumn("is_neardup",
-                        F.col("max_est") >= F.lit(threshold)))
-
-
-def simhash_pairs_portable(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", bits: int = 32,
-                           chunks: int = 4,
-                           max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs with an ENGINE-PORTABLE hash family — the
-    oracle-checkable twin of the xxhash64 production path
-    (`simhash_candidate_pairs`), mirroring `minhash_pairs_portable`.
-
-    Token bit p comes from nibble p//4 of md5(token)'s hex (bit p%4
-    counted from the nibble's MSB) — pure string + integer arithmetic
-    any engine reproduces exactly. Signature bit p is set when the
-    +/-1 sum over tokens is positive; the ``bits``-bit signature is
-    banded into ``chunks`` equal chunks (pigeonhole: hamming <=
-    chunks-1 guarantees one identical chunk), candidates equi-join on
-    (chunk index, chunk value), and the verify is
-    bit_count(xor) <= max_hamming. Returns (id_a, id_b, hamming).
-    Docs with null text produce no signature and no pairs.
-
-    Same shuffle shape as production: one groupBy(doc) exchange for the
-    bit sums, one (chunk, value) exchange, distinct pairs.
-    """
-    chunk_bits = _per_band(bits, chunks, "bits")
-    if bits % 4:
-        raise ValueError(f"bits={bits} is not a multiple of 4")
-    hexd = "0123456789abcdef"
-    # amp=16: md5 is ~10x the per-byte cost of xxhash64 and every token
-    # pays one — the portable twins are hash-CPU-bound where the
-    # xxhash64 production paths are scheduling-bound (A/B: 1.07x here,
-    # 1.15-1.27x for the minhash md5 family)
-    toks = (_spread(docs, id_col, amp=16)
-            .select(F.col(id_col),
-                    F.explode(F.split(F.trim(F.col(text_col)), r"\s+"))
-                    .alias("__t"))
-            .select(F.col(id_col),
-                    F.substring(F.md5("__t"), 1, bits // 4).alias("__h")))
-    # nibble i (0-based) of the hex prefix, then bit p of the token
-    nib = [(F.instr(F.lit(hexd),
-                    F.substring("__h", i + 1, 1)) - 1).cast("long")
-           for i in range(bits // 4)]
-    sigs = _simhash(
-        toks, id_col,
-        lambda p: F.shiftright(nib[p // 4], 3 - (p % 4)) % 2 == 1, bits)
-    return _simhash_pairs(sigs, id_col, chunks, chunk_bits, max_hamming)
-
-
-def minhash_pairs_portable(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           num_hashes: int = 16, shingle_n: int = 3,
-                           bands: int = 4) -> DataFrame:
-    """MinHash-LSH candidate pairs with an ENGINE-PORTABLE hash family:
-    minhash_k = min over shingles of md5('kk:' || shingle) as a lowercase
-    hex string — lexicographic min == numeric min on fixed-width hex, so
-    any engine with md5 reproduces the exact signatures (the same trick
-    `winnow_fingerprints` uses). This is the oracle-checkable twin of the
-    xxhash64 production path (`minhash_dedup_pairs`), which trades
-    portability for ~an order of magnitude cheaper hashing.
-
-    Same shuffle shape as the production path: explode shingles -> K
-    min-aggregates (map-side partials) -> band -> self-equi-join on
-    (band, bucket) -> distinct pairs. Docs with no shingles produce no
-    signature rows and therefore no candidates.
-    """
-    keys = _md5_bands(bands, _per_band(num_hashes, bands, "num_hashes"))
-    # amp=16: K md5 computations per shingle — hash-CPU-bound, unlike
-    # the xxhash64 production path (see simhash_pairs_portable note;
-    # A/B: doc_pagerank_lsh 1.19x, minhash_pairs_md5 1.15x,
-    # dedup_clusters_lsh 1.27x)
-    sigs = minhash_signatures_portable(_spread(docs, id_col, amp=16),
-                                       id_col, text_col, num_hashes,
-                                       shingle_n, spread=False)
-    banded = transient_persist(_band(sigs, id_col, keys))
-    return _bucket_pairs(banded, id_col)
 
 
 # ------------------------------------------------- duplicate-span removal
@@ -1687,326 +271,6 @@ def remove_duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
                    F.count(F.lit(1)).alias("n_kept")))
     return (rebuilt.join(totals, id_col)
             .select(id_col, "text", "n_chunks", "n_kept"))
-
-
-# Budgets of the broadcast decontamination kernel. Two
-# independent bounds, both measured in ONE narrow pre-job before
-# anything is collected:
-# * postings count (sum of per-doc distinct shingle counts) — the
-#   array the kernel gathers over; 32M ≈ a few-hundred-k-doc eval
-#   suite, ~128 MB as int32.
-# * estimated index bytes = postings*4 + distinct_grams*80 — the
-#   gram DICTIONARY is the real memory hazard (distinct grams can
-#   approach postings on diverse text, and Python strings cost ~80 B
-#   each), so the byte estimate uses approx_count_distinct over the
-#   exploded grams and caps the whole broadcast payload.
-# Eval sets are the SMALL side of decontamination by construction; a
-# test side past either bound is not an eval set and falls back to
-# the guarded distributed gram join.
-DECONTAMINATE_BROADCAST_MAX_POSTINGS = 32_000_000
-DECONTAMINATE_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _min_hits_to_flag(n_te: int, min_overlap: float) -> int:
-    """Smallest shared-shingle count k that flags a test doc of
-    ``n_te`` distinct shingles: the exact integer threshold equivalent
-    of the join path's ``round(k / n_te, 6) >= min_overlap`` filter
-    (Spark `round` is HALF_UP on the double value — replicated here
-    with Decimal so the two kernels agree on every boundary)."""
-    from decimal import ROUND_HALF_UP, Decimal
-    q = Decimal("0.000001")
-    # Scan start must be <= the true threshold. round(k/n,6) >=
-    # min_overlap can hold while k/n is up to half a rounding quantum
-    # (5e-7) BELOW min_overlap, so the safe lower bound is
-    # n*(min_overlap - 5e-7); int()-2 gives slack for the float
-    # products themselves. The old int(min_overlap*n)-1 start was only
-    # safe while 5e-7*n < 1 (n < ~2M distinct shingles) — advisor r10.
-    start = max(1, int(n_te * (min_overlap - 5e-7)) - 2)
-    for k in range(start, n_te + 1):
-        r = float(Decimal(k / n_te).quantize(q, rounding=ROUND_HALF_UP))
-        if r >= min_overlap:
-            return k
-    return 1 << 31  # min_overlap > 1: unreachable → never flags
-
-
-def _test_postings_index(test: DataFrame, text_col: str,
-                         shingle_n: int):
-    """Collect the eval side's inverted shingle index driver-side:
-    (gram -> gram_id dict, CSR indptr, postings test-idx array,
-    per-doc shingle counts). One small Spark job, landed as ARROW
-    (`toArrow`) and built with vectorized pyarrow/numpy ops —
-    dictionary-encode assigns gram ids in C++, `np.repeat`/`argsort`
-    build the CSR — so the build is seconds even at ~10M postings,
-    where the row-collect + Python-loop form measured 30s+ (the
-    kernel's driver-side bottleneck at the sf10 tier). min_overlap
-    does NOT enter the index: flag thresholds are derived worker-side
-    (`_flag_thresholds`), so one index serves every threshold."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    sh = (test.select(word_shingles(text_col, shingle_n).alias("sh"))
-          .filter(F.size("sh") > 0))
-    col = sh.toArrow().column("sh").combine_chunks()
-    n_test = len(col)
-    n_te = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    n_te = n_te.astype(np.int64)
-    enc = col.flatten().dictionary_encode()
-    gid = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    grams2id = {s: i for i, s in enumerate(enc.dictionary.to_pylist())}
-    n_grams = len(grams2id)
-    t_idx = np.repeat(np.arange(n_test, dtype=np.int32), n_te)
-    order = np.argsort(gid, kind="stable")
-    post = t_idx[order]
-    indptr = np.zeros(n_grams + 1, dtype=np.int64)
-    np.cumsum(np.bincount(gid, minlength=n_grams), out=indptr[1:])
-    return grams2id, indptr, post, n_te
-
-
-def _flag_thresholds(n_te, min_overlap: float):
-    """Per-test-doc integer flag thresholds from the per-doc shingle
-    counts — tiny (memoized over the ~O(100) distinct doc lengths),
-    so it runs once per worker inside the UDF."""
-    import numpy as np
-
-    thr_by_n: dict[int, int] = {}
-    return np.fromiter(
-        (thr_by_n.setdefault(int(n), _min_hits_to_flag(int(n),
-                                                       min_overlap))
-         for n in n_te), dtype=np.int64, count=len(n_te))
-
-
-def decontaminate(train: DataFrame, test: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  shingle_n: int = 3,
-                  min_overlap: float = 0.5) -> DataFrame:
-    """Remove from ``train`` every document the eval set contaminates:
-    the enforcement step on top of ``cross_corpus_contamination`` — a
-    benchmark-hygiene pipeline doesn't report overlap pairs, it DROPS
-    the train docs whose content leaks an eval prompt.
-
-    Two physical kernels, same result (pinned in tests/test_dedup.py):
-
-    * **Broadcast postings kernel** (whenever the eval side's
-      postings and estimated index bytes fit
-      ``DECONTAMINATE_BROADCAST_MAX_POSTINGS`` /
-      ``DECONTAMINATE_BROADCAST_MAX_BYTES``):
-      the test side's inverted shingle index — gram dictionary, CSR
-      postings, per-test-doc integer flag thresholds — is collected
-      once (one small job) and broadcast; decontamination is then a
-      pure MAP-SIDE boolean filter over train (per doc: gather the
-      postings of its grams, ``np.bincount`` the test-doc hits,
-      compare against the thresholds). ZERO shuffle, no per-pair rows
-      ever materialized — where the gram equi-join emits
-      sum_s df_test(s)·df_train(s) rows (61M at sf1, the measured
-      bulk of the capstone cost, judge r8/r9), this path touches the
-      same postings as numpy gathers at ~1ns each. Eval sets are the
-      small side by construction, so this is also the 100 TB shape:
-      train streams map-side, nothing wide ever exchanges.
-    * **Distributed gram join** (fallback past either budget): the
-      guarded contamination equi-join (shuffle ∝ corpus sizes,
-      candidate volume counted BEFORE scheduling —
-      ``JACCARD_MAX_CANDIDATE_PAIRS``), a distinct over
-      flagged train ids, one LEFT ANTI join back against train. On
-      this path ``train`` is consumed twice (shingle index + final
-      anti-join), so it is persisted here (judge r9).
-
-    The integer thresholds replicate the join path's
-    ``round(overlap, 6) >= min_overlap`` double semantics exactly
-    (HALF_UP, see ``_min_hits_to_flag``) so kernel choice never
-    changes the result set.
-    """
-    try:
-        # budget enforcement happens INSIDE _ensure_decon_index,
-        # atomically with the memo lookup/build (a separate
-        # pre-check raced FIFO eviction — the index could be rebuilt
-        # unguarded between check and build)
-        return _decontaminate_broadcast(train, test, id_col, text_col,
-                                        shingle_n, min_overlap)
-    except DeconBudgetExceeded:
-        pass  # route to the guarded distributed join below
-    train = transient_persist(train)
-    bad = (cross_corpus_contamination(train, test, id_col, text_col,
-                                      shingle_n, min_overlap)
-           .select(F.col("train_id").alias(id_col)).distinct())
-    return train.join(bad, id_col, "left_anti")
-
-
-# Postings-index memo: input_key(test) + (shingle_n, text_col) ->
-# (broadcast handle, n_test). The eval side of decontamination is
-# reused across every query of a session (curated_corpus,
-# decontaminated_docs and training_shards all decontaminate against the
-# same split), so the collect + broadcast is paid once per (eval set,
-# params) instead of once per call. min_overlap is NOT part of the key —
-# thresholds are derived worker-side, so the enforcement queries and the
-# overlap dial share one index. text_col IS part of the key: the
-# postings are built from that column, and one eval frame can carry
-# several text columns (advisor r10). A collision risks only a stale
-# eval INDEX, and only within a session.
-_DECON_INDEX = SessionMemo(16, release=unpersist_broadcast)
-
-
-def _decon_index_stats(test: DataFrame, text_col: str,
-                       shingle_n: int):
-    """(postings count, approx distinct grams, estimated index bytes)
-    of the eval side — one narrow exploded-gram aggregate job."""
-    row = (test.select(F.explode(
-        word_shingles(text_col, shingle_n)).alias("g"))
-        .agg(F.count(F.lit(1)).alias("p"),
-             F.approx_count_distinct("g").alias("d"))
-        .collect()[0])
-    postings, grams = int(row.p or 0), int(row.d or 0)
-    return postings, grams, postings * 4 + grams * 80
-
-
-class DeconBudgetExceeded(ValueError):
-    """The eval side's shingle postings index is too large to collect
-    and broadcast. ``decontaminate`` catches this and reroutes to the
-    guarded distributed gram join; dial/streaming callers propagate it
-    (the message carries the reroute advice)."""
-
-
-def _ensure_decon_index(spark_df: DataFrame, test: DataFrame,
-                        text_col: str, shingle_n: int):
-    """Build-or-fetch the broadcast eval postings index: returns
-    (broadcast handle, n_test), memoized in ``_DECON_INDEX``.
-
-    On a memo miss the postings/byte budget
-    (``DECONTAMINATE_BROADCAST_MAX_POSTINGS`` /
-    ``DECONTAMINATE_BROADCAST_MAX_BYTES``) is checked inside the build —
-    no window where a budget check passes and a different, larger index
-    gets built. Every index in the memo passed that one budget.
-    """
-    key = input_key(test)
-    key = key and key + (shingle_n, text_col)
-
-    def build():
-        max_postings = DECONTAMINATE_BROADCAST_MAX_POSTINGS
-        max_bytes = DECONTAMINATE_BROADCAST_MAX_BYTES
-        postings, _, est_bytes = _decon_index_stats(
-            test, text_col, shingle_n)
-        if postings > max_postings or est_bytes > max_bytes:
-            raise DeconBudgetExceeded(
-                f"eval side carries {postings:,} shingle postings "
-                f"(~{est_bytes // 2**20} MB index; budget "
-                f"DECONTAMINATE_BROADCAST_MAX_POSTINGS = "
-                f"{max_postings:,} postings / "
-                f"DECONTAMINATE_BROADCAST_MAX_BYTES = "
-                f"{max_bytes // 2**20} MB): too large to broadcast. "
-                f"Use the guarded distributed formulation "
-                f"(cross_corpus_contamination; for the dial: "
-                f"min_overlap=~0 + groupBy(train_id).max(overlap)) or "
-                f"raise the dedup module's budget constants")
-        grams2id, indptr, post, n_te = _test_postings_index(
-            test, text_col, shingle_n)
-        bc = spark_df.sparkSession.sparkContext.broadcast(
-            (grams2id, indptr, post, n_te))
-        return bc, len(n_te)
-
-    return _DECON_INDEX.get_or_build(key, build)
-
-
-def _eval_doc_hits(grams, g2i, ptr, pst, n_test: int):
-    """Per-eval-doc shared-gram counts of one train doc as (idx, cnt):
-    eval doc ``idx[j]`` shares ``cnt[j]`` of the doc's grams; None when
-    nothing is shared. Hybrid counting, chosen per doc by a cost model
-    (measured crossover ~16x, r11): sparse hit lists (real corpora —
-    diverse vocab, few eval docs share a doc's grams) count via
-    O(hits log hits) ``np.unique`` over the hit docs only; dense ones
-    (a small synthetic vocabulary, where hot grams make hits ~
-    n_test/5) via the O(n_test) ``np.bincount`` over every eval doc
-    (``idx`` is then a full slice), whose memset+scatter beats a sort
-    there."""
-    import numpy as np
-
-    if grams is None or len(grams) == 0:
-        return None
-    gids = [g2i[g] for g in grams if g in g2i]
-    if not gids:
-        return None
-    hits = np.concatenate([pst[ptr[g]:ptr[g + 1]] for g in gids])
-    if hits.size * 16 < n_test:
-        return np.unique(hits, return_counts=True)
-    return slice(None), np.bincount(hits, minlength=n_test)
-
-
-def _decontaminate_broadcast(train: DataFrame, test: DataFrame,
-                             id_col: str, text_col: str,
-                             shingle_n: int,
-                             min_overlap: float) -> DataFrame:
-    """The map-side decontamination kernel: broadcast test postings,
-    filter train with a vectorized contaminated() pandas UDF. Raises
-    :class:`DeconBudgetExceeded` when the memo misses and the eval side
-    exceeds the budget."""
-    import numpy as np
-
-    bc, n_test = _ensure_decon_index(train, test, text_col, shingle_n)
-
-    @F.pandas_udf("boolean")
-    def contaminated(
-            it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        g2i, ptr, pst, n_te = bc.value
-        thr = _flag_thresholds(n_te, min_overlap)
-        for s in it:
-            out = np.zeros(len(s), dtype=bool)
-            for i, grams in enumerate(s):
-                r = _eval_doc_hits(grams, g2i, ptr, pst, n_test)
-                if r is not None:
-                    idx, cnt = r
-                    out[i] = bool(np.any(cnt >= thr[idx]))
-            yield pd.Series(out)
-
-    # plan fence (same doctrine as the bloom probe): a deterministic
-    # Python filter gets constraint-inferred/pushed across joins and
-    # aggregates upstream — run it exactly where it stands, once.
-    contaminated = contaminated.asNondeterministic()
-    return train.filter(
-        ~contaminated(word_shingles(text_col, shingle_n)))
-
-
-def max_eval_overlap(train: DataFrame, test: DataFrame,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     shingle_n: int = 3) -> DataFrame:
-    """Per-train-doc contamination DIAL: for every train doc, the
-    maximum overlap coefficient ``round(|shared shingles| / n_test, 6)``
-    against ANY eval doc (0.0 when nothing is shared). Where
-    ``decontaminate`` enforces one threshold, this emits the whole
-    distribution — the histogram a pipeline owner reads BEFORE picking
-    ``min_overlap`` (how much of the corpus sits at 0.15 vs 0.25?).
-
-    Same map-side broadcast postings kernel as ``decontaminate``
-    (zero shuffle, one Arrow pass over train; index memoized and
-    shared with the enforcement queries). The eval side must fit the
-    postings budget — the full pair matrix this summarizes is exactly
-    what the kernel avoids materializing, so past the budget this
-    raises with reroute advice (``cross_corpus_contamination`` +
-    groupBy max is the distributed formulation).
-
-    Rounding matches the SQL engines' HALF_UP ``round(x, 6)`` on the
-    max ratio (``floor(x*1e6 + 0.5)`` on the non-negative double).
-    """
-    import numpy as np
-
-    bc, n_test = _ensure_decon_index(train, test, text_col, shingle_n)
-
-    @F.pandas_udf("double")
-    def overlap_max(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        g2i, ptr, pst, n_te = bc.value
-        for s in it:
-            out = np.zeros(len(s), dtype=np.float64)
-            for i, grams in enumerate(s):
-                r = _eval_doc_hits(grams, g2i, ptr, pst, n_test)
-                if r is not None:
-                    # unshared test docs contribute ratio 0, never
-                    # raising the max
-                    idx, cnt = r
-                    out[i] = float(np.max(cnt / n_te[idx]))
-            yield pd.Series(np.floor(out * 1e6 + 0.5) / 1e6)
-
-    overlap_max = overlap_max.asNondeterministic()
-    return train.select(
-        F.col(id_col),
-        overlap_max(word_shingles(text_col, shingle_n))
-        .alias("max_overlap"))
 
 
 def corpus_diff(old: DataFrame, new: DataFrame,
@@ -2140,52 +404,6 @@ def incremental_update_manifest(old: DataFrame, new: DataFrame,
                     action.alias("action")))
 
 
-# ---------------------------------------------------- fuzzy (edit-distance)
-
-
-def fuzzy_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", prefix_chars: int = 40,
-                    block_tokens: int = 2, max_dist: int = 8) -> DataFrame:
-    """Blocked edit-distance near-duplicate pairs: (id_a, id_b, dist)
-    with ``levenshtein(prefix_a, prefix_b) <= max_dist`` over the first
-    ``prefix_chars`` characters — the fuzzy-title/lead-paragraph join a
-    curation pipeline runs where token-set measures (Jaccard/MinHash)
-    are blind to character-level edits.
-
-    Blocking: candidates must share their first ``block_tokens`` tokens
-    AND sit within a ``max_dist`` length band (a true edit-distance
-    lower bound: |len(a) - len(b)| <= dist) — an EQUI-join on the block
-    key plus a cheap band predicate, never a cross product. Verification
-    uses Spark's bounded levenshtein(…, threshold): O(max_dist * n) per
-    pair with early exit, not O(n^2).
-
-    At 100 TB: the block key fans the corpus into ~vocab^block_tokens
-    buckets; skewed blocks (a boilerplate lead sentence) are the
-    operator's known hazard — raise ``block_tokens`` or pre-filter the
-    hot key, exactly like the LSH mega-bucket cap above.
-    """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    keyed = (docs
-             .filter(F.size(toks) >= block_tokens)
-             .select(
-                 F.col(id_col),
-                 F.array_join(F.slice(toks, 1, block_tokens), " ")
-                 .alias("blk"),
-                 F.substring(F.trim(F.col(text_col)), 1, prefix_chars)
-                 .alias("pfx")))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.blk") == F.col("b.blk"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (F.abs(F.length("a.pfx") - F.length("b.pfx")) <= max_dist))
-    dist = F.levenshtein(F.col("a.pfx"), F.col("b.pfx"), max_dist)
-    return (cand.select(F.col(f"a.{id_col}").alias("id_a"),
-                        F.col(f"b.{id_col}").alias("id_b"),
-                        dist.alias("dist"))
-            .filter((F.col("dist") >= 0) & (F.col("dist") <= max_dist)))
-
-
 # ------------------------------------------------------------ bloom filter
 
 
@@ -2317,3 +535,69 @@ def _bloom_probe_keep(new_docs: DataFrame, known: DataFrame,
     if ids_only:
         return keep
     return new_docs.join(keep, id_col, "leftsemi")
+
+
+# Moved to their family modules; re-exported until callers import them
+# from there.
+from dotnetvectorsearch_spark.operators.neardup import (  # noqa: E402,F401
+    EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS,
+    _GOLDEN64,
+    _GUARD_MEMO,
+    JACCARD_MAX_CANDIDATE_PAIRS,
+    LSH_GROUPED_MIN_MEMBERSHIPS,
+    LSH_MAX_BUCKET_SIZE,
+    SIMHASH_MAX_BUCKET_SIZE,
+    _band,
+    _bit_mask,
+    _bucket_pairs,
+    embedding_neardup_pairs,
+    fuzzy_dup_pairs,
+    jaccard_pairs,
+    lsh_bucket_neardup_pairs,
+    lsh_candidate_pairs,
+    _md5_bands,
+    minhash_dedup_pairs,
+    minhash_pairs_portable,
+    minhash_signatures,
+    minhash_signatures_portable,
+    neardup_filter_incremental,
+    ngram_novelty,
+    _per_band,
+    _salt,
+    _simhash,
+    simhash_candidate_pairs,
+    _simhash_pairs,
+    simhash_pairs_portable,
+    simhash_signatures,
+    verify_jaccard,
+)
+from dotnetvectorsearch_spark.operators.graph import (  # noqa: E402,F401
+    _CC_DRIVER_EDGES,
+    _cc_driver_union_find,
+    connected_components,
+    dedup_clusters,
+    dedup_weights,
+)
+from dotnetvectorsearch_spark.operators.contamination import (  # noqa: E402,F401
+    _DECON_INDEX,
+    DECONTAMINATE_BROADCAST_MAX_BYTES,
+    DECONTAMINATE_BROADCAST_MAX_POSTINGS,
+    SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS,
+    _bipartite_gram_join_volume,
+    cross_corpus_contamination,
+    _decon_index_stats,
+    DeconBudgetExceeded,
+    decontaminate,
+    _decontaminate_broadcast,
+    _ensure_decon_index,
+    _eval_doc_hits,
+    _flag_thresholds,
+    max_eval_overlap,
+    _min_hits_to_flag,
+    semantic_contamination,
+    _test_postings_index,
+)
+from dotnetvectorsearch_spark.localdf import (  # noqa: E402,F401
+    _SPREAD_BYTES,
+    _spread,
+)

@@ -128,15 +128,15 @@ def test_fitted_pq_refits_after_in_place_rewrite(spark, sf_dir,
     """The registry's fitted-codebook memo is keyed on the embeddings'
     input state, not the sf_dir string: a corpus rewritten in place
     refits instead of serving its old codebooks."""
-    import __spark_entry__ as entry
+    from registry.ann import _fitted_pq
     d = str(tmp_path / "sf")
     emb = load_table(spark, sf_dir, "embeddings")
     emb.filter("vec_id % 2 = 0").write.parquet(f"{d}/embeddings.parquet")
-    first = entry._fitted_pq(spark, d)
-    assert entry._fitted_pq(spark, d) is first          # memo hit
+    first = _fitted_pq(spark, d)
+    assert _fitted_pq(spark, d) is first          # memo hit
     emb.filter("vec_id % 2 = 1").write.mode("overwrite").parquet(
         f"{d}/embeddings.parquet")
-    assert entry._fitted_pq(spark, d) is not first      # refit
+    assert _fitted_pq(spark, d) is not first      # refit
 
 
 @pytest.fixture(scope="module")

@@ -422,9 +422,9 @@ def test_leakage_safe_splits_cluster_members_share_split(spark, sf_dir):
     (dataset_splits) demonstrably scatters at least one multi-member
     cluster across splits on the same corpus — the leakage the
     cluster-aware variant exists to prevent."""
-    import __spark_entry__ as entry
+    from registry.curation import SPLIT_WEIGHTS, _q_leakage_safe_splits
 
-    out = entry._q_leakage_safe_splits(spark, sf_dir)
+    out = _q_leakage_safe_splits(spark, sf_dir)
     per_cluster = (out.groupBy("cluster_id")
                    .agg(F.countDistinct("split").alias("n_splits"),
                         F.count(F.lit(1)).alias("n"))
@@ -437,7 +437,7 @@ def test_leakage_safe_splits_cluster_members_share_split(spark, sf_dir):
     # pointless on this corpus)
     from dotnetvectorsearch_spark.operators.sampling import hash_split
     naive = hash_split(out.select("doc_id", "cluster_id"), "doc_id",
-                       entry.SPLIT_WEIGHTS)
+                       SPLIT_WEIGHTS)
     scattered = (naive.filter(F.col("cluster_id").isin(list(multi)))
                  .groupBy("cluster_id")
                  .agg(F.countDistinct("split").alias("n_splits"))

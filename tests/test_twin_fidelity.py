@@ -178,10 +178,10 @@ def test_adaptive_design_holds_recall_at_high_bits(spark):
     from dotnetvectorsearch_spark.operators.dedup import (
         embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
-    import __spark_entry__ as entrymod
+    from registry.lsh import _lsh_tables_for_recall
 
     bits = 15
-    n_tables = entrymod._lsh_tables_for_recall(bits, probe_hamming=2)
+    n_tables = _lsh_tables_for_recall(bits, probe_hamming=2)
     assert n_tables >= 2
     emb = gen_embeddings_clustered(spark, 300, dim=64, n_clusters=8)
     emb = emb.select("vec_id", "embedding")

@@ -7,7 +7,7 @@ sf1 parquet (tools/gen_scale_tier.py output, 50k docs / 20k vectors /
 check_oracle machinery, plus timing both engines.
 
 The semdedup twins ADAPT above the driver tiers (bits ~ log2(n/8),
-OR-amplified tables — __spark_entry__._lsh_adaptive_bits /
+OR-amplified tables — registry.lsh._lsh_adaptive_bits /
 _lsh_tables_for_recall), so their registry oracle (fixed 8-bit single
 table) is the wrong semantics at sf1; this tool generates the
 TIER-MATCHED oracle SQL from the same plane constants and configuration
@@ -41,6 +41,12 @@ import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
 from dotnetvectorsearch_spark.session import get_spark
+from registry.lsh import (
+    _LSH_ORACLE_DIM,
+    _lsh_adaptive_bits,
+    _lsh_bucket_sql,
+    _lsh_tables_for_recall,
+)
 from tools.check_oracle import normalize
 
 SF1_DIR = ROOT / ".scaletier" / "sf1"
@@ -102,12 +108,12 @@ def semdedup_tier_sql(n_rows: int, threshold: float, probe_hamming: int,
     'within hamming h in SOME table' (the deduped multi-table union of
     lsh_bucket_neardup_pairs), then the registry oracle's CC +
     keep-min tail verbatim."""
-    bits = entrymod._lsh_adaptive_bits(n_rows)
-    n_tables = entrymod._lsh_tables_for_recall(
+    bits = _lsh_adaptive_bits(n_rows)
+    n_tables = _lsh_tables_for_recall(
         bits, probe_hamming=probe_hamming, target_recall=target_recall)
     bcols = [
-        entrymod._lsh_bucket_sql(HyperplaneLSH.md5(
-            bits, entrymod._LSH_ORACLE_DIM, offset=t * bits).planes)
+        _lsh_bucket_sql(HyperplaneLSH.md5(
+            bits, _LSH_ORACLE_DIM, offset=t * bits).planes)
         + f" AS b{t}"
         for t in range(n_tables)]
     ham = " OR ".join(

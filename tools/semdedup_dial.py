@@ -45,7 +45,6 @@ sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH, probe_masks
 from dotnetvectorsearch_spark.operators.dedup import (
@@ -54,6 +53,8 @@ from dotnetvectorsearch_spark.operators.dedup import (
     lsh_bucket_neardup_pairs,
 )
 from dotnetvectorsearch_spark.session import get_spark, local_cpus
+from dotnetvectorsearch_spark.sources.io import load_table
+from registry.lsh import _lsh_tables_for_recall
 
 TAU = 0.35
 BITS = 8
@@ -79,7 +80,7 @@ def _kept(emb, pairs):
 
 
 def measure(spark, sf_dir: str) -> dict:
-    emb = entrymod.load_table(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     bucketed = HyperplaneLSH.md5(BITS, 64).transform(emb)
     bucketed = bucketed.persist()
@@ -100,8 +101,7 @@ def measure(spark, sf_dir: str) -> dict:
     # candidate budget per row) shrinks 128x from bits=8 to bits=15?
     ladder = []
     for bits in (8, 12, 15):
-        n_tables = entrymod._lsh_tables_for_recall(bits,
-                                                   probe_hamming=2)
+        n_tables = _lsh_tables_for_recall(bits, probe_hamming=2)
         b2 = emb
         cols = []
         for t in range(n_tables):

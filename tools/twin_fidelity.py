@@ -45,6 +45,8 @@ from pyspark.sql.window import Window
 import __spark_entry__ as entrymod
 from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.session import get_spark, local_cpus
+from dotnetvectorsearch_spark.sources.io import load_table
+from registry.lsh import _semdedup_lsh_impl
 
 JACCARD_BUCKETS = [(0.1, 0.3), (0.3, 0.5), (0.5, 0.7), (0.7, 0.9),
                    (0.9, 1.01)]
@@ -58,7 +60,7 @@ def pair_fidelity(spark, sf_dir: str) -> dict:
     """Recall of the two LSH pair generators against exact Jaccard,
     bucketed by the exact pair's similarity."""
     return pair_fidelity_docs(
-        entrymod.load_table(spark, sf_dir, "documents"))
+        load_table(spark, sf_dir, "documents"))
 
 
 def pair_fidelity_docs(docs) -> dict:
@@ -148,9 +150,9 @@ def _ari(joined, col_a: str, col_b: str) -> float:
 
 
 def cluster_fidelity(spark, sf_dir: str) -> dict:
-    exact = entrymod.QUERIES["dedup_clusters"](spark, sf_dir) \
+    exact = entrymod.queries()["dedup_clusters"](spark, sf_dir) \
         .withColumnRenamed("cluster_id", "c_exact")
-    twin = entrymod.QUERIES["dedup_clusters_lsh"](spark, sf_dir) \
+    twin = entrymod.queries()["dedup_clusters_lsh"](spark, sf_dir) \
         .withColumnRenamed("cluster_id", "c_twin")
     j = exact.join(twin, "doc_id").persist()
     n = j.count()
@@ -168,10 +170,10 @@ def cluster_fidelity(spark, sf_dir: str) -> dict:
 
 
 def semdedup_fidelity(spark, sf_dir: str) -> dict:
-    exact = entrymod.QUERIES["semdedup_keep"](spark, sf_dir).select(
+    exact = entrymod.queries()["semdedup_keep"](spark, sf_dir).select(
         "vec_id", F.col("cluster_id").alias("c_exact"),
         F.col("kept").alias("k_exact"))
-    twin = entrymod.QUERIES["semdedup_lsh"](spark, sf_dir).select(
+    twin = entrymod.queries()["semdedup_lsh"](spark, sf_dir).select(
         "vec_id", F.col("cluster_id").alias("c_twin"),
         F.col("kept").alias("k_twin"))
     j = exact.join(twin, "vec_id").persist()
@@ -185,9 +187,9 @@ def semdedup_fidelity(spark, sf_dir: str) -> dict:
 
 
 def pagerank_fidelity(spark, sf_dir: str) -> dict:
-    exact = entrymod.QUERIES["doc_pagerank"](spark, sf_dir).select(
+    exact = entrymod.queries()["doc_pagerank"](spark, sf_dir).select(
         "node", F.col("pagerank").alias("pr_exact"))
-    twin = entrymod.QUERIES["doc_pagerank_lsh"](spark, sf_dir).select(
+    twin = entrymod.queries()["doc_pagerank_lsh"](spark, sf_dir).select(
         "node", F.col("pagerank").alias("pr_twin"))
     exact, twin = exact.persist(), twin.persist()
     n_exact, n_twin = exact.count(), twin.count()
@@ -227,20 +229,20 @@ def semdedup_cap_fidelity(spark, sf_dir: str) -> dict:
     out = {}
     for label, thr, h, tr in [("t0.35", 0.35, 2, 0.75),
                               ("t0.8", 0.8, 1, 0.45)]:
-        capped_p = entrymod._semdedup_lsh_impl(
+        capped_p = _semdedup_lsh_impl(
             spark, sf_dir, thr, probe_hamming=h, target_recall=tr,
             pairs_only=True).select("id_a", "id_b").persist()
-        uncapped_p = entrymod._semdedup_lsh_impl(
+        uncapped_p = _semdedup_lsh_impl(
             spark, sf_dir, thr, probe_hamming=h, target_recall=tr,
             max_probes=None, per_doc_cap=None,
             pairs_only=True).select("id_a", "id_b").persist()
         n_cap, n_unc = capped_p.count(), uncapped_p.count()
         n_common = capped_p.join(uncapped_p, ["id_a", "id_b"],
                                  "left_semi").count()
-        capped = entrymod._semdedup_lsh_impl(
+        capped = _semdedup_lsh_impl(
             spark, sf_dir, thr, probe_hamming=h, target_recall=tr) \
             .select("vec_id", F.col("kept").alias("k_cap"))
-        uncapped = entrymod._semdedup_lsh_impl(
+        uncapped = _semdedup_lsh_impl(
             spark, sf_dir, thr, probe_hamming=h, target_recall=tr,
             max_probes=None, per_doc_cap=None) \
             .select("vec_id", F.col("kept").alias("k_unc"))
