@@ -27,9 +27,9 @@ from registry import ann, curation, dedup, events, lsh, search, text, tpch
 SF0001 = "/root/testdata/sf0.001"
 
 # Oracle statements embed earlier families' statements (doc_pagerank_lsh
-# reads minhash_pairs_md5, dedup_keep_best
-# reads quality_scores, leakage_safe_splits reads dedup_clusters), so the
-# families add theirs in this order.
+# reads minhash_pairs_md5, dedup_keep_best reads quality_scores,
+# leakage_safe_splits reads dedup_clusters), so the families add theirs
+# in this order.
 _FAMILIES = (search, ann, text, lsh, dedup, curation, tpch, events)
 
 # REGISTRY ORDER IS A CONTRACT: the driver verifies only a fixed-size

@@ -47,7 +47,7 @@ from .ann import IVFIndex, IVFPQIndex, PQIndex, _adc
 from .search import round6_half_up
 
 # The one set of build hyperparameters: the store builds and the
-# registry's fit-in-query entries (__spark_entry__._fitted) both fit
+# registry's fit-in-query entries (registry.ann._fitted) both fit
 # through fit_index, and the serve-path tests pin serve == fit-in-query
 # results, which holds because the seeded fit is deterministic for
 # identical (params, sample).

@@ -15,18 +15,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dotnetvectorsearch_spark.functions.text import word_shingles
 from dotnetvectorsearch_spark.caching import (
-    SessionMemo,
-    input_key,
-    transient_persist,
-    unpersist_broadcast,
-)
+    SessionMemo, input_key, transient_persist, unpersist_broadcast)
+from dotnetvectorsearch_spark.functions.text import word_shingles
 from dotnetvectorsearch_spark.localdf import _spread
-from dotnetvectorsearch_spark.operators.neardup import (
-    _GUARD_MEMO,
-    JACCARD_MAX_CANDIDATE_PAIRS,
-)
+from dotnetvectorsearch_spark.operators import neardup
 
 
 def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
@@ -40,7 +33,7 @@ def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
     doctrine as the ``jaccard_pairs`` guard: exact under ~2k docs per
     side, else an unbiased deterministic 1/q doc sample per side
     (independent salts, so E[df_tr * df_te] factorizes); the caller
-    memoizes it in ``_GUARD_MEMO``. Grams hash to longs (collisions
+    memoizes it in ``neardup._GUARD_MEMO``. Grams hash to longs (collisions
     over-count = err safe).
 
     Cost fold (VERDICT r6 #5), two tiers:
@@ -121,9 +114,10 @@ def cross_corpus_contamination(train: DataFrame, test: DataFrame,
     on a 31-word vocabulary — a filled disk, not a slow query). The
     volume is counted from the two gram-frequency tables (doc-sampled
     past 2k docs/side, unbiased, memoized per input fingerprint)
-    BEFORE the join is scheduled; past ``JACCARD_MAX_CANDIDATE_PAIRS``
-    this raises with reroute advice. ``decontaminate`` and the
-    curated_corpus/training_shards capstones inherit the guard.
+    BEFORE the join is scheduled; past
+    ``neardup.JACCARD_MAX_CANDIDATE_PAIRS`` this raises with reroute
+    advice. ``decontaminate`` and the curated_corpus/training_shards
+    capstones inherit the guard.
     """
     tr = (_spread(train, id_col)
           .select(F.col(id_col).alias("train_id"),
@@ -135,8 +129,8 @@ def cross_corpus_contamination(train: DataFrame, test: DataFrame,
     tr = transient_persist(tr)  # guard gram counts + the inverted index
     te = transient_persist(te)  # feeds sizes + the inverted index
     key = input_key(train, test)
-    bound = JACCARD_MAX_CANDIDATE_PAIRS
-    n_cand = _GUARD_MEMO.get_or_build(
+    bound = neardup.JACCARD_MAX_CANDIDATE_PAIRS
+    n_cand = neardup._GUARD_MEMO.get_or_build(
         key and key + (id_col, text_col, shingle_n),
         lambda: _bipartite_gram_join_volume(
             tr, "train_id", te, "test_id", train, test, text_col,
@@ -152,7 +146,7 @@ def cross_corpus_contamination(train: DataFrame, test: DataFrame,
             f"the eval slice actually shipped, partition by "
             f"lang/source), pre-gate candidates with minhash "
             f"banding (the incremental_neardup machinery), or "
-            f"raise dedup.JACCARD_MAX_CANDIDATE_PAIRS")
+            f"raise neardup.JACCARD_MAX_CANDIDATE_PAIRS")
     te_sizes = te.select("test_id", F.size("sh").alias("n_te"))
     tr_inv = tr.select("train_id", F.explode("sh").alias("s"))
     te_inv = te.select("test_id", F.explode("sh").alias("s"))
@@ -172,6 +166,9 @@ def cross_corpus_contamination(train: DataFrame, test: DataFrame,
             .select("test_id", "train_id", "overlap"))
 
 
+# Test x train pair bound of semantic_contamination's unblocked
+# (block_col=None) cosine cross product. allow_unblocked=True skips the
+# count.
 SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS = 10_000_000_000
 
 
@@ -350,7 +347,7 @@ def decontaminate(train: DataFrame, test: DataFrame,
     * **Distributed gram join** (fallback past either budget): the
       guarded contamination equi-join (shuffle ∝ corpus sizes,
       candidate volume counted BEFORE scheduling —
-      ``JACCARD_MAX_CANDIDATE_PAIRS``), a distinct over
+      ``neardup.JACCARD_MAX_CANDIDATE_PAIRS``), a distinct over
       flagged train ids, one LEFT ANTI join back against train. On
       this path ``train`` is consumed twice (shingle index + final
       anti-join), so it is persisted here (judge r9).

@@ -24,18 +24,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dotnetvectorsearch_spark.functions.text import (
-    fingerprint,
-    ordered_char_kgrams,
-    ordered_word_ngrams,
-)
 from dotnetvectorsearch_spark.caching import transient_persist
-from dotnetvectorsearch_spark.operators.contamination import (
-    _DECON_INDEX,
-    max_eval_overlap,
-)
+from dotnetvectorsearch_spark.functions.text import (
+    fingerprint, ordered_char_kgrams, ordered_word_ngrams)
 from dotnetvectorsearch_spark.localdf import _spread
+from dotnetvectorsearch_spark.operators.contamination import (
+    _DECON_INDEX, max_eval_overlap)
 from dotnetvectorsearch_spark.operators.neardup import _GUARD_MEMO
+
+# The other families' entry points perfbench/workloads.py calls through
+# this module.
+from dotnetvectorsearch_spark.operators.contamination import (  # noqa: F401
+    decontaminate)
+from dotnetvectorsearch_spark.operators.graph import (  # noqa: F401
+    dedup_clusters)
+from dotnetvectorsearch_spark.operators.neardup import (  # noqa: F401
+    jaccard_pairs, lsh_candidate_pairs, minhash_dedup_pairs,
+    minhash_signatures)
 
 
 # ---------------------------------------------------------------- exact
@@ -535,69 +540,3 @@ def _bloom_probe_keep(new_docs: DataFrame, known: DataFrame,
     if ids_only:
         return keep
     return new_docs.join(keep, id_col, "leftsemi")
-
-
-# Moved to their family modules; re-exported until callers import them
-# from there.
-from dotnetvectorsearch_spark.operators.neardup import (  # noqa: E402,F401
-    EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS,
-    _GOLDEN64,
-    _GUARD_MEMO,
-    JACCARD_MAX_CANDIDATE_PAIRS,
-    LSH_GROUPED_MIN_MEMBERSHIPS,
-    LSH_MAX_BUCKET_SIZE,
-    SIMHASH_MAX_BUCKET_SIZE,
-    _band,
-    _bit_mask,
-    _bucket_pairs,
-    embedding_neardup_pairs,
-    fuzzy_dup_pairs,
-    jaccard_pairs,
-    lsh_bucket_neardup_pairs,
-    lsh_candidate_pairs,
-    _md5_bands,
-    minhash_dedup_pairs,
-    minhash_pairs_portable,
-    minhash_signatures,
-    minhash_signatures_portable,
-    neardup_filter_incremental,
-    ngram_novelty,
-    _per_band,
-    _salt,
-    _simhash,
-    simhash_candidate_pairs,
-    _simhash_pairs,
-    simhash_pairs_portable,
-    simhash_signatures,
-    verify_jaccard,
-)
-from dotnetvectorsearch_spark.operators.graph import (  # noqa: E402,F401
-    _CC_DRIVER_EDGES,
-    _cc_driver_union_find,
-    connected_components,
-    dedup_clusters,
-    dedup_weights,
-)
-from dotnetvectorsearch_spark.operators.contamination import (  # noqa: E402,F401
-    _DECON_INDEX,
-    DECONTAMINATE_BROADCAST_MAX_BYTES,
-    DECONTAMINATE_BROADCAST_MAX_POSTINGS,
-    SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS,
-    _bipartite_gram_join_volume,
-    cross_corpus_contamination,
-    _decon_index_stats,
-    DeconBudgetExceeded,
-    decontaminate,
-    _decontaminate_broadcast,
-    _ensure_decon_index,
-    _eval_doc_hits,
-    _flag_thresholds,
-    max_eval_overlap,
-    _min_hits_to_flag,
-    semantic_contamination,
-    _test_postings_index,
-)
-from dotnetvectorsearch_spark.localdf import (  # noqa: E402,F401
-    _SPREAD_BYTES,
-    _spread,
-)

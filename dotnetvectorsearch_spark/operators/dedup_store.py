@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import SessionMemo, _input_fingerprint, unpersist_broadcast
+from ..functions.text import fingerprint
 from ..sources.io import load_table
 from .ann_store import (
     _MARKER,
@@ -52,7 +53,7 @@ from .ann_store import (
     _write_marker,
     default_root,
 )
-from .dedup import _bloom_probe_keep, build_bloom, fingerprint
+from .dedup import _bloom_probe_keep, build_bloom
 
 # The corpus slice MUST stay in lockstep with the registry queries
 # (_q_incremental_dedup_bloom serves what _q_incremental_dedup computes

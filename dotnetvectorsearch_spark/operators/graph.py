@@ -1,13 +1,13 @@
 """Graph analytics over document/similarity graphs.
 
-Connected components (the dedup-clustering workhorse) lives in
-``operators/dedup.py``; this module holds ranking-style iterative
-algorithms. First resident: fixed-iteration PageRank over an undirected
-similarity graph — the curation signal web-scale pipelines propagate
-over dup/link graphs to pick WHICH copy of near-duplicate content to
-keep (keep the authoritative node, drop the mirrors).
+Two residents. Fixed-iteration PageRank over an undirected similarity
+graph — the curation signal web-scale pipelines propagate over dup/link
+graphs to pick WHICH copy of near-duplicate content to keep (keep the
+authoritative node, drop the mirrors). And connected components, the
+dedup-clustering workhorse (`connected_components`, with
+`dedup_clusters` / `dedup_weights` on top of it).
 
-Scale shape: pure DataFrame joins/aggregations — the standard
+PageRank's scale shape: pure DataFrame joins/aggregations — the standard
 "SQL PageRank". Per iteration: one equi-join of the edge list against
 the rank table (edges pre-partitioned by source once, persisted, so
 every iteration reuses the same exchange side) and one groupBy(dst) with
@@ -54,7 +54,7 @@ def pagerank_undirected(pairs: DataFrame, src: str = "id_a",
     the oracle expressible; 5 iterations is plenty for ranking stability
     on similarity graphs, and a caller can raise it. Lineage grows one
     join per iteration — past ~20 iterations add a localCheckpoint like
-    ``dedup.connected_components`` does.
+    ``connected_components`` does.
     """
     # Both directions via one explode, NOT a self-union: a union
     # evaluates the (expensive) pairs plan once per branch, so the
@@ -69,7 +69,7 @@ def pagerank_undirected(pairs: DataFrame, src: str = "id_a",
     )).alias("e")).select("e.src", "e.dst"))
     edges = transient_persist(edges.repartition("src"))
     # Small-graph fast path (same enforced-bound doctrine as
-    # dedup.connected_components): each distributed iteration costs a
+    # connected_components): each distributed iteration costs a
     # join + an aggregation of pure job scheduling on a frame that is
     # tiny at similarity-graph densities. Under the bound the whole
     # recurrence runs on the driver with bit-identical arithmetic (see

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dotnetvectorsearch_spark import localdf
+from dotnetvectorsearch_spark.localdf import _spread
 
 # Bigram-model broadcast bound: (bg string ~ 20 B, two longs) * 5M
 # types ~ 300 MB serialized — near the practical broadcast ceiling.
@@ -367,7 +368,6 @@ def bpe_train_rules(docs: DataFrame, text_col: str = "text",
     normalization), the distributed loop below runs unchanged. Both
     paths produce identical rules; tests pin them against each other.
     """
-    from dotnetvectorsearch_spark.operators.dedup import _spread
     words = (_spread(docs, text_col)
              .select(F.explode(tokens(text_col)).alias("w"))
              .filter(F.length("w") > 0)
@@ -491,7 +491,6 @@ def bpe_segment_arrow(docs: DataFrame, merges: list[tuple[str, str]],
             yield pd.DataFrame(
                 {id_col: ids, "token": toks, "pieces": pieces})
 
-    from dotnetvectorsearch_spark.operators.dedup import _spread
     # Single-file inputs arrive as ONE partition; without a spread the
     # whole Arrow encode runs on one core (measured: the sf0.1 segment
     # stage was a single 1.5s task on local[32]).
@@ -543,7 +542,6 @@ def dsir_logweights(candidates: DataFrame, target: DataFrame | None = None,
     import math
 
     from dotnetvectorsearch_spark.caching import transient_persist
-    from dotnetvectorsearch_spark.operators.dedup import _spread
 
     def occurrences(df: DataFrame, *extra: Column) -> DataFrame:
         # extra columns must arrive pre-aliased. explode_OUTER: a doc

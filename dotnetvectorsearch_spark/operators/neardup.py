@@ -23,8 +23,8 @@ corpus dedup story is BASELINE.json's north star, not reference code).
 
 Hot paths are JVM-side Catalyst expressions; the only Python is
 Arrow-vectorized (the bucket-grouped cosine kernel in
-`lsh_bucket_neardup_pairs`, the mergeable-bloom fold/probe) — no
-row-at-a-time UDFs anywhere in this module.
+`lsh_bucket_neardup_pairs`) — no row-at-a-time UDFs anywhere in this
+module.
 """
 
 from __future__ import annotations
@@ -35,12 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dotnetvectorsearch_spark.functions.text import word_shingles
 from dotnetvectorsearch_spark.caching import (
-    SessionMemo,
-    input_key,
-    transient_persist,
-)
+    SessionMemo, input_key, transient_persist)
+from dotnetvectorsearch_spark.functions.text import word_shingles
 from dotnetvectorsearch_spark.localdf import _spread
 
 
@@ -482,7 +479,7 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
             f"twins instead — minhash_dedup_pairs (verified pairs) "
             f"or minhash_pairs_portable (candidates); measured "
             f"recall in TWIN_FIDELITY.md — or raise "
-            f"dedup.JACCARD_MAX_CANDIDATE_PAIRS")
+            f"neardup.JACCARD_MAX_CANDIDATE_PAIRS")
     a, b = inv.alias("a"), inv.alias("b")
     cond = (F.col("a.s") == F.col("b.s")) & \
            (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -507,9 +504,9 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 
 # ------------------------------------------------------ embedding near-dup
 
-# Size bounds of the two unblocked (block_col=None) cosine cross
-# products: input rows of embedding_neardup_pairs, test x train pairs
-# of semantic_contamination. allow_unblocked=True skips the count.
+# Input-row bound of embedding_neardup_pairs' unblocked
+# (block_col=None) cosine cross product. allow_unblocked=True skips the
+# count.
 EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS = 100_000
 
 

@@ -13,7 +13,7 @@ min, max), so merge = group-by-key re-sum; the merge's shuffle carries
 Sums accumulate in DECIMAL so the merged rollup is bit-equal to a
 from-scratch aggregate regardless of partitioning or merge order (the
 same order-independence doctrine as every decimal-summed query in
-`__spark_entry__.py`).
+`registry/`).
 """
 
 from __future__ import annotations

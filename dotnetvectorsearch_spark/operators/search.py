@@ -384,7 +384,7 @@ def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
     The bound is ENFORCED, not advisory: the corpus is counted before any
     collect, and past ``KNN_GRAPH_MAX_BROADCAST_ROWS`` this raises
     instead of silently OOMing the driver at scale. Past the bound, the blocked
-    approximate paths are the tool: ``dedup.embedding_neardup_pairs``
+    approximate paths are the tool: ``neardup.embedding_neardup_pairs``
     (LSH-blocked) or ``ann.IVFIndex`` cell-join — same output contract,
     candidate-bounded.
     """
@@ -397,8 +397,8 @@ def knn_graph(docs: DataFrame, k: int = 5, id_col: str = "vec_id",
             f"knn_graph is an exact broadcast kNN bounded at "
             f"KNN_GRAPH_MAX_BROADCAST_ROWS = "
             f"{KNN_GRAPH_MAX_BROADCAST_ROWS} rows (got {n_rows}); past "
-            f"executor-fit use dedup.embedding_neardup_pairs (LSH-blocked) or "
-            f"ann.IVFIndex (cell-partitioned) instead")
+            f"executor-fit use neardup.embedding_neardup_pairs "
+            f"(LSH-blocked) or ann.IVFIndex (cell-partitioned) instead")
     rows = docs.select(id_col, vec_col).collect()
     all_ids = np.asarray([r[0] for r in rows], dtype=np.int64)
     id_order = np.argsort(all_ids)  # sorted ids => column index IS the

@@ -32,8 +32,9 @@ def theta_ngram_overlap(corpus_a: DataFrame, corpus_b: DataFrame,
     Scale shape: each side is one map-side-combined sketch aggregate —
     the exchange carries per-task sketches (~2^lg_k hashes max, KBs),
     never the n-grams themselves. The final intersection/union runs on
-    two 1-row frames. Contrast `dedup.cross_corpus_contamination`, which
-    joins n-gram streams for exact pair attribution: this estimator
+    two 1-row frames. Contrast
+    `contamination.cross_corpus_contamination`, which joins n-gram
+    streams for exact pair attribution: this estimator
     answers "how contaminated?" at a constant cost, the join answers
     "which documents?" at shuffle cost — both belong in the toolbox.
     """

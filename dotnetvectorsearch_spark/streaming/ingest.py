@@ -131,7 +131,7 @@ def stream_decontaminate(docs: DataFrame, eval_docs: DataFrame,
     versioned benchmark suite.
 
     The eval side is subject to the batch kernel's one postings/byte
-    budget (``dedup.DECONTAMINATE_BROADCAST_MAX_POSTINGS`` /
+    budget (``contamination.DECONTAMINATE_BROADCAST_MAX_POSTINGS`` /
     ``DECONTAMINATE_BROADCAST_MAX_BYTES``): past it this raises
     :class:`DeconBudgetExceeded` at stream DEFINITION time with
     reroute advice, instead of silently collecting an unbounded index
@@ -139,7 +139,7 @@ def stream_decontaminate(docs: DataFrame, eval_docs: DataFrame,
     a stream — an eval set past the budget is not a broadcastable
     gate; decontaminate it in the batch compaction pass instead.
     """
-    from ..operators.dedup import _decontaminate_broadcast
+    from ..operators.contamination import _decontaminate_broadcast
     return _decontaminate_broadcast(docs, eval_docs, "doc_id",
                                     text_col, shingle_n, min_overlap)
 
@@ -711,7 +711,7 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     docs that are not near-duplicates of anything seen before, append
     survivors to ``out_path`` and their SIGNATURES to ``store_path`` —
     the near-dup analogue of the exact `stream_dedup`, batch twin
-    `neardup_filter_incremental` (operators/dedup.py).
+    `neardup_filter_incremental` (operators/neardup.py).
 
     Trigger cost is BATCH-sized and the job count per trigger is
     FIXED (judge r9 — previously every trigger re-read and re-banded
@@ -758,7 +758,7 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     """
     import os
 
-    from ..operators.dedup import _per_band
+    from ..operators.neardup import _per_band
 
     bands_store = f"{store_path}__bands"
     short_store = f"{store_path}__short"

@@ -13,10 +13,12 @@ from pyspark.sql import functions as F
 from dotnetvectorsearch_spark.sources.io import load_table
 
 
+# The oracle's cosine of two list columns (.format(a=..., b=...)).
 cos = ("list_cosine_similarity(CAST({a} AS DOUBLE[]), "
        "CAST({b} AS DOUBLE[]))")
 
-
+# Tuned like search.SEARCH_THRESHOLD on the driver's synthetic
+# embeddings (cosine p99~0.30 vs a fixed query vector).
 NEARDUP_COSINE_THRESHOLD = 0.35
 
 

@@ -4,10 +4,20 @@ persisted store.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import functions as F
 
 from dotnetvectorsearch_spark.caching import SessionMemo, input_key
 from dotnetvectorsearch_spark.localdf import local_df
+from dotnetvectorsearch_spark.operators import ann_store
+from dotnetvectorsearch_spark.operators.ann import (
+    IVFIndex, brute_force_topk, ivf_topk_panel)
+from dotnetvectorsearch_spark.operators.ann_store import (
+    INDEX_PARAMS, ensure_index, fit_index, index_health, serve_topk,
+    tune_store_nprobe)
+from dotnetvectorsearch_spark.operators.retrieval_eval import metrics_from_topk
 from dotnetvectorsearch_spark.sources.io import load_table
 
 from registry import _collect_query_vec
@@ -22,7 +32,6 @@ def _q_ann_ivfpq_coding_gain(spark, sf_dir):
     tests/test_ann.py), on near-uniform synthetic embeddings the two
     codings coincide up to sampling noise. Approximate-index metric ->
     rows-only."""
-    from dotnetvectorsearch_spark.operators.ann_store import fit_index
     emb = load_table(spark, sf_dir, "embeddings")
     out = {}
     for coding in ("raw", "residual"):
@@ -35,7 +44,6 @@ def _q_ann_ivfpq_coding_gain(spark, sf_dir):
 
 def _q_ann_ivf_topk(spark, sf_dir):
     """IVF ANN: kmeans cells + nprobe partition-pruned search."""
-    from dotnetvectorsearch_spark.operators.ann import IVFIndex
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _collect_query_vec(spark, sf_dir)
     idx = IVFIndex(n_cells=16, nprobe=4).fit(emb)
@@ -45,10 +53,6 @@ def _q_ann_ivf_topk(spark, sf_dir):
 def _q_ann_recall(spark, sf_dir):
     """ANN quality metric: recall@10 of IVF nprobe-pruned search vs the
     exact brute-force top-10 (the measurement loop an index tuner runs)."""
-    from dotnetvectorsearch_spark.operators.ann import (
-        IVFIndex,
-        brute_force_topk,
-    )
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _collect_query_vec(spark, sf_dir)
     exact = {r.vec_id for r in brute_force_topk(emb, qv, 10).collect()}
@@ -68,8 +72,6 @@ _ANN_FITS = SessionMemo(8)
 def _fitted(spark, sf_dir, kind: str):
     """``ann_store.fit_index(embeddings, kind)`` — the persisted store's
     fit — memoized in _ANN_FITS."""
-    from dotnetvectorsearch_spark.operators.ann_store import (
-        INDEX_PARAMS, fit_index)
     emb = load_table(spark, sf_dir, "embeddings")
     key = input_key(emb)
     return _ANN_FITS.get_or_build(
@@ -98,7 +100,6 @@ def _q_ann_pq_topk(spark, sf_dir):
 def _q_ann_pq_recall(spark, sf_dir):
     """PQ quality metric: recall@10 of two-stage (ADC shortlist + exact
     rescore) search vs brute force — the tuning loop for (m, shortlist)."""
-    from dotnetvectorsearch_spark.operators.ann import brute_force_topk
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _collect_query_vec(spark, sf_dir)
     exact = {r.vec_id for r in brute_force_topk(emb, qv, 10).collect()}
@@ -131,7 +132,6 @@ def _q_ann_ivfpq_topk(spark, sf_dir):
 def _q_ann_ivfpq_recall(spark, sf_dir):
     """IVF+PQ quality metric: recall@10 vs brute force — the
     (n_cells, nprobe, m, shortlist) tuning loop."""
-    from dotnetvectorsearch_spark.operators.ann import brute_force_topk
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _collect_query_vec(spark, sf_dir)
     exact = {r.vec_id for r in brute_force_topk(emb, qv, 10).collect()}
@@ -159,8 +159,6 @@ def _q_ann_ivf_serve(spark, sf_dir):
     NEXT run and silently diverge from ann_ivf_topk (advisor r13).
     The tuned no-arg deployment default is exercised by the tuning
     rows + test_ann_store's persistence pin, not by this parity row."""
-    from dotnetvectorsearch_spark.operators.ann_store import (
-        INDEX_PARAMS, serve_topk)
     qv = _collect_query_vec(spark, sf_dir)
     return serve_topk(spark, sf_dir, "ivf", qv, k=10,
                       nprobe=INDEX_PARAMS["ivf"]["nprobe"])
@@ -171,7 +169,6 @@ def _q_ann_pq_serve(spark, sf_dir):
     m bytes/row + exact rescore of the 200-id shortlist. The codebook
     fit (the whole of ann_pq_topk's cold cost) happens in the build
     job (bench.py ann_build_sec), not here."""
-    from dotnetvectorsearch_spark.operators.ann_store import serve_topk
     qv = _collect_query_vec(spark, sf_dir)
     return serve_topk(spark, sf_dir, "pq", qv, k=10, shortlist=200)
 
@@ -183,8 +180,6 @@ def _q_ann_ivfpq_serve(spark, sf_dir):
     (m bytes/row), independent of corpus growth. nprobe pinned at the
     fitted width for cross-run parity with ann_ivfpq_topk — see the
     ann_ivf_serve docstring (advisor r13)."""
-    from dotnetvectorsearch_spark.operators.ann_store import (
-        INDEX_PARAMS, serve_topk)
     qv = _collect_query_vec(spark, sf_dir)
     return serve_topk(spark, sf_dir, "ivfpq", qv, k=10, shortlist=200,
                       nprobe=INDEX_PARAMS["ivfpq"]["nprobe"])
@@ -203,11 +198,6 @@ def _q_ann_quality_ivf(spark, sf_dir):
     the full per-method table incl. PQ/IVFPQ is the committed
     ANN_QUALITY.md artifact, invariants pinned in
     tests/test_retrieval_eval.py."""
-    from dotnetvectorsearch_spark.operators.ann import (
-        IVFIndex, ivf_topk_panel)
-    from dotnetvectorsearch_spark.operators.ann_store import ensure_index
-    from dotnetvectorsearch_spark.operators.retrieval_eval import (
-        metrics_from_topk)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = (emb.filter(F.col("vec_id") % 25 == 0)
                .select(F.col("vec_id").alias("qid"),
@@ -239,8 +229,6 @@ def _q_ann_nprobe_tuning(spark, sf_dir):
     the chosen width into the store marker so `serve_topk` with no
     nprobe arg serves at it (judge r12 #6; pinned in
     tests/test_ann_store.py). Same panel, same output."""
-    from dotnetvectorsearch_spark.operators.ann_store import (
-        tune_store_nprobe)
     chosen, curve = tune_store_nprobe(spark, sf_dir, "ivf",
                                       target_recall=0.9, k=10)
     return local_df(
@@ -271,8 +259,6 @@ def _q_ann_nprobe_tuning_ivfpq(spark, sf_dir):
     caller knowledge (pinned in tests/test_ann_store.py), so this
     query IS the deployment tune job, not just a report. Same panel
     (the tune default vec_id % 25 == 7), same output."""
-    from dotnetvectorsearch_spark.operators.ann_store import (
-        tune_store_nprobe)
     chosen, curve = tune_store_nprobe(spark, sf_dir, "ivfpq",
                                       target_recall=0.9, k=10,
                                       shortlist=200)
@@ -294,8 +280,6 @@ def _q_ann_index_health(spark, sf_dir):
     tests/test_ann_store.py). One aggregation over the index + a
     1-row broadcast attach. Rows-only: reads the persisted index
     store, not a driver-registered table."""
-    from dotnetvectorsearch_spark.operators.ann_store import (
-        index_health)
     return index_health(spark, sf_dir, "ivf")
 
 
@@ -321,12 +305,6 @@ def _q_ann_store_snapshots(spark, sf_dir):
     Reference baseline: the reference has no index or maintenance at
     all (`VectorSearchService.cs:142-161` rescans per query) — this is
     a beyond-reference scale component."""
-    import shutil
-    import tempfile
-
-    from dotnetvectorsearch_spark.operators import ann_store
-    from dotnetvectorsearch_spark.operators.ann import IVFIndex
-
     emb = (load_table(spark, sf_dir, "embeddings")
            .select("vec_id", "embedding"))
     seed = emb.filter(F.col("vec_id") % 10 == 0)
@@ -365,9 +343,7 @@ def _q_ann_store_snapshots(spark, sf_dir):
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     # snapshot ledger (r13): the maintenance cycle's row-conservation
     # and retention semantics derived from the corpus alone — v1 is
     # the seed sliver, append adds the delta sliver, compaction

@@ -3,13 +3,28 @@
 from __future__ import annotations
 
 import re
+import shutil
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark.caching import transient_persist
 from dotnetvectorsearch_spark.functions import text as T
-from dotnetvectorsearch_spark.sources.io import load_table
+from dotnetvectorsearch_spark.localdf import local_path
+from dotnetvectorsearch_spark.operators.contamination import (
+    cross_corpus_contamination, decontaminate, max_eval_overlap,
+    semantic_contamination)
+from dotnetvectorsearch_spark.operators.dedup import (
+    corpus_diff, exact_dedup, incremental_update_manifest)
+from dotnetvectorsearch_spark.operators.graph import dedup_clusters
+from dotnetvectorsearch_spark.operators.neardup import jaccard_pairs
+from dotnetvectorsearch_spark.operators.packing import pack_sequential
+from dotnetvectorsearch_spark.operators.sampling import (
+    deterministic_shuffle, hash_sample, hash_split, mixture_rebalance,
+    stratified_hash_sample, token_budget_sample, weighted_hash_sample)
+from dotnetvectorsearch_spark.operators.sketches import theta_ngram_overlap
+from dotnetvectorsearch_spark.sources.io import load_table, write_bucketed
 
 from registry import NEARDUP_COSINE_THRESHOLD, cos
 
@@ -47,7 +62,6 @@ def _q_dataset_splits(spark, sf_dir):
     depends only on (doc_id, salt), so it is stable across runs, engines,
     partitionings, and incremental re-ingests. Narrow codegen projection,
     zero shuffle."""
-    from dotnetvectorsearch_spark.operators.sampling import hash_split
     docs = load_table(spark, sf_dir, "documents")
     return (hash_split(docs, "doc_id", SPLIT_WEIGHTS)
             .select("doc_id", "split"))
@@ -58,8 +72,6 @@ def _q_semantic_contamination(spark, sf_dir):
     eval half and the train half of the embeddings table (split by vec_id
     parity), blocked by label — catches paraphrase leakage n-gram overlap
     misses."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        semantic_contamination)
     emb = load_table(spark, sf_dir, "embeddings")
     train = emb.filter(F.col("vec_id") % 2 == 0)
     test = emb.filter(F.col("vec_id") % 2 == 1)
@@ -71,9 +83,6 @@ def _q_semantic_contamination(spark, sf_dir):
 def _q_contamination_pairs(spark, sf_dir):
     """Train/eval contamination: overlap coefficient of test-doc shingles
     contained in train docs (corpora split by source id parity)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        cross_corpus_contamination,
-    )
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter(_source_parity() == 0)
     test = docs.filter(_source_parity() == 1)
@@ -84,7 +93,6 @@ def _q_contamination_pairs(spark, sf_dir):
 def _q_hash_sampled_docs(spark, sf_dir):
     """Deterministic content-hash Bernoulli sample (reproducible across
     partitionings/engines, unlike RNG sampling)."""
-    from dotnetvectorsearch_spark.operators.sampling import hash_sample
     docs = load_table(spark, sf_dir, "documents")
     return hash_sample(docs, "doc_id", 0.25).select("doc_id", "lang", "source")
 
@@ -92,8 +100,6 @@ def _q_hash_sampled_docs(spark, sf_dir):
 def _q_weighted_sampled_docs(spark, sf_dir):
     """Deterministic importance sample: keep probability proportional to
     doc length (n_chars / max) — quality-weighted corpus selection."""
-    from dotnetvectorsearch_spark.operators.sampling import (
-        weighted_hash_sample)
     docs = load_table(spark, sf_dir, "documents")
     return weighted_hash_sample(docs, "doc_id", "n_chars").select(
         "doc_id", "lang", "source")
@@ -102,7 +108,6 @@ def _q_weighted_sampled_docs(spark, sf_dir):
 def _q_mixture_rebalanced(spark, sf_dir):
     """Downsample to a target language mixture (en-heavy training mix);
     binding stratum kept whole, others hash-downsampled to match."""
-    from dotnetvectorsearch_spark.operators.sampling import mixture_rebalance
     docs = load_table(spark, sf_dir, "documents")
     targets = {"en": 0.5, "de": 0.125, "es": 0.125, "fr": 0.125,
                "zh": 0.125}
@@ -114,8 +119,6 @@ def _q_theta_contamination(spark, sf_dir):
     """Join-free corpus-overlap estimate via theta sketch intersection
     (sources src0-9 vs src10-19 as the two corpora). Approximate by
     design -> rows-only; error bounds pinned in tests/test_sketches.py."""
-    from dotnetvectorsearch_spark.operators.sketches import (
-        theta_ngram_overlap)
     docs = load_table(spark, sf_dir, "documents")
     half_a = docs.filter(
         F.regexp_extract("source", r"src(\d+)", 1).cast("int") < 10)
@@ -128,7 +131,6 @@ def _q_decontaminated_docs(spark, sf_dir):
     """Eval-set decontamination ENFORCEMENT: drop every train doc whose
     shingles cover >= 20% of any test doc (same source-parity split and
     thresholds as contamination_pairs), return survivors' ids."""
-    from dotnetvectorsearch_spark.operators.dedup import decontaminate
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter(_source_parity() == 0)
     test = docs.filter(_source_parity() == 1)
@@ -142,7 +144,6 @@ def _q_corpus_diff(spark, sf_dir):
     one status row per doc id so the incremental pipeline embeds only
     added+changed and retires removed. Narrow fingerprint projections
     full-outer joined on the id; text never shuffles."""
-    from dotnetvectorsearch_spark.operators.dedup import corpus_diff
     docs = load_table(spark, sf_dir, "documents")
     return corpus_diff(docs.filter(F.col("doc_id") % 7 != 0),
                        _reedit(docs))
@@ -156,8 +157,6 @@ def _q_contamination_profile(spark, sf_dir):
     broadcast postings kernel as the enforcement queries (zero
     shuffle over train; the eval index is memoized and shared), then
     one tiny groupBy over 5 bucket keys."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        max_eval_overlap)
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter(_source_parity() == 0)
     test = docs.filter(_source_parity() == 1)
@@ -180,8 +179,6 @@ def _q_curated_corpus(spark, sf_dir):
     overlap >= 0.2). Each stage narrows the data before the next pays
     for it; Catalyst fuses the gate into the scan and the dedup/
     decontamination joins see only survivors."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        decontaminate, exact_dedup)
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter((_source_parity() == 0)
                         & (F.col("n_chars") >= 50))
@@ -198,8 +195,6 @@ def _q_stratified_sample(spark, sf_dir):
     stratum), so the kept set is identical across runs, partitionings,
     and engines (oracle-checked), unlike sampleBy's partition-dependent
     XORShift draw. Narrow codegen'd filter, no shuffle."""
-    from dotnetvectorsearch_spark.operators.sampling import (
-        stratified_hash_sample)
     docs = load_table(spark, sf_dir, "documents")
     langs = [r.lang for r in docs.select("lang").distinct().collect()]
     fracs = {lang: 0.25 for lang in langs}
@@ -215,10 +210,6 @@ def _q_training_shards(spark, sf_dir):
     (pack_id, shard, pos) address; packs travel WHOLE (every doc of a
     pack shares its shard/pos) so packed sequences stay contiguous in
     the exported shard files."""
-    from dotnetvectorsearch_spark.operators.packing import pack_sequential
-    from dotnetvectorsearch_spark.operators.sampling import (
-        deterministic_shuffle)
-    from dotnetvectorsearch_spark.caching import transient_persist
     curated = _q_curated_corpus(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     base = (curated.select("doc_id", "lang")
@@ -264,8 +255,6 @@ def _q_token_budget_corpus(spark, sf_dir):
     the oracle below IS the naive form. TOKEN_BUDGET=2000 cuts every
     lang at both driver tiers (per-lang totals 3.5k-11.8k at sf0.01),
     so the straddler path is exercised in every group."""
-    from dotnetvectorsearch_spark.operators.sampling import (
-        token_budget_sample)
     docs = load_table(spark, sf_dir, "documents")
     rows = docs.select(
         "doc_id", "lang",
@@ -284,9 +273,6 @@ def _q_leakage_safe_splits(spark, sf_dir):
     candidate pairs -> connected components -> md5 hash-split on the
     cluster representative. Same determinism contract as hash_split
     (stable across runs, engines, partitionings)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        dedup_clusters, jaccard_pairs)
-    from dotnetvectorsearch_spark.operators.sampling import hash_split
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, "doc_id", "text", shingle_n=3,
                           threshold=0.1)
@@ -337,8 +323,6 @@ def _q_incremental_corpus_update(spark, sf_dir):
     ZERO-shuffle map-side postings kernel over only the dedup
     survivors. Every remaining exchange carries delta-sized
     (id, 32-byte md5) rows — ~40 bytes/doc regardless of doc size."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        incremental_update_manifest)
     docs = load_table(spark, sf_dir, "documents")
     old, new = _ingest_snapshots(docs)
     eval_docs = docs.filter(_source_parity() == 1)
@@ -361,19 +345,15 @@ def _ensure_bucketed_snapshots(spark, sf_dir):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     if not (spark.catalog.tableExists(old_t)
             and spark.catalog.tableExists(new_t)):
-        import shutil
-        from urllib.parse import urlparse
-
-        from dotnetvectorsearch_spark.sources.io import write_bucketed
-
         # A PREVIOUS session's staging leaves the managed-table dirs on
         # disk while the in-memory catalog forgets the tables; Spark
         # then refuses saveAsTable (LOCATION_ALREADY_EXISTS). Clear the
         # orphaned locations — the data is a derived staging artifact,
-        # regenerated right below.
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for t in ("snap_old", "snap_new"):
-            shutil.rmtree(Path(wh) / f"{db}.db" / t, ignore_errors=True)
+        # regenerated right below. A remote warehouse is left alone.
+        wh = local_path(spark.conf.get("spark.sql.warehouse.dir"))
+        if wh is not None:
+            for t in ("snap_old", "snap_new"):
+                shutil.rmtree(Path(wh) / f"{db}.db" / t, ignore_errors=True)
         docs = load_table(spark, sf_dir, "documents")
         old, new = (d.select("doc_id", "text")
                     for d in _ingest_snapshots(docs))
@@ -402,8 +382,6 @@ def _q_incremental_corpus_update_bucketed(spark, sf_dir):
     staged once per session by `_ensure_bucketed_snapshots` (first
     call pays it, the steady-state reps measure the serve shape —
     mirroring the ann_*_serve build/serve split)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        incremental_update_manifest)
     b_old, b_new = _ensure_bucketed_snapshots(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     eval_docs = docs.filter(_source_parity() == 1)
@@ -424,8 +402,6 @@ def _q_incremental_corpus_update_fixed_eval(spark, sf_dir):
     driver scale the cap never binds: identical rows to
     `incremental_corpus_update`, checked against its own capped
     DuckDB oracle."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        incremental_update_manifest)
     docs = load_table(spark, sf_dir, "documents")
     old, new = _ingest_snapshots(docs)
     eval_docs = docs.filter((_source_parity() == 1)
@@ -451,8 +427,6 @@ def _q_curated_corpus_fixed_eval(spark, sf_dir):
     size (doc_id < 500k within the source-parity split) — the
     deployment twin whose sf10->sf100 cells measure train-corpus
     scaling at constant eval load (SCALING.md two-decade trend)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        decontaminate, exact_dedup)
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter((_source_parity() == 0)
                         & (F.col("n_chars") >= 50))
@@ -469,11 +443,6 @@ def _q_training_shards_fixed_eval(spark, sf_dir):
     curated corpus — the strict superset of
     `curated_corpus_fixed_eval` that carries the sf100 decade
     measurement."""
-    from dotnetvectorsearch_spark.caching import transient_persist
-    from dotnetvectorsearch_spark.operators.packing import (
-        pack_sequential)
-    from dotnetvectorsearch_spark.operators.sampling import (
-        deterministic_shuffle)
     curated = _q_curated_corpus_fixed_eval(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     base = (curated.select("doc_id", "lang")
@@ -496,9 +465,7 @@ def _q_training_shards_fixed_eval(spark, sf_dir):
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     oracles.update({
         "dataset_splits": """
             -- fixed-width lowercase-hex compare == numeric compare;

@@ -5,9 +5,20 @@ graph queries built on them.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from dotnetvectorsearch_spark.functions import text as T
 from dotnetvectorsearch_spark.operators import search as S
+from dotnetvectorsearch_spark.operators.dedup import (
+    dup_span_stats, exact_dedup, exact_dedup_incremental,
+    exact_dedup_keep_best, remove_duplicate_spans, winnow_fingerprints)
+from dotnetvectorsearch_spark.operators.dedup_store import (
+    ensure_bloom_store, serve_incremental_dedup)
+from dotnetvectorsearch_spark.operators.graph import (
+    connected_components, dedup_clusters, dedup_weights, pagerank_undirected)
+from dotnetvectorsearch_spark.operators.neardup import (
+    embedding_neardup_pairs, fuzzy_dup_pairs, jaccard_pairs,
+    minhash_pairs_portable, ngram_novelty)
 from dotnetvectorsearch_spark.sources.io import load_table
 
 from registry import NEARDUP_COSINE_THRESHOLD, cos
@@ -24,7 +35,6 @@ def _q_fingerprint_dedup(spark, sf_dir):
 def _q_jaccard_pairs(spark, sf_dir):
     """Near-dup detection: exact word-3-gram Jaccard via shingle inverted
     index (explode -> equi-join on shingle -> count arithmetic)."""
-    from dotnetvectorsearch_spark.operators.dedup import jaccard_pairs
     docs = load_table(spark, sf_dir, "documents")
     return jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.1)
 
@@ -32,7 +42,6 @@ def _q_jaccard_pairs(spark, sf_dir):
 def _q_embedding_neardup(spark, sf_dir):
     """Near-dup detection: cosine >= tau within a blocking key (label);
     the blocked-pairs shape that survives at scale."""
-    from dotnetvectorsearch_spark.operators.dedup import embedding_neardup_pairs
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_neardup_pairs(emb, "vec_id", "embedding",
                                    block_col="label",
@@ -41,7 +50,6 @@ def _q_embedding_neardup(spark, sf_dir):
 
 def _q_dedup_rows(spark, sf_dir):
     """Exact dedup keep-first: surviving doc ids after fingerprint dedup."""
-    from dotnetvectorsearch_spark.operators.dedup import exact_dedup
     docs = load_table(spark, sf_dir, "documents")
     return exact_dedup(docs, "text", "doc_id").select("doc_id")
 
@@ -107,10 +115,6 @@ def _q_doc_pagerank_lsh(spark, sf_dir):
     """Scale-correct twin of doc_pagerank: the same 5-iteration
     decimal-summed PageRank over the MinHash-LSH candidate graph
     instead of the quadratic exact-Jaccard graph (SCALING.md)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        minhash_pairs_portable)
-    from dotnetvectorsearch_spark.operators.graph import (
-        pagerank_undirected)
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_pairs_portable(docs, "doc_id", "text",
                                    num_hashes=16, shingle_n=3, bands=4)
@@ -121,8 +125,6 @@ def _q_dedup_clusters(spark, sf_dir):
     """Duplicate-cluster assignment: jaccard candidate pairs -> distributed
     connected components (min-label + pointer jumping) -> every doc mapped
     to its cluster's min id (= the canonical doc to keep)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        dedup_clusters, jaccard_pairs)
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.1)
     return dedup_clusters(docs, pairs, "doc_id")
@@ -132,7 +134,6 @@ def _q_winnow_fingerprints(spark, sf_dir):
     """Rolling-hash winnowing fingerprints, engine path (char-5-gram
     xxhash64, window 8): position-robust substring fingerprints per
     document; long hashes keep the window/shuffle payload small."""
-    from dotnetvectorsearch_spark.operators.dedup import winnow_fingerprints
     docs = load_table(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, "doc_id", "text", k=5, w=8)
 
@@ -140,7 +141,6 @@ def _q_winnow_fingerprints(spark, sf_dir):
 def _q_winnow_fingerprints_md5(spark, sf_dir):
     """Winnowing fingerprints, portable md5 twin — byte-identical in any
     engine, so it carries the DuckDB oracle for the winnow shape."""
-    from dotnetvectorsearch_spark.operators.dedup import winnow_fingerprints
     docs = load_table(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, "doc_id", "text", k=5, w=8,
                                portable=True)
@@ -150,8 +150,6 @@ def _q_incremental_dedup(spark, sf_dir):
     """Incremental-ingest exact dedup: docs with doc_id % 5 == 0 arrive
     as the new batch; survivors are batch rows whose fingerprint is not
     already in the corpus (the other 80%), keep-first within batch."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        exact_dedup_incremental)
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
@@ -162,7 +160,6 @@ def _q_incremental_dedup(spark, sf_dir):
 def _q_dup_span_stats(spark, sf_dir):
     """Span-level duplicated-text fraction per document (word 10-grams
     occurring in >=2 docs — Lee et al. ACL'22 span dedup signal)."""
-    from dotnetvectorsearch_spark.operators.dedup import dup_span_stats
     docs = load_table(spark, sf_dir, "documents")
     return dup_span_stats(docs, "doc_id", "text", n=10, min_docs=2)
 
@@ -170,7 +167,6 @@ def _q_dup_span_stats(spark, sf_dir):
 def _q_novelty_scores(spark, sf_dir):
     """Per-doc n-gram novelty (fraction of word 3-grams unique to the doc):
     corpus-level boilerplate/templating signal that pairwise dedup misses."""
-    from dotnetvectorsearch_spark.operators.dedup import ngram_novelty
     docs = load_table(spark, sf_dir, "documents")
     return ngram_novelty(docs, id_col="doc_id", text_col="text", shingle_n=3)
 
@@ -179,9 +175,6 @@ def _q_span_dedup_docs(spark, sf_dir):
     """Duplicate-span REMOVAL with reassembly (C4/RefinedWeb-style):
     non-overlapping 3-token chunks, global keep-first, docs rebuilt from
     surviving chunks. The removal counterpart of dup_span_stats."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        remove_duplicate_spans,
-    )
     docs = load_table(spark, sf_dir, "documents")
     return remove_duplicate_spans(docs, "doc_id", "text", chunk_tokens=3)
 
@@ -191,8 +184,6 @@ def _q_dedup_keep_best(spark, sf_dir):
     quality_score doc (tie -> lowest id) — the CCNet/RefinedWeb keep
     policy; one fingerprint shuffle, argmax as a min(struct) aggregate
     (no window)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        exact_dedup_keep_best)
     docs = load_table(spark, sf_dir, "documents")
     out = exact_dedup_keep_best(docs, T.quality_score("text"))
     return out.select("doc_id", F.col("cluster_size").cast("long")
@@ -202,7 +193,6 @@ def _q_dedup_keep_best(spark, sf_dir):
 def _q_fuzzy_dup_pairs(spark, sf_dir):
     """Blocked edit-distance near-dup join: share first-2-token block +
     length band, verify bounded levenshtein over the 40-char prefix."""
-    from dotnetvectorsearch_spark.operators.dedup import fuzzy_dup_pairs
     docs = load_table(spark, sf_dir, "documents")
     return fuzzy_dup_pairs(docs, "doc_id", "text", prefix_chars=40,
                            block_tokens=2, max_dist=8)
@@ -213,10 +203,6 @@ def _q_doc_pagerank(spark, sf_dir):
     Jaccard similarity graph (threshold 0.1) — the authority signal for
     choosing which near-duplicate copy to keep. Decimal-summed
     contributions make the doubles engine-portable."""
-    from dotnetvectorsearch_spark.operators.dedup import jaccard_pairs
-    from dotnetvectorsearch_spark.operators.graph import (
-        pagerank_undirected,
-    )
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, "doc_id", "text", shingle_n=3,
                           threshold=0.1)
@@ -227,8 +213,6 @@ def _q_dedup_weights(spark, sf_dir):
     """Soft dedup (SemDeDup-family): weight = 1/|duplicate cluster| so
     each distinct content unit contributes equal training mass —
     downweight instead of drop."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        dedup_weights, jaccard_pairs)
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, "doc_id", "text", shingle_n=3,
                           threshold=0.1)
@@ -239,7 +223,6 @@ def _q_semantic_clusters(spark, sf_dir):
     """Semantic corpus clustering: exact kNN graph thresholded into
     edges, connected components as cluster ids, singletons keep their
     own id — the embedding-space twin of n-gram dedup_clusters."""
-    from dotnetvectorsearch_spark.operators.dedup import connected_components
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     g = S.knn_graph(emb, k=5, id_col="vec_id", round_digits=6)
@@ -261,7 +244,6 @@ def _q_semdedup_keep(spark, sf_dir):
     connected components of `semantic_clusters`. Output marks every
     vector kept/dropped — the embedding-space prune step a web-scale
     curation pipeline runs after n-gram dedup."""
-    from pyspark.sql.window import Window
     clusters = _q_semantic_clusters(spark, sf_dir)
     w = Window.partitionBy("cluster_id")
     return clusters.select(
@@ -279,8 +261,6 @@ def _q_incremental_dedup_bloom(spark, sf_dir):
     narrow persisted fp table.
     First call per (sf_dir, corpus state) builds the store; bench.py
     times that build in its separately-reported build phase."""
-    from dotnetvectorsearch_spark.operators.dedup_store import (
-        ensure_bloom_store, serve_incremental_dedup)
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     path, _ = ensure_bloom_store(spark, sf_dir)
@@ -291,9 +271,7 @@ def _q_incremental_dedup_bloom(spark, sf_dir):
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     oracles.update({
         "fingerprint_dedup": """
             SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,

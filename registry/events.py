@@ -3,9 +3,20 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from dotnetvectorsearch_spark.functions.time import (
+    event_bucket_seconds, event_epoch_seconds_long)
 from dotnetvectorsearch_spark.localdf import local_df
+from dotnetvectorsearch_spark.operators.ranges import interval_join
+from dotnetvectorsearch_spark.operators.sketches import (
+    hll_daily_distinct, kll_value_quantiles)
+from dotnetvectorsearch_spark.operators.temporal import (
+    debounce_events, funnel_steps, keyed_trends, prior_event_attribution,
+    rolling_window_features)
 from dotnetvectorsearch_spark.sources.io import load_table
+from dotnetvectorsearch_spark.streaming.ingest import (
+    session_rollup, sliding_rollup, stream_interval_join)
 
 
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
@@ -34,7 +45,6 @@ def _q_events_hourly(spark, sf_dir):
     branches on the actual dtype, so the tumbling bucket is integer
     floor-division either way: exact, and identical to DuckDB's
     date_trunc('hour')."""
-    from dotnetvectorsearch_spark.functions.time import event_bucket_seconds
     ev = load_table(spark, sf_dir, "events")
     hour_epoch = event_bucket_seconds(ev, 3600)
     return (ev.groupBy(hour_epoch.alias("hour_epoch"), "event_type")
@@ -47,9 +57,6 @@ def _q_click_purchase_interval(spark, sf_dir):
     """Interval join (batch twin of the watermarked stream-stream join):
     every (click, purchase) pair per user with the purchase inside the
     30-minute attribution window after the click."""
-    from dotnetvectorsearch_spark.streaming.ingest import stream_interval_join
-    from dotnetvectorsearch_spark.functions.time import (
-        event_epoch_seconds_long)
     ev = load_table(spark, sf_dir, "events")
     sec = event_epoch_seconds_long(ev)
     base = ev.select("event_id", "user_id", "event_type",
@@ -72,9 +79,6 @@ def _q_click_purchase_interval(spark, sf_dir):
 def _q_sessionize(spark, sf_dir):
     """Stateful sequence op: 30-minute-gap sessionization per user
     (batch twin of the streaming applyInPandasWithState sessionizer)."""
-    from pyspark.sql.window import Window
-    from dotnetvectorsearch_spark.functions.time import (
-        event_epoch_seconds_long)
     ev = load_table(spark, sf_dir, "events")
     sec = event_epoch_seconds_long(ev)
     w = Window.partitionBy("user_id").orderBy("sec")
@@ -100,11 +104,6 @@ def _q_asof_click_purchase(spark, sf_dir):
     """As-of attribution: for each purchase, the most recent click at or
     before it by the same user — single-shuffle running-max window, not a
     range join."""
-    from dotnetvectorsearch_spark.operators.temporal import (
-        prior_event_attribution,
-    )
-    from dotnetvectorsearch_spark.functions.time import (
-        event_epoch_seconds_long)
     ev = load_table(spark, sf_dir, "events")
     base = ev.select("event_id", "user_id", "event_type",
                      event_epoch_seconds_long(ev).alias("sec"))
@@ -133,10 +132,6 @@ def _q_props_json_stats(spark, sf_dir):
 def _q_rolling_user_features(spark, sf_dir):
     """Trailing-1-hour per-user activity features (bounded RANGE-frame
     window): event count + exact value sum over [t-3600, t]."""
-    from dotnetvectorsearch_spark.functions.time import (
-        event_epoch_seconds_long)
-    from dotnetvectorsearch_spark.operators.temporal import (
-        rolling_window_features)
     ev = load_table(spark, sf_dir, "events")
     base = ev.select("event_id", "user_id", "value",
                      event_epoch_seconds_long(ev).alias("sec"))
@@ -163,7 +158,6 @@ def _q_value_band_join(spark, sf_dir):
     """Range join: assign each event to overlapping value bands via
     bucketed interval join (equi-join on bucket + exact BETWEEN), not a
     nested-loop inequality join."""
-    from dotnetvectorsearch_spark.operators.ranges import interval_join
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     bands = local_df(
         spark, [("tiny", 0.0, 10.0), ("low", 10.0, 25.0),
@@ -191,8 +185,6 @@ def _q_user_event_types(spark, sf_dir):
 def _q_kll_value_quantiles(spark, sf_dir):
     """Mergeable per-event-type quantiles via KLL sketches (streaming /
     incremental twin of value_percentiles). Approximate -> rows-only."""
-    from dotnetvectorsearch_spark.operators.sketches import (
-        kll_value_quantiles)
     ev = load_table(spark, sf_dir, "events")
     return kll_value_quantiles(ev, "value", "event_type")
 
@@ -200,8 +192,6 @@ def _q_kll_value_quantiles(spark, sf_dir):
 def _q_hll_daily_users(spark, sf_dir):
     """Mergeable per-day distinct users + sketch-union lifetime total —
     the incremental HLL profile. Approximate -> rows-only."""
-    from dotnetvectorsearch_spark.operators.sketches import (
-        hll_daily_distinct)
     ev = load_table(spark, sf_dir, "events")
     return hll_daily_distinct(ev, ts_col="ts", key_col="user_id")
 
@@ -239,9 +229,6 @@ def _q_session_windows(spark, sf_dir):
     epoch seconds (long), not timestamps, so the comparison is
     timezone-proof. events.ts dtype varies by runtime (long nanos or
     timestamp_ntz) — event_epoch_seconds_long handles both."""
-    from dotnetvectorsearch_spark.streaming.ingest import session_rollup
-    from dotnetvectorsearch_spark.functions.time import (
-        event_epoch_seconds_long)
     raw = load_table(spark, sf_dir, "events")
     ev = raw.select(
         "user_id",
@@ -258,9 +245,6 @@ def _q_events_sliding(spark, sf_dir):
     """Sliding-window rollup (batch twin of streaming.sliding_rollup):
     1-hour windows every 30 minutes — each event lands in exactly 2
     windows. Epoch-second window starts for timezone-proof comparison."""
-    from dotnetvectorsearch_spark.streaming.ingest import sliding_rollup
-    from dotnetvectorsearch_spark.functions.time import (
-        event_epoch_seconds_long)
     raw = load_table(spark, sf_dir, "events")
     ev = raw.select(
         F.timestamp_seconds(event_epoch_seconds_long(raw)).alias("ts"),
@@ -280,7 +264,6 @@ def _q_event_funnel(spark, sf_dir):
     completing each step strictly after the previous one AND within 24
     hours of it, with step-over-step and overall conversion rates.
     One user-keyed exchange feeds the whole window chain."""
-    from dotnetvectorsearch_spark.operators.temporal import funnel_steps
     events = load_table(spark, sf_dir, "events")
     return funnel_steps(events, ["view", "click", "purchase"],
                         max_step_gap_sec=86400)
@@ -293,8 +276,6 @@ def _q_debounced_events(spark, sf_dir):
     per-key Arrow pass; lag()-based gap measurement is the pinned
     counterexample in tests. The sequential anchor chain is
     oracle-checked via a recursive CTE (one row per key per step)."""
-    from dotnetvectorsearch_spark.operators.temporal import (
-        debounce_events)
     events = load_table(spark, sf_dir, "events")
     out = debounce_events(events, ["user_id", "event_type"], "ts",
                           min_gap_sec=2 * 86400,
@@ -307,15 +288,12 @@ def _q_user_value_trends(spark, sf_dir):
     intercept, r²): five decimal-exact moment sums per key in ONE
     map-side-combined aggregate, closed-form scalar math in doubles —
     engine-portable to the 6th digit."""
-    from dotnetvectorsearch_spark.operators.temporal import keyed_trends
     events = load_table(spark, sf_dir, "events")
     return keyed_trends(events, "user_id", "ts", "value")
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     oracles.update({
         "user_event_pivot": """
             SELECT user_id,

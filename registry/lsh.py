@@ -4,10 +4,20 @@ oracle-checkable md5 twins.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from dotnetvectorsearch_spark.caching import SessionMemo, input_key
 from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
+from dotnetvectorsearch_spark.operators.graph import (
+    connected_components, dedup_clusters)
+from dotnetvectorsearch_spark.operators.neardup import (
+    embedding_neardup_pairs, lsh_bucket_neardup_pairs, minhash_dedup_pairs,
+    minhash_pairs_portable, minhash_signatures_portable,
+    neardup_filter_incremental, simhash_candidate_pairs,
+    simhash_pairs_portable)
 from dotnetvectorsearch_spark.sources.io import load_table
 
 from registry import NEARDUP_COSINE_THRESHOLD, _collect_query_vec
@@ -17,8 +27,6 @@ def _q_minhash_pairs_md5(spark, sf_dir):
     """MinHash-LSH candidate pairs with the engine-portable md5 hash
     family (16 hashes, 4 bands x 4) — the oracle-checkable twin of the
     xxhash64 production pipeline (minhash_pairs)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        minhash_pairs_portable)
     docs = load_table(spark, sf_dir, "documents")
     return minhash_pairs_portable(docs, "doc_id", "text",
                                   num_hashes=16, shingle_n=3, bands=4)
@@ -29,8 +37,6 @@ def _q_simhash_pairs_md5(spark, sf_dir):
     (32-bit signature, 4x8-bit chunks, hamming <= 3) — the
     oracle-checkable twin of the xxhash64 production path
     (simhash_pairs), mirroring minhash_pairs_md5."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        simhash_pairs_portable)
     docs = load_table(spark, sf_dir, "documents")
     return simhash_pairs_portable(docs, "doc_id", "text",
                                   bits=32, chunks=4, max_hamming=3)
@@ -93,11 +99,10 @@ def _lsh_adaptive_bits(n_rows: int, target_occupancy: int = 8,
     `_semdedup_lsh_impl` raises loudly if a driver-tier-sized corpus
     ever resolves to bits != 8 instead of silently hash-mismatching
     the fixed-8-bit oracle."""
-    import math as _math
     if n_rows <= 0:
         return floor_bits
     return max(floor_bits,
-               _math.ceil(_math.log2(max(1, n_rows / target_occupancy))))
+               math.ceil(math.log2(max(1, n_rows / target_occupancy))))
 
 
 def _lsh_tables_for_recall(bits: int, probe_hamming: int = 2,
@@ -111,14 +116,13 @@ def _lsh_tables_for_recall(bits: int, probe_hamming: int = 2,
     P1(0.8) ~ 0.78 already >= 0.75 -> 1 table (the driver-tier
     configuration, bit-identical to the single-table operator); at
     bits=15 P1 ~ 0.38 -> 3 tables."""
-    import math as _math
-    p = 1.0 - _math.acos(design_cosine) / _math.pi
-    p1 = sum(_math.comb(bits, i) * p ** (bits - i) * (1 - p) ** i
+    p = 1.0 - math.acos(design_cosine) / math.pi
+    p1 = sum(math.comb(bits, i) * p ** (bits - i) * (1 - p) ** i
              for i in range(probe_hamming + 1))
     if p1 >= target_recall:
         return 1
-    return max(1, _math.ceil(_math.log(1 - target_recall)
-                             / _math.log(1 - p1)))
+    return max(1, math.ceil(math.log(1 - target_recall)
+                            / math.log(1 - p1)))
 
 
 def _q_ann_lsh_topk_md5(spark, sf_dir):
@@ -140,8 +144,6 @@ def _q_dedup_clusters_lsh(spark, sf_dir):
     measured linear across sf0.01->1) instead of the exact all-pairs
     shingle join, which is quadratic when shingles are unselective.
     md5 hash family -> fully oracle-checkable end to end."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        dedup_clusters, minhash_pairs_portable)
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_pairs_portable(docs, "doc_id", "text",
                                    num_hashes=16, shingle_n=3, bands=4)
@@ -193,10 +195,6 @@ def _semdedup_lsh_impl(spark, sf_dir, threshold, probe_hamming=2,
     linearity much more steeply than the text-minhash twins; on a
     CLUSTERED corpus (where semantic dedup is meaningful) multi-probe
     pair recall is >= 0.75 (pinned)."""
-    from pyspark.sql.window import Window
-
-    from dotnetvectorsearch_spark.operators.dedup import (
-        connected_components, lsh_bucket_neardup_pairs)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     # bits grows with corpus size — a FIXED bucket count is a
@@ -285,8 +283,6 @@ def _q_incremental_neardup(spark, sf_dir):
     estimated from the stored signatures alone (matching md5-minhash
     components / 16) — history is never re-shingled. Fully
     oracle-checkable (md5 family)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        minhash_signatures_portable, neardup_filter_incremental)
     docs = load_table(spark, sf_dir, "documents")
     history = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
@@ -297,7 +293,6 @@ def _q_incremental_neardup(spark, sf_dir):
 
 def _q_minhash_pairs(spark, sf_dir):
     """MinHash(64)+LSH(16x4) candidate pairs verified by exact Jaccard."""
-    from dotnetvectorsearch_spark.operators.dedup import minhash_dedup_pairs
     docs = load_table(spark, sf_dir, "documents")
     return minhash_dedup_pairs(docs, "doc_id", "text", num_hashes=64,
                                bands=16, threshold=0.5)
@@ -305,7 +300,6 @@ def _q_minhash_pairs(spark, sf_dir):
 
 def _q_simhash_pairs(spark, sf_dir):
     """SimHash near-dup candidates: 4x16-bit banding, hamming <= 3."""
-    from dotnetvectorsearch_spark.operators.dedup import simhash_candidate_pairs
     docs = load_table(spark, sf_dir, "documents")
     return simhash_candidate_pairs(docs, "doc_id", "text", max_hamming=3)
 
@@ -329,9 +323,6 @@ def _q_embedding_neardup_lsh(spark, sf_dir):
     deterministic constants, JVM-side doubles, identical math in the
     DuckDB oracle), so the blocked pair set is engine-portable and
     oracle-checked."""
-    from dotnetvectorsearch_spark.operators.dedup import (
-        embedding_neardup_pairs,
-    )
     emb = load_table(spark, sf_dir, "embeddings")
     bucketed = HyperplaneLSH.md5(_LSH_ORACLE_NUM_PLANES,
                                  _LSH_ORACLE_DIM).transform(emb)
@@ -341,9 +332,7 @@ def _q_embedding_neardup_lsh(spark, sf_dir):
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     # portable minhash oracle fragments (16 hashes, 4 bands of 4)
     mh_mins = ",\n                       ".join(
         f"min(md5('{k:02d}:' || s)) AS h{k}" for k in range(16))

@@ -7,13 +7,20 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark.embeddings import (
+    DeterministicEmbedder, HashedProjectionEmbedder)
 from dotnetvectorsearch_spark.functions import vector as V
+from dotnetvectorsearch_spark.functions.vector import (
+    matryoshka_truncate, register_sql_functions)
+from dotnetvectorsearch_spark.operators import lexical as L
 from dotnetvectorsearch_spark.operators import search as S
+from dotnetvectorsearch_spark.operators.ann import (
+    centroid_drift, centroids_by, group_diversity)
+from dotnetvectorsearch_spark.operators.retrieval_eval import (
+    dcg_term_case, idcg_case, retrieval_metrics)
+from dotnetvectorsearch_spark.operators.search import hard_negative_mining
 from dotnetvectorsearch_spark.sources.io import (
-    embedding_from_json,
-    embedding_to_json,
-    load_table,
-)
+    embedding_from_json, embedding_to_json, load_table)
 
 from registry import _collect_query_vec, cos
 
@@ -151,9 +158,6 @@ def _q_topk_batch_arrow(spark, sf_dir):
 def _q_sql_vector_search(spark, sf_dir):
     """SQL dialect surface for vector search: the vs_* SQL macros
     (functions/vector.py register_sql_functions) + scalar subquery."""
-    from dotnetvectorsearch_spark.functions.vector import (
-        register_sql_functions,
-    )
     register_sql_functions(spark)
     load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("emb_v")
     return spark.sql("""
@@ -181,7 +185,6 @@ def _bm25_index(spark, sf_dir):
     hybrid_search call then scans only the matching postings via
     bucket/row-group pruning. Memoized per sf_dir so repeated calls skip
     even the tableExists probe."""
-    from dotnetvectorsearch_spark.operators import lexical as L
     if sf_dir not in _BM25_CACHE:
         docs = load_table(spark, sf_dir, "documents")
         tag = re.sub(r"[^0-9A-Za-z]+", "_",
@@ -192,7 +195,6 @@ def _bm25_index(spark, sf_dir):
 
 
 def _bm25_ranked(spark, sf_dir, k):
-    from dotnetvectorsearch_spark.operators import lexical as L
     tf, idf, avgdl = _bm25_index(spark, sf_dir)
     return L.bm25_topk(tf, idf, avgdl, BM25_QUERY_TERMS, k=k)
 
@@ -206,7 +208,6 @@ def _q_bm25_topk(spark, sf_dir):
 def _q_hybrid_search(spark, sf_dir):
     """Hybrid retrieval: reciprocal-rank fusion of BM25 (lexical) and
     cosine (vector) rankings, ids unified on doc_id == vec_id."""
-    from dotnetvectorsearch_spark.operators import lexical as L
     bm = L.attach_rank(_bm25_ranked(spark, sf_dir, k=50), "bm25")
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = _query_vec(spark, sf_dir)
@@ -257,7 +258,6 @@ def _q_embedding_drift(spark, sf_dir):
     vec_ids, deterministically perturbed by +0.02*label per dim to
     simulate drift) — cosine and L2 of the exact centroids, the signal
     that decides when the persisted ANN index needs a refit."""
-    from dotnetvectorsearch_spark.operators.ann import centroid_drift
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % 2 == 0)
     new = (emb.filter(F.col("vec_id") % 2 == 1)
@@ -272,7 +272,6 @@ def _q_label_diversity(spark, sf_dir):
     forming pairs: ||sum u||^2 identity over decimal-summed components —
     the redundancy signal per corpus slice, O(n) where pairwise is
     O(n^2)."""
-    from dotnetvectorsearch_spark.operators.ann import group_diversity
     emb = load_table(spark, sf_dir, "embeddings")
     return group_diversity(emb, "label", "embedding")
 
@@ -281,7 +280,6 @@ def _q_search_topk_matryoshka(spark, sf_dir):
     """Flagship search over a 16-dim matryoshka prefix of the 64-dim
     corpus — 4x less scan/FLOPs; cosine is scale-invariant so the
     un-renormalized slice ranks identically to the renormalized one."""
-    from dotnetvectorsearch_spark.functions.vector import matryoshka_truncate
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", matryoshka_truncate("embedding", 16).alias("embedding"))
     q = _query_vec(spark, sf_dir).select(
@@ -293,7 +291,6 @@ def _q_search_topk_matryoshka(spark, sf_dir):
 def _q_embed_documents(spark, sf_dir):
     """Prepare-pipeline embedding stage with the deterministic backend:
     passage-prefixed text -> Arrow-batched UDF -> unit vectors."""
-    from dotnetvectorsearch_spark.embeddings import DeterministicEmbedder
     docs = load_table(spark, sf_dir, "documents")
     e = DeterministicEmbedder(dim=64)
     out = docs.withColumn("embedding", e.embed_column("text", kind="passage"))
@@ -308,7 +305,6 @@ def _q_text_search_e2e(spark, sf_dir):
     hashed-projection embedder, embed a text query (query prefix), cosine
     top-10. Lexical-overlap semantics: the hits actually share vocabulary
     with the query, unlike the hash-of-text test embedder."""
-    from dotnetvectorsearch_spark.embeddings import HashedProjectionEmbedder
     e = HashedProjectionEmbedder(dim=64)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.withColumn(
@@ -347,7 +343,6 @@ def _q_label_centroids(spark, sf_dir):
     """Per-label embedding centroids (cluster analytics / k-means E-step)
     as a distributed exact aggregate — posexplode + decimal-sum + ordered
     re-assembly, no driver collect of vectors."""
-    from dotnetvectorsearch_spark.operators.ann import centroids_by
     emb = load_table(spark, sf_dir, "embeddings")
     return centroids_by(emb, "label")
 
@@ -357,8 +352,6 @@ def _q_hard_negatives(spark, sf_dir):
     (vec_id < 5) the 5 highest-cosine DIFFERENT-label vectors —
     broadcast anchors, zero corpus shuffle, Arrow local top-k ahead of
     the rank window (the skew-proof batch shape)."""
-    from dotnetvectorsearch_spark.operators.search import (
-        hard_negative_mining)
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 5)
     return hard_negative_mining(emb, anchors, k=5, round_digits=6)
@@ -371,8 +364,6 @@ def _q_retrieval_quality(spark, sf_dir):
     runs beside its index (the reference serves raw top-k only;
     operators/retrieval_eval.py documents the float discipline that
     keeps the NDCG discounts oracle-exact)."""
-    from dotnetvectorsearch_spark.operators.retrieval_eval import (
-        retrieval_metrics)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = (emb.filter(F.col("vec_id") % 25 == 0)
                .select(F.col("vec_id").alias("qid"),
@@ -382,9 +373,7 @@ def _q_retrieval_quality(spark, sf_dir):
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     qvec = ("(SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings "
             "WHERE vec_id = 0)")
     oracles.update({
@@ -402,14 +391,6 @@ def add_oracles(oracles: dict[str, str]) -> None:
                    round({cos.format(a='e.embedding', b='q.qe')}, 6) AS similarity
             FROM embeddings e CROSS JOIN q
             WHERE e.label = 3
-            ORDER BY similarity DESC, e.vec_id ASC
-            LIMIT 10
-        """,
-        "search_topk_arrow": f"""
-            WITH q AS {qvec}
-            SELECT e.vec_id,
-                   round({cos.format(a='e.embedding', b='q.qe')}, 6) AS similarity
-            FROM embeddings e CROSS JOIN q
             ORDER BY similarity DESC, e.vec_id ASC
             LIMIT 10
         """,
@@ -510,20 +491,6 @@ def add_oracles(oracles: dict[str, str]) -> None:
             FROM m GROUP BY label
         """,
         "topk_batch": f"""
-            WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-                       FROM embeddings WHERE vec_id < 5),
-            s AS (SELECT q.qid, e.vec_id,
-                         round(list_cosine_similarity(
-                             CAST(e.embedding AS DOUBLE[]), q.qv), 6)
-                             AS similarity
-                  FROM embeddings e CROSS JOIN q),
-            r AS (SELECT qid, vec_id, similarity,
-                         row_number() OVER (PARTITION BY qid
-                             ORDER BY similarity DESC, vec_id ASC) AS rank
-                  FROM s)
-            SELECT qid, vec_id, similarity, rank FROM r WHERE rank <= 5
-        """,
-        "topk_batch_arrow": f"""
             WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
                        FROM embeddings WHERE vec_id < 5),
             s AS (SELECT q.qid, e.vec_id,
@@ -667,6 +634,9 @@ def add_oracles(oracles: dict[str, str]) -> None:
             LIMIT 10
         """,
     })
+    # the Arrow variants are physical plans of the same logical queries
+    oracles["search_topk_arrow"] = oracles["search_topk"]
+    oracles["topk_batch_arrow"] = oracles["topk_batch"]
     # group_diversity twin: same double normalization (sequential
     # left-to-right sum of squares, seeded at 0.0 — list_reduce over a
     # 0.0-prepended list reproduces Spark's fold order exactly), same
@@ -768,8 +738,6 @@ def add_oracles(oracles: dict[str, str]) -> None:
     # the Spark plan embeds (operators/retrieval_eval.py) — no runtime
     # log2 on either side, exact decimal DCG sums, double ratios
     # rounded at 6.
-    from dotnetvectorsearch_spark.operators.retrieval_eval import (
-        dcg_term_case, idcg_case)
     _dcg = dcg_term_case("t.rnk", 10)
     _idcg = idcg_case("lc.n_rel", 10)
     oracles["retrieval_quality"] = f"""

@@ -2,12 +2,31 @@
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import functions as F
 
 from dotnetvectorsearch_spark.functions import text as T
 from dotnetvectorsearch_spark.functions import vector as V
+from dotnetvectorsearch_spark.functions.text import gopher_quality_flags
+from dotnetvectorsearch_spark.multimodal.binary_ops import (
+    extract_features, media_from_documents, media_stats, resize_media,
+    sample_frames)
 from dotnetvectorsearch_spark.operators import search as S
-from dotnetvectorsearch_spark.sources.io import load_table
+from dotnetvectorsearch_spark.operators.dedup import exact_dedup
+from dotnetvectorsearch_spark.operators.ids import contiguous_ids
+from dotnetvectorsearch_spark.operators.lm import (
+    bigram_logprob, bpe_segment_arrow, bpe_train, bpe_train_rules,
+    char_pair_counts, dsir_logweights, moore_lewis_scores, oov_rate,
+    perplexity_buckets, tokens)
+from dotnetvectorsearch_spark.operators.packing import (
+    chunk_documents, pack_sequential)
+from dotnetvectorsearch_spark.operators.profile import corpus_profile
+from dotnetvectorsearch_spark.operators.sampling import (
+    deterministic_shuffle, top_k_per_group)
+from dotnetvectorsearch_spark.operators.sketches import heavy_hitters_mg
+from dotnetvectorsearch_spark.sources.io import (
+    load_table, read_orc, read_xml, write_orc, write_xml)
 
 
 def _q_doc_listing(spark, sf_dir):
@@ -47,7 +66,6 @@ def _q_doc_seq_ids(spark, sf_dir):
     """Dense contiguous ids 0..N-1 in doc_id order without the
     single-task global row_number: range repartition + per-partition
     offsets + narrow mapInPandas stamp."""
-    from dotnetvectorsearch_spark.operators.ids import contiguous_ids
     docs = load_table(spark, sf_dir, "documents")
     return contiguous_ids(docs, "doc_id").select("doc_id", "seq_id")
 
@@ -122,8 +140,6 @@ def _q_shuffled_export(spark, sf_dir):
     """Deterministic training-data shuffle: every doc gets a stable
     (shard, pos) address in a seeded pseudo-random order — the epoch-0
     export ordering, reproducible in any engine (md5-keyed)."""
-    from dotnetvectorsearch_spark.operators.sampling import (
-        deterministic_shuffle)
     docs = load_table(spark, sf_dir, "documents")
     return (deterministic_shuffle(docs.select("doc_id"), "doc_id",
                                   shards=8, seed="epoch0")
@@ -143,7 +159,6 @@ def _q_length_buckets(spark, sf_dir):
 def _q_clean_corpus(spark, sf_dir):
     """End-to-end cleaning pipeline composition: language filter (predicted
     'en') + quality floor + exact-dedup keep-first -> surviving ids."""
-    from dotnetvectorsearch_spark.operators.dedup import exact_dedup
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select("doc_id", "text",
                          T.lang_id("text").alias("pred_lang"),
@@ -176,7 +191,6 @@ def _q_pack_documents(spark, sf_dir):
     """Sequence packing (budget-quantized variant): assign docs to fixed
     token-budget training packs per language shard — window cumsum, one
     shuffle."""
-    from dotnetvectorsearch_spark.operators.packing import pack_sequential
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "lang",
                        T.ws_token_count("text").cast("long").alias("n_tok"))
@@ -187,10 +201,6 @@ def _q_pack_documents(spark, sf_dir):
 def _q_media_stats(spark, sf_dir):
     """Multimodal binary-column analytics: byte stats per modality/mime over
     opaque payloads — pure Catalyst, no decode."""
-    from dotnetvectorsearch_spark.multimodal.binary_ops import (
-        media_from_documents,
-        media_stats,
-    )
     docs = load_table(spark, sf_dir, "documents")
     return media_stats(media_from_documents(docs))
 
@@ -200,10 +210,6 @@ def _q_media_resized(spark, sf_dir):
     SQL can see: images come back at the target dimensions with the
     deterministic stub payload size; other modalities pass through with
     their original byte length and null dims."""
-    from dotnetvectorsearch_spark.multimodal.binary_ops import (
-        media_from_documents,
-        resize_media,
-    )
     docs = load_table(spark, sf_dir, "documents")
     out = resize_media(media_from_documents(docs), 224, 224)
     return out.select("asset_id", "modality",
@@ -214,14 +220,12 @@ def _q_media_resized(spark, sf_dir):
 def _q_bigram_logprob(spark, sf_dir):
     """Corpus-trained bigram LM average log-probability per doc — the
     KenLM-style perplexity quality filter of LLM data pipelines."""
-    from dotnetvectorsearch_spark.operators.lm import bigram_logprob
     docs = load_table(spark, sf_dir, "documents")
     return bigram_logprob(docs, id_col="doc_id", text_col="text")
 
 
 def _q_oov_rates(spark, sf_dir):
     """Per-doc out-of-vocabulary rate vs the corpus top-1000 terms."""
-    from dotnetvectorsearch_spark.operators.lm import oov_rate
     docs = load_table(spark, sf_dir, "documents")
     return oov_rate(docs, vocab_size=1000, id_col="doc_id", text_col="text")
 
@@ -231,7 +235,6 @@ def _q_moore_lewis_en(spark, sf_dir):
     avg_lp(target='en' bigram LM) - avg_lp(general corpus LM), both
     Laplace-smoothed — the classic domain-data mining recipe
     (Moore & Lewis ACL'10; the CCNet/DSIR shape)."""
-    from dotnetvectorsearch_spark.operators.lm import moore_lewis_scores
     docs = load_table(spark, sf_dir, "documents")
     target = docs.filter(F.col("lang") == "en")
     return moore_lewis_scores(docs, target, docs)
@@ -244,7 +247,6 @@ def _q_bpe_merges(spark, sf_dir):
     fold rewrite. Iterative/driver-coordinated -> rows-only (the
     pure-Python reference in tests/test_lm.py is the correctness
     twin)."""
-    from dotnetvectorsearch_spark.operators.lm import bpe_train
     docs = load_table(spark, sf_dir, "documents")
     return bpe_train(docs, "text", n_merges=8)
 
@@ -253,7 +255,6 @@ def _q_top_docs_per_source(spark, sf_dir):
     """Curation: best-3 documents per source by composite quality score
     (doc_id tiebreak -> total order); local top-k prefilter bounds the
     group-keyed exchange at k x partitions rows per group."""
-    from dotnetvectorsearch_spark.operators.sampling import top_k_per_group
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "source", "doc_id", T.quality_score("text").alias("quality"))
@@ -264,7 +265,6 @@ def _q_top_docs_per_source(spark, sf_dir):
 def _q_corpus_profile(spark, sf_dir):
     """One-pass corpus data-card summary (volume, cardinalities, length
     stats, token total, short-doc fraction)."""
-    from dotnetvectorsearch_spark.operators.profile import corpus_profile
     docs = load_table(spark, sf_dir, "documents")
     return corpus_profile(docs)
 
@@ -272,7 +272,6 @@ def _q_corpus_profile(spark, sf_dir):
 def _q_bpe_pair_counts(spark, sf_dir):
     """Adjacent-char-pair frequencies over the corpus — the first BPE
     tokenizer-training merge statistic; top-200, deterministic ties."""
-    from dotnetvectorsearch_spark.operators.lm import char_pair_counts
     docs = load_table(spark, sf_dir, "documents")
     return char_pair_counts(docs, text_col="text", top_n=200)
 
@@ -280,9 +279,6 @@ def _q_bpe_pair_counts(spark, sf_dir):
 def _q_orc_roundtrip(spark, sf_dir):
     """ORC sink + scan roundtrip (format coverage beyond parquet/CSV/
     JSONL); values must survive the format exactly."""
-    import tempfile
-
-    from dotnetvectorsearch_spark.sources.io import read_orc, write_orc
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars")
     path = tempfile.mkdtemp(prefix="orc_roundtrip_")
@@ -293,10 +289,6 @@ def _q_orc_roundtrip(spark, sf_dir):
 def _q_media_features(spark, sf_dir):
     """Multimodal decode/feature-extract plumbing via mapInPandas (stubbed
     deterministic decode; payload pruned from the output)."""
-    from dotnetvectorsearch_spark.multimodal.binary_ops import (
-        extract_features,
-        media_from_documents,
-    )
     docs = load_table(spark, sf_dir, "documents")
     feats = extract_features(media_from_documents(docs), feat_dim=16)
     return feats.select("asset_id", "modality", "width", "height", "n_frames",
@@ -306,10 +298,6 @@ def _q_media_features(spark, sf_dir):
 def _q_media_frames(spark, sf_dir):
     """Multimodal 1->N fan-out: per-video sampled frame features via
     mapInPandas (stubbed decode; explode inside the Arrow batch)."""
-    from dotnetvectorsearch_spark.multimodal.binary_ops import (
-        media_from_documents,
-        sample_frames,
-    )
     docs = load_table(spark, sf_dir, "documents")
     frames = sample_frames(media_from_documents(docs), every_nth=50)
     return frames.select("asset_id", "frame_idx",
@@ -343,7 +331,6 @@ def _q_redacted_docs(spark, sf_dir):
 def _q_chunk_documents(spark, sf_dir):
     """Overlapping token-window chunking (RAG/context-window prep):
     64-token chunks every 48 tokens, one row per chunk."""
-    from dotnetvectorsearch_spark.operators.packing import chunk_documents
     docs = load_table(spark, sf_dir, "documents")
     return chunk_documents(docs, "text", "doc_id",
                            chunk_tokens=64, stride=48)
@@ -354,9 +341,6 @@ def _q_xml_roundtrip(spark, sf_dir):
     format coverage for the feed/dump shape: arXiv, Wikipedia, PubMed);
     values must survive the format exactly, malformed rows drop
     silently like the CSV path."""
-    import tempfile
-
-    from dotnetvectorsearch_spark.sources.io import read_xml, write_xml
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars")
     path = tempfile.mkdtemp(prefix="xml_roundtrip_")
@@ -369,8 +353,6 @@ def _q_gopher_quality(spark, sf_dir):
     count / mean word length / symbol ratio / alphabetic-word fraction
     / distinct-stopword floor, each a named flag + conjunction `keep`.
     Narrow single-pass expressions fused into the scan."""
-    from dotnetvectorsearch_spark.functions.text import (
-        gopher_quality_flags)
     docs = load_table(spark, sf_dir, "documents")
     flags = gopher_quality_flags("text")
     return docs.select(
@@ -383,7 +365,6 @@ def _q_dsir_weights_en(spark, sf_dir):
     background = full corpus; per-doc sum of Laplace-smoothed
     log(p_target/p_background). The hashed-feature variant of
     Moore-Lewis whose model size is FIXED — broadcastable at 100 TB."""
-    from dotnetvectorsearch_spark.operators.lm import dsir_logweights
     docs = load_table(spark, sf_dir, "documents")
     return dsir_logweights(docs, n_buckets=1024,
                            target_pred=F.col("lang") == "en")
@@ -395,8 +376,6 @@ def _q_bpe_segmented_docs(spark, sf_dir):
     Arrow-batched encoder (the 10^4-rule production path; pinned equal
     to the Catalyst-fold twin in tests/test_lm.py). Iterative trainer
     upstream -> rows-only."""
-    from dotnetvectorsearch_spark.operators.lm import (
-        bpe_segment_arrow, bpe_train_rules)
     docs = load_table(spark, sf_dir, "documents")
     rules = [(left, right) for _rank, left, right, _merged in
              bpe_train_rules(docs, n_merges=8)]
@@ -410,7 +389,6 @@ def _q_ccnet_buckets(spark, sf_dir):
     per-language equal-frequency tiers over the corpus bigram-LM score,
     ties pinned by (score desc, doc_id asc) so buckets are
     engine-stable."""
-    from dotnetvectorsearch_spark.operators.lm import perplexity_buckets
     docs = load_table(spark, sf_dir, "documents")
     return perplexity_buckets(docs, n_buckets=3)
 
@@ -421,9 +399,6 @@ def _q_heavy_hitter_terms(spark, sf_dir):
     this corpus the vocabulary fits the counters, so the summary is in
     its exact regime (slack 0) and the DuckDB oracle pins exact counts;
     the approximate regime's certified bounds are pytest-pinned."""
-    from dotnetvectorsearch_spark.operators.lm import tokens
-    from dotnetvectorsearch_spark.operators.sketches import (
-        heavy_hitters_mg)
     docs = load_table(spark, sf_dir, "documents")
     toks = (docs.select(F.explode(tokens("text")).alias("w"))
             .filter(F.length("w") > 0))
@@ -449,9 +424,7 @@ def _lang_score_sql(lang: str) -> str:
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     oracles.update({
         "doc_listing": """
             SELECT doc_id, text, lang, source, n_chars

@@ -3,7 +3,11 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from dotnetvectorsearch_spark.operators.rollup import (
+    merge_rollups, rollup_batch, rollup_read)
+from dotnetvectorsearch_spark.operators.skew import key_skew_stats
 from dotnetvectorsearch_spark.sources.io import load_table
 
 
@@ -52,7 +56,6 @@ def _q_tpch_q3(spark, sf_dir):
 
 def _q_top_orders_window(spark, sf_dir):
     """Window function: top-3 orders per customer by total price."""
-    from pyspark.sql.window import Window
     orders = load_table(spark, sf_dir, "orders")
     w = (Window.partitionBy("o_custkey")
          .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")))
@@ -620,8 +623,6 @@ def _q_incremental_rollup(spark, sf_dir):
     today's batch aggregated separately, merged at aggregate cost, and
     (per the oracle) equal to the from-scratch aggregate. The daily
     rollup shape that never rescans 100 TB of history."""
-    from dotnetvectorsearch_spark.operators.rollup import (
-        merge_rollups, rollup_batch, rollup_read)
     orders = load_table(spark, sf_dir, "orders")
     orders = orders.withColumn("order_year", F.year("o_orderdate"))
     history = orders.filter(F.col("o_orderkey") % 10 != 0)
@@ -639,15 +640,12 @@ def _q_key_skew_report(spark, sf_dir):
     10 heaviest keys with their corpus share and the global max/mean
     ratio — the measurement that picks between salting, AQE skew-split,
     and out-of-band handling before a 100 TB join."""
-    from dotnetvectorsearch_spark.operators.skew import key_skew_stats
     orders = load_table(spark, sf_dir, "orders")
     return key_skew_stats(orders, "o_custkey", top_n=10)
 
 
 def add_oracles(oracles: dict[str, str]) -> None:
-    """Add the DuckDB oracle SQL of this module's queries to
-    ``oracles``: same column names, same rounding, decimal-cast
-    sums."""
+    """Add this family's DuckDB oracle SQL to ``oracles``."""
     oracles.update({
         "tpch_q1": """
             SELECT l_returnflag, l_linestatus,

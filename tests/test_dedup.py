@@ -6,9 +6,12 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from dotnetvectorsearch_spark import caching
+from dotnetvectorsearch_spark import caching, localdf
 from dotnetvectorsearch_spark.caching import SessionMemo, input_key
+from dotnetvectorsearch_spark.operators import contamination as C
 from dotnetvectorsearch_spark.operators import dedup as D
+from dotnetvectorsearch_spark.operators import graph as G
+from dotnetvectorsearch_spark.operators import neardup as N
 from dotnetvectorsearch_spark.sources.io import load_table
 from dotnetvectorsearch_spark.streaming.ingest import stream_neardup_dedup
 
@@ -34,7 +37,7 @@ def test_exact_dedup_keeps_first(spark, dup_docs):
 
 
 def test_jaccard_pairs_finds_near_dup(spark, dup_docs):
-    pairs = D.jaccard_pairs(dup_docs, threshold=0.3).collect()
+    pairs = N.jaccard_pairs(dup_docs, threshold=0.3).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 2) in got      # identical
     assert (1, 4) in got      # near dup
@@ -45,7 +48,7 @@ def test_jaccard_pairs_finds_near_dup(spark, dup_docs):
 
 def test_minhash_dedup_pairs(spark, dup_docs):
     # 16 bands x 2 rows: P(candidate) ~= 1-(1-J^2)^16 ~= 0.996 at J=0.54
-    pairs = D.minhash_dedup_pairs(dup_docs, num_hashes=32, bands=16,
+    pairs = N.minhash_dedup_pairs(dup_docs, num_hashes=32, bands=16,
                                   threshold=0.3).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 2) in got
@@ -67,13 +70,13 @@ def test_verify_jaccard_matches_python_jaccard(spark, dup_docs):
     assert want[(1, 5)] == 0.0                  # non-vacuous zero overlap
     for thr in (0.3, 0.0):
         got = {(r.id_a, r.id_b): r.jaccard
-               for r in D.verify_jaccard(cands, dup_docs,
+               for r in N.verify_jaccard(cands, dup_docs,
                                          threshold=thr).collect()}
         assert got == {p: j for p, j in want.items() if j >= thr}
 
 
 def test_minhash_signature_shape_and_determinism(spark, dup_docs):
-    sigs = D.minhash_signatures(dup_docs, num_hashes=16).collect()
+    sigs = N.minhash_signatures(dup_docs, num_hashes=16).collect()
     by_id = {r.doc_id: list(r.minhash) for r in sigs}
     assert len(by_id[1]) == 16
     assert by_id[1] == by_id[2]          # identical text -> identical sig
@@ -83,7 +86,7 @@ def test_minhash_signature_shape_and_determinism(spark, dup_docs):
 
 
 def test_simhash_near_dup(spark, dup_docs):
-    pairs = D.simhash_candidate_pairs(dup_docs, max_hamming=8).collect()
+    pairs = N.simhash_candidate_pairs(dup_docs, max_hamming=8).collect()
     got = {(r.id_a, r.id_b): r.hamming for r in pairs}
     assert got[(1, 2)] == 0              # identical text -> identical sig
     assert (1, 4) in got
@@ -92,7 +95,7 @@ def test_simhash_near_dup(spark, dup_docs):
 
 def test_embedding_neardup_blocked(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = D.embedding_neardup_pairs(emb, block_col="label", threshold=0.3)
+    pairs = N.embedding_neardup_pairs(emb, block_col="label", threshold=0.3)
     rows = pairs.collect()
     assert all(r.cosine >= 0.3 for r in rows)
     assert all(r.id_a < r.id_b for r in rows)
@@ -104,15 +107,15 @@ def test_lsh_bucket_cap_drops_megabuckets(spark, monkeypatch):
     # caps are read at call time; the defaults recover every pair.
     docs = spark.createDataFrame(
         [Row(doc_id=i, text="same same same same text here") for i in range(30)])
-    sigs = D.minhash_signatures(docs, num_hashes=16)
-    wide = D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
+    sigs = N.minhash_signatures(docs, num_hashes=16)
+    wide = N.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
     assert wide.count() == 30 * 29 // 2
-    assert D.simhash_candidate_pairs(docs).count() == 30 * 29 // 2
-    monkeypatch.setattr(D, "LSH_MAX_BUCKET_SIZE", 10)
-    monkeypatch.setattr(D, "SIMHASH_MAX_BUCKET_SIZE", 10)
-    capped = D.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
+    assert N.simhash_candidate_pairs(docs).count() == 30 * 29 // 2
+    monkeypatch.setattr(N, "LSH_MAX_BUCKET_SIZE", 10)
+    monkeypatch.setattr(N, "SIMHASH_MAX_BUCKET_SIZE", 10)
+    capped = N.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
     assert capped.count() == 0
-    assert D.simhash_candidate_pairs(docs).count() == 0
+    assert N.simhash_candidate_pairs(docs).count() == 0
 
 
 def test_exact_dedup_incremental_against_corpus(spark):
@@ -216,7 +219,7 @@ def test_cross_corpus_contamination(spark):
         Row(doc_id=10, text="the quick brown fox jumps over the lazy dog"),
         Row(doc_id=11, text="completely novel evaluation text nothing shared"),
     ])
-    out = D.cross_corpus_contamination(train, test, shingle_n=3,
+    out = C.cross_corpus_contamination(train, test, shingle_n=3,
                                        min_overlap=0.5)
     rows = {(r.test_id, r.train_id): r.overlap for r in out.collect()}
     assert (10, 1) in rows and rows[(10, 1)] >= 0.9   # contained prompt
@@ -232,7 +235,7 @@ def test_connected_components_chain_and_clique(spark):
              + [(30, 31)])
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     comp = {r.node: r.component
-            for r in D.connected_components(df).collect()}
+            for r in G.connected_components(df).collect()}
     assert all(comp[i] == 0 for i in range(10))
     assert all(comp[i] == 20 for i in range(20, 24))
     assert comp[30] == 30 and comp[31] == 30
@@ -260,7 +263,7 @@ def test_connected_components_matches_union_find(spark):
         roots.setdefault(r, n)          # min node per root (nodes sorted)
         expected[n] = roots[r]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: r.component for r in D.connected_components(df).collect()}
+    got = {r.node: r.component for r in G.connected_components(df).collect()}
     assert got == expected
 
 
@@ -269,12 +272,12 @@ def test_connected_components_empty_edges(spark):
     # return an empty, correctly-typed frame and dedup_clusters must
     # give every doc its own cluster.
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert D.connected_components(empty).count() == 0
-    assert dict(D.connected_components(empty).dtypes) == {
+    assert G.connected_components(empty).count() == 0
+    assert dict(G.connected_components(empty).dtypes) == {
         "node": "bigint", "component": "bigint"}
     docs = spark.createDataFrame([(1,), (2,)], "doc_id long")
     cl = {r.doc_id: r.cluster_id
-          for r in D.dedup_clusters(docs, empty).collect()}
+          for r in G.dedup_clusters(docs, empty).collect()}
     assert cl == {1: 1, 2: 2}
 
 
@@ -287,10 +290,10 @@ def test_connected_components_paths_agree(spark, force_distributed):
              + [(30, 31), (31, 32), (5, 30)])
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {r.node: r.component
-            for r in D.connected_components(df).collect()}
+            for r in G.connected_components(df).collect()}
     with force_distributed():
         dist = {r.node: r.component
-                for r in D.connected_components(df).collect()}
+                for r in G.connected_components(df).collect()}
     assert fast == dist
 
 
@@ -299,7 +302,7 @@ def test_dedup_clusters_singletons_and_canonical(spark):
                                  "doc_id long")
     pairs = spark.createDataFrame([(2, 3)], "id_a long, id_b long")
     cl = {r.doc_id: r.cluster_id
-          for r in D.dedup_clusters(docs, pairs).collect()}
+          for r in G.dedup_clusters(docs, pairs).collect()}
     assert cl == {1: 1, 2: 2, 3: 2, 9: 9}
     # canonical filter keeps exactly one doc per cluster
     keep = [d for d, c in cl.items() if d == c]
@@ -317,7 +320,7 @@ def test_semantic_contamination_blocked(spark):
         Row(vec_id=12, embedding=[1.0, 0.0], label=1),      # other block, far
     ])
     got = {(r.test_id, r.train_id): r.cosine
-           for r in D.semantic_contamination(
+           for r in C.semantic_contamination(
                train, test, block_col="label", threshold=0.9).collect()}
     assert set(got) == {(10, 1)}
     assert got[(10, 1)] > 0.99
@@ -332,7 +335,7 @@ def test_minhash_portable_pairs_identical_and_disjoint(spark):
         Row(doc_id=3, text="zx qv wk pl mn bv cx dz ef gh ij kl mo pq rs"),
     ])
     pairs = {(r.id_a, r.id_b)
-             for r in D.minhash_pairs_portable(docs).collect()}
+             for r in N.minhash_pairs_portable(docs).collect()}
     assert (1, 2) in pairs
     assert not any(3 in p for p in pairs)
 
@@ -345,7 +348,7 @@ def test_simhash_portable_pairs_identical_and_disjoint(spark):
         Row(doc_id=2, text=base),                   # identical: hamming 0
         Row(doc_id=3, text="zx qv wk pl mn bv cx dz ef gh ij kl mo pq rs"),
     ])
-    rows = D.simhash_pairs_portable(docs).collect()
+    rows = N.simhash_pairs_portable(docs).collect()
     pairs = {(r.id_a, r.id_b): r.hamming for r in rows}
     assert pairs.get((1, 2)) == 0                   # exact dup, hamming 0
     assert not any(3 in p for p in pairs)
@@ -363,7 +366,7 @@ def test_simhash_portable_near_dup_within_hamming(spark):
         Row(doc_id=3, text=" ".join(f"z{i}" for i in range(60))),
     ])
     pairs = {(r.id_a, r.id_b): r.hamming
-             for r in D.simhash_pairs_portable(docs, max_hamming=3)
+             for r in N.simhash_pairs_portable(docs, max_hamming=3)
              .collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] <= 3
     assert not any(3 in p for p in pairs)
@@ -373,9 +376,9 @@ def test_dedup_clusters_lsh_groups_dups_same_as_exact(spark, dup_docs):
     """The LSH-edge clustering twin must agree with the exact-jaccard
     clustering on clear-cut data: dups clustered together under the
     min id, unrelated docs singleton (SCALING.md pairing contract)."""
-    pairs = D.minhash_pairs_portable(dup_docs, num_hashes=16, bands=4)
+    pairs = N.minhash_pairs_portable(dup_docs, num_hashes=16, bands=4)
     got = {r.doc_id: r.cluster_id
-           for r in D.dedup_clusters(dup_docs, pairs).collect()}
+           for r in G.dedup_clusters(dup_docs, pairs).collect()}
     assert got[1] == got[2] == 1        # exact dups share the min id
     assert got[5] == 5                  # unrelated -> singleton
 
@@ -386,30 +389,30 @@ def test_neardup_filter_incremental_flags_history_dups(spark, dup_docs):
     never re-shingled — only the K stored hashes are compared."""
     store_docs = dup_docs.filter(F.col("doc_id").isin(1, 5))
     batch_docs = dup_docs.filter(F.col("doc_id").isin(2, 3))  # 2 == 1
-    store = D.minhash_signatures_portable(store_docs)
-    batch = D.minhash_signatures_portable(batch_docs)
+    store = N.minhash_signatures_portable(store_docs)
+    batch = N.minhash_signatures_portable(batch_docs)
     got = {r.doc_id: (r.max_est, r.is_neardup)
-           for r in D.neardup_filter_incremental(batch, store).collect()}
+           for r in N.neardup_filter_incremental(batch, store).collect()}
     assert got[2] == (1.0, True)        # exact copy of stored doc 1
     est3, flag3 = got[3]                # unrelated to 1 and 5
     assert est3 < 0.5 and flag3 is False
 
 
 def test_neardup_filter_incremental_empty_store(spark, dup_docs):
-    batch = D.minhash_signatures_portable(dup_docs)
+    batch = N.minhash_signatures_portable(dup_docs)
     store = batch.filter(F.lit(False))
-    got = D.neardup_filter_incremental(batch, store).collect()
+    got = N.neardup_filter_incremental(batch, store).collect()
     assert all(r.max_est == 0.0 and not r.is_neardup for r in got)
     assert len(got) == dup_docs.count()
 
 
 @pytest.mark.parametrize("call", [
-    lambda d: D.neardup_filter_incremental(
-        D.minhash_signatures_portable(d), D.minhash_signatures_portable(d),
+    lambda d: N.neardup_filter_incremental(
+        N.minhash_signatures_portable(d), N.minhash_signatures_portable(d),
         num_hashes=16, bands=5),
-    lambda d: D.minhash_pairs_portable(d, num_hashes=16, bands=5),
-    lambda d: D.simhash_pairs_portable(d, bits=32, chunks=5),
-    lambda d: D.simhash_pairs_portable(d, bits=30, chunks=3),
+    lambda d: N.minhash_pairs_portable(d, num_hashes=16, bands=5),
+    lambda d: N.simhash_pairs_portable(d, bits=32, chunks=5),
+    lambda d: N.simhash_pairs_portable(d, bits=30, chunks=3),
     lambda d: stream_neardup_dedup(d, "out", "store", "ckpt",
                                    num_hashes=16, bands=5),
 ], ids=["neardup", "minhash_portable", "simhash_chunks", "simhash_hex",
@@ -433,15 +436,15 @@ def test_production_lsh_pairs_match_python_banding(spark, sf_dir):
     from dotnetvectorsearch_spark.functions.text import word_shingles
     docs = load_table(spark, str(Path(sf_dir).parent / "sf0.01"),
                       "documents")
-    sig = {r.doc_id: r.sig for r in D.simhash_signatures(docs).collect()}
+    sig = {r.doc_id: r.sig for r in N.simhash_signatures(docs).collect()}
     want = {p for p in combinations(sorted(sig), 2)
             if bin((sig[p[0]] ^ sig[p[1]]) % (1 << 64)).count("1") <= 3}
-    got = {(r.id_a, r.id_b) for r in D.simhash_candidate_pairs(
+    got = {(r.id_a, r.id_b) for r in N.simhash_candidate_pairs(
         docs, "doc_id", "text", max_hamming=3).collect()}
     assert len(want) == 17 and got == want
 
     mh = {r.doc_id: r.minhash for r in
-          D.minhash_signatures(docs, num_hashes=64).collect()}
+          N.minhash_signatures(docs, num_hashes=64).collect()}
     buckets: dict[tuple, list] = {}
     for d in sorted(mh):
         for b in range(16):
@@ -453,14 +456,14 @@ def test_production_lsh_pairs_match_python_banding(spark, sf_dir):
         "doc_id", word_shingles("text", 3).alias("sh")).collect()}
     want = {(a, b) for a, b in cands
             if len(sh[a] & sh[b]) >= 0.5 * len(sh[a] | sh[b])}
-    got = {(r.id_a, r.id_b) for r in D.minhash_dedup_pairs(
+    got = {(r.id_a, r.id_b) for r in N.minhash_dedup_pairs(
         docs, "doc_id", "text", num_hashes=64, bands=16,
         threshold=0.5).collect()}
     assert len(want) == 25 and got == want
 
 
 def test_ngram_novelty_unique_vs_duplicated(spark):
-    from dotnetvectorsearch_spark.operators.dedup import ngram_novelty
+    from dotnetvectorsearch_spark.operators.neardup import ngram_novelty
     rows = [
         (1, "alpha bravo charlie delta echo"),
         (2, "alpha bravo charlie delta echo"),      # exact dup of 1
@@ -476,7 +479,7 @@ def test_ngram_novelty_unique_vs_duplicated(spark):
 
 
 def test_ngram_novelty_partial_overlap(spark):
-    from dotnetvectorsearch_spark.operators.dedup import ngram_novelty
+    from dotnetvectorsearch_spark.operators.neardup import ngram_novelty
     rows = [
         (1, "a b c d"),       # shingles: "a b c", "b c d"
         (2, "a b c x"),       # shingles: "a b c", "b c x"
@@ -515,11 +518,11 @@ def test_unblocked_neardup_raises_past_bound(spark, dup_docs,
     operator must raise with reroute advice, never silently plan it."""
     emb = spark.createDataFrame(
         [Row(vec_id=i, embedding=[float(i), 1.0]) for i in range(20)])
-    monkeypatch.setattr(D, "EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS", 10)
+    monkeypatch.setattr(N, "EMBEDDING_NEARDUP_MAX_UNBLOCKED_ROWS", 10)
     with pytest.raises(ValueError, match="block_col"):
-        D.embedding_neardup_pairs(emb)
+        N.embedding_neardup_pairs(emb)
     # explicit opt-in still works
-    out = D.embedding_neardup_pairs(emb, allow_unblocked=True)
+    out = N.embedding_neardup_pairs(emb, allow_unblocked=True)
     assert out.count() > 0
 
 
@@ -529,11 +532,11 @@ def test_unblocked_semantic_contamination_raises_past_bound(spark,
         [Row(vec_id=i, embedding=[1.0, float(i)]) for i in range(20)])
     tr = emb.filter(F.col("vec_id") % 2 == 0)
     te = emb.filter(F.col("vec_id") % 2 == 1)
-    monkeypatch.setattr(D, "SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS",
+    monkeypatch.setattr(C, "SEMANTIC_CONTAMINATION_MAX_UNBLOCKED_PAIRS",
                         10)
     with pytest.raises(ValueError, match="block_col"):
-        D.semantic_contamination(tr, te)
-    assert D.semantic_contamination(
+        C.semantic_contamination(tr, te)
+    assert C.semantic_contamination(
         tr, te, threshold=0.0, allow_unblocked=True).count() > 0
 
 
@@ -544,7 +547,7 @@ def test_connected_components_string_ids_take_distributed_path(spark):
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("y", "x")], "id_a string, id_b string")
     comp = {r.node: r.component
-            for r in D.connected_components(edges).collect()}
+            for r in G.connected_components(edges).collect()}
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
@@ -566,7 +569,7 @@ def test_transient_caches_released_after_action(spark, dup_docs, sf_dir):
     # race — only the ids THIS test creates are deterministic.
     before = persisted_ids()
     D.dup_span_stats(dup_docs, n=3).count()
-    D.minhash_dedup_pairs(dup_docs, num_hashes=16, bands=8,
+    N.minhash_dedup_pairs(dup_docs, num_hashes=16, bands=8,
                           threshold=0.3).count()
     LM.bigram_logprob(dup_docs).count()
     new = persisted_ids() - before
@@ -614,7 +617,7 @@ def test_decontaminate_drops_flagged_train_docs(spark, dup_docs):
         [Row(doc_id=100, text="the quick brown fox jumps over")])
     survivors = sorted(
         r.doc_id for r in
-        D.decontaminate(dup_docs, test_set, shingle_n=3,
+        C.decontaminate(dup_docs, test_set, shingle_n=3,
                         min_overlap=0.5).collect())
     # docs 1, 2 contain the whole probe and 4 shares most of it; 3 is
     # the UPPERCASED dup — shingling is case-sensitive (same contract as
@@ -624,7 +627,7 @@ def test_decontaminate_drops_flagged_train_docs(spark, dup_docs):
     # high threshold with a disjoint probe removes nothing
     clean_probe = spark.createDataFrame(
         [Row(doc_id=101, text="totally unrelated probe text here now")])
-    assert D.decontaminate(dup_docs, clean_probe).count() == 5
+    assert C.decontaminate(dup_docs, clean_probe).count() == 5
 
 
 def test_decontaminate_broadcast_kernel_equals_join_path(spark,
@@ -643,26 +646,27 @@ def test_decontaminate_broadcast_kernel_equals_join_path(spark,
              text=" ".join(words[j % 12] for j in range(i, i + 6)))
          for i in range(0, 12, 2)])
     overlaps = (0.2, 0.5, 0.714286, 1.0)
-    kernel = [sorted(r.doc_id for r in D.decontaminate(
+    kernel = [sorted(r.doc_id for r in C.decontaminate(
         train, test, min_overlap=ov).collect()) for ov in overlaps]
     # a zero postings budget sends every call down the gram join
     D.clear_guard_memo()
-    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+    monkeypatch.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
     for ov, a in zip(overlaps, kernel):
-        b = sorted(r.doc_id for r in D.decontaminate(
+        b = sorted(r.doc_id for r in C.decontaminate(
             train, test, min_overlap=ov).collect())
         assert a == b, (ov, a, b)
+    assert len(C._DECON_INDEX) == 0      # every call took the gram join
 
 
 def test_decontaminate_min_hits_threshold_is_exact_round_half_up():
     """_min_hits_to_flag replicates Spark's round(k/n, 6) HALF_UP
     double semantics on boundaries where raw k/n < min_overlap but the
     6-place rounding crosses it (5/7 = 0.7142857.. -> 0.714286)."""
-    assert D._min_hits_to_flag(7, 0.714286) == 5      # rounds UP into it
-    assert D._min_hits_to_flag(7, 0.7142861) == 6     # just past rounding
-    assert D._min_hits_to_flag(5, 0.2) == 1
-    assert D._min_hits_to_flag(3, 1.0) == 3
-    assert D._min_hits_to_flag(3, 1.5) >= 1 << 30     # never flags
+    assert C._min_hits_to_flag(7, 0.714286) == 5      # rounds UP into it
+    assert C._min_hits_to_flag(7, 0.7142861) == 6     # just past rounding
+    assert C._min_hits_to_flag(5, 0.2) == 1
+    assert C._min_hits_to_flag(3, 1.0) == 3
+    assert C._min_hits_to_flag(3, 1.5) >= 1 << 30     # never flags
 
 
 def test_decontaminate_postings_budget_falls_back_to_join(spark,
@@ -673,10 +677,10 @@ def test_decontaminate_postings_budget_falls_back_to_join(spark,
     train = dup_docs.filter("doc_id % 2 = 0")
     test = dup_docs.filter("doc_id % 2 = 1")
     D.clear_guard_memo()
-    monkeypatch.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
-    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
+    monkeypatch.setattr(N, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+    monkeypatch.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
     with pytest.raises(ValueError, match="minhash banding"):
-        D.decontaminate(train, test, min_overlap=0.2).count()
+        C.decontaminate(train, test, min_overlap=0.2).count()
 
 
 def test_decontaminate_broadcast_handles_empty_and_short_docs(spark):
@@ -687,11 +691,11 @@ def test_decontaminate_broadcast_handles_empty_and_short_docs(spark):
         Row(doc_id=2, text="alpha beta gamma delta")])
     empty_test = spark.createDataFrame(
         [Row(doc_id=9, text="alpha beta gamma")]).filter("doc_id < 0")
-    assert D.decontaminate(train, empty_test).count() == 2
+    assert C.decontaminate(train, empty_test).count() == 2
     hot_test = spark.createDataFrame(
         [Row(doc_id=9, text="alpha beta gamma delta")])
     kept = sorted(r.doc_id for r in
-                  D.decontaminate(train, hot_test,
+                  C.decontaminate(train, hot_test,
                                   min_overlap=0.5).collect())
     assert kept == [1]
 
@@ -772,12 +776,12 @@ def test_max_eval_overlap_matches_join_formulation(spark):
              text=" ".join(words[j % 10] for j in range(i, i + 5)))
          for i in range(0, 10, 3)])
     got = {r.doc_id: r.max_overlap
-           for r in D.max_eval_overlap(train, test).collect()}
+           for r in C.max_eval_overlap(train, test).collect()}
     # round6 is monotone, so max(round6(overlap)) == round6(max raw):
     # the join path's pre-rounded pair overlaps max to EXACTLY the
     # kernel's rounded max
     exp = {r.train_id: r.mo for r in
-           (D.cross_corpus_contamination(train, test, min_overlap=0.0)
+           (C.cross_corpus_contamination(train, test, min_overlap=0.0)
             .groupBy("train_id")
             .agg(F.max("overlap").alias("mo"))).collect()}
     for doc_id, mo in got.items():
@@ -791,9 +795,9 @@ def test_max_eval_overlap_postings_budget_raises(spark, dup_docs,
     test = dup_docs.filter("doc_id % 2 = 1")
     train = dup_docs.filter("doc_id % 2 = 0")
     D.clear_guard_memo()
-    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
-    with pytest.raises(D.DeconBudgetExceeded, match="postings"):
-        D.max_eval_overlap(train, test)
+    monkeypatch.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
+    with pytest.raises(C.DeconBudgetExceeded, match="postings"):
+        C.max_eval_overlap(train, test)
 
 
 def test_decontaminate_broadcast_plan_is_shuffle_free(spark, dup_docs):
@@ -801,7 +805,7 @@ def test_decontaminate_broadcast_plan_is_shuffle_free(spark, dup_docs):
     exchange — decontamination is a map-side filter over train."""
     test = spark.createDataFrame(
         [Row(doc_id=100, text="the quick brown fox jumps over")])
-    plan = (D.decontaminate(dup_docs, test, min_overlap=0.5)
+    plan = (C.decontaminate(dup_docs, test, min_overlap=0.5)
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
     assert "Join" not in plan
@@ -816,7 +820,7 @@ def test_fuzzy_dup_pairs_blocked_levenshtein(spark):
         Row(doc_id=4, text="omega psi chi phi upsilon"),        # other block
     ])
     pairs = {(r.id_a, r.id_b): r.dist
-             for r in D.fuzzy_dup_pairs(
+             for r in N.fuzzy_dup_pairs(
                  docs, prefix_chars=30, block_tokens=2,
                  max_dist=3).collect()}
     assert pairs == {(1, 2): 1}   # 3 shares the block but fails verify;
@@ -827,7 +831,7 @@ def test_fuzzy_dup_pairs_never_cross_product(spark):
     docs = spark.createDataFrame([
         Row(doc_id=i, text=f"head{i % 3} tail{i} filler words here")
         for i in range(30)])
-    plan = (D.fuzzy_dup_pairs(docs)
+    plan = (N.fuzzy_dup_pairs(docs)
             ._jdf.queryExecution().executedPlan().toString())
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -836,9 +840,9 @@ def test_fuzzy_dup_pairs_never_cross_product(spark):
 def test_dedup_weights_mass_per_cluster(spark, dup_docs):
     """Each duplicate cluster must carry total weight 1.0, so
     sum(weight) == number of distinct content units."""
-    pairs = D.jaccard_pairs(dup_docs, threshold=0.3)
+    pairs = N.jaccard_pairs(dup_docs, threshold=0.3)
     out = {r.doc_id: r for r in
-           D.dedup_weights(dup_docs, pairs).collect()}
+           G.dedup_weights(dup_docs, pairs).collect()}
     assert len(out) == 5                      # every doc gets a row
     # docs 1,2,4 cluster together (1 is also near-dup of 4); 3 and 5
     # are singletons under case-sensitive shingles
@@ -994,7 +998,7 @@ def test_bloom_store_serve_equals_build_in_query(spark, sf_dir,
 @pytest.fixture
 def low_candidate_bound(monkeypatch):
     """JACCARD_MAX_CANDIDATE_PAIRS patched to 3 (read at call time)."""
-    monkeypatch.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+    monkeypatch.setattr(N, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
 
 
 def test_jaccard_pairs_guard_refuses_past_candidate_bound(spark, dup_docs,
@@ -1004,10 +1008,10 @@ def test_jaccard_pairs_guard_refuses_past_candidate_bound(spark, dup_docs,
     # raise naming the linear LSH twins — a 10^9-doc corpus gets an
     # error with reroute advice, not a hang (same doctrine as
     # search.knn_graph's broadcast bound).
-    assert D.jaccard_pairs(dup_docs, threshold=0.3).count() > 0
-    monkeypatch.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+    assert N.jaccard_pairs(dup_docs, threshold=0.3).count() > 0
+    monkeypatch.setattr(N, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
     with pytest.raises(ValueError, match="JACCARD_MAX_CANDIDATE_PAIRS"):
-        D.jaccard_pairs(dup_docs, threshold=0.1)
+        N.jaccard_pairs(dup_docs, threshold=0.1)
 
 
 def test_contamination_guard_refuses_past_candidate_bound(spark,
@@ -1022,34 +1026,34 @@ def test_contamination_guard_refuses_past_candidate_bound(spark,
     # default bound runs clean (dup_docs: every train doc is a planted
     # near-copy of a test doc, so all are dropped — 0 survivors is the
     # CORRECT answer here, the point is the default-bound path works)
-    assert D.cross_corpus_contamination(
+    assert C.cross_corpus_contamination(
         train, test, min_overlap=0.2).count() >= 0
-    assert D.decontaminate(train, test, min_overlap=0.2).count() == 0
+    assert C.decontaminate(train, test, min_overlap=0.2).count() == 0
     D.clear_guard_memo()
     with monkeypatch.context() as mp:
-        mp.setattr(D, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
+        mp.setattr(N, "JACCARD_MAX_CANDIDATE_PAIRS", 3)
         with pytest.raises(ValueError, match="minhash banding"):
-            D.cross_corpus_contamination(train, test, min_overlap=0.2)
+            C.cross_corpus_contamination(train, test, min_overlap=0.2)
         # the guard protects the DISTRIBUTED join path; the broadcast
         # kernel never schedules that join, so force the join path
         # with a zero postings budget — decontaminate inherits it
-        mp.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+        mp.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
         with pytest.raises(ValueError, match="minhash banding"):
-            D.decontaminate(train, test, min_overlap=0.2).count()
+            C.decontaminate(train, test, min_overlap=0.2).count()
 
 
 def test_dedup_clusters_pipeline_inherits_guard(spark, dup_docs,
                                                 low_candidate_bound):
     with pytest.raises(ValueError, match="minhash"):
-        D.dedup_clusters(
-            dup_docs, D.jaccard_pairs(dup_docs, threshold=0.1)).count()
+        G.dedup_clusters(
+            dup_docs, N.jaccard_pairs(dup_docs, threshold=0.1)).count()
 
 
 def test_dedup_weights_pipeline_inherits_guard(spark, dup_docs,
                                                low_candidate_bound):
     with pytest.raises(ValueError, match="minhash"):
-        D.dedup_weights(
-            dup_docs, D.jaccard_pairs(dup_docs, threshold=0.1)).count()
+        G.dedup_weights(
+            dup_docs, N.jaccard_pairs(dup_docs, threshold=0.1)).count()
 
 
 def test_pagerank_pipeline_inherits_guard(spark, dup_docs,
@@ -1057,7 +1061,7 @@ def test_pagerank_pipeline_inherits_guard(spark, dup_docs,
     from dotnetvectorsearch_spark.operators.graph import pagerank_undirected
     with pytest.raises(ValueError, match="minhash"):
         pagerank_undirected(
-            D.jaccard_pairs(dup_docs, threshold=0.1),
+            N.jaccard_pairs(dup_docs, threshold=0.1),
             "id_a", "id_b", iters=2).count()
 
 
@@ -1177,7 +1181,7 @@ def test_clear_guard_memo_empties_every_memo():
             FakeBC.unpersisted += 1
 
     D.clear_guard_memo()
-    memos = (D._GUARD_MEMO, D._DECON_INDEX, ds._BLOOM_BROADCASTS)
+    memos = (N._GUARD_MEMO, C._DECON_INDEX, ds._BLOOM_BROADCASTS)
     for m in memos:
         m.get_or_build(("fake",), lambda: (FakeBC(), 1, 1))
     assert D.clear_guard_memo() == 3
@@ -1222,25 +1226,24 @@ def test_lsh_neardup_strategies_agree(spark, sf_dir, monkeypatch):
     the strategy pivot is a cost decision, never a semantics one. Also
     pins max_probes (truncated probe set is a subset) and per_doc_cap
     (top-m per id_a, deterministic tie-break)."""
-    from dotnetvectorsearch_spark.operators import dedup as dd
     emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
            .select("vec_id", "embedding")
            .withColumn("bucket", F.abs(F.xxhash64("vec_id")) % 256))
     kw = dict(threshold=0.2, probe_hamming=1, bits=8)
-    joined = {tuple(r) for r in dd.lsh_bucket_neardup_pairs(
+    joined = {tuple(r) for r in N.lsh_bucket_neardup_pairs(
         emb, "vec_id", "embedding", **kw).collect()}
-    monkeypatch.setattr(dd, "LSH_GROUPED_MIN_MEMBERSHIPS", 0)
-    grouped = {tuple(r) for r in dd.lsh_bucket_neardup_pairs(
+    monkeypatch.setattr(N, "LSH_GROUPED_MIN_MEMBERSHIPS", 0)
+    grouped = {tuple(r) for r in N.lsh_bucket_neardup_pairs(
         emb, "vec_id", "embedding", **kw).collect()}
     assert grouped == joined and grouped
     # probe budget: truncating to 1 mask (exact bucket only) is a
     # subset of the full probe set
-    exact_only = {tuple(r)[:2] for r in dd.lsh_bucket_neardup_pairs(
+    exact_only = {tuple(r)[:2] for r in N.lsh_bucket_neardup_pairs(
         emb, "vec_id", "embedding", max_probes=1, **kw).collect()}
     assert exact_only <= {t[:2] for t in joined}
     # per-doc cap: <= m partners per id_a, and the kept ones are the
     # top-m by (cosine desc, id_b asc)
-    capped = dd.lsh_bucket_neardup_pairs(
+    capped = N.lsh_bucket_neardup_pairs(
         emb, "vec_id", "embedding", per_doc_cap=2, **kw).collect()
     by_a = {}
     for r in capped:
@@ -1260,7 +1263,7 @@ def test_min_hits_to_flag_safe_past_2m_shingles():
     true HALF_UP threshold by one (advisor r10). At n=5M, m=0.5 the
     smallest flagging k is 2,499,998 (0.4999996 rounds UP to 0.500000);
     the old start of 2,499,999 skipped it."""
-    assert D._min_hits_to_flag(5_000_000, 0.5) == 2_499_998
+    assert C._min_hits_to_flag(5_000_000, 0.5) == 2_499_998
 
 
 def test_decon_memo_key_and_index_are_per_text_col(spark):
@@ -1278,15 +1281,15 @@ def test_decon_memo_key_and_index_are_per_text_col(spark):
         assert k_text != k_alt
     train = spark.createDataFrame([Row(doc_id=1, text=phrase, alt=phrase)])
     # call 1 (text): train.text == test.text -> dropped; memoizes index
-    assert D.decontaminate(train, test, text_col="text",
+    assert C.decontaminate(train, test, text_col="text",
                            min_overlap=0.5).count() == 0
     # call 2 (alt): train.alt == test.TEXT but shares nothing with
     # test.alt -> must be KEPT. A stale text-column index drops it.
-    kept = D.decontaminate(train, test, text_col="alt",
+    kept = C.decontaminate(train, test, text_col="alt",
                            min_overlap=0.5).count()
     assert kept == 1
     if key is not None:                     # one index per text_col
-        assert k_text in D._DECON_INDEX and k_alt in D._DECON_INDEX
+        assert k_text in C._DECON_INDEX and k_alt in C._DECON_INDEX
 
 
 def test_registry_decontamination_kernels_agree(spark, sf_dir,
@@ -1311,9 +1314,9 @@ def test_registry_decontamination_kernels_agree(spark, sf_dir,
 
     kernel = rows()
     D.clear_guard_memo()
-    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+    monkeypatch.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
     joined = rows()
-    assert len(D._DECON_INDEX) == 0      # every call took the gram join
+    assert len(C._DECON_INDEX) == 0      # every call took the gram join
     assert joined == kernel and all(kernel.values())
 
 
@@ -1328,8 +1331,8 @@ def test_stream_decontaminate_enforces_postings_budget(spark,
     eval_docs = spark.createDataFrame(
         [Row(doc_id=9, text="alpha beta gamma delta epsilon zeta")])
     D.clear_guard_memo()
-    monkeypatch.setattr(D, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
-    with pytest.raises(D.DeconBudgetExceeded, match="postings"):
+    monkeypatch.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 1)
+    with pytest.raises(C.DeconBudgetExceeded, match="postings"):
         stream_decontaminate(docs, eval_docs)
 
 
@@ -1492,9 +1495,9 @@ def test_spread_amp_and_nonfile_plans(spark, tmp_path):
     pdf.to_parquet(p, compression=None)
     nbytes = os.path.getsize(p)
     df = spark.read.parquet(p)
-    n1 = D._spread(df, "doc_id", amp=1).rdd.getNumPartitions()
-    n16 = D._spread(df, "doc_id", amp=16).rdd.getNumPartitions()
-    want = lambda amp: max(4, min(dp, -(-nbytes * amp // D._SPREAD_BYTES)))
+    n1 = localdf._spread(df, "doc_id", amp=1).rdd.getNumPartitions()
+    n16 = localdf._spread(df, "doc_id", amp=16).rdd.getNumPartitions()
+    want = lambda amp: max(4, min(dp, -(-nbytes * amp // localdf._SPREAD_BYTES)))
     assert n16 == want(16), (n16, nbytes)
     assert n1 == want(1), (n1, nbytes)
     assert n1 <= n16
@@ -1502,7 +1505,7 @@ def test_spread_amp_and_nonfile_plans(spark, tmp_path):
     # byte clamp must NOT fire -> spread to defaultParallelism
     mem = spark.createDataFrame(pdf).coalesce(1)
     assert mem.inputFiles() == []
-    nm = D._spread(mem, "doc_id").rdd.getNumPartitions()
+    nm = localdf._spread(mem, "doc_id").rdd.getNumPartitions()
     assert nm == dp, nm
     # values are partitioning-invariant: same fingerprint rows either way
     a = sorted(r.fp for r in D.winnow_fingerprints(
@@ -1535,7 +1538,7 @@ def test_minhash_fold_matches_explode_groupby_reference(spark):
 
     for k, include_empty in ((16, True), (8, False), (64, True)):
         got = {r.doc_id: list(r.minhash) for r in
-               D.minhash_signatures(docs, "text", "doc_id", k, 3,
+               N.minhash_signatures(docs, "text", "doc_id", k, 3,
                                     include_empty=include_empty)
                .collect()}
         sh = docs.select("doc_id",
@@ -1543,7 +1546,7 @@ def test_minhash_fold_matches_explode_groupby_reference(spark):
         exploded = (sh.select("doc_id", F.explode("sh").alias("__s"))
                     .select("doc_id", F.xxhash64("__s").alias("__h")))
         mins = [F.min(F.xxhash64(F.col("__h")
-                                 .bitwiseXOR(F.lit(D._salt(j)))))
+                                 .bitwiseXOR(F.lit(N._salt(j)))))
                 .alias(f"m{j}") for j in range(k)]
         ref_rows = exploded.groupBy("doc_id").agg(*mins).collect()
         ref = {r.doc_id: [r[f"m{j}"] for j in range(k)]

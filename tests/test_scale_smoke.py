@@ -48,7 +48,7 @@ def test_connected_components_300k_chain_clusters(spark,
     # jumping to do real work). At 100x this is the same plan with more
     # partitions — per-round shuffle is linear in |E|.
     from pyspark.sql import functions as F
-    from dotnetvectorsearch_spark.operators.dedup import connected_components
+    from dotnetvectorsearch_spark.operators.graph import connected_components
     edges = (spark.range(0, 300_000, 1, 16)
              .filter((F.col("id") % 6) != 5)
              .select(F.col("id").alias("id_a"),

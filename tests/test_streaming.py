@@ -437,7 +437,7 @@ def test_stream_decontaminate_matches_batch(spark, sf_dir, tmp_path):
     """The streaming eval gate must keep EXACTLY the batch
     decontaminate survivor set on the same docs (same thresholds,
     same broadcast kernel)."""
-    from dotnetvectorsearch_spark.operators.dedup import decontaminate
+    from dotnetvectorsearch_spark.operators.contamination import decontaminate
     from dotnetvectorsearch_spark.sources.io import load_table
     from dotnetvectorsearch_spark.streaming.ingest import (
         stream_decontaminate)

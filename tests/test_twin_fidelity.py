@@ -85,7 +85,7 @@ def test_banding_recall_floor_as_bands_vary(spark, bands, floor):
     (13/15 shared 3-grams), 4 bands x 4 rows gives ~0.93 per pair and
     8 bands x 2 rows ~0.9998 — recall must stay above the stated floor
     at BOTH band settings, and may only improve with more bands."""
-    from dotnetvectorsearch_spark.operators.dedup import (
+    from dotnetvectorsearch_spark.operators.neardup import (
         minhash_pairs_portable)
     docs = _mutated_corpus(spark)
     cand = minhash_pairs_portable(docs, "doc_id", "text", num_hashes=16,
@@ -142,7 +142,7 @@ def test_multiprobe_lifts_semantic_pair_recall(spark):
     multi-probe must recover the large majority of exact cosine>=0.5
     pairs, and strictly dominate exact-bucket blocking — the measured
     reason semdedup_lsh probes (TWIN_FIDELITY.md)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
+    from dotnetvectorsearch_spark.operators.neardup import (
         embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
 
@@ -175,7 +175,7 @@ def test_adaptive_design_holds_recall_at_high_bits(spark):
     recall near the single-table bits=8 level (measured 0.78 vs 0.85 at
     n=2000, SEMDEDUP_DIAL.md) — the property that makes growing bits
     with the corpus safe."""
-    from dotnetvectorsearch_spark.operators.dedup import (
+    from dotnetvectorsearch_spark.operators.neardup import (
         embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
     from registry.lsh import _lsh_tables_for_recall
@@ -211,7 +211,7 @@ def test_multitable_lsh_superset_no_dups_and_recall_gain(spark):
     (where one table's survival collapses) recover materially more
     exact pairs than one table — the designed property
     `_lsh_tables_for_recall` sizes for."""
-    from dotnetvectorsearch_spark.operators.dedup import (
+    from dotnetvectorsearch_spark.operators.neardup import (
         embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
 
@@ -262,9 +262,9 @@ def test_semdedup_hi_operating_point_kept_agreement_floor(spark):
     with exact >= 0.95 after identical components+keep-min algebra."""
     from pyspark.sql.window import Window as W
 
-    from dotnetvectorsearch_spark.operators.dedup import (
-        connected_components, embedding_neardup_pairs,
-        lsh_bucket_neardup_pairs)
+    from dotnetvectorsearch_spark.operators.graph import connected_components
+    from dotnetvectorsearch_spark.operators.neardup import (
+        embedding_neardup_pairs, lsh_bucket_neardup_pairs)
     from tools.gen_scale_tier import gen_embeddings_clustered
 
     tau = 0.8

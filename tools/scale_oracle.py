@@ -42,11 +42,8 @@ from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH
 from dotnetvectorsearch_spark.session import get_spark
 from registry.lsh import (
-    _LSH_ORACLE_DIM,
-    _lsh_adaptive_bits,
-    _lsh_bucket_sql,
-    _lsh_tables_for_recall,
-)
+    _LSH_ORACLE_DIM, _lsh_adaptive_bits, _lsh_bucket_sql,
+    _lsh_tables_for_recall)
 from tools.check_oracle import normalize
 
 SF1_DIR = ROOT / ".scaletier" / "sf1"

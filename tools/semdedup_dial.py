@@ -47,8 +47,8 @@ from pyspark.sql import functions as F
 
 from dotnetvectorsearch_spark.caching import release_transient
 from dotnetvectorsearch_spark.operators.ann import HyperplaneLSH, probe_masks
-from dotnetvectorsearch_spark.operators.dedup import (
-    connected_components,
+from dotnetvectorsearch_spark.operators.graph import connected_components
+from dotnetvectorsearch_spark.operators.neardup import (
     embedding_neardup_pairs,
     lsh_bucket_neardup_pairs,
 )

@@ -67,7 +67,7 @@ def pair_fidelity_docs(docs) -> dict:
     """`pair_fidelity` over an already-loaded documents frame (tests
     pass constructed corpora — e.g. the planted mid-jaccard tier —
     without a parquet round-trip)."""
-    from dotnetvectorsearch_spark.operators.dedup import (
+    from dotnetvectorsearch_spark.operators.neardup import (
         jaccard_pairs, minhash_dedup_pairs, minhash_pairs_portable)
     exact = jaccard_pairs(docs, "doc_id", "text", shingle_n=3,
                           threshold=0.1).persist()
