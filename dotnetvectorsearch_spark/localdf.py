@@ -37,6 +37,9 @@ bound of its own and the shared byte bound :data:`DRIVER_BYTES`, read
 at call time: setting it to 0 sends every gate down its distributed
 path, which is how the tests and ``tools/check_oracle.py
 --distributed`` prove each pair equal.
+
+:func:`_spread` sizes the input partitions of the CPU-heavy text
+operators (dedup, LM) from the same :func:`plan_bytes` evidence.
 """
 
 from __future__ import annotations
@@ -215,9 +218,9 @@ _SPREAD_BYTES = 96 * 1024
 def _spread(df: DataFrame, key: str, amp: int = 1) -> DataFrame:
     """Hash-repartition to the session's default parallelism when the
     input has fewer partitions. Small corpora often arrive as a single
-    file/partition; the shingle/hash stages below are CPU-bound per row,
-    so without this they serialize onto one task. At real scale inputs
-    already have enough splits and this is a no-op.
+    file/partition; the text operators' shingle/hash stages are CPU-bound
+    per row, so without this they serialize onto one task. At real scale
+    inputs already have enough splits and this is a no-op.
 
     ``amp`` is the call site's downstream CPU-amplification factor
     relative to the byte budget below (guide §2.5: partition by the

@@ -1,5 +1,6 @@
-"""Exact and n-gram-Jaccard deduplication queries and the near-dup
-graph queries built on them.
+"""Exact, n-gram-Jaccard and embedding deduplication queries and the
+duplicate-graph queries (clusters, weights, PageRank, semantic
+clusters) built on them.
 """
 
 from __future__ import annotations
