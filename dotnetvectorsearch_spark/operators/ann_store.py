@@ -43,6 +43,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import localdf
 from ..caching import _input_fingerprint
 from ..sources.io import load_table
+from ..sources.layout import (  # noqa: F401 -- perfbench's names re-exported
+    _rollback_ghost_manifests, _write_manifest, _writer_lock,
+    current_snapshot_version, gc_snapshots, list_snapshots,
+    publish_snapshot, read_manifest, read_store_rows, snapshot_row_count)
 from .ann import IVFIndex, IVFPQIndex, PQIndex, _adc
 from .search import round6_half_up
 
@@ -61,8 +65,6 @@ INDEX_PARAMS: dict[str, dict] = {
 _INDEX_CLASSES = {"ivf": IVFIndex, "pq": PQIndex, "ivfpq": IVFPQIndex}
 
 _MARKER = "_fingerprint.json"
-_MANIFEST_DIR = "_manifests"
-_CURRENT = "CURRENT"
 
 
 def _write_marker(path: str, meta: dict) -> None:
@@ -323,348 +325,6 @@ def index_health(spark: SparkSession, sf_dir: str, kind: str = "ivf",
             .select("cell", "n_rows", "n_files", "load_factor", "hot",
                     "fragmented")
             .orderBy("cell"))
-
-
-# --------------------------------------------------------------------
-# Snapshot manifests — cross-cell consistency for maintenance
-# --------------------------------------------------------------------
-# compact_index's dir-swap is file-atomic per cell but NOT a cross-cell
-# snapshot: a reader listing the directory mid-pass can see some cells
-# compacted and others not (and, for one rename window, a cell missing
-# entirely). The fix is the same one Delta/Iceberg use for OPTIMIZE: an
-# immutable per-version MANIFEST naming the exact data files of a
-# snapshot, plus an atomically-replaced CURRENT pointer. Readers
-# resolve CURRENT once and read that file list — concurrent appends,
-# compactions, and GC never change what a running query sees, because
-# data files are immutable and a publisher never deletes anything
-# (deletion is a separate GC step that only touches files no retained
-# snapshot references). This is the local-fs analogue of the Delta
-# transaction log: `manifest-v%06d.json` under `_manifests/` (the
-# underscore prefix keeps Spark's directory reads ignoring it), CURRENT
-# swapped via write-temp + os.replace (atomic on POSIX). Scope: the
-# cell-partitioned stores (ivf / ivfpq) whose maintenance passes need
-# it; readers get snapshot isolation, WRITER-writer coordination is
-# still the documented single-maintenance-writer window (a real
-# catalog CAS is the multi-writer upgrade path).
-
-
-def _manifests_root(path: str) -> Path:
-    return Path(path) / _MANIFEST_DIR
-
-
-def _data_files(path: str) -> list[str]:
-    """All data-file paths (relative to the store root) in cell=* partition
-    dirs. Only *.parquet leaves count — markers and _SUCCESS files don't."""
-    out = []
-    for d in sorted(Path(path).glob("cell=*")):
-        out.extend(sorted(str(f.relative_to(path))
-                          for f in d.glob("*.parquet")))
-    return out
-
-
-def _read_manifest_file(p: Path) -> dict:
-    return json.loads(p.read_text())
-
-
-@contextlib.contextmanager
-def _writer_lock(path: str):
-    """Advisory exclusive lock for store PUBLISHERS (publish / compact
-    / GC): an ``fcntl.flock`` on ``_manifests/LOCK``, held for the
-    whole read-allocate-write span so two writers cannot race version
-    allocation or interleave a GC with a publish. Readers never take
-    it — snapshot isolation already protects them. Honest scope:
-    advisory and same-host (flock over NFS depends on the mount; a
-    multi-host deployment wants a catalog CAS on the CURRENT pointer,
-    the same upgrade path Delta/Iceberg take). On platforms without
-    fcntl the lock degrades to the documented single-writer window."""
-    root = _manifests_root(path)
-    root.mkdir(parents=True, exist_ok=True)
-    with open(root / "LOCK", "w") as lf:
-        try:
-            import fcntl
-            fcntl.flock(lf, fcntl.LOCK_EX)
-        except ImportError:      # non-POSIX: single-writer fallback
-            pass
-        yield
-
-
-def current_snapshot_version(path: str) -> int | None:
-    """Version in CURRENT, or None when the store has no manifests."""
-    try:
-        return int((_manifests_root(path) / _CURRENT).read_text())
-    except (OSError, ValueError):
-        return None
-
-
-def list_snapshots(path: str) -> list[dict]:
-    """All retained snapshot manifests, oldest first: each a dict with
-    ``version``, ``files`` (relative paths), ``n_files``, ``note``."""
-    root = _manifests_root(path)
-    if not root.is_dir():
-        return []
-    out = []
-    for p in sorted(root.glob("manifest-v*.json")):
-        try:
-            out.append(_read_manifest_file(p))
-        except (OSError, ValueError):
-            continue
-    return sorted(out, key=lambda m: m["version"])
-
-
-def read_manifest(path: str, version: int | None = None) -> dict:
-    """The manifest of ``version`` (default: CURRENT). Raises
-    FileNotFoundError when the store has no manifests or the version
-    was GC'd — callers that want directory-read fallback use
-    :func:`read_store_rows`."""
-    if version is None:
-        version = current_snapshot_version(path)
-        if version is None:
-            raise FileNotFoundError(f"no manifests under {path}")
-    p = _manifests_root(path) / f"manifest-v{version:06d}.json"
-    if not p.is_file():
-        raise FileNotFoundError(f"snapshot v{version} not found "
-                                f"(GC'd or never published) under {path}")
-    return _read_manifest_file(p)
-
-
-def _rollback_ghost_manifests(path: str) -> int:
-    """Remove manifests NEWER than CURRENT — the debris of a writer
-    that crashed between writing its manifest file and swapping the
-    CURRENT pointer (the one non-atomic gap in the two-rename publish
-    protocol). Such a ghost version was never observable as CURRENT,
-    so deleting it is a rollback, not data loss: its data files (for
-    a crashed compaction, ``compact-v*``-named) become unreferenced
-    and the caller's orphan cleanup removes them, while the committed
-    CURRENT snapshot is untouched. Without this, GC keyed on "newest
-    retained" could keep the ghost and DELETE the files CURRENT
-    serves (advisor r13). Caller must hold the writer lock."""
-    cur = current_snapshot_version(path)
-    if cur is None:
-        return 0
-    n = 0
-    for mf in _manifests_root(path).glob("manifest-v*.json"):
-        try:
-            ver = int(mf.stem.split("-v")[1])
-        except (IndexError, ValueError):
-            continue
-        if ver > cur:
-            try:
-                mf.unlink()
-                n += 1
-            except OSError:
-                pass
-    return n
-
-
-def _referenced_union(path: str, cur_m: dict | None = None) -> set:
-    """Every file name any RETAINED manifest still accounts for:
-    CURRENT's recorded ``referenced_union`` when present, else a
-    one-time scan of all retained manifests (pre-union back-compat).
-    Pass the already-read CURRENT manifest to avoid a re-parse."""
-    if cur_m is None:
-        v = current_snapshot_version(path)
-        if v is None:
-            return set()
-        cur_m = read_manifest(path, v)
-    if cur_m.get("referenced_union") is not None:
-        return set(cur_m["referenced_union"])
-    union = set()
-    for m in list_snapshots(path):
-        union.update(m["files"])
-    return union
-
-
-def _footer_rows(path: str, files: list[str]) -> int:
-    """Total rows across ``files`` from parquet FOOTER metadata only —
-    no Spark job, no data pages. O(files) metadata reads, exactly the
-    statistic Iceberg/Delta manifests carry so a 100 TB store can
-    answer ``count(*)`` per snapshot without a scan."""
-    import pyarrow.parquet as _pq
-    total = 0
-    for rel in files:
-        total += _pq.ParquetFile(str(Path(path) / rel)).metadata.num_rows
-    return int(total)
-
-
-def snapshot_row_count(path: str, version: int | None = None) -> int:
-    """Row count of a snapshot (default CURRENT) from its manifest's
-    recorded ``n_rows`` — written at publish time from parquet footers.
-    For a manifest written before row stats existed, falls back to a
-    footer sum over the manifest's files (same number, computed late)."""
-    m = read_manifest(path, version)
-    if m.get("n_rows") is not None:
-        return int(m["n_rows"])
-    return _footer_rows(path, m["files"])
-
-
-def _write_manifest(path: str, files: list[str], note: str = "",
-                    union: set | None = None,
-                    live: set | None = None) -> int:
-    """Publish an immutable manifest for exactly ``files`` and swap
-    CURRENT to it. Returns the new version number.
-
-    Each manifest also carries ``referenced_union`` — the names every
-    retained manifest still accounts for — so a publish reads only
-    the newest manifest (O(files)) instead of re-parsing all retained
-    ones (O(versions x files), quadratic over a long
-    publish-per-trigger stream — advisor r13). The union is PRUNED
-    here against the live directory before being written: a name
-    neither on disk nor in this snapshot can never recur (Spark part
-    files carry task UUIDs; compaction outputs carry a version
-    allocated monotonically from the always-retained CURRENT), so
-    dropping it is sound and keeps the union — and every manifest's
-    size — O(live files + not-yet-GC'd retirees) instead of growing
-    with the store's whole publish history (advisor r13, 2nd pass).
-    Callers that already resolved the union pass it in to avoid a
-    second CURRENT parse."""
-    root = _manifests_root(path)
-    root.mkdir(parents=True, exist_ok=True)
-    cur_ver = current_snapshot_version(path)
-    version = 1 if cur_ver is None else cur_ver + 1
-    if union is None:
-        union = _referenced_union(path)
-    if live is None:
-        live = set(_data_files(path))
-    union = (set(union) | set(files)) & (live | set(files))
-    doc = {"version": version, "files": sorted(files),
-           "n_files": len(files), "n_rows": _footer_rows(path, files),
-           "note": note,
-           "referenced_union": sorted(union)}
-    mf = root / f"manifest-v{version:06d}.json"
-    tmp = root / f".manifest-v{version:06d}.json.tmp"
-    tmp.write_text(json.dumps(doc))
-    os.replace(tmp, mf)            # manifest file lands whole
-    cur_tmp = root / f".{_CURRENT}.tmp"
-    cur_tmp.write_text(str(version))
-    os.replace(cur_tmp, root / _CURRENT)   # atomic pointer swap
-    return version
-
-
-def publish_snapshot(path: str, note: str = "") -> int:
-    """Publish the next snapshot of a cell-partitioned store after an
-    APPEND (or as the first snapshot of an unmanaged store). Returns
-    the new version.
-
-    The new file set is NOT a bare directory listing: after a
-    manifest-mode compaction the directory still holds retired files
-    awaiting :func:`gc_snapshots`, and re-listing them would
-    double-count rows. So the snapshot is
-
-        (CURRENT's files that still exist)  ∪  (files on disk that NO
-        retained manifest references)
-
-    — the second term is exactly the freshly-appended files (retired
-    files stay referenced until GC removes them from disk; the
-    "referenced" set is the ``referenced_union`` carried by CURRENT,
-    so a publish is O(files), not O(versions x files)). For a store
-    with no manifests yet this degenerates to the full directory
-    listing.
-
-    Unreferenced ``compact-v*`` files are DEBRIS, not appends: a live
-    compaction holds the same writer lock for its whole move+publish
-    span, so any compaction-named file that is visible here yet
-    referenced by no manifest came from a compaction that crashed
-    before publishing. Folding it in would duplicate the rows it
-    rewrote (advisor r13) — it is deleted instead (the crashed pass
-    left CURRENT untouched, so nothing is lost)."""
-    with _writer_lock(path):
-        _rollback_ghost_manifests(path)
-        on_disk = set(_data_files(path))
-        cur_ver = current_snapshot_version(path)
-        if cur_ver is None:
-            return _write_manifest(path, sorted(on_disk),
-                                   note or "initial")
-        cur_m = read_manifest(path, cur_ver)
-        referenced = _referenced_union(path, cur_m)
-        fresh = on_disk - referenced
-        orphans = {f for f in fresh
-                   if Path(f).name.startswith("compact-v")}
-        for rel in sorted(orphans):
-            try:
-                (Path(path) / rel).unlink()
-            except OSError:
-                pass
-        fresh -= orphans
-        files = (set(cur_m["files"]) & on_disk) | fresh
-        return _write_manifest(path, sorted(files), note,
-                               union=referenced,
-                               live=on_disk - orphans)
-
-
-def read_store_rows(spark: SparkSession, path: str,
-                    version: int | None = None) -> DataFrame:
-    """Snapshot-consistent rows of a cell-partitioned store: resolve
-    the manifest (CURRENT, or an explicit ``version`` for time-travel)
-    and read exactly its files. ``basePath`` keeps the ``cell=...``
-    directory components parsed as the partition column, so probe-time
-    cell pruning works identically to a directory read. A store with
-    no manifests falls back to the plain directory read (pre-manifest
-    stores keep working)."""
-    if version is None and current_snapshot_version(path) is None:
-        return spark.read.parquet(path)
-    m = read_manifest(path, version)
-    if not m["files"]:
-        raise ValueError(f"snapshot v{m['version']} of {path} is empty")
-    return (spark.read.option("basePath", path)
-            .parquet(*[str(Path(path) / f) for f in m["files"]]))
-
-
-def gc_snapshots(path: str, keep_last: int = 2) -> dict:
-    """Drop all but the newest ``keep_last`` manifests and delete the
-    data files ONLY they referenced. Returns
-    ``{"dropped_versions": [...], "deleted_files": n}``.
-
-    Deletes nothing a kept manifest references, and nothing no manifest
-    references (an unreferenced file is a not-yet-published append, not
-    garbage). A dropped version's MANIFEST is unlinked only after all
-    the data files it alone referenced were successfully removed —
-    otherwise the manifest survives (and stays in ``dropped_versions``'
-    complement) so the stranded files remain referenced and the next
-    GC retries, instead of the next publish folding them back in as
-    duplicate rows (advisor r13). Run this once readers can no longer
-    be pinned to the dropped versions — the retention window is the
-    reader-lifetime bound, exactly Delta's VACUUM contract."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (CURRENT must survive)")
-    with _writer_lock(path):
-        # A ghost manifest (written, CURRENT never swapped — crashed
-        # writer) must not count as "newest retained": keyed on it,
-        # keep_last=1 would delete the files CURRENT serves and brick
-        # the store (advisor r13). Roll ghosts back first; retention
-        # is then anchored on the committed CURRENT.
-        _rollback_ghost_manifests(path)
-        snaps = list_snapshots(path)
-        if len(snaps) <= keep_last:
-            return {"dropped_versions": [], "deleted_files": 0}
-        drop, keep = snaps[:-keep_last], snaps[-keep_last:]
-        kept_files = set()
-        for m in keep:
-            kept_files.update(m["files"])
-        doomed = set()
-        for m in drop:
-            doomed.update(f for f in m["files"] if f not in kept_files)
-        deleted, failed = 0, set()
-        for rel in sorted(doomed):
-            p = Path(path) / rel
-            try:
-                p.unlink()
-                deleted += 1
-            except FileNotFoundError:
-                pass                       # already gone: success
-            except OSError:
-                failed.add(rel)
-        dropped_versions = []
-        for m in drop:
-            if any(f in failed for f in m["files"]):
-                continue                   # keep manifest; retry later
-            try:
-                (_manifests_root(path)
-                 / f"manifest-v{m['version']:06d}.json").unlink()
-                dropped_versions.append(m["version"])
-            except OSError:
-                pass
-        return {"dropped_versions": dropped_versions,
-                "deleted_files": deleted}
 
 
 def _compact_cells(spark: SparkSession, path: str, tmp: str, ver: int,

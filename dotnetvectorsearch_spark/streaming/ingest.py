@@ -254,7 +254,7 @@ def stream_index_append(vectors: DataFrame, index, path: str,
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         index.append(batch_df, path, vec_col)
-        from dotnetvectorsearch_spark.operators.ann_store import (
+        from dotnetvectorsearch_spark.sources.layout import (
             current_snapshot_version, publish_snapshot)
         if publish_snapshots or (publish_snapshots is None
                                  and current_snapshot_version(path)

@@ -18,6 +18,7 @@ from dotnetvectorsearch_spark.operators.ann_store import (
     INDEX_PARAMS, ensure_index, fit_index, index_health, serve_topk,
     tune_store_nprobe)
 from dotnetvectorsearch_spark.operators.retrieval_eval import metrics_from_topk
+from dotnetvectorsearch_spark.sources import layout
 from dotnetvectorsearch_spark.sources.io import load_table
 
 from registry import _collect_query_vec
@@ -288,7 +289,7 @@ def _q_ann_store_snapshots(spark, sf_dir):
     publish v1, streamed-append delta -> publish v2, compact -> v3,
     GC the oldest version — returning the snapshot LEDGER the cycle
     leaves behind (version, row count, current/retained flags, note).
-    The manifest layer (`ann_store.publish_snapshot` /
+    The manifest layer (`layout.publish_snapshot` /
     `read_store_rows` / `gc_snapshots`) is what makes maintenance
     cross-cell snapshot-consistent at 100 TB: readers pin an immutable
     file list, compaction publishes instead of deleting, and GC
@@ -314,24 +315,24 @@ def _q_ann_store_snapshots(spark, sf_dir):
         path = f"{work}/ivf"
         idx = IVFIndex(n_cells=8, nprobe=8).fit(seed, max_sample=4000)
         idx.write(seed, path)
-        ann_store.publish_snapshot(path, note="build")          # v1
+        layout.publish_snapshot(path, note="build")          # v1
         # Ledger counts come from the manifests' recorded row stats
         # (parquet footer sums written at publish time) — the
         # Iceberg-style metadata answer; a 100 TB store must not scan
         # three snapshots to count them. Parity with a full
         # read_store_rows().count() is pinned in tests/test_ann_store.
-        n1 = ann_store.snapshot_row_count(path)
+        n1 = layout.snapshot_row_count(path)
         idx.append(delta, path)
-        ann_store.publish_snapshot(path, note="append")         # v2
-        n2 = ann_store.snapshot_row_count(path)
+        layout.publish_snapshot(path, note="append")         # v2
+        n2 = layout.snapshot_row_count(path)
         ann_store.compact_index(spark, path)                    # v3
-        n3 = ann_store.snapshot_row_count(path)
+        n3 = layout.snapshot_row_count(path)
         notes = {m["version"]: m["note"]
-                 for m in ann_store.list_snapshots(path)}
-        gc = ann_store.gc_snapshots(path, keep_last=2)
+                 for m in layout.list_snapshots(path)}
+        gc = layout.gc_snapshots(path, keep_last=2)
         retained = {m["version"]
-                    for m in ann_store.list_snapshots(path)}
-        cur = ann_store.current_snapshot_version(path)
+                    for m in layout.list_snapshots(path)}
+        cur = layout.current_snapshot_version(path)
         assert gc["dropped_versions"] == [1] and cur == 3
         rows = [(v, n, int(v == cur), int(v in retained), notes[v])
                 for v, n in ((1, n1), (2, n2), (3, n3))]

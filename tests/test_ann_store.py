@@ -15,6 +15,7 @@ import pytest
 from dotnetvectorsearch_spark.operators import ann_store
 from dotnetvectorsearch_spark.operators.ann import (
     IVFIndex, IVFPQIndex, PQIndex)
+from dotnetvectorsearch_spark.sources import layout
 from dotnetvectorsearch_spark.sources.io import load_table
 
 
@@ -385,7 +386,7 @@ def test_index_health_and_compact(spark, sf_dir, tmp_path):
     assert all(r.n_rows > 0 for r in rows)
     path = ann_store.index_path(sf_dir, "ivf", root)
     # ensure_index published the build snapshot
-    assert ann_store.current_snapshot_version(path) == 1
+    assert layout.current_snapshot_version(path) == 1
     # simulate 9 streamed append triggers: small files pile up per
     # cell; each append PUBLISHES (the managed-store append contract)
     idx, _ = IVFIndex.read(spark, path)
@@ -394,8 +395,8 @@ def test_index_health_and_compact(spark, sf_dir, tmp_path):
     for i in range(9):
         (idx.transform(emb)
          .write.mode("append").partitionBy("cell").parquet(path))
-        ann_store.publish_snapshot(path, note=f"append {i}")
-    assert ann_store.current_snapshot_version(path) == 10
+        layout.publish_snapshot(path, note=f"append {i}")
+    assert layout.current_snapshot_version(path) == 10
     frag = ann_store.index_health(spark, sf_dir, "ivf", root=root)
     assert any(r.fragmented for r in frag.collect())
     # search parity: same query before/after compaction (duplicates
@@ -406,10 +407,10 @@ def test_index_health_and_compact(spark, sf_dir, tmp_path):
         i2, _ = IVFIndex.read(spark, path)
         return [(r.vec_id, r.similarity)
                 for r in i2.search(
-                    ann_store.read_store_rows(spark, path),
+                    layout.read_store_rows(spark, path),
                     qv, k=15).collect()]
     want = _topk()
-    pre_disk = len(ann_store._data_files(path))
+    pre_disk = len(layout._data_files(path))
     n = ann_store.compact_index(spark, path)
     assert n > 0
     assert _topk() == want
@@ -419,11 +420,11 @@ def test_index_health_and_compact(spark, sf_dir, tmp_path):
     assert all(not r.fragmented for r in arows)
     # nothing deleted yet: retired files coexist with compacted ones
     # (readers pinned to older snapshots stay consistent) ...
-    assert len(ann_store._data_files(path)) == pre_disk + n
+    assert len(layout._data_files(path)) == pre_disk + n
     # ... until GC drops the old snapshots and ONLY their files
-    gc = ann_store.gc_snapshots(path, keep_last=1)
+    gc = layout.gc_snapshots(path, keep_last=1)
     assert gc["deleted_files"] == pre_disk
-    assert len(ann_store._data_files(path)) == n
+    assert len(layout._data_files(path)) == n
     assert _topk() == want
 
 
@@ -435,7 +436,7 @@ def _append_sliver(spark, sf_dir, path):
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
     idx.append(emb.filter("vec_id % 7 = 3"), path)
-    ann_store.publish_snapshot(path, note="sliver")
+    layout.publish_snapshot(path, note="sliver")
 
 
 def test_noop_compaction_publishes_nothing(spark, sf_dir, tmp_path):
@@ -445,12 +446,12 @@ def test_noop_compaction_publishes_nothing(spark, sf_dir, tmp_path):
     path, _ = ann_store.ensure_index(spark, sf_dir, "ivf",
                                      root=str(tmp_path / "store"))
     ann_store.compact_index(spark, path)   # whatever the build left
-    before = ann_store.list_snapshots(path)
-    current = ann_store.current_snapshot_version(path)
+    before = layout.list_snapshots(path)
+    current = layout.current_snapshot_version(path)
     assert ann_store.compact_index(spark, path) == 0
     assert ann_store.compact_index(spark, path) == 0
-    assert ann_store.list_snapshots(path) == before
-    assert ann_store.current_snapshot_version(path) == current
+    assert layout.list_snapshots(path) == before
+    assert layout.current_snapshot_version(path) == current
 
 
 def test_snapshot_time_travel_and_isolation(spark, sf_dir, tmp_path):
@@ -461,7 +462,7 @@ def test_snapshot_time_travel_and_isolation(spark, sf_dir, tmp_path):
     root = str(tmp_path / "store")
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
-    n0 = ann_store.read_store_rows(spark, path).count()
+    n0 = layout.read_store_rows(spark, path).count()
     assert n0 > 0
     idx, _ = IVFIndex.read(spark, path)
     emb = load_table(spark, sf_dir, "embeddings") \
@@ -471,26 +472,26 @@ def test_snapshot_time_travel_and_isolation(spark, sf_dir, tmp_path):
     (idx.transform(sliver)
      .write.mode("append").partitionBy("cell").parquet(path))
     # unpublished appends are invisible to snapshot readers
-    assert ann_store.read_store_rows(spark, path).count() == n0
-    v2 = ann_store.publish_snapshot(path, note="sliver")
+    assert layout.read_store_rows(spark, path).count() == n0
+    v2 = layout.publish_snapshot(path, note="sliver")
     assert v2 == 2
-    assert ann_store.read_store_rows(spark, path).count() == n0 + n_add
+    assert layout.read_store_rows(spark, path).count() == n0 + n_add
     # time travel: v1 still reads the pre-append rowset, bit-exact ids
-    old = ann_store.read_store_rows(spark, path, version=1)
+    old = layout.read_store_rows(spark, path, version=1)
     assert old.count() == n0
     assert old.select("vec_id").distinct().count() == n0
     # the cell partition column survives the explicit-file-list read
     assert "cell" in old.columns
     # compaction publishes v3; v1/v2 remain resolvable until GC
     ann_store.compact_index(spark, path)
-    assert ann_store.current_snapshot_version(path) == 3
-    assert ann_store.read_store_rows(spark, path).count() == n0 + n_add
-    assert ann_store.read_store_rows(spark, path, version=1).count() == n0
-    gc = ann_store.gc_snapshots(path, keep_last=1)
+    assert layout.current_snapshot_version(path) == 3
+    assert layout.read_store_rows(spark, path).count() == n0 + n_add
+    assert layout.read_store_rows(spark, path, version=1).count() == n0
+    gc = layout.gc_snapshots(path, keep_last=1)
     assert gc["dropped_versions"] == [1, 2]
     with pytest.raises(FileNotFoundError):
-        ann_store.read_manifest(path, version=1)
-    assert ann_store.read_store_rows(spark, path).count() == n0 + n_add
+        layout.read_manifest(path, version=1)
+    assert layout.read_store_rows(spark, path).count() == n0 + n_add
 
 
 def test_snapshot_row_count_matches_full_scan(spark, sf_dir, tmp_path):
@@ -507,15 +508,15 @@ def test_snapshot_row_count_matches_full_scan(spark, sf_dir, tmp_path):
     sliver = emb.filter("vec_id % 7 = 3")
     (idx.transform(sliver)
      .write.mode("append").partitionBy("cell").parquet(path))
-    ann_store.publish_snapshot(path, note="sliver")
+    layout.publish_snapshot(path, note="sliver")
     ann_store.compact_index(spark, path)
     for v in (1, 2, 3):
-        assert (ann_store.snapshot_row_count(path, version=v)
-                == ann_store.read_store_rows(spark, path, version=v)
+        assert (layout.snapshot_row_count(path, version=v)
+                == layout.read_store_rows(spark, path, version=v)
                 .count())
     # default = CURRENT
-    assert (ann_store.snapshot_row_count(path)
-            == ann_store.read_store_rows(spark, path).count())
+    assert (layout.snapshot_row_count(path)
+            == layout.read_store_rows(spark, path).count())
 
 
 def test_snapshot_publish_excludes_retired_files(spark, sf_dir,
@@ -527,14 +528,14 @@ def test_snapshot_publish_excludes_retired_files(spark, sf_dir,
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
     _append_sliver(spark, sf_dir, path)           # v2: multi-file cells
-    n0 = ann_store.read_store_rows(spark, path).count()
+    n0 = layout.read_store_rows(spark, path).count()
     ann_store.compact_index(spark, path)          # v3, retired files remain
-    v = ann_store.publish_snapshot(path, note="no-op publish")
+    v = layout.publish_snapshot(path, note="no-op publish")
     assert v == 4
-    assert ann_store.read_store_rows(spark, path).count() == n0
+    assert layout.read_store_rows(spark, path).count() == n0
     # and the no-op snapshot references exactly the compacted files
-    assert (ann_store.read_manifest(path, 4)["files"]
-            == ann_store.read_manifest(path, 3)["files"])
+    assert (layout.read_manifest(path, 4)["files"]
+            == layout.read_manifest(path, 3)["files"])
 
 
 def test_unmanaged_store_falls_back_to_directory_read(spark, sf_dir,
@@ -547,17 +548,17 @@ def test_unmanaged_store_falls_back_to_directory_read(spark, sf_dir,
     idx = IVFIndex(n_cells=4, nprobe=4).fit(emb)
     path = str(tmp_path / "bare")
     idx.write(emb, path)
-    assert ann_store.current_snapshot_version(path) is None
+    assert layout.current_snapshot_version(path) is None
     n = emb.count()
-    assert ann_store.read_store_rows(spark, path).count() == n
+    assert layout.read_store_rows(spark, path).count() == n
     assert ann_store.compact_index(spark, path) > 0
-    assert ann_store.read_store_rows(spark, path).count() == n
-    assert ann_store.current_snapshot_version(path) is None
+    assert layout.read_store_rows(spark, path).count() == n
+    assert layout.current_snapshot_version(path) is None
 
 
 def test_gc_keep_last_must_retain_current():
     with pytest.raises(ValueError):
-        ann_store.gc_snapshots("/nonexistent", keep_last=0)
+        layout.gc_snapshots("/nonexistent", keep_last=0)
 
 
 def test_stream_index_append_publishes_snapshots(spark, sf_dir,
@@ -591,9 +592,9 @@ def test_stream_index_append_publishes_snapshots(spark, sf_dir,
         q.processAllAvailable()
     finally:
         q.stop()
-    snaps = ann_store.list_snapshots(path)
+    snaps = layout.list_snapshots(path)
     assert len(snaps) >= 1
-    assert (ann_store.read_store_rows(spark, path).count()
+    assert (layout.read_store_rows(spark, path).count()
             == first.count() + second.count())
 
 
@@ -607,7 +608,7 @@ def test_writer_lock_mutual_exclusion(tmp_path):
     store = tmp_path / "s"
     store.mkdir()
     lock_path = store / "_manifests" / "LOCK"
-    with ann_store._writer_lock(str(store)):
+    with layout._writer_lock(str(store)):
         assert lock_path.exists()
         with open(lock_path, "w") as probe:
             with pytest.raises(OSError):
@@ -631,7 +632,7 @@ def test_serve_topk_time_travel(spark, sf_dir, tmp_path, qv):
         .select("vec_id", "embedding")
     (idx.transform(emb.filter("vec_id % 11 = 5"))
      .write.mode("append").partitionBy("cell").parquet(path))
-    ann_store.publish_snapshot(path, note="append")
+    layout.publish_snapshot(path, note="append")
     pinned = [(r.vec_id, r.similarity) for r in
               ann_store.serve_topk(spark, sf_dir, "ivf", qv, k=10,
                                    root=root, version=1).collect()]
@@ -651,17 +652,17 @@ def test_publish_deletes_crashed_compaction_debris(spark, sf_dir,
     root = str(tmp_path / "store")
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
-    n0 = ann_store.read_store_rows(spark, path).count()
+    n0 = layout.read_store_rows(spark, path).count()
     # fake the debris: copy a live file under a compaction name
-    live = ann_store._data_files(path)[0]
+    live = layout._data_files(path)[0]
     cell_dir = (Path(path) / live).parent
     debris = cell_dir / "compact-v000099-0000.parquet"
     shutil.copy(Path(path) / live, debris)
-    v = ann_store.publish_snapshot(path, note="post-crash publish")
+    v = layout.publish_snapshot(path, note="post-crash publish")
     assert not debris.exists()
-    assert ann_store.read_store_rows(spark, path).count() == n0
+    assert layout.read_store_rows(spark, path).count() == n0
     assert all(not Path(f).name.startswith("compact-v")
-               for f in ann_store.read_manifest(path, v)["files"])
+               for f in layout.read_manifest(path, v)["files"])
 
 
 def test_gc_keeps_manifest_when_file_unlink_fails(spark, sf_dir,
@@ -680,10 +681,10 @@ def test_gc_keeps_manifest_when_file_unlink_fails(spark, sf_dir,
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
     idx.append(emb.filter("vec_id % 3 = 1"), path)
-    ann_store.publish_snapshot(path, note="sliver")   # v2
+    layout.publish_snapshot(path, note="sliver")   # v2
     ann_store.compact_index(spark, path)          # v3; v1/v2 retired
-    cur_files = set(ann_store.read_manifest(path)["files"])
-    v1_files = ann_store.read_manifest(path, 1)["files"]
+    cur_files = set(layout.read_manifest(path)["files"])
+    v1_files = layout.read_manifest(path, 1)["files"]
     retired = [f for f in v1_files if f not in cur_files]
     assert retired, "compaction must retire at least one v1 file"
     target = Path(retired[0]).name
@@ -695,16 +696,16 @@ def test_gc_keeps_manifest_when_file_unlink_fails(spark, sf_dir,
         return real_unlink(self, *a, **k)
 
     monkeypatch.setattr(Path, "unlink", flaky_unlink)
-    gc = ann_store.gc_snapshots(path, keep_last=1)
+    gc = layout.gc_snapshots(path, keep_last=1)
     assert 1 not in gc["dropped_versions"]        # v1 survived
     assert (Path(path) / retired[0]).exists()
-    assert ann_store.read_manifest(path, 1)["files"] == v1_files
+    assert layout.read_manifest(path, 1)["files"] == v1_files
     monkeypatch.setattr(Path, "unlink", real_unlink)
-    gc2 = ann_store.gc_snapshots(path, keep_last=1)   # retry succeeds
+    gc2 = layout.gc_snapshots(path, keep_last=1)   # retry succeeds
     assert 1 in gc2["dropped_versions"]
     assert not (Path(path) / retired[0]).exists()
     # the current snapshot is intact after the retried GC
-    assert (ann_store.read_store_rows(spark, path).count()
+    assert (layout.read_store_rows(spark, path).count()
             == emb.count() + emb.filter("vec_id % 3 = 1").count())
 
 
@@ -718,15 +719,15 @@ def test_manifests_carry_referenced_union(spark, sf_dir, tmp_path):
     path = ann_store.index_path(sf_dir, "ivf", root)
     _append_sliver(spark, sf_dir, path)           # v2: multi-file cells
     ann_store.compact_index(spark, path)          # v3
-    m1 = ann_store.read_manifest(path, 2)
-    m2 = ann_store.read_manifest(path, 3)
+    m1 = layout.read_manifest(path, 2)
+    m2 = layout.read_manifest(path, 3)
     assert set(m1["files"]) <= set(m1["referenced_union"])
     # pre-GC: retired v2 files are on disk, so the union carries both
     assert (set(m1["referenced_union"]) | set(m2["files"])
             == set(m2["referenced_union"]))
-    ann_store.gc_snapshots(path, keep_last=1)     # v2 files deleted
-    v4 = ann_store.publish_snapshot(path, note="post-gc")
-    m3 = ann_store.read_manifest(path, v4)
+    layout.gc_snapshots(path, keep_last=1)     # v2 files deleted
+    v4 = layout.publish_snapshot(path, note="post-gc")
+    m3 = layout.read_manifest(path, v4)
     assert set(m3["referenced_union"]) == set(m2["files"])
     assert not (set(m1["files"]) - set(m2["files"])) \
         & set(m3["referenced_union"])
@@ -795,28 +796,28 @@ def test_ghost_manifest_rolled_back_not_trusted(spark, sf_dir,
     root = str(tmp_path / "store")
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
-    n0 = ann_store.read_store_rows(spark, path).count()
+    n0 = layout.read_store_rows(spark, path).count()
     # simulate the crash window: manifest v2 exists (referencing a
     # nonexistent compacted file), CURRENT still says 1
-    ghost = ann_store._manifests_root(path) / "manifest-v000002.json"
+    ghost = layout._manifests_root(path) / "manifest-v000002.json"
     ghost.write_text(_json.dumps(
         {"version": 2, "files": ["cell=0/compact-v000002-0000.parquet"],
          "n_files": 1, "note": "crashed compaction",
          "referenced_union": ["cell=0/compact-v000002-0000.parquet"]}))
-    assert ann_store.current_snapshot_version(path) == 1
-    gc = ann_store.gc_snapshots(path, keep_last=1)
+    assert layout.current_snapshot_version(path) == 1
+    gc = layout.gc_snapshots(path, keep_last=1)
     # the ghost must have been rolled back, NOT treated as newest:
     # v1 (CURRENT) survives with all its files
     assert gc["dropped_versions"] == []
     assert not ghost.exists()
-    assert ann_store.read_store_rows(spark, path).count() == n0
+    assert layout.read_store_rows(spark, path).count() == n0
     # and a publish after the same crash window also rolls back
     ghost.write_text(_json.dumps(
         {"version": 2, "files": [], "n_files": 0, "note": "crash",
          "referenced_union": []}))
-    v = ann_store.publish_snapshot(path, note="after crash")
+    v = layout.publish_snapshot(path, note="after crash")
     assert v == 2  # overwrote the ghost's slot with a real snapshot
-    assert ann_store.read_store_rows(spark, path).count() == n0
+    assert layout.read_store_rows(spark, path).count() == n0
 
 
 def test_stream_append_auto_publishes_on_managed_store(spark, sf_dir,
@@ -832,7 +833,7 @@ def test_stream_append_auto_publishes_on_managed_store(spark, sf_dir,
     root = str(tmp_path / "root")
     ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
     path = ann_store.index_path(sf_dir, "ivf", root)
-    n0 = ann_store.read_store_rows(spark, path).count()
+    n0 = layout.read_store_rows(spark, path).count()
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
     batch = emb.filter(F.col("vec_id") % 13 == 4)
@@ -849,9 +850,9 @@ def test_stream_append_auto_publishes_on_managed_store(spark, sf_dir,
         q.processAllAvailable()
     finally:
         q.stop()
-    assert (ann_store.read_store_rows(spark, path).count()
+    assert (layout.read_store_rows(spark, path).count()
             == n0 + n_add)
-    assert ann_store.current_snapshot_version(path) == 2
+    assert layout.current_snapshot_version(path) == 2
 
 
 def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
@@ -868,16 +869,16 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
 
     def cycle(path):
         idx.write(seed, path)
-        ann_store.publish_snapshot(path, note="build")
-        n1 = ann_store.snapshot_row_count(path)
+        layout.publish_snapshot(path, note="build")
+        n1 = layout.snapshot_row_count(path)
         idx.append(delta, path)
-        ann_store.publish_snapshot(path, note="append")
-        n2 = ann_store.snapshot_row_count(path)
+        layout.publish_snapshot(path, note="append")
+        n2 = layout.snapshot_row_count(path)
         ncells = ann_store.compact_index(spark, path)
-        n3 = ann_store.snapshot_row_count(path)
+        n3 = layout.snapshot_row_count(path)
         rows = sorted(
             (r.vec_id, r.cell, tuple(r.embedding))
-            for r in ann_store.read_store_rows(spark, path).collect())
+            for r in layout.read_store_rows(spark, path).collect())
         i2, frame = IVFIndex.read(spark, path)
         qv = emb.filter("vec_id = 3").collect()[0].embedding
         top = [(r.vec_id, r.similarity)
@@ -903,22 +904,22 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
     # single-file cells are referenced unchanged by compaction
     path3 = str(tmp_path / "mixed")
     idx.write(seed, path3)
-    ann_store.publish_snapshot(path3, note="build")
+    layout.publish_snapshot(path3, note="build")
     one_cell = idx.transform(delta).filter("cell = 0").drop("cell")
     idx.append(one_cell, f"{path3}")  # lands only in its cells
-    ann_store.publish_snapshot(path3, note="delta")
-    before = ann_store.read_manifest(path3)["files"]
+    layout.publish_snapshot(path3, note="delta")
+    before = layout.read_manifest(path3)["files"]
     single_cells = {f.split("/", 1)[0] for f in before}
     multi = {c for c in single_cells
              if sum(x.startswith(c + "/") for x in before) > 1}
     n = ann_store.compact_index(spark, path3)
-    after = ann_store.read_manifest(path3)["files"]
+    after = layout.read_manifest(path3)["files"]
     assert n == len(multi)
     kept = [f for f in before
             if f.split("/", 1)[0] not in multi]
     assert set(kept) <= set(after)
-    assert (ann_store.snapshot_row_count(path3)
-            == ann_store.read_store_rows(spark, path3).count())
+    assert (layout.snapshot_row_count(path3)
+            == layout.read_store_rows(spark, path3).count())
 
 
 def test_driver_write_stores_null_ids_and_builds_before_delete(
