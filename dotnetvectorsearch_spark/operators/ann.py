@@ -38,6 +38,8 @@ from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.localdf import local_df
 from dotnetvectorsearch_spark.operators.search import (
     _panel, _rank_window, _scan_topk, top_k_similar)
+from dotnetvectorsearch_spark.sources.layout import (
+    publish_snapshot, read_store_rows)
 
 
 # Default training-sample size of the k-means / codebook fits.
@@ -302,10 +304,11 @@ class IVFIndex:
         """Materialize the index partitioned by cell: a query's probe set
         becomes Parquet partition pruning (reads nprobe/n_cells of data).
         Centroids land in ``path/_centroids`` — the underscore prefix
-        keeps Spark's data-file listing from seeing them, so
-        ``spark.read.parquet(path)`` still returns only rows while
+        keeps Spark's data-file listing from seeing them — so
         :meth:`read` can restore a probe-ready index in a NEW session
-        (the switching-user persistence contract).
+        (the switching-user persistence contract). Once cells and
+        centroids have landed, snapshot v1 (note ``"build"``) is
+        published (``sources.layout.publish_snapshot``).
 
         Small local inputs (within ``localdf.DRIVER_BYTES``) take a
         bounded driver fast path: one sizing job and one Arrow collect
@@ -316,13 +319,15 @@ class IVFIndex:
             self.transform(emb, vec_col).write.mode("overwrite") \
                 .partitionBy("cell").parquet(path)
         self._write_centroids(emb.sparkSession, path)
+        publish_snapshot(path, note="build")
 
     def append(self, emb: DataFrame, path: str,
                vec_col: str = "embedding") -> None:
         """Append rows to an already-written index, landing each row in
         its cell partition dir (the streamed-delta shape). Same bounded
         driver fast path / distributed fallback split as :meth:`write`;
-        trained state is never touched."""
+        trained state is never touched. The rows become visible to
+        :meth:`read` once ``sources.layout.publish_snapshot`` runs."""
         if not self._write_cells_local(emb, path, vec_col, "append"):
             self.transform(emb, vec_col).write.mode("append") \
                 .partitionBy("cell").parquet(path)
@@ -384,16 +389,18 @@ class IVFIndex:
                      [self.centroids], self.nprobe, self.seed)
 
     @classmethod
-    def read(cls, spark, path: str) -> tuple["IVFIndex", DataFrame]:
+    def read(cls, spark, path: str, version: int | None = None
+             ) -> tuple["IVFIndex", DataFrame]:
         """Reload a written index: (probe-ready index, indexed rows).
-        The rows frame is the partitioned parquet — `search` on it still
+        The rows are snapshot ``version``'s files (default CURRENT,
+        ``sources.layout.read_store_rows``) — `search` on them still
         prunes to the probe cells."""
         rows, (cent,) = _read_state(spark, f"{path}/_centroids",
                                     ("cell",), "centroid")
         idx = cls(n_cells=len(rows), nprobe=rows[0].nprobe,
                   seed=rows[0].seed)
         idx.centroids = cent
-        return idx, spark.read.parquet(path)
+        return idx, read_store_rows(spark, path, version)
 
     def cell_order(self, query_vec: list[float]) -> np.ndarray:
         """Every cell, nearest centroid (by cosine) to the query first:
@@ -815,7 +822,8 @@ class IVFPQIndex:
         state (coarse centroids, residual bases, PQ codebooks, coding
         mode) lands under ``path/_meta`` — underscore-prefixed so data
         scans never see it — making :meth:`read` restore a search-ready
-        index in a new session."""
+        index in a new session. Then snapshot v1 (note ``"build"``) is
+        published, as for :meth:`IVFIndex.write`."""
         (self.transform(emb.select(id_col, vec_col), vec_col)
          .drop(vec_col).write.mode("overwrite")
          .partitionBy("cell").parquet(path))
@@ -827,12 +835,15 @@ class IVFPQIndex:
         _write_state(spark, f"{path}/_meta/params",
                      "coding string, nprobe int, seed int", [],
                      self.coding, self.ivf.nprobe, self.pq.seed)
+        publish_snapshot(path, note="build")
 
     @classmethod
-    def read(cls, spark, path: str) -> tuple["IVFPQIndex", DataFrame]:
-        """Reload a written index: (search-ready index, indexed rows).
-        Pair with the original float-vector table for the rescore
-        stage, exactly as after a fresh fit."""
+    def read(cls, spark, path: str, version: int | None = None
+             ) -> tuple["IVFPQIndex", DataFrame]:
+        """Reload a written index: (search-ready index, snapshot
+        ``version``'s rows, default CURRENT). Pair with the original
+        float-vector table for the rescore stage, exactly as after a
+        fresh fit."""
         (params,), _ = _read_state(spark, f"{path}/_meta/params", ())
         _, (cent, means) = _read_state(spark, f"{path}/_meta/cells",
                                        ("cell",), "centroid", "cell_mean")
@@ -842,7 +853,7 @@ class IVFPQIndex:
                   coding=params.coding)
         idx.ivf.centroids, idx.cell_means = cent, means
         idx.pq.codebooks = pq.codebooks
-        return idx, spark.read.parquet(path)
+        return idx, read_store_rows(spark, path, version)
 
     def search(self, indexed: DataFrame, query_vec: list[float],
                k: int = 5, id_col: str = "vec_id",

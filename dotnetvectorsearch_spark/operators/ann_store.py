@@ -43,10 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import localdf
 from ..caching import _input_fingerprint
 from ..sources.io import load_table
-from ..sources.layout import (  # noqa: F401 -- perfbench's names re-exported
+from ..sources.layout import (
     _rollback_ghost_manifests, _write_manifest, _writer_lock,
-    current_snapshot_version, gc_snapshots, list_snapshots,
-    publish_snapshot, read_manifest, read_store_rows, snapshot_row_count)
+    current_snapshot_version, read_manifest, read_store_rows)
+# Re-exported for perfbench/workloads.py, which calls them through
+# this module; everything else imports them from sources.layout.
+from ..sources.layout import (  # noqa: F401
+    gc_snapshots, list_snapshots, publish_snapshot, snapshot_row_count)
 from .ann import IVFIndex, IVFPQIndex, PQIndex, _adc
 from .search import round6_half_up
 
@@ -133,7 +136,8 @@ def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
                  root: str | None = None,
                  force: bool = False) -> tuple[str, bool]:
     """Build the persisted ``kind`` index for ``sf_dir`` iff missing or
-    stale (input files or params changed). Returns (path, built)."""
+    stale (input files or params changed, or an ivf/ivfpq store with no
+    CURRENT snapshot). Returns (path, built)."""
     if kind not in INDEX_PARAMS:
         raise ValueError(f"unknown index kind {kind!r}; "
                          f"expected one of {sorted(INDEX_PARAMS)}")
@@ -141,19 +145,15 @@ def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
     fp = _store_fingerprint(_input_fingerprint(emb),
                            params=INDEX_PARAMS[kind])
     path = index_path(sf_dir, kind, root)
-    if not force and _is_fresh(path, fp):
+    # a cell store without CURRENT cannot be read, so it is stale
+    if (not force and _is_fresh(path, fp)
+            and (kind == "pq" or current_snapshot_version(path) is not None)):
         return path, False
     fit_index(emb, kind).write(emb, path)
     # Stamp AFTER a successful write: a failed build leaves no marker,
     # so the next ensure_index retries instead of serving half an index.
     _write_marker(path, {"fingerprint": fp, "kind": kind,
                          "params": INDEX_PARAMS[kind]})
-    # Cell-partitioned stores are snapshot-managed from birth: publish
-    # v1 so appends/compactions version against it. (The overwrite in
-    # write wiped any prior _manifests with the old files — correct,
-    # since those snapshots' files no longer exist.)
-    if kind in ("ivf", "ivfpq"):
-        publish_snapshot(path, note="build")
     return path, True
 
 
@@ -302,10 +302,10 @@ def index_health(spark: SparkSession, sf_dir: str, kind: str = "ivf",
 
     if path is None:
         path, _ = ensure_index(spark, sf_dir, kind, root)
-    # Snapshot-consistent when the store is manifest-managed: health
-    # reads what a SERVE would read, so a compacted-but-not-yet-GC'd
-    # store correctly reports 1 file/cell (retired files awaiting
-    # gc_snapshots are invisible to the snapshot, and to serves).
+    # Snapshot-consistent: health reads what a SERVE would read, so a
+    # compacted-but-not-yet-GC'd store correctly reports 1 file/cell
+    # (retired files awaiting gc_snapshots are invisible to the
+    # snapshot, and to serves).
     rows = read_store_rows(spark, path)
     # input_file_name is nondeterministic, so it must be projected as
     # a column BEFORE the aggregate (Catalyst rejects it inside one)
@@ -410,10 +410,7 @@ def compact_index(spark: SparkSession, path: str) -> int:
     trigger; this restores per-cell scan efficiency without touching
     trained state). Returns the number of cell partitions rewritten.
 
-    Two modes, chosen by whether the store carries snapshot manifests:
-
-    **Manifest mode** (store has a CURRENT snapshot — the managed
-    path): compact ONLY the cells whose CURRENT snapshot holds more
+    Compacts ONLY the cells whose CURRENT snapshot holds more
     than one file (the Iceberg binpack rule — a maintenance pass after
     a streamed delta rewrites the touched cells, not the store);
     already-compact cells are referenced unchanged. Rewrites land as
@@ -428,65 +425,40 @@ def compact_index(spark: SparkSession, path: str) -> int:
     cells driver-side with pyarrow (zero Spark jobs, see
     :func:`_compact_cells`); bigger ones rewrite distributed.
 
-    **Legacy mode** (no manifests): the r12 dir-swap — rewrite through
-    a sibling temp dir and swap the ``cell=*`` partition dirs ONE CELL
-    AT A TIME (retire the old dir into the temp area, move the new dir
-    in, only then discard the old), so every cell dir a reader can
-    list is a complete old or complete new copy. Honest residual (the
-    reason manifest mode exists): the two renames per cell are not one
-    atomic op, so a concurrent reader can transiently miss AT MOST the
-    single cell mid-swap — legacy mode assumes the single-writer
-    maintenance window.
-
-    In both modes the underscore-prefixed trained state
-    (``_centroids`` / ``_meta`` / the fingerprint marker) is never
-    touched, ``repartition("cell")`` puts every row of a cell in one
-    task so partitionBy emits exactly one file per cell, and search
-    results are unaffected — same rows, same trained state (pinned in
-    tests/test_ann_store.py)."""
+    The underscore-prefixed trained state (``_centroids`` / ``_meta`` /
+    the fingerprint marker) is never touched, ``repartition("cell")``
+    puts every row of a cell in one task so partitionBy emits exactly
+    one file per cell, and search results are unaffected — same rows,
+    same trained state (pinned in tests/test_ann_store.py). Raises
+    FileNotFoundError for a store with no CURRENT snapshot."""
     import shutil
-    from pathlib import Path as _P
 
     tmp = f"{path.rstrip('/')}__compact_tmp"
     n = 0
-    if current_snapshot_version(path) is not None:
-        # manifest mode: the writer lock spans snapshot-resolve ->
-        # rewrite -> publish, so concurrent publishers can't race
-        # version allocation or collide on the shared tmp dir
-        with _writer_lock(path):
-            _rollback_ghost_manifests(path)
-            ver = current_snapshot_version(path)
-            m = read_manifest(path, ver)
-            # Compact only the cells that NEED it (more than one live
-            # file in the CURRENT snapshot) — the Iceberg binpack rule.
-            # Already-compact cells are referenced unchanged in the new
-            # manifest: at scale a maintenance pass after a streamed
-            # delta must rewrite the touched cells, not the store.
-            by_cell: dict[str, list[str]] = {}
-            for rel in m["files"]:
-                by_cell.setdefault(rel.split("/", 1)[0], []).append(rel)
-            new_files: list[str] = [rels[0] for rels in by_cell.values()
-                                    if len(rels) == 1]
-            multi = {c: sorted(rels) for c, rels in by_cell.items()
-                     if len(rels) > 1}
-            # nothing to compact publishes nothing: a no-op pass must not
-            # burn a snapshot version or shift the gc keep-window
-            if multi:
-                n += _compact_cells(spark, path, tmp, ver, multi,
-                                    new_files)
-                _write_manifest(path, new_files,
-                                note=f"compaction of v{ver}")
-    else:
-        (spark.read.parquet(path).repartition("cell")
-         .write.partitionBy("cell").mode("overwrite").parquet(tmp))
-        for d in _P(tmp).glob("cell=*"):
-            dst = _P(path) / d.name
-            retired = _P(tmp) / f"_retired_{d.name}"
-            if dst.exists():
-                # retire OUTSIDE path so listings never see a stray dir
-                shutil.move(str(dst), str(retired))
-            shutil.move(str(d), str(dst))
-            n += 1
+    # the writer lock spans snapshot-resolve -> rewrite -> publish, so
+    # concurrent publishers can't race version allocation or collide on
+    # the shared tmp dir
+    with _writer_lock(path):
+        _rollback_ghost_manifests(path)
+        m = read_manifest(path)
+        ver = m["version"]
+        # Compact only the cells that NEED it (more than one live file
+        # in the CURRENT snapshot) — the Iceberg binpack rule.
+        # Already-compact cells are referenced unchanged in the new
+        # manifest: at scale a maintenance pass after a streamed delta
+        # must rewrite the touched cells, not the store.
+        by_cell: dict[str, list[str]] = {}
+        for rel in m["files"]:
+            by_cell.setdefault(rel.split("/", 1)[0], []).append(rel)
+        new_files: list[str] = [rels[0] for rels in by_cell.values()
+                                if len(rels) == 1]
+        multi = {c: sorted(rels) for c, rels in by_cell.items()
+                 if len(rels) > 1}
+        # nothing to compact publishes nothing: a no-op pass must not
+        # burn a snapshot version or shift the gc keep-window
+        if multi:
+            n = _compact_cells(spark, path, tmp, ver, multi, new_files)
+            _write_manifest(path, new_files, note=f"compaction of v{ver}")
     shutil.rmtree(tmp, ignore_errors=True)
     return n
 
@@ -677,17 +649,15 @@ def tune_store_nprobe(spark: SparkSession, sf_dir: str, kind: str,
     if panel is None:
         panel = [(r.vec_id, list(r.embedding)) for r in
                  emb.filter(F.col("vec_id") % 25 == 7).collect()]
+    # tune on the snapshot the serve path reads
     if kind == "ivf":
-        idx, _ = IVFIndex.read(spark, path)
-        # tune on the SNAPSHOT the serve path reads (identical on a
-        # just-built store; diverges only mid-maintenance)
-        chosen, curve = choose_nprobe(idx, read_store_rows(spark, path),
-                                      panel,
+        idx, rows = IVFIndex.read(spark, path)
+        chosen, curve = choose_nprobe(idx, rows, panel,
                                       target_recall=target_recall, k=k)
     else:
-        idx, _ = IVFPQIndex.read(spark, path)
+        idx, rows = IVFPQIndex.read(spark, path)
         chosen, curve = choose_nprobe_ivfpq(
-            idx, read_store_rows(spark, path), emb, panel,
+            idx, rows, emb, panel,
             target_recall=target_recall, k=k, shortlist=shortlist)
     meta = read_store_meta(path)
     meta["tuned"] = {
@@ -743,21 +713,19 @@ def serve_topk(spark: SparkSession, sf_dir: str, kind: str,
         if tuned and tuned.get("nprobe") is not None:
             nprobe = int(tuned["nprobe"])
     if kind == "ivf":
-        idx, _ = IVFIndex.read(spark, path)
+        # snapshot-consistent rows: a concurrent compaction/GC never
+        # changes what this query scans
+        idx, rows = IVFIndex.read(spark, path, version)
         if nprobe is not None:
             idx.nprobe = nprobe
-        # snapshot-consistent rows: a concurrent compaction/GC never
-        # changes what this query scans (falls back to the directory
-        # read on pre-manifest stores)
-        return idx.search(read_store_rows(spark, path, version),
-                          query_vec, k=k)
+        return idx.search(rows, query_vec, k=k)
     emb = load_table(spark, sf_dir, "embeddings")
     if kind == "pq":
         idx, codes = PQIndex.read(spark, path)
         return idx.search(codes, query_vec, k, rescore=emb,
                           shortlist=shortlist)
-    idx, _ = IVFPQIndex.read(spark, path)
+    idx, rows = IVFPQIndex.read(spark, path, version)
     if nprobe is not None:
         idx.ivf.nprobe = nprobe
-    return idx.search(read_store_rows(spark, path, version), query_vec,
-                      k, rescore=emb, shortlist=shortlist)
+    return idx.search(rows, query_vec, k, rescore=emb,
+                      shortlist=shortlist)

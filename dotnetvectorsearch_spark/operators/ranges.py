@@ -5,7 +5,7 @@ equi-key, so Spark plans BroadcastNestedLoopJoin — O(N*M) compares, dead
 at scale unless one side is tiny. The distributed fix: quantize intervals
 into fixed-width buckets, explode each interval to the buckets it spans,
 and equi-join points on bucket id before the exact BETWEEN filter. The
-shuffle key becomes the bucket, compares become O(N + M * span/width).
+join key becomes the bucket, compares become O(N + M * span/width).
 """
 
 from __future__ import annotations
@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 def interval_join(points: DataFrame, intervals: DataFrame,
                   point_col: str, lo_col: str, hi_col: str,
                   bucket_width: float,
-                  domain: tuple[float, float] | None = None,
-                  broadcast_intervals: bool = True) -> DataFrame:
+                  domain: tuple[float, float] | None = None) -> DataFrame:
     """Join each point row to every interval containing it (inclusive).
 
     `bucket_width` should be ~the typical interval length: too small
@@ -28,8 +27,8 @@ def interval_join(points: DataFrame, intervals: DataFrame,
     would otherwise explode to hi/width bucket rows); correctness is
     unaffected because points outside the domain can't match clamped
     buckets anyway and the exact BETWEEN filter still runs.
-    With `broadcast_intervals` (small interval tables — the common case)
-    the bucketed join is a broadcast hash join: zero shuffle of points.
+    The bucketed interval side is broadcast (interval tables are small),
+    so the join is a broadcast hash join: zero shuffle of points.
     """
     b_pt = F.floor(F.col(point_col) / bucket_width).cast("long")
     b_lo = F.floor(F.col(lo_col) / bucket_width).cast("long")
@@ -41,9 +40,8 @@ def interval_join(points: DataFrame, intervals: DataFrame,
         b_hi = F.least(b_hi, F.lit(dom_hi))
     buckets = F.when(b_lo <= b_hi, F.sequence(b_lo, b_hi)) \
         .otherwise(F.array().cast("array<long>"))
-    exploded = intervals.withColumn("__bucket", F.explode(buckets))
-    if broadcast_intervals:
-        exploded = F.broadcast(exploded)
+    exploded = F.broadcast(
+        intervals.withColumn("__bucket", F.explode(buckets)))
     joined = points.withColumn("__bucket", b_pt).join(exploded, "__bucket")
     exact = (F.col(point_col) >= F.col(lo_col)) & \
             (F.col(point_col) <= F.col(hi_col))

@@ -314,39 +314,3 @@ def upsert_partitioned(df: DataFrame, path: str,
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy(partition_col)
      .parquet(path))
-
-
-def compact_files(spark: SparkSession, path: str, out_path: str,
-                  target_file_bytes: int = 256 * 1024 * 1024,
-                  sort_within_by: str | None = None) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ~``target_file_bytes`` output files — the maintenance pass every
-    long-lived ingest pipeline needs, because streaming/incremental
-    writers leave thousands of KB-sized files whose per-file open cost
-    (footer read + task schedule) eventually dominates scans.
-
-    File count is sized from the dataset's actual on-disk bytes (driver
-    metadata only — no data pass): ceil(total_bytes / target). The
-    rewrite is ONE narrow round-robin repartition (no key, no skew) +
-    an optional ``sortWithinPartitions`` so min/max rowgroup stats stay
-    useful for pushdown after compaction. Returns the output file count.
-
-    Deliberately out-of-place (out_path): compaction must be
-    atomic-swappable and re-runnable; in-place rewrites that delete
-    inputs mid-job are how pipelines lose data.
-    """
-    import math
-
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    total = fs.getContentSummary(p).getLength()
-    n_files = max(1, math.ceil(total / max(target_file_bytes, 1)))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(sort_within_by)
-    out.write.mode("overwrite").parquet(out_path)
-    out_files = [f for f in spark.read.parquet(out_path).inputFiles()]
-    return len(out_files)

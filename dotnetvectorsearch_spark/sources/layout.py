@@ -4,7 +4,7 @@ Prepare/Program.cs:103-105).
 
 Parquet pruning at scale is a *layout* property: row groups are skipped
 via their min/max stats, and stats are only selective if the writer
-clustered the data. Two tools:
+clustered the data. Three tools:
 
 - **Z-order write** (`zorder_value`, `write_zordered`): interleave the
   bits of several columns into one sort key so that sorting by it
@@ -17,6 +17,11 @@ clustered the data. Two tools:
   files into size-targeted files. Small files are the #1 silent killer
   of 100 TB scans (driver-side listing, per-file open cost, tiny row
   groups with useless stats).
+- **Snapshot manifests** (`publish_snapshot`, `read_store_rows`,
+  `gc_snapshots`): the file-list format of the cell-partitioned ANN
+  stores (`operators.ann.IVFIndex` / `IVFPQIndex`). Their ``write``
+  publishes snapshot v1 and their ``read`` resolves CURRENT, so every
+  reader sees exactly one snapshot's files.
 
 Scale notes: the z-value uses per-column min/max from one aggregate over
 the input (a single pass); for append-only production data feed known
@@ -131,12 +136,12 @@ class _FileInfo:
 # --------------------------------------------------------------------
 # Snapshot manifests — cross-cell consistency for maintenance
 # --------------------------------------------------------------------
-# compact_index's dir-swap is file-atomic per cell but NOT a cross-cell
-# snapshot: a reader listing the directory mid-pass can see some cells
-# compacted and others not (and, for one rename window, a cell missing
-# entirely). The fix is the same one Delta/Iceberg use for OPTIMIZE: an
-# immutable per-version MANIFEST naming the exact data files of a
-# snapshot, plus an atomically-replaced CURRENT pointer. Readers
+# A directory listing of a cell store is not a snapshot: mid-compaction
+# it holds some cells compacted and others not, and until GC it holds
+# every retired file next to its rewrite (each row twice). The fix is
+# the one Delta/Iceberg use for OPTIMIZE: an immutable per-version
+# MANIFEST naming the exact data files of a snapshot, plus an
+# atomically-replaced CURRENT pointer. Readers
 # resolve CURRENT once and read that file list — concurrent appends,
 # compactions, and GC never change what a running query sees, because
 # data files are immutable and a publisher never deletes anything
@@ -145,8 +150,8 @@ class _FileInfo:
 # transaction log: `manifest-v%06d.json` under `_manifests/` (the
 # underscore prefix keeps Spark's directory reads ignoring it), CURRENT
 # swapped via write-temp + os.replace (atomic on POSIX). Scope: the
-# cell-partitioned stores (ivf / ivfpq) whose maintenance passes need
-# it; readers get snapshot isolation, WRITER-writer coordination is
+# cell-partitioned stores (ivf / ivfpq), whose ``write`` publishes v1;
+# readers get snapshot isolation, WRITER-writer coordination is
 # still the documented single-maintenance-writer window (a real
 # catalog CAS is the multi-writer upgrade path).
 
@@ -217,8 +222,7 @@ def list_snapshots(path: str) -> list[dict]:
 def read_manifest(path: str, version: int | None = None) -> dict:
     """The manifest of ``version`` (default: CURRENT). Raises
     FileNotFoundError when the store has no manifests or the version
-    was GC'd — callers that want directory-read fallback use
-    :func:`read_store_rows`."""
+    was GC'd."""
     if version is None:
         version = current_snapshot_version(path)
         if version is None:
@@ -345,8 +349,8 @@ def _write_manifest(path: str, files: list[str], note: str = "",
 
 def publish_snapshot(path: str, note: str = "") -> int:
     """Publish the next snapshot of a cell-partitioned store after an
-    APPEND (or as the first snapshot of an unmanaged store). Returns
-    the new version.
+    APPEND, or its first snapshot after a ``write``. Returns the new
+    version.
 
     The new file set is NOT a bare directory listing: after a
     manifest-mode compaction the directory still holds retired files
@@ -359,9 +363,8 @@ def publish_snapshot(path: str, note: str = "") -> int:
     — the second term is exactly the freshly-appended files (retired
     files stay referenced until GC removes them from disk; the
     "referenced" set is the ``referenced_union`` carried by CURRENT,
-    so a publish is O(files), not O(versions x files)). For a store
-    with no manifests yet this degenerates to the full directory
-    listing.
+    so a publish is O(files), not O(versions x files)). For a freshly
+    written store (no manifests yet) it is the full directory listing.
 
     Unreferenced ``compact-v*`` files are DEBRIS, not appends: a live
     compaction holds the same writer lock for its whole move+publish
@@ -400,11 +403,8 @@ def read_store_rows(spark: SparkSession, path: str,
     the manifest (CURRENT, or an explicit ``version`` for time-travel)
     and read exactly its files. ``basePath`` keeps the ``cell=...``
     directory components parsed as the partition column, so probe-time
-    cell pruning works identically to a directory read. A store with
-    no manifests falls back to the plain directory read (pre-manifest
-    stores keep working)."""
-    if version is None and current_snapshot_version(path) is None:
-        return spark.read.parquet(path)
+    cell pruning works identically to a directory read. Raises
+    FileNotFoundError for a store with no manifests."""
     m = read_manifest(path, version)
     if not m["files"]:
         raise ValueError(f"snapshot v{m['version']} of {path} is empty")

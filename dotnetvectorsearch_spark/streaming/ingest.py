@@ -42,6 +42,7 @@ from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 from dotnetvectorsearch_spark.operators.dedup import _bloom_add, _bloom_test
 from dotnetvectorsearch_spark.pipeline.prepare import prepare_documents
 from dotnetvectorsearch_spark.schemas import RAW_CSV_SCHEMA
+from dotnetvectorsearch_spark.sources.layout import publish_snapshot
 
 
 def stream_prepare(spark: SparkSession, input_dir: str, out_path: str,
@@ -207,8 +208,7 @@ def enrich_stream(events: DataFrame, dim: DataFrame, on,
 
 
 def stream_index_append(vectors: DataFrame, index, path: str,
-                        checkpoint: str, vec_col: str = "embedding",
-                        publish_snapshots: bool | None = None):
+                        checkpoint: str, vec_col: str = "embedding"):
     """Incremental ANN-index maintenance: assign each arriving vector to
     its IVF cell (one narrow Arrow matmul against the fixed centroids —
     no shuffle, no refit) and append it into the ``partitionBy(cell)``
@@ -222,9 +222,9 @@ def stream_index_append(vectors: DataFrame, index, path: str,
     maintenance contract: assignment drifts slowly; retrain + full
     rewrite is a periodic batch job, e.g. when cell-size skew passes a
     threshold, or `IVFIndex.refine`). Appends create small files per
-    trigger — ``sources.layout.compact`` per cell-partition is the
-    companion maintenance pass at scale. Appends are at-least-once on
-    replay (the usual foreachBatch caveat).
+    trigger — ``ann_store.compact_index`` (one file per touched cell,
+    published as a new snapshot) is the companion maintenance pass.
+    Appends are at-least-once on replay (the usual foreachBatch caveat).
 
     ``index`` is a fitted ``operators.ann.IVFIndex``, or None to
     resume from the PERSISTED index at ``path`` (the ann_store
@@ -234,32 +234,20 @@ def stream_index_append(vectors: DataFrame, index, path: str,
     centroids, same argmax; pinned in tests). Returns the started
     StreamingQuery.
 
-    ``publish_snapshots`` publishes an ``ann_store`` snapshot
-    manifest after each trigger's append, so readers on a
-    manifest-managed store (`ann_store.read_store_rows` /
-    `serve_topk`) see each trigger's rows atomically — a serve
-    resolving CURRENT mid-append never reads a partially-written
-    trigger, and a compaction running concurrently never hides the
-    appends (publish_snapshot folds still-unreferenced files into the
-    new snapshot). Default ``None`` AUTO-DETECTS per batch: a store
-    with a CURRENT snapshot gets a publish (its readers resolve
-    manifests, so an unpublished append would be silently invisible
-    to every serve — and `ensure_index` manages all ivf/ivfpq stores
-    from birth; advisor r13), while an unmanaged store skips it and
-    readers list the directory as before. Pass an explicit bool to
-    force either behavior."""
+    Every trigger publishes a snapshot after its append
+    (``sources.layout.publish_snapshot``), so readers that resolve
+    CURRENT (``IVFIndex.read``, ``ann_store.serve_topk``) see each
+    trigger's rows atomically — a serve mid-append never reads a
+    partially-written trigger, and a concurrent compaction never hides
+    the appends (publish folds still-unreferenced files into the new
+    snapshot)."""
     if index is None:
         from dotnetvectorsearch_spark.operators.ann import IVFIndex
         index, _ = IVFIndex.read(vectors.sparkSession, path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         index.append(batch_df, path, vec_col)
-        from dotnetvectorsearch_spark.sources.layout import (
-            current_snapshot_version, publish_snapshot)
-        if publish_snapshots or (publish_snapshots is None
-                                 and current_snapshot_version(path)
-                                 is not None):
-            publish_snapshot(path, note=f"append batch {batch_id}")
+        publish_snapshot(path, note=f"append batch {batch_id}")
 
     return (vectors.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint)

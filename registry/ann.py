@@ -285,11 +285,12 @@ def _q_ann_index_health(spark, sf_dir):
 
 
 def _q_ann_store_snapshots(spark, sf_dir):
-    """Snapshot-versioned ANN store maintenance, end to end: build ->
-    publish v1, streamed-append delta -> publish v2, compact -> v3,
-    GC the oldest version — returning the snapshot LEDGER the cycle
-    leaves behind (version, row count, current/retained flags, note).
-    The manifest layer (`layout.publish_snapshot` /
+    """Snapshot-versioned ANN store maintenance, end to end: build
+    (``write`` publishes v1), streamed-append delta -> publish v2,
+    compact -> v3, GC the oldest version — returning the snapshot
+    LEDGER the cycle leaves behind (version, row count,
+    current/retained flags, note).
+    The manifest layer (`sources.layout.publish_snapshot` /
     `read_store_rows` / `gc_snapshots`) is what makes maintenance
     cross-cell snapshot-consistent at 100 TB: readers pin an immutable
     file list, compaction publishes instead of deleting, and GC
@@ -314,8 +315,7 @@ def _q_ann_store_snapshots(spark, sf_dir):
     try:
         path = f"{work}/ivf"
         idx = IVFIndex(n_cells=8, nprobe=8).fit(seed, max_sample=4000)
-        idx.write(seed, path)
-        layout.publish_snapshot(path, note="build")          # v1
+        idx.write(seed, path)                                   # v1
         # Ledger counts come from the manifests' recorded row stats
         # (parquet footer sums written at publish time) — the
         # Iceberg-style metadata answer; a 100 TB store must not scan
@@ -323,7 +323,7 @@ def _q_ann_store_snapshots(spark, sf_dir):
         # read_store_rows().count() is pinned in tests/test_ann_store.
         n1 = layout.snapshot_row_count(path)
         idx.append(delta, path)
-        layout.publish_snapshot(path, note="append")         # v2
+        layout.publish_snapshot(path, note="append")            # v2
         n2 = layout.snapshot_row_count(path)
         ann_store.compact_index(spark, path)                    # v3
         n3 = layout.snapshot_row_count(path)

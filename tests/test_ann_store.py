@@ -385,7 +385,7 @@ def test_index_health_and_compact(spark, sf_dir, tmp_path):
     assert all(not r.fragmented for r in rows)
     assert all(r.n_rows > 0 for r in rows)
     path = ann_store.index_path(sf_dir, "ivf", root)
-    # ensure_index published the build snapshot
+    # the index write published the build snapshot
     assert layout.current_snapshot_version(path) == 1
     # simulate 9 streamed append triggers: small files pile up per
     # cell; each append PUBLISHES (the managed-store append contract)
@@ -538,22 +538,40 @@ def test_snapshot_publish_excludes_retired_files(spark, sf_dir,
             == layout.read_manifest(path, 3)["files"])
 
 
-def test_unmanaged_store_falls_back_to_directory_read(spark, sf_dir,
-                                                      tmp_path):
-    """A store written without manifests (pre-manifest layout, or
-    idx.write directly) keeps working: read_store_rows falls back to
-    the directory read and compact_index uses the legacy dir-swap."""
+def test_read_resolves_current_snapshot(spark, sf_dir, tmp_path):
+    """``write`` publishes v1 naming every data file, and ``read``
+    returns CURRENT's rows: after write -> append -> publish -> compact,
+    with the retired files still on disk before GC, both cell stores
+    read back exactly ``snapshot_row_count`` rows and no id twice.
+    ``ensure_index`` rebuilds a store whose manifests are gone."""
+    import shutil
+
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
-    idx = IVFIndex(n_cells=4, nprobe=4).fit(emb)
-    path = str(tmp_path / "bare")
-    idx.write(emb, path)
-    assert layout.current_snapshot_version(path) is None
-    n = emb.count()
-    assert layout.read_store_rows(spark, path).count() == n
-    assert ann_store.compact_index(spark, path) > 0
-    assert layout.read_store_rows(spark, path).count() == n
-    assert layout.current_snapshot_version(path) is None
+    seed = emb.filter("vec_id % 10 = 0")
+    delta = emb.filter("vec_id % 10 = 5")
+    for cls, kw in ((IVFIndex, {}), (IVFPQIndex, {"m": 16, "n_codes": 16})):
+        idx = cls(n_cells=8, nprobe=8, **kw).fit(seed, max_sample=4000)
+        path = str(tmp_path / cls.__name__)
+        idx.write(seed, path)
+        assert layout.current_snapshot_version(path) == 1
+        assert (sorted(layout.read_manifest(path)["files"])
+                == sorted(layout._data_files(path)))
+        # IVFPQIndex has no append: land the delta in its write's shape
+        (idx.transform(delta).drop("embedding").write.mode("append")
+         .partitionBy("cell").parquet(path))
+        layout.publish_snapshot(path, note="append")
+        assert ann_store.compact_index(spark, path) > 0
+        ids = [r.vec_id for r in
+               cls.read(spark, path)[1].select("vec_id").collect()]
+        assert len(ids) == layout.snapshot_row_count(path) == len(set(ids))
+        assert len(ids) == seed.count() + delta.count()
+
+    root = str(tmp_path / "root")
+    path, _ = ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
+    shutil.rmtree(Path(path) / "_manifests")
+    _, built = ann_store.ensure_index(spark, sf_dir, "ivf", root=root)
+    assert built and layout.current_snapshot_version(path) == 1
 
 
 def test_gc_keep_last_must_retain_current():
@@ -563,9 +581,9 @@ def test_gc_keep_last_must_retain_current():
 
 def test_stream_index_append_publishes_snapshots(spark, sf_dir,
                                                  tmp_path):
-    """publish_snapshots=True: every trigger's append lands as a new
-    snapshot version, and snapshot readers see exactly the published
-    triggers (the streamed-ingest end of the manifest contract)."""
+    """Every trigger's append lands as a new snapshot version, and
+    snapshot readers see exactly the published triggers (the
+    streamed-ingest end of the manifest contract)."""
     from dotnetvectorsearch_spark.streaming.ingest import (
         stream_index_append)
     import pyspark.sql.functions as F
@@ -585,9 +603,7 @@ def test_stream_index_append_publishes_snapshots(spark, sf_dir,
               .schema("vec_id long, embedding array<float>")
               .option("maxFilesPerTrigger", 1)
               .parquet(str(src / "*")))
-    q = stream_index_append(stream, idx, path,
-                            str(tmp_path / "ckpt"),
-                            publish_snapshots=True)
+    q = stream_index_append(stream, idx, path, str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
     finally:
@@ -822,10 +838,9 @@ def test_ghost_manifest_rolled_back_not_trusted(spark, sf_dir,
 
 def test_stream_append_auto_publishes_on_managed_store(spark, sf_dir,
                                                        tmp_path):
-    """Default (publish_snapshots=None) streamed appends into an
-    ensure_index-managed store must be VISIBLE to snapshot readers —
-    the 'immediately searchable' ingest contract (advisor r13: an
-    unpublished append is silently invisible to every serve)."""
+    """Streamed appends into an ensure_index-built store must be
+    VISIBLE to snapshot readers — the 'immediately searchable' ingest
+    contract (an unpublished append is invisible to every serve)."""
     from dotnetvectorsearch_spark.streaming.ingest import (
         stream_index_append)
     import pyspark.sql.functions as F
@@ -869,7 +884,6 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
 
     def cycle(path):
         idx.write(seed, path)
-        layout.publish_snapshot(path, note="build")
         n1 = layout.snapshot_row_count(path)
         idx.append(delta, path)
         layout.publish_snapshot(path, note="append")
@@ -895,6 +909,8 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
     with force_distributed():
         slow = cycle(str(tmp_path / "slow"))
     assert fast == slow
+    # read resolves CURRENT: the compacted snapshot, each id once
+    assert len({vec_id for vec_id, _ in fast[5]}) == 10
     # row conservation through the cycle
     assert fast[0] == seed.count()
     assert fast[1] == fast[2] == seed.count() + delta.count()
@@ -904,7 +920,6 @@ def test_driver_write_append_compact_parity(spark, sf_dir, tmp_path,
     # single-file cells are referenced unchanged by compaction
     path3 = str(tmp_path / "mixed")
     idx.write(seed, path3)
-    layout.publish_snapshot(path3, note="build")
     one_cell = idx.transform(delta).filter("cell = 0").drop("cell")
     idx.append(one_cell, f"{path3}")  # lands only in its cells
     layout.publish_snapshot(path3, note="delta")
@@ -948,6 +963,7 @@ def test_driver_write_stores_null_ids_and_builds_before_delete(
         idx.write(seed, path)
         idx.write(nulls, path)
         idx.append(nulls, path)
+        layout.publish_snapshot(path, note="append")
         return sorted((r.vec_id is None, r.vec_id or 0, r.cell,
                        tuple(r.embedding))
                       for r in IVFIndex.read(spark, path)[1].collect())

@@ -246,17 +246,16 @@ def test_orc_partitioned_write_prunes(spark, sf_dir, tmp_path):
 
 
 def test_compact_files_rewrites_to_target_count(spark, tmp_path):
-    from dotnetvectorsearch_spark.sources.io import compact_files
+    from dotnetvectorsearch_spark.sources.layout import compact
     src = str(tmp_path / "fragmented")
     out = str(tmp_path / "compacted")
     # 64 tiny files — the streaming-ingest pathology
     spark.range(0, 64_000, 1, 64).withColumn(
         "v", F.col("id") % 7).write.parquet(src)
     assert len(spark.read.parquet(src).inputFiles()) == 64
-    n = compact_files(spark, src, out, target_file_bytes=1 << 40,
-                      sort_within_by="v")
-    assert n == 1                      # everything fits one target file
+    n = compact(spark, src, out, target_mb=1 << 20, sort_by="v")
     got = spark.read.parquet(out)
+    assert n == len(got.inputFiles()) == 1   # everything fits one file
     assert got.count() == 64_000
     assert got.agg(F.sum("id")).collect()[0][0] == 64_000 * 63_999 // 2
 
