@@ -353,9 +353,9 @@ def publish_snapshot(path: str, note: str = "") -> int:
     version.
 
     The new file set is NOT a bare directory listing: after a
-    manifest-mode compaction the directory still holds retired files
-    awaiting :func:`gc_snapshots`, and re-listing them would
-    double-count rows. So the snapshot is
+    compaction the directory still holds retired files awaiting
+    :func:`gc_snapshots`, and re-listing them would double-count
+    rows. So the snapshot is
 
         (CURRENT's files that still exist)  ∪  (files on disk that NO
         retained manifest references)

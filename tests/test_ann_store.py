@@ -440,7 +440,7 @@ def _append_sliver(spark, sf_dir, path):
 
 
 def test_noop_compaction_publishes_nothing(spark, sf_dir, tmp_path):
-    """A manifest-mode compaction with no cell to compact publishes no
+    """A compaction with no cell to compact publishes no
     manifest and returns 0: two no-op passes leave the snapshot history
     (and so the gc_snapshots keep-window) untouched."""
     path, _ = ann_store.ensure_index(spark, sf_dir, "ivf",
