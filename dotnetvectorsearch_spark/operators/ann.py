@@ -39,7 +39,7 @@ from dotnetvectorsearch_spark.localdf import local_df
 from dotnetvectorsearch_spark.operators.search import (
     _panel, _rank_window, _scan_topk, top_k_similar)
 from dotnetvectorsearch_spark.sources.layout import (
-    publish_snapshot, read_store_rows)
+    publish_snapshot, read_store_rows, store_root)
 
 
 # Default training-sample size of the k-means / codebook fits.
@@ -308,13 +308,16 @@ class IVFIndex:
         :meth:`read` can restore a probe-ready index in a NEW session
         (the switching-user persistence contract). Once cells and
         centroids have landed, snapshot v1 (note ``"build"``) is
-        published (``sources.layout.publish_snapshot``).
+        published (``sources.layout.publish_snapshot``). The store must
+        be local (a bare path or a ``file:`` URI): a remote ``path``
+        raises ValueError before anything is written.
 
         Small local inputs (within ``localdf.DRIVER_BYTES``) take a
         bounded driver fast path: one sizing job and one Arrow collect
         (``localdf.collect_bounded``), the same assignment kernel,
         pyarrow per-cell files — identical rows and file schema (pinned
         in tests/test_ann.py)."""
+        store_root(path)
         if not self._write_cells_local(emb, path, vec_col, "overwrite"):
             self.transform(emb, vec_col).write.mode("overwrite") \
                 .partitionBy("cell").parquet(path)
@@ -328,6 +331,7 @@ class IVFIndex:
         driver fast path / distributed fallback split as :meth:`write`;
         trained state is never touched. The rows become visible to
         :meth:`read` once ``sources.layout.publish_snapshot`` runs."""
+        store_root(path)
         if not self._write_cells_local(emb, path, vec_col, "append"):
             self.transform(emb, vec_col).write.mode("append") \
                 .partitionBy("cell").parquet(path)
@@ -335,8 +339,8 @@ class IVFIndex:
     def _write_cells_local(self, emb: DataFrame, path: str,
                            vec_col: str, mode: str) -> bool:
         """Bounded driver-side twin of
-        ``transform(emb).write.partitionBy("cell")`` for a local path and
-        a supported schema: collect within ``localdf.DRIVER_BYTES``,
+        ``transform(emb).write.partitionBy("cell")`` for a supported
+        schema (the store itself is always local): collect within ``localdf.DRIVER_BYTES``,
         assign cells with the SAME kernel the UDF runs, and write one
         pyarrow file per cell (list elements named ``element``, snappy,
         nulls as nulls — Spark's own layout; read parity pinned in
@@ -350,9 +354,9 @@ class IVFIndex:
 
         import pyarrow.parquet as pq
 
-        dst = localdf.local_path(path)
+        dst = str(store_root(path))
         sch = localdf.pa_schema(emb.schema)
-        if dst is None or sch is None:
+        if sch is None:
             return False
         table, _ = localdf.collect_bounded(emb, _WRITE_MAX_ROWS,
                                            localdf.DRIVER_BYTES)
@@ -823,7 +827,9 @@ class IVFPQIndex:
         mode) lands under ``path/_meta`` — underscore-prefixed so data
         scans never see it — making :meth:`read` restore a search-ready
         index in a new session. Then snapshot v1 (note ``"build"``) is
-        published, as for :meth:`IVFIndex.write`."""
+        published, as for :meth:`IVFIndex.write`; a remote ``path``
+        raises ValueError before anything is written."""
+        store_root(path)
         (self.transform(emb.select(id_col, vec_col), vec_col)
          .drop(vec_col).write.mode("overwrite")
          .partitionBy("cell").parquet(path))

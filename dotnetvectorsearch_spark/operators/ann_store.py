@@ -44,12 +44,12 @@ from .. import localdf
 from ..caching import _input_fingerprint
 from ..sources.io import load_table
 from ..sources.layout import (
-    _rollback_ghost_manifests, _write_manifest, _writer_lock,
-    current_snapshot_version, read_manifest, read_store_rows)
+    current_snapshot_version, publish_rewrite, read_store_rows, store_root)
 # Re-exported for perfbench/workloads.py, which calls them through
 # this module; everything else imports them from sources.layout.
 from ..sources.layout import (  # noqa: F401
-    gc_snapshots, list_snapshots, publish_snapshot, snapshot_row_count)
+    gc_snapshots, list_snapshots, publish_snapshot, read_manifest,
+    snapshot_row_count)
 from .ann import IVFIndex, IVFPQIndex, PQIndex, _adc
 from .search import round6_half_up
 
@@ -344,19 +344,17 @@ def _compact_cells(spark: SparkSession, path: str, tmp: str, ver: int,
 
     Returns the number of cells rewritten."""
     import shutil
-    from pathlib import Path as _P
 
     if not multi:
         return 0
     n = 0
-    dst = localdf.local_path(path)
-    total = None
-    if dst is not None:
-        try:
-            total = sum(os.path.getsize(os.path.join(dst, rel))
-                        for rels in multi.values() for rel in rels)
-        except OSError:
-            total = None
+    root = store_root(path)
+    dst = str(root)
+    try:
+        total = sum(os.path.getsize(os.path.join(dst, rel))
+                    for rels in multi.values() for rel in rels)
+    except OSError:
+        total = None
     if total is not None and total <= localdf.DRIVER_BYTES:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -392,8 +390,8 @@ def _compact_cells(spark: SparkSession, path: str, tmp: str, ver: int,
      .filter(F.col("cell").cast("string").isin(vals))
      .repartition("cell")
      .write.partitionBy("cell").mode("overwrite").parquet(tmp))
-    for d in sorted(_P(tmp).glob("cell=*")):
-        dst_dir = _P(path) / d.name
+    for d in sorted(store_root(tmp).glob("cell=*")):
+        dst_dir = root / d.name
         dst_dir.mkdir(exist_ok=True)
         for i, f in enumerate(sorted(d.glob("*.parquet"))):
             name = f"compact-v{ver + 1:06d}-{i:04d}.parquet"
@@ -435,12 +433,12 @@ def compact_index(spark: SparkSession, path: str) -> int:
 
     tmp = f"{path.rstrip('/')}__compact_tmp"
     n = 0
-    # the writer lock spans snapshot-resolve -> rewrite -> publish, so
-    # concurrent publishers can't race version allocation or collide on
-    # the shared tmp dir
-    with _writer_lock(path):
-        _rollback_ghost_manifests(path)
-        m = read_manifest(path)
+
+    # publish_rewrite holds the writer lock across snapshot-resolve ->
+    # rewrite -> publish, so concurrent publishers can't race version
+    # allocation or collide on the shared tmp dir
+    def rewrite(m: dict):
+        nonlocal n
         ver = m["version"]
         # Compact only the cells that NEED it (more than one live file
         # in the CURRENT snapshot) — the Iceberg binpack rule.
@@ -456,9 +454,12 @@ def compact_index(spark: SparkSession, path: str) -> int:
                  if len(rels) > 1}
         # nothing to compact publishes nothing: a no-op pass must not
         # burn a snapshot version or shift the gc keep-window
-        if multi:
-            n = _compact_cells(spark, path, tmp, ver, multi, new_files)
-            _write_manifest(path, new_files, note=f"compaction of v{ver}")
+        if not multi:
+            return None
+        n = _compact_cells(spark, path, tmp, ver, multi, new_files)
+        return new_files, f"compaction of v{ver}"
+
+    publish_rewrite(path, rewrite)
     shutil.rmtree(tmp, ignore_errors=True)
     return n
 

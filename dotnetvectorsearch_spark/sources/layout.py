@@ -33,11 +33,14 @@ from __future__ import annotations
 
 import contextlib
 import json
+import math
 import os
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import localdf
 
 _MANIFEST_DIR = "_manifests"
 _CURRENT = "CURRENT"
@@ -103,34 +106,24 @@ def write_zordered(df: DataFrame, path: str, cols: list[str],
 
 def compact(spark: SparkSession, path: str, out_path: str,
             target_mb: int = 512, sort_by: str | None = None) -> int:
-    """Rewrite a parquet directory into ~target_mb-sized files; returns
-    the output file count. ``sort_by`` re-sorts during compaction to
-    restore min/max selectivity that tiny appends destroyed."""
+    """Rewrite a parquet directory (flat or partitioned) into
+    ~target_mb-sized files, out of place; returns the number of files
+    written. The file count is ceil(on-disk bytes / target), sized from
+    the directory's recursive content summary (driver metadata, no data
+    pass). ``sort_by`` re-sorts during compaction to restore min/max
+    selectivity that tiny appends destroyed."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    total_bytes = fs.getContentSummary(p).getLength()
+    n = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    total_bytes = sum(int(f.length) for f in _list_files(spark, path))
-    n = max(1, round(total_bytes / (target_mb * 1024 * 1024)))
     if sort_by:
         out = df.repartitionByRange(n, sort_by).sortWithinPartitions(sort_by)
     else:
         out = df.repartition(n)
     out.write.mode("overwrite").parquet(out_path)
-    return n
-
-
-def _list_files(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    for status in fs.listStatus(p):
-        if status.isFile() and not status.getPath().getName().startswith("_"):
-            yield _FileInfo(status.getPath().toString(), status.getLen())
-
-
-class _FileInfo:
-    def __init__(self, path: str, length: int):
-        self.path = path
-        self.length = length
+    return len(spark.read.parquet(out_path).inputFiles())
 
 
 # --------------------------------------------------------------------
@@ -153,19 +146,33 @@ class _FileInfo:
 # cell-partitioned stores (ivf / ivfpq), whose ``write`` publishes v1;
 # readers get snapshot isolation, WRITER-writer coordination is
 # still the documented single-maintenance-writer window (a real
-# catalog CAS is the multi-writer upgrade path).
+# catalog CAS is the multi-writer upgrade path). Local filesystem
+# only: a store path is a bare path or a ``file:`` URI.
+
+
+def store_root(path: str) -> Path:
+    """The local directory of a cell store named by a bare path or a
+    ``file:`` URI. Raises ValueError for a remote store: the manifest
+    layer needs flock and an atomic rename, which object stores lack."""
+    local = localdf.local_path(path)
+    if local is None:
+        raise ValueError(f"cell store {path} is not on the local "
+                         "filesystem; snapshot manifests need flock and "
+                         "an atomic rename")
+    return Path(local)
 
 
 def _manifests_root(path: str) -> Path:
-    return Path(path) / _MANIFEST_DIR
+    return store_root(path) / _MANIFEST_DIR
 
 
 def _data_files(path: str) -> list[str]:
     """All data-file paths (relative to the store root) in cell=* partition
     dirs. Only *.parquet leaves count — markers and _SUCCESS files don't."""
+    root = store_root(path)
     out = []
-    for d in sorted(Path(path).glob("cell=*")):
-        out.extend(sorted(str(f.relative_to(path))
+    for d in sorted(root.glob("cell=*")):
+        out.extend(sorted(str(f.relative_to(root))
                           for f in d.glob("*.parquet")))
     return out
 
@@ -198,8 +205,9 @@ def _writer_lock(path: str):
 
 def current_snapshot_version(path: str) -> int | None:
     """Version in CURRENT, or None when the store has no manifests."""
+    current = _manifests_root(path) / _CURRENT
     try:
-        return int((_manifests_root(path) / _CURRENT).read_text())
+        return int(current.read_text())
     except (OSError, ValueError):
         return None
 
@@ -287,9 +295,10 @@ def _footer_rows(path: str, files: list[str]) -> int:
     statistic Iceberg/Delta manifests carry so a 100 TB store can
     answer ``count(*)`` per snapshot without a scan."""
     import pyarrow.parquet as _pq
+    root = store_root(path)
     total = 0
     for rel in files:
-        total += _pq.ParquetFile(str(Path(path) / rel)).metadata.num_rows
+        total += _pq.ParquetFile(str(root / rel)).metadata.num_rows
     return int(total)
 
 
@@ -387,7 +396,7 @@ def publish_snapshot(path: str, note: str = "") -> int:
                    if Path(f).name.startswith("compact-v")}
         for rel in sorted(orphans):
             try:
-                (Path(path) / rel).unlink()
+                (store_root(path) / rel).unlink()
             except OSError:
                 pass
         fresh -= orphans
@@ -395,6 +404,22 @@ def publish_snapshot(path: str, note: str = "") -> int:
         return _write_manifest(path, sorted(files), note,
                                union=referenced,
                                live=on_disk - orphans)
+
+
+def publish_rewrite(path: str, rewrite) -> int | None:
+    """Publish a rewrite of a store's CURRENT snapshot under the writer
+    lock: ``rewrite(manifest)`` gets CURRENT's manifest (ghost manifests
+    rolled back first) and returns the new snapshot's ``(files, note)``,
+    or None to publish nothing. Returns the new version, or None. The
+    lock spans the whole rewrite, so no publish or GC interleaves it.
+    Raises FileNotFoundError for a store with no CURRENT snapshot."""
+    with _writer_lock(path):
+        _rollback_ghost_manifests(path)
+        out = rewrite(read_manifest(path))
+        if out is None:
+            return None
+        files, note = out
+        return _write_manifest(path, files, note)
 
 
 def read_store_rows(spark: SparkSession, path: str,
@@ -408,8 +433,9 @@ def read_store_rows(spark: SparkSession, path: str,
     m = read_manifest(path, version)
     if not m["files"]:
         raise ValueError(f"snapshot v{m['version']} of {path} is empty")
-    return (spark.read.option("basePath", path)
-            .parquet(*[str(Path(path) / f) for f in m["files"]]))
+    base = path.rstrip("/")
+    return (spark.read.option("basePath", base)
+            .parquet(*[f"{base}/{f}" for f in m["files"]]))
 
 
 def gc_snapshots(path: str, keep_last: int = 2) -> dict:
@@ -448,7 +474,7 @@ def gc_snapshots(path: str, keep_last: int = 2) -> dict:
             doomed.update(f for f in m["files"] if f not in kept_files)
         deleted, failed = 0, set()
         for rel in sorted(doomed):
-            p = Path(path) / rel
+            p = store_root(path) / rel
             try:
                 p.unlink()
                 deleted += 1

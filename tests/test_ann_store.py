@@ -543,17 +543,21 @@ def test_read_resolves_current_snapshot(spark, sf_dir, tmp_path):
     returns CURRENT's rows: after write -> append -> publish -> compact,
     with the retired files still on disk before GC, both cell stores
     read back exactly ``snapshot_row_count`` rows and no id twice.
-    ``ensure_index`` rebuilds a store whose manifests are gone."""
+    ``ensure_index`` rebuilds a store whose manifests are gone. Both
+    ``file:`` URI forms name the local store; a remote one is refused
+    before anything is written."""
     import shutil
 
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
     seed = emb.filter("vec_id % 10 = 0")
     delta = emb.filter("vec_id % 10 = 5")
-    for cls, kw in ((IVFIndex, {}), (IVFPQIndex, {"m": 16, "n_codes": 16})):
+    for cls, kw, uri in ((IVFIndex, {}, "file://"),
+                         (IVFPQIndex, {"m": 16, "n_codes": 16}, "file:")):
         idx = cls(n_cells=8, nprobe=8, **kw).fit(seed, max_sample=4000)
-        path = str(tmp_path / cls.__name__)
+        path = f"{uri}{tmp_path / cls.__name__}"
         idx.write(seed, path)
+        assert (tmp_path / cls.__name__ / "_manifests" / "CURRENT").is_file()
         assert layout.current_snapshot_version(path) == 1
         assert (sorted(layout.read_manifest(path)["files"])
                 == sorted(layout._data_files(path)))
@@ -566,6 +570,8 @@ def test_read_resolves_current_snapshot(spark, sf_dir, tmp_path):
                cls.read(spark, path)[1].select("vec_id").collect()]
         assert len(ids) == layout.snapshot_row_count(path) == len(set(ids))
         assert len(ids) == seed.count() + delta.count()
+        with pytest.raises(ValueError, match="local filesystem"):
+            idx.write(seed, "s3a://bucket/store")
 
     root = str(tmp_path / "root")
     path, _ = ann_store.ensure_index(spark, sf_dir, "ivf", root=root)

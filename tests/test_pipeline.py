@@ -259,6 +259,19 @@ def test_compact_files_rewrites_to_target_count(spark, tmp_path):
     assert got.count() == 64_000
     assert got.agg(F.sum("id")).collect()[0][0] == 64_000 * 63_999 // 2
 
+    # a partitioned input is sized from all its bytes (> 1 MB here), and
+    # the count returned is the files written: range partitioning on a
+    # 4-value key leaves at most 4 of the requested partitions non-empty
+    part = str(tmp_path / "partitioned")
+    spark.range(0, 400_000, 1, 8).withColumn("p", F.col("id") % 4) \
+        .withColumn("x", F.rand(7)).write.partitionBy("p").parquet(part)
+    for sort_by, sized in ((None, out), ("p", str(tmp_path / "by_p"))):
+        n = compact(spark, part, sized, target_mb=1, sort_by=sort_by)
+        got = spark.read.parquet(sized)
+        assert n == len(got.inputFiles()) > 1
+        assert got.count() == 400_000
+    assert n <= 4
+
 
 def test_curated_corpus_composition_invariants(spark):
     """The capstone pipeline must compose: every curated doc is a
