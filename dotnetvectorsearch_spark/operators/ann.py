@@ -340,14 +340,14 @@ class IVFIndex:
                            vec_col: str, mode: str) -> bool:
         """Bounded driver-side twin of
         ``transform(emb).write.partitionBy("cell")`` for a supported
-        schema (the store itself is always local): collect within ``localdf.DRIVER_BYTES``,
-        assign cells with the SAME kernel the UDF runs, and write one
-        pyarrow file per cell (list elements named ``element``, snappy,
-        nulls as nulls — Spark's own layout; read parity pinned in
-        tests). Every cell is built before anything under ``path`` is
-        touched, so a failure (a null embedding raises) leaves an
-        existing index intact. False (caller runs the distributed
-        write) past the bound."""
+        schema (the store itself is always local): collect within
+        ``localdf.DRIVER_BYTES``, assign cells with the SAME kernel the
+        UDF runs, and write one pyarrow file per cell (list elements
+        named ``element``, snappy, nulls as nulls — Spark's own layout;
+        read parity pinned in tests). Every cell is built before
+        anything under ``path`` is touched, so a failure (a null
+        embedding raises) leaves an existing index intact. False
+        (caller runs the distributed write) past the bound."""
         import os
         import shutil
         import uuid
