@@ -62,6 +62,7 @@ from dotnetvectorsearch_spark import localdf
 from dotnetvectorsearch_spark.embeddings.base import EmbeddingBackend
 from dotnetvectorsearch_spark.functions.text import QUERY_PREFIX
 from dotnetvectorsearch_spark.operators import ann
+from dotnetvectorsearch_spark.operators.ann_store import fit_index, new_index
 from dotnetvectorsearch_spark.operators.search import (
     MAX_TOP_K,
     DriverVectors,
@@ -73,7 +74,6 @@ from dotnetvectorsearch_spark.operators.search import (
 )
 
 _VEC = "embedding"
-_IVF = {"n_cells": 16, "nprobe": 4}
 
 
 class _PinnedCorpus:
@@ -139,14 +139,13 @@ class VectorSearchEngine:
     """Serving facade over a prepared documents corpus."""
 
     def __init__(self, spark: SparkSession, corpus: DataFrame,
-                 embedder: EmbeddingBackend, id_col: str = "id",
-                 cache: bool = True):
+                 embedder: EmbeddingBackend, id_col: str = "id"):
         self.spark = spark
         self.embedder = embedder
         self.id_col = id_col
         # Cached on either path: the probes and the pin read the corpus
         # once, and lsh/pq/ivfpq scan it again on a pinned engine too.
-        self.corpus = corpus.cache() if cache else corpus
+        self.corpus = corpus.cache()
         self._pin, self.serving = _pin_corpus(self.corpus, id_col,
                                               embedder.dim)
         self._total: int | None = None
@@ -218,8 +217,9 @@ class VectorSearchEngine:
         ``"lsh"`` multi-probe hyperplane buckets, ``"pq"`` ADC over
         compressed codes + exact rescore, ``"ivfpq"`` the composed
         three-stage funnel (probe pruning x ADC x rescore). ANN indexes
-        are built lazily on first use and cached on the engine
-        (build-time artifacts)."""
+        are built lazily on first use with the persisted store's
+        hyperparameters (``ann_store.INDEX_PARAMS``) and cached on the
+        engine (build-time artifacts)."""
         validate_top_k(top_k)
         qvec = self._embed_texts([query_text], prefix=QUERY_PREFIX)[0]
         if self._pin is not None and method in ("brute", "ivf"):
@@ -272,16 +272,16 @@ class VectorSearchEngine:
 
     def _ivf(self) -> tuple[ann.IVFIndex, np.ndarray]:
         """The engine's IVF index over the pin and each row's cell, fit on
-        the driver. A pin of at most ``MAX_SAMPLE`` rows is the whole
-        training sample, so the centroids are identical to the Spark
-        path's; a larger pin trains on a seeded sample of
-        ``MAX_SAMPLE`` rows, kept in pin order."""
+        the driver. A pin of at most the store's ``max_sample`` rows is
+        the whole training sample, so the centroids are identical to the
+        Spark path's; a larger pin trains on a seeded sample of that
+        many rows, kept in pin order."""
         if "ivf" not in self._ann:
-            idx = ann.IVFIndex(**_IVF)
+            idx, max_sample = new_index("ivf")
             mat = self._pin.mat
-            if len(mat) > ann.MAX_SAMPLE:
+            if len(mat) > max_sample:
                 keep = np.random.RandomState(idx.seed).choice(
-                    len(mat), ann.MAX_SAMPLE, replace=False)
+                    len(mat), max_sample, replace=False)
                 mat = mat[np.sort(keep)]
             idx.fit_matrix(mat)
             self._ann["ivf"] = (idx, idx._assign_cells(idx.centroids,
@@ -289,35 +289,18 @@ class VectorSearchEngine:
         return self._ann["ivf"]
 
     def _ann_search(self, method: str, qvec: list[float], top_k: int):
+        if method not in ("ivf", "lsh", "pq", "ivfpq"):
+            raise ValueError(f"unknown search method: {method!r}")
         vecs = self.corpus.select(self.id_col, _VEC)
-        if method == "ivf":
-            if "ivf" not in self._ann:
-                idx = ann.IVFIndex(**_IVF).fit(vecs)
-                self._ann["ivf"] = (idx, idx.transform(vecs).persist())
-            idx, indexed = self._ann["ivf"]
+        if method not in self._ann:
+            idx = (ann.HyperplaneLSH(num_planes=12).fit(dim=len(qvec))
+                   if method == "lsh" else fit_index(vecs, method))
+            self._ann[method] = (idx, idx.transform(vecs).persist())
+        idx, indexed = self._ann[method]
+        if method in ("ivf", "lsh"):
             return idx.search(indexed, qvec, top_k, id_col=self.id_col)
-        if method == "lsh":
-            if "lsh" not in self._ann:
-                idx = ann.HyperplaneLSH(num_planes=12).fit(dim=len(qvec))
-                self._ann["lsh"] = (idx, idx.transform(vecs).persist())
-            idx, bucketed = self._ann["lsh"]
-            return idx.search(bucketed, qvec, top_k, id_col=self.id_col)
-        if method == "pq":
-            if "pq" not in self._ann:
-                idx = ann.PQIndex(m=16, n_codes=64).fit(vecs)
-                self._ann["pq"] = (idx, idx.transform(vecs).persist())
-            idx, encoded = self._ann["pq"]
-            return idx.search(encoded, qvec, top_k, id_col=self.id_col,
-                              rescore=vecs, shortlist=max(10 * top_k, 50))
-        if method == "ivfpq":
-            if "ivfpq" not in self._ann:
-                idx = ann.IVFPQIndex(n_cells=16, nprobe=4, m=16,
-                                 n_codes=64).fit(vecs)
-                self._ann["ivfpq"] = (idx, idx.transform(vecs).persist())
-            idx, indexed = self._ann["ivfpq"]
-            return idx.search(indexed, qvec, top_k, id_col=self.id_col,
-                              rescore=vecs, shortlist=max(10 * top_k, 50))
-        raise ValueError(f"unknown search method: {method!r}")
+        return idx.search(indexed, qvec, top_k, id_col=self.id_col,
+                          rescore=vecs, shortlist=max(10 * top_k, 50))
 
     # ------------------------------------------------------------ documents
 

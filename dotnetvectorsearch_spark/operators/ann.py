@@ -19,6 +19,8 @@ Four physical strategies with one logical contract (top-k by cosine):
 - **Product quantization** (`PQIndex`): m x 256 sample-trained codebooks,
   vectors stored as m uint8 codes (32x compression at d=64/m=8), scored
   by per-query ADC lookup tables without touching the float column.
+  `IVFPQIndex` composes it with IVF cells; every persisted index is an
+  IVF-style cell store (`_CellWriter`).
 
 The assignment step is the one deliberate Python hop (vectorized numpy
 matmul over Arrow batches) — at 384-d a literal-expression dot product per
@@ -50,14 +52,17 @@ MAX_SAMPLE = 100_000
 _WRITE_MAX_ROWS = 1_000_000
 
 
-def _write_state(spark, path: str, ddl: str, mats, *extra) -> None:
+def _write_state(path: str, ddl: str, mats, *extra) -> None:
     """Write a TINY trained-state table (bounded by n_cells or
     m×n_codes, never the corpus): one row per index of the leading axes
     of ``mats`` (no arrays: one row), row-major, holding the index ints,
     each array's float vector there (null for a None array), then
-    ``extra``. A local path gets one pyarrow file in Spark's layout
-    (list elements named ``element``, snappy) and ZERO Spark jobs;
-    other stores or values take the ``local_df`` + Spark write."""
+    ``extra``. One pyarrow file in Spark's layout (list elements named
+    ``element``, snappy) under the local store, ZERO Spark jobs."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
     from pyspark.sql.types import _parse_datatype_string
 
     lead = mats[0].shape[:-1] if mats else ()
@@ -66,40 +71,27 @@ def _write_state(spark, path: str, ddl: str, mats, *extra) -> None:
                for a in mats),
              *extra)
             for ix in np.ndindex(lead)]
-    dst = localdf.local_path(path)
-    table = (localdf.arrow_table(rows, _parse_datatype_string(ddl))
-             if dst is not None else None)
-    if table is not None:
-        import os
-        import shutil
-
-        import pyarrow.parquet as pq
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(dst, exist_ok=True)
-        pq.write_table(table, os.path.join(dst, "part-00000.parquet"),
-                       compression="snappy")
-        return
-    local_df(spark, rows, ddl).write.mode("overwrite").parquet(path)
+    dst = str(store_root(path))
+    table = localdf.arrow_table(rows, _parse_datatype_string(ddl))
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(dst, exist_ok=True)
+    pq.write_table(table, os.path.join(dst, "part-00000.parquet"),
+                   compression="snappy")
 
 
-def _read_state(spark, path: str, keys: tuple[str, ...],
+def _read_state(path: str, keys: tuple[str, ...],
                 *cols: str) -> tuple[list, list]:
-    """Read a :func:`_write_state` table: (its rows, one dense float32
-    array per ``cols`` column indexed by the ``keys`` columns, None for
-    a null column). A local path is read by pyarrow on the driver with
-    no Spark job; other stores by a Spark read."""
-    import os
+    """Read a :func:`_write_state` table on the driver with pyarrow (no
+    Spark job): (its rows, one dense float32 array per ``cols`` column
+    indexed by the ``keys`` columns, None for a null column)."""
     from types import SimpleNamespace
 
-    local = localdf.local_path(path)
-    if local is not None and os.path.isdir(local):
-        import pyarrow.parquet as pq
-        t = pq.read_table(local)
-        data = [t.column(c).to_pylist() for c in t.column_names]
-        rows = [SimpleNamespace(**dict(zip(t.column_names, vals)))
-                for vals in zip(*data)]
-    else:
-        rows = spark.read.parquet(path).collect()
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(store_root(path))
+    data = [t.column(c).to_pylist() for c in t.column_names]
+    rows = [SimpleNamespace(**dict(zip(t.column_names, vals)))
+            for vals in zip(*data)]
     shape = tuple(max(getattr(r, k) for r in rows) + 1 for k in keys)
     dense = []
     for col in cols:
@@ -225,7 +217,86 @@ def _kmeans_fit(sample: np.ndarray, n_cells: int, seed: int,
     return _lloyd(_unit_rows(sample), n_cells, seed, iters, spherical=True)
 
 
-class IVFIndex:
+class _CellWriter:
+    """The one cell writer every ANN store kind shares (IVF, IVF-PQ, and
+    PQ as a one-cell IVF-PQ): rows land ``partitionBy("cell")`` under a
+    local store, each carrying what the index's per-row encoder adds.
+    A subclass defines ``_encode(vecs)`` -> (int32 cell per row, int32
+    PQ codes per row or None), the numpy kernel its Arrow UDF runs too
+    (so both paths produce identical rows by construction) — IVF the
+    cell only, IVF-PQ the cell plus ``pq_codes`` with the float vector
+    dropped — and ``_cell_rows(emb, vec_col)``, the same encoding as a
+    Spark frame (the distributed write)."""
+
+    def _write_cells(self, emb: DataFrame, path: str, vec_col: str,
+                     mode: str) -> None:
+        """Write ``emb``'s encoded rows into the store at ``path``
+        (``mode`` "overwrite" or "append"): the bounded driver path
+        when it applies, else the distributed
+        ``_cell_rows(emb).write.partitionBy("cell")``."""
+        if not self._write_cells_local(emb, path, vec_col, mode):
+            self._cell_rows(emb, vec_col).write.mode(mode) \
+                .partitionBy("cell").parquet(path)
+
+    def _write_cells_local(self, emb: DataFrame, path: str,
+                           vec_col: str, mode: str) -> bool:
+        """Bounded driver-side twin of the distributed cell write for a
+        supported schema (the store itself is always local): collect
+        within ``localdf.DRIVER_BYTES`` (``localdf.collect_bounded``,
+        one sizing job and one Arrow collect), encode with the SAME
+        kernel the UDF runs, and write one pyarrow file per cell (list
+        elements named ``element``, snappy, nulls as nulls — Spark's
+        own layout; parity pinned in tests). Every cell is built before
+        anything under ``path`` is touched, so a failure (a null
+        embedding raises) leaves an existing index intact. False
+        (caller runs the distributed write) past the bound."""
+        import os
+        import shutil
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        dst = str(store_root(path))
+        sch = localdf.pa_schema(emb.schema)
+        if sch is None:
+            return False
+        table, _ = localdf.collect_bounded(emb, _WRITE_MAX_ROWS,
+                                           localdf.DRIVER_BYTES)
+        if table is None:
+            return False
+        table = table.cast(sch)
+        vecs = table.column(vec_col)
+        if vecs.null_count:
+            raise ValueError(f"null {vec_col} in rows written to an "
+                             "ANN cell store")
+        parts = {}
+        if table.num_rows:
+            cells, codes = self._encode(vecs.to_numpy(zero_copy_only=False))
+            if codes is not None:
+                n, m = codes.shape
+                table = table.drop_columns([vec_col]).append_column(
+                    "pq_codes", pa.ListArray.from_arrays(
+                        pa.array(np.arange(0, n * m + 1, m, np.int32)),
+                        pa.array(codes.ravel()),
+                        type=pa.list_(pa.field("element", pa.int32()))))
+            parts = {int(c): table.take(np.flatnonzero(cells == c))
+                     for c in np.unique(cells)}
+        if mode == "overwrite":
+            shutil.rmtree(dst, ignore_errors=True)
+        os.makedirs(dst, exist_ok=True)
+        for cell, part in parts.items():
+            d = os.path.join(dst, f"cell={cell}")
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(
+                part,
+                os.path.join(d,
+                             f"part-00000-{uuid.uuid4().hex}.parquet"),
+                compression="snappy")
+        return True
+
+
+class IVFIndex(_CellWriter):
     """Inverted-file ANN index: k-means cells + partition-pruned probe."""
 
     def __init__(self, n_cells: int = 64, nprobe: int = 4, seed: int = 42):
@@ -312,85 +383,32 @@ class IVFIndex:
         be local (a bare path or a ``file:`` URI): a remote ``path``
         raises ValueError before anything is written.
 
-        Small local inputs (within ``localdf.DRIVER_BYTES``) take a
-        bounded driver fast path: one sizing job and one Arrow collect
-        (``localdf.collect_bounded``), the same assignment kernel,
-        pyarrow per-cell files — identical rows and file schema (pinned
-        in tests/test_ann.py)."""
+        Small local inputs (within ``localdf.DRIVER_BYTES``) take the
+        bounded driver path of the shared cell writer
+        (:meth:`_CellWriter._write_cells_local`) — identical rows and
+        file schema (pinned in tests)."""
         store_root(path)
-        if not self._write_cells_local(emb, path, vec_col, "overwrite"):
-            self.transform(emb, vec_col).write.mode("overwrite") \
-                .partitionBy("cell").parquet(path)
-        self._write_centroids(emb.sparkSession, path)
+        self._write_cells(emb, path, vec_col, "overwrite")
+        _write_state(f"{path}/_centroids",
+                     "cell int, centroid array<float>, nprobe int, seed int",
+                     [self.centroids], self.nprobe, self.seed)
         publish_snapshot(path, note="build")
 
     def append(self, emb: DataFrame, path: str,
                vec_col: str = "embedding") -> None:
         """Append rows to an already-written index, landing each row in
         its cell partition dir (the streamed-delta shape). Same bounded
-        driver fast path / distributed fallback split as :meth:`write`;
+        driver path / distributed fallback split as :meth:`write`;
         trained state is never touched. The rows become visible to
         :meth:`read` once ``sources.layout.publish_snapshot`` runs."""
         store_root(path)
-        if not self._write_cells_local(emb, path, vec_col, "append"):
-            self.transform(emb, vec_col).write.mode("append") \
-                .partitionBy("cell").parquet(path)
+        self._write_cells(emb, path, vec_col, "append")
 
-    def _write_cells_local(self, emb: DataFrame, path: str,
-                           vec_col: str, mode: str) -> bool:
-        """Bounded driver-side twin of
-        ``transform(emb).write.partitionBy("cell")`` for a supported
-        schema (the store itself is always local): collect within
-        ``localdf.DRIVER_BYTES``, assign cells with the SAME kernel the
-        UDF runs, and write one pyarrow file per cell (list elements
-        named ``element``, snappy, nulls as nulls — Spark's own layout;
-        read parity pinned in tests). Every cell is built before
-        anything under ``path`` is touched, so a failure (a null
-        embedding raises) leaves an existing index intact. False
-        (caller runs the distributed write) past the bound."""
-        import os
-        import shutil
-        import uuid
+    def _encode(self, vecs) -> tuple[np.ndarray, None]:
+        return self._assign_cells(self.centroids, vecs), None
 
-        import pyarrow.parquet as pq
-
-        dst = str(store_root(path))
-        sch = localdf.pa_schema(emb.schema)
-        if sch is None:
-            return False
-        table, _ = localdf.collect_bounded(emb, _WRITE_MAX_ROWS,
-                                           localdf.DRIVER_BYTES)
-        if table is None:
-            return False
-        table = table.cast(sch)
-        vecs = table.column(vec_col)
-        if vecs.null_count:
-            raise ValueError(f"null {vec_col} in rows written to an "
-                             "IVF index")
-        cells = (self._assign_cells(self.centroids,
-                                    vecs.to_numpy(zero_copy_only=False))
-                 if table.num_rows else np.zeros(0, np.int32))
-        parts = {int(c): table.take(np.flatnonzero(cells == c))
-                 for c in np.unique(cells)}
-        if mode == "overwrite":
-            shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(dst, exist_ok=True)
-        for cell, part in parts.items():
-            d = os.path.join(dst, f"cell={cell}")
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(
-                part,
-                os.path.join(d,
-                             f"part-00000-{uuid.uuid4().hex}.parquet"),
-                compression="snappy")
-        return True
-
-    def _write_centroids(self, spark, path: str) -> None:
-        """Trained-state write: n_cells rows, always tiny (see
-        :func:`_write_state`)."""
-        _write_state(spark, f"{path}/_centroids",
-                     "cell int, centroid array<float>, nprobe int, seed int",
-                     [self.centroids], self.nprobe, self.seed)
+    def _cell_rows(self, emb: DataFrame, vec_col: str) -> DataFrame:
+        return self.transform(emb, vec_col)
 
     @classmethod
     def read(cls, spark, path: str, version: int | None = None
@@ -399,8 +417,8 @@ class IVFIndex:
         The rows are snapshot ``version``'s files (default CURRENT,
         ``sources.layout.read_store_rows``) — `search` on them still
         prunes to the probe cells."""
-        rows, (cent,) = _read_state(spark, f"{path}/_centroids",
-                                    ("cell",), "centroid")
+        rows, (cent,) = _read_state(f"{path}/_centroids", ("cell",),
+                                    "centroid")
         idx = cls(n_cells=len(rows), nprobe=rows[0].nprobe,
                   seed=rows[0].seed)
         idx.centroids = cent
@@ -610,7 +628,10 @@ class PQIndex:
 
     Beyond-reference (reference is brute-force only,
     WebAPI/Services/VectorSearchService.cs:186-196); same contract as
-    IVFIndex/HyperplaneLSH: fit -> transform -> search.
+    IVFIndex/HyperplaneLSH: fit -> transform -> search. This is the
+    in-memory index and the codebook component of :class:`IVFPQIndex`;
+    a persisted PQ index is a one-cell raw-coded IVF-PQ store (same
+    sample, codebooks, codes and ADC plan).
     """
 
     def __init__(self, m: int = 8, n_codes: int = 256, seed: int = 42):
@@ -654,37 +675,6 @@ class PQIndex:
         """Attach PQ codes — narrow, shuffle-free, Arrow-batched."""
         return emb.withColumn(out, self.encode_udf()(F.col(vec_col)))
 
-    def write(self, emb: DataFrame, path: str,
-              vec_col: str = "embedding", id_col: str = "vec_id") -> None:
-        """Materialize the index: codes table (m bytes/row — the only
-        thing a search scans) and the codebooks, both parquet. The float
-        vectors stay wherever they already live (needed only for
-        rescore)."""
-        self.transform(emb.select(id_col, vec_col), vec_col) \
-            .drop(vec_col).write.mode("overwrite").parquet(f"{path}/codes")
-        self._write_codebooks(emb.sparkSession, f"{path}/codebooks")
-
-    @classmethod
-    def read(cls, spark, path: str) -> tuple[PQIndex, DataFrame]:
-        """Load a written index: returns (index, codes DataFrame)."""
-        return (cls._read_codebooks(spark, f"{path}/codebooks"),
-                spark.read.parquet(f"{path}/codes"))
-
-    def _write_codebooks(self, spark, path: str) -> None:
-        """The m x n_codes (subspace, code, centroid) rows (see
-        :func:`_write_state`)."""
-        _write_state(spark, path,
-                     "subspace int, code int, centroid array<float>",
-                     [self.codebooks])
-
-    @classmethod
-    def _read_codebooks(cls, spark, path: str) -> PQIndex:
-        _, (books,) = _read_state(spark, path, ("subspace", "code"),
-                                  "centroid")
-        idx = cls(m=books.shape[0], n_codes=books.shape[1])
-        idx.codebooks = books
-        return idx
-
     def lookup_table(self, query_vec: list[float]) -> np.ndarray:
         """Per-query ADC table: table[j, c] = dot(q_subspace_j, code_jc)."""
         return np.einsum("jd,jcd->jc", _unit(query_vec).reshape(self.m, -1),
@@ -709,7 +699,7 @@ class PQIndex:
                          k, id_col, codes_col, rescore, vec_col, shortlist)
 
 
-class IVFPQIndex:
+class IVFPQIndex(_CellWriter):
     """Composed IVF + PQ index — the 100 TB ANN architecture: coarse
     k-means cells give Parquet PARTITION PRUNING (a query reads
     nprobe/n_cells of the index), product-quantized codes give 32x
@@ -732,11 +722,12 @@ class IVFPQIndex:
       ``q . v ~= q . cell_mean[cell] + q . residual_hat``: a per-cell
       scalar offset (n_cells dot products on the driver) plus the usual
       shared m-lookup ADC sum.
-    - ``"raw"``: PQ quantizes the unit vector directly; the ADC table
-      approximates cosine with no per-cell term. Kept for comparison and
-      for corpora where cells carry no structure.
+    - ``"raw"``: PQ quantizes the vector as given, with no per-cell
+      term in the ADC table. Kept for comparison and for corpora where
+      cells carry no structure; with ``n_cells=1`` it is plain
+      :class:`PQIndex`, which is how a PQ index is persisted.
 
-    fit -> transform -> write -> search, same contract as the
+    fit -> transform -> write / append -> search, same contract as the
     single-strategy indexes; both modes emit the same (id, cell,
     pq_codes) index schema.
     """
@@ -787,61 +778,73 @@ class IVFPQIndex:
         self.pq.fit_matrix(x - self.cell_means[assign])
         return self
 
-    def _encode_residual_udf(self):
-        """One Arrow pass: unit-normalize -> coarse cell -> residual ->
-        per-subspace code. Cell assignment and coding share the matmul
-        input, so residual mode is not an extra corpus pass."""
-        cent = self.ivf.centroids
-        means = self.cell_means
-        books = self.pq.codebooks
-
-        @pandas_udf("struct<cell:int,pq_codes:array<int>>")
-        def enc(vecs: pd.Series) -> pd.DataFrame:
-            mat = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float32))
-            cells = _nearest_cell(mat, cent)
-            codes = _pq_encode(mat - means[cells], books)
-            return pd.DataFrame({"cell": cells.astype(np.int32),
-                                 "pq_codes": list(codes)})
-
-        return enc
+    def _encode(self, vecs) -> tuple[np.ndarray, np.ndarray]:
+        """The encode kernel of both codings, one pass: unit-normalize
+        -> coarse cell -> per-subspace code of the vector as given
+        (raw) or of ``unit(v) - cell_mean[cell]`` (residual)."""
+        mat = np.stack(vecs).astype(np.float32)
+        unit = _unit_rows(mat)
+        cells = _nearest_cell(unit, self.ivf.centroids)
+        codes = _pq_encode(mat if self.coding == "raw"
+                           else unit - self.cell_means[cells],
+                           self.pq.codebooks)
+        return cells.astype(np.int32), codes
 
     def transform(self, emb: DataFrame,
                   vec_col: str = "embedding") -> DataFrame:
-        """Attach cell + pq_codes — narrow Arrow-batched passes, no
-        shuffle (residual mode fuses both into one pass)."""
-        if self.coding == "raw":
-            return self.pq.transform(self.ivf.transform(emb, vec_col),
-                                     vec_col)
-        enc = self._encode_residual_udf()
+        """Attach cell + pq_codes — one narrow Arrow-batched pass, no
+        shuffle."""
+        encode = self._encode
+
+        @pandas_udf("struct<cell:int,pq_codes:array<int>>")
+        def enc(vecs: pd.Series) -> pd.DataFrame:
+            cells, codes = encode(vecs.to_numpy())
+            return pd.DataFrame({"cell": cells, "pq_codes": list(codes)})
+
         out = emb.withColumn("__ivfpq", enc(F.col(vec_col)))
         return (out.withColumn("cell", F.col("__ivfpq.cell"))
                 .withColumn("pq_codes", F.col("__ivfpq.pq_codes"))
                 .drop("__ivfpq"))
 
+    def _cell_rows(self, emb: DataFrame, vec_col: str) -> DataFrame:
+        return self.transform(emb, vec_col).drop(vec_col)
+
     def write(self, emb: DataFrame, path: str,
               vec_col: str = "embedding", id_col: str = "vec_id") -> None:
         """Materialize (id, cell, codes) partitioned by cell: probe-set
         pruning AND compressed scan compose — a query reads
-        ~(nprobe/n_cells) x (m bytes/row) of the corpus. All trained
-        state (coarse centroids, residual bases, PQ codebooks, coding
-        mode) lands under ``path/_meta`` — underscore-prefixed so data
-        scans never see it — making :meth:`read` restore a search-ready
-        index in a new session. Then snapshot v1 (note ``"build"``) is
-        published, as for :meth:`IVFIndex.write`; a remote ``path``
-        raises ValueError before anything is written."""
+        ~(nprobe/n_cells) x (m bytes/row) of the corpus. The rows go
+        through the same cell writer as :meth:`IVFIndex.write` (bounded
+        driver path, distributed fallback). All trained state (coarse
+        centroids, residual bases, PQ codebooks, coding mode) lands
+        under ``path/_meta`` — underscore-prefixed so data scans never
+        see it — making :meth:`read` restore a search-ready index in a
+        new session. Then snapshot v1 (note ``"build"``) is published;
+        a remote ``path`` raises ValueError before anything is
+        written."""
         store_root(path)
-        (self.transform(emb.select(id_col, vec_col), vec_col)
-         .drop(vec_col).write.mode("overwrite")
-         .partitionBy("cell").parquet(path))
-        spark = emb.sparkSession
-        _write_state(spark, f"{path}/_meta/cells",
+        self._write_cells(emb.select(id_col, vec_col), path, vec_col,
+                          "overwrite")
+        _write_state(f"{path}/_meta/cells",
                      "cell int, centroid array<float>, cell_mean array<float>",
                      [self.ivf.centroids, self.cell_means])
-        self.pq._write_codebooks(spark, f"{path}/_meta/codebooks")
-        _write_state(spark, f"{path}/_meta/params",
+        _write_state(f"{path}/_meta/codebooks",
+                     "subspace int, code int, centroid array<float>",
+                     [self.pq.codebooks])
+        _write_state(f"{path}/_meta/params",
                      "coding string, nprobe int, seed int", [],
                      self.coding, self.ivf.nprobe, self.pq.seed)
         publish_snapshot(path, note="build")
+
+    def append(self, emb: DataFrame, path: str,
+               vec_col: str = "embedding", id_col: str = "vec_id") -> None:
+        """Append rows to an already-written index through the cell
+        writer, as :meth:`IVFIndex.append`: trained state is never
+        touched, and the rows become visible to :meth:`read` once
+        ``sources.layout.publish_snapshot`` runs."""
+        store_root(path)
+        self._write_cells(emb.select(id_col, vec_col), path, vec_col,
+                          "append")
 
     @classmethod
     def read(cls, spark, path: str, version: int | None = None
@@ -850,15 +853,16 @@ class IVFPQIndex:
         ``version``'s rows, default CURRENT). Pair with the original
         float-vector table for the rescore stage, exactly as after a
         fresh fit."""
-        (params,), _ = _read_state(spark, f"{path}/_meta/params", ())
-        _, (cent, means) = _read_state(spark, f"{path}/_meta/cells",
-                                       ("cell",), "centroid", "cell_mean")
-        pq = PQIndex._read_codebooks(spark, f"{path}/_meta/codebooks")
-        idx = cls(n_cells=len(cent), nprobe=params.nprobe, m=pq.m,
-                  n_codes=pq.n_codes, seed=params.seed,
-                  coding=params.coding)
+        (params,), _ = _read_state(f"{path}/_meta/params", ())
+        _, (cent, means) = _read_state(f"{path}/_meta/cells", ("cell",),
+                                       "centroid", "cell_mean")
+        _, (books,) = _read_state(f"{path}/_meta/codebooks",
+                                  ("subspace", "code"), "centroid")
+        idx = cls(n_cells=len(cent), nprobe=params.nprobe,
+                  m=books.shape[0], n_codes=books.shape[1],
+                  seed=params.seed, coding=params.coding)
         idx.ivf.centroids, idx.cell_means = cent, means
-        idx.pq.codebooks = pq.codebooks
+        idx.pq.codebooks = books
         return idx, read_store_rows(spark, path, version)
 
     def search(self, indexed: DataFrame, query_vec: list[float],

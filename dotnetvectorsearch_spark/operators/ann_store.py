@@ -50,22 +50,25 @@ from ..sources.layout import (
 from ..sources.layout import (  # noqa: F401
     gc_snapshots, list_snapshots, publish_snapshot, read_manifest,
     snapshot_row_count)
-from .ann import IVFIndex, IVFPQIndex, PQIndex, _adc
+from .ann import IVFIndex, IVFPQIndex, _adc
 from .search import round6_half_up
 
-# The one set of build hyperparameters: the store builds and the
-# registry's fit-in-query entries (registry.ann._fitted) both fit
-# through fit_index, and the serve-path tests pin serve == fit-in-query
-# results, which holds because the seeded fit is deterministic for
-# identical (params, sample).
+# The one set of build hyperparameters: the store builds, the
+# registry's fit-in-query entries (registry.ann._fitted) and the
+# engine facade (api.VectorSearchEngine) all fit through fit_index,
+# and the serve-path tests pin serve == fit-in-query results, which
+# holds because the seeded fit is deterministic for identical (params,
+# sample). A pq index is a one-cell raw-coded IVF-PQ index (ann.PQIndex's
+# codebooks, codes and ADC ranking in the cell store every kind shares).
 INDEX_PARAMS: dict[str, dict] = {
     "ivf": {"n_cells": 16, "nprobe": 4, "max_sample": 100_000},
-    "pq": {"m": 16, "n_codes": 64, "max_sample": 20_000},
+    "pq": {"n_cells": 1, "nprobe": 1, "coding": "raw", "m": 16,
+           "n_codes": 64, "max_sample": 20_000},
     "ivfpq": {"n_cells": 16, "nprobe": 4, "m": 16, "n_codes": 64,
               "max_sample": 20_000},
 }
 
-_INDEX_CLASSES = {"ivf": IVFIndex, "pq": PQIndex, "ivfpq": IVFPQIndex}
+_INDEX_CLASSES = {"ivf": IVFIndex, "pq": IVFPQIndex, "ivfpq": IVFPQIndex}
 
 _MARKER = "_fingerprint.json"
 
@@ -120,34 +123,38 @@ def _is_fresh(path: str, fp: str | None) -> bool:
         return False
 
 
-def fit_index(emb: DataFrame, kind: str, **init):
-    """A ``kind`` index fitted on ``emb`` with ``INDEX_PARAMS[kind]``
-    (its ``max_sample`` goes to ``fit``, the rest, plus ``init``, to
-    the constructor). Raises ValueError for an unknown kind."""
+def new_index(kind: str, **init):
+    """(an unfitted ``kind`` index built with ``INDEX_PARAMS[kind]``
+    plus ``init``, the ``max_sample`` its fit takes). Raises
+    ValueError for an unknown kind."""
     if kind not in INDEX_PARAMS:
         raise ValueError(f"unknown index kind {kind!r}; "
                          f"expected one of {sorted(INDEX_PARAMS)}")
     params = dict(INDEX_PARAMS[kind], **init)
     max_sample = params.pop("max_sample")
-    return _INDEX_CLASSES[kind](**params).fit(emb, max_sample=max_sample)
+    return _INDEX_CLASSES[kind](**params), max_sample
+
+
+def fit_index(emb: DataFrame, kind: str, **init):
+    """A ``kind`` index (see :func:`new_index`) fitted on ``emb``."""
+    idx, max_sample = new_index(kind, **init)
+    return idx.fit(emb, max_sample=max_sample)
 
 
 def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
                  root: str | None = None,
                  force: bool = False) -> tuple[str, bool]:
     """Build the persisted ``kind`` index for ``sf_dir`` iff missing or
-    stale (input files or params changed, or an ivf/ivfpq store with no
-    CURRENT snapshot). Returns (path, built)."""
-    if kind not in INDEX_PARAMS:
-        raise ValueError(f"unknown index kind {kind!r}; "
-                         f"expected one of {sorted(INDEX_PARAMS)}")
+    stale (input files or params changed, or no CURRENT snapshot).
+    Returns (path, built)."""
+    new_index(kind)      # an unknown kind raises before any Spark work
     emb = load_table(spark, sf_dir, "embeddings")
     fp = _store_fingerprint(_input_fingerprint(emb),
                            params=INDEX_PARAMS[kind])
     path = index_path(sf_dir, kind, root)
     # a cell store without CURRENT cannot be read, so it is stale
     if (not force and _is_fresh(path, fp)
-            and (kind == "pq" or current_snapshot_version(path) is not None)):
+            and current_snapshot_version(path) is not None):
         return path, False
     fit_index(emb, kind).write(emb, path)
     # Stamp AFTER a successful write: a failed build leaves no marker,
@@ -686,9 +693,9 @@ def serve_topk(spark: SparkSession, sf_dir: str, kind: str,
     missing or stale (idempotent; a fresh store makes this a no-op).
 
     ``nprobe`` overrides the index's fitted probe width at SERVE time
-    (ivf/ivfpq only; probe width is a query-time knob — no state
-    depends on it, so a `choose_nprobe` / `choose_nprobe_ivfpq` tuned
-    value applies to an already-written index without any rebuild).
+    (probe width is a query-time knob — no state depends on it, so a
+    `choose_nprobe` / `choose_nprobe_ivfpq` tuned value applies to an
+    already-written index without any rebuild).
     When ``nprobe`` is None and the store carries a
     :func:`tune_store_nprobe` block in its marker, the TUNED width is
     the default — a caller gets the recall-targeted operating point
@@ -696,20 +703,15 @@ def serve_topk(spark: SparkSession, sf_dir: str, kind: str,
     still wins, and a rebuild drops the block (stale tunes never
     outlive their index).
 
-    ``version`` time-travels a snapshot-managed cell store (ivf /
-    ivfpq): the probe runs against exactly that retained snapshot's
-    rows — the "what did this query return before yesterday's
-    ingest?" debugging serve. Trained state and any tuned nprobe come
-    from the store as it is NOW (centroids never change between
-    rebuilds, and a rebuild resets the manifests, so the pairing is
-    always coherent). Raises FileNotFoundError for a GC'd version and
-    ValueError for pq (codes store is not snapshot-managed)."""
-    if version is not None and kind == "pq":
-        raise ValueError("time-travel serve needs a snapshot-managed "
-                         "cell store (ivf or ivfpq); pq codes are "
-                         "not snapshot-versioned")
+    ``version`` time-travels the store: the probe runs against exactly
+    that retained snapshot's rows — the "what did this query return
+    before yesterday's ingest?" debugging serve. Trained state and any
+    tuned nprobe come from the store as it is NOW (centroids never
+    change between rebuilds, and a rebuild resets the manifests, so
+    the pairing is always coherent). Raises FileNotFoundError for a
+    GC'd version."""
     path, _ = ensure_index(spark, sf_dir, kind, root)
-    if nprobe is None and kind in ("ivf", "ivfpq"):
+    if nprobe is None:
         tuned = read_store_meta(path).get("tuned")
         if tuned and tuned.get("nprobe") is not None:
             nprobe = int(tuned["nprobe"])
@@ -720,13 +722,9 @@ def serve_topk(spark: SparkSession, sf_dir: str, kind: str,
         if nprobe is not None:
             idx.nprobe = nprobe
         return idx.search(rows, query_vec, k=k)
-    emb = load_table(spark, sf_dir, "embeddings")
-    if kind == "pq":
-        idx, codes = PQIndex.read(spark, path)
-        return idx.search(codes, query_vec, k, rescore=emb,
-                          shortlist=shortlist)
     idx, rows = IVFPQIndex.read(spark, path, version)
     if nprobe is not None:
         idx.ivf.nprobe = nprobe
-    return idx.search(rows, query_vec, k, rescore=emb,
+    return idx.search(rows, query_vec, k,
+                      rescore=load_table(spark, sf_dir, "embeddings"),
                       shortlist=shortlist)

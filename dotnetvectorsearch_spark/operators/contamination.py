@@ -20,6 +20,7 @@ from dotnetvectorsearch_spark.caching import (
 from dotnetvectorsearch_spark.functions.text import word_shingles
 from dotnetvectorsearch_spark.localdf import _spread
 from dotnetvectorsearch_spark.operators import neardup
+from dotnetvectorsearch_spark.operators.search import round6_half_up
 
 
 def _bipartite_gram_join_volume(tr: DataFrame, tr_id: str,
@@ -252,11 +253,10 @@ DECONTAMINATE_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 def _min_hits_to_flag(n_te: int, min_overlap: float) -> int:
     """Smallest shared-shingle count k that flags a test doc of
     ``n_te`` distinct shingles: the exact integer threshold equivalent
-    of the join path's ``round(k / n_te, 6) >= min_overlap`` filter
-    (Spark `round` is HALF_UP on the double value — replicated here
-    with Decimal so the two kernels agree on every boundary)."""
-    from decimal import ROUND_HALF_UP, Decimal
-    q = Decimal("0.000001")
+    of the join path's ``round(k / n_te, 6) >= min_overlap`` filter.
+    Spark's ``round`` is HALF_UP on the double's shortest decimal repr
+    (3/640 -> 0.004688), not on its binary expansion (0.004687), so
+    the ratio is rounded by its pinned twin ``round6_half_up``."""
     # Scan start must be <= the true threshold. round(k/n,6) >=
     # min_overlap can hold while k/n is up to half a rounding quantum
     # (5e-7) BELOW min_overlap, so the safe lower bound is
@@ -265,8 +265,7 @@ def _min_hits_to_flag(n_te: int, min_overlap: float) -> int:
     # safe while 5e-7*n < 1 (n < ~2M distinct shingles) — advisor r10.
     start = max(1, int(n_te * (min_overlap - 5e-7)) - 2)
     for k in range(start, n_te + 1):
-        r = float(Decimal(k / n_te).quantize(q, rounding=ROUND_HALF_UP))
-        if r >= min_overlap:
+        if round6_half_up(k / n_te) >= min_overlap:
             return k
     return 1 << 31  # min_overlap > 1: unreachable → never flags
 
@@ -523,8 +522,11 @@ def max_eval_overlap(train: DataFrame, test: DataFrame,
     raises with reroute advice (``cross_corpus_contamination`` +
     groupBy max is the distributed formulation).
 
-    Rounding matches the SQL engines' HALF_UP ``round(x, 6)`` on the
-    max ratio (``floor(x*1e6 + 0.5)`` on the non-negative double).
+    Rounding is ``floor(x*1e6 + 0.5)`` on the non-negative double max
+    ratio: DuckDB's ``round(x, 6)``, which rounds the binary value.
+    Spark's ``round`` rounds the shortest decimal repr instead, so the
+    two differ at repr ties (41/640 gives 0.064062 here and 0.064063
+    in Spark).
     """
     import numpy as np
 

@@ -156,19 +156,6 @@ def load_index(spark: SparkSession, db: str = "bm25idx",
             float(stats.avg_doc_len))
 
 
-def ensure_index(docs: DataFrame, db: str = "bm25idx",
-                 prefix: str = "corpus", **build_kwargs,
-                 ) -> tuple[DataFrame, DataFrame, float]:
-    """Load the materialized index if present, else build it. Safe to
-    reuse across processes: the corpus tables are immutable test data and
-    the table names carry INDEX_VERSION."""
-    spark = docs.sparkSession
-    names = index_table_names(db, prefix)
-    if all(spark.catalog.tableExists(n) for n in names):
-        return load_index(spark, db, prefix)
-    return build_index(docs, db=db, prefix=prefix, **build_kwargs)
-
-
 def rrf_fuse(ranked_a: DataFrame, ranked_b: DataFrame,
              id_col: str = "doc_id", k0: int = DEFAULT_RRF_K,
              k: int = 10) -> DataFrame:

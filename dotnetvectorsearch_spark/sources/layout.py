@@ -108,21 +108,34 @@ def compact(spark: SparkSession, path: str, out_path: str,
             target_mb: int = 512, sort_by: str | None = None) -> int:
     """Rewrite a parquet directory (flat or partitioned) into
     ~target_mb-sized files, out of place; returns the number of files
-    written. The file count is ceil(on-disk bytes / target), sized from
+    written. The task count is ceil(on-disk bytes / target), sized from
     the directory's recursive content summary (driver metadata, no data
-    pass). ``sort_by`` re-sorts during compaction to restore min/max
-    selectivity that tiny appends destroyed."""
+    pass). A partitioned input keeps its ``k=v/`` directories: rows
+    are hashed (or, with ``sort_by``, ranged) on the partition columns
+    first, and the output is written ``partitionBy`` them. ``sort_by``
+    re-sorts during compaction to restore min/max selectivity that
+    tiny appends destroyed."""
     jvm = spark.sparkContext._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     total_bytes = fs.getContentSummary(p).getLength()
     n = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
+    # the partition columns, as Spark's discovery finds them: the key
+    # of each nested k=v directory level
+    parts, level = [], p
+    while sub := [s.getPath() for s in fs.listStatus(level)
+                  if s.isDirectory() and "=" in s.getPath().getName()
+                  and s.getPath().getName()[0] not in "_."]:
+        parts.append(sub[0].getName().split("=", 1)[0])
+        level = sub[0]
     df = spark.read.parquet(path)
     if sort_by:
-        out = df.repartitionByRange(n, sort_by).sortWithinPartitions(sort_by)
+        keys = [*parts, sort_by]
+        out = df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
     else:
-        out = df.repartition(n)
-    out.write.mode("overwrite").parquet(out_path)
+        out = df.repartition(n, *parts)
+    writer = out.write.mode("overwrite")
+    (writer.partitionBy(*parts) if parts else writer).parquet(out_path)
     return len(spark.read.parquet(out_path).inputFiles())
 
 
@@ -143,10 +156,10 @@ def compact(spark: SparkSession, path: str, out_path: str,
 # transaction log: `manifest-v%06d.json` under `_manifests/` (the
 # underscore prefix keeps Spark's directory reads ignoring it), CURRENT
 # swapped via write-temp + os.replace (atomic on POSIX). Scope: the
-# cell-partitioned stores (ivf / ivfpq), whose ``write`` publishes v1;
-# readers get snapshot isolation, WRITER-writer coordination is
-# still the documented single-maintenance-writer window (a real
-# catalog CAS is the multi-writer upgrade path). Local filesystem
+# cell-partitioned ANN store of every index kind, whose ``write``
+# publishes v1; readers get snapshot isolation, WRITER-writer
+# coordination is still the documented single-maintenance-writer window
+# (a real catalog CAS is the multi-writer upgrade path). Local filesystem
 # only: a store path is a bare path or a ``file:`` URI.
 
 

@@ -709,12 +709,13 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
     is ONE action — a fused groupBy that carries the payload columns,
     the exact md5 hash, and the K minhash mins (JVM expressions;
     values bit-identical to `minhash_signatures_portable`'s, pinned by
-    the batch-twin test), landed via ``toArrow`` (micro-batch-bounded
-    by definition); LSH banding, within-batch min-keep, and the store
-    gate run driver-side against bounded state, and all state writes
-    are direct pyarrow appends (no Spark write stages). Measured:
-    4.3 s -> ~1.4 s median triggers, flat in corpus size (the
-    warm-store repass row in STREAMING_BENCH.md):
+    `test_stream_neardup_signatures_match_batch_minhash`), landed via
+    ``toArrow`` (micro-batch-bounded by definition); LSH banding,
+    within-batch min-keep, and the store gate run driver-side against
+    bounded state, and all state writes are direct pyarrow appends (no
+    Spark write stages). Measured: 4.3 s -> ~1.4 s median triggers,
+    flat in corpus size (the warm-store repass row in
+    STREAMING_BENCH.md):
 
       * ``{store_path}`` — signature rows (contract-pinned: doc ids +
         h0..h{K-1}, never text), appended per trigger;
@@ -824,8 +825,8 @@ def stream_neardup_dedup(stream: DataFrame, out_path: str,
         # micro-batch otherwise hashes ~2e6 md5s on one task: measured
         # 2.8s vs 0.7s); signature VALUES are identical to
         # minhash_signatures_portable (same md5('kk:'||shingle) min,
-        # pinned by the batch-twin test). Micro-batch-bounded collect
-        # by definition.
+        # pinned by test_stream_neardup_signatures_match_batch_minhash).
+        # Micro-batch-bounded collect by definition.
         from dotnetvectorsearch_spark.functions.text import (
             word_shingles)
         base_cols = [c for c in batch_df.columns]

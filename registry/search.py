@@ -7,6 +7,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dotnetvectorsearch_spark.caching import SessionMemo, input_key
 from dotnetvectorsearch_spark.embeddings import (
     DeterministicEmbedder, HashedProjectionEmbedder)
 from dotnetvectorsearch_spark.functions import vector as V
@@ -174,24 +175,25 @@ def _q_sql_vector_search(spark, sf_dir):
 BM25_QUERY_TERMS = ["vector", "join", "fast"]
 
 
-_BM25_CACHE: dict[str, tuple] = {}
+# The stored BM25 index per corpus state: keyed on
+# caching.input_key(documents), so a corpus rewritten in place rebuilds
+# its index instead of serving the old one.
+_BM25_INDEX = SessionMemo(8)
 
 
 def _bm25_index(spark, sf_dir):
     """The inverted index (term frequencies + IDF + avgdl) is a build-time
     artifact — at scale it's a STORED table, not recomputed per query.
-    `ensure_index` materializes it once per corpus as parquet tables
-    bucketed+sorted by term (warehouse dir); every bm25_topk /
-    hybrid_search call then scans only the matching postings via
-    bucket/row-group pruning. Memoized per sf_dir so repeated calls skip
-    even the tableExists probe."""
-    if sf_dir not in _BM25_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        tag = re.sub(r"[^0-9A-Za-z]+", "_",
-                     sf_dir.rstrip("/").split("/")[-1])
-        _BM25_CACHE[sf_dir] = L.ensure_index(docs, db="bm25idx",
-                                             prefix=tag)
-    return _BM25_CACHE[sf_dir]
+    `build_index` materializes it once per corpus state as parquet
+    tables bucketed+sorted by term (warehouse dir), memoized in
+    _BM25_INDEX; every bm25_topk / hybrid_search call then scans only
+    the matching postings via bucket/row-group pruning."""
+    docs = load_table(spark, sf_dir, "documents")
+    tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").split("/")[-1])
+    key = input_key(docs)
+    return _BM25_INDEX.get_or_build(
+        key and key + (tag,),
+        lambda: L.build_index(docs, db="bm25idx", prefix=tag))
 
 
 def _bm25_ranked(spark, sf_dir, k):

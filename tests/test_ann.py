@@ -274,13 +274,11 @@ def test_trained_state_tables_keep_their_on_disk_format(emb, tmp_path):
     i32 = pa.int32()
     books = [("subspace", i32), ("code", i32), ("centroid", vec)]
     A.IVFIndex(n_cells=4, nprobe=2).fit(emb).write(emb, f"{tmp_path}/ivf")
-    A.PQIndex(m=8, n_codes=16).fit(emb).write(emb, f"{tmp_path}/pq")
     A.IVFPQIndex(n_cells=4, nprobe=2, m=8, n_codes=16).fit(emb) \
         .write(emb, f"{tmp_path}/ivfpq")
     expect = {
         "ivf/_centroids": ([("cell", i32), ("centroid", vec),
                             ("nprobe", i32), ("seed", i32)], 4),
-        "pq/codebooks": (books, 8 * 16),
         "ivfpq/_meta/cells": ([("cell", i32), ("centroid", vec),
                                ("cell_mean", vec)], 4),
         "ivfpq/_meta/codebooks": (books, 8 * 16),
@@ -291,7 +289,7 @@ def test_trained_state_tables_keep_their_on_disk_format(emb, tmp_path):
         t = pq.read_table(f"{tmp_path}/{rel}")
         assert t.schema.equals(pa.schema(fields)), (rel, t.schema)
         assert t.num_rows == n, rel
-    keys = pq.read_table(f"{tmp_path}/pq/codebooks",
+    keys = pq.read_table(f"{tmp_path}/ivfpq/_meta/codebooks",
                          columns=["subspace", "code"]).to_pylist()
     assert [(r["subspace"], r["code"]) for r in keys] == \
         [(j, c) for j in range(8) for c in range(16)]
@@ -370,17 +368,19 @@ def test_ivf_refine_deterministic(emb):
 
 
 def test_pq_write_read_roundtrip(emb, qvec, tmp_path, spark):
-    """A persisted PQ index reloads to identical codebooks and identical
-    search results (the index is a storage artifact, not session state)."""
+    """A persisted PQ index is a one-cell raw IVF-PQ store: it reloads
+    to the in-memory PQIndex's codebooks and returns its search rows
+    (the index is a storage artifact, not session state)."""
     pq = A.PQIndex(m=8, n_codes=32, seed=5).fit(emb)
     path = str(tmp_path / "pq")
-    pq.write(emb, path)
-    loaded, codes = A.PQIndex.read(spark, path)
-    assert (loaded.codebooks == pq.codebooks).all()
+    A.IVFPQIndex(n_cells=1, nprobe=1, coding="raw", m=8, n_codes=32,
+                 seed=5).fit(emb).write(emb, path)
+    loaded, rows = A.IVFPQIndex.read(spark, path)
+    assert (loaded.pq.codebooks == pq.codebooks).all()
     before = [(r.vec_id, r.approx_similarity)
               for r in pq.search(pq.transform(emb), qvec, 5).collect()]
     after = [(r.vec_id, r.approx_similarity)
-             for r in loaded.search(codes, qvec, 5).collect()]
+             for r in loaded.search(rows, qvec, 5).collect()]
     assert before == after
 
 

@@ -561,9 +561,7 @@ def test_read_resolves_current_snapshot(spark, sf_dir, tmp_path):
         assert layout.current_snapshot_version(path) == 1
         assert (sorted(layout.read_manifest(path)["files"])
                 == sorted(layout._data_files(path)))
-        # IVFPQIndex has no append: land the delta in its write's shape
-        (idx.transform(delta).drop("embedding").write.mode("append")
-         .partitionBy("cell").parquet(path))
+        idx.append(delta, path)
         layout.publish_snapshot(path, note="append")
         assert ann_store.compact_index(spark, path) > 0
         ids = [r.vec_id for r in
@@ -643,7 +641,7 @@ def test_writer_lock_mutual_exclusion(tmp_path):
 def test_serve_topk_time_travel(spark, sf_dir, tmp_path, qv):
     """serve_topk(version=N) probes exactly snapshot N's rows: after
     an append+publish, the pinned version still returns the
-    pre-append top-k; pq refuses the knob."""
+    pre-append top-k."""
     root = str(tmp_path / "root")
     before = [(r.vec_id, r.similarity) for r in
               ann_store.serve_topk(spark, sf_dir, "ivf", qv, k=10,
@@ -659,9 +657,6 @@ def test_serve_topk_time_travel(spark, sf_dir, tmp_path, qv):
               ann_store.serve_topk(spark, sf_dir, "ivf", qv, k=10,
                                    root=root, version=1).collect()]
     assert pinned == before
-    with pytest.raises(ValueError, match="snapshot-managed"):
-        ann_store.serve_topk(spark, sf_dir, "pq", qv, k=10,
-                             root=root, version=1)
 
 
 def test_publish_deletes_crashed_compaction_debris(spark, sf_dir,
@@ -991,3 +986,77 @@ def test_driver_write_stores_null_ids_and_builds_before_delete(
             write(null_vecs, str(path))
         assert {p: p.read_bytes() for p in path.rglob("*")
                 if p.is_file()} == before
+
+
+@pytest.mark.parametrize("coding", ["raw", "residual"])
+def test_ivfpq_driver_write_append_parity(spark, sf_dir, tmp_path,
+                                          force_distributed, coding):
+    """IVF-PQ writes and appends through the shared cell writer: its
+    bounded driver path stores the rows ``transform`` computes, with
+    the same data-file schema, as the distributed write does with the
+    driver byte bound at 0, for both codings."""
+    import pyarrow.parquet as pq
+
+    emb = load_table(spark, sf_dir, "embeddings") \
+        .select("vec_id", "embedding")
+    seed = emb.filter("vec_id % 10 = 0")
+    delta = emb.filter("vec_id % 10 = 5")
+    idx = IVFPQIndex(n_cells=8, nprobe=8, m=16, n_codes=16,
+                     coding=coding).fit(seed, max_sample=4000)
+    assert idx._write_cells_local(seed, str(tmp_path / "probe"),
+                                  "embedding", "overwrite") is True
+
+    def cycle(path):
+        idx.write(seed, path)
+        idx.append(delta, path)
+        layout.publish_snapshot(path, note="append")
+        rows = sorted((r.vec_id, r.cell, tuple(r.pq_codes)) for r in
+                      IVFPQIndex.read(spark, path)[1].collect())
+        schemas = {str(pq.read_schema(Path(path) / f).remove_metadata())
+                   for f in layout.read_manifest(path)["files"]}
+        return rows, schemas
+
+    fast = cycle(str(tmp_path / "fast"))
+    with force_distributed():
+        slow = cycle(str(tmp_path / "slow"))
+    assert fast == slow
+    assert fast[0] == sorted(
+        (r.vec_id, r.cell, tuple(r.pq_codes))
+        for r in idx.transform(seed.unionByName(delta)).collect())
+    assert len(fast[1]) == 1 and "embedding" not in fast[1].pop()
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq", "ivfpq"])
+def test_every_kind_serves_each_retained_snapshot(spark, sf_dir, tmp_path,
+                                                  qv, kind):
+    """Every index kind is one snapshot-managed cell store: build (v1)
+    -> append + publish (v2) -> compact (v3) -> GC keeping two. Each
+    retained ``serve_topk(version=v)`` equals a fresh fit's search over
+    that snapshot's corpus (the appended rows re-add existing ids, so
+    the rescore table covers them), and the GC'd v1 is gone."""
+    root = str(tmp_path / "root")
+    emb = load_table(spark, sf_dir, "embeddings")
+    path, _ = ann_store.ensure_index(spark, sf_dir, kind, root=root)
+    cls = IVFIndex if kind == "ivf" else IVFPQIndex
+    extra = emb.filter("vec_id % 5 = 2").select("vec_id", "embedding")
+    cls.read(spark, path)[0].append(extra, path)
+    assert layout.publish_snapshot(path, note="append") == 2
+    assert ann_store.compact_index(spark, path) > 0
+    assert layout.gc_snapshots(path, keep_last=2)["dropped_versions"] \
+        == [1]
+    with pytest.raises(FileNotFoundError):
+        ann_store.serve_topk(spark, sf_dir, kind, qv, root=root,
+                             version=1)
+    fresh = ann_store.fit_index(emb, kind)
+    rows = fresh.transform(emb.select("vec_id", "embedding")
+                           .unionByName(extra))
+    want = (fresh.search(rows, qv, k=10) if kind == "ivf" else
+            fresh.search(rows, qv, 10, rescore=emb, shortlist=200))
+    want = [tuple(r) for r in want.collect()]
+    assert len(want) == 10
+    for v in (2, 3):
+        got = ann_store.serve_topk(spark, sf_dir, kind, qv, k=10,
+                                   shortlist=200, root=root, version=v)
+        assert [tuple(r) for r in got.collect()] == want, v
+        assert layout.snapshot_row_count(path, v) == \
+            emb.count() + extra.count()

@@ -669,6 +669,55 @@ def test_decontaminate_min_hits_threshold_is_exact_round_half_up():
     assert C._min_hits_to_flag(3, 1.5) >= 1 << 30     # never flags
 
 
+def test_min_hits_to_flag_matches_brute_force_repr_rounding():
+    """For every n <= 1,000, _min_hits_to_flag is the brute-force
+    smallest k whose ratio k/n reaches the threshold under Spark's
+    round(x, 6): HALF_UP on the double's shortest decimal repr
+    (BigDecimal.valueOf), so 3/640 = 0.0046875 rounds to 0.004688,
+    where its binary expansion rounds to 0.004687. Thresholds: the
+    rounded ratio of every k where the two roundings differ, and of
+    every 25th k."""
+    import bisect
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def rnd(x):
+        return float(x.quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+    assert C._min_hits_to_flag(640, 0.004688) == 3
+    ties = 0
+    for n in range(1, 1001):
+        r = [rnd(Decimal(repr(k / n))) for k in range(1, n + 1)]
+        for k in range(1, n + 1):
+            tie = rnd(Decimal(k / n)) != r[k - 1]
+            ties += tie
+            if tie or k % 25 == 0:
+                assert C._min_hits_to_flag(n, r[k - 1]) == \
+                    bisect.bisect_left(r, r[k - 1]) + 1, (n, k)
+    assert ties == 128
+
+
+def test_decontaminate_kernels_agree_on_a_repr_rounding_tie(spark,
+                                                            monkeypatch):
+    """A train doc sharing 3 of a 640-shingle eval doc's shingles has
+    overlap 3/640, which the gram join's round(x, 6) takes to 0.004688:
+    at that min_overlap both kernels drop it and keep a 2-shingle
+    doc."""
+    words = [f"e{i}" for i in range(642)]         # 640 distinct 3-grams
+    test = spark.createDataFrame([Row(doc_id=100, text=" ".join(words))])
+    train = spark.createDataFrame([
+        Row(doc_id=1, text=" ".join(words[10:15])),          # 3 shared
+        Row(doc_id=2, text=" ".join(words[10:14]) + " x"),   # 2 shared
+        Row(doc_id=3, text="unrelated words only here")])
+    D.clear_guard_memo()
+    kernel = sorted(r.doc_id for r in C.decontaminate(
+        train, test, min_overlap=0.004688).collect())
+    D.clear_guard_memo()
+    monkeypatch.setattr(C, "DECONTAMINATE_BROADCAST_MAX_POSTINGS", 0)
+    join = sorted(r.doc_id for r in C.decontaminate(
+        train, test, min_overlap=0.004688).collect())
+    assert kernel == join == [2, 3]
+
+
 def test_decontaminate_postings_budget_falls_back_to_join(spark,
                                                           dup_docs,
                                                           monkeypatch):

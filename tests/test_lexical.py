@@ -51,10 +51,10 @@ def test_materialized_index_roundtrip_and_pruned_query_plan(
     """The stored index must answer queries identically to the in-memory
     build, with a query plan that SCANS the bucketed table (no tf-build
     stages: no Generate/explode) and pushes the term filter to parquet."""
-    tf, idf, avgdl = L.ensure_index(corpus, db="bm25test", prefix="c1")
+    tf, idf, avgdl = L.build_index(corpus, db="bm25test", prefix="c1")
     assert avgdl == pytest.approx(3.5)  # (4 + 4 + 3 + 3) / 4
-    # second ensure loads rather than rebuilds (same frames, no error)
-    tf2, idf2, avgdl2 = L.ensure_index(corpus, db="bm25test", prefix="c1")
+    # a later load reads the stored tables back without a rebuild
+    tf2, idf2, avgdl2 = L.load_index(spark, db="bm25test", prefix="c1")
     assert avgdl2 == avgdl
 
     fresh_tf = L.term_frequencies(corpus)
@@ -86,3 +86,20 @@ def test_rrf_fusion_rewards_agreement(spark):
     assert scores[1] > scores[2] and scores[3] > scores[2]
     assert scores[1] == pytest.approx(1 / 61 + 1 / 62, abs=1e-6)
     assert set(scores) == {1, 2, 3, 9}
+
+
+def test_registry_bm25_index_follows_in_place_rewrite(spark, tmp_path):
+    """The registry's stored BM25 index is memoized on the documents'
+    input state, not the sf_dir string: a corpus rewritten in place
+    within one session serves the new corpus's rows."""
+    from registry.search import _q_bm25_topk
+    d = str(tmp_path / "bm25_sf")
+    schema = "doc_id long, text string"
+    spark.createDataFrame([(1, "vector join"), (2, "fast vector search")],
+                          schema).write.parquet(f"{d}/documents.parquet")
+    assert sorted(r.doc_id for r in _q_bm25_topk(spark, d).collect()) \
+        == [1, 2]
+    spark.createDataFrame([(7, "fast join"), (8, "unrelated words")],
+                          schema).write.mode("overwrite") \
+        .parquet(f"{d}/documents.parquet")
+    assert [r.doc_id for r in _q_bm25_topk(spark, d).collect()] == [7]

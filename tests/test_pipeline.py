@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 import pytest
 from pyspark.sql import Row
@@ -261,7 +262,10 @@ def test_compact_files_rewrites_to_target_count(spark, tmp_path):
 
     # a partitioned input is sized from all its bytes (> 1 MB here), and
     # the count returned is the files written: range partitioning on a
-    # 4-value key leaves at most 4 of the requested partitions non-empty
+    # 4-value key leaves at most 4 of the requested partitions non-empty.
+    # The output keeps the p=*/ layout: p stays a partition column and
+    # is never written into the data files.
+    import pyarrow.parquet as pq
     part = str(tmp_path / "partitioned")
     spark.range(0, 400_000, 1, 8).withColumn("p", F.col("id") % 4) \
         .withColumn("x", F.rand(7)).write.partitionBy("p").parquet(part)
@@ -270,6 +274,13 @@ def test_compact_files_rewrites_to_target_count(spark, tmp_path):
         got = spark.read.parquet(sized)
         assert n == len(got.inputFiles()) > 1
         assert got.count() == 400_000
+        assert got.agg(F.sum("id")).collect()[0][0] == \
+            400_000 * 399_999 // 2
+        assert sorted(d.name for d in Path(sized).iterdir()
+                      if d.is_dir()) == ["p=0", "p=1", "p=2", "p=3"]
+        assert all("p" not in pq.read_schema(f).names
+                   for f in Path(sized).glob("p=*/*.parquet"))
+        assert got.filter(F.col("id") % 4 != F.col("p")).count() == 0
     assert n <= 4
 
 

@@ -679,6 +679,40 @@ def test_stream_neardup_dedup_gates_against_growing_store(
     assert collected and set(collected) == {path == "driver"}
 
 
+def test_stream_neardup_signatures_match_batch_minhash(spark, tmp_path):
+    """The batch twin of the stream's signature store: the h0..h15 rows
+    ``stream_neardup_dedup`` stores for its shingle-able survivors equal
+    ``minhash_signatures_portable`` over the same docs (a doc too short
+    to shingle gets no signature on either side)."""
+    from dotnetvectorsearch_spark.operators.neardup import (
+        minhash_signatures_portable)
+    from dotnetvectorsearch_spark.streaming.ingest import (
+        stream_neardup_dedup)
+    src = tmp_path / "nd_in"
+    src.mkdir()
+    store = str(tmp_path / "nd_store")
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame([
+        (1, "the quick brown fox jumps over the lazy dog again"),
+        (2, "spark streams merge sorted batches into compact files"),
+        (3, "completely different words describing another topic"),
+        (4, "hi")], schema)
+    docs.coalesce(1).write.parquet(str(src / "b1"))
+    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
+    q = stream_neardup_dedup(stream, str(tmp_path / "nd_out"), store,
+                             str(tmp_path / "nd_ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    cols = ["doc_id"] + [f"h{k}" for k in range(16)]
+    got = sorted(map(tuple, spark.read.parquet(store).select(cols)
+                     .collect()))
+    want = sorted(map(tuple, minhash_signatures_portable(docs)
+                      .select(cols).collect()))
+    assert got == want and [r[0] for r in want] == [1, 2, 3]
+
+
 def test_stream_neardup_dedup_survives_torn_bloom_meta(spark, tmp_path):
     """A restart over a torn bloom ``meta.json`` must not reload an
     EMPTY filter (every stored key would probe as a miss, the trigger
