@@ -523,10 +523,10 @@ def max_eval_overlap(train: DataFrame, test: DataFrame,
     groupBy max is the distributed formulation).
 
     Rounding is ``floor(x*1e6 + 0.5)`` on the non-negative double max
-    ratio: DuckDB's ``round(x, 6)``, which rounds the binary value.
-    Spark's ``round`` rounds the shortest decimal repr instead, so the
-    two differ at repr ties (41/640 gives 0.064062 here and 0.064063
-    in Spark).
+    ratio, rounding the binary product as DuckDB's ``round(x, 6)``
+    does. Spark's ``round`` rounds the shortest decimal repr instead,
+    so the two differ at repr ties (41/640 gives 0.064062 here and
+    0.064063 in Spark).
     """
     import numpy as np
 
