@@ -34,9 +34,11 @@ scales past driver memory, for everything else: the engine's pinned
 corpus, the IVF index write, connected components, PageRank and BPE
 training. Each gate is one :func:`collect_bounded` call under a row
 bound of its own and the shared byte bound :data:`DRIVER_BYTES`, read
-at call time: setting it to 0 sends every gate down its distributed
-path, which is how the tests and ``tools/check_oracle.py
---distributed`` prove each pair equal.
+at call time (the ANN store pin, ``operators/ann_pin.py``, reads its
+files with pyarrow and gates on footer row counts against the same
+bound): setting it to 0 sends every gate down its distributed path,
+which is how the tests and ``tools/check_oracle.py --distributed``
+prove each pair equal.
 
 :func:`_spread` sizes the input partitions of the CPU-heavy text
 operators (dedup, LM) from the same :func:`plan_bytes` evidence.

@@ -374,19 +374,14 @@ class IVFIndex(_CellWriter):
               vec_col: str = "embedding") -> None:
         """Materialize the index partitioned by cell: a query's probe set
         becomes Parquet partition pruning (reads nprobe/n_cells of data).
-        Centroids land in ``path/_centroids`` — the underscore prefix
-        keeps Spark's data-file listing from seeing them — so
-        :meth:`read` can restore a probe-ready index in a NEW session
-        (the switching-user persistence contract). Once cells and
-        centroids have landed, snapshot v1 (note ``"build"``) is
-        published (``sources.layout.publish_snapshot``). The store must
-        be local (a bare path or a ``file:`` URI): a remote ``path``
-        raises ValueError before anything is written.
-
-        Small local inputs (within ``localdf.DRIVER_BYTES``) take the
-        bounded driver path of the shared cell writer
-        (:meth:`_CellWriter._write_cells_local`) — identical rows and
-        file schema (pinned in tests)."""
+        Centroids land in ``path/_centroids`` (underscore: invisible to
+        Spark's data-file listing), so :meth:`load` restores a
+        probe-ready index in a NEW session. Then snapshot v1 (note
+        ``"build"``) is published (``sources.layout.publish_snapshot``).
+        A remote ``path`` (not a bare path or ``file:`` URI) raises
+        ValueError before anything is written. Inputs within
+        ``localdf.DRIVER_BYTES`` take the cell writer's bounded driver
+        path (identical rows and file schema, pinned in tests)."""
         store_root(path)
         self._write_cells(emb, path, vec_col, "overwrite")
         _write_state(f"{path}/_centroids",
@@ -411,18 +406,21 @@ class IVFIndex(_CellWriter):
         return self.transform(emb, vec_col)
 
     @classmethod
-    def read(cls, spark, path: str, version: int | None = None
-             ) -> tuple["IVFIndex", DataFrame]:
-        """Reload a written index: (probe-ready index, indexed rows).
-        The rows are snapshot ``version``'s files (default CURRENT,
-        ``sources.layout.read_store_rows``) — `search` on them still
-        prunes to the probe cells."""
+    def load(cls, path: str) -> "IVFIndex":
+        """A written index's trained state alone, probe-ready (no Spark)."""
         rows, (cent,) = _read_state(f"{path}/_centroids", ("cell",),
                                     "centroid")
         idx = cls(n_cells=len(rows), nprobe=rows[0].nprobe,
                   seed=rows[0].seed)
         idx.centroids = cent
-        return idx, read_store_rows(spark, path, version)
+        return idx
+
+    @classmethod
+    def read(cls, spark, path: str, version: int | None = None
+             ) -> tuple["IVFIndex", DataFrame]:
+        """(:meth:`load`, snapshot ``version``'s rows, default CURRENT:
+        ``sources.layout.read_store_rows``, still cell-pruned)."""
+        return cls.load(path), read_store_rows(spark, path, version)
 
     def cell_order(self, query_vec: list[float]) -> np.ndarray:
         """Every cell, nearest centroid (by cosine) to the query first:
@@ -817,11 +815,10 @@ class IVFPQIndex(_CellWriter):
         through the same cell writer as :meth:`IVFIndex.write` (bounded
         driver path, distributed fallback). All trained state (coarse
         centroids, residual bases, PQ codebooks, coding mode) lands
-        under ``path/_meta`` — underscore-prefixed so data scans never
-        see it — making :meth:`read` restore a search-ready index in a
-        new session. Then snapshot v1 (note ``"build"``) is published;
-        a remote ``path`` raises ValueError before anything is
-        written."""
+        under ``path/_meta`` (invisible to data scans), so :meth:`load`
+        restores a search-ready index in a new session. Then snapshot v1
+        (note ``"build"``) is published; a remote ``path`` raises
+        ValueError before anything is written."""
         store_root(path)
         self._write_cells(emb.select(id_col, vec_col), path, vec_col,
                           "overwrite")
@@ -847,12 +844,8 @@ class IVFPQIndex(_CellWriter):
                           "append")
 
     @classmethod
-    def read(cls, spark, path: str, version: int | None = None
-             ) -> tuple["IVFPQIndex", DataFrame]:
-        """Reload a written index: (search-ready index, snapshot
-        ``version``'s rows, default CURRENT). Pair with the original
-        float-vector table for the rescore stage, exactly as after a
-        fresh fit."""
+    def load(cls, path: str) -> "IVFPQIndex":
+        """A written index's trained state alone, search-ready (no Spark)."""
         (params,), _ = _read_state(f"{path}/_meta/params", ())
         _, (cent, means) = _read_state(f"{path}/_meta/cells", ("cell",),
                                        "centroid", "cell_mean")
@@ -863,7 +856,14 @@ class IVFPQIndex(_CellWriter):
                   seed=params.seed, coding=params.coding)
         idx.ivf.centroids, idx.cell_means = cent, means
         idx.pq.codebooks = books
-        return idx, read_store_rows(spark, path, version)
+        return idx
+
+    @classmethod
+    def read(cls, spark, path: str, version: int | None = None
+             ) -> tuple["IVFPQIndex", DataFrame]:
+        """(:meth:`load`, snapshot ``version``'s rows, default CURRENT);
+        pair with the float-vector table for the rescore stage."""
+        return cls.load(path), read_store_rows(spark, path, version)
 
     def search(self, indexed: DataFrame, query_vec: list[float],
                k: int = 5, id_col: str = "vec_id",

@@ -21,7 +21,10 @@ Split measured here:
     the persisted index (centroids/codebooks are a few KB; the codes
     table is m bytes/row; the IVF variants prune to nprobe/n_cells of
     the partitions BEFORE the scan) and searches. No fit, no full
-    float-vector scan.
+    float-vector scan. A snapshot within ``localdf.DRIVER_BYTES`` is
+    answered from a driver pin of its files (``ann_pin``: zero Spark
+    jobs, the same rows and scores); past the bound, or with
+    ``DRIVER_BYTES = 0``, the read is a Spark scan.
 
 At 100 TB the build is a scheduled pipeline stage whose cost amortizes
 over every query; the serve path's scan volume is
@@ -51,6 +54,7 @@ from ..sources.layout import (  # noqa: F401
     gc_snapshots, list_snapshots, publish_snapshot, read_manifest,
     snapshot_row_count)
 from .ann import IVFIndex, IVFPQIndex, _adc
+from .ann_pin import pinned_topk
 from .search import round6_half_up
 
 # The one set of build hyperparameters: the store builds, the
@@ -71,6 +75,9 @@ INDEX_PARAMS: dict[str, dict] = {
 _INDEX_CLASSES = {"ivf": IVFIndex, "pq": IVFPQIndex, "ivfpq": IVFPQIndex}
 
 _MARKER = "_fingerprint.json"
+
+# The schema ensure_index reads the input with to fingerprint its files.
+_INPUT_SCHEMA = "vec_id long, embedding array<float>"
 
 
 def _write_marker(path: str, meta: dict) -> None:
@@ -141,27 +148,38 @@ def fit_index(emb: DataFrame, kind: str, **init):
     return idx.fit(emb, max_sample=max_sample)
 
 
-def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
-                 root: str | None = None,
-                 force: bool = False) -> tuple[str, bool]:
-    """Build the persisted ``kind`` index for ``sf_dir`` iff missing or
-    stale (input files or params changed, or no CURRENT snapshot).
-    Returns (path, built)."""
+def _ensure(spark: SparkSession, sf_dir: str, kind: str,
+            root: str | None = None, force: bool = False):
+    """:func:`ensure_index`, plus the input frame it fingerprinted."""
     new_index(kind)      # an unknown kind raises before any Spark work
-    emb = load_table(spark, sf_dir, "embeddings")
-    fp = _store_fingerprint(_input_fingerprint(emb),
+    # Only the input FILES are fingerprinted, so a schema-supplied read
+    # (same inputFiles(), same fingerprint) skips the inference job;
+    # the full table is loaded only to rebuild.
+    inputs = load_table(spark, sf_dir, "embeddings", schema=_INPUT_SCHEMA)
+    fp = _store_fingerprint(_input_fingerprint(inputs),
                            params=INDEX_PARAMS[kind])
     path = index_path(sf_dir, kind, root)
     # a cell store without CURRENT cannot be read, so it is stale
     if (not force and _is_fresh(path, fp)
             and current_snapshot_version(path) is not None):
-        return path, False
+        return path, False, inputs
+    emb = load_table(spark, sf_dir, "embeddings")
     fit_index(emb, kind).write(emb, path)
     # Stamp AFTER a successful write: a failed build leaves no marker,
     # so the next ensure_index retries instead of serving half an index.
     _write_marker(path, {"fingerprint": fp, "kind": kind,
                          "params": INDEX_PARAMS[kind]})
-    return path, True
+    return path, True, inputs
+
+
+def ensure_index(spark: SparkSession, sf_dir: str, kind: str,
+                 root: str | None = None,
+                 force: bool = False) -> tuple[str, bool]:
+    """Build the persisted ``kind`` index for ``sf_dir`` iff missing or
+    stale (input files or params changed, or no CURRENT snapshot).
+    Returns (path, built). The freshness check runs no Spark job."""
+    path, built, _ = _ensure(spark, sf_dir, kind, root, force)
+    return path, built
 
 
 def _winner_census(ivf: IVFIndex, scored: DataFrame, rows: DataFrame,
@@ -687,10 +705,23 @@ def serve_topk(spark: SparkSession, sf_dir: str, kind: str,
                version: int | None = None) -> DataFrame:
     """Search the PERSISTED index — the amortized serve path.
 
-    Reads trained state + codes/cells from disk; for pq/ivfpq the
-    float-vector table is touched only for the broadcast-semi-join
-    rescore of the ``shortlist`` ids. Builds the index first iff it is
-    missing or stale (idempotent; a fresh store makes this a no-op).
+    Builds the index first iff it is missing or stale (idempotent; a
+    fresh store makes this a job-free no-op). Then one of two paths
+    answers, with the same rows, scores and schema:
+
+    - **driver pin** (:func:`ann_pin.pinned_topk`) when the snapshot,
+      plus for pq/ivfpq the rescore table, fits
+      ``localdf.DRIVER_BYTES``: the probe cells' files are read once
+      with pyarrow and memoized per file, scored by the exact driver
+      twins, and returned as a ``localdf.local_df`` — zero Spark jobs;
+    - **Spark** otherwise, and always with ``DRIVER_BYTES = 0``: the
+      snapshot's rows are scanned partition-pruned to the probe cells;
+      for pq/ivfpq the float-vector table is touched only for the
+      broadcast-semi-join rescore of the ``shortlist`` ids.
+
+    Both paths rescore pq/ivfpq against ``sf_dir``'s embeddings table,
+    not the store, so an appended id missing from it is never served
+    and a re-appended id is rescored by its old vector (ROADMAP item 9).
 
     ``nprobe`` overrides the index's fitted probe width at SERVE time
     (probe width is a query-time knob — no state depends on it, so a
@@ -710,11 +741,18 @@ def serve_topk(spark: SparkSession, sf_dir: str, kind: str,
     change between rebuilds, and a rebuild resets the manifests, so
     the pairing is always coherent). Raises FileNotFoundError for a
     GC'd version."""
-    path, _ = ensure_index(spark, sf_dir, kind, root)
+    path, _, inputs = _ensure(spark, sf_dir, kind, root)
+    meta = read_store_meta(path)
     if nprobe is None:
-        tuned = read_store_meta(path).get("tuned")
+        tuned = meta.get("tuned")
         if tuned and tuned.get("nprobe") is not None:
             nprobe = int(tuned["nprobe"])
+    pinned = pinned_topk(
+        spark, path, kind, meta.get("fingerprint"), query_vec, k, nprobe,
+        version, shortlist,
+        None if kind == "ivf" else inputs.inputFiles())
+    if pinned is not None:
+        return pinned
     if kind == "ivf":
         # snapshot-consistent rows: a concurrent compaction/GC never
         # changes what this query scans

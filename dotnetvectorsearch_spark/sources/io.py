@@ -63,9 +63,12 @@ def read_corpus(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated test table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+def load_table(spark: SparkSession, sf_dir: str, name: str,
+               schema: str | None = None) -> DataFrame:
+    """Load one driver-generated test table. A ``schema`` skips the
+    schema-inference job; the frame lists the same input files."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,

@@ -243,7 +243,7 @@ def stream_index_append(vectors: DataFrame, index, path: str,
     snapshot)."""
     if index is None:
         from dotnetvectorsearch_spark.operators.ann import IVFIndex
-        index, _ = IVFIndex.read(vectors.sparkSession, path)
+        index = IVFIndex.load(path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         index.append(batch_df, path, vec_col)

@@ -1026,25 +1026,36 @@ def test_ivfpq_driver_write_append_parity(spark, sf_dir, tmp_path,
     assert len(fast[1]) == 1 and "embedding" not in fast[1].pop()
 
 
+def _served(spark, sf_dir, kind, qv, root, **kw):
+    return [tuple(r) for r in ann_store.serve_topk(
+        spark, sf_dir, kind, qv, k=10, shortlist=200, root=root,
+        **kw).collect()]
+
+
 @pytest.mark.parametrize("kind", ["ivf", "pq", "ivfpq"])
 def test_every_kind_serves_each_retained_snapshot(spark, sf_dir, tmp_path,
-                                                  qv, kind):
+                                                  qv, kind,
+                                                  force_distributed):
     """Every index kind is one snapshot-managed cell store: build (v1)
     -> append + publish (v2) -> compact (v3) -> GC keeping two. Each
     retained ``serve_topk(version=v)`` equals a fresh fit's search over
     that snapshot's corpus (the appended rows re-add existing ids, so
-    the rescore table covers them), and the GC'd v1 is gone."""
+    the rescore table covers them), from the driver pin and from the
+    Spark path alike, and the GC'd v1 is gone on both."""
     root = str(tmp_path / "root")
     emb = load_table(spark, sf_dir, "embeddings")
     path, _ = ann_store.ensure_index(spark, sf_dir, kind, root=root)
     cls = IVFIndex if kind == "ivf" else IVFPQIndex
     extra = emb.filter("vec_id % 5 = 2").select("vec_id", "embedding")
-    cls.read(spark, path)[0].append(extra, path)
+    cls.load(path).append(extra, path)
     assert layout.publish_snapshot(path, note="append") == 2
     assert ann_store.compact_index(spark, path) > 0
     assert layout.gc_snapshots(path, keep_last=2)["dropped_versions"] \
         == [1]
     with pytest.raises(FileNotFoundError):
+        ann_store.serve_topk(spark, sf_dir, kind, qv, root=root,
+                             version=1)
+    with force_distributed(), pytest.raises(FileNotFoundError):
         ann_store.serve_topk(spark, sf_dir, kind, qv, root=root,
                              version=1)
     fresh = ann_store.fit_index(emb, kind)
@@ -1055,8 +1066,101 @@ def test_every_kind_serves_each_retained_snapshot(spark, sf_dir, tmp_path,
     want = [tuple(r) for r in want.collect()]
     assert len(want) == 10
     for v in (2, 3):
-        got = ann_store.serve_topk(spark, sf_dir, kind, qv, k=10,
-                                   shortlist=200, root=root, version=v)
-        assert [tuple(r) for r in got.collect()] == want, v
+        assert _served(spark, sf_dir, kind, qv, root, version=v) \
+            == want, v
+        with force_distributed():
+            assert _served(spark, sf_dir, kind, qv, root, version=v) \
+                == want, v
         assert layout.snapshot_row_count(path, v) == \
             emb.count() + extra.count()
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq", "ivfpq"])
+def test_reappended_id_serves_alike_on_both_paths(spark, sf_dir, tmp_path,
+                                                  kind, force_distributed):
+    """A store holding two rows for one vec_id (a new vector appended
+    under id 0, ROADMAP item 9's probe) serves the same rows from the
+    driver pin and from Spark. ivf serves the new copy; pq/ivfpq rescore
+    id 0 by its old vector in the embeddings table, on both paths."""
+    from dotnetvectorsearch_spark.localdf import local_df
+
+    root = str(tmp_path / "root")
+    path, _ = ann_store.ensure_index(spark, sf_dir, kind, root=root)
+    emb = load_table(spark, sf_dir, "embeddings")
+    v1 = emb.filter("vec_id = 1").collect()[0].embedding
+    new0 = local_df(spark, [(0, list(v1))],
+                    "vec_id long, embedding array<float>")
+    (IVFIndex if kind == "ivf" else IVFPQIndex).load(path).append(new0,
+                                                                  path)
+    layout.publish_snapshot(path, note="re-append id 0")
+    assert layout.snapshot_row_count(path) == emb.count() + 1
+    n_cells = ann_store.INDEX_PARAMS[kind]["n_cells"]
+    got = _served(spark, sf_dir, kind, v1, root, nprobe=n_cells)
+    with force_distributed():
+        assert _served(spark, sf_dir, kind, v1, root,
+                       nprobe=n_cells) == got
+    assert (0, 1.0) in got if kind == "ivf" else (0, 1.0) not in got
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_pin_follows_in_place_corpus_rewrite(spark, sf_dir, tmp_path, qv,
+                                             kind, force_distributed):
+    """A corpus rewritten in place forces a rebuild that restarts at
+    manifest v1 with new files: the next pinned serve answers from the
+    new store (and, for ivfpq, the new rescore table), never from the
+    files pinned before the rewrite."""
+    d = str(tmp_path / "sf")
+    root = str(tmp_path / "root")
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb.filter("vec_id % 2 = 0").write.parquet(f"{d}/embeddings.parquet")
+    path, _ = ann_store.ensure_index(spark, d, kind, root=root)
+    (IVFIndex if kind == "ivf" else IVFPQIndex).load(path).append(
+        emb.filter("vec_id % 4 = 0").select("vec_id", "embedding"), path)
+    assert layout.publish_snapshot(path, note="append") == 2
+    before = _served(spark, d, kind, qv, root)
+    assert before and all(i % 2 == 0 for i, _ in before)
+    old_files = set(layout.read_manifest(path)["files"])
+    emb.filter("vec_id % 2 = 1").write.mode("overwrite").parquet(
+        f"{d}/embeddings.parquet")
+    got = _served(spark, d, kind, qv, root)
+    assert layout.current_snapshot_version(path) == 1
+    assert not old_files & set(layout.read_manifest(path)["files"])
+    assert got and all(i % 2 == 1 for i, _ in got)
+    with force_distributed():
+        assert _served(spark, d, kind, qv, root) == got
+
+
+def test_pinned_read_runs_no_spark_job(spark, sf_dir, tmp_path, qv,
+                                       jobs_launched, monkeypatch):
+    """An in-bound store read (cold pin included) and a fresh store's
+    freshness check run no Spark job, and a bound below the probed
+    files' bytes sends the read to Spark — so a pin that silently stops
+    firing fails here."""
+    from dotnetvectorsearch_spark import localdf
+    from dotnetvectorsearch_spark.caching import _input_fingerprint
+    from dotnetvectorsearch_spark.operators import ann_pin
+
+    assert (_input_fingerprint(load_table(spark, sf_dir, "embeddings"))
+            == _input_fingerprint(load_table(
+                spark, sf_dir, "embeddings",
+                schema=ann_store._INPUT_SCHEMA)))
+    root = str(tmp_path / "root")
+    for kind in ("ivf", "pq", "ivfpq"):
+        path, _ = ann_store.ensure_index(spark, sf_dir, kind, root=root)
+        assert jobs_launched(lambda: ann_store.ensure_index(
+            spark, sf_dir, kind, root=root)) == []
+        state = (IVFIndex if kind == "ivf" else IVFPQIndex).load
+        assert jobs_launched(lambda: state(path)) == []
+        ann_pin._FILES.clear()
+        assert jobs_launched(
+            lambda: _served(spark, sf_dir, kind, qv, root)) == [], kind
+        idx = state(path)
+        ivf = idx if kind == "ivf" else idx.ivf
+        probe = {f"cell={c}" for c in ivf.probe_cells(qv)}
+        probed = sum((Path(path) / rel).stat().st_size
+                     for rel in layout.read_manifest(path)["files"]
+                     if rel.split("/")[0] in probe)
+        with monkeypatch.context() as mp:
+            mp.setattr(localdf, "DRIVER_BYTES", probed - 1)
+            assert jobs_launched(
+                lambda: _served(spark, sf_dir, kind, qv, root)), kind

@@ -6,9 +6,10 @@ order-insensitive value hash (columns sorted by name, rows sorted by their
 stringified tuple). Run:  python tools/check_oracle.py [names...]
 
 ``--distributed`` sets ``localdf.DRIVER_BYTES`` to 0, so every bounded
-driver path (engine pin, IVF write, connected components, PageRank, BPE
-training, cell compaction) takes its distributed twin; a run in each
-mode proves every driver/distributed pair equal across the registry.
+driver path (engine pin, ANN store pin, IVF write, connected components,
+PageRank, BPE training, cell compaction) takes its distributed twin; a run
+in each mode proves every driver/distributed pair equal across the
+registry.
 """
 
 from __future__ import annotations
